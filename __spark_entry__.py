@@ -246,12 +246,11 @@ def q_knn_table(spark, sf_dir):
     """Polygon-TABLE kNN: vertex index built by distributed explode +
     codegen cell encode, exact fallback over the vertex table — nothing
     polygon-shaped on the driver (the 100-TB shape; same oracle as knn)."""
-    from openaip_yaixm_to_geojson_spark.operators.knn import knn_ring_expansion_table
     from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df
 
     pages = pages_from_documents(spark, sf_dir)
     polys_df = polygons_to_df(spark, fixture_polygons())
-    return knn_ring_expansion_table(pages, polys_df).select("url", "poly_id", "dist_sq")
+    return knn_ring_expansion(pages, polys_df).select("url", "poly_id", "dist_sq")
 
 
 
@@ -272,12 +271,12 @@ def q_knn_edge_table(spark, sf_dir):
     index via distributed zip/explode + codegen cell encode, tail scan over
     the segment table — nothing polygon-shaped on the driver (the 100-TB
     shape; same oracle as knn_edge)."""
-    from openaip_yaixm_to_geojson_spark.operators.knn import knn_edge_ring_expansion_table
+    from openaip_yaixm_to_geojson_spark.operators.knn import knn_edge_ring_expansion
     from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df
 
     pages = pages_from_documents(spark, sf_dir)
     polys_df = polygons_to_df(spark, fixture_polygons())
-    return knn_edge_ring_expansion_table(pages, polys_df).select("url", "poly_id", "dist_sq")
+    return knn_edge_ring_expansion(pages, polys_df).select("url", "poly_id", "dist_sq")
 
 
 def q_range_partition_plan(spark, sf_dir):
@@ -323,11 +322,11 @@ def q_knn_k(spark, sf_dir):
 def q_knn_table_k(spark, sf_dir):
     """knn_k with the polygon side a TABLE end to end (distributed vertex
     index; same oracle as knn_k)."""
-    from openaip_yaixm_to_geojson_spark.operators.knn import knn_table_k
+    from openaip_yaixm_to_geojson_spark.operators.knn import knn_k
     from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df
 
     pages = pages_from_documents(spark, sf_dir)
-    return knn_table_k(pages, polygons_to_df(spark, fixture_polygons()), k=3)
+    return knn_k(pages, polygons_to_df(spark, fixture_polygons()), k=3)
 
 
 def q_knn_edge_k(spark, sf_dir):
@@ -355,11 +354,11 @@ def q_tile_nearest_airspace(spark, sf_dir):
 def q_knn_edge_table_k(spark, sf_dir):
     """knn_edge_k with the polygon side a TABLE end to end (distributed
     segment index; same oracle as knn_edge_k)."""
-    from openaip_yaixm_to_geojson_spark.operators.knn import knn_edge_table_k
+    from openaip_yaixm_to_geojson_spark.operators.knn import knn_edge_k
     from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df
 
     pages = pages_from_documents(spark, sf_dir)
-    return knn_edge_table_k(pages, polygons_to_df(spark, fixture_polygons()), k=3)
+    return knn_edge_k(pages, polygons_to_df(spark, fixture_polygons()), k=3)
 
 
 def q_tile_doc_counts(spark, sf_dir):

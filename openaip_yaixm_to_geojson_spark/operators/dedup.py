@@ -114,13 +114,6 @@ def minhash_from_shingles(shingles: Column, num_hashes: int = 16) -> Column:
     return minhash_from_hashes(shingle_hash_col(shingles), num_hashes)
 
 
-def minhash_signature(text: Column, num_hashes: int = 16, shingle_n: int = 3) -> Column:
-    """Convenience wrapper: signature straight from text. Prefer the
-    shingled-table path in pipelines (see minhash_lsh_pairs) — this inline
-    form re-evaluates the shingle build per hash."""
-    return minhash_from_shingles(word_shingles(text, shingle_n), num_hashes)
-
-
 def shingled_documents(
     documents: DataFrame, text_col: str = "text", key_col: str = "doc_id", shingle_n: int = 3
 ) -> DataFrame:
@@ -233,51 +226,6 @@ def minhash_lsh_pairs(
     # tables, filters, statistics) persist; output-value frames do not.
     scored = verified.select("key_a", "key_b", jaccard.alias("jaccard")).localCheckpoint()
     return scored.where(F.col("jaccard") >= jaccard_threshold)
-
-
-def minhash_signatures_pandas(
-    documents: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    num_hashes: int = 16,
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Arrow-batched Python MinHash (hashlib.md5) — identical signatures to
-    the expression-based path (same base hash + affine family), kept as
-    the throughput comparison point for bench: JVM expressions vs
-    vectorized Python."""
-    import hashlib
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("key", T.LongType()),
-            T.StructField("signature", T.StringType()),
-        ]
-    )
-    params = minhash_params(num_hashes)
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            keys, sigs = [], []
-            for key, text in zip(pdf[key_col], pdf[text_col]):
-                words = text.strip().split()
-                if len(words) < shingle_n:
-                    continue
-                shingles = {
-                    " ".join(words[i : i + shingle_n]).encode()
-                    for i in range(len(words) - shingle_n + 1)
-                }
-                xs = [int(hashlib.md5(s).hexdigest()[:8], 16) % MINHASH_P for s in shingles]
-                sig = [str(min((a * x + b) % MINHASH_P for x in xs)) for a, b in params]
-                keys.append(key)
-                sigs.append("|".join(sig))
-            yield pd.DataFrame({"key": keys, "signature": sigs})
-
-    return documents.select(key_col, text_col).mapInPandas(run, schema=schema)
 
 
 def ngram_jaccard_pairs(

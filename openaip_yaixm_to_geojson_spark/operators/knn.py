@@ -4,10 +4,11 @@ Engine-only operator (no reference counterpart; mandated by the north
 rule). Two distance metrics, both plain arithmetic so the DuckDB oracle
 reproduces them bit-for-bit (trig-free):
 
-* VERTEX distance (`knn_*`): squared planar degree distance to the nearest
-  polygon ring vertex — tight on densified arc/circle rings, but `line:`
-  boundary segments are NOT densified, so a page near the midpoint of a
-  long straight edge can get an overstated distance (r3 VERDICT item).
+* VERTEX distance (`knn_ring_expansion`, `knn_k`): squared planar degree
+  distance to the nearest polygon ring vertex — tight on densified
+  arc/circle rings, but `line:` boundary segments are NOT densified, so a
+  page near the midpoint of a long straight edge can get an overstated
+  distance (r3 VERDICT item).
 * EDGE distance (`knn_edge_*`): exact squared point-to-segment distance
   (projection clamped to [0,1], every op a single-rounded IEEE double in a
   fixed order shared by the Spark expression, the NumPy fallback and the
@@ -15,24 +16,38 @@ reproduces them bit-for-bit (trig-free):
 
 Implementations:
 
-* `knn_ring_expansion` / `knn_edge_ring_expansion` — the scale path. Index
-  points (ring vertices, or segment sample points carrying their segment's
-  endpoints) are bucketed by grid cell; each round joins still-unmatched
-  pages against the index expanded to a Chebyshev window, takes the best
-  candidate (for edges: the EXACT segment distance — sampling only drives
-  candidate generation, never the reported distance), and finalizes pages
-  whose best distance beats anything an unseen ring could hold. Each round
-  is one broadcast/shuffle join + one aggregation on the shrinking
-  unmatched set.
+* `_expansion_loop` — the one polygon ring-expansion loop, for both
+  metrics, both polygon inputs and every k. Index rows (ring vertices, or
+  segment sample points carrying their segment's endpoints) are bucketed
+  by grid cell; each round joins still-pending pages against the index
+  expanded to a Chebyshev window, keeps each page's k nearest DISTINCT
+  polygons (for edges: by the EXACT segment distance — sampling only
+  drives candidate generation, never the reported distance), and
+  finalizes pages whose k-th distance is strictly under anything an unseen
+  ring could hold. Each round is one broadcast/shuffle join + two
+  aggregations on the shrinking pending set; stragglers past the last
+  window get the exact scan `_bruteforce_k`. The loop reads the metric
+  from an `_Index` record, built from a driver list or a polygons TABLE
+  by `_vertex_index` or `_segment_index`.
+
+* Four entry points, each taking `polygons` as a driver list or a
+  polygons table: `knn_ring_expansion` / `knn_edge_ring_expansion` (k=1,
+  `OUT_COLS`, with a tiny-input exact fast path) and `knn_k` /
+  `knn_edge_k` (`KNN_K_OUT_COLS`).
 
 * `knn_bruteforce` / `knn_edge_bruteforce` — vectorized NumPy baselines
-  (points x index rows per Arrow batch). Oracle cross-check + tail
-  fallback + tiny-input fast path.
+  (points x index rows per Arrow batch). Oracle cross-check + the k=1
+  tiny-input fast path for driver lists.
+
+* `knn_points` — point-point self kNN. Its index side is the whole corpus,
+  so it explodes the QUERY side and keeps its own loop.
 """
 
 from __future__ import annotations
 
-from typing import Any
+from collections.abc import Callable
+from functools import reduce
+from typing import Any, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -45,6 +60,14 @@ from ..plans.localtable import literal_table
 
 KNN_RES = 9  # ~0.7 deg cells for the vertex index
 OUT_COLS = ("url", "lat", "lon", "poly_id", "dist_sq")
+KNN_K_OUT_COLS = ("url", "rnk", "poly_id", "dist_sq")
+# every driver round is a full barrier (join + agg + checkpoint), so fewer,
+# wider windows win whenever the expanded index stays joinable: this
+# schedule measured ~1.5x faster than four geometric windows at bench scale
+# with identical output. For very dense index sets more geometric windows
+# bound per-round candidate fan-out; past BROADCAST_INDEX_MAX_ROWS the wide
+# round shuffle-joins instead of broadcasting either way.
+WINDOWS = ((0, 1), (2, 15))
 # vertex-index rows (vertices x window offsets) past this are shuffle-joined
 # on `cell` instead of broadcast: building + shipping a multi-hundred-MB
 # broadcast relation costs more than shuffling the (shrunken) pending side
@@ -53,6 +76,13 @@ BROADCAST_INDEX_MAX_ROWS = 500_000
 # brute-force fallback: vertices scanned per inner chunk so each Arrow batch
 # allocates O(batch_rows x chunk) instead of O(batch_rows x all_vertices)
 BRUTEFORCE_CHUNK = 4096
+# k=1 fast-path gates: below these, the exact scan beats the expansion
+# loop's 2+ driver barriers. The page-count probe uses limit(N+1).count() —
+# a CollectLimit that early-exits after N+1 rows, so the gate costs
+# O(threshold) regardless of table size (a full count() here would add a
+# whole-table job at 100 TB).
+SMALL_INPUT_ROWS = 100_000
+SMALL_INDEX_VERTICES = 10_000
 
 
 def _vertex_arrays(polygons: list[dict[str, Any]]):
@@ -141,228 +171,6 @@ def vertex_index_from_table(polygons_df: DataFrame, res: int = KNN_RES) -> DataF
         "vlon",
         "vlat",
     )
-
-
-def knn_bruteforce_distributed(pages: DataFrame, vindex: DataFrame) -> DataFrame:
-    """Exact nearest-vertex scan with the vertex side as a TABLE: broadcast
-    the (small) page tail against every vertex partition, then one min-by
-    aggregation. Used as the ring-expansion fallback when polygons are a
-    DataFrame; O(tail x vertices) work data-parallel over the vertex set."""
-    tail = pages.select("url", "lat", "lon")
-    d2 = (F.col("lon") - F.col("vlon")) * (F.col("lon") - F.col("vlon")) + (
-        F.col("lat") - F.col("vlat")
-    ) * (F.col("lat") - F.col("vlat"))
-    return (
-        vindex.crossJoin(F.broadcast(tail))
-        .select("url", "lat", "lon", "poly_id", d2.alias("d2"))
-        .groupBy("url")
-        .agg(
-            F.first("lat").alias("lat"),
-            F.first("lon").alias("lon"),
-            F.min(F.struct(F.col("d2"), F.col("poly_id"))).alias("_b"),
-        )
-        .select(
-            "url",
-            "lat",
-            "lon",
-            F.col("_b.poly_id").alias("poly_id"),
-            F.col("_b.d2").alias("dist_sq"),
-        )
-    )
-
-
-# fast-path gates: below these, the exact vectorized scan beats the
-# expansion loop's 2+ driver barriers. The page-count probe uses
-# limit(N+1).count() — a CollectLimit that early-exits after N+1 rows, so
-# the gate costs O(threshold) regardless of table size (a full count()
-# here would add a whole-table job at 100 TB).
-SMALL_INPUT_ROWS = 100_000
-SMALL_INDEX_VERTICES = 10_000
-
-
-def knn_ring_expansion(
-    pages: DataFrame,
-    polygons: list[dict[str, Any]],
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
-    small_input_rows: int = SMALL_INPUT_ROWS,
-) -> DataFrame:
-    """(url, poly_id, dist_sq) via iterative cell-ring expansion.
-
-    Round r joins still-unfinalized pages against the vertex index over the
-    Chebyshev ring WINDOW [lo_r, hi_r] (the index side explodes across the
-    window's offsets — the page side stays one row per page with a plain
-    equi-join). Pages finalize once the guarantee (hi_r * size)^2 >= best
-    dist_sq holds (an unseen vertex in ring > hi_r is at least hi_r * size
-    away). Pages with nothing inside the last window fall back to the exact
-    vectorized scan.
-
-    Window schedule: every driver round is a full barrier (join + agg +
-    checkpoint), so fewer/wider windows win whenever the expanded index
-    stays joinable — the default ((0,1),(2,15)) measured ~1.5x faster than
-    four geometric windows at bench scale with identical output. For very
-    dense vertex sets, more geometric windows bound per-round candidate
-    fan-out; past BROADCAST_INDEX_MAX_ROWS the wide round shuffle-joins
-    instead of broadcasting either way.
-    """
-    spark = pages.sparkSession
-    n_vertices = sum(len(p["ring"]) - 1 for p in polygons)
-
-    # tiny-input fast path: same rows (knn_bruteforce shares the tie-break
-    # contract and is gate-verified against the same oracle), no loop
-    # barriers. Set small_input_rows=0 to force the expansion path.
-    if small_input_rows and n_vertices <= SMALL_INDEX_VERTICES:
-        probe = pages.select("url").limit(small_input_rows + 1).count()
-        if probe <= small_input_rows:
-            return knn_bruteforce(pages.select("url", "lat", "lon"), polygons).select(*OUT_COLS)
-
-    vindex = vertex_index_df(spark, polygons, res)
-
-    def fallback(tail: DataFrame) -> DataFrame:
-        return knn_bruteforce(tail.select("url", "lat", "lon"), polygons).select(*OUT_COLS)
-
-    return _expansion_loop(pages, vindex, n_vertices, res, windows, fallback)
-
-
-def knn_ring_expansion_table(
-    pages: DataFrame,
-    polygons_df: DataFrame,
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
-) -> DataFrame:
-    """Ring-expansion kNN with the polygon side as a TABLE end to end: the
-    vertex index is built by a distributed explode + codegen cell encode
-    (vertex_index_from_table) and the exact-fallback tail scans the vertex
-    TABLE (knn_bruteforce_distributed) — nothing polygon-shaped touches the
-    driver, so the polygon side scales to millions of rows. Same rows as
-    `knn_ring_expansion` (tie-break and guarantee logic shared)."""
-    # coalesce before checkpointing: the vertex index inherits the polygons
-    # table's partitioning, which can be far wider than the index warrants
-    # (a 64-part polygons scan would otherwise spawn 64 near-empty tasks in
-    # EVERY expansion round); capping at defaultParallelism keeps rounds at
-    # cluster width without a shuffle
-    vindex = (
-        vertex_index_from_table(polygons_df, res)
-        .coalesce(pages.sparkSession.sparkContext.defaultParallelism)
-        .localCheckpoint()
-    )
-    n_vertices = vindex.count()  # tiny job on the (small) vertex table
-
-    # same tiny-input fast path as the driver-list variant
-    if n_vertices <= SMALL_INDEX_VERTICES:
-        probe = pages.select("url").limit(SMALL_INPUT_ROWS + 1).count()
-        if probe <= SMALL_INPUT_ROWS:
-            return knn_bruteforce_distributed(pages, vindex).select(*OUT_COLS)
-
-    def fallback(tail: DataFrame) -> DataFrame:
-        return knn_bruteforce_distributed(tail, vindex).select(*OUT_COLS)
-
-    return _expansion_loop(pages, vindex, n_vertices, res, windows, fallback)
-
-
-def _expansion_loop(
-    pages: DataFrame,
-    vindex: DataFrame,
-    n_vertices: int,
-    res: int,
-    windows: tuple[tuple[int, int], ...],
-    fallback,
-    payload_cols: tuple[str, ...] = ("vlon", "vlat"),
-    d2_expr: Column | None = None,
-    bound_margin: float = 0.0,
-) -> DataFrame:
-    """Shared ring-expansion driver loop (see knn_ring_expansion docstring):
-    vindex is (vcell, poly_id, *payload_cols) from either the driver-list
-    or the distributed table builder; `fallback(tail)` performs the exact
-    scan for pages unresolved past the last window.
-
-    `d2_expr` computes the candidate distance from (lon, lat, payload) —
-    default is squared distance to the (vlon, vlat) index point itself.
-    `bound_margin` (in cell units) relaxes the finalization guarantee for
-    indexes whose rows SAMPLE an extended object: with segment samples at
-    Euclidean spacing <= cell_size, an unseen segment (no sample inside
-    Chebyshev ring hi) can still pass within (hi - 1/2) * cell_size of the
-    page — every segment point is within spacing/2 of some sample — so the
-    guarantee becomes dist_sq <= ((hi - margin) * size)^2 with margin 0.5."""
-    spark = pages.sparkSession
-    size = cellgrid.cell_size_deg(res)
-    if d2_expr is None:
-        d2_expr = (F.col("lon") - F.col("vlon")) * (F.col("lon") - F.col("vlon")) + (
-            F.col("lat") - F.col("vlat")
-        ) * (F.col("lat") - F.col("vlat"))
-
-    pending = (
-        pages.select("url", "lat", "lon")
-        .withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
-        .withColumn("poly_id", F.lit(None).cast("int"))
-        .withColumn("dist_sq", F.lit(None).cast("double"))
-    )
-    finalized: list[DataFrame] = []
-
-    for lo, hi in windows:
-        # Expand the SMALL side: every vertex is registered under each cell
-        # in the window's Chebyshev annulus, so the page side stays one row
-        # per page with a plain equi-join (no fact-side explode). Window
-        # (8,15) x ~1k vertices is still well under broadcast thresholds;
-        # beyond broadcast scale this becomes a shuffle join on cell.
-        offsets = [
-            (dx, dy)
-            for dx in range(-hi, hi + 1)
-            for dy in range(-hi, hi + 1)
-            if lo <= max(abs(dx), abs(dy)) <= hi
-        ]
-        off_df = literal_table(
-            spark, [(dy * cellgrid._SHIFT + dx,) for dx, dy in offsets], "off bigint"
-        )
-        vwin = vindex.crossJoin(off_df).select(
-            (F.col("vcell") + F.col("off")).alias("cell"), "poly_id", *payload_cols
-        )
-        # expanded index = vertices x |window annulus|; broadcast only while
-        # that stays genuinely small, else shuffle-join on the cell key
-        if n_vertices * len(offsets) <= BROADCAST_INDEX_MAX_ROWS:
-            vwin = F.broadcast(vwin)
-        cand = (
-            pending.select("url", "lat", "lon", "cell")
-            .join(vwin, "cell")
-            .withColumn("d2", d2_expr)
-            .groupBy("url")
-            .agg(F.min(F.struct(F.col("d2"), F.col("poly_id"))).alias("_b"))
-            .select("url", F.col("_b.poly_id").alias("c_pid"), F.col("_b.d2").alias("c_d2"))
-        )
-        cand_better = F.col("c_d2").isNotNull() & (
-            F.col("dist_sq").isNull()
-            | (F.col("c_d2") < F.col("dist_sq"))
-            | ((F.col("c_d2") == F.col("dist_sq")) & (F.col("c_pid") < F.col("poly_id")))
-        )
-        merged = pending.join(cand, "url", "left").select(
-            "url",
-            "lat",
-            "lon",
-            "cell",
-            F.when(cand_better, F.col("c_pid")).otherwise(F.col("poly_id")).alias("poly_id"),
-            F.when(cand_better, F.col("c_d2")).otherwise(F.col("dist_sq")).alias("dist_sq"),
-        )
-        # finalize once nothing in an unseen ring (>= hi+1) can be closer:
-        # any indexed point there is at least hi*size away in Chebyshev
-        # terms (minus the sampling margin for extended objects).
-        bound = float(((hi - bound_margin) * size) * ((hi - bound_margin) * size))
-        guarantee = F.col("dist_sq").isNotNull() & (F.col("dist_sq") <= F.lit(bound))
-        # normalize to the output schema here: the loop frames carry a
-        # `cell` column that the brute-force fallback frame does not.
-        finalized.append(merged.where(guarantee).select(*OUT_COLS))
-        pending = merged.where(~guarantee | F.col("dist_sq").isNull()).localCheckpoint()
-        if pending.isEmpty():
-            pending = None
-            break
-
-    if pending is not None and not pending.isEmpty():
-        # pages with nothing within max_rounds rings: exact fallback scan
-        finalized.append(fallback(pending))
-
-    out = finalized[0]
-    for df in finalized[1:]:
-        out = out.unionByName(df)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -563,106 +371,272 @@ def segment_index_from_table(polygons_df: DataFrame, res: int = KNN_RES) -> Data
     ).dropDuplicates(["vcell", "poly_id", "ax", "ay", "bx", "by"])
 
 
-def knn_edge_bruteforce_distributed(pages: DataFrame, segs: DataFrame) -> DataFrame:
-    """Exact nearest-segment scan with the segment side as a TABLE:
-    broadcast the (small) page tail against every segment partition, then
-    one min-by aggregation — the edge twin of knn_bruteforce_distributed."""
-    tail = pages.select("url", "lat", "lon")
+# ---------------------------------------------------------------------------
+# the ring-expansion loop: k nearest DISTINCT polygons per page
+# ---------------------------------------------------------------------------
+
+_SEG_PAYLOAD = ("ax", "ay", "bx", "by")
+_BEST_T = "array<struct<d2:double,poly_id:int>>"
+_EMPTY_BEST = f"cast(array() as {_BEST_T})"
+
+
+class _Index(NamedTuple):
+    """What the loop needs to know about a polygon index.
+
+    `df` is (vcell, poly_id, *payload_cols); `n_rows` sizes the broadcast
+    decision; `d2_expr` scores a candidate from (lon, lat, *payload_cols).
+    `bound_margin` (in cell units) relaxes the finalization bound for
+    indexes whose rows SAMPLE an extended object: with segment samples at
+    Euclidean spacing <= cell_size, an unseen segment (no sample inside
+    Chebyshev ring hi) can still pass within (hi - 1/2) * cell_size of the
+    page — every segment point is within spacing/2 of some sample."""
+
+    df: DataFrame
+    n_rows: int
+    payload_cols: tuple[str, ...]
+    d2_expr: Column
+    bound_margin: float
+
+
+def _ring_points(polygons: list[dict[str, Any]]) -> int:
+    """Ring vertices (= ring segments) of a driver list, closing dups excluded."""
+    return sum(len(p["ring"]) - 1 for p in polygons)
+
+
+def _checkpointed(index_df: DataFrame, spark: SparkSession) -> DataFrame:
+    # coalesce before checkpointing: a table-built index inherits the
+    # polygons table's partitioning, which can be far wider than the index
+    # warrants (a 64-part polygons scan would otherwise spawn 64 near-empty
+    # tasks in EVERY expansion round); capping at defaultParallelism keeps
+    # rounds at cluster width without a shuffle. Checkpointed once: the
+    # index feeds every round plus the fallback (fan-out audit rule).
+    return index_df.coalesce(spark.sparkContext.defaultParallelism).localCheckpoint()
+
+
+def _vertex_index(spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame, res: int) -> _Index:
+    """Ring-vertex index from a driver list or a polygons TABLE (distributed
+    explode — nothing polygon-shaped on the driver)."""
+    if isinstance(polygons, DataFrame):
+        df = _checkpointed(vertex_index_from_table(polygons, res), spark)
+        n_rows = df.count()  # tiny job on the (small) vertex table
+    else:
+        df, n_rows = vertex_index_df(spark, polygons, res), _ring_points(polygons)
+    dx = F.col("lon") - F.col("vlon")
+    dy = F.col("lat") - F.col("vlat")
+    return _Index(df, n_rows, ("vlon", "vlat"), dx * dx + dy * dy, 0.0)
+
+
+def _segment_index(spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame, res: int) -> _Index:
+    """Sampled ring-segment index from a driver list or a polygons TABLE
+    (distributed zip/explode); scored by the exact segment distance."""
+    if isinstance(polygons, DataFrame):
+        df = _checkpointed(segment_index_from_table(polygons, res), spark)
+    else:
+        df = segment_index_df(spark, polygons, res)
+    return _Index(df, df.count(), _SEG_PAYLOAD, seg_d2_expr(), 0.5)
+
+
+def _annulus(spark: SparkSession, lo: int, hi: int) -> tuple[DataFrame, int]:
+    """(cell-id offsets of the Chebyshev annulus lo..hi as a literal table,
+    offset count)."""
+    offsets = [
+        dy * cellgrid._SHIFT + dx
+        for dx in range(-hi, hi + 1)
+        for dy in range(-hi, hi + 1)
+        if lo <= max(abs(dx), abs(dy)) <= hi
+    ]
+    return literal_table(spark, [(o,) for o in offsets], "off bigint"), len(offsets)
+
+
+def _top_k(scored: DataFrame, keys: tuple[str, ...], k: int) -> DataFrame:
+    """(*keys, best): the k smallest (d2, poly_id) per key over DISTINCT
+    polygons. The per-(key, poly_id) MIN comes first — a polygon's many
+    index rows must never occupy more than one top-k slot."""
     return (
-        segs.crossJoin(F.broadcast(tail))
-        .select("url", "lat", "lon", "poly_id", seg_d2_expr().alias("d2"))
-        .groupBy("url")
-        .agg(
-            F.first("lat").alias("lat"),
-            F.first("lon").alias("lon"),
-            F.min(F.struct(F.col("d2"), F.col("poly_id"))).alias("_b"),
-        )
-        .select(
-            "url",
-            "lat",
-            "lon",
-            F.col("_b.poly_id").alias("poly_id"),
-            F.col("_b.d2").alias("dist_sq"),
-        )
+        scored.groupBy(*keys, "poly_id")
+        .agg(F.min("d2").alias("d2"))
+        .groupBy(*keys)
+        .agg(F.slice(F.array_sort(F.collect_list(F.struct(F.col("d2"), F.col("poly_id")))), 1, k).alias("best"))
     )
 
 
-_SEG_PAYLOAD = ("ax", "ay", "bx", "by")
+def _topk_distinct_pid(best_col: str, cand_col: str, k: int):
+    """Merge two (d2, poly_id) struct arrays into the k smallest entries
+    with DISTINCT poly_ids, keyed by (d2, poly_id) ascending. The dedup is
+    an aggregate() fold over the sorted concat — the fold state `acc` is
+    lambda-local, so nothing outer re-evaluates per element (the HOF
+    re-inline trap), and the fold caps acc at k so work per row is O(k^2)
+    on arrays of at most 2k entries."""
+    return F.expr(
+        f"aggregate(array_sort(concat({best_col}, coalesce({cand_col}, {_EMPTY_BEST}))), "
+        f"{_EMPTY_BEST}, (acc, x) -> CASE WHEN size(acc) >= {k} "
+        f"OR exists(acc, y -> y.poly_id = x.poly_id) "
+        f"THEN acc ELSE array_append(acc, x) END)"
+    )
+
+
+def _bruteforce_k(tail: DataFrame, index: _Index, k: int) -> DataFrame:
+    """(url, lat, lon, best): exact k-nearest-polygon scan — broadcast the
+    (small) page tail against every index partition, then `_top_k`. The
+    loop's straggler fallback, and the k=1 tiny-input path for tables."""
+    scored = index.df.crossJoin(F.broadcast(tail.select("url", "lat", "lon"))).withColumn("d2", index.d2_expr)
+    return _top_k(scored, ("url", "lat", "lon"), k)
+
+
+def _explode_best(df: DataFrame) -> DataFrame:
+    return df.select("url", "lat", "lon", F.posexplode("best")).select(
+        "url",
+        "lat",
+        "lon",
+        (F.col("pos") + 1).cast("int").alias("rnk"),
+        F.col("col.poly_id").alias("poly_id"),
+        F.col("col.d2").alias("dist_sq"),
+    )
+
+
+def _expansion_loop(
+    pages: DataFrame,
+    index: _Index,
+    res: int,
+    windows: tuple[tuple[int, int], ...],
+    k: int,
+) -> DataFrame:
+    """(url, lat, lon, rnk, poly_id, dist_sq): the k nearest DISTINCT
+    polygons per page, rnk 1..k by (dist_sq, poly_id).
+
+    Round r joins still-pending pages against the index over the Chebyshev
+    ring WINDOW [lo_r, hi_r]. The index side explodes across the window's
+    offsets, so the page side stays one row per page with a plain
+    equi-join; the expanded index is broadcast while small and
+    shuffle-joined on `cell` past BROADCAST_INDEX_MAX_ROWS.
+
+    A page finalizes once it holds k distinct polygons whose k-th distance
+    is STRICTLY under ((hi - margin) * cell_size)^2: any index row in an
+    unseen ring (Chebyshev > hi) is at least (hi - margin) * size away, so
+    no unseen polygon can enter the top k OR improve any reported
+    polygon's distance; strict < keeps an exactly-on-the-bound unseen
+    polygon from stealing the k-th slot via the poly_id tie-break.
+
+    Each round's candidates reduce to the per-url top k (`_top_k`), and the
+    carried state merges by min-per-poly_id (a later ring can re-surface an
+    already-held polygon; the sorted-fold dedup keeps the smaller key).
+    Truncating a round's candidates to k is lossless: a dropped entry is
+    (d2, pid)-dominated by k distinct kept polygons whose merged keys only
+    ever improve. Each round barriers on a localCheckpoint of the shrinking
+    pending set; pages still pending after the last window get the exact
+    scan."""
+    spark = pages.sparkSession
+    size = cellgrid.cell_size_deg(res)
+    pending = (
+        pages.select("url", "lat", "lon")
+        .withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
+        .withColumn("best", F.expr(_EMPTY_BEST))
+    )
+    finalized: list[DataFrame] = []
+
+    for lo, hi in windows:
+        off_df, n_offsets = _annulus(spark, lo, hi)
+        vwin = index.df.crossJoin(off_df).select(
+            (F.col("vcell") + F.col("off")).alias("cell"), "poly_id", *index.payload_cols
+        )
+        if index.n_rows * n_offsets <= BROADCAST_INDEX_MAX_ROWS:
+            vwin = F.broadcast(vwin)
+        scored = pending.select("url", "lat", "lon", "cell").join(vwin, "cell").withColumn("d2", index.d2_expr)
+        cand = _top_k(scored, ("url",), k).withColumnRenamed("best", "cbest")
+        merged = pending.join(cand, "url", "left").select(
+            "url", "lat", "lon", "cell", _topk_distinct_pid("best", "cbest", k).alias("best")
+        )
+        bound = float(((hi - index.bound_margin) * size) * ((hi - index.bound_margin) * size))
+        guarantee = (F.size("best") >= k) & (F.element_at("best", k)["d2"] < F.lit(bound))
+        finalized.append(merged.where(guarantee).select("url", "lat", "lon", "best"))
+        pending = merged.where(~guarantee).localCheckpoint()
+        if pending.isEmpty():
+            break
+    else:
+        finalized.append(_bruteforce_k(pending, index, k))
+
+    return _explode_best(reduce(DataFrame.unionByName, finalized))
+
+
+def _nearest(
+    pages: DataFrame,
+    polygons: list[dict[str, Any]] | DataFrame,
+    build_index: Callable[[SparkSession, Any, int], _Index],
+    numpy_twin: Callable[[DataFrame, list[dict[str, Any]]], DataFrame],
+    res: int,
+    windows: tuple[tuple[int, int], ...],
+    small_input_rows: int,
+) -> DataFrame:
+    """The k=1 entry points' body. Tiny-input fast path (same rows, no loop
+    barriers; small_input_rows=0 forces the loop): a driver list takes the
+    vectorized NumPy twin before any index is built, a table the exact
+    scan over its index."""
+
+    def few_pages() -> bool:
+        return pages.select("url").limit(small_input_rows + 1).count() <= small_input_rows
+
+    spark = pages.sparkSession
+    if isinstance(polygons, DataFrame):
+        index = build_index(spark, polygons, res)
+        if small_input_rows and index.n_rows <= SMALL_INDEX_VERTICES and few_pages():
+            return _explode_best(_bruteforce_k(pages, index, 1)).select(*OUT_COLS)
+    else:
+        if small_input_rows and _ring_points(polygons) <= SMALL_INDEX_VERTICES and few_pages():
+            return numpy_twin(pages.select("url", "lat", "lon"), polygons).select(*OUT_COLS)
+        index = build_index(spark, polygons, res)
+    return _expansion_loop(pages, index, res, windows, 1).select(*OUT_COLS)
+
+
+def knn_ring_expansion(
+    pages: DataFrame,
+    polygons: list[dict[str, Any]] | DataFrame,
+    res: int = KNN_RES,
+    windows: tuple[tuple[int, int], ...] = WINDOWS,
+    small_input_rows: int = SMALL_INPUT_ROWS,
+) -> DataFrame:
+    """(url, lat, lon, poly_id, dist_sq): the nearest polygon per page by
+    VERTEX distance, ties to the smaller poly_id. `polygons` is a driver
+    list or a polygons table."""
+    return _nearest(pages, polygons, _vertex_index, knn_bruteforce, res, windows, small_input_rows)
 
 
 def knn_edge_ring_expansion(
     pages: DataFrame,
-    polygons: list[dict[str, Any]],
+    polygons: list[dict[str, Any]] | DataFrame,
     res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
+    windows: tuple[tuple[int, int], ...] = WINDOWS,
     small_input_rows: int = SMALL_INPUT_ROWS,
 ) -> DataFrame:
-    """(url, poly_id, dist_sq) with EXACT point-to-segment distance via the
-    shared ring-expansion loop over a sampled segment index (see module
-    docstring; bound_margin=0.5 accounts for the <= cell_size sampling)."""
-    spark = pages.sparkSession
-    n_segments = sum(len(p["ring"]) - 1 for p in polygons)
-
-    if small_input_rows and n_segments <= SMALL_INDEX_VERTICES:
-        probe = pages.select("url").limit(small_input_rows + 1).count()
-        if probe <= small_input_rows:
-            return knn_edge_bruteforce(pages.select("url", "lat", "lon"), polygons).select(*OUT_COLS)
-
-    sindex = segment_index_df(spark, polygons, res)
-    n_index = sindex.count()
-
-    def fallback(tail: DataFrame) -> DataFrame:
-        return knn_edge_bruteforce(tail.select("url", "lat", "lon"), polygons).select(*OUT_COLS)
-
-    return _expansion_loop(
-        pages,
-        sindex,
-        n_index,
-        res,
-        windows,
-        fallback,
-        payload_cols=_SEG_PAYLOAD,
-        d2_expr=seg_d2_expr(),
-        bound_margin=0.5,
-    )
+    """(url, lat, lon, poly_id, dist_sq) by EXACT point-to-segment
+    distance: sampled segments drive candidates only, the reported distance
+    is the exact clamped projection."""
+    return _nearest(pages, polygons, _segment_index, knn_edge_bruteforce, res, windows, small_input_rows)
 
 
-def knn_edge_ring_expansion_table(
+def knn_k(
     pages: DataFrame,
-    polygons_df: DataFrame,
+    polygons: list[dict[str, Any]] | DataFrame,
+    k: int = 3,
     res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
+    windows: tuple[tuple[int, int], ...] = WINDOWS,
 ) -> DataFrame:
-    """Edge-exact kNN with the polygon side as a TABLE end to end: segment
-    index built by distributed zip/explode + codegen cell encode, tail scan
-    over the segment TABLE — nothing polygon-shaped on the driver. Same
-    rows as knn_edge_ring_expansion (distance + tie-break contract shared)."""
-    sindex = (
-        segment_index_from_table(polygons_df, res)
-        .coalesce(pages.sparkSession.sparkContext.defaultParallelism)
-        .localCheckpoint()
-    )
-    n_index = sindex.count()
+    """(url, rnk, poly_id, dist_sq): the k nearest DISTINCT airspaces per
+    page by VERTEX distance."""
+    index = _vertex_index(pages.sparkSession, polygons, res)
+    return _expansion_loop(pages, index, res, windows, k).select(*KNN_K_OUT_COLS)
 
-    if n_index <= SMALL_INDEX_VERTICES:
-        probe = pages.select("url").limit(SMALL_INPUT_ROWS + 1).count()
-        if probe <= SMALL_INPUT_ROWS:
-            return knn_edge_bruteforce_distributed(pages, sindex).select(*OUT_COLS)
 
-    def fallback(tail: DataFrame) -> DataFrame:
-        return knn_edge_bruteforce_distributed(tail, sindex).select(*OUT_COLS)
-
-    return _expansion_loop(
-        pages,
-        sindex,
-        n_index,
-        res,
-        windows,
-        fallback,
-        payload_cols=_SEG_PAYLOAD,
-        d2_expr=seg_d2_expr(),
-        bound_margin=0.5,
-    )
+def knn_edge_k(
+    pages: DataFrame,
+    polygons: list[dict[str, Any]] | DataFrame,
+    k: int = 3,
+    res: int = KNN_RES,
+    windows: tuple[tuple[int, int], ...] = WINDOWS,
+) -> DataFrame:
+    """(url, rnk, poly_id, dist_sq): the k nearest DISTINCT airspaces per
+    page by EXACT point-to-segment distance."""
+    index = _segment_index(pages.sparkSession, polygons, res)
+    return _expansion_loop(pages, index, res, windows, k).select(*KNN_K_OUT_COLS)
 
 
 # ---------------------------------------------------------------------------
@@ -736,21 +710,13 @@ def knn_points(
 
     for lo, hi in windows:
         n_pending = pending.count()
-        offsets = [
-            (dx, dy)
-            for dx in range(-hi, hi + 1)
-            for dy in range(-hi, hi + 1)
-            if lo <= max(abs(dx), abs(dy)) <= hi
-        ]
-        off_df = literal_table(
-            spark, [(dy * cellgrid._SHIFT + dx,) for dx, dy in offsets], "off bigint"
-        )
+        off_df, n_offsets = _annulus(spark, lo, hi)
         qx = (
             pending.select("url", "lat", "lon", "qcell")
             .crossJoin(off_df)
             .select("url", "lat", "lon", (F.col("qcell") + F.col("off")).alias("pcell"))
         )
-        if n_pending * len(offsets) <= BROADCAST_INDEX_MAX_ROWS:
+        if n_pending * n_offsets <= BROADCAST_INDEX_MAX_ROWS:
             qx = F.broadcast(qx)
         cand = (
             points.join(qx, "pcell")
@@ -803,254 +769,3 @@ def knn_points(
     for df in finalized[1:]:
         out = out.unionByName(df)
     return out
-
-
-# ---------------------------------------------------------------------------
-# k > 1 polygon kNN (r4 VERDICT item 3): k nearest DISTINCT airspaces
-# ---------------------------------------------------------------------------
-
-KNN_K_OUT_COLS = ("url", "rnk", "poly_id", "dist_sq")
-_BEST_T = "array<struct<d2:double,poly_id:int>>"
-
-
-def _explode_best_k(df: DataFrame) -> DataFrame:
-    return df.select("url", F.posexplode("best")).select(
-        "url",
-        (F.col("pos") + 1).cast("int").alias("rnk"),
-        F.col("col.poly_id").alias("poly_id"),
-        F.col("col.d2").alias("dist_sq"),
-    )
-
-
-def _topk_distinct_pid(best_col: str, cand_col: str, k: int):
-    """Merge two (d2, poly_id) struct arrays into the k smallest entries
-    with DISTINCT poly_ids, keyed by (d2, poly_id) ascending. The dedup is
-    an aggregate() fold over the sorted concat — the fold state `acc` is
-    lambda-local, so nothing outer re-evaluates per element (the HOF
-    re-inline trap), and the fold caps acc at k so work per row is O(k^2)
-    on arrays of at most 2k entries."""
-    return F.expr(
-        f"aggregate(array_sort(concat({best_col}, coalesce({cand_col}, "
-        f"cast(array() as {_BEST_T})))), cast(array() as {_BEST_T}), "
-        f"(acc, x) -> CASE WHEN size(acc) >= {k} "
-        f"OR exists(acc, y -> y.poly_id = x.poly_id) "
-        f"THEN acc ELSE array_append(acc, x) END)"
-    )
-
-
-def _bruteforce_k(tail: DataFrame, vindex: DataFrame, d2_expr: Column, k: int) -> DataFrame:
-    """Exact k-nearest-polygon scan for the expansion stragglers: broadcast
-    the (small) tail against every index partition, reduce to the per
-    (url, poly_id) MIN first — a polygon's many index rows must never
-    occupy more than one top-k slot — then one per-url top-k."""
-    t = tail.select("url", "lat", "lon")
-    return (
-        vindex.crossJoin(F.broadcast(t))
-        .withColumn("d2", d2_expr)
-        .groupBy("url", "poly_id")
-        .agg(F.min("d2").alias("d2"))
-        .groupBy("url")
-        .agg(
-            F.slice(
-                F.array_sort(F.collect_list(F.struct(F.col("d2"), F.col("poly_id")))), 1, k
-            ).alias("best")
-        )
-    )
-
-
-def _expansion_loop_k(
-    pages: DataFrame,
-    vindex: DataFrame,
-    n_index: int,
-    res: int,
-    windows: tuple[tuple[int, int], ...],
-    k: int,
-    payload_cols: tuple[str, ...] = ("vlon", "vlat"),
-    d2_expr: Column | None = None,
-    bound_margin: float = 0.0,
-) -> DataFrame:
-    """Ring-expansion generalized from nearest-1 to the k nearest DISTINCT
-    polygons per page (url, rnk, poly_id, dist_sq), rnk 1..k by (dist_sq,
-    poly_id).
-
-    The single-best guarantee generalizes to the K-TH best: a page
-    finalizes once it holds k distinct polygons whose k-th distance is
-    STRICTLY under ((hi - margin) * cell_size)^2 — any index point in an
-    unseen ring (Chebyshev > hi) is at least (hi - margin) * size away
-    (margin 0.5 for sampled-segment indexes, see _expansion_loop), so no
-    unseen point can enter the top k OR improve any reported polygon's
-    distance; strict < keeps an exactly-on-the-bound unseen polygon from
-    stealing the k-th slot via the poly_id tie-break.
-
-    Per round, candidates reduce to the per-(url, poly_id) MIN before the
-    per-url top-k (a polygon's many vertices must fill one slot, not k),
-    and the carried state merges by min-per-poly_id (a later ring can
-    re-surface an already-held polygon; the sorted-fold dedup keeps the
-    smaller key). Truncating each round's candidates to k is lossless: a
-    dropped entry is (d2, pid)-dominated by k distinct kept polygons whose
-    merged keys only ever improve.
-
-    Scale shape matches _expansion_loop: the index side explodes across
-    the window annulus (pages never explode), broadcast while small,
-    shuffle-join past BROADCAST_INDEX_MAX_ROWS; per-page state is one
-    <= k struct array; each round barriers on a localCheckpoint of the
-    shrinking pending set."""
-    spark = pages.sparkSession
-    size = cellgrid.cell_size_deg(res)
-    if d2_expr is None:
-        d2_expr = (F.col("lon") - F.col("vlon")) * (F.col("lon") - F.col("vlon")) + (
-            F.col("lat") - F.col("vlat")
-        ) * (F.col("lat") - F.col("vlat"))
-
-    pending = (
-        pages.select("url", "lat", "lon")
-        .withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
-        .withColumn("best", F.expr(f"cast(array() as {_BEST_T})"))
-    )
-    finalized: list[DataFrame] = []
-
-    for lo, hi in windows:
-        offsets = [
-            (dx, dy)
-            for dx in range(-hi, hi + 1)
-            for dy in range(-hi, hi + 1)
-            if lo <= max(abs(dx), abs(dy)) <= hi
-        ]
-        off_df = literal_table(
-            spark, [(dy * cellgrid._SHIFT + dx,) for dx, dy in offsets], "off bigint"
-        )
-        vwin = vindex.crossJoin(off_df).select(
-            (F.col("vcell") + F.col("off")).alias("cell"), "poly_id", *payload_cols
-        )
-        if n_index * len(offsets) <= BROADCAST_INDEX_MAX_ROWS:
-            vwin = F.broadcast(vwin)
-        cand = (
-            pending.select("url", "lat", "lon", "cell")
-            .join(vwin, "cell")
-            .withColumn("d2", d2_expr)
-            .groupBy("url", "poly_id")
-            .agg(F.min("d2").alias("d2"))
-            .groupBy("url")
-            .agg(
-                F.slice(
-                    F.array_sort(F.collect_list(F.struct(F.col("d2"), F.col("poly_id")))),
-                    1,
-                    k,
-                ).alias("cbest")
-            )
-        )
-        merged = pending.join(cand, "url", "left").select(
-            "url",
-            "lat",
-            "lon",
-            "cell",
-            _topk_distinct_pid("best", "cbest", k).alias("best"),
-        )
-        bound = float(((hi - bound_margin) * size) * ((hi - bound_margin) * size))
-        guarantee = (F.size("best") >= k) & (
-            F.element_at("best", k)["d2"] < F.lit(bound)
-        )
-        finalized.append(_explode_best_k(merged.where(guarantee)))
-        pending = merged.where(~guarantee).localCheckpoint()
-        if pending.isEmpty():
-            pending = None
-            break
-
-    if pending is not None and not pending.isEmpty():
-        finalized.append(_explode_best_k(_bruteforce_k(pending, vindex, d2_expr, k)))
-
-    out = finalized[0]
-    for df in finalized[1:]:
-        out = out.unionByName(df)
-    return out
-
-
-def knn_k(
-    pages: DataFrame,
-    polygons: list[dict[str, Any]],
-    k: int = 3,
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
-) -> DataFrame:
-    """k nearest airspaces per page by VERTEX distance (url, rnk, poly_id,
-    dist_sq) — knn_ring_expansion generalized to k > 1."""
-    spark = pages.sparkSession
-    vindex = vertex_index_df(spark, polygons, res)
-    n_vertices = sum(len(p["ring"]) - 1 for p in polygons)
-    return _expansion_loop_k(pages, vindex, n_vertices, res, windows, k)
-
-
-def knn_edge_k(
-    pages: DataFrame,
-    polygons: list[dict[str, Any]],
-    k: int = 3,
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
-) -> DataFrame:
-    """k nearest airspaces per page by EXACT point-to-segment distance —
-    knn_edge_ring_expansion generalized to k > 1 (sampling drives
-    candidates only; reported distances are the exact clamped projection;
-    bound_margin 0.5 covers the <= cell_size sample spacing)."""
-    spark = pages.sparkSession
-    sindex = segment_index_df(spark, polygons, res)
-    n_index = sindex.count()
-    return _expansion_loop_k(
-        pages,
-        sindex,
-        n_index,
-        res,
-        windows,
-        k,
-        payload_cols=_SEG_PAYLOAD,
-        d2_expr=seg_d2_expr(),
-        bound_margin=0.5,
-    )
-
-
-def knn_table_k(
-    pages: DataFrame,
-    polygons_df: DataFrame,
-    k: int = 3,
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
-) -> DataFrame:
-    """knn_k with the polygon side as a TABLE end to end (distributed
-    vertex index, nothing polygon-shaped on the driver — the 100-TB
-    shape). The index feeds every round plus the fallback, so it is
-    checkpointed once (fan-out audit rule)."""
-    vindex = (
-        vertex_index_from_table(polygons_df, res)
-        .coalesce(pages.sparkSession.sparkContext.defaultParallelism)
-        .localCheckpoint()
-    )
-    n_vertices = vindex.count()
-    return _expansion_loop_k(pages, vindex, n_vertices, res, windows, k)
-
-
-def knn_edge_table_k(
-    pages: DataFrame,
-    polygons_df: DataFrame,
-    k: int = 3,
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
-) -> DataFrame:
-    """knn_edge_k with the polygon side as a TABLE end to end (distributed
-    zip/explode segment index — nothing polygon-shaped on the driver).
-    Checkpointed once: the index feeds every round plus the fallback."""
-    sindex = (
-        segment_index_from_table(polygons_df, res)
-        .coalesce(pages.sparkSession.sparkContext.defaultParallelism)
-        .localCheckpoint()
-    )
-    n_index = sindex.count()
-    return _expansion_loop_k(
-        pages,
-        sindex,
-        n_index,
-        res,
-        windows,
-        k,
-        payload_cols=_SEG_PAYLOAD,
-        d2_expr=seg_d2_expr(),
-        bound_margin=0.5,
-    )

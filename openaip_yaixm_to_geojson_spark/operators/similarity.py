@@ -46,16 +46,6 @@ def dot_double(a: Column, b: Column) -> Column:
     return F.aggregate(products, F.lit(0.0), lambda acc, p: acc + p)
 
 
-def norm_double(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, p: acc + p,
-        )
-    )
-
-
 def cosine_topk(
     embeddings: DataFrame,
     queries: DataFrame,

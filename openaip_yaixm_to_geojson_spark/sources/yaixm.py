@@ -15,7 +15,6 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # boundary segment: tagged union encoded as nullable branches
@@ -273,23 +272,3 @@ def services_from_records(spark: SparkSession, records: list[dict[str, Any]], do
         for idx, svc in enumerate(records)
     ]
     return spark.createDataFrame(rows, schema=SERVICE_SCHEMA)
-
-
-def airspaces_from_file(spark: SparkSession, path: str) -> DataFrame:
-    """Whole-file read -> one document row -> distributed parse. Mirrors the
-    reference CLI entry (src/yaixm-converter.ts:87-113) as a 1-row table."""
-    docs = (
-        spark.read.text(path, wholetext=True)
-        .withColumnRenamed("value", "yaml")
-        .withColumn("doc_id", F.lit(path))
-    )
-    return airspaces_from_yaml_docs(docs)
-
-
-def services_from_file(spark: SparkSession, path: str) -> DataFrame:
-    docs = (
-        spark.read.text(path, wholetext=True)
-        .withColumnRenamed("value", "yaml")
-        .withColumn("doc_id", F.lit(path))
-    )
-    return services_from_yaml_docs(docs)

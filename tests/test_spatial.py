@@ -79,22 +79,25 @@ def test_knn_ring_expansion_matches_bruteforce(spark, polygons):
         knn_bruteforce,
         knn_ring_expansion,
     )
+    from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
 
     pages = pages_from_documents(spark, SF_DIR)
-    # small_input_rows=0 forces the expansion loop (the default would take
-    # the tiny-input brute-force fast path and test nothing)
-    ring = {
-        r["url"]: (r["poly_id"], r["dist_sq"])
-        for r in knn_ring_expansion(pages, polygons, small_input_rows=0).collect()
-    }
     brute = {r["url"]: (r["poly_id"], r["dist_sq"]) for r in knn_bruteforce(pages, polygons).collect()}
-    assert set(ring) == set(brute)
-    mismatches = {u: (ring[u], brute[u]) for u in brute if ring[u] != brute[u]}
-    assert not mismatches, list(mismatches.items())[:5]
-    # the fast path (default gates) returns the identical mapping
-    fast = {r["url"]: (r["poly_id"], r["dist_sq"]) for r in knn_ring_expansion(pages, polygons).collect()}
-    assert fast == brute
+    # the polygon side as a driver list and as a polygons table
+    for polys in (polygons, polygons_to_df(spark, polygons)):
+        # small_input_rows=0 forces the expansion loop (the default would
+        # take the tiny-input brute-force fast path and test nothing)
+        ring = {
+            r["url"]: (r["poly_id"], r["dist_sq"])
+            for r in knn_ring_expansion(pages, polys, small_input_rows=0).collect()
+        }
+        assert set(ring) == set(brute)
+        mismatches = {u: (ring[u], brute[u]) for u in brute if ring[u] != brute[u]}
+        assert not mismatches, list(mismatches.items())[:5]
+        # the fast path (default gates) returns the identical mapping
+        fast = {r["url"]: (r["poly_id"], r["dist_sq"]) for r in knn_ring_expansion(pages, polys).collect()}
+        assert fast == brute
 
 
 def test_tile_rollup_counts(spark, polygons):
@@ -500,7 +503,6 @@ def test_knn_edge_expansion_matches_bruteforce(spark, polygons):
     from openaip_yaixm_to_geojson_spark.operators.knn import (
         knn_edge_bruteforce,
         knn_edge_ring_expansion,
-        knn_edge_ring_expansion_table,
     )
     from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
@@ -517,7 +519,7 @@ def test_knn_edge_expansion_matches_bruteforce(spark, polygons):
     assert loop == brute
     tab = {
         r["url"]: (r["poly_id"], r["dist_sq"])
-        for r in knn_edge_ring_expansion_table(pages, polygons_to_df(spark, polygons)).collect()
+        for r in knn_edge_ring_expansion(pages, polygons_to_df(spark, polygons), small_input_rows=0).collect()
     }
     assert tab == brute
 
@@ -913,21 +915,25 @@ def test_knn_k_crosses_ring_boundary(spark):
     and C (ring 5) and the k-th-distance guarantee closes. B also has a
     second, farther vertex (ring 6) — the distinct-poly_id merge must
     give B ONE slot at its MIN distance. Verified against an independent
-    NumPy brute force (min per pid over vertices, rank by (d2, pid))."""
+    NumPy brute force (min per pid over vertices, rank by (d2, pid)), with
+    the polygon side as a driver list and as a polygons table."""
     import numpy as np
 
     from openaip_yaixm_to_geojson_spark.operators.knn import (
+        _seg_d2_np,
+        _segment_arrays,
         _vertex_arrays,
         knn_edge_k,
         knn_k,
     )
+    from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df
 
     def tri(pid, cx, cy, extra=None):
         ring = [[cx, cy], [cx + 0.01, cy], [cx, cy + 0.01]]
         if extra is not None:
             ring.append(extra)
         ring.append([cx, cy])
-        return {"poly_id": pid, "ring": ring}
+        return {"poly_id": pid, "name": f"P{pid}", "type": "CTA", "class": "D", "ring": ring}
 
     polys = [
         tri(1, 0.15, 0.05),                          # ring 0 from the page
@@ -936,34 +942,34 @@ def test_knn_k_crosses_ring_boundary(spark):
     ]
     pages = spark.createDataFrame([("u1", 0.05, 0.05)], "url string, lat double, lon double")
 
-    got = sorted(
-        (r["rnk"], r["poly_id"], r["dist_sq"]) for r in knn_k(pages, polys, k=3).collect()
-    )
     pids, vx, vy = _vertex_arrays(polys)
     d2 = (vx - 0.05) ** 2 + (vy - 0.05) ** 2
     per_pid = sorted((min(d2[pids == p]), int(p)) for p in np.unique(pids))
     want = sorted((i + 1, p, d) for i, (d, p) in enumerate(per_pid[:3]))
-    assert got == want
-    # the three slots are distinct polygons and B's slot is its MIN vertex
-    assert [p for _, p, _ in got] == [1, 2, 3]
-    assert got[1][2] == (2.30 - 0.05) ** 2
 
     # edge variant crosses the same boundary; segment distances via the
     # shared exact kernel (the nearest point of A's hypotenuse beats its
     # vertices, so the edge distance differs from the vertex distance)
-    from openaip_yaixm_to_geojson_spark.operators.knn import _seg_d2_np, _segment_arrays
-
     spids, ax, ay, bx, by = _segment_arrays(polys)
     ed2 = _seg_d2_np(
         np.full(len(ax), 0.05), np.full(len(ax), 0.05), ax, ay, bx, by
     )
     eper = sorted((min(ed2[spids == p]), int(p)) for p in np.unique(spids))
     ewant = sorted((i + 1, p, d) for i, (d, p) in enumerate(eper[:3]))
-    egot = sorted(
-        (r["rnk"], r["poly_id"], r["dist_sq"])
-        for r in knn_edge_k(pages, polys, k=3).collect()
-    )
-    assert egot == ewant
+
+    for polygons in (polys, polygons_to_df(spark, polys)):
+        got = sorted(
+            (r["rnk"], r["poly_id"], r["dist_sq"]) for r in knn_k(pages, polygons, k=3).collect()
+        )
+        assert got == want
+        # the three slots are distinct polygons and B's slot is its MIN vertex
+        assert [p for _, p, _ in got] == [1, 2, 3]
+        assert got[1][2] == (2.30 - 0.05) ** 2
+        egot = sorted(
+            (r["rnk"], r["poly_id"], r["dist_sq"])
+            for r in knn_edge_k(pages, polygons, k=3).collect()
+        )
+        assert egot == ewant
 
 
 def test_polygon_contains_pairs_synthetic(spark):

@@ -1,0 +1,75 @@
+"""Spark-free checks on the scripts around the package: every package
+import in the entry points and tools resolves, and the test-data scaler
+handles its smallest factor."""
+
+import ast
+import importlib
+import importlib.util
+from pathlib import Path
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+REPO = Path(__file__).resolve().parent.parent
+PACKAGE = "openaip_yaixm_to_geojson_spark"
+SCRIPTS = sorted(REPO.glob("tools/*.py")) + [REPO / n for n in ("bench.py", "bench_extra.py", "__spark_entry__.py")]
+
+
+def _package_imports(path: Path):
+    """(module, name) for every `from openaip_yaixm_to_geojson_spark... import name`,
+    at any depth (most scripts import inside functions)."""
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.ImportFrom) and node.level == 0 and (node.module or "").split(".")[0] == PACKAGE:
+            for alias in node.names:
+                yield node.module, alias.name
+
+
+def _resolves(module: str, name: str) -> bool:
+    mod = importlib.import_module(module)
+    if hasattr(mod, name):
+        return True
+    # `from package import submodule` before the submodule was imported
+    return hasattr(mod, "__path__") and importlib.util.find_spec(f"{module}.{name}") is not None
+
+
+def test_script_package_imports_resolve():
+    """A script left importing a deleted or renamed operator fails here,
+    not at its next manual run."""
+    checked, missing = 0, []
+    for path in SCRIPTS:
+        for module, name in _package_imports(path):
+            checked += 1
+            if not _resolves(module, name):
+                missing.append(f"{path.relative_to(REPO)}: from {module} import {name}")
+    assert checked > 0
+    assert not missing, missing
+
+
+def _load_scale_testdata():
+    spec = importlib.util.spec_from_file_location("scale_testdata", REPO / "tools" / "scale_testdata.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_scale_documents_factor_one(tmp_path):
+    scale = _load_scale_testdata()
+    src, dst = tmp_path / "src", tmp_path / "dst"
+    src.mkdir()
+    dst.mkdir()
+    docs = pa.table(
+        {
+            "doc_id": pa.array([1, 2], type=pa.int64()),
+            "text": ["a b c", "d e"],
+            "lang": ["en", "de"],
+            "source": ["x", "y"],
+            "n_chars": pa.array([5, 3], type=pa.int64()),
+        }
+    )
+    pq.write_table(docs, src / "documents.parquet")
+
+    scale.scale_documents(src, dst, 1)
+    assert pq.read_table(dst / "documents.parquet").equals(docs)
+    with pytest.raises(ValueError, match="factor must be >= 1"):
+        scale.scale_documents(src, dst, 0)

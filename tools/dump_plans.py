@@ -100,7 +100,8 @@ def main() -> None:
         spatial_join_compact(pages, polys),
     )
     from openaip_yaixm_to_geojson_spark.operators.knn import (
-        knn_bruteforce_distributed,
+        knn_edge_ring_expansion,
+        knn_ring_expansion,
         vertex_index_from_table,
     )
     from openaip_yaixm_to_geojson_spark.operators.spatial import spatial_join_compact_table
@@ -120,13 +121,12 @@ def main() -> None:
         vertex_index_from_table(polygons_to_df(spark, polys)),
     )
     section(
-        "kNN exact fallback over the vertex TABLE",
-        "Broadcast the (small) unresolved page tail across vertex "
-        "partitions; one min-by aggregation. O(tail x vertices), "
-        "data-parallel over the vertex set.",
-        knn_bruteforce_distributed(
-            pages.limit(10), vertex_index_from_table(polygons_to_df(spark, polys))
-        ),
+        "kNN exact scan over the vertex TABLE",
+        "The plan the expansion loop's stragglers and a tiny polygons-table "
+        "input share: broadcast the (small) page tail across vertex "
+        "partitions; per-(url, poly_id) min, then the per-url top-k. "
+        "O(tail x vertices), data-parallel over the vertex set.",
+        knn_ring_expansion(pages.limit(10), polygons_to_df(spark, polys)),
     )
     from openaip_yaixm_to_geojson_spark.operators.web import (
         extract_paragraphs,
@@ -265,7 +265,6 @@ def main() -> None:
     )
 
     from openaip_yaixm_to_geojson_spark.operators.dedup import lsh_recall_monitor, simhash64
-    from openaip_yaixm_to_geojson_spark.operators.knn import knn_edge_ring_expansion_table
     from openaip_yaixm_to_geojson_spark.operators.spatial import polygon_overlap_pairs
     from openaip_yaixm_to_geojson_spark.operators.terms import duplicated_span_stats, repeated_grams
 
@@ -275,7 +274,7 @@ def main() -> None:
         "(all codegen); the exact clamped point-to-segment projection is a "
         "pure expression over the candidate rows — Python never touches "
         "distances on this path.",
-        knn_edge_ring_expansion_table(pages.limit(10), polygons_to_df(spark, polys)),
+        knn_edge_ring_expansion(pages.limit(10), polygons_to_df(spark, polys)),
     )
     section(
         "polygon-polygon overlap join",

@@ -31,6 +31,13 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 
+def _copies(factor: int) -> range:
+    """Copy indices after the source table (copy 0); factor 1 is a plain copy."""
+    if factor < 1:
+        raise ValueError(f"factor must be >= 1 (got {factor})")
+    return range(1, factor)
+
+
 def scale_documents(src: Path, dst: Path, factor: int) -> None:
     t = pq.read_table(src / "documents.parquet")
     n = t.num_rows
@@ -39,7 +46,7 @@ def scale_documents(src: Path, dst: Path, factor: int) -> None:
     lang = t.column("lang")
     source = t.column("source")
     parts = [t]
-    for c in range(1, factor):
+    for c in _copies(factor):
         new_text = []
         for i, s in enumerate(text):
             words = s.split(" ")
@@ -59,7 +66,7 @@ def scale_documents(src: Path, dst: Path, factor: int) -> None:
                 }
             )
         )
-    out = pa.concat_tables([p.select(parts[1].column_names) for p in parts])
+    out = pa.concat_tables([p.select(parts[0].column_names) for p in parts])
     pq.write_table(out, dst / "documents.parquet")
 
 
@@ -70,7 +77,7 @@ def scale_events(src: Path, dst: Path, factor: int) -> None:
     user_id = t.column("user_id").to_numpy()
     user_span = int(user_id.max()) + 1
     parts = [t]
-    for c in range(1, factor):
+    for c in _copies(factor):
         parts.append(
             pa.table(
                 {
@@ -83,7 +90,7 @@ def scale_events(src: Path, dst: Path, factor: int) -> None:
                 }
             )
         )
-    out = pa.concat_tables([p.select(parts[1].column_names) for p in parts])
+    out = pa.concat_tables([p.select(parts[0].column_names) for p in parts])
     pq.write_table(out, dst / "events.parquet")
 
 
@@ -93,7 +100,7 @@ def scale_embeddings(src: Path, dst: Path, factor: int) -> None:
     vec_id = t.column("vec_id").to_numpy()
     mat = np.array(t.column("embedding").to_pylist(), dtype=np.float32)
     parts = [t]
-    for c in range(1, factor):
+    for c in _copies(factor):
         rolled = np.roll(mat, c, axis=1)
         parts.append(
             pa.table(
@@ -107,7 +114,7 @@ def scale_embeddings(src: Path, dst: Path, factor: int) -> None:
                 }
             )
         )
-    out = pa.concat_tables([p.select(parts[1].column_names) for p in parts])
+    out = pa.concat_tables([p.select(parts[0].column_names) for p in parts])
     pq.write_table(out, dst / "embeddings.parquet")
 
 
