@@ -112,14 +112,11 @@ def q_spatial_join_table(spark, sf_dir):
     """Polygon-TABLE path: cover built by a distributed pandas-UDF polyfill
     + explode, PIP rings attached via a poly_id join — nothing polygon-
     shaped on the driver (the 100-TB shape; same rows as spatial_join)."""
-    from openaip_yaixm_to_geojson_spark.operators.spatial import (
-        polygons_to_df,
-        spatial_join_distributed,
-    )
+    from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df
 
     pages = pages_from_documents(spark, sf_dir)
     polys_df = polygons_to_df(spark, fixture_polygons())
-    return spatial_join_distributed(pages, polys_df).select(
+    return spatial_join(pages, polys_df).select(
         "url", "poly_id", "airspace_name", "airspace_type", "airspace_class"
     )
 
@@ -853,34 +850,6 @@ def q_knn_bruteforce(spark, sf_dir):
 
     pages = pages_from_documents(spark, sf_dir)
     return knn_bruteforce(pages, fixture_polygons()).select("url", "poly_id", "dist_sq")
-
-
-def q_spatial_join_compact(spark, sf_dir):
-    """Quadtree-compacted mixed-res cover: interior cells stop coarse and
-    skip PIP, boundary cells refine at res_max — same rows as every other
-    spatial-join mode."""
-    from openaip_yaixm_to_geojson_spark.operators.spatial import spatial_join_compact
-
-    pages = pages_from_documents(spark, sf_dir)
-    return spatial_join_compact(pages, fixture_polygons()).select(
-        "url", "poly_id", "airspace_name", "airspace_type", "airspace_class"
-    )
-
-
-def q_spatial_join_compact_table(spark, sf_dir):
-    """Compact-cover join with the polygon side a TABLE end to end
-    (distributed pandas-UDF compaction + explode, rings attached by join) —
-    nothing polygon-shaped on the driver; same rows as every other mode."""
-    from openaip_yaixm_to_geojson_spark.operators.spatial import (
-        polygons_to_df,
-        spatial_join_compact_table,
-    )
-
-    pages = pages_from_documents(spark, sf_dir)
-    polys_df = polygons_to_df(spark, fixture_polygons())
-    return spatial_join_compact_table(pages, polys_df).select(
-        "url", "poly_id", "airspace_name", "airspace_type", "airspace_class"
-    )
 
 
 def q_spatial_join_bucketed(spark, sf_dir):
@@ -2487,8 +2456,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "spatial_join_partitioned": q_spatial_join_partitioned,
         "spatial_join_table": q_spatial_join_table,
         "spatial_join_bucketed": q_spatial_join_bucketed,
-        "spatial_join_compact": q_spatial_join_compact,
-        "spatial_join_compact_table": q_spatial_join_compact_table,
+        # stable gate names: the same spatial_join over a list and a table
+        "spatial_join_compact": q_spatial_join,
+        "spatial_join_compact_table": q_spatial_join_table,
         "join_count_by_airspace": q_join_count_by_airspace,
         "airspace_area": q_airspace_area,
         "polygon_centroid": q_polygon_centroid,

@@ -148,102 +148,6 @@ def _rect_intersects_ring(bounds: tuple[float, float, float, float], ring_xy: np
     return False
 
 
-def children(cell: int) -> list[int]:
-    """The four res+1 cells tiling this cell."""
-    res, x, y = decode(cell)
-    return [
-        ((res + 1) * _SHIFT + (2 * y + dy)) * _SHIFT + (2 * x + dx)
-        for dy in (0, 1)
-        for dx in (0, 1)
-    ]
-
-
-def _rect_fully_inside_ring(bounds: tuple[float, float, float, float], ring_xy: np.ndarray) -> bool:
-    """Rectangle entirely inside the polygon: all four corners inside AND no
-    polygon edge crosses the rectangle (so no boundary passes through)."""
-    min_lon, min_lat, max_lon, max_lat = bounds
-    corners_x = np.array([min_lon, max_lon, max_lon, min_lon])
-    corners_y = np.array([min_lat, min_lat, max_lat, max_lat])
-    if not points_in_ring_winding(corners_x, corners_y, ring_xy).all():
-        return False
-    # reuse the intersection scan minus the corners-inside clause: any
-    # vertex inside the rect or any edge crossing means the boundary
-    # touches the rectangle
-    inside = (
-        (ring_xy[:, 0] >= min_lon)
-        & (ring_xy[:, 0] <= max_lon)
-        & (ring_xy[:, 1] >= min_lat)
-        & (ring_xy[:, 1] <= max_lat)
-    )
-    if inside.any():
-        return False
-    ex1, ey1 = ring_xy[:-1, 0], ring_xy[:-1, 1]
-    ex2, ey2 = ring_xy[1:, 0], ring_xy[1:, 1]
-    for sx1, sy1, sx2, sy2 in (
-        (min_lon, min_lat, max_lon, min_lat),
-        (max_lon, min_lat, max_lon, max_lat),
-        (max_lon, max_lat, min_lon, max_lat),
-        (min_lon, max_lat, min_lon, min_lat),
-    ):
-        d1x, d1y = ex2 - ex1, ey2 - ey1
-        d2x, d2y = sx2 - sx1, sy2 - sy1
-        denom = d1x * d2y - d1y * d2x
-        # over=: subnormal denom can overflow the divide to +-inf — an
-        # intended sentinel (inf/nan fail the [0,1] interval tests), not a
-        # numerical bug.
-        with np.errstate(divide="ignore", invalid="ignore", over="ignore"):
-            t = ((sx1 - ex1) * d2y - (sy1 - ey1) * d2x) / denom
-            u = ((sx1 - ex1) * d1y - (sy1 - ey1) * d1x) / denom
-        if ((denom != 0) & (t >= 0) & (t <= 1) & (u >= 0) & (u <= 1)).any():
-            return False
-        # conservative collinear-overlap case: a polygon edge parallel to
-        # AND lying exactly on this rectangle side (both endpoints outside
-        # the rect, else the vertex-inside clause already fired) is boundary
-        # contact — a `full` verdict would skip PIP for points on it.
-        par = denom == 0
-        if par.any():
-            collinear = par & (((sx1 - ex1) * d1y - (sy1 - ey1) * d1x) == 0)
-            collinear &= (d1x != 0) | (d1y != 0)  # ignore degenerate edges
-            if collinear.any():
-                overlap_x = np.maximum(np.minimum(ex1, ex2), min(sx1, sx2)) <= np.minimum(
-                    np.maximum(ex1, ex2), max(sx1, sx2)
-                )
-                overlap_y = np.maximum(np.minimum(ey1, ey2), min(sy1, sy2)) <= np.minimum(
-                    np.maximum(ey1, ey2), max(sy1, sy2)
-                )
-                if (collinear & overlap_x & overlap_y).any():
-                    return False
-    return True
-
-
-def cover_compact(ring_xy: np.ndarray, res_min: int, res_max: int) -> list[tuple[int, bool]]:
-    """Quadtree-compacted mixed-resolution cover: [(cell, fully_inside)].
-
-    Cells fully inside the polygon stop subdividing at the coarsest level
-    that contains them (their points need NO point-in-polygon refinement);
-    boundary cells subdivide down to res_max. Cover size becomes
-    O(perimeter at res_max + area at res_min) instead of O(area at
-    res_max) — the broadcast-size lever for very large polygons. The
-    emitted regions are disjoint, so a point matches at most one cover
-    cell per polygon."""
-    out: list[tuple[int, bool]] = []
-    stack = cover(ring_xy, res_min)
-    while stack:
-        cell = stack.pop()
-        bounds = cell_bounds(cell)
-        if _rect_fully_inside_ring(bounds, ring_xy):
-            out.append((cell, True))
-            continue
-        res = decode(cell)[0]
-        if res >= res_max:
-            out.append((cell, False))
-            continue
-        for child in children(cell):
-            if _rect_intersects_ring(cell_bounds(child), ring_xy):
-                stack.append(child)
-    return out
-
-
 def cover(ring_xy: np.ndarray, res: int) -> list[int]:
     """Cell cover of a polygon ring: every res-r cell whose rectangle
     intersects the polygon (sound — a point inside the polygon is always in

@@ -177,9 +177,13 @@ def minhash_lsh_pairs(
     # hot bands fan out, so the wide shingle arrays must not ride through
     # this self-join; they are joined back after the pair dedupe. The
     # shingle-set SIZE (one int) does ride along: J(A,B) <= min/max, so
-    # J >= t forces min(|A|,|B|) >= t*max(|A|,|B|) and the ratio bound
-    # prunes pairs (32.5% of candidates at the 50k-doc scale) BEFORE the
-    # expensive array joins + intersections, losslessly.
+    # J >= t forces min/max >= t and the ratio bound prunes pairs (32.5% of
+    # candidates at the 50k-doc scale) BEFORE the expensive array joins +
+    # intersections. Lossless only in the division form: the verify step
+    # computes J = |A∩B| / |A∪B| as one correctly rounded division, which
+    # is monotone, so J <= min/max holds in floats too. The product form
+    # min >= t*max is not (0.55*100 rounds up to 55.00000000000001 and
+    # would drop a 55-in-100 subset pair that the verify keeps at t=0.55).
     banded = sigs.select(
         "key", "n_sh", F.explode(lsh_bands(F.col("sig"), bands, rows_per_band)).alias("band")
     ).select("key", "n_sh", "band.band_idx", "band.band_key")
@@ -199,8 +203,8 @@ def minhash_lsh_pairs(
         )
         .dropDuplicates(["key_a", "key_b"])
         .where(
-            F.least("na", "nb").cast("double")
-            >= F.lit(jaccard_threshold) * F.greatest("na", "nb")
+            F.least("na", "nb").cast("double") / F.greatest("na", "nb").cast("double")
+            >= F.lit(jaccard_threshold)
         )
         .select("key_a", "key_b")
     )

@@ -155,8 +155,8 @@ def vertex_index_from_table(polygons_df: DataFrame, res: int = KNN_RES) -> DataF
     """Distributed vertex index from a polygons TABLE: explode the ring
     column (closing duplicate dropped), encode cells with the codegen cell
     expression — no UDF, no driver materialization, so the polygon side can
-    be millions of rows (the same scale fix spatial_join_distributed made
-    for the cover)."""
+    be millions of rows (the same scale fix polygon_cover_distributed makes
+    for spatial_join's cover of a polygons table)."""
     pts = polygons_df.select(
         F.col("poly_id").cast("int").alias("poly_id"),
         F.explode(F.slice(F.col("ring"), F.lit(1), F.size(F.col("ring")) - 1)).alias("pt"),

@@ -5,15 +5,19 @@ the reference is single-node, this is the north_rule's core operator):
 
 1. **Cell encode** the point side with a pure column expression (codegen,
    no UDF on the fact table) at a configurable resolution.
-2. **Cell cover** each polygon driver-side (polygons are the small side —
-   thousands at most; the cover is exact rectangle/polygon intersection,
-   so it is sound and tight).
+2. **Cell cover** each polygon: driver-side for a polygon list (the small
+   side — thousands at most), by a distributed pandas-UDF polyfill for a
+   polygons table. Both use the exact rectangle/polygon intersection, so
+   the cover is sound and tight.
 3. **Equi-join** page cells against cover cells — broadcast when the cover
    is small (the common case), or a shuffle join with explicit salting of
    hot cells when the polygon side is too big to broadcast.
 4. **Refine** candidates with a vectorized winding-number point-in-polygon
    pandas UDF (NumPy over Arrow batches, grouped by polygon id inside each
-   batch).
+   batch); a table's rings reach the UDF by a poly_id join.
+
+`spatial_join` is the one operator for all of it; the polygon input type
+picks only the cover and the refine.
 
 At 10^12 rows the fact table sees: one projection, one codegen'd cell id,
 one broadcast hash join (no shuffle), one Arrow hop for candidates only
@@ -146,56 +150,6 @@ def make_pip_ring_udf():
     return pip
 
 
-def pip_filter_with_ring(candidates: DataFrame) -> DataFrame:
-    pip = make_pip_ring_udf()
-    return candidates.where(pip(F.col("lon"), F.col("lat"), F.col("poly_id"), F.col("ring")))
-
-
-def spatial_join_distributed(
-    pages: DataFrame,
-    polygons_df: DataFrame,
-    res: int = DEFAULT_JOIN_RES,
-    broadcast_polys: bool = True,
-    salt: int | str | None = None,
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Fully distributed spatial join: the polygon side is a TABLE end to
-    end (cover via pandas-UDF polyfill + explode, PIP rings attached by a
-    poly_id join), so nothing polygon-shaped ever materializes on the
-    driver. Same rows as `spatial_join` (verified in tests).
-
-    broadcast_polys=True broadcasts both the cover and the ring attach —
-    right while polygons fit executor memory (up to ~10^5); set False for a
-    shuffle join on `cell` / `poly_id` beyond that, with `salt` splintering
-    hot cells exactly like the driver-list path (deterministic page-side
-    salt from xxhash64(url), cover side exploded x salt; salt='auto'
-    derives the factor from the cell histogram)."""
-    cover = polygon_cover_distributed(polygons_df, res).select("cell", "poly_id")
-    cells = pages.withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
-    out_cols = ["url", "lat", "lon", "poly_id", "airspace_name", "airspace_type", "airspace_class"]
-    out_cols += [c for c in keep_cols if c not in out_cols]
-
-    if broadcast_polys:
-        candidates = cells.join(F.broadcast(cover), "cell").join(F.broadcast(polygons_df), "poly_id")
-        return pip_filter_with_ring(candidates).select(*out_cols)
-
-    if salt == "auto":
-        salt = choose_salt(pages, res)
-    elif salt is not None and not isinstance(salt, int):
-        raise TypeError(f"salt must be an int, None, or 'auto'; got {salt!r}")
-
-    if salt and salt > 1:
-        cells = cells.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(salt)).cast("int"))
-        cover = cover.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
-        candidates = cells.repartition(F.col("cell"), F.col("_salt")).join(
-            cover, ["cell", "_salt"]
-        ).drop("_salt")
-    else:
-        candidates = cells.join(cover, "cell")
-    candidates = candidates.join(polygons_df, "poly_id")
-    return pip_filter_with_ring(candidates).select(*out_cols)
-
-
 def make_pip_udf(spark: SparkSession, polygons: list[dict[str, Any]]):
     """Vectorized winding-number refine: (lon, lat, poly_id) -> bool.
 
@@ -225,9 +179,19 @@ def make_pip_udf(spark: SparkSession, polygons: list[dict[str, Any]]):
     return pip
 
 
+def pip_refine(candidates: DataFrame, polygons: list[dict[str, Any]]) -> DataFrame:
+    """Driver-list refine: keep the (lon, lat, poly_id) candidates that lie
+    inside their polygon's ring."""
+    pip = make_pip_udf(candidates.sparkSession, polygons)
+    return candidates.where(pip(F.col("lon"), F.col("lat"), F.col("poly_id")))
+
+
+OUT_COLS = ("url", "lat", "lon", "poly_id", "airspace_name", "airspace_type", "airspace_class")
+
+
 def spatial_join(
     pages: DataFrame,
-    polygons: list[dict[str, Any]],
+    polygons: list[dict[str, Any]] | DataFrame,
     res: int = DEFAULT_JOIN_RES,
     broadcast: bool = True,
     salt: int | str | None = None,
@@ -236,185 +200,56 @@ def spatial_join(
     """Pages inside polygons. Returns (url, lat, lon, poly_id,
     airspace_name, airspace_type, airspace_class, *keep_cols).
 
-    broadcast=True: map-side hash join, zero shuffle of the page side.
-    broadcast=False: shuffle hash join on the cell key; `salt` explicitly
-    splinters hot cells — the page side gets a deterministic salt from
-    xxhash64(url) and the cover side is exploded x salt, so skewed cells
-    spread over `salt` reducers (AQE skew-join stays on as backstop).
-    salt="auto" derives the factor from the cell histogram (choose_salt) —
-    deterministic for a given input at any parallelism.
+    `polygons` is a fixture-style driver list or a polygons TABLE
+    (POLYGONS_SCHEMA); the two give the same rows. The input type picks
+    only the cover and the refine: a list is covered on the driver and
+    its rings ship by SparkContext.broadcast; a table is covered by the
+    distributed pandas-UDF polyfill and each candidate gets its ring by a
+    poly_id join, so nothing polygon-shaped touches the driver.
+
+    broadcast=True: map-side hash joins, zero shuffle of the page side.
+    broadcast=False: shuffle hash join on the cell key (and on poly_id for
+    a table's ring attach); `salt` explicitly splinters hot cells — the
+    page side gets a deterministic salt from xxhash64(url) and the cover
+    side is exploded x salt, so skewed cells spread over `salt` reducers
+    (AQE skew-join stays on as backstop). salt="auto" derives the factor
+    from the cell histogram (choose_salt) — deterministic for a given input
+    at any parallelism.
     """
-    spark = pages.sparkSession
-    cover = polygon_cover_df(spark, polygons, res)
+    if not (salt is None or salt == "auto" or isinstance(salt, int)):
+        raise TypeError(f"salt must be an int, None, or 'auto'; got {salt!r}")
+    table = isinstance(polygons, DataFrame)
+    if table:
+        cover = polygon_cover_distributed(polygons, res).select("cell", "poly_id")
+    else:
+        cover = polygon_cover_df(pages.sparkSession, polygons, res)
     cells = pages.withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
 
     if broadcast:
         # salt is a shuffle-join concept; resolving 'auto' here would run a
         # full groupBy-count scan of the fact table for nothing.
         candidates = cells.join(F.broadcast(cover), "cell")
-        pip = make_pip_udf(spark, polygons)
-        out_cols = ["url", "lat", "lon", "poly_id", "airspace_name", "airspace_type", "airspace_class"]
-        out_cols += [c for c in keep_cols if c not in out_cols]
-        return candidates.where(pip(F.col("lon"), F.col("lat"), F.col("poly_id"))).select(*out_cols)
-
-    if salt == "auto":
-        salt = choose_salt(pages, res)
-    elif salt is not None and not isinstance(salt, int):
-        raise TypeError(f"salt must be an int, None, or 'auto'; got {salt!r}")
-
-    if salt and salt > 1:
-        cells = cells.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(salt)).cast("int"))
-        cover_salted = cover.withColumn(
-            "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)]))
-        )
-        candidates = cells.repartition(F.col("cell"), F.col("_salt")).join(
-            cover_salted, ["cell", "_salt"]
-        ).drop("_salt")
     else:
-        candidates = cells.join(cover, "cell")
+        if salt == "auto":
+            salt = choose_salt(pages, res)
+        if salt and salt > 1:
+            cells = cells.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(salt)).cast("int"))
+            cover = cover.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
+            candidates = cells.repartition(F.col("cell"), F.col("_salt")).join(
+                cover, ["cell", "_salt"]
+            ).drop("_salt")
+        else:
+            candidates = cells.join(cover, "cell")
 
-    pip = make_pip_udf(spark, polygons)
-    out_cols = ["url", "lat", "lon", "poly_id", "airspace_name", "airspace_type", "airspace_class"]
-    out_cols += [c for c in keep_cols if c not in out_cols]
-    return candidates.where(pip(F.col("lon"), F.col("lat"), F.col("poly_id"))).select(*out_cols)
-
-
-def compact_cover_df(
-    spark: SparkSession,
-    polygons: list[dict[str, Any]],
-    res_min: int = 10,
-    res_max: int = DEFAULT_JOIN_RES,
-) -> DataFrame:
-    """Quadtree-compacted cover table: (cell, full, poly_id, airspace_*).
-    `full` rows need no PIP refinement (their whole rectangle is inside)."""
-    rows = []
-    for poly in polygons:
-        for cell, full in cellgrid.cover_compact(np.asarray(poly["ring"]), res_min, res_max):
-            rows.append(
-                {
-                    "cell": cell,
-                    "full": bool(full),
-                    "poly_id": int(poly["poly_id"]),
-                    "airspace_name": poly["name"],
-                    "airspace_type": poly["type"],
-                    "airspace_class": poly["class"],
-                }
-            )
-    schema = T.StructType(
-        [
-            T.StructField("cell", T.LongType(), False),
-            T.StructField("full", T.BooleanType(), False),
-            T.StructField("poly_id", T.IntegerType(), False),
-            T.StructField("airspace_name", T.StringType(), False),
-            T.StructField("airspace_type", T.StringType(), False),
-            T.StructField("airspace_class", T.StringType(), False),
-        ]
-    )
-    return literal_table(spark, rows, schema)
-
-
-def spatial_join_compact(
-    pages: DataFrame,
-    polygons: list[dict[str, Any]],
-    res_min: int = 10,
-    res_max: int = DEFAULT_JOIN_RES,
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Spatial join against a COMPACTED mixed-resolution cover.
-
-    The point side probes one cell id per resolution level (explode x
-    (res_max - res_min + 1) before the broadcast join); the cover's
-    regions are disjoint so each point still matches a polygon at most
-    once, and points landing in `full` cells skip the PIP UDF entirely —
-    only boundary-cell candidates pay the Arrow hop. Same rows as
-    spatial_join. Choose this over the uniform cover when polygon AREA
-    (broadcast bytes) is the bottleneck — a 1.5-deg polygon's cover drops
-    7.2x — NOT for wall time at small cover sizes: measured at 8M docs
-    against one large polygon, the PIP-skip gain roughly cancels the
-    (res_max - res_min + 1)x point-side probe fan-out (2.3s vs 2.2s)."""
-    spark = pages.sparkSession
-    cover = compact_cover_df(spark, polygons, res_min, res_max)
-    levels = [
-        cellgrid.cell_id_col(F.col("lon"), F.col("lat"), r) for r in range(res_min, res_max + 1)
-    ]
-    cells = pages.withColumn("cell", F.explode(F.array(*levels)))
-    candidates = cells.join(F.broadcast(cover), "cell")
-    pip = make_pip_udf(spark, polygons)
-    out_cols = ["url", "lat", "lon", "poly_id", "airspace_name", "airspace_type", "airspace_class"]
-    out_cols += [c for c in keep_cols if c not in out_cols]
-    keep = F.col("full") | pip(F.col("lon"), F.col("lat"), F.col("poly_id"))
-    return candidates.where(keep).select(*out_cols)
-
-
-def compact_cover_distributed(
-    polygons_df: DataFrame, res_min: int = 10, res_max: int = DEFAULT_JOIN_RES
-) -> DataFrame:
-    """Distributed quadtree-compacted cover: one pandas-UDF compaction per
-    polygon row + explode — the polygons-TABLE twin of compact_cover_df, so
-    the polygon side can be millions of rows. Identical (cell, full) set to
-    cellgrid.cover_compact per polygon."""
-    entry_type = T.ArrayType(
-        T.StructType(
-            [T.StructField("cell", T.LongType()), T.StructField("full", T.BooleanType())]
+    if table:
+        pip = make_pip_ring_udf()
+        rings = F.broadcast(polygons) if broadcast else polygons
+        inside = candidates.join(rings, "poly_id").where(
+            pip(F.col("lon"), F.col("lat"), F.col("poly_id"), F.col("ring"))
         )
-    )
-
-    @F.pandas_udf(entry_type)
-    def compact_cells(rings: pd.Series) -> pd.Series:
-        out = []
-        for ring in rings:
-            ring_np = np.vstack([np.asarray(pt, dtype=np.float64) for pt in ring])
-            out.append(
-                [
-                    {"cell": int(cell), "full": bool(full)}
-                    for cell, full in cellgrid.cover_compact(ring_np, res_min, res_max)
-                ]
-            )
-        return pd.Series(out)
-
-    return polygons_df.select(
-        F.explode(compact_cells(F.col("ring"))).alias("_e"),
-        "poly_id",
-        "airspace_name",
-        "airspace_type",
-        "airspace_class",
-    ).select(
-        F.col("_e.cell").alias("cell"),
-        F.col("_e.full").alias("full"),
-        "poly_id",
-        "airspace_name",
-        "airspace_type",
-        "airspace_class",
-    )
-
-
-def spatial_join_compact_table(
-    pages: DataFrame,
-    polygons_df: DataFrame,
-    res_min: int = 10,
-    res_max: int = DEFAULT_JOIN_RES,
-    keep_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """spatial_join_compact with the polygon side as a TABLE end to end:
-    compacted cover via distributed pandas-UDF compaction + explode, PIP
-    rings attached by a poly_id join — nothing polygon-shaped on the
-    driver. `full`-cell candidates skip the PIP refine exactly like the
-    driver-list variant; same rows as spatial_join."""
-    cover = compact_cover_distributed(polygons_df, res_min, res_max).select(
-        "cell", "full", "poly_id"
-    )
-    levels = [
-        cellgrid.cell_id_col(F.col("lon"), F.col("lat"), r) for r in range(res_min, res_max + 1)
-    ]
-    cells = pages.withColumn("cell", F.explode(F.array(*levels)))
-    candidates = cells.join(F.broadcast(cover), "cell").join(
-        F.broadcast(polygons_df), "poly_id"
-    )
-    pip = make_pip_ring_udf()
-    out_cols = ["url", "lat", "lon", "poly_id", "airspace_name", "airspace_type", "airspace_class"]
-    out_cols += [c for c in keep_cols if c not in out_cols]
-    keep = F.col("full") | pip(F.col("lon"), F.col("lat"), F.col("poly_id"), F.col("ring"))
-    return candidates.where(keep).select(*out_cols)
+    else:
+        inside = pip_refine(candidates, polygons)
+    return inside.select(*OUT_COLS, *(c for c in keep_cols if c not in OUT_COLS))
 
 
 def cell_histogram(pages: DataFrame, res: int = DEFAULT_JOIN_RES) -> DataFrame:

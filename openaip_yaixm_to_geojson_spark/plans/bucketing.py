@@ -19,7 +19,8 @@ from pyspark.sql import functions as F
 from ..functions import cellgrid
 from ..operators.spatial import (
     DEFAULT_JOIN_RES,
-    make_pip_udf,
+    OUT_COLS,
+    pip_refine,
     polygon_cover_distributed,
     polygons_to_df,
 )
@@ -96,11 +97,8 @@ def bucketed_cover(spark: SparkSession, polygons, table: str = "cover_bucketed",
 def colocated_spatial_join(spark: SparkSession, pages_table: str, cover_table: str, polygons) -> DataFrame:
     """Shuffle-free spatial join over two tables bucketed on `cell`:
     sort-merge join uses the bucket layout directly (no Exchange), then the
-    usual vectorized PIP refine."""
+    driver-list PIP refine `spatial_join` uses (`polygons` is a list)."""
     pages = spark.table(pages_table)
     cover = spark.table(cover_table)
     candidates = pages.join(cover.hint("merge"), "cell")
-    pip = make_pip_udf(spark, polygons)
-    return candidates.where(pip(F.col("lon"), F.col("lat"), F.col("poly_id"))).select(
-        "url", "lat", "lon", "poly_id", "airspace_name", "airspace_type", "airspace_class"
-    )
+    return pip_refine(candidates, polygons).select(*OUT_COLS)

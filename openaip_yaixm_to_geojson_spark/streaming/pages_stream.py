@@ -3,21 +3,20 @@
 The reference is strictly batch (SURVEY.md §2: no streaming, no watermarks)
 — resumability there comes from checkpointing. The engine adds a streaming
 ingestion path as a first-class source: the spatial join is stateless
-(cell encode + broadcast cover join + PIP refine), so the exact same
-operators run on a readStream DataFrame; per-tile counts become a
+(cell encode + broadcast cover join + PIP refine), so the batch operator
+runs on a readStream DataFrame as is —
+`spatial_join(stream, polygons, keep_cols=("warc_ts",))` for a polygon
+list or a polygons table (a stream-static join); per-tile counts become a
 watermarked windowed aggregation that tolerates late WARC timestamps.
 """
 
 from __future__ import annotations
-
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import cellgrid
-from ..operators.spatial import DEFAULT_JOIN_RES, make_pip_udf, polygon_cover_df
 from ..operators.tiles import DEFAULT_TILE_RES
 
 PAGES_STREAM_SCHEMA = T.StructType(
@@ -45,45 +44,6 @@ def stream_pages(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(input_dir)
-
-
-def stream_spatial_join(
-    pages_stream: DataFrame, polygons: list[dict[str, Any]], res: int = DEFAULT_JOIN_RES
-) -> DataFrame:
-    """Stateless streaming spatial join: identical operator composition to
-    the batch path (cell equi-join against the broadcast cover + vectorized
-    PIP refine)."""
-    spark = pages_stream.sparkSession
-    cover = polygon_cover_df(spark, polygons, res)
-    cells = pages_stream.withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
-    pip = make_pip_udf(spark, polygons)
-    return (
-        cells.join(F.broadcast(cover), "cell")
-        .where(pip(F.col("lon"), F.col("lat"), F.col("poly_id")))
-        .select("url", "warc_ts", "poly_id", "airspace_name", "airspace_class", "lat", "lon")
-    )
-
-
-def stream_spatial_join_table(
-    pages_stream: DataFrame, polygons_df: DataFrame, res: int = DEFAULT_JOIN_RES
-) -> DataFrame:
-    """Polygon-TABLE twin of stream_spatial_join: a stream-static join
-    against the distributed polyfill cover (pandas-UDF cover + explode) and
-    the ring-attach by poly_id — no driver-held polygon list, so the static
-    side scales exactly like the batch spatial_join_distributed path."""
-    from ..operators.spatial import make_pip_ring_udf, polygon_cover_distributed
-
-    cover = polygon_cover_distributed(polygons_df, res).select("cell", "poly_id")
-    cells = pages_stream.withColumn(
-        "cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res)
-    )
-    pip = make_pip_ring_udf()
-    candidates = cells.join(F.broadcast(cover), "cell").join(
-        F.broadcast(polygons_df), "poly_id"
-    )
-    return candidates.where(
-        pip(F.col("lon"), F.col("lat"), F.col("poly_id"), F.col("ring"))
-    ).select("url", "warc_ts", "poly_id", "airspace_name", "airspace_class", "lat", "lon")
 
 
 def stream_tile_counts(

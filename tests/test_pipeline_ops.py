@@ -46,6 +46,25 @@ def test_minhash_lsh_finds_near_dup(spark, docs):
     assert (0, 1) in exact
 
 
+def test_minhash_size_prefilter_keeps_pair_at_threshold(spark):
+    """A's 55 shingles are a subset of B's 100, so J = 55/100 = 0.55 exactly
+    and the verify keeps the pair at t = 0.55. The size-ratio prefilter must
+    not drop it: in floats 0.55 * 100 = 55.00000000000001 > 55."""
+    from openaip_yaixm_to_geojson_spark.operators.dedup import minhash_lsh_pairs
+
+    words = [f"w{i}" for i in range(102)]
+    docs = spark.createDataFrame(
+        [(0, " ".join(words[:57])), (1, " ".join(words))], "doc_id bigint, text string"
+    )
+    # 16 bands x 1 row: each band matches with probability J, so the pair
+    # is a candidate unless all 16 single-hash bands miss
+    pairs = {
+        (r["key_a"], r["key_b"]): r["jaccard"]
+        for r in minhash_lsh_pairs(docs, jaccard_threshold=0.55, bands=16).collect()
+    }
+    assert pairs == {(0, 1): 0.55}
+
+
 def test_simhash_neardup(spark, docs):
     from openaip_yaixm_to_geojson_spark.operators.dedup import simhash_neardup_pairs
 

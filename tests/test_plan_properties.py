@@ -22,11 +22,14 @@ def pages(spark):
 
 def test_spatial_join_broadcasts_and_never_shuffles_facts(spark, pages):
     from openaip_yaixm_to_geojson_spark.functions.convert_local import fixture_polygons
-    from openaip_yaixm_to_geojson_spark.operators.spatial import spatial_join
+    from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df, spatial_join
 
-    plan = plan_of(spatial_join(pages, fixture_polygons()))
-    assert "BroadcastHashJoin" in plan
-    assert "Exchange hashpartitioning" not in plan  # zero fact shuffles
+    # the polygon side as a driver list and as a polygons table (whose
+    # ring attach by poly_id must broadcast too)
+    for polys in (fixture_polygons(), polygons_to_df(spark, fixture_polygons())):
+        plan = plan_of(spatial_join(pages, polys))
+        assert "BroadcastHashJoin" in plan
+        assert "Exchange hashpartitioning" not in plan  # zero fact shuffles
 
 
 def test_contamination_scan_prunes_columns(spark):

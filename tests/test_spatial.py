@@ -35,29 +35,34 @@ def brute_force_join(pages_pdf, polygons):
 
 
 def test_spatial_join_broadcast_matches_bruteforce(spark, polygons, pages_pdf):
-    from openaip_yaixm_to_geojson_spark.operators.spatial import spatial_join
+    from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df, spatial_join
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
 
     pages = pages_from_documents(spark, SF_DIR)
-    got = {
-        (r["url"], r["poly_id"])
-        for r in spatial_join(pages, polygons, broadcast=True).collect()
-    }
     expected = brute_force_join(pages_pdf, polygons)
-    assert got == expected
     assert len(expected) > 0, "join must be non-trivially populated"
+    # the polygon side as a driver list and as a polygons table
+    for polys in (polygons, polygons_to_df(spark, polygons)):
+        got = {
+            (r["url"], r["poly_id"])
+            for r in spatial_join(pages, polys, broadcast=True).collect()
+        }
+        assert got == expected
 
 
 def test_spatial_join_salted_shuffle_same_result(spark, polygons, pages_pdf):
-    from openaip_yaixm_to_geojson_spark.operators.spatial import spatial_join
+    from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df, spatial_join
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
 
     pages = pages_from_documents(spark, SF_DIR)
-    got = {
-        (r["url"], r["poly_id"])
-        for r in spatial_join(pages, polygons, broadcast=False, salt=4).collect()
-    }
-    assert got == brute_force_join(pages_pdf, polygons)
+    expected = brute_force_join(pages_pdf, polygons)
+    for polys in (polygons, polygons_to_df(spark, polygons)):
+        for salt in (None, 4):
+            got = {
+                (r["url"], r["poly_id"])
+                for r in spatial_join(pages, polys, broadcast=False, salt=salt).collect()
+            }
+            assert got == expected
 
 
 def test_text_byte_identical_through_join(spark, polygons):
@@ -179,31 +184,16 @@ def test_knn_shuffle_join_past_broadcast_threshold(spark, polygons, monkeypatch)
 
 
 def test_spatial_join_salt_type_validation(spark, polygons):
-    from openaip_yaixm_to_geojson_spark.operators.spatial import spatial_join
+    """An invalid salt raises for either input in either join mode, even
+    though a broadcast join never uses the salt."""
+    from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df, spatial_join
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
 
     pages = pages_from_documents(spark, SF_DIR)
-    with pytest.raises(TypeError, match="salt"):
-        spatial_join(pages, polygons, broadcast=False, salt="four")
-
-
-def test_spatial_join_distributed_matches_driver_path(spark, polygons, pages_pdf):
-    """Polygon-table path (distributed cover + ring-join PIP) returns the
-    exact same rows as the driver-list path."""
-    from openaip_yaixm_to_geojson_spark.operators.spatial import (
-        polygons_to_df,
-        spatial_join_distributed,
-    )
-    from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
-
-    pages = pages_from_documents(spark, SF_DIR)
-    polys_df = polygons_to_df(spark, polygons)
-    for broadcast_polys in (True, False):
-        got = {
-            (r["url"], r["poly_id"])
-            for r in spatial_join_distributed(pages, polys_df, broadcast_polys=broadcast_polys).collect()
-        }
-        assert got == brute_force_join(pages_pdf, polygons)
+    for polys in (polygons, polygons_to_df(spark, polygons)):
+        for broadcast in (True, False):
+            with pytest.raises(TypeError, match="salt"):
+                spatial_join(pages, polys, broadcast=broadcast, salt="four")
 
 
 def test_polygon_cover_distributed_scales_without_driver(spark):
@@ -289,24 +279,6 @@ def test_knn_hundred_thousand_vertices(spark):
         assert got[url][0] == vp[idx[i]]
 
 
-def test_spatial_join_distributed_salted(spark, polygons, pages_pdf):
-    from openaip_yaixm_to_geojson_spark.operators.spatial import (
-        polygons_to_df,
-        spatial_join_distributed,
-    )
-    from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
-
-    pages = pages_from_documents(spark, SF_DIR)
-    polys_df = polygons_to_df(spark, polygons)
-    got = {
-        (r["url"], r["poly_id"])
-        for r in spatial_join_distributed(pages, polys_df, broadcast_polys=False, salt=4).collect()
-    }
-    assert got == brute_force_join(pages_pdf, polygons)
-    with pytest.raises(TypeError, match="salt"):
-        spatial_join_distributed(pages, polys_df, broadcast_polys=False, salt="four")
-
-
 def test_salted_join_under_real_skew(spark, polygons):
     """All pages landing in ONE hot cell: the salted shuffle path must
     still match the broadcast path, with choose_salt picking a factor > 1
@@ -335,45 +307,6 @@ def test_salted_join_under_real_skew(spark, polygons):
     assert broadcast_rows >= 20_000  # every page is inside at least one polygon
 
 
-def test_compact_cover_equivalence(polygons):
-    """Compacted mixed-res cover expands to exactly the uniform res_max
-    cover, regions are disjoint, full cells are genuinely interior, and a
-    LARGE polygon compacts substantially (fixtures are boundary-dominated,
-    so the big-circle case is what exercises the area win: ~7x)."""
-    from openaip_yaixm_to_geojson_spark.functions import cellgrid
-
-    theta = np.linspace(0, 2 * np.pi, 201)
-    big_ring = np.stack([-1.0 + 1.5 * np.cos(theta), 52.0 + 1.5 * np.sin(theta)], axis=1)
-    big_ring[-1] = big_ring[0]
-    cases = [np.asarray(p["ring"]) for p in polygons] + [big_ring]
-    for ring in cases:
-        res_min, res_max = 10, 13
-        compact = cellgrid.cover_compact(ring, res_min, res_max)
-        # expand every compact cell to its res_max descendants
-        expanded = set()
-        for cell, _full in compact:
-            frontier = [cell]
-            while frontier:
-                c = frontier.pop()
-                if cellgrid.decode(c)[0] == res_max:
-                    assert c not in expanded, "regions overlap"
-                    expanded.add(c)
-                else:
-                    frontier.extend(cellgrid.children(c))
-        assert expanded == set(cellgrid.cover(ring, res_max))
-        # full cells: their centre must be inside the polygon
-        from openaip_yaixm_to_geojson_spark.functions.geodesy import points_in_ring_winding
-
-        for cell, full in compact:
-            if full:
-                lo, la, hi, ha = cellgrid.cell_bounds(cell)
-                cx, cy = (lo + hi) / 2, (la + ha) / 2
-                assert points_in_ring_winding(np.array([cx]), np.array([cy]), ring)[0]
-        # compaction actually compacts on the bigger polygons
-        if len(cellgrid.cover(ring, res_max)) > 200:
-            assert len(compact) * 4 < len(cellgrid.cover(ring, res_max))
-
-
 def test_polygon_raster_table_matches_driver(spark, polygons):
     """The distributed raster path (polyfill UDF over a polygons TABLE)
     produces the identical (tile, poly) set to the driver-loop builder."""
@@ -389,46 +322,6 @@ def test_polygon_raster_table_matches_driver(spark, polygons):
         for r in polygon_raster_table(polygons_to_df(spark, polygons)).collect()
     }
     assert driver == table and len(driver) > 0
-
-
-def test_collinear_edge_not_marked_full():
-    """A polygon edge exactly collinear with a cell border (vertices beyond
-    the cell corners) is boundary contact: the cell must NOT be classified
-    `full` (full cells skip the exact PIP refine)."""
-    from openaip_yaixm_to_geojson_spark.functions import cellgrid
-
-    res = 6
-    # pick a res-6 cell and build a rectangle whose bottom edge runs exactly
-    # along the cell's top border but extends past both corners, and whose
-    # body covers the cell entirely otherwise — corners of the cell are
-    # inside the rectangle, no vertex inside the cell, one collinear edge.
-    cell = cellgrid.encode(0.0, 45.0, res)
-    lo, la, hi, ha = cellgrid.cell_bounds(cell)
-    ring = np.array(
-        [
-            [lo - 1.0, ha],  # collinear with the TOP border of the cell
-            [hi + 1.0, ha],
-            [hi + 1.0, la - 5.0],
-            [lo - 1.0, la - 5.0],
-            [lo - 1.0, ha],
-        ]
-    )
-    assert not cellgrid._rect_fully_inside_ring((lo, la, hi, ha), ring)
-    # sanity: nudging that edge strictly above the border makes it full
-    ring_clear = ring.copy()
-    ring_clear[ring_clear[:, 1] == ha, 1] = ha + 0.5
-    assert cellgrid._rect_fully_inside_ring((lo, la, hi, ha), ring_clear)
-
-
-def test_spatial_join_compact_matches(spark, polygons, pages_pdf):
-    from openaip_yaixm_to_geojson_spark.operators.spatial import spatial_join_compact
-    from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
-
-    pages = pages_from_documents(spark, SF_DIR)
-    got = {
-        (r["url"], r["poly_id"]) for r in spatial_join_compact(pages, polygons).collect()
-    }
-    assert got == brute_force_join(pages_pdf, polygons)
 
 
 def test_mercator_lattice_margin_and_quadkey(spark):

@@ -11,12 +11,12 @@ def polygons():
 
 
 def test_stream_join_matches_batch(spark, polygons, tmp_path):
+    """The batch spatial_join runs on a readStream source as is."""
     from openaip_yaixm_to_geojson_spark.operators.spatial import spatial_join
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
     from openaip_yaixm_to_geojson_spark.streaming.pages_stream import (
         run_available_now,
         stream_pages,
-        stream_spatial_join,
     )
 
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
@@ -25,7 +25,7 @@ def test_stream_join_matches_batch(spark, polygons, tmp_path):
 
     stream = stream_pages(spark, in_dir)
     assert stream.isStreaming
-    joined = stream_spatial_join(stream, polygons)
+    joined = spatial_join(stream, polygons, keep_cols=("warc_ts",))
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
     run_available_now(joined, out_dir, ckpt)
@@ -37,7 +37,8 @@ def test_stream_join_matches_batch(spark, polygons, tmp_path):
     assert got == expected and len(got) > 0
 
     # incremental: draining again with the same checkpoint adds nothing
-    run_available_now(stream_spatial_join(stream_pages(spark, in_dir), polygons), out_dir, ckpt)
+    again = spatial_join(stream_pages(spark, in_dir), polygons, keep_cols=("warc_ts",))
+    run_available_now(again, out_dir, ckpt)
     assert spark.read.parquet(out_dir).count() == len(got)
 
 
@@ -52,14 +53,13 @@ def test_stream_join_table_matches_batch(spark, polygons, tmp_path):
     from openaip_yaixm_to_geojson_spark.streaming.pages_stream import (
         run_available_now,
         stream_pages,
-        stream_spatial_join_table,
     )
 
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
     in_dir = str(tmp_path / "in")
     pages.select("url", "warc_ts", "text", "lang", "lat", "lon").write.parquet(in_dir)
-    joined = stream_spatial_join_table(
-        stream_pages(spark, in_dir), polygons_to_df(spark, polygons)
+    joined = spatial_join(
+        stream_pages(spark, in_dir), polygons_to_df(spark, polygons), keep_cols=("warc_ts",)
     )
     out_dir = str(tmp_path / "out")
     run_available_now(joined, out_dir, str(tmp_path / "ckpt"))
@@ -69,18 +69,19 @@ def test_stream_join_table_matches_batch(spark, polygons, tmp_path):
 
 
 def test_stream_windowed_tile_counts(spark, polygons, tmp_path):
+    from openaip_yaixm_to_geojson_spark.operators.spatial import spatial_join
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
     from openaip_yaixm_to_geojson_spark.streaming.pages_stream import (
         run_available_now,
         stream_pages,
-        stream_spatial_join,
         stream_tile_counts,
     )
 
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
     in_dir = str(tmp_path / "in")
     pages.select("url", "warc_ts", "text", "lang", "lat", "lon").write.parquet(in_dir)
-    counts = stream_tile_counts(stream_spatial_join(stream_pages(spark, in_dir), polygons))
+    joined = spatial_join(stream_pages(spark, in_dir), polygons, keep_cols=("warc_ts",))
+    counts = stream_tile_counts(joined)
     out_dir = str(tmp_path / "out")
     run_available_now(counts, out_dir, str(tmp_path / "ckpt"))
     rows = spark.read.parquet(out_dir).collect()

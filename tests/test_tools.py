@@ -1,6 +1,6 @@
 """Spark-free checks on the scripts around the package: every package
-import in the entry points and tools resolves, and the test-data scaler
-handles its smallest factor."""
+import in the entry points, tools and benchmark harness resolves, and the
+test-data scaler handles its smallest factor."""
 
 import ast
 import importlib
@@ -13,7 +13,11 @@ import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 PACKAGE = "openaip_yaixm_to_geojson_spark"
-SCRIPTS = sorted(REPO.glob("tools/*.py")) + [REPO / n for n in ("bench.py", "bench_extra.py", "__spark_entry__.py")]
+SCRIPTS = (
+    sorted(REPO.glob("tools/*.py"))
+    + sorted(REPO.glob("perfbench/*.py"))
+    + [REPO / n for n in ("bench.py", "bench_extra.py", "__spark_entry__.py")]
+)
 
 
 def _package_imports(path: Path):

@@ -79,40 +79,21 @@ def main() -> None:
         "Single ArrowEvalPython over the fact table; no joins.",
         knn_bruteforce(pages, polys),
     )
-    from openaip_yaixm_to_geojson_spark.operators.spatial import (
-        polygons_to_df,
-        spatial_join_compact,
-        spatial_join_distributed,
-    )
+    from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df
 
     section(
         "spatial join (polygon-table path)",
         "Polygon side fully distributed: pandas-UDF polyfill + explode builds "
         "the cover, rings attach via a broadcast poly_id join, PIP runs on "
         "candidates. Still zero fact-side shuffles.",
-        spatial_join_distributed(pages, polygons_to_df(spark, polys)),
-    )
-    section(
-        "spatial join (quadtree-compact cover)",
-        "Mixed-res cover: the point side probes one codegen cell id per "
-        "level (Generate = the explode), interior `full` candidates skip "
-        "PIP via the OR predicate; broadcast join, zero fact shuffles.",
-        spatial_join_compact(pages, polys),
+        spatial_join(pages, polygons_to_df(spark, polys)),
     )
     from openaip_yaixm_to_geojson_spark.operators.knn import (
         knn_edge_ring_expansion,
         knn_ring_expansion,
         vertex_index_from_table,
     )
-    from openaip_yaixm_to_geojson_spark.operators.spatial import spatial_join_compact_table
 
-    section(
-        "spatial join (compact cover, polygon-table path)",
-        "Quadtree compaction runs as a pandas UDF per polygon ROW (explode "
-        "after), rings attach via broadcast poly_id join; `full` candidates "
-        "skip PIP. Nothing polygon-shaped on the driver.",
-        spatial_join_compact_table(pages, polygons_to_df(spark, polys)),
-    )
     section(
         "kNN vertex index from a polygons TABLE",
         "Ring explode + codegen cell encode: the index builder the "
