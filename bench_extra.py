@@ -4,8 +4,11 @@
 Usage: python bench_extra.py [passes] [query ...]
 
 Prints one line per query: name, min, all samples. Queries default to the
-full bench.py suite minus the synthetic headline. Use SPARK_GRAFT_FANOUT=0
-to A/B the adaptive scan fan-out (plans/fanout.py).
+full bench.py suite minus the synthetic headline (`bench_suite.suite`). Use
+SPARK_GRAFT_FANOUT=0 to A/B the adaptive scan fan-out (plans/fanout.py).
+
+The `pages` and `linked` inputs are built once and shared by every query,
+as in bench.py (this script used to rebuild them on every call).
 """
 
 from __future__ import annotations
@@ -17,8 +20,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -27,121 +28,25 @@ def main() -> None:
     passes = int(sys.argv[1]) if len(sys.argv) > 1 else 3
     only = set(sys.argv[2:])
 
-    from openaip_yaixm_to_geojson_spark.functions.convert_local import fixture_polygons
-    from openaip_yaixm_to_geojson_spark.operators.dedup import (
-        containment_pairs,
-        edit_distance_pairs,
-        exact_dedup,
-        minhash_lsh_pairs,
-        simhash16,
-        simhash64,
-    )
-    from openaip_yaixm_to_geojson_spark.operators.events import (
-        asof_join,
-        events_anomaly,
-        events_funnel,
-    )
-    from openaip_yaixm_to_geojson_spark.operators.graph import synth_link_graph, triangle_count
-    from openaip_yaixm_to_geojson_spark.operators.knn import (
-        knn_edge_ring_expansion,
-        knn_ring_expansion,
-    )
-    from openaip_yaixm_to_geojson_spark.operators.relational import corpus_cube, pareto_frontier
-    from openaip_yaixm_to_geojson_spark.operators.similarity import (
-        ann_topk_quantized,
-        cosine_topk,
-        queries_from_embeddings,
-    )
-    from openaip_yaixm_to_geojson_spark.operators.spatial import spatial_join
-    from openaip_yaixm_to_geojson_spark.operators.terms import (
-        bm25_topk,
-        bpe_phrase_merge,
-        charlm_surprisal,
-        repeated_grams,
-        tfidf_topk,
-    )
-    from openaip_yaixm_to_geojson_spark.operators.text import (
-        analyze_documents,
-        bloom_contamination,
-        pack_documents,
-        stratified_sample,
-    )
-    from openaip_yaixm_to_geojson_spark.operators.tiles import (
-        geohash_counts,
-        tile_nearest_airspace,
-        tile_xyz_export,
-    )
-    from openaip_yaixm_to_geojson_spark.operators.web import (
-        boilerplate_scrub,
-        link_pagerank,
-        synth_linked_pages,
-    )
+    from bench_suite import suite
     from openaip_yaixm_to_geojson_spark.plans.session import build_session
-    from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
 
     spark = build_session(
         app_name="bench_extra", master=f"local[{CPUS}]", shuffle_partitions=CPUS
     )
     spark.sparkContext.setLogLevel("ERROR")
-    polys = fixture_polygons()
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    clicks = ev.where(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    views = ev.where(F.col("event_type") == "view").select("user_id", "ts", "event_id", "value")
-
-    def pages():
-        return pages_from_documents(spark, SF_DIR)
-
-    def linked():
-        return synth_linked_pages(spark, SF_DIR)
-
-    runners = {
-        "spatial_join_sf": lambda: spatial_join(pages(), polys).count(),
-        "knn_sf": lambda: knn_ring_expansion(pages(), polys).count(),
-        "knn_edge_sf": lambda: knn_edge_ring_expansion(pages(), polys).count(),
-        "dedup_exact": lambda: exact_dedup(docs).count(),
-        "minhash_lsh_pairs": lambda: minhash_lsh_pairs(docs).count(),
-        "simhash": lambda: docs.select(simhash16(F.col("text"))).count(),
-        "simhash64": lambda: docs.select(simhash64(F.col("text"))).count(),
-        "text_analyze": lambda: analyze_documents(docs).select(F.max("n_tokens_bpe")).count(),
-        "ann_topk": lambda: cosine_topk(emb, queries_from_embeddings(emb, n=5), k=3).count(),
-        "ann_topk_quantized": lambda: ann_topk_quantized(emb).count(),
-        "tile_xyz": lambda: tile_xyz_export(pages(), z=11).count(),
-        "events_asof": lambda: asof_join(clicks, views).count(),
-        "tfidf_topk": lambda: tfidf_topk(docs, k=3).count(),
-        "stratified_sample": lambda: stratified_sample(docs, quota=40, group_col="lang").count(),
-        "events_funnel": lambda: events_funnel(ev).count(),
-        "triangle_count": lambda: triangle_count(synth_link_graph(docs)).count(),
-        "corpus_cube": lambda: corpus_cube(docs).count(),
-        "repeated_grams": lambda: repeated_grams(docs).count(),
-        "pack_documents": lambda: pack_documents(docs, capacity=512, n_streams=8).count(),
-        "bloom_contamination": lambda: bloom_contamination(
-            docs, docs.where(F.col("doc_id") % 101 == 0)
-        ).count(),
-        "geohash_counts": lambda: geohash_counts(pages()).count(),
-        "link_pagerank": lambda: link_pagerank(linked()).count(),
-        "boilerplate_scrub": lambda: boilerplate_scrub(linked()).count(),
-        "events_anomaly": lambda: events_anomaly(ev).count(),
-        "edit_distance_pairs": lambda: edit_distance_pairs(docs).count(),
-        "pareto_frontier": lambda: pareto_frontier(docs).count(),
-        "containment_pairs": lambda: containment_pairs(docs).count(),
-        "bm25_topk": lambda: bm25_topk(docs, k=20).count(),
-        "tile_nearest_airspace": lambda: tile_nearest_airspace(pages(), polys).count(),
-        "charlm_surprisal": lambda: charlm_surprisal(docs).count(),
-        "bpe_phrase_merge": lambda: bpe_phrase_merge(docs).count(),
-    }
-    names = [n for n in runners if not only or n in only]
+    builders = suite(spark, SF_DIR)
+    names = [n for n in builders if not only or n in only]
     out = {}
     for name in names:
-        fn = runners[name]
+        build = builders[name]
         spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-        fn()  # warm: plan/codegen one-time costs
+        build().count()  # warm: plan/codegen one-time costs
         ts = []
         for _ in range(passes):
             t0 = time.time()
-            fn()
+            build().count()
             ts.append(round(time.time() - t0, 3))
         out[name] = {"min": min(ts), "samples": ts}
         print(f"{name}: min {min(ts)} samples {ts}", flush=True)

@@ -106,14 +106,6 @@ def minhash_from_hashes(shingle_hashes: Column, num_hashes: int = 16) -> Column:
     )
 
 
-def minhash_from_shingles(shingles: Column, num_hashes: int = 16) -> Column:
-    """Signature straight from a shingles column. Fine on a materialized
-    shingles projection at moderate width; the pipelines below pre-compute
-    `shingle_hash_col` in the persisted projection instead so the md5 runs
-    exactly once per shingle."""
-    return minhash_from_hashes(shingle_hash_col(shingles), num_hashes)
-
-
 def shingled_documents(
     documents: DataFrame, text_col: str = "text", key_col: str = "doc_id", shingle_n: int = 3
 ) -> DataFrame:

@@ -11,8 +11,7 @@ from __future__ import annotations
 
 from typing import Any
 
-import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import cellgrid
@@ -199,34 +198,6 @@ def tile_xyz_export(pages: DataFrame, z: int = 11) -> DataFrame:
             "n_langs",
             "total_chars",
         )
-    )
-
-
-def polygon_raster(spark: SparkSession, polygons: list[dict[str, Any]], res: int = DEFAULT_TILE_RES) -> DataFrame:
-    """Vector -> raster: rasterize polygons onto the tile grid (one row per
-    covering tile per polygon). The inverse direction (raster -> vector) is
-    the spatial join assigning point tiles back to polygons."""
-    rows = []
-    for poly in polygons:
-        for cell in cellgrid.cover(np.asarray(poly["ring"]), res):
-            rows.append(
-                {
-                    "tile_id": cell,
-                    "poly_id": int(poly["poly_id"]),
-                    "airspace_class": poly["class"],
-                }
-            )
-    return literal_table(spark, rows, "tile_id bigint, poly_id int, airspace_class string")
-
-
-def polygon_raster_table(polygons_df: DataFrame, res: int = DEFAULT_TILE_RES) -> DataFrame:
-    """polygon_raster with the polygon side as a TABLE: rasterization runs
-    through the distributed polyfill (pandas-UDF cover + explode), so
-    millions of polygons rasterize data-parallel with no driver loop."""
-    from .spatial import polygon_cover_distributed
-
-    return polygon_cover_distributed(polygons_df, res).select(
-        F.col("cell").alias("tile_id"), "poly_id", "airspace_class"
     )
 
 

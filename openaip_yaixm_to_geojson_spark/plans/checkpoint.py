@@ -42,6 +42,17 @@ def _content_hash(df: DataFrame) -> str:
     return str(total)
 
 
+def _parquet_files(stage_dir: str) -> list[str]:
+    """Sorted paths, relative to the stage directory, of every parquet file
+    under it (partition subdirectories included)."""
+    return sorted(
+        os.path.relpath(os.path.join(root, f), stage_dir)
+        for root, _, fs in os.walk(stage_dir)
+        for f in fs
+        if f.endswith(".parquet")
+    )
+
+
 class StageRunner:
     def __init__(self, spark: SparkSession, base_path: str):
         self.spark = spark
@@ -105,7 +116,10 @@ class StageRunner:
             .agg(F.count(F.lit(1)).alias("rows"))
             .collect()
         )
-        files = {os.path.relpath(r["file"].replace("file://", ""), stage_dir): r["rows"] for r in per_file}
+        counts = {os.path.relpath(r["file"].replace("file://", ""), stage_dir): r["rows"] for r in per_file}
+        # every on-disk file, including the empty part file Spark writes when
+        # partition 0 has no rows: the resume check compares this same listing
+        files = {f: counts.get(f, 0) for f in _parquet_files(stage_dir)}
         manifest = {
             "stage": name,
             "status": "complete",
@@ -124,13 +138,7 @@ class StageRunner:
 
     def _resume_is_sound(self, name: str, stage_dir: str, manifest: dict) -> bool:
         """File set matches per-file lineage AND the recount matches."""
-        on_disk = {
-            os.path.relpath(os.path.join(root, f), stage_dir)
-            for root, _, fs in os.walk(stage_dir)
-            for f in fs
-            if f.endswith(".parquet")
-        }
-        if on_disk != set(manifest["files"]):
+        if _parquet_files(stage_dir) != sorted(manifest["files"]):
             return False
         try:
             rows = self.spark.read.parquet(stage_dir).count()

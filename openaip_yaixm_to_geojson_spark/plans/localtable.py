@@ -40,7 +40,8 @@ def literal_table(
 ) -> DataFrame:
     """rows + StructType (or DDL string) -> DataFrame with the schema's
     exact field names/types, built so that re-evaluation costs no Python
-    tasks. Falls back to createDataFrame for empty input."""
+    tasks. Falls back to createDataFrame for empty input. A None in a field
+    declared non-nullable raises ValueError, as createDataFrame does."""
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     rows = list(rows)
@@ -50,6 +51,12 @@ def literal_table(
 
     def cell_value(row, i, f):
         return row[f.name] if isinstance(row, dict) else row[i]
+
+    required = [(i, f) for i, f in enumerate(fields) if not f.nullable]
+    for row in rows:
+        for i, f in required:
+            if cell_value(row, i, f) is None:
+                raise ValueError(f"field {f.name} is not nullable, but got None")
 
     if len(rows) <= max_literal_rows:
         structs = [

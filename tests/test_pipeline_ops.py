@@ -466,6 +466,42 @@ def test_checkpoint_corrupt_stage_rebuilds(spark, tmp_path):
     assert runner.run("s", build).count() == 100 and calls["n"] == 2
 
 
+def test_checkpoint_empty_first_part_resumes(spark, tmp_path):
+    """Spark writes an empty part-00000 when partition 0 has no rows; the
+    manifest must list it (0 rows) so the resume check, which lists every
+    on-disk file, accepts the complete stage instead of rebuilding it."""
+    from openaip_yaixm_to_geojson_spark.plans.checkpoint import StageRunner
+
+    runner = StageRunner(spark, str(tmp_path / "ckpt"))
+    calls = {"n": 0}
+
+    def build():
+        calls["n"] += 1
+        return spark.range(0, 10, numPartitions=2).where("id >= 5")
+
+    assert runner.run("s", build).count() == 5 and calls["n"] == 1
+    assert runner.run("s", build).count() == 5 and calls["n"] == 1
+    m = runner.manifest("s")
+    assert m["n_files"] == 2 and sorted(m["files"].values()) == [0, 5] and m["rows"] == 5
+
+
+@pytest.mark.parametrize("n_rows", [3, 80])  # literal path and pandas path (> 64 rows)
+def test_literal_table_rejects_null_in_non_nullable_field(spark, n_rows):
+    from pyspark.sql import types as T
+
+    from openaip_yaixm_to_geojson_spark.plans.localtable import literal_table
+
+    schema = T.StructType(
+        [T.StructField("k", T.LongType(), False), T.StructField("v", T.StringType(), True)]
+    )
+    rows = [(i, None) for i in range(n_rows)]  # None in a nullable field is fine
+    assert literal_table(spark, rows, schema).count() == n_rows
+    with pytest.raises(ValueError, match="k"):
+        literal_table(spark, rows[:-1] + [(None, "x")], schema)
+    with pytest.raises(ValueError, match="k"):
+        literal_table(spark, [{"k": None, "v": "x"}] + [{"k": i, "v": None} for i in range(n_rows)], schema)
+
+
 def test_ivf_ann_recall(spark):
     """IVF probing recovers a solid fraction of the exact top-k, and every
     returned neighbour's dot matches the exact score."""

@@ -480,3 +480,30 @@ def test_r6_fanout_frames_materialized(spark):
     # never re-runs the href regex
     p = plan_of(link_hits(linked))
     assert p.count("FileScan parquet") == 0 and "regexp_extract_all" not in p
+
+
+def test_infer_filters_exclusion_keeps_inner_join_rows(spark):
+    """plans/session.py excludes InferFiltersFromConstraints. The isnotnull
+    filters it would infer only drop rows that an inner equi-join drops
+    anyway, so a join on a nullable DERIVED key with null keys on both sides
+    returns the same rows with the rule excluded and with Spark's defaults."""
+    rule = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints"
+    assert rule in spark.conf.get("spark.sql.optimizer.excludedRules", "")
+    default = spark.newSession()
+    default.conf.unset("spark.sql.optimizer.excludedRules")
+    assert rule not in (default.conf.get("spark.sql.optimizer.excludedRules", None) or "")
+
+    def joined(session):
+        # every third id has a NULL key on each side
+        key = F.when(F.col("id") % 3 != 0, F.col("id") % 7)
+        left = session.range(60).select(F.col("id").alias("l"), key.alias("k"))
+        right = session.range(0, 90, 2).select(F.col("id").alias("r"), key.alias("k"))
+        return left.join(right, "k")
+
+    tuned, untuned = joined(spark), joined(default)
+    # the rule runs only in the default session: the join sides get isnotnull
+    assert "isnotnull" not in plan_of(tuned)
+    assert "isnotnull" in plan_of(untuned)
+    rows = sorted(tuple(r) for r in tuned.collect())
+    assert rows == sorted(tuple(r) for r in untuned.collect())
+    assert rows and all(r[0] is not None for r in rows)

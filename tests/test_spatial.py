@@ -307,21 +307,26 @@ def test_salted_join_under_real_skew(spark, polygons):
     assert broadcast_rows >= 20_000  # every page is inside at least one polygon
 
 
-def test_polygon_raster_table_matches_driver(spark, polygons):
-    """The distributed raster path (polyfill UDF over a polygons TABLE)
-    produces the identical (tile, poly) set to the driver-loop builder."""
-    from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df
-    from openaip_yaixm_to_geojson_spark.operators.tiles import (
-        polygon_raster,
-        polygon_raster_table,
+def test_polygon_cover_table_matches_driver(spark, polygons):
+    """The distributed cover (polyfill UDF over a polygons TABLE) produces
+    the identical (cell, poly_id) set to the driver-loop cover, at the tile
+    and at the join resolution."""
+    from openaip_yaixm_to_geojson_spark.operators.spatial import (
+        DEFAULT_JOIN_RES,
+        polygon_cover_df,
+        polygon_cover_distributed,
+        polygons_to_df,
     )
+    from openaip_yaixm_to_geojson_spark.operators.tiles import DEFAULT_TILE_RES
 
-    driver = {(r["tile_id"], r["poly_id"]) for r in polygon_raster(spark, polygons).collect()}
-    table = {
-        (r["tile_id"], r["poly_id"])
-        for r in polygon_raster_table(polygons_to_df(spark, polygons)).collect()
-    }
-    assert driver == table and len(driver) > 0
+    polygons_df = polygons_to_df(spark, polygons)
+    for res in (DEFAULT_TILE_RES, DEFAULT_JOIN_RES):
+        driver = {(r["cell"], r["poly_id"]) for r in polygon_cover_df(spark, polygons, res).collect()}
+        table = {
+            (r["cell"], r["poly_id"])
+            for r in polygon_cover_distributed(polygons_df, res).collect()
+        }
+        assert driver == table and len(driver) > 0, res
 
 
 def test_mercator_lattice_margin_and_quadkey(spark):

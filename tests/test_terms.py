@@ -420,29 +420,38 @@ def test_chars_histogram_exact_buckets(spark):
     assert rows[2]["n_docs"] == 1 and rows[3]["n_docs"] == 1
 
 
+def _chunk_spec(docs, size, stride):
+    """Plain-Python spec of text.chunk_documents: one row per overlapping
+    token window. Mirrors the JVM exactly: F.trim strips ASCII spaces only
+    and Java's \\s is the ASCII class [ \\t\\n\\x0b\\f\\r] (str.split would
+    also split on unicode whitespace like \\xa0); an empty string still
+    yields one token [''], so empty documents emit ONE empty chunk."""
+    import re
+
+    out = []
+    for r in docs.collect():
+        if r["text"] is None:
+            continue
+        toks = re.split(r"[ \t\n\x0b\f\r]+", r["text"].strip(" "))
+        for s in range(0, len(toks), stride):
+            window = toks[s : s + size]
+            out.append((r["doc_id"], s // stride, s, len(window), " ".join(window)))
+    return sorted(out)
+
+
+def _chunk_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
 def test_udtf_chunking_matches_codegen_twin(spark):
-    """The Python UDTF is the executable spec; the production codegen
-    operator must produce the identical row set."""
-    from openaip_yaixm_to_geojson_spark.operators.pyext import chunk_documents_udtf
+    """The plain-Python window loop is the executable spec; the production
+    codegen operator must produce the identical row multiset."""
     from openaip_yaixm_to_geojson_spark.operators.text import chunk_documents
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(50)
-    a = chunk_documents_udtf(docs, size=7, stride=3)
-    b = chunk_documents(docs, size=7, stride=3)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-    assert a.count() > 0
-
-
-def test_pandas_grouped_agg_matches_jvm_sum(spark):
-    from openaip_yaixm_to_geojson_spark.operators.pyext import lang_chars_pandas_agg
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    got = {r["lang"]: r["total_chars"] for r in lang_chars_pandas_agg(docs).collect()}
-    ref = {
-        r["lang"]: r["s"]
-        for r in docs.groupBy("lang").agg(F.sum("n_chars").alias("s")).collect()
-    }
-    assert got == ref
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(50).cache()
+    want = _chunk_spec(docs, size=7, stride=3)
+    assert _chunk_rows(chunk_documents(docs, size=7, stride=3)) == want
+    assert len(want) > 0
 
 
 def test_sessions_native_equals_lag_twin_on_real_events(spark):
@@ -532,25 +541,14 @@ def test_lang_partitioned_scan_prunes_partitions(spark, tmp_path):
 
 
 def test_udtf_matches_codegen_on_empty_text(spark):
-    from openaip_yaixm_to_geojson_spark.operators.pyext import chunk_documents_udtf
     from openaip_yaixm_to_geojson_spark.operators.text import chunk_documents
 
     docs = spark.createDataFrame(
-        [(0, ""), (1, "   "), (2, "a b c")], "doc_id bigint, text string"
+        [(0, ""), (1, "   "), (2, "a b c"), (3, "a\tb\xa0c  d")], "doc_id bigint, text string"
     )
-    a = chunk_documents_udtf(docs, size=2, stride=1)
-    b = chunk_documents(docs, size=2, stride=1)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_pandas_agg_null_group_matches_jvm(spark):
-    from openaip_yaixm_to_geojson_spark.operators.pyext import lang_chars_pandas_agg
-
-    docs = spark.createDataFrame(
-        [("en", 5), ("en", None), ("zz", None)], "lang string, n_chars bigint"
-    )
-    got = {r["lang"]: r["total_chars"] for r in lang_chars_pandas_agg(docs).collect()}
-    assert got == {"en": 5, "zz": None}  # all-NULL group -> NULL, like F.sum
+    want = _chunk_spec(docs, size=2, stride=1)
+    assert _chunk_rows(chunk_documents(docs, size=2, stride=1)) == want
+    assert (0, 0, 0, 1, "") in want and (1, 0, 0, 1, "") in want
 
 
 def test_read_jsonl_failfast_on_corrupt_line(spark, tmp_path):

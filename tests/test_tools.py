@@ -1,6 +1,7 @@
 """Spark-free checks on the scripts around the package: every package
-import in the entry points, tools and benchmark harness resolves, and the
-test-data scaler handles its smallest factor."""
+import in the entry points, tools and benchmark harness resolves, the
+shared bench suite matches bench.py's, and the test-data scaler handles its
+smallest factor."""
 
 import ast
 import importlib
@@ -16,7 +17,7 @@ PACKAGE = "openaip_yaixm_to_geojson_spark"
 SCRIPTS = (
     sorted(REPO.glob("tools/*.py"))
     + sorted(REPO.glob("perfbench/*.py"))
-    + [REPO / n for n in ("bench.py", "bench_extra.py", "__spark_entry__.py")]
+    + [REPO / n for n in ("bench.py", "bench_extra.py", "bench_suite.py", "__spark_entry__.py")]
 )
 
 
@@ -48,6 +49,33 @@ def test_script_package_imports_resolve():
                 missing.append(f"{path.relative_to(REPO)}: from {module} import {name}")
     assert checked > 0
     assert not missing, missing
+
+
+def _bench_timed_names() -> list[str]:
+    """bench.py's suite: the name in every `timed("...", ...)` call, in source order."""
+    calls = [
+        node
+        for node in ast.walk(ast.parse((REPO / "bench.py").read_text()))
+        if isinstance(node, ast.Call) and isinstance(node.func, ast.Name) and node.func.id == "timed"
+    ]
+    calls.sort(key=lambda c: (c.lineno, c.col_offset))
+    return [c.args[0].value for c in calls]
+
+
+def _suite_names() -> list[str]:
+    """bench_suite.suite's names: the keys of the dict it returns, in order."""
+    tree = ast.parse((REPO / "bench_suite.py").read_text())
+    (fn,) = [n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "suite"]
+    (ret,) = [n for n in ast.walk(fn) if isinstance(n, ast.Return)]
+    return [k.value for k in ret.value.keys]
+
+
+def test_bench_suite_matches_bench_py():
+    """bench.py is frozen and keeps its own copy of the suite; bench_extra.py
+    and the plan dumper use bench_suite. Drift between the two fails here."""
+    names = _bench_timed_names()
+    assert len(names) == 31
+    assert _suite_names() == names
 
 
 def _load_scale_testdata():

@@ -3,8 +3,8 @@
 Usage: python tools/dump_r07_plans.py before|after [query ...]
 
 Writes plans/r07/<query>_<suffix>.txt for each bench-suite query (or the
-named subset). Mirrors bench.py's constructions exactly so the plans are
-the plans the driver's bench times.
+named subset). The queries come from `bench_suite.suite`, which builds them
+as bench.py does, so the plans are the plans bench.py times.
 """
 
 from __future__ import annotations
@@ -16,8 +16,6 @@ from contextlib import redirect_stdout
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F  # noqa: E402
-
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
 OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r07")
 
@@ -27,106 +25,13 @@ def main() -> None:
     only = set(sys.argv[2:])
     os.makedirs(OUT_DIR, exist_ok=True)
 
-    from openaip_yaixm_to_geojson_spark.functions.convert_local import fixture_polygons
-    from openaip_yaixm_to_geojson_spark.operators.dedup import (
-        containment_pairs,
-        edit_distance_pairs,
-        exact_dedup,
-        minhash_lsh_pairs,
-        simhash16,
-        simhash64,
-    )
-    from openaip_yaixm_to_geojson_spark.operators.events import (
-        asof_join,
-        events_anomaly,
-        events_funnel,
-    )
-    from openaip_yaixm_to_geojson_spark.operators.graph import synth_link_graph, triangle_count
-    from openaip_yaixm_to_geojson_spark.operators.knn import (
-        knn_edge_ring_expansion,
-        knn_ring_expansion,
-    )
-    from openaip_yaixm_to_geojson_spark.operators.relational import corpus_cube, pareto_frontier
-    from openaip_yaixm_to_geojson_spark.operators.similarity import (
-        ann_topk_quantized,
-        cosine_topk,
-        queries_from_embeddings,
-    )
-    from openaip_yaixm_to_geojson_spark.operators.spatial import spatial_join
-    from openaip_yaixm_to_geojson_spark.operators.terms import (
-        bm25_topk,
-        bpe_phrase_merge,
-        charlm_surprisal,
-        repeated_grams,
-        tfidf_topk,
-    )
-    from openaip_yaixm_to_geojson_spark.operators.text import (
-        analyze_documents,
-        bloom_contamination,
-        pack_documents,
-        stratified_sample,
-    )
-    from openaip_yaixm_to_geojson_spark.operators.tiles import (
-        geohash_counts,
-        tile_nearest_airspace,
-        tile_xyz_export,
-    )
-    from openaip_yaixm_to_geojson_spark.operators.web import (
-        boilerplate_scrub,
-        link_pagerank,
-        synth_linked_pages,
-    )
+    from bench_suite import suite
     from openaip_yaixm_to_geojson_spark.plans.session import build_session
-    from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
 
     spark = build_session(app_name="dump_r07_plans", master="local[32]", shuffle_partitions=32)
     spark.sparkContext.setLogLevel("ERROR")
-    polys = fixture_polygons()
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    pages = pages_from_documents(spark, SF_DIR)
-    linked = synth_linked_pages(spark, SF_DIR)
-    clicks = ev.where(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    views = ev.where(F.col("event_type") == "view").select("user_id", "ts", "event_id", "value")
-
-    builders = {
-        "spatial_join_sf": lambda: spatial_join(pages, polys),
-        "knn_sf": lambda: knn_ring_expansion(pages, polys),
-        "knn_edge_sf": lambda: knn_edge_ring_expansion(pages, polys),
-        "dedup_exact": lambda: exact_dedup(docs),
-        "minhash_lsh_pairs": lambda: minhash_lsh_pairs(docs),
-        "simhash": lambda: docs.select(simhash16(F.col("text"))),
-        "simhash64": lambda: docs.select(simhash64(F.col("text"))),
-        "text_analyze": lambda: analyze_documents(docs).select(F.max("n_tokens_bpe")),
-        "ann_topk": lambda: cosine_topk(emb, queries_from_embeddings(emb, n=5), k=3),
-        "ann_topk_quantized": lambda: ann_topk_quantized(emb),
-        "tile_xyz": lambda: tile_xyz_export(pages, z=11),
-        "events_asof": lambda: asof_join(clicks, views),
-        "tfidf_topk": lambda: tfidf_topk(docs, k=3),
-        "stratified_sample": lambda: stratified_sample(docs, quota=40, group_col="lang"),
-        "events_funnel": lambda: events_funnel(ev),
-        "triangle_count": lambda: triangle_count(synth_link_graph(docs)),
-        "corpus_cube": lambda: corpus_cube(docs),
-        "repeated_grams": lambda: repeated_grams(docs),
-        "pack_documents": lambda: pack_documents(docs, capacity=512, n_streams=8),
-        "bloom_contamination": lambda: bloom_contamination(
-            docs, docs.where(F.col("doc_id") % 101 == 0)
-        ),
-        "geohash_counts": lambda: geohash_counts(pages),
-        "link_pagerank": lambda: link_pagerank(linked),
-        "boilerplate_scrub": lambda: boilerplate_scrub(linked),
-        "events_anomaly": lambda: events_anomaly(ev),
-        "edit_distance_pairs": lambda: edit_distance_pairs(docs),
-        "pareto_frontier": lambda: pareto_frontier(docs),
-        "containment_pairs": lambda: containment_pairs(docs),
-        "bm25_topk": lambda: bm25_topk(docs, k=20),
-        "tile_nearest_airspace": lambda: tile_nearest_airspace(pages, polys),
-        "charlm_surprisal": lambda: charlm_surprisal(docs),
-        "bpe_phrase_merge": lambda: bpe_phrase_merge(docs),
-    }
-    for name, build in builders.items():
+    for name, build in suite(spark, SF_DIR).items():
         if only and name not in only:
             continue
         try:
