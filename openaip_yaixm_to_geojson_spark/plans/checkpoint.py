@@ -13,9 +13,15 @@ Manifest fields:
   (order-independent xxhash64 sum over canonical row JSON — exact decimal
   sum, no overflow), schema, wall_seconds.
 
-`resume`: a stage whose manifest is complete AND whose recount matches is
-read back instead of recomputed; everything downstream of a missing or
-corrupt stage recomputes. Plain code, no Spark extension.
+Lineage is file metadata, as in an Iceberg manifest: `files` maps every
+parquet file under the stage directory (partition subdirectories and empty
+part files included) to the row count in its footer. The same footer
+listing checks a resume: a stage whose manifest is complete is read back
+iff its footer listing equals the manifest's `files` (same paths, same
+per-file rows); a missing, extra, truncated or rewritten file, or an
+unreadable footer, rebuilds the stage. Neither path runs a Spark job to
+count rows. Everything downstream of a rebuilt stage recomputes. Plain
+code, no Spark extension.
 """
 
 from __future__ import annotations
@@ -26,6 +32,8 @@ import shutil
 import time
 from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,15 +50,25 @@ def _content_hash(df: DataFrame) -> str:
     return str(total)
 
 
-def _parquet_files(stage_dir: str) -> list[str]:
-    """Sorted paths, relative to the stage directory, of every parquet file
-    under it (partition subdirectories included)."""
-    return sorted(
-        os.path.relpath(os.path.join(root, f), stage_dir)
-        for root, _, fs in os.walk(stage_dir)
-        for f in fs
-        if f.endswith(".parquet")
-    )
+def _file_rows(stage_dir: str) -> dict[str, int]:
+    """Path (relative to the stage directory) -> footer row count of every
+    parquet file under it. Raises OSError / pyarrow.ArrowInvalid on a file
+    whose footer cannot be read."""
+    rows = {}
+    for root, _, fs in os.walk(stage_dir):
+        for f in fs:
+            if f.endswith(".parquet"):
+                path = os.path.join(root, f)
+                rows[os.path.relpath(path, stage_dir)] = pq.read_metadata(path).num_rows
+    return rows
+
+
+def _resume_is_sound(stage_dir: str, manifest: dict) -> bool:
+    """Every on-disk file and its footer row count match the manifest."""
+    try:
+        return _file_rows(stage_dir) == manifest["files"]
+    except (OSError, pa.ArrowInvalid):
+        return False
 
 
 class StageRunner:
@@ -72,58 +90,34 @@ class StageRunner:
         with open(path) as fh:
             return json.load(fh)
 
-    def is_complete(self, name: str) -> bool:
-        m = self.manifest(name)
-        return bool(m and m.get("status") == "complete")
-
     def run(
         self,
         name: str,
         build: Callable[[], DataFrame],
         partition_by: tuple[str, ...] = (),
-        verify_on_resume: bool = True,
     ) -> DataFrame:
-        """Build-or-resume one stage. Returns the stage DataFrame (reading
-        from the checkpoint, so downstream lineage is cut at the stage
-        boundary).
-
-        verify_on_resume (default True): before trusting a resume, check the
-        on-disk parquet file set against the manifest's per-file lineage and
-        recount the rows (one cheap count job) — a truncated/corrupt stage
-        directory with an intact manifest rebuilds instead of resuming
-        silently with wrong data.
-        """
+        """Build-or-resume one stage. Returns the stage DataFrame read from
+        the checkpoint, so downstream lineage is cut at the stage boundary.
+        A sound complete stage is read back; anything else rebuilds."""
         stage_dir = self._stage_dir(name)
         manifest = self.manifest(name)
-        if manifest and manifest.get("status") == "complete":
-            if not verify_on_resume or self._resume_is_sound(name, stage_dir, manifest):
-                return self.spark.read.parquet(stage_dir)
+        if manifest and manifest.get("status") == "complete" and _resume_is_sound(stage_dir, manifest):
+            return self.spark.read.parquet(stage_dir)
 
-        # incomplete / missing: rebuild from scratch
         if os.path.exists(stage_dir):
             shutil.rmtree(stage_dir)
         started = time.time()
-        df = build()
-        writer = df.write.mode("overwrite")
+        writer = build().write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(stage_dir)
 
         written = self.spark.read.parquet(stage_dir)
-        per_file = (
-            written.select(F.input_file_name().alias("file"))
-            .groupBy("file")
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .collect()
-        )
-        counts = {os.path.relpath(r["file"].replace("file://", ""), stage_dir): r["rows"] for r in per_file}
-        # every on-disk file, including the empty part file Spark writes when
-        # partition 0 has no rows: the resume check compares this same listing
-        files = {f: counts.get(f, 0) for f in _parquet_files(stage_dir)}
+        files = _file_rows(stage_dir)
         manifest = {
             "stage": name,
             "status": "complete",
-            "rows": int(sum(files.values())),
+            "rows": sum(files.values()),
             "n_files": len(files),
             "files": files,
             "content_hash": _content_hash(written),
@@ -134,17 +128,7 @@ class StageRunner:
         with open(tmp, "w") as fh:
             json.dump(manifest, fh, indent=1, sort_keys=True)
         os.replace(tmp, self._manifest_path(name))
-        return self.spark.read.parquet(stage_dir)
-
-    def _resume_is_sound(self, name: str, stage_dir: str, manifest: dict) -> bool:
-        """File set matches per-file lineage AND the recount matches."""
-        if _parquet_files(stage_dir) != sorted(manifest["files"]):
-            return False
-        try:
-            rows = self.spark.read.parquet(stage_dir).count()
-        except Exception:
-            return False
-        return rows == manifest["rows"]
+        return written
 
     def invalidate(self, name: str) -> None:
         stage_dir = self._stage_dir(name)

@@ -1,7 +1,9 @@
 """The full engine pipeline as checkpointed, resumable stages.
 
-pages -> page_cells -> join_out -> knn_out -> tiles, each stage written
-through plans/checkpoint.StageRunner (parquet + per-file lineage manifest).
+pages -> join_out -> knn_out -> tiles -> tile_counts -> tile_counts_z2,
+each stage written through plans/checkpoint.StageRunner (parquet +
+per-file lineage manifest). Both pipelines here are an ordered list of
+`(name, build, partition_by)` stages run by one loop, `_run_stages`.
 Killing the job between stages and re-running resumes from the last
 complete stage — downstream recomputes, upstream is read back; content
 hashes prove byte-stability across resumes (north-rule resumability).
@@ -9,6 +11,8 @@ hashes prove byte-stability across resumes (north-rule resumability).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import partial
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,6 +27,28 @@ from ..operators.tiles import (
 )
 from ..sources.pages import pages_from_documents
 from .checkpoint import StageRunner
+
+# (name, build, partition_by); `build` receives the frames of the stages
+# before it, keyed by name
+Stage = tuple[str, Callable[[dict[str, DataFrame]], DataFrame], tuple[str, ...]]
+
+
+def _run_stages(
+    spark: SparkSession, checkpoint_dir: str, stages: list[Stage], stop_after: str | None
+) -> dict[str, DataFrame]:
+    """Build-or-resume `stages` in order, stopping after the stage named
+    `stop_after` (simulates a mid-job kill). An unknown name raises before
+    any stage is written. Returns the stage DataFrames."""
+    names = [name for name, _, _ in stages]
+    if stop_after is not None and stop_after not in names:
+        raise ValueError(f"unknown stop_after stage {stop_after!r}; stages are {names}")
+    runner = StageRunner(spark, checkpoint_dir)
+    out: dict[str, DataFrame] = {}
+    for name, build, partition_by in stages:
+        out[name] = runner.run(name, partial(build, out), partition_by)
+        if name == stop_after:
+            break
+    return out
 
 
 def run_pipeline(
@@ -41,10 +67,7 @@ def run_pipeline(
 
         polygons = fixture_polygons()
 
-    runner = StageRunner(spark, checkpoint_dir)
-    out: dict[str, DataFrame] = {}
-
-    def build_pages() -> DataFrame:
+    def build_pages(_) -> DataFrame:
         from pyspark.sql import functions as F
 
         from ..functions.cellgrid import cell_id_col
@@ -54,36 +77,25 @@ def run_pipeline(
         pages = pages_from_documents(spark, sf_dir)
         return pages.withColumn("cell_r5", cell_id_col(F.col("lon"), F.col("lat"), 5))
 
-    out["pages"] = runner.run("pages", build_pages, partition_by=("cell_r5",))
-    if stop_after == "pages":
-        return out
-
-    out["join_out"] = runner.run(
-        "join_out",
-        lambda: spatial_join(out["pages"], polygons, res=join_res, keep_cols=("text", "lang")),
-    )
-    if stop_after == "join_out":
-        return out
-
-    out["knn_out"] = runner.run(
-        "knn_out", lambda: knn_ring_expansion(out["pages"], polygons)
-    )
-    if stop_after == "knn_out":
-        return out
-
-    out["tiles"] = runner.run(
-        "tiles", lambda: tile_class_rollup(out["join_out"], tile_res)
-    )
-    out["tile_counts"] = runner.run(
-        "tile_counts", lambda: tile_doc_counts(out["pages"], tile_res)
-    )
-    # zoom pyramid: built from the TILE stage, not the fact table — each
-    # coarser level costs a tiles-sized aggregation (the 100-TB shape)
-    out["tile_counts_z2"] = runner.run(
-        "tile_counts_z2",
-        lambda: tile_zoom_rollup(out["tile_counts"].drop("n_langs"), levels=2),
-    )
-    return out
+    stages: list[Stage] = [
+        ("pages", build_pages, ("cell_r5",)),
+        (
+            "join_out",
+            lambda s: spatial_join(s["pages"], polygons, res=join_res, keep_cols=("text", "lang")),
+            (),
+        ),
+        ("knn_out", lambda s: knn_ring_expansion(s["pages"], polygons), ()),
+        ("tiles", lambda s: tile_class_rollup(s["join_out"], tile_res), ()),
+        ("tile_counts", lambda s: tile_doc_counts(s["pages"], tile_res), ()),
+        # zoom pyramid: built from the TILE stage, not the fact table — each
+        # coarser level costs a tiles-sized aggregation (the 100-TB shape)
+        (
+            "tile_counts_z2",
+            lambda s: tile_zoom_rollup(s["tile_counts"].drop("n_langs"), levels=2),
+            (),
+        ),
+    ]
+    return _run_stages(spark, checkpoint_dir, stages, stop_after)
 
 
 def run_corpus_pipeline(
@@ -108,12 +120,16 @@ def run_corpus_pipeline(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from ..operators.text import analyze_documents, sample_hash_col
+    from ..operators.dedup import lsh_recall_monitor
+    from ..operators.terms import duplicated_span_stats
+    from ..operators.text import (
+        analyze_documents,
+        chunk_documents,
+        pack_documents,
+        sample_hash_col,
+    )
 
-    runner = StageRunner(spark, checkpoint_dir)
-    out: dict[str, DataFrame] = {}
-
-    def build_analyzed() -> DataFrame:
+    def build_analyzed(_) -> DataFrame:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         a = analyze_documents(docs)
         return a.select(
@@ -126,86 +142,51 @@ def run_corpus_pipeline(
             "fingerprint",
         )
 
-    out["analyzed"] = runner.run("analyzed", build_analyzed)
-    if stop_after == "analyzed":
-        return out
-
-    def build_deduped() -> DataFrame:
+    def build_deduped(s) -> DataFrame:
         w = Window.partitionBy("fingerprint").orderBy("doc_id")
         return (
-            out["analyzed"]
+            s["analyzed"]
             .withColumn("_rn", F.row_number().over(w))
             .where(F.col("_rn") == 1)
             .drop("_rn")
         )
 
-    out["deduped"] = runner.run("deduped", build_deduped)
-    if stop_after == "deduped":
-        return out
-
     threshold = int(round(sample_fraction * 1_000_000))
-    out["corpus"] = runner.run(
-        "corpus",
-        lambda: out["deduped"]
-        .where(F.col("quality_score") >= quality_min)
-        .where(sample_hash_col(F.col("doc_id")) < threshold),
-    )
-
-    out["corpus_stats"] = runner.run(
-        "corpus_stats",
-        lambda: out["corpus"]
-        .groupBy("lang_pred")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_tokens_ws").alias("total_tokens_ws"),
-            F.sum("n_tokens_bpe").alias("total_tokens_bpe"),
+    stages: list[Stage] = [
+        ("analyzed", build_analyzed, ()),
+        ("deduped", build_deduped, ()),
+        (
+            "corpus",
+            lambda s: (
+                s["deduped"]
+                .where(F.col("quality_score") >= quality_min)
+                .where(sample_hash_col(F.col("doc_id")) < threshold)
+            ),
+            (),
         ),
-    )
-    if stop_after == "corpus_stats":
-        return out
-
-    # corpus QA stages: the span-level duplication profile (how much
-    # cross-document boilerplate survived dedup) and the sampled LSH
-    # recall report (is the near-dup banding still catching what exact
-    # verification finds) — the two numbers a production corpus build
-    # watches between dedup and export; both derive only from the stored
-    # corpus stage
-    def build_span_stats() -> DataFrame:
-        from ..operators.terms import duplicated_span_stats
-
-        return duplicated_span_stats(out["corpus"])
-
-    out["span_stats"] = runner.run("span_stats", build_span_stats)
-    if stop_after == "span_stats":
-        return out
-
-    def build_dedup_qa() -> DataFrame:
-        from ..operators.dedup import lsh_recall_monitor
-
-        return lsh_recall_monitor(out["corpus"])
-
-    out["dedup_qa"] = runner.run("dedup_qa", build_dedup_qa)
-    if stop_after == "dedup_qa":
-        return out
-
-    # training-data EXPORT stages: the cleaned corpus chunked into
-    # overlapping context windows, and the same corpus packed into
-    # fixed-capacity token streams (the two standard pre-training input
-    # layouts); both derive only from the stored corpus stage, so a
-    # resume after `corpus` never re-runs analyze/dedup
-    def build_chunks() -> DataFrame:
-        from ..operators.text import chunk_documents
-
-        return chunk_documents(out["corpus"], size=64, stride=48)
-
-    out["chunks"] = runner.run("chunks", build_chunks)
-    if stop_after == "chunks":
-        return out
-
-    def build_packed() -> DataFrame:
-        from ..operators.text import pack_documents
-
-        return pack_documents(out["corpus"], capacity=512, n_streams=8)
-
-    out["packed"] = runner.run("packed", build_packed)
-    return out
+        (
+            "corpus_stats",
+            lambda s: s["corpus"].groupBy("lang_pred").agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("n_tokens_ws").alias("total_tokens_ws"),
+                F.sum("n_tokens_bpe").alias("total_tokens_bpe"),
+            ),
+            (),
+        ),
+        # corpus QA stages: the span-level duplication profile (how much
+        # cross-document boilerplate survived dedup) and the sampled LSH
+        # recall report (is the near-dup banding still catching what exact
+        # verification finds) — the two numbers a production corpus build
+        # watches between dedup and export; both derive only from the stored
+        # corpus stage
+        ("span_stats", lambda s: duplicated_span_stats(s["corpus"]), ()),
+        ("dedup_qa", lambda s: lsh_recall_monitor(s["corpus"]), ()),
+        # training-data EXPORT stages: the cleaned corpus chunked into
+        # overlapping context windows, and the same corpus packed into
+        # fixed-capacity token streams (the two standard pre-training input
+        # layouts); both derive only from the stored corpus stage, so a
+        # resume after `corpus` never re-runs analyze/dedup
+        ("chunks", lambda s: chunk_documents(s["corpus"], size=64, stride=48), ()),
+        ("packed", lambda s: pack_documents(s["corpus"], capacity=512, n_streams=8), ()),
+    ]
+    return _run_stages(spark, checkpoint_dir, stages, stop_after)

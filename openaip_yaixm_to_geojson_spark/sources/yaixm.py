@@ -194,6 +194,21 @@ def _airspace_rows(doc_id: str, parsed: dict[str, Any]) -> list[dict[str, Any]]:
     return rows
 
 
+def _service_rows(doc_id: str, services: list[dict[str, Any]]) -> list[dict[str, Any]]:
+    """Service rows in file order: ``service_idx`` is the position in the
+    ``service`` list."""
+    return [
+        {
+            "doc_id": doc_id,
+            "service_idx": idx,
+            "callsign": svc.get("callsign"),
+            "controls": [str(c) for c in (svc.get("controls") or [])],
+            "frequency": float(svc["frequency"]) if svc.get("frequency") is not None else None,
+        }
+        for idx, svc in enumerate(services)
+    ]
+
+
 def airspaces_from_yaml_docs(docs: DataFrame) -> DataFrame:
     """``docs(doc_id string, yaml string)`` -> airspace rows (AIRSPACE_SCHEMA).
 
@@ -239,16 +254,7 @@ def services_from_yaml_docs(docs: DataFrame) -> DataFrame:
             out: list[dict[str, Any]] = []
             for doc_id, text in zip(pdf["doc_id"], pdf["yaml"]):
                 parsed = yaml.safe_load(text) or {}
-                for idx, svc in enumerate(parsed.get("service") or []):
-                    out.append(
-                        {
-                            "doc_id": doc_id,
-                            "service_idx": idx,
-                            "callsign": svc.get("callsign"),
-                            "controls": [str(c) for c in (svc.get("controls") or [])],
-                            "frequency": float(svc["frequency"]) if svc.get("frequency") is not None else None,
-                        }
-                    )
+                out.extend(_service_rows(doc_id, parsed.get("service") or []))
             yield pd.DataFrame(out, columns=[f.name for f in SERVICE_SCHEMA.fields])
 
     return docs.mapInPandas(parse, schema=SERVICE_SCHEMA)
@@ -261,14 +267,4 @@ def airspaces_from_records(spark: SparkSession, records: list[dict[str, Any]], d
 
 
 def services_from_records(spark: SparkSession, records: list[dict[str, Any]], doc_id: str = "inline") -> DataFrame:
-    rows = [
-        {
-            "doc_id": doc_id,
-            "service_idx": idx,
-            "callsign": svc.get("callsign"),
-            "controls": [str(c) for c in (svc.get("controls") or [])],
-            "frequency": float(svc["frequency"]) if svc.get("frequency") is not None else None,
-        }
-        for idx, svc in enumerate(records)
-    ]
-    return spark.createDataFrame(rows, schema=SERVICE_SCHEMA)
+    return spark.createDataFrame(_service_rows(doc_id, records), schema=SERVICE_SCHEMA)

@@ -165,6 +165,17 @@ def test_pipeline_resume_stable_hashes(spark, tmp_path):
     runner = StageRunner(spark, ckpt)
     hashes_before = {s: runner.content_hash(s) for s in ["pages", "join_out"]}
 
+    # stop after a later stage: nothing past it is built
+    upto_tiles = run_pipeline(spark, "/root/testdata/sf0.001", ckpt, stop_after="tiles")
+    assert set(upto_tiles) == {"pages", "join_out", "knn_out", "tiles"}
+    assert not os.path.exists(os.path.join(ckpt, "tile_counts"))
+
+    # an unknown stage name raises before any stage is written
+    bad = str(tmp_path / "bad")
+    with pytest.raises(ValueError, match="no_such_stage"):
+        run_pipeline(spark, "/root/testdata/sf0.001", bad, stop_after="no_such_stage")
+    assert not os.path.exists(bad) or not os.listdir(bad)
+
     # resume to completion: upstream manifests untouched, all stages complete
     full = run_pipeline(spark, "/root/testdata/sf0.001", ckpt)
     assert set(full) == {"pages", "join_out", "knn_out", "tiles", "tile_counts", "tile_counts_z2"}

@@ -279,8 +279,15 @@ def test_checkpoint_resume(spark, tmp_path):
     assert runner.content_hash("stage_a") == hash_a
     assert runner.content_hash("stage_b") == hash_b
 
-    # full resume: nothing recomputes
-    out3 = runner.run("stage_b", build_b)
+    # full resume: nothing recomputes, and the only Spark job is the
+    # schema read of spark.read.parquet (row counts come from footers)
+    sc = spark.sparkContext
+    sc.setJobGroup("full_resume", "full resume")
+    try:
+        out3 = runner.run("stage_b", build_b)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("full_resume")) <= 1
     assert out3.count() == 50 and calls == {"a": 1, "b": 2}
 
 
@@ -443,10 +450,15 @@ def test_simhash64_neardup_matches_bruteforce(spark):
 
 
 def test_checkpoint_corrupt_stage_rebuilds(spark, tmp_path):
-    """A truncated stage directory with an intact manifest must rebuild on
-    resume (round-1 ADVICE: it resumed silently with wrong data)."""
+    """A stage directory with an intact manifest but a damaged part file
+    must rebuild on resume (round-1 ADVICE: it resumed silently with wrong
+    data): a deleted file (file set changes), a file truncated to half its
+    bytes (unreadable footer, same file set) and a valid parquet file with
+    fewer rows under the same name (per-file row count differs)."""
     import glob
     import os
+
+    import pyarrow.parquet as pq
 
     from openaip_yaixm_to_geojson_spark.plans.checkpoint import StageRunner
 
@@ -457,13 +469,22 @@ def test_checkpoint_corrupt_stage_rebuilds(spark, tmp_path):
         calls["n"] += 1
         return spark.range(100).repartition(4).withColumn("v", F.col("id") * 3)
 
+    def truncate(path):
+        with open(path, "r+b") as fh:
+            fh.truncate(os.path.getsize(path) // 2)
+
+    def fewer_rows(path):
+        table = pq.read_table(path)
+        pq.write_table(table.slice(0, table.num_rows - 1), path)
+
     assert runner.run("s", build).count() == 100 and calls["n"] == 1
     # clean resume: no rebuild
     assert runner.run("s", build).count() == 100 and calls["n"] == 1
-    # corrupt: delete one data file, keep the manifest
-    victim = sorted(glob.glob(str(tmp_path / "ckpt" / "s" / "*.parquet")))[0]
-    os.remove(victim)
-    assert runner.run("s", build).count() == 100 and calls["n"] == 2
+    for n, corrupt in enumerate((os.remove, truncate, fewer_rows), start=2):
+        victim = sorted(glob.glob(str(tmp_path / "ckpt" / "s" / "*.parquet")))[0]
+        corrupt(victim)
+        assert runner.manifest("s")["status"] == "complete"
+        assert runner.run("s", build).count() == 100 and calls["n"] == n, corrupt
 
 
 def test_checkpoint_empty_first_part_resumes(spark, tmp_path):
