@@ -869,9 +869,7 @@ def q_spatial_join_bucketed(spark, sf_dir):
     )
     write_bucketed(pages, "gate_pages_bucketed", "cell", 8)
     cover = bucketed_cover(spark, fixture_polygons(), table="gate_cover_bucketed", n_buckets=8)
-    return colocated_spatial_join(
-        spark, "gate_pages_bucketed", "gate_cover_bucketed", fixture_polygons()
-    ).select("url", "poly_id", "airspace_name", "airspace_type", "airspace_class")
+    return colocated_spatial_join(spark, "gate_pages_bucketed", "gate_cover_bucketed").select("url", "poly_id", "airspace_name", "airspace_type", "airspace_class")
 
 
 def q_dedup_clusters(spark, sf_dir):

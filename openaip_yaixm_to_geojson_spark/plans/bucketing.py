@@ -20,9 +20,9 @@ from ..functions import cellgrid
 from ..operators.spatial import (
     DEFAULT_JOIN_RES,
     OUT_COLS,
-    pip_refine,
     polygon_cover_distributed,
     polygons_to_df,
+    winding_col,
 )
 
 
@@ -94,11 +94,12 @@ def bucketed_cover(spark: SparkSession, polygons, table: str = "cover_bucketed",
     return spark.table(table)
 
 
-def colocated_spatial_join(spark: SparkSession, pages_table: str, cover_table: str, polygons) -> DataFrame:
+def colocated_spatial_join(spark: SparkSession, pages_table: str, cover_table: str) -> DataFrame:
     """Shuffle-free spatial join over two tables bucketed on `cell`:
     sort-merge join uses the bucket layout directly (no Exchange), then the
-    driver-list PIP refine `spatial_join` uses (`polygons` is a list)."""
+    same winding-number refine over the cover's band edges `spatial_join`
+    uses."""
     pages = spark.table(pages_table)
     cover = spark.table(cover_table)
     candidates = pages.join(cover.hint("merge"), "cell")
-    return pip_refine(candidates, polygons).select(*OUT_COLS)
+    return candidates.where(winding_col(F.col("lon"), F.col("lat"), F.col("edges")) != 0).select(*OUT_COLS)

@@ -6,19 +6,22 @@ defaultParallelism partitions; every action that re-evaluates the subtree
 deserialization tasks — measured ~0.3-0.4 s per evaluation for a 283-row
 cover table on local[32], paid once per bench pass.
 
-Two replacements, picked by size:
+Two replacements, picked by size and schema:
 
 - <= `max_literal_rows` rows: a constant array of struct literals exploded
   over a one-row range. Catalyst constant-folds the array; evaluation is a
   single JVM task (~job floor). Single partition — exactly right for a
   broadcast side. NOT for bigger tables: hundreds of struct literals blow
   up codegen (a 852-row segs table measured 12.5 s vs 0.5 s).
-- larger: pandas + explicit schema. Under Arrow the driver ships record
-  batches and evaluation is JVM-only (~0.075 s vs 0.31 for the same cover);
+- larger, or any nested (array/struct/map) field: pandas + explicit
+  schema. Under Arrow the driver ships record batches and evaluation is
+  JVM-only (~0.075 s vs 0.31 for the same cover);
   partitioning matches defaultParallelism, so streamed-side consumers keep
   their scan parallelism. Without Arrow (--default-session) it degrades to
   the pickle path, correctness unchanged (schema is explicit either way —
-  the r6 arrow-conf-dependent-dtype lesson).
+  the r6 arrow-conf-dependent-dtype lesson). Nested values take this path
+  at any size: `F.lit` builds no struct values, and a literal per nested
+  element is the expression growth the row cap exists to avoid.
 """
 
 from __future__ import annotations
@@ -58,7 +61,8 @@ def literal_table(
             if cell_value(row, i, f) is None:
                 raise ValueError(f"field {f.name} is not nullable, but got None")
 
-    if len(rows) <= max_literal_rows:
+    nested = any(isinstance(f.dataType, (T.ArrayType, T.StructType, T.MapType)) for f in fields)
+    if len(rows) <= max_literal_rows and not nested:
         structs = [
             F.struct(
                 *[

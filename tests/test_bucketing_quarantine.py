@@ -27,12 +27,13 @@ def test_bucketed_join_has_no_exchange(spark, polygons, tmp_path):
         pages = pages_from_documents(spark, "/root/testdata/sf0.001")
         bucketed_pages(spark, pages, "pages_bkt", n_buckets=8)
         bucketed_cover(spark, polygons, "cover_bkt", n_buckets=8)
-        joined = colocated_spatial_join(spark, "pages_bkt", "cover_bkt", polygons)
+        joined = colocated_spatial_join(spark, "pages_bkt", "cover_bkt")
         plan = joined._sc._jvm.PythonSQLUtils.explainString(
             joined._jdf.queryExecution(), "formatted"
         )
         assert "Exchange" not in plan, plan.split("==")[1][:800]
         assert "SortMergeJoin" in plan
+        assert "ArrowEvalPython" not in plan  # the refine is the merge join's condition
         got = {(r["url"], r["poly_id"]) for r in joined.collect()}
         expected = {
             (r["url"], r["poly_id"]) for r in spatial_join(pages, polygons).collect()

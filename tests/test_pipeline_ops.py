@@ -523,6 +523,38 @@ def test_literal_table_rejects_null_in_non_nullable_field(spark, n_rows):
         literal_table(spark, [{"k": None, "v": "x"}] + [{"k": i, "v": None} for i in range(n_rows)], schema)
 
 
+@pytest.mark.parametrize("n_rows", [3, 80])  # at and past the literal-path size
+def test_literal_table_nested_rows_build_in_the_jvm(spark, n_rows):
+    """Rows carrying nested array<struct> values (the spatial cover's band
+    edges) come back exactly, and re-evaluating them starts no Python task
+    at either size; with Arrow off (Spark's default session) they are
+    still exact."""
+    from pyspark.sql import types as T
+
+    from openaip_yaixm_to_geojson_spark.operators.spatial import EDGES_TYPE
+    from openaip_yaixm_to_geojson_spark.plans.localtable import literal_table
+
+    schema = T.StructType([T.StructField("k", T.LongType(), False), T.StructField("edges", EDGES_TYPE, False)])
+    rows = [
+        (i, [{"x1": i + 0.1, "y1": -1e-300, "x2": 5e-324, "y2": float(j)} for j in range(i % 4)])
+        for i in range(n_rows)
+    ]
+
+    def got(df):
+        return sorted((r["k"], [e.asDict() for e in r["edges"]]) for r in df.collect())
+
+    df = literal_table(spark, rows, schema)
+    assert "PythonRDD" not in df._jdf.queryExecution().toRdd().toDebugString()
+    assert got(df) == rows
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert got(literal_table(spark, rows, schema)) == rows
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_ivf_ann_recall(spark):
     """IVF probing recovers a solid fraction of the exact top-k, and every
     returned neighbour's dot matches the exact score."""

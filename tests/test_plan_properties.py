@@ -24,12 +24,21 @@ def test_spatial_join_broadcasts_and_never_shuffles_facts(spark, pages):
     from openaip_yaixm_to_geojson_spark.functions.convert_local import fixture_polygons
     from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df, spatial_join
 
-    # the polygon side as a driver list and as a polygons table (whose
-    # ring attach by poly_id must broadcast too)
+    # the polygon side as a driver list and as a polygons table; the
+    # winding-number refine is part of the broadcast join's condition, so
+    # no Python runs on the page side. A table's only Python is its
+    # polyfill on the build side of the broadcast.
     for polys in (fixture_polygons(), polygons_to_df(spark, fixture_polygons())):
         plan = plan_of(spatial_join(pages, polys))
         assert "BroadcastHashJoin" in plan
         assert "Exchange hashpartitioning" not in plan  # zero fact shuffles
+        join_line = next(line for line in plan.splitlines() if "BroadcastHashJoin" in line)
+        assert "aggregate(edges" in join_line, join_line
+        python_lines = [line for line in plan.splitlines() if "ArrowEvalPython" in line]
+        if isinstance(polys, list):
+            assert not python_lines, python_lines
+        else:
+            assert len(python_lines) == 1 and "cover_cells(ring" in python_lines[0], python_lines
 
 
 def test_contamination_scan_prunes_columns(spark):

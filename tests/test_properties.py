@@ -1,9 +1,11 @@
 """Property-based invariants (hypothesis) for the pure-NumPy kernels —
-no Spark session needed."""
+no Spark session needed — and for the Catalyst winding number against its
+NumPy twin."""
 
 import math
 
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -115,6 +117,59 @@ def test_cover_soundness_random_polygons(points, res):
     inside = geodesy.points_in_ring_winding(lon_samples, lat_samples, ring)
     for lon, lat in zip(lon_samples[inside], lat_samples[inside]):
         assert cellgrid.encode(lon, lat, res) in cover
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    st.lists(
+        st.tuples(st.floats(min_value=-2, max_value=2), st.floats(min_value=50, max_value=54)),
+        min_size=3,
+        max_size=16,
+    ),
+    st.integers(min_value=6, max_value=13),
+    st.integers(min_value=0, max_value=2**32 - 1),
+)
+def test_winding_col_matches_numpy(spark, points, res, seed):
+    """`winding_col` is `points_in_ring_winding` on any closed ring (even a
+    self-intersecting one) over all its edges, and over the band edges of
+    the point's cell for every point in a cover cell. Points are vertices,
+    edge midpoints, cell band bounds and random points in the bbox."""
+    from pyspark.sql import functions as F
+
+    from openaip_yaixm_to_geojson_spark.operators.spatial import EDGES_TYPE, cover_with_edges, winding_col
+
+    ring = geodesy.close_ring(np.asarray(points, dtype=np.float64))
+    size = cellgrid.cell_size_deg(res)
+    rng = np.random.default_rng(seed)
+    lo, hi = ring.min(axis=0), ring.max(axis=0)
+    band_lats = np.floor((ring[:, 1] + 90.0) / size) * size - 90.0
+    pts = np.vstack(
+        [
+            ring,
+            (ring[:-1] + ring[1:]) / 2,
+            np.column_stack([ring[:, 0], band_lats]),
+            np.column_stack([ring[:, 0], np.nextafter(band_lats + size, -np.inf)]),
+            rng.uniform(lo, hi, (40, 2)),
+        ]
+    )
+    band = dict(cover_with_edges(ring, res))
+    every = [dict(zip(("x1", "y1", "x2", "y2"), e)) for e in np.column_stack([ring[:-1], ring[1:]]).tolist()]
+    pdf = pd.DataFrame(
+        {
+            "lon": pts[:, 0],
+            "lat": pts[:, 1],
+            "every": [every] * len(pts),
+            "band": [band.get(cellgrid.encode(x, y, res), []) for x, y in pts.tolist()],
+        }
+    )
+    edges = EDGES_TYPE.simpleString()
+    df = spark.createDataFrame(pdf, f"lon double, lat double, every {edges}, band {edges}")
+    wind = lambda col: winding_col(F.col("lon"), F.col("lat"), F.col(col)) != 0  # noqa: E731
+    got = df.select(wind("every").alias("every"), wind("band").alias("band"), F.size("band") > 0).collect()
+    expected = geodesy.points_in_ring_winding(pts[:, 0], pts[:, 1], ring)
+    assert [r[0] for r in got] == expected.tolist()
+    # a cell outside the cover has no band edges to test
+    assert [r[1] for r in got if r[2]] == [e for e, r in zip(expected.tolist(), got) if r[2]]
 
 
 @settings(max_examples=100, deadline=None)

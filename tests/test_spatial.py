@@ -309,8 +309,8 @@ def test_salted_join_under_real_skew(spark, polygons):
 
 def test_polygon_cover_table_matches_driver(spark, polygons):
     """The distributed cover (polyfill UDF over a polygons TABLE) produces
-    the identical (cell, poly_id) set to the driver-loop cover, at the tile
-    and at the join resolution."""
+    the identical (cell, poly_id, edges) rows to the driver-loop cover, at
+    the tile and at the join resolution."""
     from openaip_yaixm_to_geojson_spark.operators.spatial import (
         DEFAULT_JOIN_RES,
         polygon_cover_df,
@@ -319,14 +319,73 @@ def test_polygon_cover_table_matches_driver(spark, polygons):
     )
     from openaip_yaixm_to_geojson_spark.operators.tiles import DEFAULT_TILE_RES
 
+    def rows(cover):
+        return sorted((r["cell"], r["poly_id"], [tuple(e) for e in r["edges"]]) for r in cover.collect())
+
     polygons_df = polygons_to_df(spark, polygons)
     for res in (DEFAULT_TILE_RES, DEFAULT_JOIN_RES):
-        driver = {(r["cell"], r["poly_id"]) for r in polygon_cover_df(spark, polygons, res).collect()}
-        table = {
-            (r["cell"], r["poly_id"])
-            for r in polygon_cover_distributed(polygons_df, res).collect()
-        }
-        assert driver == table and len(driver) > 0, res
+        driver = rows(polygon_cover_df(spark, polygons, res))
+        assert driver == rows(polygon_cover_distributed(polygons_df, res)) and driver, res
+        assert all(edges for _, _, edges in driver)
+
+
+def _adversarial_case(polygons):
+    """Fixture polygons plus a cell-aligned rectangle and a triangle whose
+    apex sits on a band boundary, and points made to sit on the edge cases
+    of the refine: every ring vertex, points on edges (exactly, for the
+    axis-aligned ones), within 1e-12 of an edge, on each cell band's lower
+    bound and one ulp under its upper bound."""
+    import pandas as pd
+
+    from openaip_yaixm_to_geojson_spark.functions import cellgrid
+    from openaip_yaixm_to_geojson_spark.operators.spatial import DEFAULT_JOIN_RES
+
+    size = cellgrid.cell_size_deg(DEFAULT_JOIN_RES)
+    x0, y0 = 4200 * size - 180.0, 6500 * size - 90.0  # on cell corners near Aberdeen
+    rect = [(x0, y0), (x0 + 3 * size, y0), (x0 + 3 * size, y0 + 2 * size), (x0, y0 + 2 * size), (x0, y0)]
+    apex = (x0 + size, y0 + size)
+    tri = [(x0 + size / 3, y0 - 2 * size), (x0 + 2.5 * size, y0 - 1.5 * size), apex, (x0 + size / 3, y0 - 2 * size)]
+    polys = list(polygons) + [
+        {"poly_id": 900 + i, "name": f"SYN{i}", "type": "D", "class": "G", "ring": ring}
+        for i, ring in enumerate((rect, tri))
+    ]
+    pts = []
+    for p in polys:
+        ring = np.asarray(p["ring"], dtype=np.float64)
+        a, b = ring[:-1], ring[1:]
+        pts.append(ring)
+        for t in (0.25, 0.5, 0.75):
+            pts.append(a + t * (b - a))
+        mid = (a + b) / 2
+        for d in ((1e-12, 0), (-1e-12, 0), (0, 1e-12), (0, -1e-12)):
+            pts.append(mid + np.asarray(d))
+        lo = np.floor((ring[:, 1].min() + 90.0) / size).astype(int)
+        hi = np.floor((ring[:, 1].max() + 90.0) / size).astype(int)
+        xs = np.unique(np.concatenate([ring[:, 0], mid[:, 0]]))[::3]
+        for y in range(lo, hi + 1):
+            band_lo = y * size - 90.0
+            band_hi = np.nextafter(band_lo + size, -np.inf)
+            for lat in (band_lo, band_hi):
+                pts.append(np.column_stack([xs, np.full(len(xs), lat)]))
+    pts = np.unique(np.vstack(pts), axis=0)
+    pdf = pd.DataFrame({"url": [f"p{i}" for i in range(len(pts))], "lat": pts[:, 1], "lon": pts[:, 0]})
+    return polys, pdf
+
+
+def test_spatial_join_exact_on_boundary_points(spark, polygons):
+    """List and table input equal points_in_ring_winding pair for pair on
+    points that sit on vertices, edges and cell band bounds."""
+    from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df, spatial_join
+
+    polys, pdf = _adversarial_case(polygons)
+    expected = brute_force_join(pdf, polys)
+    pages = spark.createDataFrame(pdf, "url string, lat double, lon double")
+    assert len(expected) > 1000
+    for side in (polys, polygons_to_df(spark, polys)):
+        got = {(r["url"], r["poly_id"]) for r in spatial_join(pages, side).collect()}
+        assert got == expected
+    salted = {(r["url"], r["poly_id"]) for r in spatial_join(pages, polys, broadcast=False, salt=2).collect()}
+    assert salted == expected
 
 
 def test_mercator_lattice_margin_and_quadkey(spark):

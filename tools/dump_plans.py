@@ -42,8 +42,9 @@ def main() -> None:
         "# PLANS — physical plans of the flagship operators\n\n"
         "Regenerated by `python tools/dump_plans.py`. What to look for:\n"
         "`PushedFilters`/`ReadSchema` (scan pruning), `BroadcastHashJoin`\n"
-        "(no fact-side shuffle), `ArrowEvalPython` only on the candidate\n"
-        "subset, a single `Exchange` per aggregation (map-side partials),\n"
+        "(no fact-side shuffle) whose condition holds the PIP refine, no\n"
+        "`ArrowEvalPython` on the fact side of a spatial join, a single\n"
+        "`Exchange` per aggregation (map-side partials),\n"
         "and wide `WholeStageCodegen` spans around the relational glue.\n\n"
     )
 
@@ -59,8 +60,8 @@ def main() -> None:
     section(
         "spatial join (broadcast path)",
         "Fact table: parquet scan -> codegen cell id -> BroadcastHashJoin vs "
-        "the polygon cover -> ArrowEvalPython PIP on candidates only. Zero "
-        "shuffles.",
+        "the polygon cover, with the winding number over each cover row's "
+        "band edges as the join condition. Zero shuffles, no Python.",
         join_out,
     )
     section(
@@ -84,8 +85,8 @@ def main() -> None:
     section(
         "spatial join (polygon-table path)",
         "Polygon side fully distributed: pandas-UDF polyfill + explode builds "
-        "the cover, rings attach via a broadcast poly_id join, PIP runs on "
-        "candidates. Still zero fact-side shuffles.",
+        "the cover with its band edges; the refine is the same join "
+        "condition as the list path. Still zero fact-side shuffles.",
         spatial_join(pages, polygons_to_df(spark, polys)),
     )
     from openaip_yaixm_to_geojson_spark.operators.knn import (
