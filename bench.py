@@ -7,8 +7,8 @@ rows — the sf-dir documents table is too small to exercise the join at
 scale). Per-query wall times for the rest of the operator suite run over
 the sf-dir tables.
 
-Scaling-efficiency evidence (N vs 4N cores) lives in tools/scaling_bench.py
--> BENCH.md, per the driver instruction.
+Scaling-efficiency evidence (N vs 4N cores) is the last run recorded in
+BENCH.md, kept as history.
 """
 
 from __future__ import annotations
@@ -253,7 +253,7 @@ def main() -> None:
         "queries": {k: round(v, 3) for k, v in timings.items()},
         "sf": SF_DIR.rstrip("/").rsplit("sf", 1)[-1],
     }
-    # surface the last recorded N->4N scaling run (tools/scaling_bench.py)
+    # surface the last recorded N->4N scaling run (BENCH.md history)
     bench_md = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH.md")
     if os.path.exists(bench_md):
         import re

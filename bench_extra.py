@@ -4,8 +4,7 @@
 Usage: python bench_extra.py [passes] [query ...]
 
 Prints one line per query: name, min, all samples. Queries default to the
-full bench.py suite minus the synthetic headline (`bench_suite.suite`). Use
-SPARK_GRAFT_FANOUT=0 to A/B the adaptive scan fan-out (plans/fanout.py).
+full bench.py suite minus the synthetic headline (`bench_suite.suite`).
 
 The `pages` and `linked` inputs are built once and shared by every query,
 as in bench.py (this script used to rebuild them on every call).

@@ -8,7 +8,7 @@ once, as bench.py builds them, and shared by every builder.
 
 bench.py keeps its own copy of the suite because its source is frozen;
 `tests/test_tools.py` checks that the names and their order still agree.
-Consumers: bench_extra.py (timings) and tools/dump_r07_plans.py (plans).
+Consumers: bench_extra.py (timings) and tools/dump_plans.py (PLANS.md).
 """
 
 from __future__ import annotations

@@ -38,6 +38,13 @@ from .geodesy import points_in_ring_winding
 
 _SHIFT = 1 << 29  # 536870912
 
+# A point's cell comes from rounding (lon + 180) / size, so a point within
+# ~1e-13 deg of a cell's west or south bound can land in that cell while
+# lying just outside its exact rectangle. `cover` therefore widens its bbox
+# range and every cell rectangle by this pad (operators/spatial.py widens
+# its band-edge tests by the same pad, for the same reason).
+EDGE_PAD_DEG = 1e-9
+
 
 def cell_size_deg(res: int) -> float:
     return 360.0 / float(1 << res)
@@ -149,23 +156,25 @@ def _rect_intersects_ring(bounds: tuple[float, float, float, float], ring_xy: np
 
 
 def cover(ring_xy: np.ndarray, res: int) -> list[int]:
-    """Cell cover of a polygon ring: every res-r cell whose rectangle
-    intersects the polygon (sound — a point inside the polygon is always in
-    one of these cells; tight — bbox candidates are refined with an exact
+    """Cell cover of a polygon ring: every res-r cell whose rectangle,
+    widened by EDGE_PAD_DEG, intersects the polygon (sound — a point inside
+    the polygon is always in one of these cells, whatever the rounding of
+    its cell id; tight — bbox candidates are refined with an exact
     rectangle/polygon test)."""
     size = cell_size_deg(res)
-    min_x = int(math.floor((float(ring_xy[:, 0].min()) + 180.0) / size))
-    max_x = int(math.floor((float(ring_xy[:, 0].max()) + 180.0) / size))
-    min_y = int(math.floor((float(ring_xy[:, 1].min()) + 90.0) / size))
-    max_y = int(math.floor((float(ring_xy[:, 1].max()) + 90.0) / size))
+    pad = EDGE_PAD_DEG
+    min_x = int(math.floor((float(ring_xy[:, 0].min()) - pad + 180.0) / size))
+    max_x = int(math.floor((float(ring_xy[:, 0].max()) + pad + 180.0) / size))
+    min_y = int(math.floor((float(ring_xy[:, 1].min()) - pad + 90.0) / size))
+    max_y = int(math.floor((float(ring_xy[:, 1].max()) + pad + 90.0) / size))
     cells = []
     for y in range(min_y, max_y + 1):
         for x in range(min_x, max_x + 1):
             bounds = (
-                x * size - 180.0,
-                y * size - 90.0,
-                (x + 1) * size - 180.0,
-                (y + 1) * size - 90.0,
+                x * size - 180.0 - pad,
+                y * size - 90.0 - pad,
+                (x + 1) * size - 180.0 + pad,
+                (y + 1) * size - 90.0 + pad,
             )
             if _rect_intersects_ring(bounds, ring_xy):
                 cells.append((res * _SHIFT + y) * _SHIFT + x)

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import cellgrid
+from ..functions.cellgrid import EDGE_PAD_DEG
 from ..plans.localtable import literal_table
 
 DEFAULT_JOIN_RES = 13  # ~0.044 deg cells: tight polygon covers, ~2x fewer false candidates than res 11 (bench-chosen)
@@ -58,8 +59,8 @@ DEFAULT_JOIN_RES = 13  # ~0.044 deg cells: tight polygon covers, ~2x fewer false
 # (|x2 - x1|, |px - x1| <= 360 and |py - y1| <= |dy|). The float side
 # therefore keeps its exact sign and the edge adds 0 in
 # points_in_ring_winding as well: the sum over band edges is that
-# function's sum, bit for bit.
-EDGE_PAD_DEG = 1e-9
+# function's sum, bit for bit. (cellgrid.cover widens its cells by the
+# same pad, so the point's cell is in the cover in the first place.)
 
 EDGES_TYPE = T.ArrayType(
     T.StructType([T.StructField(n, T.DoubleType(), False) for n in ("x1", "y1", "x2", "y2")]), False

@@ -31,18 +31,12 @@ RoundRobinPartitioning is used deliberately:
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
 def fan_out(df: DataFrame) -> DataFrame:
     """Repartition `df` up to defaultParallelism iff it is currently
-    narrower; no-op (and no added exchange) otherwise.
-
-    SPARK_GRAFT_FANOUT=0 disables it globally (A/B measurement hook)."""
-    if os.environ.get("SPARK_GRAFT_FANOUT", "1") == "0":
-        return df
+    narrower; no-op (and no added exchange) otherwise."""
     try:
         sc = df.sparkSession.sparkContext
         target = sc.defaultParallelism

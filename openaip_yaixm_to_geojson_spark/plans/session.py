@@ -40,25 +40,24 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
-    if os.environ.get("SPARK_GRAFT_INFER_FILTERS", "0") != "1":
-        # InferFiltersFromConstraints adds isnotnull(join_key) (and
-        # transitively derived) predicates to every inner equi-join side.
-        # They are redundant for correctness (null keys never match an inner
-        # join anyway) and this engine's join keys — digests, cell ids,
-        # doc/user ids — are non-null by construction, so the filters prune
-        # nothing. They are NOT free: a predicate over a DERIVED key
-        # re-inlines the key's whole derivation (no cross-operator CSE), so
-        # e.g. the geotag md5+CASE chain under the spatial cell join was
-        # evaluated 2-3x per row (measured 0.43 s -> 1.61 s for one inferred
-        # isnotnull over a 50k-row scan; spatial_join 1.6 s -> 0.41 s with
-        # the rule excluded). Scale-valid: the cost is per-row CPU at any
-        # input size, the foregone benefit (early null pruning) is zero on
-        # non-null keys. SPARK_GRAFT_INFER_FILTERS=1 restores the default
-        # rule set (A/B hook).
-        builder = builder.config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints",
-        )
+    # InferFiltersFromConstraints adds isnotnull(join_key) (and
+    # transitively derived) predicates to every inner equi-join side.
+    # They are redundant for correctness (null keys never match an inner
+    # join anyway) and this engine's join keys — digests, cell ids,
+    # doc/user ids — are non-null by construction, so the filters prune
+    # nothing. They are NOT free: a predicate over a DERIVED key
+    # re-inlines the key's whole derivation (no cross-operator CSE), so
+    # e.g. the geotag md5+CASE chain under the spatial cell join was
+    # evaluated 2-3x per row (measured 0.43 s -> 1.61 s for one inferred
+    # isnotnull over a 50k-row scan; spatial_join 1.6 s -> 0.41 s with
+    # the rule excluded). Scale-valid: the cost is per-row CPU at any
+    # input size, the foregone benefit (early null pruning) is zero on
+    # non-null keys. An A/B against Spark's default rule set unsets the
+    # conf on the built session: conf.unset("spark.sql.optimizer.excludedRules").
+    builder = builder.config(
+        "spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromConstraints",
+    )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

@@ -7,7 +7,7 @@ import math
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 # the geometry kernels must not emit numeric warnings: every intentional
@@ -129,11 +129,16 @@ def test_cover_soundness_random_polygons(points, res):
     st.integers(min_value=6, max_value=13),
     st.integers(min_value=0, max_value=2**32 - 1),
 )
+# (-2.22e-16, 50.625) is inside and its cell id rounds to x = 32, whose exact
+# rectangle starts at lon 0 and misses the ring: the cover must be widened.
+@example([(0, 50), (-1, 50), (-2.220446049250313e-16, 51)], 6, 0)
 def test_winding_col_matches_numpy(spark, points, res, seed):
     """`winding_col` is `points_in_ring_winding` on any closed ring (even a
     self-intersecting one) over all its edges, and over the band edges of
-    the point's cell for every point in a cover cell. Points are vertices,
-    edge midpoints, cell band bounds and random points in the bbox."""
+    the point's cover cell for every point (a point whose cell is outside
+    the cover has no band edges, so the cover must hold every inside
+    point's cell). Points are vertices, edge midpoints, cell band bounds
+    and random points in the bbox."""
     from pyspark.sql import functions as F
 
     from openaip_yaixm_to_geojson_spark.operators.spatial import EDGES_TYPE, cover_with_edges, winding_col
@@ -165,11 +170,10 @@ def test_winding_col_matches_numpy(spark, points, res, seed):
     edges = EDGES_TYPE.simpleString()
     df = spark.createDataFrame(pdf, f"lon double, lat double, every {edges}, band {edges}")
     wind = lambda col: winding_col(F.col("lon"), F.col("lat"), F.col(col)) != 0  # noqa: E731
-    got = df.select(wind("every").alias("every"), wind("band").alias("band"), F.size("band") > 0).collect()
+    got = df.select(wind("every").alias("every"), wind("band").alias("band")).collect()
     expected = geodesy.points_in_ring_winding(pts[:, 0], pts[:, 1], ring)
     assert [r[0] for r in got] == expected.tolist()
-    # a cell outside the cover has no band edges to test
-    assert [r[1] for r in got if r[2]] == [e for e, r in zip(expected.tolist(), got) if r[2]]
+    assert [r[1] for r in got] == expected.tolist()
 
 
 @settings(max_examples=100, deadline=None)

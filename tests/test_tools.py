@@ -1,11 +1,12 @@
 """Spark-free checks on the scripts around the package: every package
-import in the entry points, tools and benchmark harness resolves, the
-shared bench suite matches bench.py's, and the test-data scaler handles its
-smallest factor."""
+import in the entry points, tools and benchmark harness resolves, every
+tool the run instructions name exists, the shared bench suite matches
+bench.py's, and the test-data scaler handles its smallest factor."""
 
 import ast
 import importlib
 import importlib.util
+import re
 from pathlib import Path
 
 import pyarrow as pa
@@ -49,6 +50,15 @@ def test_script_package_imports_resolve():
                 missing.append(f"{path.relative_to(REPO)}: from {module} import {name}")
     assert checked > 0
     assert not missing, missing
+
+
+def test_documented_tools_exist():
+    """A deleted or renamed script fails here while the run instructions
+    still name it."""
+    docs = [REPO / "README.md", REPO / ".claude" / "skills" / "verify" / "SKILL.md"]
+    named = {m for doc in docs for m in re.findall(r"tools/[\w.-]+\.(?:py|sh|mjs)\b", doc.read_text())}
+    assert named
+    assert sorted(n for n in named if not (REPO / n).is_file()) == []
 
 
 def _bench_timed_names() -> list[str]:
