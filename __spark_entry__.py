@@ -199,11 +199,11 @@ def q_polygon_overlap_table(spark, sf_dir):
     polyfill cover + ring-attach joins + mapInPandas refine) — nothing
     polygon-shaped on the driver; same oracle as polygon_overlap."""
     from openaip_yaixm_to_geojson_spark.operators.spatial import (
-        polygon_overlap_pairs_table,
+        polygon_overlap_pairs,
         polygons_to_df,
     )
 
-    return polygon_overlap_pairs_table(polygons_to_df(spark, fixture_polygons()))
+    return polygon_overlap_pairs(spark, polygons_to_df(spark, fixture_polygons()))
 
 
 def q_join_count_by_airspace(spark, sf_dir):

@@ -21,6 +21,12 @@ the reference is single-node, this is the north_rule's core operator):
 `spatial_join` is the one operator for all of it; the polygon input type
 picks only the cover.
 
+The polygon-pair joins (`polygon_overlap_pairs`, `polygon_contains_pairs`)
+share one pipeline: a self-join of the cover on `cell` gives candidate
+pairs, and one mapInPandas refines them with an exact NumPy predicate over
+the two rings. Every cover goes through `polygon_cover`, where the input
+type — a driver list or a polygons table — picks the builder.
+
 At 10^12 rows the fact table sees: one projection, one codegen'd cell id,
 one broadcast hash join (no shuffle) whose condition is the refine, then
 the aggregation of the caller's choice. No Python worker touches a page.
@@ -30,7 +36,8 @@ afterwards.
 
 from __future__ import annotations
 
-from typing import Any
+import operator
+from typing import Any, Callable
 
 import numpy as np
 import pandas as pd
@@ -139,16 +146,16 @@ def polygons_to_df(spark: SparkSession, polygons: list[dict[str, Any]]) -> DataF
     converter output or a parquet/Iceberg polygons table, never a driver
     list)."""
     rows = [
-        {
-            "poly_id": int(p["poly_id"]),
-            "airspace_name": p["name"],
-            "airspace_type": p["type"],
-            "airspace_class": p["class"],
-            "ring": np.asarray(p["ring"], dtype=np.float64).tolist(),
-        }
+        (int(p["poly_id"]), p["name"], p["type"], p["class"], np.asarray(p["ring"], dtype=np.float64).tolist())
         for p in polygons
     ]
-    return spark.createDataFrame(rows, schema=POLYGONS_SCHEMA)
+    return literal_table(spark, rows, POLYGONS_SCHEMA)
+
+
+def _ring_np(ring) -> np.ndarray:
+    """Arrow delivers array<array<double>> as an object array of arrays;
+    vstack rebuilds the (n, 2) ring matrix."""
+    return np.vstack([np.asarray(pt) for pt in ring])
 
 
 def polygon_cover_distributed(polygons_df: DataFrame, res: int = DEFAULT_JOIN_RES) -> DataFrame:
@@ -163,13 +170,8 @@ def polygon_cover_distributed(polygons_df: DataFrame, res: int = DEFAULT_JOIN_RE
 
     @F.pandas_udf(T.ArrayType(cell_edges))
     def cover_cells(rings: pd.Series) -> pd.Series:
-        # Arrow delivers array<array<double>> as an object array of arrays;
-        # vstack rebuilds the (n, 2) ring matrix
         return pd.Series(
-            [
-                [{"cell": c, "edges": e} for c, e in cover_with_edges(np.vstack([np.asarray(pt) for pt in ring]), res)]
-                for ring in rings
-            ]
+            [[{"cell": c, "edges": e} for c, e in cover_with_edges(_ring_np(ring), res)] for ring in rings]
         )
 
     return polygons_df.select(
@@ -179,6 +181,17 @@ def polygon_cover_distributed(polygons_df: DataFrame, res: int = DEFAULT_JOIN_RE
         "airspace_type",
         "airspace_class",
     ).select("_c.cell", "poly_id", "airspace_name", "airspace_type", "airspace_class", "_c.edges")
+
+
+def polygon_cover(
+    spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame, res: int = DEFAULT_JOIN_RES
+) -> DataFrame:
+    """COVER_SCHEMA rows of a driver list (covered on the driver) or of a
+    polygons TABLE (covered by the distributed polyfill); the two give the
+    same rows."""
+    if isinstance(polygons, DataFrame):
+        return polygon_cover_distributed(polygons, res)
+    return polygon_cover_df(spark, polygons, res)
 
 
 OUT_COLS = ("url", "lat", "lon", "poly_id", "airspace_name", "airspace_type", "airspace_class")
@@ -213,10 +226,7 @@ def spatial_join(
     """
     if not (salt is None or salt == "auto" or isinstance(salt, int)):
         raise TypeError(f"salt must be an int, None, or 'auto'; got {salt!r}")
-    if isinstance(polygons, DataFrame):
-        cover = polygon_cover_distributed(polygons, res)
-    else:
-        cover = polygon_cover_df(pages.sparkSession, polygons, res)
+    cover = polygon_cover(pages.sparkSession, polygons, res)
     cells = pages.withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
 
     if broadcast:
@@ -250,14 +260,14 @@ def cell_histogram(pages: DataFrame, res: int = DEFAULT_JOIN_RES) -> DataFrame:
 
 
 def choose_salt(pages: DataFrame, res: int = DEFAULT_JOIN_RES, rows_per_task: int = 2_000_000) -> int:
-    """Deterministic salt factor: hottest cell count / target rows per task,
-    clamped to [1, 64]. Same data -> same plan at any parallelism."""
-    hottest = cell_histogram(pages, res).agg(F.max("n_pages")).first()[0] or 0
-    return int(max(1, min(64, -(-hottest // rows_per_task))))
+    """Deterministic salt factor: salt_plan's `salt`, so the join runs the
+    derivation the gate certifies. Same data -> same plan at any
+    parallelism."""
+    return int(salt_plan(pages, res, rows_per_task).first()["salt"])
 
 
 # ---------------------------------------------------------------------------
-# polygon-polygon overlap join (airspace conflict pairs)
+# polygon-pair joins: overlap (airspace conflicts) and containment (nesting)
 # ---------------------------------------------------------------------------
 #
 # Overlap predicate (shared FORMULATION with the SQL oracle — not merely
@@ -323,76 +333,74 @@ def _rings_overlap_np(A: np.ndarray, B: np.ndarray) -> bool:
     return _proper_cross_np(A, B)
 
 
-def _overlap_candidates(cover: DataFrame) -> DataFrame:
-    """Distinct (poly_a < poly_b) pairs whose covers share a cell — the
-    same equi-join shuffle shape as every other spatial candidate step."""
-    a = cover.select(F.col("cell"), F.col("poly_id").alias("poly_a"))
-    b = cover.select(F.col("cell"), F.col("poly_id").alias("poly_b"))
-    return (
-        a.join(b, "cell")
-        .where(F.col("poly_a") < F.col("poly_b"))
-        .select("poly_a", "poly_b")
-        .distinct()
-    )
+def _ring_contains_np(outer: np.ndarray, inner: np.ndarray) -> bool:
+    """outer contains inner iff EVERY inner vertex passes the even-odd
+    inside test against outer AND no edge properly crosses — the same
+    float-predicate contract as _rings_overlap_np (identical single-rounded
+    IEEE sequences in NumPy and the SQL oracle; rings that merely TOUCH may
+    verdict either way, deterministically and identically in both engines)."""
+    if not _even_odd_inside_np(inner[:-1, 0], inner[:-1, 1], outer).all():
+        return False
+    return not _proper_cross_np(outer, inner)
 
 
-def polygon_overlap_pairs(
-    spark: SparkSession, polygons: list[dict[str, Any]], res: int = DEFAULT_JOIN_RES
+def _polygon_pairs(
+    spark: SparkSession,
+    polygons: list[dict[str, Any]] | DataFrame,
+    res: int,
+    keys: tuple[str, str],
+    pair_filter: Callable[[Column, Column], Column],
+    predicate: Callable[[np.ndarray, np.ndarray], bool],
 ) -> DataFrame:
-    """(poly_a, poly_b) pairs of overlapping polygons, driver-list variant:
-    candidates from the cover self-join, exact refine per pair with the
-    rings held in the UDF closure (vectorized vertex-in + edge-cross per
-    candidate — candidates are few, each test O(|A| * |B|) NumPy)."""
-    rings = {int(p["poly_id"]): np.asarray(p["ring"], dtype=np.float64) for p in polygons}
-    cover = polygon_cover_df(spark, polygons, res).select("cell", "poly_id")
-
-    @F.pandas_udf(T.BooleanType())
-    def overlaps(pa: pd.Series, pb: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_rings_overlap_np(rings[int(x)], rings[int(y)]) for x, y in zip(pa, pb)]
-        )
-
-    return _overlap_candidates(cover).where(overlaps(F.col("poly_a"), F.col("poly_b")))
-
-
-def polygon_overlap_pairs_table(polygons_df: DataFrame, res: int = DEFAULT_JOIN_RES) -> DataFrame:
-    """Overlap pairs with the polygon side a TABLE end to end: distributed
-    polyfill cover -> cover self-join candidates -> ring arrays attached by
-    two equi-joins on poly_id -> mapInPandas exact refine. Nothing
-    polygon-shaped touches the driver; ring payloads travel only on the
-    (few) candidate pairs."""
+    """(key_a, key_b) polygon pairs with predicate(ring_a, ring_b): cover
+    self-join candidates -> ring arrays attached by two equi-joins on
+    poly_id -> one mapInPandas exact refine. Ring payloads travel only on
+    the (few) candidate pairs, and for a table nothing polygon-shaped
+    touches the driver."""
+    ka, kb = keys
     # the cover feeds BOTH sides of the candidate self-join; without a
-    # materialization the pandas-UDF polyfill executes once per side
+    # materialization a table's pandas-UDF polyfill executes once per side
     # (plan-audited: two ArrowEvalPython stages) — the fan-out-reuse trap
-    cover = (
-        polygon_cover_distributed(polygons_df, res)
-        .select("cell", "poly_id")
-        .localCheckpoint()
-    )
-    cand = _overlap_candidates(cover)
-    rings = polygons_df.select(F.col("poly_id").cast("int").alias("poly_id"), "ring")
-    cand = (
-        cand.join(rings.withColumnRenamed("poly_id", "poly_a").withColumnRenamed("ring", "ring_a"), "poly_a")
-        .join(rings.withColumnRenamed("poly_id", "poly_b").withColumnRenamed("ring", "ring_b"), "poly_b")
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("poly_a", T.IntegerType()),
-            T.StructField("poly_b", T.IntegerType()),
-        ]
-    )
+    cover = polygon_cover(spark, polygons, res).select("cell", "poly_id").localCheckpoint()
+    a = cover.select(F.col("cell"), F.col("poly_id").alias(ka))
+    b = cover.select(F.col("cell"), F.col("poly_id").alias(kb))
+    cand = a.join(b, "cell").where(pair_filter(F.col(ka), F.col(kb))).select(ka, kb).distinct()
+    table = polygons if isinstance(polygons, DataFrame) else polygons_to_df(spark, polygons)
+    rings = table.select(F.col("poly_id").cast("int").alias("poly_id"), "ring")
+    cand = cand.join(rings.toDF(ka, "ring_a"), ka).join(rings.toDF(kb, "ring_b"), kb)
 
     def refine(batches):
         for pdf in batches:
-            keep = []
-            for row in pdf.itertuples(index=False):
-                A = np.vstack([np.asarray(pt, dtype=np.float64) for pt in row.ring_a])
-                B = np.vstack([np.asarray(pt, dtype=np.float64) for pt in row.ring_b])
-                keep.append(_rings_overlap_np(A, B))
-            yield pdf.loc[keep, ["poly_a", "poly_b"]]
+            keep = [predicate(_ring_np(ra), _ring_np(rb)) for ra, rb in zip(pdf["ring_a"], pdf["ring_b"])]
+            yield pdf.loc[keep, [ka, kb]]
 
+    out_schema = T.StructType([T.StructField(ka, T.IntegerType()), T.StructField(kb, T.IntegerType())])
     return cand.mapInPandas(refine, schema=out_schema)
+
+
+def polygon_overlap_pairs(
+    spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame, res: int = DEFAULT_JOIN_RES
+) -> DataFrame:
+    """(poly_a, poly_b), poly_a < poly_b: pairs of overlapping polygons
+    (airspace conflicts) from a driver list or a polygons TABLE; the two
+    give the same rows. Refine: vectorized vertex-in + edge-cross per
+    candidate — candidates are few, each test O(|A| * |B|) NumPy."""
+    return _polygon_pairs(spark, polygons, res, ("poly_a", "poly_b"), operator.lt, _rings_overlap_np)
+
+
+def polygon_contains_pairs(
+    spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame, res: int = DEFAULT_JOIN_RES
+) -> DataFrame:
+    """(outer_poly, inner_poly) DIRECTED nesting pairs — which airspaces sit
+    wholly inside others (a CTR inside its TMA, danger areas inside a CTA) —
+    from a driver list or a polygons TABLE.
+
+    Candidate completeness is STRONGER than overlap's: if outer contains
+    inner, every cover cell of inner holds a point of inner ⊆ outer, so it
+    intersects outer and is in outer's cover too — the cover self-join can
+    never miss a true nesting. Refine is vectorized per pair (vertex-in
+    O(|inner|x|outer|) + cross tests), pairs are few."""
+    return _polygon_pairs(spark, polygons, res, ("outer_poly", "inner_poly"), operator.ne, _ring_contains_np)
 
 
 def ring_decimate(polygons_df: DataFrame, tol_area_deg2: float = 1e-6) -> DataFrame:
@@ -592,57 +600,15 @@ def airspace_density(join_out: DataFrame, polygons_df: DataFrame) -> DataFrame:
     )
 
 
-def _ring_contains_np(outer: np.ndarray, inner: np.ndarray) -> bool:
-    """outer contains inner iff EVERY inner vertex passes the even-odd
-    inside test against outer AND no edge properly crosses — the same
-    float-predicate contract as _rings_overlap_np (identical single-rounded
-    IEEE sequences in NumPy and the SQL oracle; rings that merely TOUCH may
-    verdict either way, deterministically and identically in both engines)."""
-    if not _even_odd_inside_np(inner[:-1, 0], inner[:-1, 1], outer).all():
-        return False
-    return not _proper_cross_np(outer, inner)
-
-
-def polygon_contains_pairs(
-    spark: SparkSession, polygons: list[dict[str, Any]], res: int = DEFAULT_JOIN_RES
-) -> DataFrame:
-    """(outer_poly, inner_poly) DIRECTED nesting pairs — which airspaces sit
-    wholly inside others (a CTR inside its TMA, danger areas inside a CTA).
-
-    Candidate completeness is STRONGER than overlap's: if outer contains
-    inner, every cover cell of inner holds a point of inner ⊆ outer, so it
-    intersects outer and is in outer's cover too — the cover self-join can
-    never miss a true nesting. Refine is vectorized per pair (vertex-in
-    O(|inner|x|outer|) + cross tests), pairs are few."""
-    rings = {int(p["poly_id"]): np.asarray(p["ring"], dtype=np.float64) for p in polygons}
-    cover = polygon_cover_df(spark, polygons, res).select("cell", "poly_id")
-    a = cover.select(F.col("cell"), F.col("poly_id").alias("outer_poly"))
-    b = cover.select(F.col("cell"), F.col("poly_id").alias("inner_poly"))
-    cand = (
-        a.join(b, "cell")
-        .where(F.col("outer_poly") != F.col("inner_poly"))
-        .select("outer_poly", "inner_poly")
-        .distinct()
-    )
-
-    @F.pandas_udf(T.BooleanType())
-    def contains(po: pd.Series, pi: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_ring_contains_np(rings[int(x)], rings[int(y)]) for x, y in zip(po, pi)]
-        )
-
-    return cand.where(contains(F.col("outer_poly"), F.col("inner_poly")))
-
-
 def salt_plan(
     pages: DataFrame, res: int = DEFAULT_JOIN_RES, rows_per_task: int = 2_000_000
 ) -> DataFrame:
     """The skew-handling DERIVATION as a queryable one-row plan:
     (hottest_cell, hottest_rows, salt) with salt = ceil(hottest_rows /
-    rows_per_task) clamped to [1, 64] — what choose_salt computes, exposed
-    as a DataFrame so the driver gate certifies the derivation the salted
-    join runs on. Ties on the hottest count break to the smaller cell id.
-    One map-side-partial aggregation to #cells rows, then a 1-row min-by."""
+    rows_per_task) clamped to [1, 64]. choose_salt reads this `salt`, so
+    the driver gate certifies the derivation the salted join runs on. Ties
+    on the hottest count break to the smaller cell id. One map-side-partial
+    aggregation to #cells rows, then a 1-row min-by."""
     hist = cell_histogram(pages, res)
     # hottest cell as a 1-row min-by over the negated count (ties -> the
     # smaller cell id, deterministic)

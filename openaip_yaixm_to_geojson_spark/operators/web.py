@@ -320,18 +320,11 @@ def synth_html_pages(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def link_pagerank(pages: DataFrame, html_col: str = "html", iters: int = 3) -> DataFrame:
-    """Integer-exact PageRank over the REAL extracted host graph — the
-    end-to-end web pipeline composition (href regex -> host edges ->
-    graph.pagerank_int). Parallel edges (repeated links between the same
-    host pair) keep their multiplicity, the standard weighted-crawl
-    treatment. Host ids stay strings through the rank joins (no dense-id
-    pass needed — join keys hash either way); ranks are exact BIGINTs so
-    the whole composition hash-gates. Edges and the node set are
-    localCheckpoint()ed once: both feed 2+ consumers (degree + per-round
-    joins) and would otherwise re-run the regex explode per round."""
-    from .graph import pagerank_int
-
+def _host_graph(pages: DataFrame, html_col: str) -> tuple[DataFrame, DataFrame]:
+    """(nodes, edges) of the extracted host graph: `host` nodes and
+    `src` -> `dst` host edges, one per link (parallel edges kept). Both feed
+    2+ consumers (degree + per-round joins) and would otherwise re-run the
+    regex explode per round."""
     from pyspark.storagelevel import StorageLevel
 
     links = extract_links(pages, html_col=html_col, key_col="url")
@@ -348,6 +341,20 @@ def link_pagerank(pages: DataFrame, html_col: str = "html", iters: int = 3) -> D
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
+    return nodes, edges
+
+
+def link_pagerank(pages: DataFrame, html_col: str = "html", iters: int = 3) -> DataFrame:
+    """Integer-exact PageRank over the REAL extracted host graph — the
+    end-to-end web pipeline composition (href regex -> host edges ->
+    graph.pagerank_int). Parallel edges (repeated links between the same
+    host pair) keep their multiplicity, the standard weighted-crawl
+    treatment. Host ids stay strings through the rank joins (no dense-id
+    pass needed — join keys hash either way); ranks are exact BIGINTs so
+    the whole composition hash-gates."""
+    from .graph import pagerank_int
+
+    nodes, edges = _host_graph(pages, html_col)
     return pagerank_int(nodes, edges, iters=iters, key_col="host")
 
 
@@ -679,22 +686,7 @@ def link_hits(pages: DataFrame, html_col: str = "html", iters: int = 2) -> DataF
     link_pagerank composition with the alternating recurrence."""
     from .graph import hits_int
 
-    from pyspark.storagelevel import StorageLevel
-
-    links = extract_links(pages, html_col=html_col, key_col="url")
-    # persist, not checkpoint (r7): same materialize-once guarantee for the
-    # round-invariant edge/node inputs, shared across invocations in a
-    # session (per-round rank state is materialized separately)
-    edges = links.select(
-        url_host_col(F.col("key")).alias("src"),
-        url_host_col(F.col("link")).alias("dst"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = (
-        edges.select(F.col("src").alias("host"))
-        .union(edges.select(F.col("dst").alias("host")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    nodes, edges = _host_graph(pages, html_col)
     return hits_int(nodes, edges, iters=iters, key_col="host")
 
 

@@ -20,8 +20,7 @@ from ..functions import cellgrid
 from ..operators.spatial import (
     DEFAULT_JOIN_RES,
     OUT_COLS,
-    polygon_cover_distributed,
-    polygons_to_df,
+    polygon_cover,
     winding_col,
 )
 
@@ -84,12 +83,10 @@ def bucketed_pages(spark: SparkSession, pages: DataFrame, table: str = "pages_bu
 
 def bucketed_cover(spark: SparkSession, polygons, table: str = "cover_bucketed",
                    res: int = DEFAULT_JOIN_RES, n_buckets: int = 16) -> DataFrame:
-    """Cover table built through the DISTRIBUTED polyfill (pandas-UDF cover
-    + explode), so the polygon side never loops on the driver; `polygons`
-    may be a fixture-style list (converted to a table) or a polygons
-    DataFrame already."""
-    polys_df = polygons if isinstance(polygons, DataFrame) else polygons_to_df(spark, polygons)
-    cover = polygon_cover_distributed(polys_df, res)
+    """Cover table of a fixture-style list or a polygons DataFrame, built by
+    `polygon_cover` (a table through the distributed polyfill, so the
+    polygon side never loops on the driver)."""
+    cover = polygon_cover(spark, polygons, res)
     write_bucketed(cover, table, "cell", n_buckets)
     return spark.table(table)
 

@@ -250,18 +250,22 @@ def test_events_retention_single_pass(spark):
 
 
 def test_polygon_overlap_table_cover_single_eval(spark):
-    """The distributed polyfill cover feeds both sides of the candidate
-    self-join — without the localCheckpoint the pandas-UDF cover executed
-    once per side (r4 audit: two ArrowEvalPython stages)."""
+    """The cover feeds both sides of the candidate self-join — without the
+    localCheckpoint a table's pandas-UDF cover executed once per side (r4
+    audit: two ArrowEvalPython stages). Both pair joins, over a list and a
+    table, refine in one mapInPandas and evaluate no pandas UDF."""
     from openaip_yaixm_to_geojson_spark.functions.convert_local import fixture_polygons
     from openaip_yaixm_to_geojson_spark.operators.spatial import (
-        polygon_overlap_pairs_table,
+        polygon_contains_pairs,
+        polygon_overlap_pairs,
         polygons_to_df,
     )
 
-    plan = plan_of(polygon_overlap_pairs_table(polygons_to_df(spark, fixture_polygons())))
-    # downstream of the checkpointed cover: no polyfill UDF re-evaluation
-    assert plan.count("ArrowEvalPython") == 0
+    for op in (polygon_overlap_pairs, polygon_contains_pairs):
+        for polys in (fixture_polygons(), polygons_to_df(spark, fixture_polygons())):
+            plan = plan_of(op(spark, polys))
+            assert plan.count("ArrowEvalPython") == 0, (op.__name__, plan)
+            assert plan.count("MapInPandas") == 1, (op.__name__, plan)
 
 
 def test_self_join_operators_single_source_pass(spark):

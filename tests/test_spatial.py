@@ -285,6 +285,7 @@ def test_salted_join_under_real_skew(spark, polygons):
     once the hottest cell exceeds the per-task target."""
     from openaip_yaixm_to_geojson_spark.operators.spatial import (
         choose_salt,
+        salt_plan,
         spatial_join,
     )
 
@@ -299,7 +300,12 @@ def test_salted_join_under_real_skew(spark, polygons):
         .selectExpr("concat('s', id) AS url")
         .selectExpr("url", f"CAST({cy!r} AS DOUBLE) AS lat", f"CAST({cx!r} AS DOUBLE) AS lon")
     )
-    assert choose_salt(pages, rows_per_task=1_000) > 1
+    salt = choose_salt(pages, rows_per_task=1_000)
+    assert salt > 1
+    # choose_salt runs the gated salt_plan derivation, also on no pages
+    assert salt == salt_plan(pages, rows_per_task=1_000).first()["salt"]
+    empty = pages.limit(0)
+    assert choose_salt(empty) == salt_plan(empty).first()["salt"] == 1
     broadcast_rows = spatial_join(pages, polygons, broadcast=True).count()
     salted_rows = spatial_join(pages, polygons, broadcast=False, salt=8).count()
     auto_rows = spatial_join(pages, polygons, broadcast=False, salt="auto").count()
@@ -547,10 +553,9 @@ def test_knn_edge_degenerate_and_boundary(spark):
 def test_polygon_overlap_pairs(spark):
     """Overlap join: vertex-containment overlaps, crossing-only overlaps
     (the plus/cross case — NO vertex of either inside the other), and
-    disjoint pairs; list and TABLE variants agree row-for-row."""
+    disjoint pairs; a driver list and a polygons TABLE give the same rows."""
     from openaip_yaixm_to_geojson_spark.operators.spatial import (
         polygon_overlap_pairs,
-        polygon_overlap_pairs_table,
         polygons_to_df,
     )
 
@@ -572,19 +577,17 @@ def test_polygon_overlap_pairs(spark):
         box(4, 8.0, 10.0, 13.0, 11.0),
         box(5, 20.0, 20.0, 21.0, 21.0),  # disjoint from everything
     ]
-    expected = {(1, 2), (3, 4)}
-    got = {(r["poly_a"], r["poly_b"]) for r in polygon_overlap_pairs(spark, polys).collect()}
-    assert got == expected
-    got_tab = {
-        (r["poly_a"], r["poly_b"])
-        for r in polygon_overlap_pairs_table(polygons_to_df(spark, polys)).collect()
-    }
-    assert got_tab == expected
+    for side in (polys, polygons_to_df(spark, polys)):
+        got = sorted((r["poly_a"], r["poly_b"]) for r in polygon_overlap_pairs(spark, side).collect())
+        assert got == [(1, 2), (3, 4)]
 
 
-def test_polygon_area_orientation(spark):
+def test_polygon_area_orientation(spark, tmp_path):
     """Exact planar shoelace on hand-made squares: CCW positive winding,
-    CW detected, area exact; the fold evaluates once (staged projection)."""
+    CW detected, area exact; the fold evaluates once (staged projection).
+    The polygons are read back from parquet, as a stored polygons table is:
+    over a literal table the optimizer folds the whole projection into a
+    LocalTableScan, and the plan shows no fold to count."""
     from openaip_yaixm_to_geojson_spark.operators.spatial import (
         polygon_area_orientation,
         polygons_to_df,
@@ -596,7 +599,8 @@ def test_polygon_area_orientation(spark):
         {"poly_id": 1, "name": "CCW", "type": "CTA", "class": "D", "ring": ccw},
         {"poly_id": 2, "name": "CW", "type": "CTA", "class": "D", "ring": cw},
     ]
-    df = polygon_area_orientation(polygons_to_df(spark, polys))
+    polygons_to_df(spark, polys).write.parquet(str(tmp_path / "polygons"))
+    df = polygon_area_orientation(spark.read.parquet(str(tmp_path / "polygons")))
     got = {r["poly_id"]: (r["area_deg2"], r["is_ccw"]) for r in df.collect()}
     assert got == {1: (6.0, True), 2: (6.0, False)}
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -931,8 +935,9 @@ def test_knn_k_crosses_ring_boundary(spark):
 
 def test_polygon_contains_pairs_synthetic(spark):
     """Nested squares: outer 1 contains inner 2; 3 properly crosses 1 (not
-    contained); 4 is disjoint. Directed output, candidate step included."""
-    from openaip_yaixm_to_geojson_spark.operators.spatial import polygon_contains_pairs
+    contained); 4 is disjoint. Directed output, candidate step included;
+    a driver list and a polygons TABLE give the same rows."""
+    from openaip_yaixm_to_geojson_spark.operators.spatial import polygon_contains_pairs, polygons_to_df
 
     def sq(pid, x0, y0, s, name="P"):
         ring = [[x0, y0], [x0 + s, y0], [x0 + s, y0 + s], [x0, y0 + s], [x0, y0]]
@@ -944,11 +949,9 @@ def test_polygon_contains_pairs_synthetic(spark):
         sq(3, 3.0, 3.0, 4.0),      # crosses 1's boundary
         sq(4, 10.0, 10.0, 1.0),    # disjoint
     ]
-    got = sorted(
-        (r["outer_poly"], r["inner_poly"])
-        for r in polygon_contains_pairs(spark, polys).collect()
-    )
-    assert got == [(1, 2)]
+    for side in (polys, polygons_to_df(spark, polys)):
+        got = sorted((r["outer_poly"], r["inner_poly"]) for r in polygon_contains_pairs(spark, side).collect())
+        assert got == [(1, 2)]
 
 
 def test_morton_key_quadrant_recursion_and_locality():

@@ -1,7 +1,8 @@
 """Spark-free checks on the scripts around the package: every package
 import in the entry points, tools and benchmark harness resolves, every
-tool the run instructions name exists, the shared bench suite matches
-bench.py's, and the test-data scaler handles its smallest factor."""
+tool the run instructions name exists, every operator the README names
+resolves, the shared bench suite matches bench.py's, and the test-data
+scaler handles its smallest factor."""
 
 import ast
 import importlib
@@ -59,6 +60,17 @@ def test_documented_tools_exist():
     named = {m for doc in docs for m in re.findall(r"tools/[\w.-]+\.(?:py|sh|mjs)\b", doc.read_text())}
     assert named
     assert sorted(n for n in named if not (REPO / n).is_file()) == []
+
+
+def test_readme_operator_references_resolve():
+    """Every `operators/<module>.<name>` (or functions/, plans/, sources/,
+    streaming/) reference in README.md names an attribute of that module, so
+    a deleted or renamed operator fails here while the tables still name it."""
+    pattern = r"\b(operators|functions|plans|sources|streaming)/(\w+)\.(\w+)"
+    refs = set(re.findall(pattern, (REPO / "README.md").read_text()))
+    refs = {(f"{PACKAGE}.{pkg}.{mod}", name) for pkg, mod, name in refs if name != "py"}
+    assert len(refs) > 100
+    assert sorted(f"{m}.{n}" for m, n in refs if not hasattr(importlib.import_module(m), n)) == []
 
 
 def _bench_timed_names() -> list[str]:
