@@ -858,17 +858,12 @@ def q_spatial_join_bucketed(spark, sf_dir):
     side); same rows as every other spatial-join mode."""
     from openaip_yaixm_to_geojson_spark.plans.bucketing import (
         bucketed_cover,
+        bucketed_pages,
         colocated_spatial_join,
-        write_bucketed,
     )
-    from openaip_yaixm_to_geojson_spark.functions import cellgrid
-    from openaip_yaixm_to_geojson_spark.operators.spatial import DEFAULT_JOIN_RES
 
-    pages = pages_from_documents(spark, sf_dir).withColumn(
-        "cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), DEFAULT_JOIN_RES)
-    )
-    write_bucketed(pages, "gate_pages_bucketed", "cell", 8)
-    cover = bucketed_cover(spark, fixture_polygons(), table="gate_cover_bucketed", n_buckets=8)
+    bucketed_pages(spark, pages_from_documents(spark, sf_dir), "gate_pages_bucketed", n_buckets=8)
+    bucketed_cover(spark, fixture_polygons(), "gate_cover_bucketed", n_buckets=8)
     return colocated_spatial_join(spark, "gate_pages_bucketed", "gate_cover_bucketed").select("url", "poly_id", "airspace_name", "airspace_type", "airspace_class")
 
 

@@ -41,6 +41,13 @@ Implementations:
 
 * `knn_points` — point-point self kNN. Its index side is the whole corpus,
   so it explodes the QUERY side and keeps its own loop.
+
+Speed-only choices are module constants, read at call time: the grid
+resolution (`KNN_RES`, `KNN_POINTS_RES`), the window schedule (`WINDOWS`),
+the broadcast cap (`BROADCAST_INDEX_MAX_ROWS`) and the fast-path gates
+(`SMALL_INPUT_ROWS`, `SMALL_INDEX_VERTICES`). Every entry point returns the
+same rows at any value of them; a test that needs a particular code path
+sets the constant.
 """
 
 from __future__ import annotations
@@ -290,6 +297,11 @@ def knn_edge_bruteforce(pages: DataFrame, polygons: list[dict[str, Any]]) -> Dat
     )
 
 
+# Explicit schema for the same arrow-off dtype-widening reason as
+# vertex_index_df: poly_id must stay int to match _BEST_T's fold zero.
+_SEGMENT_INDEX_DDL = "vcell bigint, poly_id int, ax double, ay double, bx double, by double"
+
+
 def segment_index_df(
     spark: SparkSession, polygons: list[dict[str, Any]], res: int = KNN_RES
 ) -> DataFrame:
@@ -297,6 +309,11 @@ def segment_index_df(
     <= cell_size (the broadcast side). Sampling only drives candidate
     generation — the reported distance is always the exact segment
     distance — so the ceil() here needs no cross-engine determinism."""
+    return spark.createDataFrame(_segment_index_pdf(polygons, res), _SEGMENT_INDEX_DDL)
+
+
+def _segment_index_pdf(polygons: list[dict[str, Any]], res: int) -> pd.DataFrame:
+    """segment_index_df's rows, built on the driver."""
     import math
 
     size = cellgrid.cell_size_deg(res)
@@ -320,11 +337,7 @@ def segment_index_df(
                 rows.append((cell, int(pids[i]), float(ax[i]), float(ay[i]), float(bx[i]), float(by[i])))
     pdf = pd.DataFrame(rows, columns=["vcell", "poly_id", "ax", "ay", "bx", "by"])
     pdf["poly_id"] = pdf["poly_id"].astype("int32")
-    # Explicit schema for the same arrow-off dtype-widening reason as
-    # vertex_index_df: poly_id must stay int to match _BEST_T's fold zero.
-    return spark.createDataFrame(
-        pdf, "vcell bigint, poly_id int, ax double, ay double, bx double, by double"
-    )
+    return pdf
 
 
 def segment_index_from_table(polygons_df: DataFrame, res: int = KNN_RES) -> DataFrame:
@@ -413,27 +426,29 @@ def _checkpointed(index_df: DataFrame, spark: SparkSession) -> DataFrame:
     return index_df.coalesce(spark.sparkContext.defaultParallelism).localCheckpoint()
 
 
-def _vertex_index(spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame, res: int) -> _Index:
-    """Ring-vertex index from a driver list or a polygons TABLE (distributed
-    explode — nothing polygon-shaped on the driver)."""
+def _vertex_index(spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame) -> _Index:
+    """KNN_RES ring-vertex index from a driver list or a polygons TABLE
+    (distributed explode — nothing polygon-shaped on the driver)."""
     if isinstance(polygons, DataFrame):
-        df = _checkpointed(vertex_index_from_table(polygons, res), spark)
+        df = _checkpointed(vertex_index_from_table(polygons, KNN_RES), spark)
         n_rows = df.count()  # tiny job on the (small) vertex table
     else:
-        df, n_rows = vertex_index_df(spark, polygons, res), _ring_points(polygons)
+        df, n_rows = vertex_index_df(spark, polygons, KNN_RES), _ring_points(polygons)
     dx = F.col("lon") - F.col("vlon")
     dy = F.col("lat") - F.col("vlat")
     return _Index(df, n_rows, ("vlon", "vlat"), dx * dx + dy * dy, 0.0)
 
 
-def _segment_index(spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame, res: int) -> _Index:
-    """Sampled ring-segment index from a driver list or a polygons TABLE
-    (distributed zip/explode); scored by the exact segment distance."""
+def _segment_index(spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame) -> _Index:
+    """KNN_RES sampled ring-segment index from a driver list or a polygons
+    TABLE (distributed zip/explode); scored by the exact segment distance."""
     if isinstance(polygons, DataFrame):
-        df = _checkpointed(segment_index_from_table(polygons, res), spark)
+        df = _checkpointed(segment_index_from_table(polygons, KNN_RES), spark)
+        n_rows = df.count()  # tiny job on the (small) segment table
     else:
-        df = segment_index_df(spark, polygons, res)
-    return _Index(df, df.count(), _SEG_PAYLOAD, seg_d2_expr(), 0.5)
+        pdf = _segment_index_pdf(polygons, KNN_RES)
+        df, n_rows = spark.createDataFrame(pdf, _SEGMENT_INDEX_DDL), len(pdf)
+    return _Index(df, n_rows, _SEG_PAYLOAD, seg_d2_expr(), 0.5)
 
 
 def _annulus(spark: SparkSession, lo: int, hi: int) -> tuple[DataFrame, int]:
@@ -494,20 +509,15 @@ def _explode_best(df: DataFrame) -> DataFrame:
     )
 
 
-def _expansion_loop(
-    pages: DataFrame,
-    index: _Index,
-    res: int,
-    windows: tuple[tuple[int, int], ...],
-    k: int,
-) -> DataFrame:
+def _expansion_loop(pages: DataFrame, index: _Index, k: int) -> DataFrame:
     """(url, lat, lon, rnk, poly_id, dist_sq): the k nearest DISTINCT
-    polygons per page, rnk 1..k by (dist_sq, poly_id).
+    polygons per page, rnk 1..k by (dist_sq, poly_id), over a KNN_RES
+    index.
 
     Round r joins still-pending pages against the index over the Chebyshev
-    ring WINDOW [lo_r, hi_r]. The index side explodes across the window's
-    offsets, so the page side stays one row per page with a plain
-    equi-join; the expanded index is broadcast while small and
+    ring WINDOW [lo_r, hi_r] of WINDOWS. The index side explodes across
+    the window's offsets, so the page side stays one row per page with a
+    plain equi-join; the expanded index is broadcast while small and
     shuffle-joined on `cell` past BROADCAST_INDEX_MAX_ROWS.
 
     A page finalizes once it holds k distinct polygons whose k-th distance
@@ -526,15 +536,15 @@ def _expansion_loop(
     pending set; pages still pending after the last window get the exact
     scan."""
     spark = pages.sparkSession
-    size = cellgrid.cell_size_deg(res)
+    size = cellgrid.cell_size_deg(KNN_RES)
     pending = (
         pages.select("url", "lat", "lon")
-        .withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
+        .withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), KNN_RES))
         .withColumn("best", F.expr(_EMPTY_BEST))
     )
     finalized: list[DataFrame] = []
 
-    for lo, hi in windows:
+    for lo, hi in WINDOWS:
         off_df, n_offsets = _annulus(spark, lo, hi)
         vwin = index.df.crossJoin(off_df).select(
             (F.col("vcell") + F.col("off")).alias("cell"), "poly_id", *index.payload_cols
@@ -561,102 +571,70 @@ def _expansion_loop(
 def _nearest(
     pages: DataFrame,
     polygons: list[dict[str, Any]] | DataFrame,
-    build_index: Callable[[SparkSession, Any, int], _Index],
+    build_index: Callable[[SparkSession, Any], _Index],
     numpy_twin: Callable[[DataFrame, list[dict[str, Any]]], DataFrame],
-    res: int,
-    windows: tuple[tuple[int, int], ...],
-    small_input_rows: int,
 ) -> DataFrame:
     """The k=1 entry points' body. Tiny-input fast path (same rows, no loop
-    barriers; small_input_rows=0 forces the loop): a driver list takes the
-    vectorized NumPy twin before any index is built, a table the exact
+    barriers; SMALL_INPUT_ROWS = 0 forces the loop): a driver list takes
+    the vectorized NumPy twin before any index is built, a table the exact
     scan over its index."""
 
     def few_pages() -> bool:
-        return pages.select("url").limit(small_input_rows + 1).count() <= small_input_rows
+        return pages.select("url").limit(SMALL_INPUT_ROWS + 1).count() <= SMALL_INPUT_ROWS
 
     spark = pages.sparkSession
     if isinstance(polygons, DataFrame):
-        index = build_index(spark, polygons, res)
-        if small_input_rows and index.n_rows <= SMALL_INDEX_VERTICES and few_pages():
+        index = build_index(spark, polygons)
+        if SMALL_INPUT_ROWS and index.n_rows <= SMALL_INDEX_VERTICES and few_pages():
             return _explode_best(_bruteforce_k(pages, index, 1)).select(*OUT_COLS)
     else:
-        if small_input_rows and _ring_points(polygons) <= SMALL_INDEX_VERTICES and few_pages():
+        if SMALL_INPUT_ROWS and _ring_points(polygons) <= SMALL_INDEX_VERTICES and few_pages():
             return numpy_twin(pages.select("url", "lat", "lon"), polygons).select(*OUT_COLS)
-        index = build_index(spark, polygons, res)
-    return _expansion_loop(pages, index, res, windows, 1).select(*OUT_COLS)
+        index = build_index(spark, polygons)
+    return _expansion_loop(pages, index, 1).select(*OUT_COLS)
 
 
-def knn_ring_expansion(
-    pages: DataFrame,
-    polygons: list[dict[str, Any]] | DataFrame,
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = WINDOWS,
-    small_input_rows: int = SMALL_INPUT_ROWS,
-) -> DataFrame:
+def knn_ring_expansion(pages: DataFrame, polygons: list[dict[str, Any]] | DataFrame) -> DataFrame:
     """(url, lat, lon, poly_id, dist_sq): the nearest polygon per page by
     VERTEX distance, ties to the smaller poly_id. `polygons` is a driver
     list or a polygons table."""
-    return _nearest(pages, polygons, _vertex_index, knn_bruteforce, res, windows, small_input_rows)
+    return _nearest(pages, polygons, _vertex_index, knn_bruteforce)
 
 
-def knn_edge_ring_expansion(
-    pages: DataFrame,
-    polygons: list[dict[str, Any]] | DataFrame,
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = WINDOWS,
-    small_input_rows: int = SMALL_INPUT_ROWS,
-) -> DataFrame:
+def knn_edge_ring_expansion(pages: DataFrame, polygons: list[dict[str, Any]] | DataFrame) -> DataFrame:
     """(url, lat, lon, poly_id, dist_sq) by EXACT point-to-segment
     distance: sampled segments drive candidates only, the reported distance
     is the exact clamped projection."""
-    return _nearest(pages, polygons, _segment_index, knn_edge_bruteforce, res, windows, small_input_rows)
+    return _nearest(pages, polygons, _segment_index, knn_edge_bruteforce)
 
 
-def knn_k(
-    pages: DataFrame,
-    polygons: list[dict[str, Any]] | DataFrame,
-    k: int = 3,
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = WINDOWS,
-) -> DataFrame:
+def knn_k(pages: DataFrame, polygons: list[dict[str, Any]] | DataFrame, k: int = 3) -> DataFrame:
     """(url, rnk, poly_id, dist_sq): the k nearest DISTINCT airspaces per
     page by VERTEX distance."""
-    index = _vertex_index(pages.sparkSession, polygons, res)
-    return _expansion_loop(pages, index, res, windows, k).select(*KNN_K_OUT_COLS)
+    index = _vertex_index(pages.sparkSession, polygons)
+    return _expansion_loop(pages, index, k).select(*KNN_K_OUT_COLS)
 
 
-def knn_edge_k(
-    pages: DataFrame,
-    polygons: list[dict[str, Any]] | DataFrame,
-    k: int = 3,
-    res: int = KNN_RES,
-    windows: tuple[tuple[int, int], ...] = WINDOWS,
-) -> DataFrame:
+def knn_edge_k(pages: DataFrame, polygons: list[dict[str, Any]] | DataFrame, k: int = 3) -> DataFrame:
     """(url, rnk, poly_id, dist_sq): the k nearest DISTINCT airspaces per
     page by EXACT point-to-segment distance."""
-    index = _segment_index(pages.sparkSession, polygons, res)
-    return _expansion_loop(pages, index, res, windows, k).select(*KNN_K_OUT_COLS)
+    index = _segment_index(pages.sparkSession, polygons)
+    return _expansion_loop(pages, index, k).select(*KNN_K_OUT_COLS)
 
 
 # ---------------------------------------------------------------------------
 # point-point kNN: the k nearest OTHER pages for each sampled query page
 # ---------------------------------------------------------------------------
 
-KNN_POINTS_RES = 6  # ~5.6 deg cells — sized for geotag density, tunable
+KNN_POINTS_RES = 6  # ~5.6 deg cells — sized for geotag density
 
 
-def knn_points(
-    pages: DataFrame,
-    k: int = 8,
-    query_mod: int = 7,
-    res: int = KNN_POINTS_RES,
-    windows: tuple[tuple[int, int], ...] = ((0, 1), (2, 15)),
-) -> DataFrame:
+def knn_points(pages: DataFrame, k: int = 8, query_mod: int = 7) -> DataFrame:
     """(url, rnk, neighbor, dist_sq): the k nearest OTHER pages for each
     deterministically md5-sampled query page, planar squared-degree
     distance, ties broken by neighbor url. The similarity-search shape the
-    polygon kNN family lacks: a point-point self kNN join.
+    polygon kNN family lacks: a point-point self kNN join, over
+    KNN_POINTS_RES cells and the polygon kNN's WINDOWS schedule.
 
     Scale shape — the INDEX side is the whole corpus, so unlike the
     polygon kNN the Chebyshev annulus is exploded on the QUERY side
@@ -678,20 +656,20 @@ def knn_points(
     aliased off-grid ids either match nothing or contribute far candidates
     that lose the top-k."""
     spark = pages.sparkSession
-    size = cellgrid.cell_size_deg(res)
+    size = cellgrid.cell_size_deg(KNN_POINTS_RES)
     best_t = "array<struct<d2:double,nid:string>>"
     points = (
         pages.select(
             F.col("url").alias("nid"), F.col("lon").alias("plon"), F.col("lat").alias("plat")
         )
-        .withColumn("pcell", cellgrid.cell_id_col(F.col("plon"), F.col("plat"), res))
+        .withColumn("pcell", cellgrid.cell_id_col(F.col("plon"), F.col("plat"), KNN_POINTS_RES))
         .localCheckpoint()  # one consumer per round + fallback (fan-out audit)
     )
     qhash = F.conv(F.substring(F.md5("url"), 1, 8), 16, 10).cast("bigint")
     pending = (
         pages.where(qhash % F.lit(query_mod) == 0)
         .select("url", "lat", "lon")
-        .withColumn("qcell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
+        .withColumn("qcell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), KNN_POINTS_RES))
         .withColumn("best", F.expr(f"CAST(array() AS {best_t})"))
         .localCheckpoint()
     )
@@ -708,7 +686,7 @@ def knn_points(
             F.col("col.d2").alias("dist_sq"),
         )
 
-    for lo, hi in windows:
+    for lo, hi in WINDOWS:
         n_pending = pending.count()
         off_df, n_offsets = _annulus(spark, lo, hi)
         qx = (

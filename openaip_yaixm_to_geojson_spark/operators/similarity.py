@@ -742,10 +742,10 @@ def kmeans_iterate(embeddings: DataFrame, k: int = 8) -> DataFrame:
     (cluster, dim) aggregation with k*dim result rows. The round-1 frame
     feeds three consumers -> localCheckpoint (fan-out rule)."""
     fs = float(KMEANS_FP_SCALE)
-    seeds = F.broadcast(
-        embeddings.where(F.col("vec_id") < k).select(
-            F.col("vec_id").alias("seed_id"), F.col("embedding").alias("semb")
-        )
+    # the hint goes on the crossJoin, not on `seeds`: seeds_dbl below would
+    # inherit it as the LEFT side of a left join, which Spark cannot build
+    seeds = embeddings.where(F.col("vec_id") < k).select(
+        F.col("vec_id").alias("seed_id"), F.col("embedding").alias("semb")
     )
     d2_1 = F.aggregate(
         F.zip_with(
@@ -758,7 +758,7 @@ def kmeans_iterate(embeddings: DataFrame, k: int = 8) -> DataFrame:
         lambda acc, v: acc + v,
     )
     a1 = (
-        embeddings.crossJoin(seeds)
+        embeddings.crossJoin(F.broadcast(seeds))
         .select("vec_id", d2_1.alias("d2"), "seed_id", "embedding")
         .groupBy("vec_id")
         .agg(F.min(F.struct(F.col("d2"), F.col("seed_id"), F.col("embedding"))).alias("_b"))

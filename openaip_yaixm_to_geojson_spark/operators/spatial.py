@@ -4,7 +4,7 @@ Strategy (SURVEY.md §2 engine-only operators; no reference counterpart —
 the reference is single-node, this is the north_rule's core operator):
 
 1. **Cell encode** the point side with a pure column expression (codegen,
-   no UDF on the fact table) at a configurable resolution.
+   no UDF on the fact table) at DEFAULT_JOIN_RES.
 2. **Cell cover** each polygon: driver-side for a polygon list (the small
    side — thousands at most), by a distributed pandas-UDF polyfill for a
    polygons table. Both use the exact rectangle/polygon intersection, so
@@ -50,6 +50,8 @@ from ..functions.cellgrid import EDGE_PAD_DEG
 from ..plans.localtable import literal_table
 
 DEFAULT_JOIN_RES = 13  # ~0.044 deg cells: tight polygon covers, ~2x fewer false candidates than res 11 (bench-chosen)
+# salt="auto" target: pages per reducer task of the hottest cell
+ROWS_PER_TASK = 2_000_000
 
 
 # An edge (x1, y1) -> (x2, y2) changes the winding number of a point
@@ -200,7 +202,6 @@ OUT_COLS = ("url", "lat", "lon", "poly_id", "airspace_name", "airspace_type", "a
 def spatial_join(
     pages: DataFrame,
     polygons: list[dict[str, Any]] | DataFrame,
-    res: int = DEFAULT_JOIN_RES,
     broadcast: bool = True,
     salt: int | str | None = None,
     keep_cols: tuple[str, ...] = (),
@@ -212,22 +213,25 @@ def spatial_join(
     (POLYGONS_SCHEMA); the two give the same rows. The input type picks
     only the cover: a list is covered on the driver, a table by the
     distributed pandas-UDF polyfill, so nothing polygon-shaped touches the
-    driver. Either cover row carries its cell's band edges, and the
-    winding-number refine is `winding_col(...) != 0` over them, which
-    Catalyst folds into the join condition: no Python on the page side.
+    driver. Pages and cover meet on DEFAULT_JOIN_RES cells. Either cover
+    row carries its cell's band edges, and the winding-number refine is
+    `winding_col(...) != 0` over them, which Catalyst folds into the join
+    condition: no Python on the page side.
 
     broadcast=True: map-side hash joins, zero shuffle of the page side.
     broadcast=False: shuffle hash join on the cell key; `salt` explicitly
     splinters hot cells — the page side gets a deterministic salt from
-    xxhash64(url) and the cover side is exploded x salt, so skewed cells spread over `salt` reducers
-    (AQE skew-join stays on as backstop). salt="auto" derives the factor
-    from the cell histogram (choose_salt) — deterministic for a given input
-    at any parallelism.
+    xxhash64(url) and the cover side is exploded x salt, so skewed cells
+    spread over `salt` reducers (AQE skew-join stays on as backstop).
+    salt="auto" derives the factor from the cell histogram (choose_salt:
+    hottest cell over ROWS_PER_TASK) — deterministic for a given input at
+    any parallelism. The rows are the same for every broadcast and salt
+    choice; only the plan differs.
     """
     if not (salt is None or salt == "auto" or isinstance(salt, int)):
         raise TypeError(f"salt must be an int, None, or 'auto'; got {salt!r}")
-    cover = polygon_cover(pages.sparkSession, polygons, res)
-    cells = pages.withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
+    cover = polygon_cover(pages.sparkSession, polygons, DEFAULT_JOIN_RES)
+    cells = pages.withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), DEFAULT_JOIN_RES))
 
     if broadcast:
         # salt is a shuffle-join concept; resolving 'auto' here would run a
@@ -235,7 +239,7 @@ def spatial_join(
         candidates = cells.join(F.broadcast(cover), "cell")
     else:
         if salt == "auto":
-            salt = choose_salt(pages, res)
+            salt = choose_salt(pages)
         if salt and salt > 1:
             cells = cells.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(salt)).cast("int"))
             cover = cover.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
@@ -259,11 +263,11 @@ def cell_histogram(pages: DataFrame, res: int = DEFAULT_JOIN_RES) -> DataFrame:
     )
 
 
-def choose_salt(pages: DataFrame, res: int = DEFAULT_JOIN_RES, rows_per_task: int = 2_000_000) -> int:
+def choose_salt(pages: DataFrame) -> int:
     """Deterministic salt factor: salt_plan's `salt`, so the join runs the
     derivation the gate certifies. Same data -> same plan at any
     parallelism."""
-    return int(salt_plan(pages, res, rows_per_task).first()["salt"])
+    return int(salt_plan(pages).first()["salt"])
 
 
 # ---------------------------------------------------------------------------
@@ -347,7 +351,6 @@ def _ring_contains_np(outer: np.ndarray, inner: np.ndarray) -> bool:
 def _polygon_pairs(
     spark: SparkSession,
     polygons: list[dict[str, Any]] | DataFrame,
-    res: int,
     keys: tuple[str, str],
     pair_filter: Callable[[Column, Column], Column],
     predicate: Callable[[np.ndarray, np.ndarray], bool],
@@ -361,7 +364,7 @@ def _polygon_pairs(
     # the cover feeds BOTH sides of the candidate self-join; without a
     # materialization a table's pandas-UDF polyfill executes once per side
     # (plan-audited: two ArrowEvalPython stages) — the fan-out-reuse trap
-    cover = polygon_cover(spark, polygons, res).select("cell", "poly_id").localCheckpoint()
+    cover = polygon_cover(spark, polygons, DEFAULT_JOIN_RES).select("cell", "poly_id").localCheckpoint()
     a = cover.select(F.col("cell"), F.col("poly_id").alias(ka))
     b = cover.select(F.col("cell"), F.col("poly_id").alias(kb))
     cand = a.join(b, "cell").where(pair_filter(F.col(ka), F.col(kb))).select(ka, kb).distinct()
@@ -378,19 +381,15 @@ def _polygon_pairs(
     return cand.mapInPandas(refine, schema=out_schema)
 
 
-def polygon_overlap_pairs(
-    spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame, res: int = DEFAULT_JOIN_RES
-) -> DataFrame:
+def polygon_overlap_pairs(spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame) -> DataFrame:
     """(poly_a, poly_b), poly_a < poly_b: pairs of overlapping polygons
     (airspace conflicts) from a driver list or a polygons TABLE; the two
     give the same rows. Refine: vectorized vertex-in + edge-cross per
     candidate — candidates are few, each test O(|A| * |B|) NumPy."""
-    return _polygon_pairs(spark, polygons, res, ("poly_a", "poly_b"), operator.lt, _rings_overlap_np)
+    return _polygon_pairs(spark, polygons, ("poly_a", "poly_b"), operator.lt, _rings_overlap_np)
 
 
-def polygon_contains_pairs(
-    spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame, res: int = DEFAULT_JOIN_RES
-) -> DataFrame:
+def polygon_contains_pairs(spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame) -> DataFrame:
     """(outer_poly, inner_poly) DIRECTED nesting pairs — which airspaces sit
     wholly inside others (a CTR inside its TMA, danger areas inside a CTA) —
     from a driver list or a polygons TABLE.
@@ -400,7 +399,7 @@ def polygon_contains_pairs(
     intersects outer and is in outer's cover too — the cover self-join can
     never miss a true nesting. Refine is vectorized per pair (vertex-in
     O(|inner|x|outer|) + cross tests), pairs are few."""
-    return _polygon_pairs(spark, polygons, res, ("outer_poly", "inner_poly"), operator.ne, _ring_contains_np)
+    return _polygon_pairs(spark, polygons, ("outer_poly", "inner_poly"), operator.ne, _ring_contains_np)
 
 
 def ring_decimate(polygons_df: DataFrame, tol_area_deg2: float = 1e-6) -> DataFrame:
@@ -600,16 +599,14 @@ def airspace_density(join_out: DataFrame, polygons_df: DataFrame) -> DataFrame:
     )
 
 
-def salt_plan(
-    pages: DataFrame, res: int = DEFAULT_JOIN_RES, rows_per_task: int = 2_000_000
-) -> DataFrame:
+def salt_plan(pages: DataFrame) -> DataFrame:
     """The skew-handling DERIVATION as a queryable one-row plan:
     (hottest_cell, hottest_rows, salt) with salt = ceil(hottest_rows /
-    rows_per_task) clamped to [1, 64]. choose_salt reads this `salt`, so
+    ROWS_PER_TASK) clamped to [1, 64]. choose_salt reads this `salt`, so
     the driver gate certifies the derivation the salted join runs on. Ties
     on the hottest count break to the smaller cell id. One map-side-partial
     aggregation to #cells rows, then a 1-row min-by."""
-    hist = cell_histogram(pages, res)
+    hist = cell_histogram(pages, DEFAULT_JOIN_RES)
     # hottest cell as a 1-row min-by over the negated count (ties -> the
     # smaller cell id, deterministic)
     top = hist.agg(
@@ -622,7 +619,7 @@ def salt_plan(
         F.lit(64).cast("bigint"),
         F.greatest(
             F.lit(1).cast("bigint"),
-            F.expr(f"(hottest_rows + {rows_per_task - 1}) div {rows_per_task}"),
+            F.expr(f"(hottest_rows + {ROWS_PER_TASK - 1}) div {ROWS_PER_TASK}"),
         ),
     )
     return top.select("hottest_cell", "hottest_rows", salt.alias("salt"))

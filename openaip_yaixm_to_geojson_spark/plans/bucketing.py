@@ -25,8 +25,8 @@ from ..operators.spatial import (
 )
 
 
-def write_bucketed(df: DataFrame, table: str, bucket_col: str = "cell", n_buckets: int = 16) -> None:
-    """Persist a table bucketed+sorted on the join key (Iceberg-style
+def write_bucketed(df: DataFrame, table: str, n_buckets: int = 16) -> None:
+    """Persist a table bucketed+sorted on `cell`, the join key (Iceberg-style
     layout substitute: catalog-managed parquet with bucket metadata).
 
     Drops any previous incarnation first: with the default in-memory
@@ -67,27 +67,29 @@ def write_bucketed(df: DataFrame, table: str, bucket_col: str = "cell", n_bucket
         shutil.rmtree(location, ignore_errors=True)
     (
         df.write.mode("overwrite")
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
+        .bucketBy(n_buckets, "cell")
+        .sortBy("cell")
         .format("parquet")
         .saveAsTable(table)
     )
 
 
 def bucketed_pages(spark: SparkSession, pages: DataFrame, table: str = "pages_bucketed",
-                   res: int = DEFAULT_JOIN_RES, n_buckets: int = 16) -> DataFrame:
-    cells = pages.withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
-    write_bucketed(cells, table, "cell", n_buckets)
+                   n_buckets: int = 16) -> DataFrame:
+    """Pages with their DEFAULT_JOIN_RES `cell`, bucketed on it."""
+    cells = pages.withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), DEFAULT_JOIN_RES))
+    write_bucketed(cells, table, n_buckets)
     return spark.table(table)
 
 
 def bucketed_cover(spark: SparkSession, polygons, table: str = "cover_bucketed",
-                   res: int = DEFAULT_JOIN_RES, n_buckets: int = 16) -> DataFrame:
-    """Cover table of a fixture-style list or a polygons DataFrame, built by
-    `polygon_cover` (a table through the distributed polyfill, so the
-    polygon side never loops on the driver)."""
-    cover = polygon_cover(spark, polygons, res)
-    write_bucketed(cover, table, "cell", n_buckets)
+                   n_buckets: int = 16) -> DataFrame:
+    """DEFAULT_JOIN_RES cover table of a fixture-style list or a polygons
+    DataFrame, built by `polygon_cover` (a table through the distributed
+    polyfill, so the polygon side never loops on the driver). Pages and
+    cover share the resolution, so their cells always meet."""
+    cover = polygon_cover(spark, polygons, DEFAULT_JOIN_RES)
+    write_bucketed(cover, table, n_buckets)
     return spark.table(table)
 
 

@@ -8,7 +8,7 @@ cover table on local[32], paid once per bench pass.
 
 Two replacements, picked by size and schema:
 
-- <= `max_literal_rows` rows: a constant array of struct literals exploded
+- <= `MAX_LITERAL_ROWS` rows: a constant array of struct literals exploded
   over a one-row range. Catalyst constant-folds the array; evaluation is a
   single JVM task (~job floor). Single partition — exactly right for a
   broadcast side. NOT for bigger tables: hundreds of struct literals blow
@@ -39,7 +39,6 @@ def literal_table(
     spark: SparkSession,
     rows: Iterable[tuple | list | dict[str, Any]],
     schema: T.StructType | str,
-    max_literal_rows: int = MAX_LITERAL_ROWS,
 ) -> DataFrame:
     """rows + StructType (or DDL string) -> DataFrame with the schema's
     exact field names/types, built so that re-evaluation costs no Python
@@ -62,7 +61,7 @@ def literal_table(
                 raise ValueError(f"field {f.name} is not nullable, but got None")
 
     nested = any(isinstance(f.dataType, (T.ArrayType, T.StructType, T.MapType)) for f in fields)
-    if len(rows) <= max_literal_rows and not nested:
+    if len(rows) <= MAX_LITERAL_ROWS and not nested:
         structs = [
             F.struct(
                 *[

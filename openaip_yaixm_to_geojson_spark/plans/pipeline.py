@@ -18,7 +18,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.knn import knn_ring_expansion
-from ..operators.spatial import DEFAULT_JOIN_RES, spatial_join
+from ..operators.spatial import spatial_join
 from ..operators.tiles import (
     DEFAULT_TILE_RES,
     tile_class_rollup,
@@ -56,7 +56,6 @@ def run_pipeline(
     sf_dir: str,
     checkpoint_dir: str,
     polygons: list[dict[str, Any]] | None = None,
-    join_res: int = DEFAULT_JOIN_RES,
     tile_res: int = DEFAULT_TILE_RES,
     stop_after: str | None = None,
 ) -> dict[str, DataFrame]:
@@ -79,11 +78,7 @@ def run_pipeline(
 
     stages: list[Stage] = [
         ("pages", build_pages, ("cell_r5",)),
-        (
-            "join_out",
-            lambda s: spatial_join(s["pages"], polygons, res=join_res, keep_cols=("text", "lang")),
-            (),
-        ),
+        ("join_out", lambda s: spatial_join(s["pages"], polygons, keep_cols=("text", "lang")), ()),
         ("knn_out", lambda s: knn_ring_expansion(s["pages"], polygons), ()),
         ("tiles", lambda s: tile_class_rollup(s["join_out"], tile_res), ()),
         ("tile_counts", lambda s: tile_doc_counts(s["pages"], tile_res), ()),

@@ -79,7 +79,8 @@ def test_text_byte_identical_through_join(spark, polygons):
         assert row["text"].encode("utf-8") == source[row["url"]].encode("utf-8")
 
 
-def test_knn_ring_expansion_matches_bruteforce(spark, polygons):
+def test_knn_ring_expansion_matches_bruteforce(spark, polygons, monkeypatch):
+    from openaip_yaixm_to_geojson_spark.operators import knn as knn_mod
     from openaip_yaixm_to_geojson_spark.operators.knn import (
         knn_bruteforce,
         knn_ring_expansion,
@@ -91,12 +92,11 @@ def test_knn_ring_expansion_matches_bruteforce(spark, polygons):
     brute = {r["url"]: (r["poly_id"], r["dist_sq"]) for r in knn_bruteforce(pages, polygons).collect()}
     # the polygon side as a driver list and as a polygons table
     for polys in (polygons, polygons_to_df(spark, polygons)):
-        # small_input_rows=0 forces the expansion loop (the default would
+        # SMALL_INPUT_ROWS = 0 forces the expansion loop (the default would
         # take the tiny-input brute-force fast path and test nothing)
-        ring = {
-            r["url"]: (r["poly_id"], r["dist_sq"])
-            for r in knn_ring_expansion(pages, polys, small_input_rows=0).collect()
-        }
+        with monkeypatch.context() as m:
+            m.setattr(knn_mod, "SMALL_INPUT_ROWS", 0)
+            ring = {r["url"]: (r["poly_id"], r["dist_sq"]) for r in knn_ring_expansion(pages, polys).collect()}
         assert set(ring) == set(brute)
         mismatches = {u: (ring[u], brute[u]) for u in brute if ring[u] != brute[u]}
         assert not mismatches, list(mismatches.items())[:5]
@@ -148,9 +148,10 @@ def test_cellgrid_roundtrip_and_cover_soundness(polygons):
             assert cellgrid.encode(lon, lat, 11) in cover
 
 
-def test_knn_fallback_bruteforce_path(spark, polygons):
+def test_knn_fallback_bruteforce_path(spark, polygons, monkeypatch):
     """Pages outside every ring window must hit the exact fallback without
     schema errors (round-1 ADVICE: the `cell` column crashed the union)."""
+    from openaip_yaixm_to_geojson_spark.operators import knn as knn_mod
     from openaip_yaixm_to_geojson_spark.operators.knn import (
         knn_bruteforce,
         knn_ring_expansion,
@@ -160,10 +161,9 @@ def test_knn_fallback_bruteforce_path(spark, polygons):
     pages = pages_from_documents(spark, SF_DIR).limit(40)
     # a single (0, 0) window: anything not sharing a cell with a vertex
     # falls through to the brute-force fallback
-    ring = {
-        r["url"]: (r["poly_id"], r["dist_sq"])
-        for r in knn_ring_expansion(pages, polygons, windows=((0, 0),), small_input_rows=0).collect()
-    }
+    monkeypatch.setattr(knn_mod, "WINDOWS", ((0, 0),))
+    monkeypatch.setattr(knn_mod, "SMALL_INPUT_ROWS", 0)
+    ring = {r["url"]: (r["poly_id"], r["dist_sq"]) for r in knn_ring_expansion(pages, polygons).collect()}
     brute = {r["url"]: (r["poly_id"], r["dist_sq"]) for r in knn_bruteforce(pages, polygons).collect()}
     assert ring == brute and len(ring) == 40
 
@@ -174,11 +174,9 @@ def test_knn_shuffle_join_past_broadcast_threshold(spark, polygons, monkeypatch)
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
 
     monkeypatch.setattr(knn_mod, "BROADCAST_INDEX_MAX_ROWS", 0)
+    monkeypatch.setattr(knn_mod, "SMALL_INPUT_ROWS", 0)
     pages = pages_from_documents(spark, SF_DIR).limit(40)
-    ring = {
-        r["url"]: (r["poly_id"], r["dist_sq"])
-        for r in knn_mod.knn_ring_expansion(pages, polygons, small_input_rows=0).collect()
-    }
+    ring = {r["url"]: (r["poly_id"], r["dist_sq"]) for r in knn_mod.knn_ring_expansion(pages, polygons).collect()}
     brute = {r["url"]: (r["poly_id"], r["dist_sq"]) for r in knn_mod.knn_bruteforce(pages, polygons).collect()}
     assert ring == brute
 
@@ -279,10 +277,11 @@ def test_knn_hundred_thousand_vertices(spark):
         assert got[url][0] == vp[idx[i]]
 
 
-def test_salted_join_under_real_skew(spark, polygons):
+def test_salted_join_under_real_skew(spark, polygons, monkeypatch):
     """All pages landing in ONE hot cell: the salted shuffle path must
     still match the broadcast path, with choose_salt picking a factor > 1
     once the hottest cell exceeds the per-task target."""
+    from openaip_yaixm_to_geojson_spark.operators import spatial as spatial_mod
     from openaip_yaixm_to_geojson_spark.operators.spatial import (
         choose_salt,
         salt_plan,
@@ -300,10 +299,12 @@ def test_salted_join_under_real_skew(spark, polygons):
         .selectExpr("concat('s', id) AS url")
         .selectExpr("url", f"CAST({cy!r} AS DOUBLE) AS lat", f"CAST({cx!r} AS DOUBLE) AS lon")
     )
-    salt = choose_salt(pages, rows_per_task=1_000)
-    assert salt > 1
-    # choose_salt runs the gated salt_plan derivation, also on no pages
-    assert salt == salt_plan(pages, rows_per_task=1_000).first()["salt"]
+    with monkeypatch.context() as m:
+        m.setattr(spatial_mod, "ROWS_PER_TASK", 1_000)
+        salt = choose_salt(pages)
+        assert salt > 1
+        # choose_salt runs the gated salt_plan derivation, also on no pages
+        assert salt == salt_plan(pages).first()["salt"]
     empty = pages.limit(0)
     assert choose_salt(empty) == salt_plan(empty).first()["salt"] == 1
     broadcast_rows = spatial_join(pages, polygons, broadcast=True).count()
@@ -460,9 +461,10 @@ def test_tile_vector_export_bounds_match_cellgrid(spark):
         assert cellgrid.decode(r["tile_id"])[0] == DEFAULT_TILE_RES
 
 
-def test_knn_edge_expansion_matches_bruteforce(spark, polygons):
+def test_knn_edge_expansion_matches_bruteforce(spark, polygons, monkeypatch):
     """Edge-exact kNN: forced expansion loop (driver-list AND table index)
     == exhaustive segment scan, bit-for-bit including tie-breaks."""
+    from openaip_yaixm_to_geojson_spark.operators import knn as knn_mod
     from openaip_yaixm_to_geojson_spark.operators.knn import (
         knn_edge_bruteforce,
         knn_edge_ring_expansion,
@@ -475,23 +477,22 @@ def test_knn_edge_expansion_matches_bruteforce(spark, polygons):
         r["url"]: (r["poly_id"], r["dist_sq"])
         for r in knn_edge_bruteforce(pages, polygons).collect()
     }
-    loop = {
-        r["url"]: (r["poly_id"], r["dist_sq"])
-        for r in knn_edge_ring_expansion(pages, polygons, small_input_rows=0).collect()
-    }
+    monkeypatch.setattr(knn_mod, "SMALL_INPUT_ROWS", 0)
+    loop = {r["url"]: (r["poly_id"], r["dist_sq"]) for r in knn_edge_ring_expansion(pages, polygons).collect()}
     assert loop == brute
     tab = {
         r["url"]: (r["poly_id"], r["dist_sq"])
-        for r in knn_edge_ring_expansion(pages, polygons_to_df(spark, polygons), small_input_rows=0).collect()
+        for r in knn_edge_ring_expansion(pages, polygons_to_df(spark, polygons)).collect()
     }
     assert tab == brute
 
 
-def test_knn_edge_vs_vertex_pick_different_polygons(spark):
+def test_knn_edge_vs_vertex_pick_different_polygons(spark, monkeypatch):
     """The r3 VERDICT case: a long straight `line:`-style edge passes close
     to the page but its VERTICES are far away. Vertex-kNN picks the small
     nearby square; edge-kNN must pick the polygon whose boundary actually
     comes closest."""
+    from openaip_yaixm_to_geojson_spark.operators import knn as knn_mod
     from openaip_yaixm_to_geojson_spark.operators.knn import (
         knn_edge_ring_expansion,
         knn_ring_expansion,
@@ -523,7 +524,8 @@ def test_knn_edge_vs_vertex_pick_different_polygons(spark):
     assert vertex["poly_id"] == 2 and abs(vertex["dist_sq"] - 0.8 * 0.8) < 1e-12
     assert edge["poly_id"] == 1 and abs(edge["dist_sq"] - 0.1 * 0.1) < 1e-12
     # the forced expansion loop agrees with the tiny-input fast path
-    edge_loop = knn_edge_ring_expansion(pages, polygons, small_input_rows=0).collect()[0]
+    monkeypatch.setattr(knn_mod, "SMALL_INPUT_ROWS", 0)
+    edge_loop = knn_edge_ring_expansion(pages, polygons).collect()[0]
     assert (edge_loop["poly_id"], edge_loop["dist_sq"]) == (edge["poly_id"], edge["dist_sq"])
 
 
@@ -724,16 +726,18 @@ def test_knn_points_matches_bruteforce(spark):
         assert [(nid, d2) for d2, nid in exact] == [(n, d) for _, n, d in rows]
 
 
-def test_knn_points_single_window_forces_fallback(spark):
+def test_knn_points_single_window_forces_fallback(spark, monkeypatch):
     """With one tiny window no query can hold a sub-bound kth distance at
     fixture density — every query must take the exact-scan fallback and
     still match brute force (same assertion as above on a narrower run)."""
+    from openaip_yaixm_to_geojson_spark.operators import knn as knn_mod
     from openaip_yaixm_to_geojson_spark.operators.knn import knn_points
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
 
     pages = pages_from_documents(spark, SF_DIR)
     wide = knn_points(pages, k=3, query_mod=5).collect()
-    narrow = knn_points(pages, k=3, query_mod=5, windows=((0, 0),)).collect()
+    monkeypatch.setattr(knn_mod, "WINDOWS", ((0, 0),))
+    narrow = knn_points(pages, k=3, query_mod=5).collect()
     assert sorted(map(tuple, wide)) == sorted(map(tuple, narrow))
 
 

@@ -1,12 +1,14 @@
 """Spark-free checks on the scripts around the package: every package
 import in the entry points, tools and benchmark harness resolves, every
 tool the run instructions name exists, every operator the README names
-resolves, the shared bench suite matches bench.py's, and the test-data
-scaler handles its smallest factor."""
+resolves, the core operators take no speed-only tuning parameters, the
+shared bench suite matches bench.py's, and the test-data scaler handles
+its smallest factor."""
 
 import ast
 import importlib
 import importlib.util
+import inspect
 import re
 from pathlib import Path
 
@@ -71,6 +73,47 @@ def test_readme_operator_references_resolve():
     refs = {(f"{PACKAGE}.{pkg}.{mod}", name) for pkg, mod, name in refs if name != "py"}
     assert len(refs) > 100
     assert sorted(f"{m}.{n}" for m, n in refs if not hasattr(importlib.import_module(m), n)) == []
+
+
+# module -> {function: parameters it must not take}. Each of these only
+# ever changed speed, never rows, so it is a module constant instead.
+_NO_TUNING_KNOBS = {
+    "operators.spatial": {
+        "spatial_join": {"res"},
+        "polygon_overlap_pairs": {"res"},
+        "polygon_contains_pairs": {"res"},
+        "choose_salt": {"res", "rows_per_task"},
+        "salt_plan": {"res", "rows_per_task"},
+    },
+    "operators.knn": {
+        "knn_ring_expansion": {"res", "windows", "small_input_rows"},
+        "knn_edge_ring_expansion": {"res", "windows", "small_input_rows"},
+        "knn_k": {"res", "windows"},
+        "knn_edge_k": {"res", "windows"},
+        "knn_points": {"res", "windows"},
+    },
+    "plans.pipeline": {"run_pipeline": {"join_res"}},
+    "plans.bucketing": {
+        "bucketed_pages": {"res"},
+        "bucketed_cover": {"res"},
+        "write_bucketed": {"bucket_col"},
+    },
+    "plans.localtable": {"literal_table": {"max_literal_rows"}},
+}
+
+
+def test_core_operators_take_no_tuning_knobs():
+    """The join resolution, kNN resolution and window schedule, fast-path
+    gate, salt target, bucket key and literal-table cap are module
+    constants; a parameter that brings one back fails here."""
+    found = []
+    for module, functions in _NO_TUNING_KNOBS.items():
+        mod = importlib.import_module(f"{PACKAGE}.{module}")
+        for name, removed in functions.items():
+            params = set(inspect.signature(getattr(mod, name)).parameters)
+            found += [f"{module}.{name}({p})" for p in sorted(params & removed)]
+    assert sum(map(len, _NO_TUNING_KNOBS.values())) == 15
+    assert found == []
 
 
 def _bench_timed_names() -> list[str]:
