@@ -406,18 +406,17 @@ def q_text_passthrough(spark, sf_dir):
 
 
 def q_sessionize(spark, sf_dir):
-    """Gap-based sessionization (batch twin of the stateful streaming
-    operator; stream == batch is pinned in tests/test_streaming.py). Key =
-    lang, event time = the dual-engine md5-derived fetch time."""
+    """Gap-based sessionization (operators/events.sessionize). Key = lang,
+    event time = the dual-engine md5-derived fetch time."""
+    from openaip_yaixm_to_geojson_spark.operators.events import sessionize
     from openaip_yaixm_to_geojson_spark.sources.pages import warc_ts_seconds_sql
-    from openaip_yaixm_to_geojson_spark.streaming.pages_stream import sessionize_batch
 
     pages = pages_from_documents(spark, sf_dir)
     events = pages.withColumn("uh", F.md5("url")).select(
         F.col("lang").alias("key"),
         F.timestamp_seconds(F.expr(warc_ts_seconds_sql("uh"))).alias("warc_ts"),
     )
-    return sessionize_batch(events, gap_seconds=500_000)
+    return sessionize(events, gap_seconds=500_000)
 
 
 def q_events_variant(spark, sf_dir):

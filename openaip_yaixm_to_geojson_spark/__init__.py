@@ -8,12 +8,10 @@ Public surface:
   zoom pyramid), dedup (exact / MinHash-LSH / SimHash / Jaccard /
   duplicate clustering), similarity (exact, hyperplane-LSH, IVF ANN,
   near-dup), text (langid, quality, tokens, fingerprints, deterministic
-  sampling), events (sessions, windows, JSON props), relational
+  sampling), events (gap sessionization, windows, JSON props), relational
   (warehouse-shaped queries), multimodal
 * sources — yaixm (YAML docs -> typed rows, structural quarantine),
   pages (Common-Crawl-style deterministic geotags)
-* streaming — file/rate sources, stateless join, windowed tiles,
-  watermarked exact dedup, applyInPandasWithState sessionization
 * plans — session factory, checkpoint/lineage/resume stage runner,
   resumable pipeline, bucketed co-located join
 """

@@ -1,12 +1,12 @@
 """Event-stream relational operators over the `events` table
 (event_id, ts, user_id, event_type, value, props-JSON).
 
-The batch faces of the engine's time-series surface: per-user gap
-sessionization (the batch twin of streaming.sessionize_stateful),
-tumbling-window aggregation, and JSON property extraction — all built-in
-expressions, one shuffle each. Float `value` aggregates are carried as
-DECIMAL(18,2) sums (order-independent and exact) because a double sum's
-value depends on reduction order and could never hash-match an oracle.
+The engine's time-series surface: gap sessionization (`sessionize`, and
+`user_sessions` keyed by user), tumbling-window aggregation, and JSON
+property extraction — all built-in expressions, one shuffle each. Float
+`value` aggregates are carried as DECIMAL(18,2) sums (order-independent
+and exact) because a double sum's value depends on reduction order and
+could never hash-match an oracle.
 """
 
 from __future__ import annotations
@@ -19,14 +19,42 @@ def events_from_dir(spark, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
-def user_sessions(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
-    """Gap-based sessions per user over the event timestamps (same lag +
-    running-counter shape as streaming.sessionize_batch). Returns
-    (key, session_start, session_end, n_events) with epoch-second longs."""
-    from ..streaming.pages_stream import sessionize_batch
+def sessionize(
+    events: DataFrame,
+    key_col: str = "key",
+    ts_col: str = "warc_ts",
+    gap_seconds: int = 1800,
+) -> DataFrame:
+    """Gap-based sessions per key (lag + running session counter): events of
+    a key belong to one session while consecutive gaps stay <= gap_seconds.
+    Returns ALL sessions, including each key's final one, as (key,
+    session_start, session_end, n_events) with epoch-second longs."""
+    from pyspark.sql import Window
 
+    ts_s = F.unix_timestamp(F.col(ts_col))
+    marked = events.select(
+        F.col(key_col).alias("key"), ts_s.alias("t")
+    ).withColumn(
+        "new_session",
+        F.when(F.col("t") - F.lag("t").over(Window.partitionBy("key").orderBy("t")) > gap_seconds, 1)
+        .otherwise(0),
+    )
+    sess = marked.withColumn(
+        "session_id", F.sum("new_session").over(Window.partitionBy("key").orderBy("t"))
+    )
+    return sess.groupBy("key", "session_id").agg(
+        F.min("t").alias("session_start"),
+        F.max("t").alias("session_end"),
+        F.count(F.lit(1)).alias("n_events"),
+    ).drop("session_id")
+
+
+def user_sessions(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
+    """Gap-based sessions per user over the event timestamps (`sessionize`
+    keyed by user_id). Returns (key, session_start, session_end, n_events)
+    with epoch-second longs."""
     ev = events.select(F.col("user_id").cast("string").alias("key"), F.col("ts"))
-    return sessionize_batch(ev, key_col="key", ts_col="ts", gap_seconds=gap_seconds)
+    return sessionize(ev, key_col="key", ts_col="ts", gap_seconds=gap_seconds)
 
 
 def event_type_windows(events: DataFrame, window_seconds: int = 3600) -> DataFrame:

@@ -302,18 +302,12 @@ def knn_edge_bruteforce(pages: DataFrame, polygons: list[dict[str, Any]]) -> Dat
 _SEGMENT_INDEX_DDL = "vcell bigint, poly_id int, ax double, ay double, bx double, by double"
 
 
-def segment_index_df(
-    spark: SparkSession, polygons: list[dict[str, Any]], res: int = KNN_RES
-) -> DataFrame:
-    """Segments indexed by the cells of sample points at Euclidean spacing
-    <= cell_size (the broadcast side). Sampling only drives candidate
-    generation — the reported distance is always the exact segment
-    distance — so the ceil() here needs no cross-engine determinism."""
-    return spark.createDataFrame(_segment_index_pdf(polygons, res), _SEGMENT_INDEX_DDL)
-
-
 def _segment_index_pdf(polygons: list[dict[str, Any]], res: int) -> pd.DataFrame:
-    """segment_index_df's rows, built on the driver."""
+    """Segments indexed by the cells of sample points at Euclidean spacing
+    <= cell_size (the broadcast side), built on the driver. Sampling only
+    drives candidate generation — the reported distance is always the exact
+    segment distance — so the ceil() here needs no cross-engine
+    determinism."""
     import math
 
     size = cellgrid.cell_size_deg(res)

@@ -5,11 +5,11 @@ The Spark-side plumbing — schema, partition-preserving mapInPandas over
 Arrow batches, bounded batch sizes for large blobs — is real and tested.
 Decode is REAL for every format the standard library can reach: P6 PPM
 and PCM WAV (r4) and PNG via the stdlib-zlib codec below (r5, inflate +
-scanline unfilter), each hash-gated. Only codec-library formats
-(JPEG/MP3/MP4) stay behind a loud NotImplementedError slot
-(`decoder=None` remains the deterministic fake for plumbing tests);
-swapping in a library decoder is a one-argument change — nothing in the
-Spark plan moves.
+scanline unfilter), GIF and baseline JPEG, each hash-gated. A payload
+with no decoder here (MP3/MP4) makes `real_media_features` raise
+NotImplementedError (`decoder=None` remains the deterministic fake for
+plumbing tests); swapping in a library decoder is a one-argument change
+to `extract_features` — nothing in the Spark plan moves.
 """
 
 from __future__ import annotations
@@ -97,9 +97,7 @@ def extract_features(
     """mapInPandas feature extraction over binary payloads.
 
     `decoder=None` -> deterministic fake (tests the plumbing end to end).
-    Passing a real decoder is the production path; if one is requested by
-    name here without being installed we fail loudly instead of silently
-    faking it.
+    Passing a real decoder (`real_media_features`) is the production path.
     """
     decode = decoder or _fake_decode
 
@@ -119,85 +117,6 @@ def extract_features(
             )
 
     return media.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-def real_image_decoder(payload: bytes, kind: str) -> np.ndarray:
-    """Production decoder slot for COMPRESSED formats: requires a codec
-    library that is not available in this container. Uncompressed real
-    formats do NOT need this slot — P6 PPM and PCM WAV decode for real via
-    `real_media_features` (stdlib + NumPy, oracle-gated)."""
-    raise NotImplementedError(
-        "MP3/MP4 decoding requires a codec library (e.g. soundfile/opencv) "
-        "that is not installed in this environment; PNG/GIF/JPEG decode for "
-        "real via decode_png/decode_gif/decode_jpeg (stdlib + NumPy, "
-        "oracle-gated); use real_media_features for those, or decoder=None "
-        "for the deterministic fake"
-    )
-
-
-RESIZE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("out_w", T.IntegerType(), False),
-        T.StructField("out_h", T.IntegerType(), False),
-        T.StructField("resized", T.BinaryType(), True),
-        T.StructField("px_mean", T.DoubleType(), True),
-    ]
-)
-
-
-def _fake_pixels(payload: bytes, width: int, height: int) -> np.ndarray:
-    """Deterministic stand-in for an image decode: payload bytes cycled
-    into an (height, width) uint8 'image'."""
-    return np.resize(np.frombuffer(payload, dtype=np.uint8), (height, width))
-
-
-def resize_images(
-    media: DataFrame,
-    out_w: int = 8,
-    out_h: int = 8,
-    decoder: Callable[[bytes, int, int], np.ndarray] | None = None,
-) -> DataFrame:
-    """Area-average (block-mean) image resize over mapInPandas.
-
-    The decode step is stubbed (deterministic fake pixels from the payload
-    bytes — no codec libs in this container; a real decoder is a
-    one-argument swap), but the resize MATH is real, vectorized NumPy:
-    reshape to (out_h, bh, out_w, bw) blocks and mean over the block axes.
-    Source dims must divide evenly by the target (raises otherwise —
-    honest subset, not silent interpolation). Only `image` rows produce
-    output; Arrow batches stay bounded because each row's pixel buffer is
-    width x height bytes, never the whole partition."""
-    decode = decoder or _fake_pixels
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload, meta in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"], pdf["meta"]
-            ):
-                if kind != "image" or payload is None:
-                    continue
-                w, h = int(meta["width"]), int(meta["height"])
-                if w % out_w or h % out_h:
-                    raise ValueError(
-                        f"block-mean resize needs divisible dims: {w}x{h} -> {out_w}x{out_h}"
-                    )
-                px = decode(payload, w, h).astype(np.float64)
-                blocks = px.reshape(out_h, h // out_h, out_w, w // out_w)
-                small = blocks.mean(axis=(1, 3))
-                rows.append(
-                    (
-                        mid,
-                        out_w,
-                        out_h,
-                        np.rint(small).astype(np.uint8).tobytes(),
-                        float(small.mean()),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["media_id", "out_w", "out_h", "resized", "px_mean"])
-
-    return media.mapInPandas(run, schema=RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -260,7 +179,7 @@ def sample_frames(
 # and `real_media_features` computes features from the DECODED pixels /
 # samples. The DuckDB oracle recomputes the same features from the payload
 # byte layout with exact integer arithmetic, so the real decode path is
-# hash-gated. Codec-library formats keep the loud NotImplementedError slot.
+# hash-gated. Codec-library formats (MP3/MP4) raise NotImplementedError.
 
 PPM_W, PPM_H = 8, 8
 WAV_RATE, WAV_SAMPLES = 16000, 128
@@ -383,8 +302,7 @@ def real_media_features(payload: bytes, kind: str) -> np.ndarray:
 
     image: [w, h, meanR, meanG, meanB, varR, varG, varB]
     audio: [rate, n, mean, var, min, max, zero_crossings, mean_abs]
-    Codec-library formats (JPEG/MP3/MP4) still raise via
-    real_image_decoder — that slot stays honestly env-blocked."""
+    Payloads with no decoder here (MP3/MP4) raise NotImplementedError."""
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
         # REAL compressed-format decode (r5): stdlib zlib inflate +
         # scanline unfilter — see decode_png; features share the PPM branch

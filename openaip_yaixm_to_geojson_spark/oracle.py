@@ -158,13 +158,14 @@ xy AS (SELECT url,
 SELECT url, CAST({morton_terms('zx', 'zy', res, '//')} AS BIGINT) AS zkey FROM xy"""
 
 
-def sql_salt_plan(res: int | None = None, rows_per_task: int = 2_000_000) -> str:
+def sql_salt_plan() -> str:
     """spatial.salt_plan twin: hottest-cell histogram max (ties to the
     smaller cell), salt = ceil-div clamped to [1, 64] in integer
-    arithmetic."""
-    from .operators.spatial import DEFAULT_JOIN_RES as _R
+    arithmetic. Resolution and rows per task are read from the engine's
+    constants at call time, so both sides share one salt target."""
+    from .operators import spatial
 
-    res = _R if res is None else res
+    res, rows_per_task = spatial.DEFAULT_JOIN_RES, spatial.ROWS_PER_TASK
     return f"""WITH {pages_with()},
 h AS (SELECT {cell_id_sql('lon', 'lat', res)} AS cell, CAST(COUNT(*) AS BIGINT) AS n_pages
       FROM pages GROUP BY 1),
@@ -517,8 +518,7 @@ def sql_text_passthrough() -> str:
 
 def sql_sessionize(gap_seconds: int = 500_000) -> str:
     """Gap-based sessionization of page fetches per language key: the same
-    lag + running-counter formulation as streaming.sessionize_batch (the
-    batch twin the stateful streaming operator is pinned against)."""
+    lag + running-counter formulation as operators/events.sessionize."""
     return f"""WITH {pages_with()},
 ev AS (SELECT lang AS key, {warc_ts_seconds_sql('md5(url)')} AS t FROM pages),
 m AS (

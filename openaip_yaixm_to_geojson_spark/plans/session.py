@@ -29,10 +29,10 @@ def build_session(
         builder.config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        # The streaming<->batch sessionization contract (epoch arithmetic on
-        # Arrow-delivered timestamps) assumes UTC; enforce it rather than
-        # inheriting the host JVM timezone, which would shift session bounds
-        # (and distort gaps across DST) on non-UTC hosts.
+        # Day and hour boundaries of the event operators (to_date, hour)
+        # and the timestamps Arrow hands to pandas UDFs are read in the
+        # session time zone; pin UTC rather than inheriting the host JVM
+        # timezone, which would shift those bounds on non-UTC hosts.
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")

@@ -231,7 +231,6 @@ def test_langid_and_quality(spark, docs):
 def test_multimodal_plumbing(spark):
     from openaip_yaixm_to_geojson_spark.operators.multimodal import (
         extract_features,
-        real_image_decoder,
         synth_media,
     )
 
@@ -244,8 +243,6 @@ def test_multimodal_plumbing(spark):
     assert {r["media_id"]: r["feature"] for r in feats} == {
         r["media_id"]: r["feature"] for r in again
     }
-    with pytest.raises(NotImplementedError):
-        real_image_decoder(b"xx", "image")
 
 
 def test_checkpoint_resume(spark, tmp_path):
@@ -884,30 +881,6 @@ def test_interval_join_boundaries_and_overlap(spark):
     }
 
 
-def test_resize_images_block_mean(spark):
-    """The mapInPandas resize must equal a direct NumPy block-mean on the
-    same fake pixels; non-divisible targets refuse loudly."""
-    from openaip_yaixm_to_geojson_spark.operators.multimodal import (
-        _fake_pixels,
-        resize_images,
-        synth_media,
-    )
-
-    media = synth_media(spark, 30)
-    out = {r["media_id"]: r for r in resize_images(media, out_w=8, out_h=8).collect()}
-    rows = media.where(F.col("kind") == "image").collect()
-    assert len(out) == len(rows) > 0
-    for r in rows:
-        px = _fake_pixels(bytes(r["payload"]), r["meta"]["width"], r["meta"]["height"]).astype(float)
-        expect = px.reshape(8, 8, 8, 8).mean(axis=(1, 3))
-        got = out[r["media_id"]]
-        assert got["px_mean"] == expect.mean()
-        assert bytes(got["resized"]) == np.rint(expect).astype(np.uint8).tobytes()
-
-    with pytest.raises(Exception, match="divisible"):
-        resize_images(media, out_w=7, out_h=8).collect()
-
-
 def test_sample_frames_indices_and_content(spark):
     from openaip_yaixm_to_geojson_spark.operators.multimodal import (
         sample_frames,
@@ -1197,37 +1170,6 @@ def test_synth_media_real_payloads_are_real_formats(spark):
         kind, payload = rows[r["media_id"]]
         expect = real_media_features(payload, kind)
         assert np.array_equal(np.asarray(r["feature"], dtype=np.float32), expect)
-
-
-def test_resize_images_over_real_ppm_decode(spark):
-    """The block-mean resize runs over REAL decoded PPM pixels (red
-    channel): operator output equals a local NumPy recompute from
-    decode_ppm on the same payloads."""
-    import numpy as np
-
-    from openaip_yaixm_to_geojson_spark.operators.multimodal import (
-        decode_ppm,
-        resize_images,
-        synth_media_real,
-    )
-
-    def red_channel(payload: bytes, w: int, h: int) -> np.ndarray:
-        px = decode_ppm(payload)
-        assert px.shape == (h, w, 3)
-        return px[:, :, 0]
-
-    media = synth_media_real(spark, 24)
-    payloads = {
-        r["media_id"]: bytes(r["payload"])
-        for r in media.where("kind = 'image'").collect()
-    }
-    out = resize_images(media, out_w=4, out_h=4, decoder=red_channel).collect()
-    assert {r["media_id"] for r in out} == set(payloads)
-    for r in out:
-        px = decode_ppm(payloads[r["media_id"]])[:, :, 0].astype(np.float64)
-        small = px.reshape(4, 2, 4, 2).mean(axis=(1, 3))
-        assert bytes(r["resized"]) == np.rint(small).astype(np.uint8).tobytes()
-        assert r["px_mean"] == float(small.mean())
 
 
 def test_snapshot_diff_classifies_planted_changes(spark):

@@ -97,49 +97,6 @@ def test_interval_join_explodes_interval_side_only(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_range_clustered_write_prunes_files(spark, pages, tmp_path):
-    """Range-clustered layout: files carry DISJOINT cell ranges (the
-    Z-order-style clustering contract) and a cell-range scan pushes its
-    predicate into the parquet reader."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from openaip_yaixm_to_geojson_spark.plans.layout import (
-        clustered_cell_scan,
-        write_range_clustered,
-    )
-
-    out = str(tmp_path / "clustered")
-    write_range_clustered(pages, out, n_files=4)
-    # per-file cell ranges must not overlap
-    ranges = []
-    for name in os.listdir(out):
-        if name.endswith(".parquet"):
-            stats = (
-                spark.read.parquet(os.path.join(out, name))
-                .agg(F.min("cell").alias("lo"), F.max("cell").alias("hi"), F.count(F.lit(1)).alias("n"))
-                .collect()[0]
-            )
-            if stats["n"]:
-                ranges.append((stats["lo"], stats["hi"]))
-    ranges.sort()
-    assert len(ranges) >= 2
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # disjoint (boundary cell may repeat at the edge)
-
-    lo, hi = ranges[0]
-    scan = clustered_cell_scan(spark, out, lo, hi)
-    plan = plan_of(scan)
-    # r7: InferFiltersFromConstraints is excluded (plans/session.py), so the
-    # redundant IsNotNull no longer precedes the range in PushedFilters; the
-    # load-bearing property is the RANGE reaching the parquet scan.
-    assert "PushedFilters: [GreaterThanOrEqual(cell" in plan
-    # correctness: the pruned scan returns exactly the rows in range
-    full = spark.read.parquet(out).where((F.col("cell") >= lo) & (F.col("cell") <= hi))
-    assert scan.count() == full.count() > 0
-
-
 def test_aqe_skew_join_splits_hot_partition(spark):
     """The engine's documented skew backstop: with a 95%-hot join key and
     thresholds scaled to fixture size, AQE must mark the sort-merge join

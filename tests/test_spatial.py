@@ -314,6 +314,21 @@ def test_salted_join_under_real_skew(spark, polygons, monkeypatch):
     assert broadcast_rows >= 20_000  # every page is inside at least one polygon
 
 
+def test_salt_plan_oracle_reads_engine_constants(monkeypatch):
+    """The salt_plan gate oracle reads the join resolution and the rows per
+    task from operators/spatial at call time, so a change of either
+    constant moves the engine and its oracle together."""
+    from openaip_yaixm_to_geojson_spark import oracle
+    from openaip_yaixm_to_geojson_spark.operators import spatial as spatial_mod
+
+    monkeypatch.setattr(spatial_mod, "ROWS_PER_TASK", 1_000)
+    monkeypatch.setattr(spatial_mod, "DEFAULT_JOIN_RES", 11)
+    sql = oracle.sql_salt_plan()
+    assert "(hottest_rows + 999) // 1000" in sql
+    assert "2000000" not in sql
+    assert oracle.cell_id_sql("lon", "lat", 11) in sql
+
+
 def test_polygon_cover_table_matches_driver(spark, polygons):
     """The distributed cover (polyfill UDF over a polygons TABLE) produces
     the identical (cell, poly_id, edges) rows to the driver-loop cover, at

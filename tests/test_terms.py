@@ -507,39 +507,6 @@ def test_json_roundtrip_escaping(spark):
     assert r["first_word"] == "he" and r["last_word"] == "café"
 
 
-def test_jsonl_roundtrip_byte_identity(spark, tmp_path):
-    from openaip_yaixm_to_geojson_spark.sources.corpus_io import read_jsonl, write_jsonl
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    extra = spark.createDataFrame(
-        [(10**9, 'quote " back\\slash café 中文', "zz", "s", 5)],
-        "doc_id bigint, text string, lang string, source string, n_chars bigint",
-    )
-    all_docs = docs.unionByName(extra)
-    out = str(tmp_path / "corpus.jsonl")
-    write_jsonl(all_docs, out)
-    back = read_jsonl(spark, out)
-    assert back.exceptAll(all_docs).count() == 0 and all_docs.exceptAll(back).count() == 0
-
-
-def test_lang_partitioned_scan_prunes_partitions(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from openaip_yaixm_to_geojson_spark.sources.corpus_io import write_lang_partitioned
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = str(tmp_path / "by_lang")
-    write_lang_partitioned(docs, out)
-    scan = spark.read.parquet(out).where(F.col("lang") == "en")
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    # r7: InferFiltersFromConstraints is excluded (plans/session.py), so no
-    # leading isnotnull; the load-bearing property is the lang EQUALITY
-    # reaching PartitionFilters (partition pruning, not a data filter)
-    assert "PartitionFilters: [" in plan and "= en)]" in plan.split("PartitionFilters: [")[1].split("]")[0] + "]"
-    ref = docs.where(F.col("lang") == "en")
-    assert scan.count() == ref.count() > 0
-
-
 def test_udtf_matches_codegen_on_empty_text(spark):
     from openaip_yaixm_to_geojson_spark.operators.text import chunk_documents
 
@@ -549,22 +516,6 @@ def test_udtf_matches_codegen_on_empty_text(spark):
     want = _chunk_spec(docs, size=2, stride=1)
     assert _chunk_rows(chunk_documents(docs, size=2, stride=1)) == want
     assert (0, 0, 0, 1, "") in want and (1, 0, 0, 1, "") in want
-
-
-def test_read_jsonl_failfast_on_corrupt_line(spark, tmp_path):
-    import os
-
-    import pytest as _pytest
-
-    from openaip_yaixm_to_geojson_spark.sources.corpus_io import read_jsonl
-
-    d = str(tmp_path / "bad")
-    os.makedirs(d)
-    with open(os.path.join(d, "part-0.json"), "w") as fh:
-        fh.write('{"doc_id": 1, "text": "ok", "lang": "en", "source": "s", "n_chars": 2}\n')
-        fh.write('{"doc_id": 2, "text": TRUNCATED\n')
-    with _pytest.raises(Exception):
-        read_jsonl(spark, d).collect()
 
 
 def test_sliding_windows_near_epoch_floor_alignment(spark):
@@ -654,33 +605,14 @@ def test_quantization_error_half_step_bound(spark):
         assert r["max_abs_err"] <= r["scale"] / 254.0 * (1 + 1e-9) + 1e-12
 
 
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    import os
-
-    from openaip_yaixm_to_geojson_spark.plans.layout import compact_parquet
-
-    src = str(tmp_path / "fragmented")
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    docs.repartition(16).write.parquet(src)  # 16 tiny files
-    assert sum(1 for n in os.listdir(src) if n.endswith(".parquet")) == 16
-    out = str(tmp_path / "compacted")
-    produced = compact_parquet(spark, src, out, target_file_bytes=64 * 1024 * 1024)
-    assert produced == 1  # tiny input -> single file
-    back = spark.read.parquet(out)
-    assert back.exceptAll(docs).count() == 0 and docs.exceptAll(back).count() == 0
-
-
-def test_quantization_error_plan_no_reinline_and_inplace_guard(spark, tmp_path):
+def test_quantization_error_plan_no_reinline(spark):
     from openaip_yaixm_to_geojson_spark.operators.similarity import quantization_error
-    from openaip_yaixm_to_geojson_spark.plans.layout import compact_parquet
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     plan = quantization_error(emb)._jdf.queryExecution().executedPlan().toString()
     # exactly two array_max: the scale compute and the error max — a
     # CollapseProject regression would inline scale per element
     assert plan.count("array_max") == 2
-    with pytest.raises(ValueError, match="distinct out_dir"):
-        compact_parquet(spark, str(tmp_path / "d"), str(tmp_path / "d"))
 
 
 def test_repeated_span_operators_hand_case(spark):

@@ -1,9 +1,10 @@
 """Spark-free checks on the scripts around the package: every package
 import in the entry points, tools and benchmark harness resolves, every
 tool the run instructions name exists, every operator the README names
-resolves, the core operators take no speed-only tuning parameters, the
-shared bench suite matches bench.py's, and the test-data scaler handles
-its smallest factor."""
+resolves, the core operators take no speed-only tuning parameters, every
+public package function has a caller outside the tests, the shared bench
+suite matches bench.py's, and the test-data scaler handles its smallest
+factor."""
 
 import ast
 import importlib
@@ -114,6 +115,48 @@ def test_core_operators_take_no_tuning_knobs():
             found += [f"{module}.{name}({p})" for p in sorted(params & removed)]
     assert sum(map(len, _NO_TUNING_KNOBS.values())) == 15
     assert found == []
+
+
+# Public functions whose only callers are tests, each kept because it is
+# the reference twin of a production path (or the product's own sink):
+# module -> {function: the production path it pins}.
+_CALLER_ALLOWLIST = {
+    "operators/dedup.py": {"simhash64_expr": "the Arrow kernel dedup.simhash64, pinned bit-equal"},
+    "functions/geohash.py": {"geohash_py": "geohash_chars_sql, behind tiles.geohash_counts"},
+    "functions/cellgrid.py": {
+        "morton_np": "morton_terms, the z-order key of the spatial layout query",
+        "disk": "the Chebyshev offsets of knn._annulus",
+    },
+    "operators/convert.py": {"write_geojson_ndjson": "the distributed GeoJSON sink of the converter output"},
+}
+
+
+def test_package_functions_have_a_non_test_caller():
+    """Every public top-level function of the package is used (as a name,
+    an attribute or a `from ... import`) in some non-test source, other than
+    inside its own definition. Code that only tests reach fails here unless
+    the allowlist names the production path it pins."""
+    defined, used = {}, set()
+    for path in sorted((REPO / PACKAGE).rglob("*.py")) + SCRIPTS:
+        tree = ast.parse(path.read_text(), str(path))
+        in_package = path.is_relative_to(REPO / PACKAGE)
+        for top in tree.body:
+            own = top.name if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)) else None
+            if own and in_package and not own.startswith("_"):
+                defined[f"{path.relative_to(REPO / PACKAGE).as_posix()}:{own}"] = own
+            for node in ast.walk(top):
+                if isinstance(node, ast.ImportFrom):
+                    used.update(a.name for a in node.names)
+                elif isinstance(node, ast.Name) and node.id != own:
+                    used.add(node.id)
+                elif isinstance(node, ast.Attribute) and node.attr != own:
+                    used.add(node.attr)
+    allowed = {f"{m}:{f}" for m, fs in _CALLER_ALLOWLIST.items() for f in fs}
+    assert allowed <= set(defined), sorted(allowed - set(defined))
+    assert len(defined) > 400
+    uncalled = sorted(k for k, name in defined.items() if name not in used and k not in allowed)
+    assert not uncalled, "no caller outside the tests: " + ", ".join(uncalled)
+    assert sorted(k for k in allowed if defined[k] in used) == []
 
 
 def _bench_timed_names() -> list[str]:
