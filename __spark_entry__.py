@@ -110,8 +110,9 @@ def q_spatial_join_partitioned(spark, sf_dir):
 
 def q_spatial_join_table(spark, sf_dir):
     """Polygon-TABLE path: cover built by a distributed pandas-UDF polyfill
-    + explode, PIP rings attached via a poly_id join — nothing polygon-
-    shaped on the driver (the 100-TB shape; same rows as spatial_join)."""
+    + explode, each cover row carrying its cell's band edges for the PIP
+    refine — nothing polygon-shaped on the driver (the 100-TB shape; same
+    rows as spatial_join)."""
     from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df
 
     pages = pages_from_documents(spark, sf_dir)
@@ -2342,9 +2343,9 @@ def q_pipeline_corpus_stats(spark, sf_dir):
 
 
 def q_pipeline_chunks(spark, sf_dir):
-    """Corpus-pipeline CHUNK export stage: context windows (size 64,
-    stride 48) over the stored corpus stage, read back from parquet —
-    gates the resumable-pipeline path end to end."""
+    """Corpus-pipeline CHUNK export stage: context windows (CHUNK_SIZE and
+    CHUNK_STRIDE in plans/pipeline.py) over the stored corpus stage, read
+    back from parquet — gates the resumable-pipeline path end to end."""
     return _pipeline_stage(spark, sf_dir, "chunks").select(
         "key", "chunk_id", "chunk_start", "chunk_tokens", "chunk_text"
     )
@@ -2352,7 +2353,8 @@ def q_pipeline_chunks(spark, sf_dir):
 
 def q_pipeline_packed(spark, sf_dir):
     """Corpus-pipeline PACKED export stage: fixed-capacity token-stream
-    windows (capacity 512, 8 streams) over the stored corpus stage."""
+    windows (PACK_CAPACITY, PACK_STREAMS in plans/pipeline.py) over the
+    stored corpus stage."""
     return _pipeline_stage(spark, sf_dir, "packed").select(
         "key", "stream", "tok_offset", "n_tokens", "window_id"
     )
@@ -2753,8 +2755,8 @@ def oracle_sql() -> dict[str, str]:
         "length_winsorize": oracle.sql_length_winsorize(),
         "source_diversity": oracle.sql_source_diversity(),
         "pipeline_corpus_stats": oracle.sql_pipeline_corpus_stats(),
-        "pipeline_chunks": oracle.sql_pipeline_chunks(size=64, stride=48),
-        "pipeline_packed": oracle.sql_pipeline_packed(capacity=512, n_streams=8),
+        "pipeline_chunks": oracle.sql_pipeline_chunks(),
+        "pipeline_packed": oracle.sql_pipeline_packed(),
         "triangle_count": oracle.sql_triangle_count(),
         "profile_documents": oracle.sql_profile_documents(),
         "merge_upsert": oracle.sql_merge_upsert(),

@@ -2,7 +2,7 @@
 
 Neither `h3` nor `s2` is available in this environment, so the engine ships
 its own hierarchical lat/lon grid with the same API shape: `encode`,
-`cover`, `ring`, `parent`. Resolution r has square cells of
+`cover`, `disk`, `parent`. Resolution r has square cells of
 ``360 / 2^r`` degrees; a cell id packs ``(res, y, x)`` into one BIGINT:
 
     id = ((res * 2^29) + y) * 2^29 + x        (fits int64 for res <= 26)
@@ -87,20 +87,6 @@ def parent(cell: int) -> int:
     if res == 0:
         raise ValueError("res-0 cell has no parent")
     return ((res - 1) * _SHIFT + (y >> 1)) * _SHIFT + (x >> 1)
-
-
-def ring(cell: int, k: int) -> list[int]:
-    """Chebyshev ring: cells at exactly grid-distance k (k=0 -> the cell)."""
-    res, x, y = decode(cell)
-    if k == 0:
-        return [cell]
-    out = []
-    for dx in range(-k, k + 1):
-        for dy in range(-k, k + 1):
-            if max(abs(dx), abs(dy)) != k:
-                continue
-            out.append((res * _SHIFT + (y + dy)) * _SHIFT + (x + dx))
-    return out
 
 
 def disk(cell: int, k: int) -> list[int]:

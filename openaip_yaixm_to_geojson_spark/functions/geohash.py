@@ -53,25 +53,23 @@ def geohash_idx_sql(lat_expr: str, lon_expr: str, precision: int) -> tuple[str, 
     return idx(lon_expr, 180, 360, 1 << nlon), idx(lat_expr, 90, 180, 1 << nlat)
 
 
-def geohash_interleave_sql(
-    precision: int, dialect: str, lon_col: str = "gh_lon_idx", lat_col: str = "gh_lat_idx"
-) -> str:
+def geohash_interleave_sql(precision: int, dialect: str) -> str:
     """Interleaved bit value: bit k of the hash (MSB first) comes from the
     lon index for even k, lat for odd — the standard geohash order."""
     nbits, nlon, nlat = _bit_widths(precision)
     terms = []
     for k in range(nbits):
-        src, b = (lon_col, nlon - 1 - k // 2) if k % 2 == 0 else (lat_col, nlat - 1 - (k - 1) // 2)
+        src, b = ("gh_lon_idx", nlon - 1 - k // 2) if k % 2 == 0 else ("gh_lat_idx", nlat - 1 - (k - 1) // 2)
         terms.append(f"(({_shr(src, b, dialect)} & 1) * CAST({1 << (nbits - 1 - k)} AS BIGINT))")
     return "(" + " + ".join(terms) + ")"
 
 
-def geohash_chars_sql(precision: int, dialect: str, i_col: str = "gh_i") -> str:
+def geohash_chars_sql(precision: int, dialect: str) -> str:
     """Base32 characters from the interleaved value, 5 bits per char."""
     nbits = 5 * precision
     chars = [
         f"substring('{GEOHASH_ALPHABET}', "
-        f"CAST(({_shr(i_col, nbits - 5 * (c + 1), dialect)} & 31) + 1 AS INT), 1)"
+        f"CAST(({_shr('gh_i', nbits - 5 * (c + 1), dialect)} & 31) + 1 AS INT), 1)"
         for c in range(precision)
     ]
     return "concat(" + ", ".join(chars) + ")"

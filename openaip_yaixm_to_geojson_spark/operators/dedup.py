@@ -46,14 +46,14 @@ def word_shingles(text: Column, n: int = 3, distinct: bool = True) -> Column:
     return F.array_distinct(grams) if distinct else grams
 
 
-def exact_dedup(documents: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
+def exact_dedup(documents: DataFrame) -> DataFrame:
     """Exact duplicate groups by content digest: one row per distinct text,
     keeping the smallest key as representative plus the duplicate count."""
     return (
-        documents.select(F.md5(F.col(text_col)).alias("digest"), F.col(key_col))
+        documents.select(F.md5(F.col("text")).alias("digest"), F.col("doc_id"))
         .groupBy("digest")
         .agg(
-            F.min(key_col).alias("representative"),
+            F.min("doc_id").alias("representative"),
             F.count(F.lit(1)).alias("n_copies"),
         )
     )
@@ -106,9 +106,7 @@ def minhash_from_hashes(shingle_hashes: Column, num_hashes: int = 16) -> Column:
     )
 
 
-def shingled_documents(
-    documents: DataFrame, text_col: str = "text", key_col: str = "doc_id", shingle_n: int = 3
-) -> DataFrame:
+def shingled_documents(documents: DataFrame, shingle_n: int = 3) -> DataFrame:
     """(key, shingles, sh_hashes) with both arrays materialized (cached) so
     downstream MinHash/Jaccard consumers compute shingles and their md5
     base hashes exactly once. At cluster scale MEMORY_AND_DISK spills;
@@ -118,8 +116,8 @@ def shingled_documents(
     documents = fan_out(documents)  # shingling + md5s dominate on narrow scans
     shingled = (
         documents.select(
-            F.col(key_col).alias("key"),
-            word_shingles(F.col(text_col), shingle_n).alias("shingles"),
+            F.col("doc_id").alias("key"),
+            word_shingles(F.col("text"), shingle_n).alias("shingles"),
         )
         .where(F.size("shingles") > 0)
         .withColumn("sh_hashes", shingle_hash_col(F.col("shingles")))
@@ -149,8 +147,6 @@ def lsh_bands(signature: Column, bands: int, rows_per_band: int) -> Column:
 
 def minhash_lsh_pairs(
     documents: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
     num_hashes: int = 16,
     bands: int = 8,
     shingle_n: int = 3,
@@ -159,7 +155,7 @@ def minhash_lsh_pairs(
     """Candidate near-duplicate pairs via banded MinHash, verified with the
     true shingle Jaccard. Returns (key_a, key_b, jaccard), key_a < key_b."""
     rows_per_band = num_hashes // bands
-    shingled = shingled_documents(documents, text_col, key_col, shingle_n)
+    shingled = shingled_documents(documents, shingle_n)
     sigs = shingled.select(
         "key",
         F.size("shingles").alias("n_sh"),
@@ -225,12 +221,7 @@ def minhash_lsh_pairs(
 
 
 def ngram_jaccard_pairs(
-    documents: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    block_on: Column | None = None,
+    documents: DataFrame, shingle_n: int = 3, threshold: float = 0.5, block_on: Column | None = None
 ) -> DataFrame:
     """Direct n-gram Jaccard similarity for pairs sharing a blocking key;
     exact verification path used to validate the LSH variant.
@@ -254,8 +245,8 @@ def ngram_jaccard_pairs(
     # the shingle build ran once per side (r4 plan audit)
     docs = (
         documents.select(
-            F.col(key_col).alias("key"),
-            word_shingles(F.col(text_col), shingle_n).alias("shingles"),
+            F.col("doc_id").alias("key"),
+            word_shingles(F.col("text"), shingle_n).alias("shingles"),
         )
         .where(F.size("shingles") > 0)
         .localCheckpoint()
@@ -493,11 +484,7 @@ def simhash_bands(sim: Column, n_bands: int, n_bits: int = 16) -> list[tuple[int
 
 
 def simhash_neardup_pairs(
-    documents: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    max_hamming: int = 2,
-    n_bits: int = 16,
+    documents: DataFrame, max_hamming: int = 2, n_bits: int = 16
 ) -> DataFrame:
     """Pairs whose n_bits SimHash differs in <= max_hamming bits.
 
@@ -520,12 +507,12 @@ def simhash_neardup_pairs(
             f"max_hamming must be in [0, {n_bits - 1}] for a {n_bits}-bit SimHash; got {max_hamming}"
         )
     n_bands = max_hamming + 1
-    sim = simhash16(F.col(text_col)) if n_bits == 16 else simhash64(F.col(text_col))
+    sim = simhash16(F.col("text")) if n_bits == 16 else simhash64(F.col("text"))
     # materialize the sketches: the sim column feeds the band array AND the
     # output, on BOTH sides of the self-join — without the checkpoint the
     # sketch computation (64 folds, or the Arrow kernel) executed up to 4x
     # over the corpus (r4 plan audit)
-    docs = documents.select(F.col(key_col).alias("key"), sim.alias("sim")).localCheckpoint()
+    docs = documents.select(F.col("doc_id").alias("key"), sim.alias("sim")).localCheckpoint()
     # arithmetic shiftright + mask extracts band bits correctly even when the
     # 64-bit sketch is negative (bit 63 set); bigint keys cover bands > 31 bits
     key_type = "int" if n_bits == 16 else "bigint"
@@ -557,8 +544,6 @@ def simhash_neardup_pairs(
 def lsh_recall_monitor(
     documents: DataFrame,
     sample_mod: int = 4,
-    text_col: str = "text",
-    key_col: str = "doc_id",
     num_hashes: int = 16,
     bands: int = 8,
     jaccard_threshold: float = 0.5,
@@ -580,12 +565,12 @@ def lsh_recall_monitor(
     DataFrames (three one-row aggregates cross-joined, nothing collected).
     The sample is localCheckpoint-ed: it feeds three consumers and would
     otherwise rescan the corpus three times (the fan-out-reuse trap)."""
-    hex8 = F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10).cast("bigint")
+    hex8 = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("bigint")
     sample = documents.where(hex8 % F.lit(sample_mod) == 0).localCheckpoint()
 
     docs = sample.select(
-        F.col(key_col).alias("key"),
-        word_shingles(F.col(text_col)).alias("shingles"),
+        F.col("doc_id").alias("key"),
+        word_shingles(F.col("text")).alias("shingles"),
     ).where(F.size("shingles") > 0)
     jaccard = F.size(F.array_intersect("a.shingles", "b.shingles")) / F.size(
         F.array_union("a.shingles", "b.shingles")
@@ -597,8 +582,6 @@ def lsh_recall_monitor(
     )
     found = minhash_lsh_pairs(
         sample,
-        text_col=text_col,
-        key_col=key_col,
         num_hashes=num_hashes,
         bands=bands,
         jaccard_threshold=jaccard_threshold,
@@ -614,11 +597,7 @@ def lsh_recall_monitor(
 
 
 def edit_distance_pairs(
-    documents: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    max_distance: int = 20,
-    block_chars: int = 16,
+    documents: DataFrame, max_distance: int = 20, block_chars: int = 16
 ) -> DataFrame:
     """Blocked Levenshtein near-duplicate pairs: candidate pairs share an
     untouched margin — identical first `block_chars` chars OR identical
@@ -642,18 +621,18 @@ def edit_distance_pairs(
     before the DP runs, and Spark's threshold-ed levenshtein bails out of
     the DP past max_distance (returns -1)."""
     documents = fan_out(documents)
-    n = F.length(F.col(text_col))
+    n = F.length(F.col("text"))
     long_keys = F.array(
-        F.concat(F.lit("P"), F.md5(F.substring(F.col(text_col), 1, block_chars))),
-        F.concat(F.lit("S"), F.md5(F.substring(F.col(text_col), -block_chars, block_chars))),
+        F.concat(F.lit("P"), F.md5(F.substring(F.col("text"), 1, block_chars))),
+        F.concat(F.lit("S"), F.md5(F.substring(F.col("text"), -block_chars, block_chars))),
     )
     short_keys = F.array(
         F.concat(F.lit("L"), F.floor(n / F.lit(8)).cast("string")),
         F.concat(F.lit("L"), F.floor((n + F.lit(4)) / F.lit(8)).cast("string")),
     )
     docs = documents.select(
-        F.col(key_col).alias("key"),
-        F.col(text_col).alias("txt"),
+        F.col("doc_id").alias("key"),
+        F.col("text").alias("txt"),
         n.alias("n"),
         F.explode(
             F.array_distinct(F.when(n >= block_chars, long_keys).otherwise(short_keys))
@@ -692,9 +671,7 @@ def edit_distance_pairs(
     )
 
 
-def normalized_dedup(
-    documents: DataFrame, text_col: str = "text", key_col: str = "doc_id"
-) -> DataFrame:
+def normalized_dedup(documents: DataFrame) -> DataFrame:
     """Normalized-exact duplicate groups — the 'fuzzy exact' layer every
     corpus pipeline runs between byte-exact dedup and MinHash: casefold,
     strip everything but letters/digits/whitespace, collapse whitespace
@@ -706,27 +683,25 @@ def normalized_dedup(
     groups exact dedup would have split)."""
     norm = F.trim(
         F.regexp_replace(
-            F.regexp_replace(F.lower(F.col(text_col)), r"[^a-z0-9\s]", ""), r"\s+", " "
+            F.regexp_replace(F.lower(F.col("text")), r"[^a-z0-9\s]", ""), r"\s+", " "
         )
     )
     return (
         documents.select(
             F.md5(norm).alias("digest"),
-            F.col(key_col),
-            F.md5(F.col(text_col)).alias("raw_digest"),
+            F.col("doc_id"),
+            F.md5(F.col("text")).alias("raw_digest"),
         )
         .groupBy("digest")
         .agg(
-            F.min(key_col).alias("representative"),
+            F.min("doc_id").alias("representative"),
             F.count(F.lit(1)).alias("n_copies"),
             F.count_distinct("raw_digest").alias("n_raw_variants"),
         )
     )
 
 
-def cross_source_dupes(
-    documents: DataFrame, text_col: str = "text", source_col: str = "source"
-) -> DataFrame:
+def cross_source_dupes(documents: DataFrame) -> DataFrame:
     """Cross-source duplicate report: texts appearing in >= 2 DISTINCT
     sources — the train/eval leakage signal a mixture build checks before
     weighting sources as if they were independent. Output (digest,
@@ -737,7 +712,7 @@ def cross_source_dupes(
     distinct-source count is COUNT(*) (the repo-wide rule), then one
     digest-level aggregation; text never shuffles (md5 keys only)."""
     ds = (
-        documents.select(F.md5(F.col(text_col)).alias("digest"), F.col(source_col).alias("src"))
+        documents.select(F.md5(F.col("text")).alias("digest"), F.col("source").alias("src"))
         .groupBy("digest", "src")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -753,12 +728,7 @@ def cross_source_dupes(
 
 
 def containment_pairs(
-    documents: DataFrame,
-    text_col: str = "text",
-    key_col: str = "doc_id",
-    threshold: float = 0.8,
-    k_rarest: int = 4,
-    df_cap: int = 50,
+    documents: DataFrame, threshold: float = 0.8, k_rarest: int = 4, df_cap: int = 50
 ) -> DataFrame:
     """ASYMMETRIC near-dup: ordered pairs (a, b) where containment(A in B)
     = |shingles(A) n shingles(B)| / |shingles(A)| >= threshold — the
@@ -802,7 +772,7 @@ def containment_pairs(
 
     documents = fan_out(documents)
     ds = (
-        exploded_word_ngrams(documents, 3, key_col, text_col, distinct=True, out_col="s")
+        exploded_word_ngrams(documents, 3, distinct=True, out_col="s")
         .select(F.col("key").alias("doc"), F.md5("s").alias("sh"))
         .repartition("sh")
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -921,7 +891,7 @@ def dedup_report(documents: DataFrame, jaccard_threshold: float = 0.5) -> DataFr
     )
 
 
-def doc_novelty(documents: DataFrame, text_col: str = "text", key_col: str = "doc_id") -> DataFrame:
+def doc_novelty(documents: DataFrame) -> DataFrame:
     """Per-document contribution novelty: the fraction of a doc's
     distinct shingles whose FIRST owner (smallest key over the whole
     corpus) is the doc itself — the dataset-curation signal for ordering
@@ -936,7 +906,7 @@ def doc_novelty(documents: DataFrame, text_col: str = "text", key_col: str = "do
     first-owner aggregation and the join-back -> localCheckpoint once."""
     ds = (
         documents.select(
-            F.col(key_col).alias("doc"), F.explode(word_shingles(F.col(text_col))).alias("s")
+            F.col("doc_id").alias("doc"), F.explode(word_shingles(F.col("text"))).alias("s")
         )
         .select("doc", F.md5("s").alias("sh"))
         .distinct()
@@ -959,12 +929,7 @@ def doc_novelty(documents: DataFrame, text_col: str = "text", key_col: str = "do
     )
 
 
-def dedup_keep_best(
-    documents: DataFrame,
-    pairs: DataFrame | None = None,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def dedup_keep_best(documents: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
     """Canonical near-dup dedup OUTPUT: connected components over the
     MinHash pair graph, then keep exactly ONE document per cluster — the
     best by (quality_score DESC, n_chars DESC, md5(text) ASC, key ASC), a
@@ -985,12 +950,12 @@ def dedup_keep_best(
 
     if pairs is None:
         pairs = minhash_lsh_pairs(documents, jaccard_threshold=0.5)
-    clusters = duplicate_clusters(pairs, documents=documents, key_col=key_col)
+    clusters = duplicate_clusters(pairs, documents=documents)
     scored = documents.select(
-        F.col(key_col).alias("key"),
-        quality_struct(F.col(text_col))["quality_score"].alias("quality_score"),
-        F.length(text_col).cast("bigint").alias("n_chars"),
-        F.md5(text_col).alias("tie_md5"),
+        F.col("doc_id").alias("key"),
+        quality_struct(F.col("text"))["quality_score"].alias("quality_score"),
+        F.length("text").cast("bigint").alias("n_chars"),
+        F.md5("text").alias("tie_md5"),
     )
     ranked = clusters.join(scored, "key").withColumn(
         "rn",
@@ -1009,7 +974,7 @@ def dedup_keep_best(
         .join(members, "cluster_id")
         .select(
             "cluster_id",
-            F.col("key").alias(key_col),
+            F.col("key").alias("doc_id"),
             "n_members",
             "quality_score",
         )
@@ -1017,10 +982,7 @@ def dedup_keep_best(
 
 
 def duplicate_clusters_star(
-    pairs: DataFrame,
-    documents: DataFrame | None = None,
-    key_col: str = "doc_id",
-    max_iters: int = 20,
+    pairs: DataFrame, documents: DataFrame | None = None, max_iters: int = 20
 ) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
     (Kiveris et al.) — the industrial-scale CC algorithm beside
@@ -1107,7 +1069,7 @@ def duplicate_clusters_star(
     )
     out = labels.union(roots)
     if documents is not None:
-        nodes = documents.select(F.col(key_col).alias("key"))
+        nodes = documents.select(F.col("doc_id").alias("key"))
         singles = (
             nodes.join(out.select("key"), "key", "left_anti")
             .select("key", F.col("key").alias("cluster_id"))
@@ -1116,7 +1078,7 @@ def duplicate_clusters_star(
     return out.groupBy("key").agg(F.min("cluster_id").alias("cluster_id"))
 
 
-def dedup_method_agreement(documents: DataFrame, key_col: str = "doc_id") -> DataFrame:
+def dedup_method_agreement(documents: DataFrame) -> DataFrame:
     """Dedup-method QA monitor: compare the PAIR SETS produced by MinHash
     LSH (Jaccard-verified) and banded 64-bit SimHash — the check a
     pipeline runs before switching near-dup detectors. One row:
@@ -1129,9 +1091,7 @@ def dedup_method_agreement(documents: DataFrame, key_col: str = "doc_id") -> Dat
     ordered (key_a, key_b) pair key — pair-set-sized, far below corpus
     size — then one global rollup."""
     mh = minhash_lsh_pairs(documents, jaccard_threshold=0.5).select("key_a", "key_b")
-    sh = simhash_neardup_pairs(documents, key_col=key_col, max_hamming=3, n_bits=64).select(
-        "key_a", "key_b"
-    )
+    sh = simhash_neardup_pairs(documents, max_hamming=3, n_bits=64).select("key_a", "key_b")
     j = (
         mh.select("key_a", "key_b", F.lit(1).alias("in_mh"))
         .join(

@@ -165,13 +165,7 @@ def asof_join(
 
 
 def interval_join(
-    points: DataFrame,
-    intervals: DataFrame,
-    by: str = "key",
-    ts_col: str = "t",
-    start_col: str = "session_start",
-    end_col: str = "session_end",
-    bucket_seconds: int = 3600,
+    points: DataFrame, intervals: DataFrame, by: str = "key", bucket_seconds: int = 3600
 ) -> DataFrame:
     """Range/interval containment join (point.t BETWEEN interval.start AND
     interval.end, same key) via time-bucket binning — the 1-D analogue of
@@ -190,13 +184,13 @@ def interval_join(
     same query as a native IEJoin — an independent strategy) sees identical
     semantics. Points inside overlapping intervals match each one."""
     b = F.lit(int(bucket_seconds))
-    pt_bucket = (F.col(ts_col) - F.col(ts_col) % b).alias("_bucket")
+    pt_bucket = (F.col("t") - F.col("t") % b).alias("_bucket")
     iv = intervals.withColumn(
         "_bucket",
         F.explode(
             F.sequence(
-                F.col(start_col) - F.col(start_col) % b,
-                F.col(end_col) - F.col(end_col) % b,
+                F.col("session_start") - F.col("session_start") % b,
+                F.col("session_end") - F.col("session_end") % b,
                 b,
             )
         ),
@@ -204,7 +198,7 @@ def interval_join(
     return (
         points.select("*", pt_bucket)
         .join(iv, [by, "_bucket"])
-        .where((F.col(ts_col) >= F.col(start_col)) & (F.col(ts_col) <= F.col(end_col)))
+        .where((F.col("t") >= F.col("session_start")) & (F.col("t") <= F.col("session_end")))
         .drop("_bucket")
     )
 

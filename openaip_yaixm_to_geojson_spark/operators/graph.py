@@ -35,14 +35,14 @@ RANK_SCALE = 1_000_000
 LINK_RULES_SQL = ("(src * 7 + 1) % n", "(src * 13 + 2) % n", "src % 10")
 
 
-def synth_link_graph(documents: DataFrame, key_col: str = "doc_id") -> DataFrame:
+def synth_link_graph(documents: DataFrame) -> DataFrame:
     """(src, dst) edges derived purely from doc ids via LINK_RULES_SQL.
     N comes from a broadcast 1-row count aggregate, not a driver collect,
     so the derivation stays declarative at any scale."""
     n_df = documents.agg(F.count(F.lit(1)).alias("n"))
     dsts = F.array(*[F.expr(rule) for rule in LINK_RULES_SQL])
     return (
-        documents.select(F.col(key_col).alias("src"))
+        documents.select(F.col("doc_id").alias("src"))
         .crossJoin(F.broadcast(n_df))
         .select("src", F.explode(dsts).alias("dst"))
     )

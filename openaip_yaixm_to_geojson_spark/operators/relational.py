@@ -182,12 +182,7 @@ def profile_table(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-def merge_upsert(
-    base: DataFrame,
-    changes: DataFrame,
-    key_col: str = "doc_id",
-    broadcast_changes: bool = True,
-) -> DataFrame:
+def merge_upsert(base: DataFrame, changes: DataFrame, broadcast_changes: bool = True) -> DataFrame:
     """MERGE INTO semantics without a table format: apply a change set
     (`op` column: 'upsert' | 'delete') to a base snapshot — matched
     upserts update, unmatched upserts insert, deletes drop, untouched
@@ -207,10 +202,10 @@ def merge_upsert(
     (the anti join then shuffles both sides) — plus a union of the
     upsert rows. The oracle recomputes via the full-outer + CASE strategy, so
     both formulations verify each other."""
-    touched = changes.select(key_col).distinct()
+    touched = changes.select("doc_id").distinct()
     if broadcast_changes:
         touched = F.broadcast(touched)
-    survivors = base.join(touched, key_col, "left_anti")
+    survivors = base.join(touched, "doc_id", "left_anti")
     upserts = changes.where(F.col("op") == "upsert").select(*base.columns)
     return survivors.unionByName(upserts)
 
@@ -263,9 +258,7 @@ def snapshot_v2_sql(dialect: str) -> str:
     return f"{base} UNION ALL {added}"
 
 
-def snapshot_diff(
-    old: DataFrame, new: DataFrame, key_col: str = "doc_id", content_col: str = "text"
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     """CDC between two corpus snapshots: (key, change_type) for every
     added / removed / changed document, content compared by md5 so only
     32-char digests travel through the join (never the text payloads).
@@ -276,10 +269,10 @@ def snapshot_diff(
     both sides arrive partition-pruned by the snapshot metadata and the
     join keys inherit the table bucketing."""
     o = old.select(
-        F.col(key_col).alias("key"), F.md5(content_col).alias("oh"), F.lit(True).alias("in_old")
+        F.col("doc_id").alias("key"), F.md5("text").alias("oh"), F.lit(True).alias("in_old")
     )
     n = new.select(
-        F.col(key_col).alias("key"), F.md5(content_col).alias("nh"), F.lit(True).alias("in_new")
+        F.col("doc_id").alias("key"), F.md5("text").alias("nh"), F.lit(True).alias("in_new")
     )
     joined = o.join(n, "key", "full_outer")
     # presence via explicit indicator columns, NEVER digest-nullness:
@@ -468,9 +461,7 @@ def returned_item_revenue(
     )
 
 
-def range_partition_plan(
-    documents: DataFrame, n_bins: int = 8, value_col: str = "n_chars"
-) -> DataFrame:
+def range_partition_plan(documents: DataFrame, n_bins: int = 8) -> DataFrame:
     """Balanced RANGE-PARTITIONER boundary derivation (the planner behind
     range-clustered writes / global sorted output): equi-depth bin edges
     at exact target ranks, computed WITHOUT ranking the corpus.
@@ -492,7 +483,7 @@ def range_partition_plan(
         # sequence(1, 0) counts DOWN in Spark (the _word_ngrams_col trap) —
         # a 1-bin plan is also meaningless; fail loudly
         raise ValueError(f"n_bins must be >= 2, got {n_bins}")
-    hist = documents.groupBy(F.col(value_col).alias("v")).agg(F.count(F.lit(1)).alias("c"))
+    hist = documents.groupBy(F.col("n_chars").alias("v")).agg(F.count(F.lit(1)).alias("c"))
     wcum = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
     cum = hist.select(
         "v",
@@ -525,7 +516,6 @@ def sketch_quantiles(
     documents: DataFrame,
     quantiles: tuple[tuple[int, int], ...] = ((1, 2), (9, 10), (99, 100)),
     width: int = 32,
-    value_col: str = "n_chars",
 ) -> DataFrame:
     """Histogram-sketch quantile ESTIMATES — the mergeable path beside the
     exact order statistics (lang_median_chars/length_quartiles sort or
@@ -544,7 +534,7 @@ def sketch_quantiles(
     from pyspark.sql import Window
 
     hist = (
-        documents.groupBy(F.expr(f"{value_col} div {width}").alias("bin"))
+        documents.groupBy(F.expr(f"n_chars div {width}").alias("bin"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     w = Window.partitionBy().orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)

@@ -46,14 +46,7 @@ def dot_double(a: Column, b: Column) -> Column:
     return F.aggregate(products, F.lit(0.0), lambda acc, p: acc + p)
 
 
-def cosine_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-) -> DataFrame:
+def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 3) -> DataFrame:
     """Exact top-k neighbours per query by dot product (queries broadcast).
 
     Returns (query_id, vec_id, dot, rank). Rank ties break on vec_id so the
@@ -68,11 +61,11 @@ def cosine_topk(
     scored = (
         embeddings.alias("e")
         .crossJoin(F.broadcast(queries.alias("q")))
-        .where(F.col(f"q.{query_id_col}") != F.col(f"e.{id_col}"))
+        .where(F.col("q.query_id") != F.col("e.vec_id"))
         .select(
-            F.col(f"q.{query_id_col}").alias("query_id"),
-            F.col(f"e.{id_col}").alias("vec_id"),
-            dot_double(F.col(f"e.{vec_col}"), F.col("q.qvec")).alias("dot"),
+            F.col("q.query_id").alias("query_id"),
+            F.col("e.vec_id").alias("vec_id"),
+            dot_double(F.col("e.embedding"), F.col("q.qvec")).alias("dot"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("vec_id").asc())
@@ -160,9 +153,6 @@ def lsh_ann_topk(
     k: int = 3,
     n_planes: int = 8,
     multiprobe: bool = True,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: candidates = same LSH bucket, exact re-rank inside.
@@ -178,9 +168,9 @@ def lsh_ann_topk(
     if dim is None:
         # fallback metadata action; callers should pass dim to keep
         # plan-build free of Spark jobs
-        dim = len(embeddings.select(vec_col).first()[0])
+        dim = len(embeddings.select("embedding").first()[0])
     planes = hyperplanes(dim, n_planes)
-    corpus = embeddings.withColumn("bucket", bucket_assign_col(F.col(vec_col), planes))
+    corpus = embeddings.withColumn("bucket", bucket_assign_col(F.col("embedding"), planes))
     probes = queries.withColumn("bucket", bucket_assign_col(F.col("qvec"), planes))
     if multiprobe:
         neighbours = F.array(
@@ -190,11 +180,11 @@ def lsh_ann_topk(
     scored = (
         corpus.alias("e")
         .join(F.broadcast(probes.alias("q")), "bucket")
-        .where(F.col(f"q.{query_id_col}") != F.col(f"e.{id_col}"))
+        .where(F.col("q.query_id") != F.col("e.vec_id"))
         .select(
-            F.col(f"q.{query_id_col}").alias("query_id"),
-            F.col(f"e.{id_col}").alias("vec_id"),
-            dot_double(F.col(f"e.{vec_col}"), F.col("q.qvec")).alias("dot"),
+            F.col("q.query_id").alias("query_id"),
+            F.col("e.vec_id").alias("vec_id"),
+            dot_double(F.col("e.embedding"), F.col("q.qvec")).alias("dot"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("vec_id").asc())
@@ -311,9 +301,6 @@ def ivf_ann_topk(
     k: int = 3,
     n_centroids: int = 16,
     n_probes: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     dim: int | None = None,
 ) -> DataFrame:
     """IVF-style ANN: corpus vectors are assigned to their nearest coarse
@@ -327,9 +314,9 @@ def ivf_ann_topk(
     from pyspark.sql import Window
 
     if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
+        dim = len(embeddings.select("embedding").first()[0])
     cents = ivf_centroids(dim, n_centroids)
-    corpus = embeddings.withColumn("cid", ivf_assign_any_col(F.col(vec_col), cents))
+    corpus = embeddings.withColumn("cid", ivf_assign_any_col(F.col("embedding"), cents))
     # query probe lists: top-n_probes centroids by dot desc, centroid-id asc
     probes = queries.withColumn(
         "cid", F.explode(ivf_probe_cids_col(F.col("qvec"), cents, n_probes))
@@ -337,11 +324,11 @@ def ivf_ann_topk(
     scored = (
         corpus.alias("e")
         .join(F.broadcast(probes.alias("q")), "cid")
-        .where(F.col(f"q.{query_id_col}") != F.col(f"e.{id_col}"))
+        .where(F.col("q.query_id") != F.col("e.vec_id"))
         .select(
-            F.col(f"q.{query_id_col}").alias("query_id"),
-            F.col(f"e.{id_col}").alias("vec_id"),
-            dot_double(F.col(f"e.{vec_col}"), F.col("q.qvec")).alias("dot"),
+            F.col("q.query_id").alias("query_id"),
+            F.col("e.vec_id").alias("vec_id"),
+            dot_double(F.col("e.embedding"), F.col("q.qvec")).alias("dot"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("vec_id").asc())
@@ -357,8 +344,6 @@ def embedding_neardup_pairs(
     cosine_threshold: float = 0.95,
     n_planes: int = 8,
     exact_all_pairs: bool = False,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int | None = None,
 ) -> DataFrame:
     """Near-duplicate vectors: exact cosine >= threshold among candidate
@@ -367,16 +352,16 @@ def embedding_neardup_pairs(
     oracle-reproducible (use for correctness gates and small corpora).
     Returns (key_a, key_b, cosine), key_a < key_b."""
     cols = [
-        F.col(id_col).alias("key"),
-        F.col(vec_col).alias("vec"),
+        F.col("vec_id").alias("key"),
+        F.col("embedding").alias("vec"),
         # left-fold squared norm: oracle-reproducible bit-for-bit
-        dot_double(F.col(vec_col), F.col(vec_col)).alias("norm_sq"),
+        dot_double(F.col("embedding"), F.col("embedding")).alias("norm_sq"),
     ]
     if not exact_all_pairs:
         if dim is None:
-            dim = len(embeddings.select(vec_col).first()[0])
+            dim = len(embeddings.select("embedding").first()[0])
         planes = hyperplanes(dim, n_planes)
-        cols.append(bucket_assign_col(F.col(vec_col), planes).alias("bucket"))
+        cols.append(bucket_assign_col(F.col("embedding"), planes).alias("bucket"))
     # materialize before the self-join: norms (and at high dim the Arrow
     # bucket kernel) would otherwise evaluate once per side (the r4
     # fan-out-reuse audit)
@@ -398,11 +383,11 @@ def embedding_neardup_pairs(
     )
 
 
-def queries_from_embeddings(embeddings: DataFrame, n: int = 5, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
+def queries_from_embeddings(embeddings: DataFrame, n: int = 5) -> DataFrame:
     """First n vectors (by id) as the query set."""
     return (
-        embeddings.where(F.col(id_col) < n)
-        .select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
+        embeddings.where(F.col("vec_id") < n)
+        .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
     )
 
 
@@ -586,16 +571,9 @@ def kmeans_assign(embeddings: DataFrame, k: int = 8) -> DataFrame:
     )
 
 
-def ann_topk_filtered(
-    embeddings: DataFrame,
-    n_queries: int = 5,
-    k: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    filter_col: str = "label",
-) -> DataFrame:
+def ann_topk_filtered(embeddings: DataFrame, n_queries: int = 5, k: int = 3) -> DataFrame:
     """FILTERED vector search — top-k by dot product among vectors
-    sharing the query's `filter_col` value (the tenant/language/category
+    sharing the query's `label` value (the tenant/language/category
     predicate every production vector store must push INTO the search,
     not apply after it: post-filtering a global top-k under-returns when
     the filter is selective). Returns (query_id, vec_id, dot, rank).
@@ -607,18 +585,18 @@ def ann_topk_filtered(
     unfiltered exact path."""
     from pyspark.sql import Window
 
-    q = embeddings.where(F.col(id_col) < n_queries).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        F.col(filter_col).alias("_qf"),
+    q = embeddings.where(F.col("vec_id") < n_queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("qvec"),
+        F.col("label").alias("_qf"),
     )
     scored = (
         embeddings.alias("e")
-        .join(F.broadcast(q), (F.col(filter_col) == F.col("_qf")) & (F.col(id_col) != F.col("query_id")))
+        .join(F.broadcast(q), (F.col("label") == F.col("_qf")) & (F.col("vec_id") != F.col("query_id")))
         .select(
             "query_id",
-            F.col(id_col).alias("vid"),
-            dot_double(F.col(f"e.{vec_col}"), F.col("qvec")).alias("dot"),
+            F.col("vec_id").alias("vid"),
+            dot_double(F.col("e.embedding"), F.col("qvec")).alias("dot"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("vid").asc())

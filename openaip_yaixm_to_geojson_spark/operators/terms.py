@@ -33,29 +33,22 @@ from ..plans.fanout import fan_out
 KMV_M = float(2**32)
 
 
-def _words(text_col: str = "text") -> Column:
-    return F.split(F.trim(F.col(text_col)), r"\s+")
+def _words() -> Column:
+    return F.split(F.trim(F.col("text")), r"\s+")
 
 
-def doc_term_pairs(
-    documents: DataFrame, key_col: str = "doc_id", text_col: str = "text", distinct: bool = False
-) -> DataFrame:
+def doc_term_pairs(documents: DataFrame, distinct: bool = False) -> DataFrame:
     """(key, term) token occurrences; with distinct=True, per-document
     distinct terms (deduped BEFORE the explode, so the shuffle that
     follows never carries within-document duplicates)."""
     documents = fan_out(documents)  # tokenize/explode in parallel on narrow scans
-    words = _words(text_col)
+    words = _words()
     if distinct:
         words = F.array_distinct(words)
-    return documents.select(F.col(key_col).alias("key"), F.explode(words).alias("term"))
+    return documents.select(F.col("doc_id").alias("key"), F.explode(words).alias("term"))
 
 
-def inverted_index(
-    documents: DataFrame,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    df_cap: int | None = None,
-) -> DataFrame:
+def inverted_index(documents: DataFrame, df_cap: int | None = None) -> DataFrame:
     """Term -> sorted postings list: (term, doc_freq, postings) where
     postings is the comma-joined ascending doc-id list.
 
@@ -66,7 +59,7 @@ def inverted_index(
     hot terms still report exact doc_freq with NULL postings, so no
     reducer ever builds a corpus-sized array. The gate runs uncapped at
     fixture scale and a capped pytest pins the routing."""
-    pairs = doc_term_pairs(documents, key_col, text_col, distinct=True)
+    pairs = doc_term_pairs(documents, distinct=True)
     if df_cap is None:
         return pairs.groupBy("term").agg(
             F.count(F.lit(1)).alias("doc_freq"),
@@ -91,13 +84,7 @@ def inverted_index(
     return dfreq.join(posted, "term", "left").select("term", "doc_freq", "postings")
 
 
-def tfidf_topk(
-    documents: DataFrame,
-    k: int = 3,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_vocab: bool = True,
-) -> DataFrame:
+def tfidf_topk(documents: DataFrame, k: int = 3, broadcast_vocab: bool = True) -> DataFrame:
     """Top-k salient terms per document by tf x (N / df) relevance
     (reciprocal-df weighting — same ranking family as tf-idf but exactly
     reproducible: CAST(tf) * (CAST(N) / CAST(df)) is three IEEE ops on
@@ -111,7 +98,7 @@ def tfidf_topk(
     document survive the shuffle read). broadcast_vocab is a HARD hint —
     set False if the vocabulary outgrows executor memory (the join then
     shuffles instead of OOMing the broadcast)."""
-    occ = doc_term_pairs(documents, key_col, text_col)
+    occ = doc_term_pairs(documents)
     tf = occ.groupBy("key", "term").agg(F.count(F.lit(1)).alias("tf"))
     # df comes from its OWN distinct-pairs pass, deliberately NOT from
     # tf.groupBy(term): deriving df from tf re-executes the corpus-sized
@@ -120,11 +107,7 @@ def tfidf_topk(
     # ReusedExchange-s them) and pays two chained shuffles where this
     # shape pays one — measured 1M docs / corpus-sized vocab: 26.8s this
     # form, 31.2s the df-from-tf form
-    dfreq = (
-        doc_term_pairs(documents, key_col, text_col, distinct=True)
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
+    dfreq = doc_term_pairs(documents, distinct=True).groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     if broadcast_vocab:
         dfreq = F.broadcast(dfreq)
     total = documents.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -145,13 +128,7 @@ def tfidf_topk(
     )
 
 
-def kmv_distinct(
-    documents: DataFrame,
-    k: int = 16,
-    group_col: str = "source",
-    text_col: str = "text",
-    n_salts: int = 64,
-) -> DataFrame:
+def kmv_distinct(documents: DataFrame, k: int = 16, n_salts: int = 64) -> DataFrame:
     """Per-group distinct-term cardinality: exact count plus a K-Minimum-
     Values sketch estimate ((k-1) * M / h_k over a 32-bit md5-prefix hash
     space). The estimate is what survives at 100 TB; the gate pins both
@@ -174,7 +151,7 @@ def kmv_distinct(
     (k-1) * M is a product of exactly-representable doubles with a short
     significand — no rounding before the single division."""
     pairs = (
-        documents.select(F.col(group_col).alias("grp"), F.explode(_words(text_col)).alias("term"))
+        documents.select(F.col("source").alias("grp"), F.explode(_words()).alias("term"))
         .distinct()
         .select(
             "grp", F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("bigint").alias("h")
@@ -212,11 +189,7 @@ HLL_REM_BITS = 32 - HLL_P
 HLL_NUMERATOR = (0.7213 / (1.0 + 1.079 / HLL_M)) * float(HLL_M * HLL_M * (1 << HLL_REM_BITS))
 
 
-def hll_distinct(
-    documents: DataFrame,
-    group_col: str = "source",
-    text_col: str = "text",
-) -> DataFrame:
+def hll_distinct(documents: DataFrame) -> DataFrame:
     """Per-group distinct-term cardinality via a HyperLogLog sketch
     (Flajolet et al. 2007), alongside the exact count so the gate verifies
     the sketch math itself. Completes the sketch family (Bloom filter,
@@ -242,7 +215,7 @@ def hll_distinct(
     m register rows. No windows, no collects; register state per group is
     a fixed 2^HLL_P rows regardless of corpus size."""
     pairs = (
-        documents.select(F.col(group_col).alias("grp"), F.explode(_words(text_col)).alias("term"))
+        documents.select(F.col("source").alias("grp"), F.explode(_words()).alias("term"))
         .distinct()
         .select(
             "grp", F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("bigint").alias("h")
@@ -284,12 +257,7 @@ def hll_distinct(
     )
 
 
-def bigram_pmi(
-    documents: DataFrame,
-    top: int = 20,
-    text_col: str = "text",
-    broadcast_vocab: bool = True,
-) -> DataFrame:
+def bigram_pmi(documents: DataFrame, top: int = 20, broadcast_vocab: bool = True) -> DataFrame:
     """Global bigram collocation ranking by the PMI odds ratio
     c_ab * N / (c_a * c_b) (monotone in PMI = log of it; the log itself is
     libm-dependent, the ratio is two exact-integer products and one
@@ -303,13 +271,13 @@ def bigram_pmi(
     a full sort."""
     from .text import _word_ngrams_col
 
-    grams = documents.select(F.explode(_word_ngrams_col(F.col(text_col), 2)).alias("gram"))
+    grams = documents.select(F.explode(_word_ngrams_col(F.col("text"), 2)).alias("gram"))
     c_ab = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("c_ab"))
     # the unigram table feeds THREE consumers (left join, right join, the
     # corpus total) — materialize the vocabulary-sized counts so the
     # corpus-sized unigram explode runs once, not three times (r4 audit)
     uni = (
-        documents.select(F.explode(_words(text_col)).alias("term"))
+        documents.select(F.explode(_words()).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint()
@@ -335,12 +303,7 @@ def bigram_pmi(
     )
 
 
-def token_rarity(
-    documents: DataFrame,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    broadcast_vocab: bool = True,
-) -> DataFrame:
+def token_rarity(documents: DataFrame, broadcast_vocab: bool = True) -> DataFrame:
     """Per-document corpus-frequency profile: token count, the exact
     BIGINT sum of each token's corpus frequency, and their ratio (mean
     corpus frequency — low means the document is built from rare tokens,
@@ -351,7 +314,7 @@ def token_rarity(
     the exploded fact side (broadcast_vocab=False drops the hard hint if
     the vocabulary outgrows executor memory); the per-document rollup is
     one map-side-partial shuffle on the document key."""
-    occ = doc_term_pairs(documents, key_col, text_col)
+    occ = doc_term_pairs(documents)
     uni = occ.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
     if broadcast_vocab:
         uni = F.broadcast(uni)
@@ -381,9 +344,7 @@ def token_rarity(
 # COUNT(*) over one-row-per-document keys.
 
 
-def _doc_gram_counts(
-    documents: DataFrame, width: int, key_col: str, text_col: str, hash_grams: bool = False
-) -> DataFrame:
+def _doc_gram_counts(documents: DataFrame, width: int, hash_grams: bool = False) -> DataFrame:
     """(key, gram, n_pos): occurrence count of every width-word gram per
     document. Docs shorter than `width` words contribute nothing (and are
     absent from downstream outputs — documented contract). One shuffle on
@@ -399,7 +360,7 @@ def _doc_gram_counts(
 
     # struct-explode + codegen concat (see exploded_word_ngrams): the gram
     # string is assembled after the explode, not in an interpreted lambda
-    pairs = exploded_word_ngrams(documents, width, key_col, text_col, out_col="_g")
+    pairs = exploded_word_ngrams(documents, width, out_col="_g")
     gram = F.md5(F.col("_g")) if hash_grams else F.col("_g")
     return (
         pairs.select("key", gram.alias("gram"))
@@ -408,13 +369,7 @@ def _doc_gram_counts(
     )
 
 
-def repeated_grams(
-    documents: DataFrame,
-    width: int = 8,
-    min_docs: int = 2,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def repeated_grams(documents: DataFrame, width: int = 8, min_docs: int = 2) -> DataFrame:
     """(gram, n_docs, n_occ) for width-word grams appearing in >= min_docs
     DISTINCT documents — the corpus boilerplate/memorization report.
 
@@ -422,7 +377,7 @@ def repeated_grams(
     n_docs is a COUNT(*) over the pre-aggregated per-document rows, so no
     distinct-aggregate expand ever touches the corpus-sized gram stream.
     The min_docs filter bounds the output to actually-repeated grams."""
-    dg = _doc_gram_counts(documents, width, key_col, text_col)
+    dg = _doc_gram_counts(documents, width)
     return (
         dg.groupBy("gram")
         .agg(
@@ -433,12 +388,7 @@ def repeated_grams(
     )
 
 
-def duplicated_span_stats(
-    documents: DataFrame,
-    width: int = 8,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def duplicated_span_stats(documents: DataFrame, width: int = 8) -> DataFrame:
     """Per-document duplicated-span statistics: (key, n_grams,
     n_dup_grams, n_dup_positions) where a gram is 'duplicated' if it occurs
     in >= 2 distinct documents. n_grams counts all gram positions,
@@ -465,9 +415,7 @@ def duplicated_span_stats(
     explode once, not once per invocation."""
     from pyspark.storagelevel import StorageLevel
 
-    dg = _doc_gram_counts(documents, width, key_col, text_col, hash_grams=True).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    dg = _doc_gram_counts(documents, width, hash_grams=True).persist(StorageLevel.MEMORY_AND_DISK)
     gd = dg.groupBy("gram").agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     dup = F.col("n_docs") >= F.lit(2)
     return (
@@ -493,9 +441,7 @@ def _cm_col(term: Column, row: int) -> Column:
     return F.conv(F.substring(F.md5(salted), 1, 8), 16, 10).cast("bigint") % F.lit(CM_WIDTH)
 
 
-def countmin_heavy_hitters(
-    documents: DataFrame, k: int = 20, text_col: str = "text"
-) -> DataFrame:
+def countmin_heavy_hitters(documents: DataFrame, k: int = 20) -> DataFrame:
     """Count-Min sketch demonstration over the token stream: build the
     d x w counter table DISTRIBUTED (groupBy (row, col) — the sketch is
     the aggregation state, nothing collects), then read back the k most
@@ -508,7 +454,7 @@ def countmin_heavy_hitters(
     cross-engine. Scale shape: the token stream shuffles once per sketch
     row as (row, col) pairs — d tiny integers per token, never the token
     text; the probe join broadcasts the k-row top-token table."""
-    terms = documents.select(F.explode(_words(text_col)).alias("term"))
+    terms = documents.select(F.explode(_words()).alias("term"))
     # exact counts once; top-k probes with deterministic (count desc, term) order
     exact = terms.groupBy("term").agg(F.count(F.lit(1)).alias("exact_count"))
     probes = exact.orderBy(F.col("exact_count").desc(), F.col("term")).limit(k)
@@ -547,7 +493,7 @@ def countmin_heavy_hitters(
     )
 
 
-def bpe_pair_counts(documents: DataFrame, k: int = 50, text_col: str = "text") -> DataFrame:
+def bpe_pair_counts(documents: DataFrame, k: int = 50) -> DataFrame:
     """Adjacent character-pair frequencies over whitespace tokens — the
     statistic a BPE tokenizer trainer computes to pick its next merge
     (top pair = first merge rule). Counts respect within-token
@@ -562,7 +508,7 @@ def bpe_pair_counts(documents: DataFrame, k: int = 50, text_col: str = "text") -
     TakeOrdered with the (count DESC, pair ASC) deterministic tiebreak.
     The oracle recomputes via the independent direct corpus-level unnest."""
     toks = documents.select(
-        F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("tok")
+        F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("tok")
     ).where(F.length("tok") >= 2)
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     pairs = vocab.select(
@@ -579,7 +525,7 @@ def bpe_pair_counts(documents: DataFrame, k: int = 50, text_col: str = "text") -
     )
 
 
-def lang_vocab_overlap(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_vocab_overlap(documents: DataFrame) -> DataFrame:
     """Pairwise vocabulary Jaccard between languages: (lang_a, lang_b,
     vocab_a, vocab_b, n_common, jaccard) for lang_a < lang_b — the
     corpus-composition diagnostic for contamination between splits /
@@ -595,7 +541,7 @@ def lang_vocab_overlap(documents: DataFrame, text_col: str = "text") -> DataFram
     exact integers with ONE single-rounded double division."""
     vocab = (
         documents.select(
-            "lang", F.explode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("token")
+            "lang", F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("token")
         )
         .distinct()
         .localCheckpoint()
@@ -646,11 +592,7 @@ BM25_DEFAULT_QUERY = ("spark", "join", "window")
 
 
 def bm25_topk(
-    documents: DataFrame,
-    query_terms: tuple[str, ...] = BM25_DEFAULT_QUERY,
-    k: int = 20,
-    key_col: str = "doc_id",
-    text_col: str = "text",
+    documents: DataFrame, query_terms: tuple[str, ...] = BM25_DEFAULT_QUERY, k: int = 20
 ) -> DataFrame:
     """Top-k documents for a fixed query by log-free BM25 (see
     BM25_SCORE_SQL): per-(doc, query-term) tf with document length carried
@@ -671,7 +613,7 @@ def bm25_topk(
         raise ValueError("query_terms must be non-empty")
 
     documents = fan_out(documents)  # tokenizer (both passes) parallel on narrow scans
-    w = documents.select(F.col(key_col).alias("key"), _words(text_col).alias("words"))
+    w = documents.select(F.col("doc_id").alias("key"), _words().alias("words"))
     # filter to query terms INSIDE the array, before the explode: the
     # generator then emits only matches instead of materializing every
     # token as a row and filtering after (A/B at the 50k-doc scale:
@@ -703,7 +645,7 @@ def bm25_topk(
     stats = (
         documents.agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.size(_words(text_col))).alias("total_tokens"),
+            F.sum(F.size(_words())).alias("total_tokens"),
         )
         .select(
             "n_docs",
@@ -733,14 +675,10 @@ def bm25_topk(
         .over(Window.partitionBy().orderBy(F.col("score").desc(), F.col("key")))
         .alias("rnk"),
     )
-    return ranked.where(F.col("rnk") <= k).select(
-        F.col("key").alias(key_col), "score", "rnk"
-    )
+    return ranked.where(F.col("rnk") <= k).select(F.col("key").alias("doc_id"), "score", "rnk")
 
 
-def hll_union(
-    documents: DataFrame, group_col: str = "source", text_col: str = "text"
-) -> DataFrame:
+def hll_union(documents: DataFrame) -> DataFrame:
     """SKETCH ALGEBRA as a first-class operator: per-group HLL register
     states MERGED into the union-cardinality estimate — max(rank) per
     register across groups, the property that makes HLL the sketch
@@ -756,7 +694,7 @@ def hll_union(
     would persist per partition/day; the merge is a second map-side
     partial max over at most m rows per group."""
     pairs = (
-        documents.select(F.col(group_col).alias("grp"), F.explode(_words(text_col)).alias("term"))
+        documents.select(F.col("source").alias("grp"), F.explode(_words()).alias("term"))
         .distinct()
         .select(
             "grp", F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("bigint").alias("h")
@@ -781,9 +719,7 @@ def hll_union(
     # NULL-group semantics shared with the oracle's COUNT(DISTINCT ...),
     # which excludes NULL — distinct().count() would count a NULL source
     # as a group (r5 advice; latent only, synthetic data is non-null)
-    n_groups = (
-        documents.where(F.col(group_col).isNotNull()).select(group_col).distinct().count()
-    )
+    n_groups = documents.where(F.col("source").isNotNull()).select("source").distinct().count()
     agg = merged.agg(
         F.count(F.lit(1)).alias("n_registers"),
         F.sum(F.expr(f"shiftleft(cast(1 as bigint), {HLL_REM_BITS} - rmax)")).alias("occ_sum"),
@@ -798,7 +734,7 @@ def hll_union(
     )
 
 
-def charlm_surprisal(documents: DataFrame, key_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def charlm_surprisal(documents: DataFrame) -> DataFrame:
     """LOG-FREE character-bigram language-model scoring — the perplexity
     proxy quality filters use, made hash-gateable: per-bigram surprisal is
     measured in WHOLE BITS via integer bit lengths,
@@ -833,13 +769,13 @@ def charlm_surprisal(documents: DataFrame, key_col: str = "doc_id", text_col: st
     # _word_ngrams_col documents). Chars are single codepoints, so keying
     # on the (a, b) pair is exactly keying on the concatenated bigram.
     documents = fan_out(documents)
-    n = F.length(F.col(text_col))
-    chars = F.split(F.col(text_col), "")
+    n = F.length(F.col("text"))
+    chars = F.split(F.col("text"), "")
     zipped = F.arrays_zip(
         F.slice(chars, 1, n - 1).alias("a"), F.slice(chars, 2, n - 1).alias("b")
     )
     bg_stream = documents.where(n >= 2).select(
-        F.col(key_col).alias("key"), F.explode(zipped).alias("s")
+        F.col("doc_id").alias("key"), F.explode(zipped).alias("s")
     ).select("key", F.col("s.a").alias("a"), F.col("s.b").alias("b"))
     # charset^2-sized; feeds BOTH corpus_pre and the bits join -> materialize
     # once (fan-out rule; the frame is tiny). Columnar persist rather than
@@ -863,11 +799,11 @@ def charlm_surprisal(documents: DataFrame, key_col: str = "doc_id", text_col: st
             F.count(F.lit(1)).alias("n_bigrams"),
             F.sum("bits").alias("surprisal_bits"),
         )
-        .select(F.col("key").alias(key_col), "n_bigrams", "surprisal_bits")
+        .select(F.col("key").alias("doc_id"), "n_bigrams", "surprisal_bits")
     )
 
 
-def bpe_phrase_merge(documents: DataFrame, key_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def bpe_phrase_merge(documents: DataFrame) -> DataFrame:
     """ONE full BPE merge step at word granularity (phrase mining — the
     same algorithm as char-BPE with word symbols; bpe_pair_counts covers
     the char-level statistic): find the corpus-wide most frequent adjacent
@@ -897,7 +833,7 @@ def bpe_phrase_merge(documents: DataFrame, key_col: str = "doc_id", text_col: st
     from pyspark.sql import Window
 
     documents = fan_out(documents)
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = F.split(F.trim(F.col("text")), r"\s+")
     k = F.size(words) - F.lit(1)
     adj = F.arrays_zip(F.slice(words, 1, k).alias("w1"), F.slice(words, 2, k).alias("w2"))
     best = (
@@ -912,8 +848,8 @@ def bpe_phrase_merge(documents: DataFrame, key_col: str = "doc_id", text_col: st
     wk = Window.partitionBy("key").orderBy("pos")
     run = wk.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     toks = documents.select(
-        F.col(key_col).alias("key"),
-        F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("pos", "tok"),
+        F.col("doc_id").alias("key"),
+        F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("pos", "tok"),
     )
     marked = (
         toks.crossJoin(F.broadcast(best))
@@ -948,16 +884,14 @@ def bpe_phrase_merge(documents: DataFrame, key_col: str = "doc_id", text_col: st
             ).alias("merged_md5"),
         )
         .select(
-            F.col("key").alias(key_col),
+            F.col("key").alias("doc_id"),
             "n_tokens_before",
             "n_merges",
             "merged_md5",
         )
     )
 
-def vocab_coverage(
-    documents: DataFrame, vocab_size: int = 256, key_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def vocab_coverage(documents: DataFrame, vocab_size: int = 256) -> DataFrame:
     """Tokenizer-vocabulary coverage: build the top-`vocab_size` corpus
     vocabulary (count DESC, term ASC — deterministic), then per document
     report total tokens, in-vocab tokens, OOV count and the coverage
@@ -968,7 +902,7 @@ def vocab_coverage(
     TakeOrdered(vocab_size); the coverage pass is a broadcast LEFT join
     of the (doc, term, count) stream against the tiny vocab."""
     occ = (
-        doc_term_pairs(documents, key_col, text_col)
+        doc_term_pairs(documents)
         .groupBy("key", "term")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint()  # feeds the vocab build AND the coverage join
@@ -988,7 +922,7 @@ def vocab_coverage(
             F.sum(F.when(F.col("in_vocab"), F.col("cnt")).otherwise(F.lit(0))).alias("n_in_vocab"),
         )
         .select(
-            F.col("key").alias(key_col),
+            F.col("key").alias("doc_id"),
             "n_tokens",
             "n_in_vocab",
             (F.col("n_tokens") - F.col("n_in_vocab")).alias("n_oov"),

@@ -128,13 +128,11 @@ def sample_hash_col(key: Column) -> Column:
     )
 
 
-def deterministic_sample(
-    documents: DataFrame, fraction: float, key_col: str = "doc_id"
-) -> DataFrame:
+def deterministic_sample(documents: DataFrame, fraction: float) -> DataFrame:
     """Keep rows whose md5 bucket falls under `fraction` — a reproducible,
     cluster-size-independent Bernoulli sample keyed on content identity."""
     threshold = int(round(fraction * SAMPLE_BUCKETS))
-    return documents.where(sample_hash_col(F.col(key_col)) < threshold)
+    return documents.where(sample_hash_col(F.col("doc_id")) < threshold)
 
 
 def _word_ngrams_col(text: Column, n: int) -> Column:
@@ -159,12 +157,7 @@ def _word_ngrams_col(text: Column, n: int) -> Column:
 
 
 def exploded_word_ngrams(
-    documents: DataFrame,
-    n: int,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-    distinct: bool = False,
-    out_col: str = "gram",
+    documents: DataFrame, n: int, distinct: bool = False, out_col: str = "gram"
 ) -> DataFrame:
     """(key, gram) rows — the explode-immediately twin of _word_ngrams_col
     for callers that never need the gram ARRAY: the zip STRUCTS are
@@ -175,7 +168,7 @@ def exploded_word_ngrams(
     for the explode->md5->count subchain. distinct=True dedupes the
     STRUCT array per document, which equals deduping gram strings because
     tokens cannot contain the separator (split on \\s+)."""
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = F.split(F.trim(F.col("text")), r"\s+")
     k = F.size(words) - F.lit(n - 1)
     zipped = F.arrays_zip(*[F.slice(words, i + 1, k).alias(f"w{i}") for i in range(n)])
     if distinct:
@@ -183,14 +176,12 @@ def exploded_word_ngrams(
     stype = "array<struct<" + ",".join(f"w{i}:string" for i in range(n)) + ">>"
     guarded = F.when(k >= 1, zipped).otherwise(F.array().cast(stype))
     gram = F.concat_ws(" ", *[F.col(f"_s.w{i}") for i in range(n)])
-    return documents.select(
-        F.col(key_col).alias("key"), F.explode(guarded).alias("_s")
-    ).select("key", gram.alias(out_col))
+    return documents.select(F.col("doc_id").alias("key"), F.explode(guarded).alias("_s")).select(
+        "key", gram.alias(out_col)
+    )
 
 
-def ngram_repetition(
-    documents: DataFrame, n: int = 2, key_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def ngram_repetition(documents: DataFrame, n: int = 2) -> DataFrame:
     """Gopher-style within-document repetition signals: total / distinct
     word n-grams, the modal n-gram's count, and the duplicate / top-gram
     fractions quality filters threshold on.
@@ -202,7 +193,7 @@ def ngram_repetition(
     bit-identical across engines. Documents shorter than n words have no
     grams and drop out (inner semantics, documented)."""
     grams = documents.select(
-        F.col(key_col).alias("key"), F.explode(_word_ngrams_col(F.col(text_col), n)).alias("gram")
+        F.col("doc_id").alias("key"), F.explode(_word_ngrams_col(F.col("text"), n)).alias("gram")
     )
     per_gram = grams.groupBy("key", "gram").agg(F.count(F.lit(1)).alias("c"))
     agg = per_gram.groupBy("key").agg(
@@ -221,9 +212,7 @@ def ngram_repetition(
     )
 
 
-def ngram_repetition_local(
-    documents: DataFrame, n: int = 2, key_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def ngram_repetition_local(documents: DataFrame, n: int = 2) -> DataFrame:
     """Shuffle-FREE twin of ngram_repetition: identical output, computed
     per row with a sorted-array fold instead of explode + groupBy.
 
@@ -235,7 +224,7 @@ def ngram_repetition_local(
     the fact table once and shuffles NOTHING. The relational form remains
     for pathological single-document sizes — a row's gram array must fit
     a task, while explode + groupBy spills arbitrarily."""
-    grams = _word_ngrams_col(F.col(text_col), n)
+    grams = _word_ngrams_col(F.col("text"), n)
     zero = F.lit(0).cast("bigint")
     acc0 = F.struct(
         F.lit(None).cast("string").alias("prev"),
@@ -273,9 +262,9 @@ def ngram_repetition_local(
     # referencing _r gets pushed below the project and re-inlines the whole
     # fold into its condition (3 evaluations per row, measured); with the
     # independent predicate the sort+fold appears exactly once in the plan
-    short = F.size(F.split(F.trim(F.col(text_col)), r"\s+")) >= n
+    short = F.size(F.split(F.trim(F.col("text")), r"\s+")) >= n
     folded = documents.where(short).select(
-        F.col(key_col).alias("key"),
+        F.col("doc_id").alias("key"),
         F.aggregate(F.array_sort(grams), acc0, step, finish).alias("_r"),
     )
     return folded.select(
@@ -288,13 +277,7 @@ def ngram_repetition_local(
     )
 
 
-def contamination(
-    documents: DataFrame,
-    benchmark: DataFrame,
-    n: int = 8,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def contamination(documents: DataFrame, benchmark: DataFrame, n: int = 8) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing any word
     n-gram with an eval/benchmark set (the standard pre-training hygiene
     join). Returns (key, n_shared_grams) for contaminated documents only.
@@ -304,15 +287,15 @@ def contamination(
     sets are tiny next to the corpus — thousands of docs vs billions); the
     per-document dedup (array_distinct) happens before the explode so the
     fact-side explode carries no within-doc duplicates."""
-    def gram_hashes(df: DataFrame, key: str) -> DataFrame:
+    def gram_hashes(df: DataFrame) -> DataFrame:
         return df.select(
-            F.col(key).alias("key"),
-            F.explode(F.array_distinct(_word_ngrams_col(F.col(text_col), n))).alias("gram"),
+            F.col("doc_id").alias("key"),
+            F.explode(F.array_distinct(_word_ngrams_col(F.col("text"), n))).alias("gram"),
         ).select("key", F.md5("gram").alias("gram_hash"))
 
-    bench = gram_hashes(benchmark, key_col).select("gram_hash").distinct()
+    bench = gram_hashes(benchmark).select("gram_hash").distinct()
     return (
-        gram_hashes(documents, key_col)
+        gram_hashes(documents)
         .join(F.broadcast(bench), "gram_hash")
         .groupBy("key")
         .agg(F.count(F.lit(1)).alias("n_shared_grams"))
@@ -348,13 +331,7 @@ def _bloom_probe_frame(grams: DataFrame) -> DataFrame:
     )
 
 
-def bloom_contamination(
-    documents: DataFrame,
-    benchmark: DataFrame,
-    n: int = 8,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def bloom_contamination(documents: DataFrame, benchmark: DataFrame, n: int = 8) -> DataFrame:
     """Benchmark decontamination via a Bloom filter — the scale path of
     `contamination` for when the benchmark gram set is too large to
     broadcast raw (a few hundred GB of eval grams fits in a 8 KiB bitmap
@@ -370,9 +347,7 @@ def bloom_contamination(
 
     def gram_hashes(df: DataFrame) -> DataFrame:
         df = fan_out(df)  # n-gram explode + md5 dominate on narrow scans
-        return exploded_word_ngrams(df, n, key_col, text_col, distinct=True).select(
-            "key", F.md5("gram").alias("gram_hash")
-        )
+        return exploded_word_ngrams(df, n, distinct=True).select("key", F.md5("gram").alias("gram_hash"))
 
     n_words = BLOOM_BITS // BLOOM_WORD_BITS
 
@@ -427,8 +402,8 @@ def bloom_contamination(
     )
 
 
-def analyze_documents(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    text = F.col(text_col)
+def analyze_documents(documents: DataFrame) -> DataFrame:
+    text = F.col("text")
     ws_tokens, bpe_tokens = token_count_cols(text)
     return documents.select(
         "*",
@@ -450,11 +425,7 @@ def lang_median_chars(documents: DataFrame) -> DataFrame:
     )
 
 def stratified_sample(
-    documents: DataFrame,
-    quota: int,
-    group_col: str = "lang",
-    key_col: str = "doc_id",
-    delta: float = 0.5,
+    documents: DataFrame, quota: int, group_col: str = "lang", delta: float = 0.5
 ) -> DataFrame:
     """EXACT per-group quota sample: the `min(quota, n_g)` rows with the
     smallest (md5-hash, key) per group — deterministic, parallelism- and
@@ -481,9 +452,9 @@ def stratified_sample(
     from pyspark.sql import Window
 
     M = float(2**32)
-    h = F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10).cast("bigint")
+    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("bigint")
     keyed = documents.select(
-        F.col(key_col).alias("key"), F.col(group_col).alias("grp"), h.alias("h")
+        F.col("doc_id").alias("key"), F.col(group_col).alias("grp"), h.alias("h")
     )
     counts = keyed.groupBy("grp").agg(F.count(F.lit(1)).alias("n_g"))
     # exact-double band edges: p = quota/n_g (one IEEE division), edges
@@ -554,13 +525,7 @@ def stratified_sample(
     return full.unionByName(below.select("key", "grp")).unionByName(filled)
 
 
-def chunk_documents(
-    documents: DataFrame,
-    size: int = 32,
-    stride: int = 24,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def chunk_documents(documents: DataFrame, size: int = 32, stride: int = 24) -> DataFrame:
     """Context-window chunking with overlap (stride < size): chunk i
     covers tokens [i*stride, i*stride + size), starts every `stride`
     tokens while a start position remains, the final chunk clamps at the
@@ -574,10 +539,10 @@ def chunk_documents(
     slice."""
     if not (0 < stride <= size):
         raise ValueError("need 0 < stride <= size")
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
+    words = F.split(F.trim(F.col("text")), r"\s+")
     starts = F.sequence(F.lit(0), F.size(words) - 1, F.lit(stride))
     exploded = documents.select(
-        F.col(key_col).alias("key"), words.alias("w"), F.explode(starts).alias("s")
+        F.col("doc_id").alias("key"), words.alias("w"), F.explode(starts).alias("s")
     )
     n = F.size(F.col("w"))
     return exploded.select(
@@ -591,13 +556,7 @@ def chunk_documents(
     )
 
 
-def pack_documents(
-    documents: DataFrame,
-    capacity: int = 512,
-    n_streams: int = 8,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def pack_documents(documents: DataFrame, capacity: int = 512, n_streams: int = 8) -> DataFrame:
     """Token-stream packing: concatenate documents (in deterministic
     md5-hash order) into `n_streams` parallel token streams and cut each
     stream into fixed-`capacity` context windows — each document is
@@ -613,10 +572,10 @@ def pack_documents(
     everywhere."""
     from pyspark.sql import Window
 
-    h = F.conv(F.substring(F.md5(F.col(key_col).cast("string")), 1, 8), 16, 10).cast("bigint")
-    n_tok = F.size(F.split(F.trim(F.col(text_col)), r"\s+")).cast("bigint")
+    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("bigint")
+    n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint")
     keyed = documents.select(
-        F.col(key_col).alias("key"),
+        F.col("doc_id").alias("key"),
         h.alias("h"),
         F.pmod(h, F.lit(n_streams)).cast("bigint").alias("stream"),
         n_tok.alias("n_tokens"),
@@ -657,12 +616,7 @@ def lang_percentile_chars(documents: DataFrame, p_num: int = 9, p_den: int = 10)
     )
 
 
-def mixture_allocate(
-    documents: DataFrame,
-    budget: int,
-    group_col: str = "source",
-    weight_col: str = "n_chars",
-) -> DataFrame:
+def mixture_allocate(documents: DataFrame, budget: int, weight_col: str = "n_chars") -> DataFrame:
     """Training-mixture budget allocation: split an integer token budget
     across strata proportionally to their weight using Hamilton's
     largest-remainder method — EXACT integer arithmetic end to end
@@ -674,10 +628,7 @@ def mixture_allocate(
     Scale shape: one map-side-partial aggregation to #groups rows; total
     and leftover ride a broadcast single-row aggregate; the remainder rank
     is a window over #groups rows (dozens), never the corpus."""
-    w = (
-        documents.groupBy(F.col(group_col).alias("grp"))
-        .agg(F.sum(weight_col).alias("wt"))
-    )
+    w = documents.groupBy(F.col("source").alias("grp")).agg(F.sum(weight_col).alias("wt"))
     tot = w.agg(F.sum("wt").alias("total"))
     staged = (
         w.crossJoin(F.broadcast(tot))
@@ -709,7 +660,7 @@ def mixture_allocate(
             (F.lit(budget).cast("bigint") - F.sum("base").over(win_all)).alias("leftover"),
         )
         .select(
-            F.col("grp").alias(group_col),
+            F.col("grp").alias("source"),
             F.col("wt").alias("weight"),
             (F.col("base") + (F.col("rem_rank") <= F.col("leftover")).cast("bigint")).alias(
                 "quota"
@@ -799,7 +750,7 @@ PII_PHONE = r"\+\d{7,15}"
 _PII_KINDS = (("email", PII_EMAIL, "<EMAIL>"), ("ipv4", PII_IPV4, "<IP>"), ("phone", PII_PHONE, "<PHONE>"))
 
 
-def pii_scrub(documents: DataFrame, key_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def pii_scrub(documents: DataFrame) -> DataFrame:
     """Per-document PII detection + redaction: match counts per kind on
     the original text and a redacted copy with typed placeholders — the
     scrub stage every training corpus runs before export.
@@ -807,18 +758,16 @@ def pii_scrub(documents: DataFrame, key_col: str = "doc_id", text_col: str = "te
     Scale shape: pure per-row codegen string expressions, zero shuffles;
     the three patterns each scan the row once (no explode, no UDF)."""
     counts = [
-        F.size(F.regexp_extract_all(F.col(text_col), F.lit(pat), F.lit(0))).alias(f"n_{kind}")
+        F.size(F.regexp_extract_all(F.col("text"), F.lit(pat), F.lit(0))).alias(f"n_{kind}")
         for kind, pat, _ in _PII_KINDS
     ]
-    red = F.col(text_col)
+    red = F.col("text")
     for _, pat, token in _PII_KINDS:
         red = F.regexp_replace(red, pat, token)
-    return documents.select(
-        F.col(key_col).alias("key"), *counts, red.alias("redacted")
-    )
+    return documents.select(F.col("doc_id").alias("key"), *counts, red.alias("redacted"))
 
 
-def lang_length_regression(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_length_regression(documents: DataFrame) -> DataFrame:
     """Per-language Pearson correlation + OLS fit of whitespace-token
     count (y) against character count (x): (lang, n_docs, corr, slope,
     intercept). The feature-covariance profile a corpus-mixture report
@@ -836,8 +785,8 @@ def lang_length_regression(documents: DataFrame, text_col: str = "text") -> Data
     Scale shape: ONE map-side-partial aggregation at lang granularity;
     zero joins, zero windows, no second pass (no mean-centering pass —
     the moment form is the single-pass algebra)."""
-    x = F.length(F.col(text_col)).cast("bigint")
-    y = F.size(F.split(F.trim(F.col(text_col)), r"\s+")).cast("bigint")
+    x = F.length(F.col("text")).cast("bigint")
+    y = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint")
     dec = lambda c: c.cast("decimal(38,0)")  # noqa: E731
     moments = documents.select(
         "lang", x.alias("x"), y.alias("y"), (x * y).alias("xy"), (x * x).alias("xx"), (y * y).alias("yy")
@@ -871,10 +820,7 @@ def lang_length_regression(documents: DataFrame, text_col: str = "text") -> Data
 
 
 def weighted_sample(
-    documents: DataFrame,
-    fraction: float = 0.5,
-    length_cap: int = 2000,
-    key_col: str = "doc_id",
+    documents: DataFrame, fraction: float = 0.5, length_cap: int = 2000
 ) -> DataFrame:
     """Deterministic LENGTH-WEIGHTED Bernoulli sample: each document is
     kept with probability fraction * min(n_chars, cap) / cap — the
@@ -889,11 +835,11 @@ def weighted_sample(
     rate_num = int(round(fraction * SAMPLE_BUCKETS))
     w = F.least(F.col("n_chars"), F.lit(int(length_cap)))
     return documents.where(
-        sample_hash_col(F.col(key_col)) * F.lit(int(length_cap)) < w * F.lit(rate_num)
-    ).select(key_col, "lang", "n_chars")
+        sample_hash_col(F.col("doc_id")) * F.lit(int(length_cap)) < w * F.lit(rate_num)
+    ).select("doc_id", "lang", "n_chars")
 
 
-def char_diversity(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def char_diversity(documents: DataFrame) -> DataFrame:
     """Per-document character diversity: (doc_id, n_chars_total,
     n_distinct_chars, gini) where gini = 1 - sum(count_c^2)/n^2 — the
     Gini-impurity repetitiveness signal (a log-free stand-in for character
@@ -906,7 +852,7 @@ def char_diversity(documents: DataFrame, text_col: str = "text") -> DataFrame:
     aggregate per row, all codegen), never an explode + groupBy at
     corpus-char scale. The oracle deliberately uses that heavier
     independent mechanism (UNNEST + GROUP BY) to verify the fold."""
-    arr = F.array_sort(F.split(F.col(text_col), ""))
+    arr = F.array_sort(F.split(F.col("text"), ""))
     seed = F.struct(
         F.lit("").alias("p"), F.lit(0).cast("bigint").alias("r"), F.lit(0).cast("bigint").alias("s")
     )
@@ -921,7 +867,7 @@ def char_diversity(documents: DataFrame, text_col: str = "text") -> DataFrame:
         )
     )
     s2 = F.aggregate(arr, seed, merge, lambda acc: acc["s"] + acc["r"] * acc["r"])
-    n = F.length(F.col(text_col)).cast("bigint")
+    n = F.length(F.col("text")).cast("bigint")
     staged = documents.select(
         "doc_id",
         n.alias("n_chars_total"),
@@ -1017,7 +963,7 @@ def quality_funnel(documents: DataFrame, min_chars: int = 50) -> DataFrame:
     )
 
 
-def lang_confusion(documents: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_confusion(documents: DataFrame) -> DataFrame:
     """Language-ID confusion matrix: (lang_true, lang_pred, n_docs,
     frac_of_true) — the classifier-eval primitive (per-class recall lives
     on the diagonal) a corpus pipeline publishes to monitor its langid
@@ -1026,7 +972,7 @@ def lang_confusion(documents: DataFrame, text_col: str = "text") -> DataFrame:
     from pyspark.sql import Window
 
     cm = (
-        documents.select(F.col("lang").alias("lang_true"), langid_col(F.col(text_col)).alias("lang_pred"))
+        documents.select(F.col("lang").alias("lang_true"), langid_col(F.col("text")).alias("lang_pred"))
         .groupBy("lang_true", "lang_pred")
         .agg(F.count(F.lit(1)).alias("n_docs"))
     )
@@ -1083,7 +1029,7 @@ def length_winsorize(
     )
 
 
-def source_diversity(documents: DataFrame, group_col: str = "lang", key_col: str = "source") -> DataFrame:
+def source_diversity(documents: DataFrame) -> DataFrame:
     """Per-group Simpson concentration index over sources: sum over
     sources of (c_s / n)^2 — 1/HHI-style mixture-diversity monitor, the
     'is one crawl dominating this language' number a corpus build watches.
@@ -1097,7 +1043,7 @@ def source_diversity(documents: DataFrame, group_col: str = "lang", key_col: str
     == DuckDB's list_reduce(list_prepend(0.0, ...))). Source counts per
     group are map-side-partial; the fold array is #sources long (tiny)."""
     counts = (
-        documents.groupBy(F.col(group_col).alias("grp"), F.col(key_col).alias("src"))
+        documents.groupBy(F.col("lang").alias("grp"), F.col("source").alias("src"))
         .agg(F.count(F.lit(1)).alias("c"))
     )
     per_grp = counts.groupBy("grp").agg(
@@ -1111,14 +1057,14 @@ def source_diversity(documents: DataFrame, group_col: str = "lang", key_col: str
         " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
     )
     return per_grp.select(
-        F.col("grp").alias(group_col),
+        F.col("grp").alias("lang"),
         "n_docs",
         "n_sources",
         simpson.alias("simpson"),
     )
 
 
-def readability(documents: DataFrame, key_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def readability(documents: DataFrame) -> DataFrame:
     """Flesch-style readability score as a quality-filter signal:
 
         score = 206.835 - 1.015*(words/sentences) - 84.6*(syllables/words)
@@ -1130,7 +1076,7 @@ def readability(documents: DataFrame, key_col: str = "doc_id", text_col: str = "
     the combination is fixed-order single-rounded IEEE arithmetic from
     shared literals, so the score hash-gates (the length_correlation
     recipe). Pure codegen, zero shuffles."""
-    text = F.col(text_col)
+    text = F.col("text")
     n_words = F.size(F.split(F.trim(text), r"\s+")).cast("bigint")
     n_sent = F.greatest(
         F.lit(1).cast("bigint"),
@@ -1144,7 +1090,7 @@ def readability(documents: DataFrame, key_col: str = "doc_id", text_col: str = "
     spw = n_syl.cast("double") / n_words.cast("double")
     score = F.lit(206.835) - F.lit(1.015) * wps - F.lit(84.6) * spw
     return documents.select(
-        F.col(key_col),
+        F.col("doc_id"),
         n_words.alias("n_words"),
         n_sent.alias("n_sentences"),
         n_syl.alias("n_syllables"),
@@ -1153,12 +1099,7 @@ def readability(documents: DataFrame, key_col: str = "doc_id", text_col: str = "
 
 
 def temperature_mixture(
-    documents: DataFrame,
-    budget: int,
-    t_num: int = 2,
-    t_den: int = 1,
-    group_col: str = "source",
-    weight_col: str = "n_chars",
+    documents: DataFrame, budget: int, t_num: int = 2, t_den: int = 1
 ) -> DataFrame:
     """Temperature-scaled mixture allocation: Hamilton quotas over TEMPERED
     weights w^(1/T) — the up/down-weighting every multi-source training mix
@@ -1171,9 +1112,7 @@ def temperature_mixture(
 
     The quota math reuses mixture_allocate verbatim on a one-row-per-group
     tempered-weight frame (the group-by inside is then a pass-through)."""
-    w = documents.groupBy(F.col(group_col).alias("grp")).agg(
-        F.sum(weight_col).alias("wt")
-    )
+    w = documents.groupBy(F.col("source").alias("grp")).agg(F.sum("n_chars").alias("wt"))
     if (t_num, t_den) == (2, 1):
         tempered = F.floor(
             F.sqrt(F.col("wt").cast("double")) * F.lit(1024.0) + F.lit(0.5)
@@ -1185,17 +1124,11 @@ def temperature_mixture(
             f"temperature {t_num}/{t_den} unsupported: only T=2 (sqrt) and "
             "T=1/2 (square) have exactly-reproducible powers (general pow is libm)"
         )
-    tw = w.select(F.col("grp").alias(group_col), tempered.alias("wt_t"))
-    return mixture_allocate(tw, budget, group_col=group_col, weight_col="wt_t")
+    tw = w.select(F.col("grp").alias("source"), tempered.alias("wt_t"))
+    return mixture_allocate(tw, budget, weight_col="wt_t")
 
 
-def span_scrub(
-    documents: DataFrame,
-    n: int = 8,
-    min_docs: int = 2,
-    key_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def span_scrub(documents: DataFrame, n: int = 8, min_docs: int = 2) -> DataFrame:
     """Duplicated-SPAN removal (the RefinedWeb/exact-substring scrub step —
     duplicated_span_stats says how much is duplicated, this actually
     REMOVES it): any token covered by an occurrence of a word n-gram that
@@ -1208,12 +1141,12 @@ def span_scrub(
     bounded sequence() explode (n per occurrence); the scrub is one
     co-partitioned anti-join on (doc, pos)."""
     toks = documents.select(
-        F.col(key_col).alias("key"),
-        F.posexplode(F.split(F.trim(F.col(text_col)), r"\s+")).alias("pos", "tok"),
+        F.col("doc_id").alias("key"),
+        F.posexplode(F.split(F.trim(F.col("text")), r"\s+")).alias("pos", "tok"),
     ).localCheckpoint()  # feeds the rebuild AND the token counts
     doc_grams = documents.select(
-        F.col(key_col).alias("key"),
-        F.posexplode(_word_ngrams_col(F.col(text_col), n)).alias("gpos", "g"),
+        F.col("doc_id").alias("key"),
+        F.posexplode(_word_ngrams_col(F.col("text"), n)).alias("gpos", "g"),
     ).select("key", "gpos", F.md5("g").alias("dg")).localCheckpoint()
     hot = (
         doc_grams.select("key", "dg")
@@ -1246,7 +1179,7 @@ def span_scrub(
         n_tok.join(n_scrub, "key", "left")
         .join(rebuilt, "key", "left")
         .select(
-            F.col("key").alias(key_col),
+            F.col("key").alias("doc_id"),
             "n_tokens",
             F.coalesce("n_scrubbed", F.lit(0).cast("bigint")).alias("n_scrubbed"),
             # a fully-scrubbed document has an EMPTY stream: md5('')
@@ -1263,13 +1196,13 @@ def span_scrub(
 QUALITY_LR_WEIGHTS = (-1.5, 0.35, -4.0, -2.5, 0.0008)  # bias, mean_wl, punct_r, digit_r, n_chars
 
 
-def quality_lr_score(documents: DataFrame, key_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def quality_lr_score(documents: DataFrame) -> DataFrame:
     """Linear quality-classifier APPLY (the classifier-based filtering
     stage; weights fixed, see QUALITY_LR_WEIGHTS): score = w0 + w1*mwl +
     w2*punct + w3*digit + w4*n_chars, keep = score > 0. Pure codegen,
     zero shuffles; float ops fixed-order single-rounded from shared
     strtod literals."""
-    q = quality_struct(F.col(text_col))
+    q = quality_struct(F.col("text"))
     w0, w1, w2, w3, w4 = QUALITY_LR_WEIGHTS
     score = (
         F.lit(w0)
@@ -1279,18 +1212,13 @@ def quality_lr_score(documents: DataFrame, key_col: str = "doc_id", text_col: st
         + F.lit(w4) * q["n_chars"].cast("double")
     )
     return documents.select(
-        F.col(key_col),
+        F.col("doc_id"),
         score.cast("float").cast("double").alias("lr_score"),
         (score > 0).alias("keep"),
     )
 
 
-def dataset_split(
-    documents: DataFrame,
-    val_pct: int = 10,
-    test_pct: int = 10,
-    key_col: str = "doc_id",
-) -> DataFrame:
+def dataset_split(documents: DataFrame, val_pct: int = 10, test_pct: int = 10) -> DataFrame:
     """Deterministic train/val/test assignment by md5 bucket (the
     deterministic_sample convention: same split at any parallelism, on
     re-runs, and in the oracle) + per-(split, lang) counts — the audit
@@ -1299,7 +1227,7 @@ def dataset_split(
     Zero-shuffle assignment; one (split, lang) rollup."""
     # 100 divides SAMPLE_BUCKETS, so this nests exactly inside the
     # deterministic_sample bucket space
-    bucket = sample_hash_col(F.col(key_col)) % 100
+    bucket = sample_hash_col(F.col("doc_id")) % 100
     split = (
         F.when(bucket < val_pct, F.lit("val"))
         .when(bucket < val_pct + test_pct, F.lit("test"))

@@ -20,8 +20,8 @@ from ..plans.localtable import literal_table
 DEFAULT_TILE_RES = 8  # ~1.4 degree tiles
 
 
-def with_tile(df: DataFrame, res: int = DEFAULT_TILE_RES, lon: str = "lon", lat: str = "lat") -> DataFrame:
-    return df.withColumn("tile_id", cellgrid.cell_id_col(F.col(lon), F.col(lat), res))
+def with_tile(df: DataFrame, res: int = DEFAULT_TILE_RES) -> DataFrame:
+    return df.withColumn("tile_id", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
 
 
 def tile_doc_counts(pages: DataFrame, res: int = DEFAULT_TILE_RES) -> DataFrame:

@@ -48,14 +48,14 @@ def extract_text_col(html_bin: Column) -> Column:
     return strip_markup_col(F.decode(html_bin, "utf-8"))
 
 
-def extract_paragraphs(pages: DataFrame, html_col: str = "html", key_col: str = "url") -> DataFrame:
+def extract_paragraphs(pages: DataFrame) -> DataFrame:
     """One row per <p> block: (key, para_idx, paragraph) with the paragraph
     content markup-stripped. posexplode keeps the in-document order."""
-    html_text = F.decode(F.col(html_col), "utf-8")
+    html_text = F.decode(F.col("html"), "utf-8")
     nosrc = F.regexp_replace(F.regexp_replace(html_text, PAT_SCRIPT, ""), PAT_STYLE, "")
     paras = F.regexp_extract_all(nosrc, F.lit(PAT_PARAGRAPH), 1)
     return pages.select(
-        F.col(key_col).alias("key"), F.posexplode(paras).alias("para_idx", "raw")
+        F.col("url").alias("key"), F.posexplode(paras).alias("para_idx", "raw")
     ).select("key", "para_idx", strip_markup_col(F.col("raw")).alias("paragraph"))
 
 
@@ -153,14 +153,14 @@ def url_canonicalize(pages: DataFrame, url_col: str = "url") -> DataFrame:
     return pages.withColumn("canonical_url", canonical_url_col(F.col(url_col)))
 
 
-def canonical_url_dedup(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def canonical_url_dedup(pages: DataFrame) -> DataFrame:
     """Exact dedup on the canonical URL (the crawl-frontier/recrawl dedup
     every web pipeline runs before content dedup): one shuffle on the
     canonical key, smallest raw URL kept as representative."""
     return (
-        url_canonicalize(pages, url_col)
+        url_canonicalize(pages, "url")
         .groupBy("canonical_url")
-        .agg(F.count(F.lit(1)).alias("n_variants"), F.min(url_col).alias("representative"))
+        .agg(F.count(F.lit(1)).alias("n_variants"), F.min("url").alias("representative"))
     )
 
 
@@ -292,13 +292,13 @@ def extract_links(
     return pages.select(F.col(key_col).alias("key"), F.explode(links).alias("link"))
 
 
-def host_link_graph(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def host_link_graph(pages: DataFrame) -> DataFrame:
     """Host-level hyperlink graph: (src_host, dst_host, n_links) — the
     CC-style web-graph rollup used for domain ranking and crawl frontier
     scoring. One shuffle (the groupBy); the href explode stays narrow.
     src hosts follow the corpus host distribution, so the agg's skew keys
     are the big hosts — AQE's skew handling covers the exchange."""
-    links = extract_links(pages, html_col=html_col, key_col="url")
+    links = extract_links(pages, html_col="html", key_col="url")
     return (
         links.select(
             url_host_col(F.col("key")).alias("src_host"),
@@ -320,14 +320,14 @@ def synth_html_pages(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def _host_graph(pages: DataFrame, html_col: str) -> tuple[DataFrame, DataFrame]:
+def _host_graph(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(nodes, edges) of the extracted host graph: `host` nodes and
     `src` -> `dst` host edges, one per link (parallel edges kept). Both feed
     2+ consumers (degree + per-round joins) and would otherwise re-run the
     regex explode per round."""
     from pyspark.storagelevel import StorageLevel
 
-    links = extract_links(pages, html_col=html_col, key_col="url")
+    links = extract_links(pages, html_col="html", key_col="url")
     # persist, not checkpoint (r7): same materialize-once guarantee for the
     # round-invariant edge/node inputs, shared across invocations in a
     # session (per-round rank state is materialized separately)
@@ -344,7 +344,7 @@ def _host_graph(pages: DataFrame, html_col: str) -> tuple[DataFrame, DataFrame]:
     return nodes, edges
 
 
-def link_pagerank(pages: DataFrame, html_col: str = "html", iters: int = 3) -> DataFrame:
+def link_pagerank(pages: DataFrame, iters: int = 3) -> DataFrame:
     """Integer-exact PageRank over the REAL extracted host graph — the
     end-to-end web pipeline composition (href regex -> host edges ->
     graph.pagerank_int). Parallel edges (repeated links between the same
@@ -354,22 +354,20 @@ def link_pagerank(pages: DataFrame, html_col: str = "html", iters: int = 3) -> D
     the whole composition hash-gates."""
     from .graph import pagerank_int
 
-    nodes, edges = _host_graph(pages, html_col)
+    nodes, edges = _host_graph(pages)
     return pagerank_int(nodes, edges, iters=iters, key_col="host")
 
 
 PAT_ANCHOR = '<a href="([^"]*)"[^>]*>([^<]*)</a>'
 
 
-def extract_anchor_texts(
-    pages: DataFrame, html_col: str = "html", key_col: str = "doc_id"
-) -> DataFrame:
+def extract_anchor_texts(pages: DataFrame, key_col: str = "doc_id") -> DataFrame:
     """(key, link, anchor_text) per anchor — the anchor-text corpus used
     for link-prediction / title-augmentation training data. Both capture
     groups come from the SAME pattern via two regexp_extract_all calls
     zipped positionally (each anchor matches exactly once, so the arrays
     align); RE2-safe — no backreferences or lookahead."""
-    html_text = F.decode(F.col(html_col), "utf-8")
+    html_text = F.decode(F.col("html"), "utf-8")
     links = F.regexp_extract_all(html_text, F.lit(PAT_ANCHOR), 1)
     texts = F.regexp_extract_all(html_text, F.lit(PAT_ANCHOR), 2)
     pairs = F.arrays_zip(links.alias("link"), texts.alias("anchor_text"))
@@ -378,12 +376,7 @@ def extract_anchor_texts(
     )
 
 
-def boilerplate_scrub(
-    pages: DataFrame,
-    min_pages: int = 2,
-    html_col: str = "html",
-    key_col: str = "url",
-) -> DataFrame:
+def boilerplate_scrub(pages: DataFrame, min_pages: int = 2) -> DataFrame:
     """RefinedWeb/CCNet-style boilerplate removal, end to end: paragraphs
     appearing on >= min_pages DISTINCT pages (nav bars, footers, cookie
     banners) are scrubbed from every page and the page text is
@@ -404,11 +397,7 @@ def boilerplate_scrub(
     # are join-dominated and measured FASTER without it, so the fan-out
     # lives here, not in synth_linked_pages)
     pages = fan_out(pages)
-    paras = (
-        extract_paragraphs(pages, html_col=html_col, key_col=key_col)
-        .withColumn("h", F.md5("paragraph"))
-        .localCheckpoint()
-    )
+    paras = extract_paragraphs(pages).withColumn("h", F.md5("paragraph")).localCheckpoint()
     hot = (
         paras.select("key", "h")
         .distinct()
@@ -434,7 +423,7 @@ def boilerplate_scrub(
     )
 
 
-def host_components(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def host_components(pages: DataFrame) -> DataFrame:
     """Weakly-connected components of the host link graph: (host,
     component) where component = the smallest host name reachable through
     links in either direction — the crawl-frontier partitioning / mirror-
@@ -445,7 +434,7 @@ def host_components(pages: DataFrame, html_col: str = "html") -> DataFrame:
     candidate label)."""
     from .dedup import duplicate_clusters
 
-    edges = host_link_graph(pages, html_col=html_col).select(
+    edges = host_link_graph(pages).select(
         F.col("src_host").alias("key_a"), F.col("dst_host").alias("key_b")
     )
     return duplicate_clusters(edges).select(
@@ -453,9 +442,7 @@ def host_components(pages: DataFrame, html_col: str = "html") -> DataFrame:
     )
 
 
-def co_citation(
-    pages: DataFrame, html_col: str = "html", max_hosts_per_page: int = 32
-) -> DataFrame:
+def co_citation(pages: DataFrame, max_hosts_per_page: int = 32) -> DataFrame:
     """Co-citation counts: pairs of hosts linked from the SAME page,
     counted across pages — the classic relatedness signal (Small 1973 /
     HITS-adjacent) crawl analytics build host similarity from. Output
@@ -471,7 +458,7 @@ def co_citation(
     from pyspark.sql import Window
 
     hosts = (
-        extract_links(pages, html_col=html_col, key_col="url")
+        extract_links(pages, html_col="html", key_col="url")
         .select("key", url_host_col(F.col("link")).alias("host"))
         .where(F.col("host") != "")
         .distinct()
@@ -492,30 +479,30 @@ def co_citation(
     )
 
 
-def host_degree_histogram(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def host_degree_histogram(pages: DataFrame) -> DataFrame:
     """Degree distribution of the host link graph: (out_degree,
     n_hosts) — the power-law sanity check every web-graph pipeline plots
     before trusting rank/component outputs (and the input to skew
     decisions: the head of this histogram IS the salt-worthy key set).
     Distinct-neighbor degree (parallel edges collapse). Two
     map-side-partial shuffles, both at host/degree granularity."""
-    edges = host_link_graph(pages, html_col=html_col)
+    edges = host_link_graph(pages)
     deg = edges.groupBy("src_host").agg(F.count(F.lit(1)).alias("out_degree"))
     return deg.groupBy("out_degree").agg(F.count(F.lit(1)).alias("n_hosts"))
 
 
-def url_path_stats(pages: DataFrame, url_col: str = "url") -> DataFrame:
+def url_path_stats(pages: DataFrame) -> DataFrame:
     """Per-host URL shape profile: (host, n_pages, max_depth, total_depth,
     n_with_query) where depth counts path segments — the crawl-frontier
     heuristic inputs (deep paths and query-string URLs are low-priority /
     trap-prone). Pure codegen string ops + one host-granularity shuffle;
     depth = occurrences of '/' after the scheme+host prefix, exact
     integers throughout."""
-    path = F.regexp_replace(F.col(url_col), r"^[a-z]+://[^/]*", "")
+    path = F.regexp_replace(F.col("url"), r"^[a-z]+://[^/]*", "")
     depth = (F.length(path) - F.length(F.regexp_replace(path, "/", ""))).cast("bigint")
-    has_q = F.col(url_col).contains("?").cast("bigint")
+    has_q = F.col("url").contains("?").cast("bigint")
     return (
-        pages.select(url_host_col(F.col(url_col)).alias("host"), depth.alias("d"), has_q.alias("q"))
+        pages.select(url_host_col(F.col("url")).alias("host"), depth.alias("d"), has_q.alias("q"))
         .groupBy("host")
         .agg(
             F.count(F.lit(1)).alias("n_pages"),
@@ -526,7 +513,7 @@ def url_path_stats(pages: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def reciprocal_links(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def reciprocal_links(pages: DataFrame) -> DataFrame:
     """Reciprocal host links — pairs linking each other (link-exchange /
     mirror detection, a classic spam signal): (host_a, host_b, n_ab,
     n_ba) with host_a < host_b, counts = parallel-link multiplicities in
@@ -537,9 +524,7 @@ def reciprocal_links(pages: DataFrame, html_col: str = "html") -> DataFrame:
     own flipped projection on the canonicalized pair key — pair-table
     scale, one equi-join. The pair rollup feeds both sides, so it is
     localCheckpoint()ed once (fan-out rule)."""
-    g = host_link_graph(pages, html_col=html_col).where(
-        F.col("src_host") != F.col("dst_host")
-    ).localCheckpoint()
+    g = host_link_graph(pages).where(F.col("src_host") != F.col("dst_host")).localCheckpoint()
     fwd = g.where(F.col("src_host") < F.col("dst_host")).select(
         F.col("src_host").alias("host_a"), F.col("dst_host").alias("host_b"), F.col("n_links").alias("n_ab")
     )
@@ -559,7 +544,7 @@ RECIPROCAL_GATE_PAGES: tuple[tuple[str, str], ...] = (
 )
 
 
-def host_bfs_depth(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def host_bfs_depth(pages: DataFrame) -> DataFrame:
     """Hop distance of every host from the lexicographically smallest
     host in the link graph (undirected) — the crawl-frontier 'rings from
     the seed' view. Composes href extraction with graph.bfs_depth; the
@@ -567,7 +552,7 @@ def host_bfs_depth(pages: DataFrame, html_col: str = "html") -> DataFrame:
     the pages table."""
     from .graph import bfs_depth
 
-    g = host_link_graph(pages, html_col=html_col).select("src_host", "dst_host").localCheckpoint()
+    g = host_link_graph(pages).select("src_host", "dst_host").localCheckpoint()
     seed = g.select(F.least(F.min("src_host"), F.min("dst_host")).alias("m")).collect()[0]["m"]
     return bfs_depth(g, seed, src_col="src_host", dst_col="dst_host").select(
         F.col("node").alias("host"), F.col("depth").cast("int").alias("depth")
@@ -680,23 +665,23 @@ def domain_stats(pages: DataFrame) -> DataFrame:
     )
 
 
-def link_hits(pages: DataFrame, html_col: str = "html", iters: int = 2) -> DataFrame:
+def link_hits(pages: DataFrame, iters: int = 2) -> DataFrame:
     """Integer-exact HITS over the REAL extracted host graph (href regex
     -> host edges -> graph.hits_int) — domain hub/authority scoring, the
     link_pagerank composition with the alternating recurrence."""
     from .graph import hits_int
 
-    nodes, edges = _host_graph(pages, html_col)
+    nodes, edges = _host_graph(pages)
     return hits_int(nodes, edges, iters=iters, key_col="host")
 
 
-def link_internal_stats(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def link_internal_stats(pages: DataFrame) -> DataFrame:
     """Per-source-REGISTERED-DOMAIN outlink profile: total links, internal
     (same registered domain) vs external, and the internal ratio — the
     link-farm / SEO-pattern signal crawl schedulers threshold on. Pure
     codegen link + domain extraction, one domain-keyed shuffle; the ratio
     is one double division of exact BIGINTs."""
-    links = extract_links(pages, html_col=html_col, key_col="url")
+    links = extract_links(pages, html_col="html", key_col="url")
     lab = links.select(
         registered_domain_col(url_host_col(F.col("key"))).alias("src_domain"),
         registered_domain_col(url_host_col(F.col("link"))).alias("dst_domain"),
@@ -719,7 +704,7 @@ def link_internal_stats(pages: DataFrame, html_col: str = "html") -> DataFrame:
     )
 
 
-def anchor_target_stats(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def anchor_target_stats(pages: DataFrame) -> DataFrame:
     """Per-link-TARGET anchor-text rollup — the anchor corpus view used
     for title augmentation / link-prediction data: (link, n_anchors,
     n_unique_texts, top_anchor, top_count), top = modal anchor text with
@@ -731,7 +716,7 @@ def anchor_target_stats(pages: DataFrame, html_col: str = "html") -> DataFrame:
     from pyspark.sql import Window
 
     per_text = (
-        extract_anchor_texts(pages, html_col=html_col, key_col="url")
+        extract_anchor_texts(pages, key_col="url")
         .groupBy("link", "anchor_text")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint()  # feeds the window AND the totals (fan-out rule)

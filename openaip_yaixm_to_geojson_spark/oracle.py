@@ -2619,7 +2619,7 @@ r AS (SELECT key, score, ROW_NUMBER() OVER (ORDER BY score DESC, key) AS rn FROM
 SELECT key AS doc_id, score, CAST(rn AS INT) AS rnk FROM r WHERE rn <= {k}"""
 
 
-def _pipeline_corpus_cte(quality_min: float = 0.7, sample_fraction: float = 0.5) -> str:
+def _pipeline_corpus_cte() -> str:
     """The corpus-pipeline selection (plans/pipeline.run_corpus_pipeline)
     recomputed as one CTE chain ending in `corpus(doc_id, text)`:
     normalization-fingerprint dedup FIRST (representative = min doc_id per
@@ -2627,15 +2627,16 @@ def _pipeline_corpus_cte(quality_min: float = 0.7, sample_fraction: float = 0.5)
     stage, unlike sql_corpus_clean's filter-then-dedup operator), then the
     quality floor, then the deterministic md5-bucket sample."""
     from .operators.text import SAMPLE_BUCKETS
+    from .plans.pipeline import QUALITY_MIN, SAMPLE_FRACTION
 
     score = _quality_parts()["score"]
-    threshold = int(round(sample_fraction * SAMPLE_BUCKETS))
+    threshold = int(round(SAMPLE_FRACTION * SAMPLE_BUCKETS))
     bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {SAMPLE_BUCKETS}"
     fp = "md5(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
     return f"""an AS (SELECT doc_id, text, {fp} AS fp, {score} AS q FROM documents),
 dd AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id) AS rn FROM an),
 corpus AS (SELECT doc_id, text FROM dd
-           WHERE rn = 1 AND q >= CAST({quality_min!r} AS DOUBLE) AND {bucket} < {threshold})"""
+           WHERE rn = 1 AND q >= CAST({QUALITY_MIN!r} AS DOUBLE) AND {bucket} < {threshold})"""
 
 
 def sql_pipeline_corpus_stats() -> str:
@@ -2664,26 +2665,30 @@ SELECT lang_pred, COUNT(*) AS n_docs,
 FROM p GROUP BY lang_pred"""
 
 
-def sql_pipeline_chunks(size: int = 64, stride: int = 48) -> str:
+def sql_pipeline_chunks() -> str:
     """Pipeline chunks EXPORT stage twin: the sql_chunk_documents body over
     the composed corpus selection instead of raw documents."""
+    from .plans.pipeline import CHUNK_SIZE, CHUNK_STRIDE
+
     return f"""WITH {_pipeline_corpus_cte()},
 w AS (SELECT doc_id AS key, {_WORDS} AS words FROM corpus),
-s AS (SELECT key, words, unnest(range(0, len(words), {stride})) AS s FROM w)
-SELECT key, s // {stride} AS chunk_id, s AS chunk_start,
-       CAST(LEAST({size}, len(words) - s) AS BIGINT) AS chunk_tokens,
-       array_to_string(words[s + 1 : s + {size}], ' ') AS chunk_text
+s AS (SELECT key, words, unnest(range(0, len(words), {CHUNK_STRIDE})) AS s FROM w)
+SELECT key, s // {CHUNK_STRIDE} AS chunk_id, s AS chunk_start,
+       CAST(LEAST({CHUNK_SIZE}, len(words) - s) AS BIGINT) AS chunk_tokens,
+       array_to_string(words[s + 1 : s + {CHUNK_SIZE}], ' ') AS chunk_text
 FROM s"""
 
 
-def sql_pipeline_packed(capacity: int = 512, n_streams: int = 8) -> str:
+def sql_pipeline_packed() -> str:
     """Pipeline packed EXPORT stage twin: the sql_pack_documents body over
     the composed corpus selection."""
+    from .plans.pipeline import PACK_CAPACITY, PACK_STREAMS
+
     h = _hex8_sql("CAST(doc_id AS VARCHAR)")
     return f"""WITH {_pipeline_corpus_cte()},
 t AS (
   SELECT doc_id AS key, {h} AS h,
-         CAST({h} % {n_streams} AS BIGINT) AS stream,
+         CAST({h} % {PACK_STREAMS} AS BIGINT) AS stream,
          CAST(len({_WORDS}) AS BIGINT) AS n_tokens
   FROM corpus
 ),
@@ -2695,7 +2700,7 @@ c AS (
          ) AS BIGINT) - n_tokens AS tok_offset
   FROM t
 )
-SELECT key, stream, tok_offset, n_tokens, tok_offset // {capacity} AS window_id
+SELECT key, stream, tok_offset, n_tokens, tok_offset // {PACK_CAPACITY} AS window_id
 FROM c"""
 
 

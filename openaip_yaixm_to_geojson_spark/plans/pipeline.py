@@ -32,6 +32,13 @@ from .checkpoint import StageRunner
 # before it, keyed by name
 Stage = tuple[str, Callable[[dict[str, DataFrame]], DataFrame], tuple[str, ...]]
 
+# run_corpus_pipeline's corpus selection (quality floor, then the md5-bucket
+# sample) and its two export layouts; the oracle's pipeline twins read these
+QUALITY_MIN = 0.7
+SAMPLE_FRACTION = 0.5
+CHUNK_SIZE, CHUNK_STRIDE = 64, 48
+PACK_CAPACITY, PACK_STREAMS = 512, 8
+
 
 def _run_stages(
     spark: SparkSession, checkpoint_dir: str, stages: list[Stage], stop_after: str | None
@@ -56,7 +63,6 @@ def run_pipeline(
     sf_dir: str,
     checkpoint_dir: str,
     polygons: list[dict[str, Any]] | None = None,
-    tile_res: int = DEFAULT_TILE_RES,
     stop_after: str | None = None,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full pipeline. `stop_after` simulates a mid-job
@@ -80,8 +86,8 @@ def run_pipeline(
         ("pages", build_pages, ("cell_r5",)),
         ("join_out", lambda s: spatial_join(s["pages"], polygons, keep_cols=("text", "lang")), ()),
         ("knn_out", lambda s: knn_ring_expansion(s["pages"], polygons), ()),
-        ("tiles", lambda s: tile_class_rollup(s["join_out"], tile_res), ()),
-        ("tile_counts", lambda s: tile_doc_counts(s["pages"], tile_res), ()),
+        ("tiles", lambda s: tile_class_rollup(s["join_out"], DEFAULT_TILE_RES), ()),
+        ("tile_counts", lambda s: tile_doc_counts(s["pages"], DEFAULT_TILE_RES), ()),
         # zoom pyramid: built from the TILE stage, not the fact table — each
         # coarser level costs a tiles-sized aggregation (the 100-TB shape)
         (
@@ -94,12 +100,7 @@ def run_pipeline(
 
 
 def run_corpus_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    checkpoint_dir: str,
-    quality_min: float = 0.7,
-    sample_fraction: float = 0.5,
-    stop_after: str | None = None,
+    spark: SparkSession, sf_dir: str, checkpoint_dir: str, stop_after: str | None = None
 ) -> dict[str, DataFrame]:
     """The training-data twin of run_pipeline: documents -> analyze
     (langid/quality/tokens/fingerprint) -> exact dedup (fingerprint
@@ -118,6 +119,7 @@ def run_corpus_pipeline(
     from ..operators.dedup import lsh_recall_monitor
     from ..operators.terms import duplicated_span_stats
     from ..operators.text import (
+        SAMPLE_BUCKETS,
         analyze_documents,
         chunk_documents,
         pack_documents,
@@ -146,7 +148,7 @@ def run_corpus_pipeline(
             .drop("_rn")
         )
 
-    threshold = int(round(sample_fraction * 1_000_000))
+    threshold = int(round(SAMPLE_FRACTION * SAMPLE_BUCKETS))
     stages: list[Stage] = [
         ("analyzed", build_analyzed, ()),
         ("deduped", build_deduped, ()),
@@ -154,7 +156,7 @@ def run_corpus_pipeline(
             "corpus",
             lambda s: (
                 s["deduped"]
-                .where(F.col("quality_score") >= quality_min)
+                .where(F.col("quality_score") >= QUALITY_MIN)
                 .where(sample_hash_col(F.col("doc_id")) < threshold)
             ),
             (),
@@ -181,7 +183,7 @@ def run_corpus_pipeline(
         # fixed-capacity token streams (the two standard pre-training input
         # layouts); both derive only from the stored corpus stage, so a
         # resume after `corpus` never re-runs analyze/dedup
-        ("chunks", lambda s: chunk_documents(s["corpus"], size=64, stride=48), ()),
-        ("packed", lambda s: pack_documents(s["corpus"], capacity=512, n_streams=8), ()),
+        ("chunks", lambda s: chunk_documents(s["corpus"], CHUNK_SIZE, CHUNK_STRIDE), ()),
+        ("packed", lambda s: pack_documents(s["corpus"], PACK_CAPACITY, PACK_STREAMS), ()),
     ]
     return _run_stages(spark, checkpoint_dir, stages, stop_after)

@@ -137,7 +137,10 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """Distributed WARC ingest: one binaryFile row per `.warc.gz`, gzip
     members walked and parsed inside mapInPandas — files spread across
     the cluster, no driver-side IO."""
-    files = spark.read.format("binaryFile").load(f"{path}/*.warc.gz").select("content")
+    # a filter on the directory, not a glob path: Spark probes a glob path
+    # for streaming-sink metadata first and logs the failed lookup
+    reader = spark.read.format("binaryFile").option("pathGlobFilter", "*.warc.gz")
+    files = reader.load(path).select("content")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

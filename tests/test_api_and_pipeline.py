@@ -380,6 +380,23 @@ def test_corpus_pipeline_resume_and_byte_identity(spark, tmp_path):
         assert runner.content_hash(stage) == StageRunner(spark, ckpt).content_hash(stage)
 
 
+def test_pipeline_oracle_reads_the_pipeline_constants(monkeypatch):
+    """The oracle's pipeline twins read the corpus pipeline's own quality
+    floor and chunk stride, so a change to either reaches both engines
+    (Spark-free: only the SQL text is built)."""
+    from openaip_yaixm_to_geojson_spark import oracle
+    from openaip_yaixm_to_geojson_spark.plans import pipeline
+
+    stats, chunks = oracle.sql_pipeline_corpus_stats(), oracle.sql_pipeline_chunks()
+    assert "CAST(0.7 AS DOUBLE)" in chunks and "range(0, len(words), 48)" in chunks
+    monkeypatch.setattr(pipeline, "QUALITY_MIN", 0.25)
+    assert oracle.sql_pipeline_corpus_stats() == stats.replace("CAST(0.7 AS DOUBLE)", "CAST(0.25 AS DOUBLE)")
+    assert oracle.sql_pipeline_corpus_stats() != stats
+    monkeypatch.setattr(pipeline, "CHUNK_STRIDE", 7)
+    moved = oracle.sql_pipeline_chunks()
+    assert "CAST(0.25 AS DOUBLE)" in moved and "range(0, len(words), 7)" in moved and "s // 7" in moved
+
+
 def test_warc_gz_is_real_gzip_and_reads_back(spark, tmp_path):
     """make_warc_gz writes genuine multi-member gzip (stdlib gzip module
     decompresses the WHOLE file — member concatenation is spec behavior)

@@ -2,9 +2,9 @@
 import in the entry points, tools and benchmark harness resolves, every
 tool the run instructions name exists, every operator the README names
 resolves, the core operators take no speed-only tuning parameters, every
-public package function has a caller outside the tests, the shared bench
-suite matches bench.py's, and the test-data scaler handles its smallest
-factor."""
+public package function has a caller outside the tests, every column-name
+parameter is set by some caller, the shared bench suite matches
+bench.py's, and the test-data scaler handles its smallest factor."""
 
 import ast
 import importlib
@@ -132,31 +132,125 @@ _CALLER_ALLOWLIST = {
 
 
 def test_package_functions_have_a_non_test_caller():
-    """Every public top-level function of the package is used (as a name,
-    an attribute or a `from ... import`) in some non-test source, other than
-    inside its own definition. Code that only tests reach fails here unless
-    the allowlist names the production path it pins."""
-    defined, used = {}, set()
+    """Every public top-level function of the package is used in some
+    non-test source, other than inside its own definition: as an attribute
+    or a `from ... import` anywhere, or as a bare name in its own module or
+    in a file that imports it (a local variable of the same name elsewhere
+    is not a use). Code that only tests reach fails here unless the
+    allowlist names the production path it pins."""
+    defined, used, bare = {}, set(), {}
     for path in sorted((REPO / PACKAGE).rglob("*.py")) + SCRIPTS:
         tree = ast.parse(path.read_text(), str(path))
         in_package = path.is_relative_to(REPO / PACKAGE)
+        imported, names = set(), set()
         for top in tree.body:
             own = top.name if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)) else None
             if own and in_package and not own.startswith("_"):
                 defined[f"{path.relative_to(REPO / PACKAGE).as_posix()}:{own}"] = own
             for node in ast.walk(top):
                 if isinstance(node, ast.ImportFrom):
-                    used.update(a.name for a in node.names)
+                    imported.update(a.name for a in node.names)
                 elif isinstance(node, ast.Name) and node.id != own:
-                    used.add(node.id)
+                    names.add(node.id)
                 elif isinstance(node, ast.Attribute) and node.attr != own:
                     used.add(node.attr)
+        used |= imported
+        if in_package:
+            bare[path.relative_to(REPO / PACKAGE).as_posix()] = names
     allowed = {f"{m}:{f}" for m, fs in _CALLER_ALLOWLIST.items() for f in fs}
     assert allowed <= set(defined), sorted(allowed - set(defined))
     assert len(defined) > 400
-    uncalled = sorted(k for k, name in defined.items() if name not in used and k not in allowed)
+    called = {k for k, name in defined.items() if name in used or name in bare[k.split(":")[0]]}
+    uncalled = sorted(set(defined) - called - allowed)
     assert not uncalled, "no caller outside the tests: " + ", ".join(uncalled)
-    assert sorted(k for k in allowed if defined[k] in used) == []
+    assert sorted(allowed & called) == []
+
+
+def _column_parameters(path: Path, tree: ast.Module):
+    """(key, function, name, position, default) for every defaulted
+    column-name parameter of a public top-level function: a `*_col`, or
+    `with_tile`'s `lon` and `lat`. `position` is None for keyword-only."""
+    for top in tree.body:
+        if not isinstance(top, ast.FunctionDef) or top.name.startswith("_"):
+            continue
+        a = top.args
+        positional = a.posonlyargs + a.args
+        defaults = [None] * (len(positional) - len(a.defaults)) + a.defaults
+        slots = [(arg, i, d) for i, (arg, d) in enumerate(zip(positional, defaults))]
+        slots += [(arg, None, d) for arg, d in zip(a.kwonlyargs, a.kw_defaults)]
+        for arg, position, default in slots:
+            name = arg.arg
+            is_column = name.endswith("_col") or (top.name == "with_tile" and name in ("lon", "lat"))
+            if default is not None and is_column:
+                key = f"{path.relative_to(REPO / PACKAGE).as_posix()}:{top.name}({name})"
+                yield key, top.name, name, position, ast.unparse(default)
+
+
+def _passed_arguments(tree: ast.Module, params: dict):
+    """(key, value node, scope) for every call that passes a tracked
+    parameter by keyword or by position; `scope` maps each name bound as a
+    parameter of the enclosing functions to its tracked key (or None)."""
+    by_function = {}
+    for key, (function, name, position, _) in params.items():
+        by_function.setdefault(function, []).append((key, name, position))
+
+    def visit(node, scope):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            a = node.args
+            own = {arg.arg: None for arg in a.posonlyargs + a.args + a.kwonlyargs}
+            if isinstance(node, ast.FunctionDef):
+                own.update({n: key for key, (f, n, _, _) in params.items() if f == node.name and n in own})
+            scope = {**scope, **own}
+        if isinstance(node, ast.Call):
+            called = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+            positional = []
+            for arg in node.args:
+                if isinstance(arg, ast.Starred):
+                    break
+                positional.append(arg)
+            keywords = {k.arg: k.value for k in node.keywords if k.arg}
+            for key, name, position in by_function.get(called, ()):
+                if name in keywords:
+                    yield key, keywords[name], scope
+                elif position is not None and position < len(positional):
+                    yield key, positional[position], scope
+        for child in ast.iter_child_nodes(node):
+            yield from visit(child, scope)
+
+    yield from visit(tree, {})
+
+
+def test_column_parameters_are_set_by_a_caller():
+    """Operators name the corpus columns directly. A column-name parameter
+    (a defaulted `*_col`, or `with_tile`'s `lon` and `lat`) of a public
+    package function is kept only where some non-test call passes it a
+    value. A call that only forwards an enclosing column parameter which no
+    caller sets, and which has the same default, does not count; that rule
+    repeats until nothing changes."""
+    paths = sorted((REPO / PACKAGE).rglob("*.py")) + SCRIPTS
+    trees = {path: ast.parse(path.read_text(), str(path)) for path in paths}
+    params = {
+        key: rest
+        for path, tree in trees.items()
+        if path.is_relative_to(REPO / PACKAGE)
+        for key, *rest in _column_parameters(path, tree)
+    }
+    passes = [p for tree in trees.values() for p in _passed_arguments(tree, params)]
+    assert params and passes
+    is_set, changed = set(), True
+    while changed:
+        changed = False
+        for key, value, scope in passes:
+            if key in is_set:
+                continue
+            forwarded = scope.get(value.id) if isinstance(value, ast.Name) else None
+            same_default = forwarded is not None and params[forwarded][3] == params[key][3]
+            if same_default and forwarded not in is_set:
+                continue
+            is_set.add(key)
+            changed = True
+    unset = sorted(set(params) - is_set)
+    assert not unset, f"{len(unset)} column parameters no caller sets: " + ", ".join(unset)
 
 
 def _bench_timed_names() -> list[str]:
