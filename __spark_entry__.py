@@ -1191,18 +1191,20 @@ def q_sample(spark, sf_dir):
 
 def q_corpus_clean(spark, sf_dir):
     """Composed training-data pipeline: quality filter -> exact-dup
-    representative -> deterministic 50% sample -> fingerprint + tokens."""
+    representative -> deterministic sample -> fingerprint + tokens. The
+    quality floor and the sample fraction are the corpus pipeline's."""
     from openaip_yaixm_to_geojson_spark.operators.text import (
         deterministic_sample,
         quality_struct,
     )
+    from openaip_yaixm_to_geojson_spark.plans.pipeline import QUALITY_MIN, SAMPLE_FRACTION
 
     docs = _docs(spark, sf_dir)
-    filtered = docs.where(quality_struct(F.col("text"))["quality_score"] >= 0.7)
+    filtered = docs.where(quality_struct(F.col("text"))["quality_score"] >= QUALITY_MIN)
     reps = exact_dedup(filtered).select(F.col("representative").alias("doc_id"))
     survivors = filtered.join(reps, "doc_id")
     ws, _bpe = token_count_cols(F.col("text"))
-    return deterministic_sample(survivors, 0.5).select(
+    return deterministic_sample(survivors, SAMPLE_FRACTION).select(
         "doc_id", fingerprint_col(F.col("text")).alias("fingerprint"), ws.alias("n_tokens_ws")
     )
 
@@ -1322,7 +1324,7 @@ def q_co_citation(spark, sf_dir):
 
 def q_host_bfs_depth(spark, sf_dir):
     """Hop rings from the seed host: iterative BFS frontier expansion
-    (raises past max_rounds); oracle = recursive-CTE walk + MIN(depth)."""
+    (raises past 20 rounds); oracle = recursive-CTE walk + MIN(depth)."""
     from openaip_yaixm_to_geojson_spark.operators.web import (
         host_bfs_depth,
         synth_linked_pages,
@@ -1912,7 +1914,7 @@ def q_ann_topk_quantized(spark, sf_dir):
 
 def q_ann_two_stage(spark, sf_dir):
     """Two-stage retrieval (the production serving shape): int8
-    compressed-domain candidate generation (k*overfetch, exact BIGINT
+    compressed-domain candidate generation (12 per query, exact BIGINT
     dots) -> exact float-dot rerank on candidates only. Both stages
     formulation-shared with the oracle."""
     from openaip_yaixm_to_geojson_spark.operators.similarity import ann_two_stage

@@ -117,7 +117,7 @@ def convert_blocks(
     return features
 
 
-def fixture_polygons(fix_geometries: bool = True) -> list[dict[str, Any]]:
+def fixture_polygons() -> list[dict[str, Any]]:
     """The reference fixture cases converted driver-side, each with a
     stable poly_id. This is the canonical polygon set used by spatial-join /
     kNN / tile queries and their oracles. `multi-sequence` is omitted — it
@@ -135,7 +135,7 @@ def fixture_polygons(fix_geometries: bool = True) -> list[dict[str, Any]]:
         "pill-shaped",
     ]:
         blocks.extend(FIXTURES[case]["airspace"])
-    features = convert_blocks(blocks, services=FIXTURES["service"]["service"], fix_geometries=fix_geometries)
+    features = convert_blocks(blocks, services=FIXTURES["service"]["service"], fix_geometries=True)
     out = []
     for i, feature in enumerate(features):
         feature["poly_id"] = i

@@ -8,7 +8,7 @@ pandas-UDF MinHash variant exists for throughput comparison in bench.
 
 Scale notes:
 * exact dedup: one shuffle on the 16-byte digest (map-side partial agg);
-* MinHash LSH: signatures are narrow (num_hashes x 16-char prefixes),
+* MinHash LSH: signatures are narrow (16 x 16-char prefixes),
   candidate generation is a self-join on (band_idx, band_key) — banding
   bounds the join fan-out; verification re-checks true Jaccard on the
   candidate pairs only;
@@ -27,11 +27,10 @@ from pyspark.storagelevel import StorageLevel
 from ..plans.fanout import fan_out
 
 
-def word_shingles(text: Column, n: int = 3, distinct: bool = True) -> Column:
-    """Word n-grams (shingles), all JVM-side — distinct by default, or the
-    full position-ordered sequence with distinct=False (span-level ops).
+def word_shingles(text: Column) -> Column:
+    """Distinct word 3-grams (shingles), all JVM-side.
 
-    Built by zipping n shifted slices of the word array — O(words), and no
+    Built by zipping 3 shifted slices of the word array — O(words), and no
     reference to the (expensive) split expression inside any lambda body:
     higher-order-function lambdas re-evaluate captured expressions per
     element, which turned the previous slice-in-lambda formulation into
@@ -42,8 +41,7 @@ def word_shingles(text: Column, n: int = 3, distinct: bool = True) -> Column:
     # intermediate arrays per row); semantics identical (exceptAll-equal)
     from .text import _word_ngrams_col
 
-    grams = _word_ngrams_col(text, n)
-    return F.array_distinct(grams) if distinct else grams
+    return F.array_distinct(_word_ngrams_col(text, 3))
 
 
 def exact_dedup(documents: DataFrame) -> DataFrame:
@@ -60,15 +58,16 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 
 
 MINHASH_P = 2_147_483_647  # 2^31 - 1: keeps a*x + b < 2^62 under ANSI mode
+MINHASH_NUM_HASHES = 16  # signature length; the LSH bands split it evenly
 
 
-def minhash_params(num_hashes: int = 16) -> list[tuple[int, int]]:
+def minhash_params() -> list[tuple[int, int]]:
     """Deterministic affine-family parameters (a_j, b_j), md5-derived like
     every other synthetic constant in the engine (no RNG state)."""
     import hashlib
 
     out = []
-    for j in range(num_hashes):
+    for j in range(MINHASH_NUM_HASHES):
         a = int(hashlib.md5(f"minhash-a-{j}".encode()).hexdigest()[:8], 16) % (MINHASH_P - 1) + 1
         b = int(hashlib.md5(f"minhash-b-{j}".encode()).hexdigest()[:8], 16) % MINHASH_P
         out.append((a, b))
@@ -84,13 +83,13 @@ def shingle_hash_col(shingles: Column) -> Column:
     )
 
 
-def minhash_from_hashes(shingle_hashes: Column, num_hashes: int = 16) -> Column:
+def minhash_from_hashes(shingle_hashes: Column) -> Column:
     """MinHash signature (array of bigint minima) from an
     ALREADY-MATERIALIZED base-hash column.
 
     Universal affine family h_j(x) = (a_j*x + b_j) mod P over the single
     md5-derived base hash — one digest per shingle instead of one per
-    (shingle, j), which is what makes signatures ~num_hashes x cheaper
+    (shingle, j), which is what makes signatures ~16x cheaper
     than the md5-per-hash formulation. The affine re-evaluation per j is
     plain integer arithmetic on a bound column, so the HOF re-evaluation
     trap costs nothing here; the md5 must still live in a materialized
@@ -101,23 +100,23 @@ def minhash_from_hashes(shingle_hashes: Column, num_hashes: int = 16) -> Column:
             F.array_min(
                 F.transform(shingle_hashes, lambda x: (F.lit(a) * x + F.lit(b)) % F.lit(MINHASH_P))
             )
-            for a, b in minhash_params(num_hashes)
+            for a, b in minhash_params()
         ]
     )
 
 
-def shingled_documents(documents: DataFrame, shingle_n: int = 3) -> DataFrame:
+def shingled_documents(documents: DataFrame) -> DataFrame:
     """(key, shingles, sh_hashes) with both arrays materialized (cached) so
     downstream MinHash/Jaccard consumers compute shingles and their md5
     base hashes exactly once. At cluster scale MEMORY_AND_DISK spills;
-    recomputing num_hashes x is strictly worse."""
+    recomputing 16x is strictly worse."""
     from pyspark.storagelevel import StorageLevel
 
     documents = fan_out(documents)  # shingling + md5s dominate on narrow scans
     shingled = (
         documents.select(
             F.col("doc_id").alias("key"),
-            word_shingles(F.col("text"), shingle_n).alias("shingles"),
+            word_shingles(F.col("text")).alias("shingles"),
         )
         .where(F.size("shingles") > 0)
         .withColumn("sh_hashes", shingle_hash_col(F.col("shingles")))
@@ -147,19 +146,17 @@ def lsh_bands(signature: Column, bands: int, rows_per_band: int) -> Column:
 
 def minhash_lsh_pairs(
     documents: DataFrame,
-    num_hashes: int = 16,
     bands: int = 8,
-    shingle_n: int = 3,
     jaccard_threshold: float = 0.5,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash, verified with the
     true shingle Jaccard. Returns (key_a, key_b, jaccard), key_a < key_b."""
-    rows_per_band = num_hashes // bands
-    shingled = shingled_documents(documents, shingle_n)
+    rows_per_band = MINHASH_NUM_HASHES // bands
+    shingled = shingled_documents(documents)
     sigs = shingled.select(
         "key",
         F.size("shingles").alias("n_sh"),
-        minhash_from_hashes(F.col("sh_hashes"), num_hashes).alias("sig"),
+        minhash_from_hashes(F.col("sh_hashes")).alias("sig"),
     )
     # candidate generation joins on (band_idx, band_key) with KEYS ONLY —
     # hot bands fan out, so the wide shingle arrays must not ride through
@@ -220,9 +217,7 @@ def minhash_lsh_pairs(
     return scored.where(F.col("jaccard") >= jaccard_threshold)
 
 
-def ngram_jaccard_pairs(
-    documents: DataFrame, shingle_n: int = 3, threshold: float = 0.5, block_on: Column | None = None
-) -> DataFrame:
+def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Direct n-gram Jaccard similarity for pairs sharing a blocking key;
     exact verification path used to validate the LSH variant.
 
@@ -237,26 +232,21 @@ def ngram_jaccard_pairs(
     close — in the same block; size-skewed pairs (|n_a - n_b| > 4) remain
     out of scope for count blocking, which is why this operator is the
     exact-verification sidekick to the LSH path, not the recall path. Doc
-    lengths cluster, so any length-derived key is skew-prone at scale; pass
-    `block_on` (e.g. a MinHash band key) when the corpus has a heavy modal
-    length."""
+    lengths cluster, so any length-derived key is skew-prone at scale."""
     # materialize the shingle arrays: they ride both sides of the block
     # self-join (and the Jaccard verification), so without the checkpoint
     # the shingle build ran once per side (r4 plan audit)
     docs = (
         documents.select(
             F.col("doc_id").alias("key"),
-            word_shingles(F.col("text"), shingle_n).alias("shingles"),
+            word_shingles(F.col("text")).alias("shingles"),
         )
         .where(F.size("shingles") > 0)
         .localCheckpoint()
     )
-    if block_on is not None:
-        docs = docs.withColumn("block", block_on)
-    else:
-        b_lo = F.floor(F.size("shingles") / F.lit(8)).cast("int")
-        b_hi = F.floor((F.size("shingles") + F.lit(4)) / F.lit(8)).cast("int")
-        docs = docs.withColumn("block", F.explode(F.array_distinct(F.array(b_lo, b_hi))))
+    b_lo = F.floor(F.size("shingles") / F.lit(8)).cast("int")
+    b_hi = F.floor((F.size("shingles") + F.lit(4)) / F.lit(8)).cast("int")
+    docs = docs.withColumn("block", F.explode(F.array_distinct(F.array(b_lo, b_hi))))
     a = docs.alias("a")
     b = docs.alias("b")
     jaccard = F.size(F.array_intersect("a.shingles", "b.shingles")) / F.size(
@@ -340,14 +330,14 @@ _HEX_BIT = [
 ]
 
 
-def simhash16(text: Column, token_pattern: str = r"\s+") -> Column:
+def simhash16(text: Column) -> Column:
     """16-bit SimHash over whitespace tokens.
 
     For each bit position, a majority vote of +-1 across token hashes
     (md5 hex chars 1-4, 4 bits each). Pure expressions; the identical
     CASE/SUM formulation runs on the oracle side.
     """
-    tokens = F.split(F.trim(text), token_pattern)
+    tokens = F.split(F.trim(text), r"\s+")
 
     def vote(pos: int, member: list[str]):
         # factory keeps the higher-order lambda arity at exactly 2
@@ -367,7 +357,7 @@ def simhash16(text: Column, token_pattern: str = r"\s+") -> Column:
     return out.cast("int")
 
 
-def simhash64_expr(text: Column, token_pattern: str = r"\s+") -> Column:
+def simhash64_expr(text: Column) -> Column:
     """64-bit SimHash over whitespace tokens, pure expressions.
 
     Same construction as `simhash16` widened to md5 hex chars 1-16 (the
@@ -383,7 +373,7 @@ def simhash64_expr(text: Column, token_pattern: str = r"\s+") -> Column:
     scale path is the Arrow kernel `simhash64`, pinned bit-equal to this
     expression in tests.
     """
-    tokens = F.split(F.trim(text), token_pattern)
+    tokens = F.split(F.trim(text), r"\s+")
 
     def vote(pos: int, member: list[str]):
         # factory keeps the higher-order lambda arity at exactly 2
@@ -541,13 +531,7 @@ def simhash_neardup_pairs(
     )
 
 
-def lsh_recall_monitor(
-    documents: DataFrame,
-    sample_mod: int = 4,
-    num_hashes: int = 16,
-    bands: int = 8,
-    jaccard_threshold: float = 0.5,
-) -> DataFrame:
+def lsh_recall_monitor(documents: DataFrame, sample_mod: int = 4, bands: int = 8) -> DataFrame:
     """One-row LSH recall report over a deterministic corpus sample:
     (n_sampled, n_true_pairs, n_found_pairs, n_missed_pairs).
 
@@ -578,14 +562,9 @@ def lsh_recall_monitor(
     truth = (
         docs.alias("a")
         .join(docs.alias("b"), F.col("a.key") < F.col("b.key"))
-        .where(jaccard.cast("double") >= F.lit(jaccard_threshold))
+        .where(jaccard.cast("double") >= F.lit(0.5))
     )
-    found = minhash_lsh_pairs(
-        sample,
-        num_hashes=num_hashes,
-        bands=bands,
-        jaccard_threshold=jaccard_threshold,
-    )
+    found = minhash_lsh_pairs(sample, bands=bands)
     n_sampled = sample.agg(F.count(F.lit(1)).cast("bigint").alias("n_sampled"))
     n_true = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true_pairs"))
     n_found = found.agg(F.count(F.lit(1)).cast("bigint").alias("n_found_pairs"))
@@ -596,19 +575,20 @@ def lsh_recall_monitor(
     )
 
 
-def edit_distance_pairs(
-    documents: DataFrame, max_distance: int = 20, block_chars: int = 16
-) -> DataFrame:
+EDIT_BLOCK_CHARS = 16  # margin width of the edit-distance block keys
+
+
+def edit_distance_pairs(documents: DataFrame, max_distance: int = 20) -> DataFrame:
     """Blocked Levenshtein near-duplicate pairs: candidate pairs share an
-    untouched margin — identical first `block_chars` chars OR identical
-    last `block_chars` chars — then exact edit distance verifies
+    untouched margin — identical first EDIT_BLOCK_CHARS chars OR identical
+    last EDIT_BLOCK_CHARS chars — then exact edit distance verifies
     <= max_distance. Output (key_a, key_b, edit_distance).
 
     Recall contract (standard blocking caveat, documented): a pair is
     found iff at least one margin is edit-free; pairs edited in BOTH
     margins escape. This operator is the exact-verification sidekick to
     MinHash/SimHash (which have no positional blind spot), mirroring the
-    role split of ngram_jaccard_pairs. Docs shorter than `block_chars`
+    role split of ngram_jaccard_pairs. Docs shorter than EDIT_BLOCK_CHARS
     fall back to dual-offset length buckets (the jaccard straddle trick:
     floor(n/8) + floor((n+4)/8) covers any |len diff| <= 4 <= the margin
     width they lack).
@@ -623,8 +603,8 @@ def edit_distance_pairs(
     documents = fan_out(documents)
     n = F.length(F.col("text"))
     long_keys = F.array(
-        F.concat(F.lit("P"), F.md5(F.substring(F.col("text"), 1, block_chars))),
-        F.concat(F.lit("S"), F.md5(F.substring(F.col("text"), -block_chars, block_chars))),
+        F.concat(F.lit("P"), F.md5(F.substring(F.col("text"), 1, EDIT_BLOCK_CHARS))),
+        F.concat(F.lit("S"), F.md5(F.substring(F.col("text"), -EDIT_BLOCK_CHARS, EDIT_BLOCK_CHARS))),
     )
     short_keys = F.array(
         F.concat(F.lit("L"), F.floor(n / F.lit(8)).cast("string")),
@@ -635,7 +615,7 @@ def edit_distance_pairs(
         F.col("text").alias("txt"),
         n.alias("n"),
         F.explode(
-            F.array_distinct(F.when(n >= block_chars, long_keys).otherwise(short_keys))
+            F.array_distinct(F.when(n >= EDIT_BLOCK_CHARS, long_keys).otherwise(short_keys))
         ).alias("block"),
     )
     a, b = docs.alias("a"), docs.alias("b")
@@ -727,24 +707,22 @@ def cross_source_dupes(documents: DataFrame) -> DataFrame:
     )
 
 
-def containment_pairs(
-    documents: DataFrame, threshold: float = 0.8, k_rarest: int = 4, df_cap: int = 50
-) -> DataFrame:
+def containment_pairs(documents: DataFrame) -> DataFrame:
     """ASYMMETRIC near-dup: ordered pairs (a, b) where containment(A in B)
-    = |shingles(A) n shingles(B)| / |shingles(A)| >= threshold — the
+    = |shingles(A) n shingles(B)| / |shingles(A)| >= 0.8 — the
     doc-inside-doc signal (quotes, wrapper pages, prepended boilerplate)
     that symmetric Jaccard misses: a short doc fully quoted inside a long
     one has low Jaccard but containment 1.0.
 
     Candidate generation is PREFIX FILTERING on rare shingles (the
     PPJoin family's core idea): each probe doc registers only its
-    k_rarest shingles by (df, shingle) — among those with df <= df_cap —
+    4 rarest shingles by (df, shingle) — among those with df <= 50 —
     and joins the (shingle, doc) inverted index RESTRICTED to the same
-    df <= df_cap slice, so every join key fans out to at most df_cap
+    df <= 50 slice, so every join key fans out to at most 50
     docs; hot shingles never enter the join. RECALL CONTRACT (provable):
-    a pair with containment > 1 - k_rarest/|A| is found whenever A's
-    k rarest shingles all have df <= df_cap (pigeonhole: fewer than
-    k_rarest of A's shingles are missing from B, so one of its rare keys
+    a pair with containment > 1 - 4/|A| is found whenever A's
+    4 rarest shingles all have df <= 50 (pigeonhole: fewer than
+    4 of A's shingles are missing from B, so one of its rare keys
     is shared); pairs whose overlap hides exclusively in hot shingles
     escape — the documented trade every prefix filter makes.
 
@@ -785,7 +763,7 @@ def containment_pairs(
     # not checkpoint, for the same partitioning-preservation reason.
     rare = (
         ds.join(df_tab, "sh")
-        .where(F.col("df") <= df_cap)
+        .where(F.col("df") <= 50)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     from pyspark.sql import Window
@@ -793,7 +771,7 @@ def containment_pairs(
     w = Window.partitionBy("doc").orderBy("df", "sh")
     probe = (
         rare.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k_rarest)
+        .where(F.col("rn") <= 4)
         .select("doc", "sh")
     )
     index = rare.select(F.col("doc").alias("idoc"), "sh")
@@ -846,7 +824,7 @@ def containment_pairs(
     )
     return (
         inter.join(sizes.select(F.col("doc").alias("key_a"), F.col("n").alias("n_a")), "key_a")
-        .where(F.col("n_common") * F.lit(10**6) >= F.lit(int(round(threshold * 10**6))) * F.col("n_a"))
+        .where(F.col("n_common") * F.lit(10**6) >= F.lit(800_000) * F.col("n_a"))
         .select(
             "key_a",
             "key_b",
@@ -857,7 +835,7 @@ def containment_pairs(
     )
 
 
-def dedup_report(documents: DataFrame, jaccard_threshold: float = 0.5) -> DataFrame:
+def dedup_report(documents: DataFrame) -> DataFrame:
     """Per-source dedup report over the MinHash near-dup clusters: (source,
     n_docs, n_representatives, n_dropped, dup_ratio) where a document is
     dropped iff it is not its cluster's representative (cluster_id ==
@@ -870,7 +848,7 @@ def dedup_report(documents: DataFrame, jaccard_threshold: float = 0.5) -> DataFr
     labels-x-docs join (labels cover only docs, same cardinality) and a
     source-granularity aggregation."""
     clusters = duplicate_clusters(
-        minhash_lsh_pairs(documents, jaccard_threshold=jaccard_threshold), documents=documents
+        minhash_lsh_pairs(documents), documents=documents
     )
     labeled = documents.select(F.col("doc_id").alias("key"), "source").join(clusters, "key")
     is_rep = (F.col("key") == F.col("cluster_id")).cast("bigint")
@@ -929,7 +907,7 @@ def doc_novelty(documents: DataFrame) -> DataFrame:
     )
 
 
-def dedup_keep_best(documents: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
+def dedup_keep_best(documents: DataFrame) -> DataFrame:
     """Canonical near-dup dedup OUTPUT: connected components over the
     MinHash pair graph, then keep exactly ONE document per cluster — the
     best by (quality_score DESC, n_chars DESC, md5(text) ASC, key ASC), a
@@ -948,8 +926,7 @@ def dedup_keep_best(documents: DataFrame, pairs: DataFrame | None = None) -> Dat
 
     from .text import quality_struct
 
-    if pairs is None:
-        pairs = minhash_lsh_pairs(documents, jaccard_threshold=0.5)
+    pairs = minhash_lsh_pairs(documents)
     clusters = duplicate_clusters(pairs, documents=documents)
     scored = documents.select(
         F.col("doc_id").alias("key"),
@@ -981,9 +958,7 @@ def dedup_keep_best(documents: DataFrame, pairs: DataFrame | None = None) -> Dat
     )
 
 
-def duplicate_clusters_star(
-    pairs: DataFrame, documents: DataFrame | None = None, max_iters: int = 20
-) -> DataFrame:
+def duplicate_clusters_star(pairs: DataFrame, documents: DataFrame | None = None) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
     (Kiveris et al.) — the industrial-scale CC algorithm beside
     duplicate_clusters' min-label propagation: converges in O(log^2 n)
@@ -1046,7 +1021,7 @@ def duplicate_clusters_star(
         )
 
     cur = e
-    for _ in range(max_iters):
+    for _ in range(20):
         after_large = large_star(cur).localCheckpoint()
         after_small = small_star(after_large).localCheckpoint()
         # fixpoint: the round produced the same (u, v) edge set
@@ -1059,7 +1034,7 @@ def duplicate_clusters_star(
         cur = after_small
     else:
         raise RuntimeError(
-            f"duplicate_clusters_star did not converge within {max_iters} rounds"
+            "duplicate_clusters_star did not converge within 20 rounds"
         )
     labels = cur.select(F.col("u").alias("key"), F.col("v").alias("cluster_id"))
     # at the fixpoint every edge points directly at its component minimum

@@ -15,15 +15,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+SESSION_GAP_SECONDS = 1800  # a longer gap between a user's events starts a new session
+WINDOW_SECONDS = 3600  # the tumbling window of the per-type event rollups
+
+
 def events_from_dir(spark, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
 def sessionize(
-    events: DataFrame,
-    key_col: str = "key",
-    ts_col: str = "warc_ts",
-    gap_seconds: int = 1800,
+    events: DataFrame, ts_col: str = "warc_ts", gap_seconds: int = SESSION_GAP_SECONDS
 ) -> DataFrame:
     """Gap-based sessions per key (lag + running session counter): events of
     a key belong to one session while consecutive gaps stay <= gap_seconds.
@@ -32,9 +33,7 @@ def sessionize(
     from pyspark.sql import Window
 
     ts_s = F.unix_timestamp(F.col(ts_col))
-    marked = events.select(
-        F.col(key_col).alias("key"), ts_s.alias("t")
-    ).withColumn(
+    marked = events.select("key", ts_s.alias("t")).withColumn(
         "new_session",
         F.when(F.col("t") - F.lag("t").over(Window.partitionBy("key").orderBy("t")) > gap_seconds, 1)
         .otherwise(0),
@@ -49,21 +48,21 @@ def sessionize(
     ).drop("session_id")
 
 
-def user_sessions(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
+def user_sessions(events: DataFrame) -> DataFrame:
     """Gap-based sessions per user over the event timestamps (`sessionize`
     keyed by user_id). Returns (key, session_start, session_end, n_events)
     with epoch-second longs."""
     ev = events.select(F.col("user_id").cast("string").alias("key"), F.col("ts"))
-    return sessionize(ev, key_col="key", ts_col="ts", gap_seconds=gap_seconds)
+    return sessionize(ev, ts_col="ts")
 
 
-def event_type_windows(events: DataFrame, window_seconds: int = 3600) -> DataFrame:
+def event_type_windows(events: DataFrame) -> DataFrame:
     """Tumbling-window rollup per event type: (window_start epoch seconds,
     event_type, n_events, total_value). The window key is plain integer
     arithmetic on the epoch — equivalent to F.window(ts, '1 hour').start
     but directly comparable across engines."""
     epoch = F.unix_timestamp("ts")
-    wstart = (epoch - epoch % window_seconds).alias("window_start")
+    wstart = (epoch - epoch % WINDOW_SECONDS).alias("window_start")
     return (
         events.select(wstart, "event_type", F.col("value").cast("decimal(18,2)").alias("v"))
         .groupBy("window_start", "event_type")
@@ -93,16 +92,12 @@ def props_k_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    by: str = "user_id",
-    on: str = "ts",
-    value_cols: tuple[str, ...] = ("event_id", "value"),
-    allow_equal: bool = True,
-) -> DataFrame:
+_ASOF_VALUES = ("event_id", "value")  # right-side columns carried onto each left row
+
+
+def asof_join(left: DataFrame, right: DataFrame, allow_equal: bool = True) -> DataFrame:
     """Backward as-of join: each left row matched to the most recent right
-    row of the same `by` key with right.on <= left.on (strictly < when
+    row of the same user_id with right.ts <= left.ts (strictly < when
     allow_equal=False) — pandas merge_asof / kdb aj semantics. Spark has no
     native as-of join; a naive range join explodes to O(left x right) per
     key. The distributed formulation here is union + carry-forward: tag
@@ -111,62 +106,59 @@ def asof_join(
     ONE shuffle on the key, per-key sort only (spillable), no range
     explosion, no Python.
 
-    Determinism: right rows tying on (by, on) resolve to the greatest
-    first value column — not by a separate dedup pass (which would cost
-    its own Exchange + Window on (by, on)) but by the carry-forward
+    Determinism: right rows tying on (user_id, ts) resolve to the greatest
+    event_id — not by a separate dedup pass (which would cost
+    its own Exchange + Window on (user_id, ts)) but by the carry-forward
     window's own sort order: the greatest-lead right row sorts LAST within
     the tie, so LAST(ignorenulls) picks it. DuckDB's native ASOF JOIN
     (the oracle) leaves duplicate-timestamp picks undefined, so it
     pre-dedupes explicitly to the same rule.
 
-    Output: every left column, plus matched_<col> for each right value
-    column (NULL when no right row precedes). The matched_* columns all
+    Output: every left column, plus matched_event_id and matched_value
+    (NULL when no right row precedes). The matched_* columns all
     come from the SAME right row (they are null on exactly the same tagged
     rows, so each LAST picks from the identical latest non-null row)."""
     from pyspark.sql import Window
 
-    lead_val = value_cols[0]
-    r = right.select(by, on, *value_cols)
+    r = right.select("user_id", "ts", *_ASOF_VALUES)
 
     left_cols = left.columns
     tagged_r = r.select(
-        F.col(by),
-        F.col(on),
+        F.col("user_id"),
+        F.col("ts"),
         F.lit(1).alias("_is_r"),
-        *[F.col(c).alias(f"_rv_{c}") for c in value_cols],
-        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_cols if c not in (by, on)],
+        *[F.col(c).alias(f"_rv_{c}") for c in _ASOF_VALUES],
+        *[F.lit(None).cast(left.schema[c].dataType).alias(c) for c in left_cols if c not in ("user_id", "ts")],
     )
     tagged_l = left.select(
-        F.col(by),
-        F.col(on),
+        F.col("user_id"),
+        F.col("ts"),
         F.lit(0).alias("_is_r"),
-        *[F.lit(None).cast(r.schema[c].dataType).alias(f"_rv_{c}") for c in value_cols],
-        *[F.col(c) for c in left_cols if c not in (by, on)],
+        *[F.lit(None).cast(r.schema[c].dataType).alias(f"_rv_{c}") for c in _ASOF_VALUES],
+        *[F.col(c) for c in left_cols if c not in ("user_id", "ts")],
     )
-    # at equal `on`: right before left = non-strict (<=); left before
-    # right = strict (<). The trailing _rv_<lead> term orders tying right
-    # rows among themselves — greatest lead value sorts last and wins.
+    # at equal ts: right before left = non-strict (<=); left before
+    # right = strict (<). The trailing _rv_event_id term orders tying right
+    # rows among themselves — greatest event_id sorts last and wins.
     is_r_order = F.desc("_is_r") if allow_equal else F.asc("_is_r")
     w = (
-        Window.partitionBy(by)
-        .orderBy(F.col(on), is_r_order, F.col(f"_rv_{lead_val}"))
+        Window.partitionBy("user_id")
+        .orderBy(F.col("ts"), is_r_order, F.col("_rv_event_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = tagged_l.unionByName(tagged_r).select(
         "*",
         *[
             F.last(f"_rv_{c}", ignorenulls=True).over(w).alias(f"matched_{c}")
-            for c in value_cols
+            for c in _ASOF_VALUES
         ],
     )
     return carried.where(F.col("_is_r") == 0).select(
-        *left_cols, *[f"matched_{c}" for c in value_cols]
+        *left_cols, *[f"matched_{c}" for c in _ASOF_VALUES]
     )
 
 
-def interval_join(
-    points: DataFrame, intervals: DataFrame, by: str = "key", bucket_seconds: int = 3600
-) -> DataFrame:
+def interval_join(points: DataFrame, intervals: DataFrame, bucket_seconds: int = 3600) -> DataFrame:
     """Range/interval containment join (point.t BETWEEN interval.start AND
     interval.end, same key) via time-bucket binning — the 1-D analogue of
     the engine's cell-cover spatial join. Spark plans a raw BETWEEN join as
@@ -197,7 +189,7 @@ def interval_join(
     )
     return (
         points.select("*", pt_bucket)
-        .join(iv, [by, "_bucket"])
+        .join(iv, ["key", "_bucket"])
         .where((F.col("t") >= F.col("session_start")) & (F.col("t") <= F.col("session_end")))
         .drop("_bucket")
     )
@@ -206,7 +198,7 @@ def interval_join(
 EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
 
 
-def events_pivot(events: DataFrame, types: tuple[str, ...] = EVENT_TYPES) -> DataFrame:
+def events_pivot(events: DataFrame) -> DataFrame:
     """Wide transform: one row per user with per-event-type counts pivoted
     to columns plus the exact total value. The pivot VALUES are passed
     explicitly — without them Spark runs an extra distinct-collect job
@@ -217,7 +209,7 @@ def events_pivot(events: DataFrame, types: tuple[str, ...] = EVENT_TYPES) -> Dat
     rule)."""
     wide = (
         events.groupBy("user_id")
-        .pivot("event_type", list(types))
+        .pivot("event_type", list(EVENT_TYPES))
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("value").cast("decimal(18,2)")).alias("v"),
@@ -227,17 +219,17 @@ def events_pivot(events: DataFrame, types: tuple[str, ...] = EVENT_TYPES) -> Dat
     # exact decimals, so still order-independent; one aggregation, no
     # second pass or join over the fact table
     total = sum(
-        (F.coalesce(F.col(f"{t}_v"), F.lit(0).cast("decimal(18,2)")) for t in types),
+        (F.coalesce(F.col(f"{t}_v"), F.lit(0).cast("decimal(18,2)")) for t in EVENT_TYPES),
         F.lit(0).cast("decimal(18,2)"),
     )
     return wide.select(
         "user_id",
-        *[F.coalesce(F.col(f"{t}_n"), F.lit(0)).cast("bigint").alias(f"n_{t}") for t in types],
+        *[F.coalesce(F.col(f"{t}_n"), F.lit(0)).cast("bigint").alias(f"n_{t}") for t in EVENT_TYPES],
         total.cast("decimal(38,2)").cast("double").alias("total_value"),
     )
 
 
-def user_sessions_native(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
+def user_sessions_native(events: DataFrame) -> DataFrame:
     """Gap sessionization via Spark's NATIVE session_window operator —
     Catalyst's own merging-session aggregation, one shuffle, no window
     functions. Timestamps are floored to epoch seconds first so the
@@ -252,22 +244,20 @@ def user_sessions_native(events: DataFrame, gap_seconds: int = 1800) -> DataFram
     sec = F.timestamp_seconds(F.unix_timestamp("ts"))
     ev = events.select(F.col("user_id").cast("string").alias("key"), sec.alias("tss"))
     out = ev.groupBy(
-        "key", F.session_window("tss", f"{gap_seconds} seconds").alias("w")
+        "key", F.session_window("tss", f"{SESSION_GAP_SECONDS} seconds").alias("w")
     ).agg(F.count(F.lit(1)).alias("n_events"))
     return out.select(
         "key",
         F.unix_timestamp("w.start").alias("session_start"),
-        (F.unix_timestamp("w.end") - F.lit(gap_seconds)).alias("session_end"),
+        (F.unix_timestamp("w.end") - F.lit(SESSION_GAP_SECONDS)).alias("session_end"),
         "n_events",
     )
 
 
-def events_funnel(
-    events: DataFrame, steps: tuple[str, str, str] = ("view", "click", "purchase")
-) -> DataFrame:
+def events_funnel(events: DataFrame) -> DataFrame:
     """Ordered conversion funnel (sequential pattern matching): per user,
-    the earliest step-1 event, the earliest step-2 event strictly AFTER
-    it, and the earliest step-3 event strictly after that — plus the
+    the earliest view, the earliest click strictly AFTER
+    it, and the earliest purchase strictly after that — plus the
     reached stage. The first-touch attribution semantics analytics
     engines express with MATCH_RECOGNIZE.
 
@@ -278,16 +268,16 @@ def events_funnel(
     zone)."""
     t = F.unix_micros(F.col("ts").cast("timestamp"))
     ev = events.select("user_id", F.col("event_type").alias("et"), t.alias("t"))
-    s1 = ev.where(F.col("et") == steps[0]).groupBy("user_id").agg(F.min("t").alias("t1"))
+    s1 = ev.where(F.col("et") == "view").groupBy("user_id").agg(F.min("t").alias("t1"))
     s2 = (
-        ev.where(F.col("et") == steps[1])
+        ev.where(F.col("et") == "click")
         .join(s1, "user_id")
         .where(F.col("t") > F.col("t1"))
         .groupBy("user_id")
         .agg(F.min("t").alias("t2"))
     )
     s3 = (
-        ev.where(F.col("et") == steps[2])
+        ev.where(F.col("et") == "purchase")
         .join(s2, "user_id")
         .where(F.col("t") > F.col("t2"))
         .groupBy("user_id")
@@ -309,11 +299,9 @@ def events_funnel(
     )
 
 
-def events_sliding_windows(
-    events: DataFrame, window_seconds: int = 3600, slide_seconds: int = 1800
-) -> DataFrame:
+def events_sliding_windows(events: DataFrame) -> DataFrame:
     """SLIDING-window rollup per event type via Spark's native
-    window(ts, window, slide): each event lands in window/slide
+    window(ts, 1 hour, 30 minutes): each event lands in 2
     overlapping windows (epoch-aligned starts). Counts and the DECIMAL-
     exact value sums follow the tumbling twin's determinism rules (sum
     in DECIMAL, one cast to DOUBLE at the boundary).
@@ -327,7 +315,7 @@ def events_sliding_windows(
             sec.alias("tss"), "event_type", F.col("value").cast("decimal(18,2)").alias("v")
         )
         .groupBy(
-            F.window("tss", f"{window_seconds} seconds", f"{slide_seconds} seconds").alias("w"),
+            F.window("tss", "3600 seconds", "1800 seconds").alias("w"),
             "event_type",
         )
         .agg(
@@ -474,35 +462,30 @@ DECAY_ANCHOR_US = 1706745600000000
 DECAY_AGE_CAP_DAYS = 40
 
 
-def events_decay(
-    events: DataFrame,
-    anchor_us: int = DECAY_ANCHOR_US,
-    half_life_days: int = 1,
-    cap_days: int = DECAY_AGE_CAP_DAYS,
-) -> DataFrame:
+def events_decay(events: DataFrame) -> DataFrame:
     """Exponentially-decayed event counts per type with EXACT integer
     weights: weight = 2^(cap - min(age_periods, cap)) where one period is
-    `half_life_days`. Float decay (pow/exp) is libm territory and a
-    double sum is reduction-order dependent — neither can hash-gate; the
-    power-of-two BIGINT recurrence gives the same half-life ranking with
-    an order-independent exact sum (the integer-exact PageRank precedent).
+    one day and the age counts back from DECAY_ANCHOR_US. Float decay
+    (pow/exp) is libm territory and a double sum is reduction-order
+    dependent — neither can hash-gate; the power-of-two BIGINT recurrence
+    gives the same half-life ranking with an order-independent exact sum
+    (the integer-exact PageRank precedent).
 
     Decayed weight relative: newest-possible event (age 0) weighs 2^cap;
     divide by 2^cap downstream for the [0,1] scale. Sum bound: n_events *
-    2^cap must stay under 2^63 — cap 40 leaves room for ~4e6 max-weight
-    events per group, raised deliberately by callers that know their
-    volume. One map-side-partial shuffle on event_type."""
-    period_us = 86_400_000_000 * half_life_days
+    2^cap must stay under 2^63 — cap DECAY_AGE_CAP_DAYS = 40 leaves room
+    for ~4e6 max-weight events per group. One map-side-partial shuffle on
+    event_type."""
     # shiftleft's shift must be an expression here (a pyspark literal-only
     # parameter), and the age floor is integer `div` — never float division.
-    # The age is bracketed into [0, cap_days]: an event AFTER the anchor
+    # The age is bracketed into [0, DECAY_AGE_CAP_DAYS]: an event AFTER the anchor
     # would give a negative age, pushing the shift past 63 where Spark
     # silently wraps mod 64 while DuckDB raises (and // vs div floor
     # semantics diverge on negatives) — greatest(..., 0) pins both engines
     w = F.expr(
-        f"shiftleft(CAST(1 AS BIGINT), {cap_days} - least(greatest("
-        f"({anchor_us} - unix_micros(CAST(ts AS TIMESTAMP))) div {period_us}, "
-        f"CAST(0 AS BIGINT)), CAST({cap_days} AS BIGINT)))"
+        f"shiftleft(CAST(1 AS BIGINT), {DECAY_AGE_CAP_DAYS} - least(greatest("
+        f"({DECAY_ANCHOR_US} - unix_micros(CAST(ts AS TIMESTAMP))) div 86400000000, "
+        f"CAST(0 AS BIGINT)), CAST({DECAY_AGE_CAP_DAYS} AS BIGINT)))"
     )
     return (
         events.select("event_type", w.alias("w"))
@@ -515,14 +498,9 @@ def events_decay(
     )
 
 
-def events_attribution(
-    events: DataFrame,
-    conversion_type: str = "purchase",
-    touch_types: tuple[str, ...] = ("view", "click"),
-    window_days: int = 7,
-) -> DataFrame:
-    """Last-touch attribution: each conversion is credited to the most
-    recent qualifying touch by the same user within the lookback window
+def events_attribution(events: DataFrame) -> DataFrame:
+    """Last-touch attribution: each purchase is credited to the most
+    recent view or click by the same user within the 7-day lookback window
     (same-microsecond touches qualify; ties between touches break to the
     larger event_id), conversions with no touch in window credit 'none'.
     Output: (attributed_type, n_conversions, total_value) with the value
@@ -539,13 +517,13 @@ def events_attribution(
         "user_id", "event_id", "event_type", us.alias("us"),
         F.col("value").cast("decimal(18,2)").alias("value"),
     )
-    touches = base.where(F.col("event_type").isin(*touch_types)).select(
+    touches = base.where(F.col("event_type").isin("view", "click")).select(
         "user_id", "us", "event_id",
         F.lit(0).alias("kind"),
         F.col("event_type").alias("touch_type"),
         F.lit(None).cast("decimal(18,2)").alias("value"),
     )
-    convs = base.where(F.col("event_type") == conversion_type).select(
+    convs = base.where(F.col("event_type") == "purchase").select(
         "user_id", "us", "event_id",
         F.lit(1).alias("kind"),
         F.lit(None).cast("string").alias("touch_type"),
@@ -567,7 +545,7 @@ def events_attribution(
         )
         .where(F.col("kind") == 1)
     )
-    window_us = window_days * 86_400_000_000
+    window_us = 7 * 86_400_000_000
     attributed = F.when(
         F.col("last_touch_us").isNotNull()
         & (F.col("us") - F.col("last_touch_us") <= window_us),
@@ -583,13 +561,9 @@ def events_attribution(
     )
 
 
-def scd2_lookup(
-    events: DataFrame,
-    dim_types: tuple[str, ...] = ("signup", "purchase"),
-    probe_types: tuple[str, ...] = ("view", "click"),
-) -> DataFrame:
+def scd2_lookup(events: DataFrame) -> DataFrame:
     """Point-in-time lookup against the SCD2 dimension scd2_build derives
-    from the `dim_types` sub-stream: every probe event is matched to the
+    from the signup/purchase sub-stream: every view or click probe is matched to the
     dimension interval covering its timestamp (valid_from_us <= t <
     valid_to_us, open interval = current), probes before the user's first
     dimension row report state 'none'. Output: (probe_type, state_type,
@@ -606,7 +580,7 @@ def scd2_lookup(
     from pyspark.sql import Window
 
     long_max = (1 << 63) - 1
-    dim = scd2_build(events.where(F.col("event_type").isin(*dim_types))).select(
+    dim = scd2_build(events.where(F.col("event_type").isin("signup", "purchase"))).select(
         "user_id",
         F.col("valid_from_us").alias("us"),
         F.lit(0).alias("kind"),
@@ -615,7 +589,7 @@ def scd2_lookup(
         F.lit(None).cast("string").alias("probe_type"),
     )
     us = F.unix_micros(F.col("ts").cast("timestamp"))
-    probes = events.where(F.col("event_type").isin(*probe_types)).select(
+    probes = events.where(F.col("event_type").isin("view", "click")).select(
         "user_id",
         us.alias("us"),
         F.lit(1).alias("kind"),
@@ -642,7 +616,7 @@ def scd2_lookup(
     )
 
 
-def events_resample(events: DataFrame, window_seconds: int = 3600) -> DataFrame:
+def events_resample(events: DataFrame) -> DataFrame:
     """Gap-filled time-series resample: tumbling-window rollup per event
     type (the event_type_windows contract) densified so every bucket
     between a type's first and last event exists, empty buckets
@@ -657,7 +631,7 @@ def events_resample(events: DataFrame, window_seconds: int = 3600) -> DataFrame:
     DECIMAL sum casts to DOUBLE once at the boundary (determinism rules,
     oracle.py header); fill value 0.0 is exact in both engines."""
     epoch = F.unix_timestamp("ts")
-    bucket = (epoch - epoch % window_seconds).alias("window_start")
+    bucket = (epoch - epoch % WINDOW_SECONDS).alias("window_start")
     # the bucket rollup feeds TWO consumers (spine range + fill join) and
     # Catalyst has no cross-branch CSE — without materializing, the whole
     # fact-table scan + shuffle re-runs per consumer (fan-out-reuse rule;
@@ -676,7 +650,7 @@ def events_resample(events: DataFrame, window_seconds: int = 3600) -> DataFrame:
         .agg(F.min("window_start").alias("mn"), F.max("window_start").alias("mx"))
         .select(
             "event_type",
-            F.explode(F.sequence("mn", "mx", F.lit(int(window_seconds)))).alias("window_start"),
+            F.explode(F.sequence("mn", "mx", F.lit(WINDOW_SECONDS))).alias("window_start"),
         )
     )
     return spine.join(agg, ["event_type", "window_start"], "left").select(
@@ -687,7 +661,7 @@ def events_resample(events: DataFrame, window_seconds: int = 3600) -> DataFrame:
     )
 
 
-def events_new_users(events: DataFrame, window_seconds: int = 86400) -> DataFrame:
+def events_new_users(events: DataFrame) -> DataFrame:
     """User-acquisition curve: per day bucket, how many users appear for
     the FIRST time anywhere in the stream, plus the running cumulative.
     Output (window_start, new_users, cum_users).
@@ -703,7 +677,7 @@ def events_new_users(events: DataFrame, window_seconds: int = 86400) -> DataFram
     epoch = F.unix_timestamp("ts")
     first_seen = events.groupBy("user_id").agg(F.min(epoch).alias("e"))
     per_bucket = (
-        first_seen.select((F.col("e") - F.col("e") % window_seconds).alias("window_start"))
+        first_seen.select((F.col("e") - F.col("e") % 86400).alias("window_start"))
         .groupBy("window_start")
         .agg(F.count(F.lit(1)).alias("new_users"))
     )
@@ -713,18 +687,13 @@ def events_new_users(events: DataFrame, window_seconds: int = 86400) -> DataFram
     )
 
 
-def events_anomaly(
-    events: DataFrame,
-    window_seconds: int = 3600,
-    trail: int = 24,
-    min_history: int = 8,
-    z_threshold: float = 3.0,
-) -> DataFrame:
-    """Trailing z-score anomaly detection on the event-rate series:
+def events_anomaly(events: DataFrame) -> DataFrame:
+    """Trailing z-score anomaly detection on the hourly event-rate series:
     for each (event_type, bucket), compare the bucket count against the
-    mean/std of the previous `trail` buckets (current excluded). Output
+    mean/std of the previous 24 buckets (current excluded). Output
     (event_type, window_start, n_events, zscore, is_anomaly); zscore is
-    NULL when history < min_history buckets or the history is constant.
+    NULL when history < 8 buckets or the history is constant, and
+    is_anomaly flags |zscore| >= 3.
 
     Runs over the GAP-FILLED resample (events_resample) so the trailing
     ROWS frame is a true time window — with gaps, "previous 24 rows"
@@ -738,13 +707,11 @@ def events_anomaly(
     the fact table collapsed in events_resample's single aggregation."""
     from pyspark.sql import Window
 
-    series = events_resample(events, window_seconds).select(
-        "event_type", "window_start", "n_events"
-    )
+    series = events_resample(events).select("event_type", "window_start", "n_events")
     w = (
         Window.partitionBy("event_type")
         .orderBy("window_start")
-        .rowsBetween(-trail, -1)
+        .rowsBetween(-24, -1)
     )
     x = F.col("n_events")
     staged = series.select(
@@ -760,7 +727,7 @@ def events_anomaly(
     mean = s.cast("double") / n.cast("double")
     var = var_num.cast("double") / (n * (n - F.lit(1))).cast("double")
     z = F.when(
-        (n >= min_history) & (var_num > F.lit(0)),
+        (n >= 8) & (var_num > F.lit(0)),
         (x.cast("double") - mean) / F.sqrt(var),
     )
     return staged.select(
@@ -768,7 +735,7 @@ def events_anomaly(
         "window_start",
         "n_events",
         z.alias("zscore"),
-        F.when(z.isNotNull(), F.abs(z) >= F.lit(float(z_threshold))).alias("is_anomaly"),
+        F.when(z.isNotNull(), F.abs(z) >= F.lit(3.0)).alias("is_anomaly"),
     )
 
 
@@ -779,9 +746,7 @@ TIME_PYRAMID_LEVELS: tuple[tuple[str, int], ...] = (
 )
 
 
-def events_time_pyramid(
-    events: DataFrame, levels: tuple[tuple[str, int], ...] = TIME_PYRAMID_LEVELS
-) -> DataFrame:
+def events_time_pyramid(events: DataFrame) -> DataFrame:
     """Multi-granularity time rollup in ONE pass (the geohash_pyramid
     pattern applied to time): each event explodes into one (level, bucket)
     struct per granularity, then a single aggregation produces every level
@@ -801,7 +766,7 @@ def events_time_pyramid(
                     F.lit(name).alias("level"),
                     (epoch - epoch % F.lit(sec)).alias("window_start"),
                 )
-                for name, sec in levels
+                for name, sec in TIME_PYRAMID_LEVELS
             ]
         )
     ).alias("lv")
@@ -815,14 +780,12 @@ def events_time_pyramid(
     )
 
 
-def session_paths(
-    events: DataFrame, gap_seconds: int = 1800, path_len: int = 3
-) -> DataFrame:
-    """Clickstream path analysis: the first `path_len` event types of each
+def session_paths(events: DataFrame) -> DataFrame:
+    """Clickstream path analysis: the first 3 event types of each
     gap-session, joined as a path string, counted across all sessions —
     the 'how do journeys start' funnel-discovery view. Output (path,
     n_sessions). Event order is the pinned (unix_micros, event_id)
-    contract; sessions split on gap > gap_seconds (the user_sessions
+    contract; sessions split on gap > SESSION_GAP_SECONDS (the user_sessions
     boundary rule: a delta equal to the gap MERGES).
 
     Scale shape: one shuffle on user_id (window sessionization + the
@@ -833,7 +796,7 @@ def session_paths(
 
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    gap_us = int(gap_seconds) * 1_000_000
+    gap_us = SESSION_GAP_SECONDS * 1_000_000
     ev = events.select("user_id", "event_id", "event_type", us.alias("us"))
     sess = ev.select(
         "*",
@@ -843,7 +806,7 @@ def session_paths(
     )
     path = F.array_join(
         F.transform(
-            F.slice(F.sort_array(F.collect_list(F.struct("us", "event_id", "event_type"))), 1, path_len),
+            F.slice(F.sort_array(F.collect_list(F.struct("us", "event_id", "event_type"))), 1, 3),
             lambda s: s["event_type"],
         ),
         ">",
@@ -878,7 +841,7 @@ def props_k_stats_variant(events: DataFrame) -> DataFrame:
     )
 
 
-def events_window_users(events: DataFrame, window_seconds: int = 3600) -> DataFrame:
+def events_window_users(events: DataFrame) -> DataFrame:
     """Exact distinct users + events per tumbling window: (window_start,
     n_users, n_events). The (user, window)-level aggregation comes FIRST
     so the distinct-user count is a plain COUNT(*) (the repo-wide rule —
@@ -886,7 +849,7 @@ def events_window_users(events: DataFrame, window_seconds: int = 3600) -> DataFr
     move pre-aggregated rows."""
     epoch = F.unix_timestamp("ts")
     per_user = (
-        events.select((epoch - epoch % window_seconds).alias("window_start"), "user_id")
+        events.select((epoch - epoch % WINDOW_SECONDS).alias("window_start"), "user_id")
         .groupBy("window_start", "user_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -895,11 +858,9 @@ def events_window_users(events: DataFrame, window_seconds: int = 3600) -> DataFr
     )
 
 
-def conversion_latency(
-    events: DataFrame, from_type: str = "view", to_type: str = "purchase"
-) -> DataFrame:
-    """Per-user conversion latency: first `from_type` event, then the
-    first `to_type` event at-or-after it (exact micros integers —
+def conversion_latency(events: DataFrame) -> DataFrame:
+    """Per-user conversion latency: first view event, then the
+    first purchase event at-or-after it (exact micros integers —
     same-instant conversions count, the asof non-strict convention).
     Output (user_id, first_from_us, first_to_us, latency_us); users who
     never convert are omitted (inner semantics — the denominator lives in
@@ -910,11 +871,11 @@ def conversion_latency(
     granularity after map-side partials. No windows, no per-user sort."""
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     first_from = (
-        events.where(F.col("event_type") == from_type)
+        events.where(F.col("event_type") == "view")
         .groupBy("user_id")
         .agg(F.min(us).alias("first_from_us"))
     )
-    to_ev = events.where(F.col("event_type") == to_type).select("user_id", us.alias("to_us"))
+    to_ev = events.where(F.col("event_type") == "purchase").select("user_id", us.alias("to_us"))
     return (
         to_ev.join(first_from, "user_id")
         .where(F.col("to_us") >= F.col("first_from_us"))

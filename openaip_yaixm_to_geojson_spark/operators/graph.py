@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 RANK_SCALE = 1_000_000
+HITS_ROUNDS = 2  # synchronous hub/authority rounds of hits_int
 
 # deterministic synthetic out-links per document (3 per node, self-loops
 # possible and kept). The first two affine maps are bijections (uniform
@@ -168,7 +169,6 @@ def bfs_depth(
     seed,
     src_col: str = "src",
     dst_col: str = "dst",
-    max_rounds: int = 20,
     directed: bool = False,
 ) -> DataFrame:
     """Breadth-first hop distance from `seed` over the edge table:
@@ -176,7 +176,7 @@ def bfs_depth(
     each round joins the frontier to the edge list, anti-joins the
     visited set, and stops when the frontier empties; rounds = graph
     radius from the seed, lineage cut per round with localCheckpoint.
-    RAISES if the frontier is still non-empty after max_rounds (partial
+    RAISES if the frontier is still non-empty after 20 rounds (partial
     depths are silently wrong — the duplicate_clusters convergence
     contract). Undirected by default (edges symmetrized).
 
@@ -193,7 +193,7 @@ def bfs_depth(
     seed_df = literal_table(spark, [(seed,)], f"node {dict(e.dtypes)['s']}")
     visited = seed_df.select("node", F.lit(0).alias("depth")).localCheckpoint()
     frontier = visited.select("node")
-    for depth in range(1, max_rounds + 1):
+    for depth in range(1, 21):
         nxt = (
             e.join(frontier, e.s == frontier.node)
             .select(F.col("d").alias("node"))
@@ -206,14 +206,14 @@ def bfs_depth(
         visited = visited.union(nxt.select("node", F.lit(depth).alias("depth"))).localCheckpoint()
         frontier = nxt
     raise RuntimeError(
-        f"bfs_depth did not exhaust the reachable set within max_rounds={max_rounds}; "
-        "partial depths would be silently wrong — raise max_rounds"
+        "bfs_depth did not exhaust the reachable set within 20 rounds; "
+        "partial depths would be silently wrong"
     )
 
 
-def hits_int(nodes: DataFrame, edges: DataFrame, iters: int = 2, key_col: str = "host") -> DataFrame:
-    """Integer-exact HITS (hubs & authorities) after `iters` synchronous
-    rounds — the second classic link-analysis recurrence next to
+def hits_int(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """Integer-exact HITS (hubs & authorities) over `host` node ids after
+    HITS_ROUNDS synchronous rounds — the second classic link-analysis recurrence next to
     pagerank_int, and a different update SHAPE (bipartite alternation:
     hubs aggregate over OUT-edges, authorities over IN-edges).
 
@@ -222,18 +222,17 @@ def hits_int(nodes: DataFrame, edges: DataFrame, iters: int = 2, key_col: str = 
     per-round monotone scalar — it never changes the ranking — so skipping
     it keeps every score an exact BIGINT and the whole recurrence
     hash-gateable (the integer-PageRank argument). Parallel edges keep
-    their multiplicity. Magnitude: scores grow like (max degree)^(2*iters);
-    2 rounds on a host graph stays far inside BIGINT — callers at web
-    scale should cap iters or rescale per round.
+    their multiplicity. Magnitude: scores grow like (max degree)^(2*HITS_ROUNDS);
+    2 rounds on a host graph stays far inside BIGINT.
 
     Scale shape: per round two edge joins + two map-side-partial
     aggregations, all keyed on node ids; edges localCheckpoint()ed once
-    for the 2*iters reuses."""
-    ids = nodes.select(F.col(key_col).alias("id"))
+    for the 2*HITS_ROUNDS reuses."""
+    ids = nodes.select(F.col("host").alias("id"))
     e = edges.select("src", "dst").localCheckpoint()
     auth = ids.select("id", F.lit(1).cast("bigint").alias("a"))
     hub = None
-    for _ in range(iters):
+    for _ in range(HITS_ROUNDS):
         hub = (
             e.join(auth, e["dst"] == auth["id"])
             .groupBy("src")
@@ -255,5 +254,5 @@ def hits_int(nodes: DataFrame, edges: DataFrame, iters: int = 2, key_col: str = 
             .localCheckpoint()
         )
     return auth.join(hub, "id").select(
-        F.col("id").alias(key_col), F.col("h").alias("hub"), F.col("a").alias("authority")
+        F.col("id").alias("host"), F.col("h").alias("hub"), F.col("a").alias("authority")
     )

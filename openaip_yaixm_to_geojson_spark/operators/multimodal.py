@@ -92,7 +92,6 @@ def _fake_decode(payload: bytes, kind: str) -> np.ndarray:
 def extract_features(
     media: DataFrame,
     decoder: Callable[[bytes, str], np.ndarray] | None = None,
-    batch_size_hint: int = 256,
 ) -> DataFrame:
     """mapInPandas feature extraction over binary payloads.
 
@@ -136,17 +135,12 @@ def _fake_frame(payload: bytes, frame_idx: int) -> str:
     return payload[off : off + 8].decode("ascii")
 
 
-def sample_frames(
-    media: DataFrame,
-    every_k: int = 4,
-    extractor: Callable[[bytes, int], str] | None = None,
-) -> DataFrame:
+def sample_frames(media: DataFrame, every_k: int = 4) -> DataFrame:
     """Frame sampling over mapInPandas: every k-th frame index of each
     `video` row (0, k, 2k, ... below meta.n_frames) becomes one output row
     with the extracted frame. Extraction is the stubbed deterministic fake
-    by default (real codec = one-argument swap; the Spark plan — bounded
-    Arrow batches in, exploded frame rows out — does not move)."""
-    extract = extractor or _fake_frame
+    (a real codec would not move the Spark plan — bounded Arrow batches
+    in, exploded frame rows out)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -157,7 +151,7 @@ def sample_frames(
                 if kind != "video" or payload is None:
                     continue
                 for i in range(0, int(meta["n_frames"]), every_k):
-                    rows.append((mid, i, extract(payload, i)))
+                    rows.append((mid, i, _fake_frame(payload, i)))
             yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame"])
 
     return media.mapInPandas(run, schema=FRAME_SCHEMA)

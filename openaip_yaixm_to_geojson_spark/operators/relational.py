@@ -44,18 +44,16 @@ def pricing_summary(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def segment_revenue_topk(
-    customer: DataFrame, orders: DataFrame, lineitem: DataFrame, segment: str = "BUILDING", k: int = 10
-) -> DataFrame:
-    """TPC-H Q3-shaped: revenue per order for one market segment, top-k.
+def segment_revenue_topk(customer: DataFrame, orders: DataFrame, lineitem: DataFrame) -> DataFrame:
+    """TPC-H Q3-shaped: revenue per order for the BUILDING market segment, top 10.
 
     customer (filtered, tiny) broadcasts into orders; the orders->lineitem
     join shuffles on the order key; ties in revenue break on o_orderkey so
-    the top-k is total-ordered and oracle-reproducible."""
+    the top 10 is total-ordered and oracle-reproducible."""
     disc_price = (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast(
         "decimal(18,6)"
     )
-    cust = customer.where(F.col("c_mktsegment") == segment).select("c_custkey")
+    cust = customer.where(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     joined = (
         orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .select("o_orderkey", "o_orderpriority")
@@ -66,7 +64,7 @@ def segment_revenue_topk(
         joined.groupBy("o_orderkey", "o_orderpriority")
         .agg(F.sum("dp").cast("decimal(38,6)").alias("revenue_dec"))
         .orderBy(F.col("revenue_dec").desc(), F.col("o_orderkey").asc())
-        .limit(k)
+        .limit(10)
         .select(
             "o_orderkey",
             "o_orderpriority",
@@ -82,12 +80,9 @@ def local_supplier_revenue(
     supplier: DataFrame,
     nation: DataFrame,
     region: DataFrame,
-    region_name: str = "ASIA",
-    year_start: str = "1996-01-01",
-    year_end: str = "1997-01-01",
 ) -> DataFrame:
     """TPC-H Q5-shaped: per-nation revenue where customer and supplier sit
-    in the same nation of one region, over one order-date year.
+    in the same nation of the ASIA region, over the 1996 order-date year.
 
     Join strategy for the 100-TB layout: region->nation (25 rows) and
     supplier (small dim) BROADCAST into the fact chain; the only shuffles
@@ -101,7 +96,7 @@ def local_supplier_revenue(
     )
     nat = (
         nation.join(
-            F.broadcast(region.where(F.col("r_name") == region_name)),
+            F.broadcast(region.where(F.col("r_name") == "ASIA")),
             F.col("n_regionkey") == F.col("r_regionkey"),
         )
         .select("n_nationkey", "n_name")
@@ -110,8 +105,8 @@ def local_supplier_revenue(
         F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey")
     ).select("c_custkey", "c_nationkey", "n_name")
     ords = orders.where(
-        (F.col("o_orderdate") >= F.lit(year_start).cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit(year_end).cast("timestamp"))
+        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
     ).select("o_orderkey", "o_custkey")
     supp = supplier.select("s_suppkey", "s_nationkey")
     return (
@@ -182,7 +177,7 @@ def profile_table(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-def merge_upsert(base: DataFrame, changes: DataFrame, broadcast_changes: bool = True) -> DataFrame:
+def merge_upsert(base: DataFrame, changes: DataFrame) -> DataFrame:
     """MERGE INTO semantics without a table format: apply a change set
     (`op` column: 'upsert' | 'delete') to a base snapshot — matched
     upserts update, unmatched upserts insert, deletes drop, untouched
@@ -197,24 +192,18 @@ def merge_upsert(base: DataFrame, changes: DataFrame, broadcast_changes: bool = 
     force a sort-merge join (Spark cannot broadcast any side of a full
     outer — measured, not assumed), shuffling the entire snapshot. This
     decomposition needs only a LEFT ANTI join of the base against the
-    touched keys — broadcastable, keys-only; broadcast_changes=False
-    drops the hard hint for a change set too large for executor memory
-    (the anti join then shuffles both sides) — plus a union of the
+    touched keys — broadcast, keys-only — plus a union of the
     upsert rows. The oracle recomputes via the full-outer + CASE strategy, so
     both formulations verify each other."""
     touched = changes.select("doc_id").distinct()
-    if broadcast_changes:
-        touched = F.broadcast(touched)
-    survivors = base.join(touched, "doc_id", "left_anti")
+    survivors = base.join(F.broadcast(touched), "doc_id", "left_anti")
     upserts = changes.where(F.col("op") == "upsert").select(*base.columns)
     return survivors.unionByName(upserts)
 
 
-def big_orders(
-    orders: DataFrame, lineitem: DataFrame, min_quantity: int = 300
-) -> DataFrame:
-    """TPC-H Q18-shaped: orders whose total line quantity exceeds a
-    threshold — the aggregate -> HAVING -> join-back-into-facts plan shape
+def big_orders(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
+    """TPC-H Q18-shaped: orders whose total line quantity exceeds
+    300 — the aggregate -> HAVING -> join-back-into-facts plan shape
     (the other relational gates are scan->agg or dim-broadcast chains).
 
     Scale shape: the lineitem agg is map-side partial on the order key;
@@ -225,7 +214,7 @@ def big_orders(
     qty = (
         lineitem.groupBy(F.col("l_orderkey"))
         .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("decimal(38,2)").alias("qd"))
-        .where(F.col("qd") > F.lit(min_quantity))
+        .where(F.col("qd") > F.lit(300))
     )
     return orders.join(qty, orders.o_orderkey == qty.l_orderkey).select(
         "o_orderkey",
@@ -415,12 +404,10 @@ def returned_item_revenue(
     orders: DataFrame,
     lineitem: DataFrame,
     nation: DataFrame,
-    date_lo: str = "1996-01-01",
-    date_hi: str = "1996-04-01",
     k: int = 20,
 ) -> DataFrame:
     """TPC-H Q10 shape: lost revenue from returned items per customer in
-    one quarter — fact filter (returnflag + date window) -> dim-broadcast
+    the first quarter of 1996 — fact filter (returnflag + date window) -> dim-broadcast
     chain (orders-in-window, customer, nation) -> customer rollup ->
     global top-k. Output (c_custkey, c_name, n_name, revenue, n_items).
 
@@ -439,8 +426,8 @@ def returned_item_revenue(
         ).alias("rev"),
     )
     ow = orders.where(
-        (F.col("o_orderdate") >= F.lit(date_lo).cast("timestamp_ntz"))
-        & (F.col("o_orderdate") < F.lit(date_hi).cast("timestamp_ntz"))
+        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp_ntz"))
+        & (F.col("o_orderdate") < F.lit("1996-04-01").cast("timestamp_ntz"))
     ).select("o_orderkey", "o_custkey")
     per_cust = (
         li.join(F.broadcast(ow), li.l_orderkey == ow.o_orderkey)
@@ -512,17 +499,18 @@ def range_partition_plan(documents: DataFrame, n_bins: int = 8) -> DataFrame:
     )
 
 
-def sketch_quantiles(
-    documents: DataFrame,
-    quantiles: tuple[tuple[int, int], ...] = ((1, 2), (9, 10), (99, 100)),
-    width: int = 32,
-) -> DataFrame:
+SKETCH_BIN_WIDTH = 32  # n_chars per histogram bin of sketch_quantiles
+
+
+def sketch_quantiles(documents: DataFrame) -> DataFrame:
     """Histogram-sketch quantile ESTIMATES — the mergeable path beside the
     exact order statistics (lang_median_chars/length_quartiles sort or
     rank; this reduces the corpus to an equi-width histogram first, the
     state a 1000-executor job would actually merge, then interpolates).
 
-    Each quantile is (num, den) with target rank ceil(num*n/den) computed
+    The quantiles are the median, p90 and p99 over SKETCH_BIN_WIDTH-char
+    bins. Each
+    quantile is (num, den) with target rank ceil(num*n/den) computed
     in exact integers; the estimate is bin_lo + (target - cum_before) /
     bin_count * width — exact BIGINTs into three single-rounded double ops,
     so the result hash-gates. Output one row per quantile: (q_num, q_den,
@@ -534,7 +522,7 @@ def sketch_quantiles(
     from pyspark.sql import Window
 
     hist = (
-        documents.groupBy(F.expr(f"n_chars div {width}").alias("bin"))
+        documents.groupBy(F.expr(f"n_chars div {SKETCH_BIN_WIDTH}").alias("bin"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     w = Window.partitionBy().orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
@@ -545,13 +533,13 @@ def sketch_quantiles(
         F.sum("cnt").over(Window.partitionBy()).alias("n"),
     ).localCheckpoint()  # #bins rows; feeds every quantile branch
     out = None
-    for num, den in quantiles:
+    for num, den in ((1, 2), (9, 10), (99, 100)):
         target = F.expr(f"({num} * n + {den - 1}) div {den}")
         qualifying = cum.where(F.col("cum") >= target).select(
             F.lit(num).alias("q_num"),
             F.lit(den).alias("q_den"),
             target.alias("target_rank"),
-            (F.col("bin") * width).alias("bin_lo"),
+            (F.col("bin") * SKETCH_BIN_WIDTH).alias("bin_lo"),
             "cnt",
             (F.col("cum") - F.col("cnt")).alias("cum_before"),
             F.col("bin").alias("_bin"),
@@ -571,21 +559,14 @@ def sketch_quantiles(
                 F.col("_b.bin_lo").cast("double")
                 + (F.col("_b.target_rank") - F.col("_b.cum_before")).cast("double")
                 / F.col("_b.bin_count").cast("double")
-                * F.lit(float(width))
+                * F.lit(float(SKETCH_BIN_WIDTH))
             ).alias("estimate"),
         )
         out = row if out is None else out.unionByName(row)
     return out
 
 
-def forecast_revenue(
-    lineitem: DataFrame,
-    year_start: str = "1996-01-01",
-    year_end: str = "1997-01-01",
-    discount_lo: float = 0.05,
-    discount_hi: float = 0.07,
-    max_qty: int = 24,
-) -> DataFrame:
+def forecast_revenue(lineitem: DataFrame) -> DataFrame:
     """TPC-H Q6 shape (forecast revenue change): one filtered scan, one
     global aggregate — the canonical predicate-pushdown benchmark query.
     Revenue per row is a single-rounded double product cast to
@@ -595,11 +576,11 @@ def forecast_revenue(
     rev = (F.col("l_extendedprice") * F.col("l_discount")).cast("decimal(18,6)")
     return (
         lineitem.where(
-            (F.col("l_shipdate") >= F.lit(year_start).cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit(year_end).cast("timestamp"))
-            & (F.col("l_discount") >= F.lit(discount_lo))
-            & (F.col("l_discount") <= F.lit(discount_hi))
-            & (F.col("l_quantity") < F.lit(float(max_qty)))
+            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
+            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
+            & (F.col("l_discount") >= F.lit(0.05))
+            & (F.col("l_discount") <= F.lit(0.07))
+            & (F.col("l_quantity") < F.lit(24.0))
         )
         .agg(
             F.sum(rev).cast("decimal(38,6)").cast("double").alias("revenue"),

@@ -152,14 +152,13 @@ def lsh_ann_topk(
     queries: DataFrame,
     k: int = 3,
     n_planes: int = 8,
-    multiprobe: bool = True,
     dim: int | None = None,
 ) -> DataFrame:
     """Approximate top-k: candidates = same LSH bucket, exact re-rank inside.
 
     One bucket assignment pass over the corpus (expressions only), then a
     bucket-equi-join instead of the full cross join — the candidate set per
-    query shrinks by ~2^n_planes / (n_planes + 1). `multiprobe` also probes
+    query shrinks by ~2^n_planes / (n_planes + 1). Each query also probes
     every Hamming-1 neighbour bucket of the query (near-misses on one
     hyperplane are the dominant recall loss).
     """
@@ -172,11 +171,10 @@ def lsh_ann_topk(
     planes = hyperplanes(dim, n_planes)
     corpus = embeddings.withColumn("bucket", bucket_assign_col(F.col("embedding"), planes))
     probes = queries.withColumn("bucket", bucket_assign_col(F.col("qvec"), planes))
-    if multiprobe:
-        neighbours = F.array(
-            F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)]
-        )
-        probes = probes.withColumn("bucket", F.explode(neighbours))
+    neighbours = F.array(
+        F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)]
+    )
+    probes = probes.withColumn("bucket", F.explode(neighbours))
     scored = (
         corpus.alias("e")
         .join(F.broadcast(probes.alias("q")), "bucket")
@@ -391,7 +389,7 @@ def queries_from_embeddings(embeddings: DataFrame, n: int = 5) -> DataFrame:
     )
 
 
-def embedding_quantize(embeddings: DataFrame, bits_max: int = 127) -> DataFrame:
+def embedding_quantize(embeddings: DataFrame) -> DataFrame:
     """Symmetric int8 quantization of embedding vectors (the standard
     serving/storage compression): per-vector scale = max |x| (exact — an
     order-independent max of exactly-cast doubles), q_i = floor(127 *
@@ -407,7 +405,7 @@ def embedding_quantize(embeddings: DataFrame, bits_max: int = 127) -> DataFrame:
     (verified in the executed plan). Output codes ride as a
     comma-joined string (primitive, hash-friendly); scale rides along
     for dequantization."""
-    qv = _quantized_vectors(embeddings, bits_max)
+    qv = _quantized_vectors(embeddings)
     return qv.select(
         "vec_id",
         "scale",
@@ -415,12 +413,13 @@ def embedding_quantize(embeddings: DataFrame, bits_max: int = 127) -> DataFrame:
     )
 
 
-def _quantized_vectors(
-    embeddings: DataFrame, bits_max: int = 127, keep_embedding: bool = False
-) -> DataFrame:
+INT8_LEVELS = 127  # int8 codes span [-127, 127]
+
+
+def _quantized_vectors(embeddings: DataFrame, keep_embedding: bool = False) -> DataFrame:
     """(vec_id, scale, qc array<int>[, embedding]) — THE quantization
     kernel, shared by embedding_quantize, the quantized ANN path and the
-    error monitor so the floor(bits_max*x/scale + 0.5) math exists in
+    error monitor so the floor(INT8_LEVELS*x/scale + 0.5) math exists in
     exactly one place. keep_embedding carries the source vector along
     for reconstruction-style consumers."""
     from ..plans.fanout import fan_out
@@ -431,14 +430,14 @@ def _quantized_vectors(
     q = F.transform(
         "embedding",
         lambda x: F.when(F.col("scale") == 0.0, F.lit(0)).otherwise(
-            F.floor(F.lit(float(bits_max)) * x.cast("double") / F.col("scale") + F.lit(0.5))
+            F.floor(F.lit(float(INT8_LEVELS)) * x.cast("double") / F.col("scale") + F.lit(0.5))
         ).cast("int"),
     )
     cols = ["vec_id", "scale", q.alias("qc")] + (["embedding"] if keep_embedding else [])
     return staged.select(*cols)
 
 
-def ann_topk_quantized(embeddings: DataFrame, n_queries: int = 5, k: int = 3) -> DataFrame:
+def ann_topk_quantized(embeddings: DataFrame, k: int = 3) -> DataFrame:
     """Top-k retrieval over int8-QUANTIZED codes: rank by the exact
     integer dot product of code vectors — the standard compressed-domain
     serving path (4x memory cut, SIMD int math on a real cluster), and
@@ -452,7 +451,7 @@ def ann_topk_quantized(embeddings: DataFrame, n_queries: int = 5, k: int = 3) ->
     from pyspark.sql import Window
 
     qv = _quantized_vectors(embeddings)
-    queries = qv.where(F.col("vec_id") < n_queries).select(
+    queries = qv.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("qc").alias("qq")
     )
     dot = F.aggregate(
@@ -474,7 +473,7 @@ def ann_topk_quantized(embeddings: DataFrame, n_queries: int = 5, k: int = 3) ->
     )
 
 
-def quantization_error(embeddings: DataFrame, bits_max: int = 127) -> DataFrame:
+def quantization_error(embeddings: DataFrame) -> DataFrame:
     """Per-vector max absolute reconstruction error of the int8
     quantization (dequant = q * scale / 127): the quality metric you
     monitor before switching serving to the compressed domain. Every
@@ -485,12 +484,12 @@ def quantization_error(embeddings: DataFrame, bits_max: int = 127) -> DataFrame:
     # no self-join: the shared kernel carries the source vector along
     # (keep_embedding), so quantize + reconstruct is one per-row
     # pipeline — zero shuffles, and the kernel math lives in one place
-    with_qc = _quantized_vectors(embeddings, bits_max, keep_embedding=True)
+    with_qc = _quantized_vectors(embeddings, keep_embedding=True)
     err = F.zip_with(
         "embedding",
         "qc",
         lambda x, qi: F.abs(
-            x.cast("double") - (qi.cast("double") * F.col("scale") / F.lit(float(bits_max)))
+            x.cast("double") - (qi.cast("double") * F.col("scale") / F.lit(float(INT8_LEVELS)))
         ),
     )
     return with_qc.select("vec_id", "scale", F.array_max(err).alias("max_abs_err"))
@@ -665,25 +664,22 @@ def label_centroid_distances(embeddings: DataFrame) -> DataFrame:
     return pair.select("label_a", "label_b", "n_a", "n_b", fold.alias("dist_sq"))
 
 
-def ann_two_stage(
-    embeddings: DataFrame, n_queries: int = 5, k: int = 3, overfetch: int = 4
-) -> DataFrame:
-    """Two-stage retrieval — the standard production serving shape:
-    stage 1 generates k*overfetch candidates in the COMPRESSED domain
+def ann_two_stage(embeddings: DataFrame) -> DataFrame:
+    """Two-stage retrieval — the standard production serving shape, for
+    the first 5 vec_ids as queries: stage 1 generates 12 candidates per
+    query in the COMPRESSED domain
     (int8 code dot products: exact BIGINTs, 4x less memory traffic),
     stage 2 reranks ONLY those candidates with the exact float dot
     (dot_double's left-fold contract). Returns (query_id, vec_id, dot,
-    rank) with rank <= k over the reranked order, ties to vec_id.
+    rank) with rank <= 3 over the reranked order, ties to vec_id.
 
     Scale shape: stage 1 is the quantized broadcast top-m; stage 2's
     exact dots run on m rows per query (never the corpus), attached by
     one vec_id equi-join + a broadcast query join."""
     from pyspark.sql import Window
 
-    cands = ann_topk_quantized(embeddings, n_queries, k * overfetch).select(
-        "query_id", "vec_id"
-    )
-    qv = queries_from_embeddings(embeddings, n=n_queries)
+    cands = ann_topk_quantized(embeddings, 12).select("query_id", "vec_id")
+    qv = queries_from_embeddings(embeddings, n=5)
     joined = cands.join(embeddings.select("vec_id", "embedding"), "vec_id").join(
         F.broadcast(qv), "query_id"
     )
@@ -695,7 +691,7 @@ def ann_two_stage(
             dot_double(F.col("embedding"), F.col("qvec")).alias("dot"),
         )
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 3)
         .select("query_id", "vec_id", F.col("dot").cast("double").alias("dot"), "rank")
     )
 

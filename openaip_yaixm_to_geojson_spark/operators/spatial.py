@@ -402,10 +402,10 @@ def polygon_contains_pairs(spark: SparkSession, polygons: list[dict[str, Any]] |
     return _polygon_pairs(spark, polygons, ("outer_poly", "inner_poly"), operator.ne, _ring_contains_np)
 
 
-def ring_decimate(polygons_df: DataFrame, tol_area_deg2: float = 1e-6) -> DataFrame:
+def ring_decimate(polygons_df: DataFrame) -> DataFrame:
     """One-pass vertex decimation for tile rendering (single Visvalingam
     sweep): interior vertex i survives iff the triangle it spans with its
-    neighbours has area > tol — densified arc/circle chains (tiny, nearly
+    neighbours has area > 1e-6 deg^2 — densified arc/circle chains (tiny, nearly
     collinear triangles) collapse to sparse outlines while true corners
     stay. Endpoints always survive, so closure is preserved.
 
@@ -426,7 +426,7 @@ def ring_decimate(polygons_df: DataFrame, tol_area_deg2: float = 1e-6) -> DataFr
         p = F.element_at(ring, i)
         pp = F.element_at(ring, i + 1)
         cross = (p[0] - pm[0]) * (pp[1] - p[1]) - (p[1] - pm[1]) * (pp[0] - p[0])
-        return F.abs(cross) > F.lit(2.0 * tol_area_deg2)
+        return F.abs(cross) > F.lit(2e-6)
 
     interior = F.filter(F.sequence(F.lit(2), n - 1), keep_vertex)
     # the n >= 1 guard matters: Spark's sequence(1, 0) counts DOWN to
@@ -484,9 +484,7 @@ def polygon_area_orientation(polygons_df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def geo_cluster_cells(
-    pages: DataFrame, res: int = 7, min_pts: int = 2, max_iters: int = 200
-) -> DataFrame:
+def geo_cluster_cells(pages: DataFrame, res: int = 7, min_pts: int = 2) -> DataFrame:
     """(cell, cluster_id, n_points): DBSCAN-flavored density clustering on
     the cell grid — cells holding >= min_pts pages are dense; dense cells
     that are 8-neighbors merge into one cluster labeled by the minimum
@@ -531,7 +529,7 @@ def geo_cluster_cells(
         a.join(b, ["nx", "ny"]).where(F.col("key_a") < F.col("key_b")).select("key_a", "key_b")
     )
     labels = duplicate_clusters(
-        pairs, documents=dense.select(F.col("cell")), key_col="cell", max_iters=max_iters
+        pairs, documents=dense.select(F.col("cell")), key_col="cell", max_iters=200
     )
     return dense.join(labels, dense.cell == labels.key).select(
         "cell", "cluster_id", "n_points"

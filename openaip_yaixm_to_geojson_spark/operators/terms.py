@@ -84,7 +84,7 @@ def inverted_index(documents: DataFrame, df_cap: int | None = None) -> DataFrame
     return dfreq.join(posted, "term", "left").select("term", "doc_freq", "postings")
 
 
-def tfidf_topk(documents: DataFrame, k: int = 3, broadcast_vocab: bool = True) -> DataFrame:
+def tfidf_topk(documents: DataFrame, k: int = 3) -> DataFrame:
     """Top-k salient terms per document by tf x (N / df) relevance
     (reciprocal-df weighting — same ranking family as tf-idf but exactly
     reproducible: CAST(tf) * (CAST(N) / CAST(df)) is three IEEE ops on
@@ -95,9 +95,8 @@ def tfidf_topk(documents: DataFrame, k: int = 3, broadcast_vocab: bool = True) -
     vocabulary-sized and broadcast into the join, as is the one-row corpus
     count; the final per-document top-k is a rank-filtered window that
     Spark executes with WindowGroupLimit pushdown (only k rows per
-    document survive the shuffle read). broadcast_vocab is a HARD hint —
-    set False if the vocabulary outgrows executor memory (the join then
-    shuffles instead of OOMing the broadcast)."""
+    document survive the shuffle read). The df table rides a HARD
+    broadcast hint."""
     occ = doc_term_pairs(documents)
     tf = occ.groupBy("key", "term").agg(F.count(F.lit(1)).alias("tf"))
     # df comes from its OWN distinct-pairs pass, deliberately NOT from
@@ -107,9 +106,9 @@ def tfidf_topk(documents: DataFrame, k: int = 3, broadcast_vocab: bool = True) -
     # ReusedExchange-s them) and pays two chained shuffles where this
     # shape pays one — measured 1M docs / corpus-sized vocab: 26.8s this
     # form, 31.2s the df-from-tf form
-    dfreq = doc_term_pairs(documents, distinct=True).groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    if broadcast_vocab:
-        dfreq = F.broadcast(dfreq)
+    dfreq = F.broadcast(
+        doc_term_pairs(documents, distinct=True).groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    )
     total = documents.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
         tf.join(dfreq, "term")
@@ -257,7 +256,7 @@ def hll_distinct(documents: DataFrame) -> DataFrame:
     )
 
 
-def bigram_pmi(documents: DataFrame, top: int = 20, broadcast_vocab: bool = True) -> DataFrame:
+def bigram_pmi(documents: DataFrame, top: int = 20) -> DataFrame:
     """Global bigram collocation ranking by the PMI odds ratio
     c_ab * N / (c_a * c_b) (monotone in PMI = log of it; the log itself is
     libm-dependent, the ratio is two exact-integer products and one
@@ -283,12 +282,11 @@ def bigram_pmi(documents: DataFrame, top: int = 20, broadcast_vocab: bool = True
         .localCheckpoint()
     )
     total = uni.agg(F.sum("c").alias("n_tokens"))
-    hint = F.broadcast if broadcast_vocab else (lambda df: df)
     scored = (
         c_ab.withColumn("w1", F.substring_index("gram", " ", 1))
         .withColumn("w2", F.substring_index("gram", " ", -1))
-        .join(hint(uni.select(F.col("term").alias("w1"), F.col("c").alias("c_a"))), "w1")
-        .join(hint(uni.select(F.col("term").alias("w2"), F.col("c").alias("c_b"))), "w2")
+        .join(F.broadcast(uni.select(F.col("term").alias("w1"), F.col("c").alias("c_a"))), "w1")
+        .join(F.broadcast(uni.select(F.col("term").alias("w2"), F.col("c").alias("c_b"))), "w2")
         .crossJoin(F.broadcast(total))
         .withColumn(
             "pmi_ratio",
@@ -303,7 +301,7 @@ def bigram_pmi(documents: DataFrame, top: int = 20, broadcast_vocab: bool = True
     )
 
 
-def token_rarity(documents: DataFrame, broadcast_vocab: bool = True) -> DataFrame:
+def token_rarity(documents: DataFrame) -> DataFrame:
     """Per-document corpus-frequency profile: token count, the exact
     BIGINT sum of each token's corpus frequency, and their ratio (mean
     corpus frequency — low means the document is built from rare tokens,
@@ -311,13 +309,10 @@ def token_rarity(documents: DataFrame, broadcast_vocab: bool = True) -> DataFram
     the single final division is the only float op.
 
     Scale shape: unigram counts are vocabulary-sized and broadcast into
-    the exploded fact side (broadcast_vocab=False drops the hard hint if
-    the vocabulary outgrows executor memory); the per-document rollup is
+    the exploded fact side under a hard hint; the per-document rollup is
     one map-side-partial shuffle on the document key."""
     occ = doc_term_pairs(documents)
-    uni = occ.groupBy("term").agg(F.count(F.lit(1)).alias("c"))
-    if broadcast_vocab:
-        uni = F.broadcast(uni)
+    uni = F.broadcast(occ.groupBy("term").agg(F.count(F.lit(1)).alias("c")))
     agg = occ.join(uni, "term").groupBy("key").agg(
         F.count(F.lit(1)).alias("n_tokens"), F.sum("c").alias("freq_sum")
     )
@@ -369,14 +364,14 @@ def _doc_gram_counts(documents: DataFrame, width: int, hash_grams: bool = False)
     )
 
 
-def repeated_grams(documents: DataFrame, width: int = 8, min_docs: int = 2) -> DataFrame:
-    """(gram, n_docs, n_occ) for width-word grams appearing in >= min_docs
+def repeated_grams(documents: DataFrame, width: int = 8) -> DataFrame:
+    """(gram, n_docs, n_occ) for width-word grams appearing in >= 2
     DISTINCT documents — the corpus boilerplate/memorization report.
 
     Scale shape: two map-side-partial shuffles ((key, gram) then gram);
     n_docs is a COUNT(*) over the pre-aggregated per-document rows, so no
     distinct-aggregate expand ever touches the corpus-sized gram stream.
-    The min_docs filter bounds the output to actually-repeated grams."""
+    The >= 2 filter bounds the output to actually-repeated grams."""
     dg = _doc_gram_counts(documents, width)
     return (
         dg.groupBy("gram")
@@ -384,7 +379,7 @@ def repeated_grams(documents: DataFrame, width: int = 8, min_docs: int = 2) -> D
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum("n_pos").cast("bigint").alias("n_occ"),
         )
-        .where(F.col("n_docs") >= F.lit(min_docs))
+        .where(F.col("n_docs") >= F.lit(2))
     )
 
 
@@ -493,8 +488,8 @@ def countmin_heavy_hitters(documents: DataFrame, k: int = 20) -> DataFrame:
     )
 
 
-def bpe_pair_counts(documents: DataFrame, k: int = 50) -> DataFrame:
-    """Adjacent character-pair frequencies over whitespace tokens — the
+def bpe_pair_counts(documents: DataFrame) -> DataFrame:
+    """Top 50 adjacent character-pair frequencies over whitespace tokens — the
     statistic a BPE tokenizer trainer computes to pick its next merge
     (top pair = first merge rule). Counts respect within-token
     multiplicity ('aaa' contributes 'aa' twice).
@@ -521,7 +516,7 @@ def bpe_pair_counts(documents: DataFrame, k: int = 50) -> DataFrame:
         pairs.groupBy("pair")
         .agg(F.sum("cnt").alias("n_occurrences"))
         .orderBy(F.desc("n_occurrences"), F.asc("pair"))
-        .limit(k)
+        .limit(50)
     )
 
 

@@ -687,7 +687,7 @@ def sampled_percentile_chars(
     )
 
 
-def length_quartiles(documents: DataFrame, buckets: int = 4) -> DataFrame:
+def length_quartiles(documents: DataFrame) -> DataFrame:
     """Per-language length-quartile profile via NTILE over the total order
     (n_chars, doc_id) — deterministic bucket assignment (both engines
     define ntile identically: earlier buckets take the remainder rows),
@@ -698,7 +698,7 @@ def length_quartiles(documents: DataFrame, buckets: int = 4) -> DataFrame:
     w = Window.partitionBy("lang").orderBy("n_chars", "doc_id")
     return (
         documents.select("lang", "n_chars", "doc_id")
-        .select("lang", "n_chars", F.ntile(buckets).over(w).alias("quartile"))
+        .select("lang", "n_chars", F.ntile(4).over(w).alias("quartile"))
         .groupBy("lang", "quartile")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -819,20 +819,18 @@ def lang_length_regression(documents: DataFrame) -> DataFrame:
     )
 
 
-def weighted_sample(
-    documents: DataFrame, fraction: float = 0.5, length_cap: int = 2000
-) -> DataFrame:
+def weighted_sample(documents: DataFrame, length_cap: int = 2000) -> DataFrame:
     """Deterministic LENGTH-WEIGHTED Bernoulli sample: each document is
-    kept with probability fraction * min(n_chars, cap) / cap — the
+    kept with probability 0.5 * min(n_chars, cap) / cap — the
     quality-weighted inclusion rule mixture builders use (longer docs
     proportionally likelier, hard-capped) — with the same md5-bucket
     determinism contract as deterministic_sample: identical keep-set at
     any parallelism, on re-runs, and in the oracle.
 
     The comparison is EXACT integer arithmetic (no float weight): keep
-    iff bucket * cap < round(fraction * BUCKETS) * min(n_chars, cap).
+    iff bucket * cap < round(0.5 * BUCKETS) * min(n_chars, cap).
     Zero shuffles — a pure codegen filter."""
-    rate_num = int(round(fraction * SAMPLE_BUCKETS))
+    rate_num = int(round(0.5 * SAMPLE_BUCKETS))
     w = F.least(F.col("n_chars"), F.lit(int(length_cap)))
     return documents.where(
         sample_hash_col(F.col("doc_id")) * F.lit(int(length_cap)) < w * F.lit(rate_num)
@@ -883,12 +881,12 @@ def char_diversity(documents: DataFrame) -> DataFrame:
     )
 
 
-def length_outliers(documents: DataFrame, k: int = 3) -> DataFrame:
+def length_outliers(documents: DataFrame) -> DataFrame:
     """Robust per-language outlier profile of document length using
     median/MAD (the z-score's robust sibling — one spam blob cannot drag
     the baseline the way it drags a mean/std): (lang, n_docs,
     median_chars, mad_chars, n_outliers) with outlier := |x - median| >
-    k * MAD. ENTIRELY integer arithmetic — median and MAD are lower-median
+    3 * MAD. ENTIRELY integer arithmetic — median and MAD are lower-median
     order statistics (the lang_percentile_chars convention), so every
     output hash-gates with no float rules at all.
 
@@ -926,7 +924,7 @@ def length_outliers(documents: DataFrame, k: int = 3) -> DataFrame:
     flagged = (
         dev.join(F.broadcast(mad), "lang")
         .groupBy("lang")
-        .agg(F.sum((F.col("dev") > F.lit(k) * F.col("mad_chars")).cast("bigint")).alias("n_outliers"))
+        .agg(F.sum((F.col("dev") > F.lit(3) * F.col("mad_chars")).cast("bigint")).alias("n_outliers"))
     )
     return (
         med.select("lang", "n_docs", F.col("med_n_chars").alias("median_chars"))
@@ -936,7 +934,7 @@ def length_outliers(documents: DataFrame, k: int = 3) -> DataFrame:
     )
 
 
-def quality_funnel(documents: DataFrame, min_chars: int = 50) -> DataFrame:
+def quality_funnel(documents: DataFrame) -> DataFrame:
     """Per-source quality-filter funnel: how many docs survive each
     successive gate (length -> word-length band -> punctuation -> digit
     ratio) — the drop-off report a corpus-cleaning run publishes so you
@@ -945,7 +943,7 @@ def quality_funnel(documents: DataFrame, min_chars: int = 50) -> DataFrame:
     source granularity; the ratio comparisons reuse quality_struct's
     single-rounded expressions, so counts are engine-exact."""
     q = quality_struct(F.col("text"))
-    c_len = F.col("q.n_chars") >= min_chars
+    c_len = F.col("q.n_chars") >= 50
     c_wl = c_len & (F.col("q.mean_word_len") >= 3.0) & (F.col("q.mean_word_len") <= 12.0)
     c_punct = c_wl & (F.col("q.punct_ratio") <= 0.1)
     c_digit = c_punct & (F.col("q.digit_ratio") <= 0.2)
@@ -985,9 +983,7 @@ def lang_confusion(documents: DataFrame) -> DataFrame:
     )
 
 
-def length_winsorize(
-    documents: DataFrame, lo_num: int = 1, lo_den: int = 20, hi_num: int = 19, hi_den: int = 20
-) -> DataFrame:
+def length_winsorize(documents: DataFrame) -> DataFrame:
     """Per-language winsorization profile at exact RANK-SELECTED p05/p95
     thresholds (interpolated quantiles are float-divergent across engines;
     the rank-selected element is an integer and hash-gates): every doc's
@@ -1008,8 +1004,8 @@ def length_winsorize(
         F.row_number().over(w).alias("rn"),
         F.count(F.lit(1)).over(Window.partitionBy("lang")).alias("cnt"),
     )
-    lo_t = F.expr(f"({lo_num} * cnt + {lo_den - 1}) div {lo_den}")
-    hi_t = F.expr(f"({hi_num} * cnt + {hi_den - 1}) div {hi_den}")
+    lo_t = F.expr("(cnt + 19) div 20")
+    hi_t = F.expr("(19 * cnt + 19) div 20")
     thresholds = (
         ranked.where((F.col("rn") == lo_t) | (F.col("rn") == hi_t))
         .groupBy("lang")
@@ -1098,41 +1094,31 @@ def readability(documents: DataFrame) -> DataFrame:
     )
 
 
-def temperature_mixture(
-    documents: DataFrame, budget: int, t_num: int = 2, t_den: int = 1
-) -> DataFrame:
+def temperature_mixture(documents: DataFrame, budget: int) -> DataFrame:
     """Temperature-scaled mixture allocation: Hamilton quotas over TEMPERED
     weights w^(1/T) — the up/down-weighting every multi-source training mix
-    applies before sampling. Supported temperatures are the ones with an
-    EXACTLY-reproducible power: T=2 (sqrt — IEEE-correctly-rounded in both
+    applies before sampling. The temperature is T=2, whose power is
+    EXACTLY reproducible: sqrt is IEEE-correctly-rounded in both
     engines; tempered weight = floor(sqrt(w)*2^10 + 0.5), a single-rounded
-    chain onto an exact integer) and T=1/2 (square — exact BIGINT, w
-    bounded by 3e9). A general pow() is libm and cannot hash-gate; these
-    two cover the common flatten/sharpen presets.
+    chain onto an exact integer. A general pow() is libm and cannot
+    hash-gate.
 
     The quota math reuses mixture_allocate verbatim on a one-row-per-group
     tempered-weight frame (the group-by inside is then a pass-through)."""
     w = documents.groupBy(F.col("source").alias("grp")).agg(F.sum("n_chars").alias("wt"))
-    if (t_num, t_den) == (2, 1):
-        tempered = F.floor(
-            F.sqrt(F.col("wt").cast("double")) * F.lit(1024.0) + F.lit(0.5)
-        ).cast("bigint")
-    elif (t_num, t_den) == (1, 2):
-        tempered = (F.col("wt") * F.col("wt")).cast("bigint")
-    else:
-        raise ValueError(
-            f"temperature {t_num}/{t_den} unsupported: only T=2 (sqrt) and "
-            "T=1/2 (square) have exactly-reproducible powers (general pow is libm)"
-        )
+    tempered = F.floor(F.sqrt(F.col("wt").cast("double")) * F.lit(1024.0) + F.lit(0.5)).cast("bigint")
     tw = w.select(F.col("grp").alias("source"), tempered.alias("wt_t"))
     return mixture_allocate(tw, budget, weight_col="wt_t")
 
 
-def span_scrub(documents: DataFrame, n: int = 8, min_docs: int = 2) -> DataFrame:
+SPAN_WORDS = 8  # word n-gram width of span_scrub
+
+
+def span_scrub(documents: DataFrame) -> DataFrame:
     """Duplicated-SPAN removal (the RefinedWeb/exact-substring scrub step —
     duplicated_span_stats says how much is duplicated, this actually
-    REMOVES it): any token covered by an occurrence of a word n-gram that
-    appears in >= min_docs distinct documents is scrubbed; the surviving
+    REMOVES it): any token covered by an occurrence of a SPAN_WORDS-gram that
+    appears in >= 2 distinct documents is scrubbed; the surviving
     stream is rebuilt in order and md5-hash-gated (exact sequence).
 
     Scale shape: gram text never shuffles — (doc, md5(gram)) pairs
@@ -1146,19 +1132,19 @@ def span_scrub(documents: DataFrame, n: int = 8, min_docs: int = 2) -> DataFrame
     ).localCheckpoint()  # feeds the rebuild AND the token counts
     doc_grams = documents.select(
         F.col("doc_id").alias("key"),
-        F.posexplode(_word_ngrams_col(F.col("text"), n)).alias("gpos", "g"),
+        F.posexplode(_word_ngrams_col(F.col("text"), SPAN_WORDS)).alias("gpos", "g"),
     ).select("key", "gpos", F.md5("g").alias("dg")).localCheckpoint()
     hot = (
         doc_grams.select("key", "dg")
         .distinct()
         .groupBy("dg")
         .agg(F.count(F.lit(1)).alias("nd"))
-        .where(F.col("nd") >= min_docs)
+        .where(F.col("nd") >= 2)
         .select("dg")
     )
     cover = (
         doc_grams.join(hot, "dg")
-        .select("key", F.explode(F.sequence(F.col("gpos"), F.col("gpos") + (n - 1))).alias("pos"))
+        .select("key", F.explode(F.sequence(F.col("gpos"), F.col("gpos") + (SPAN_WORDS - 1))).alias("pos"))
         .distinct()
     )
     n_tok = toks.groupBy("key").agg(F.count(F.lit(1)).alias("n_tokens"))
@@ -1218,19 +1204,19 @@ def quality_lr_score(documents: DataFrame) -> DataFrame:
     )
 
 
-def dataset_split(documents: DataFrame, val_pct: int = 10, test_pct: int = 10) -> DataFrame:
+def dataset_split(documents: DataFrame) -> DataFrame:
     """Deterministic train/val/test assignment by md5 bucket (the
     deterministic_sample convention: same split at any parallelism, on
     re-runs, and in the oracle) + per-(split, lang) counts — the audit
     view every corpus release ships. Bucket = md5 prefix % 100:
-    [0, val_pct) -> val, [val_pct, val_pct+test_pct) -> test, rest train.
+    [0, 10) -> val, [10, 20) -> test, rest train.
     Zero-shuffle assignment; one (split, lang) rollup."""
     # 100 divides SAMPLE_BUCKETS, so this nests exactly inside the
     # deterministic_sample bucket space
     bucket = sample_hash_col(F.col("doc_id")) % 100
     split = (
-        F.when(bucket < val_pct, F.lit("val"))
-        .when(bucket < val_pct + test_pct, F.lit("test"))
+        F.when(bucket < 10, F.lit("val"))
+        .when(bucket < 20, F.lit("test"))
         .otherwise(F.lit("train"))
     )
     return (

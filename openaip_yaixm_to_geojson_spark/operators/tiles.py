@@ -82,7 +82,7 @@ def tile_zoom_rollup(tiles: DataFrame, levels: int = 1) -> DataFrame:
     )
 
 
-def tile_vector_export(pages: DataFrame, res: int = DEFAULT_TILE_RES) -> DataFrame:
+def tile_vector_export(pages: DataFrame) -> DataFrame:
     """Raster -> vector export: per-tile aggregates with the tile's bbox
     attached as numeric columns (a GeoJSON sink serializes these into
     Polygon rings; numbers stay numeric here because float->string
@@ -93,11 +93,11 @@ def tile_vector_export(pages: DataFrame, res: int = DEFAULT_TILE_RES) -> DataFra
     Spark, DuckDB and NumPy (same guarantee cell encode relies on). The
     bbox attach is per-TILE (post-aggregation), adding nothing to the
     fact-table scan."""
-    size = 360.0 / float(1 << res)
+    size = 360.0 / float(1 << DEFAULT_TILE_RES)
     mask = F.lit(cellgrid._SHIFT - 1)
     x = F.col("tile_id").bitwiseAND(mask)
     y = F.shiftright(F.col("tile_id"), 29).bitwiseAND(mask)
-    return tile_doc_counts(pages, res).select(
+    return tile_doc_counts(pages).select(
         "tile_id",
         (x.cast("double") * F.lit(size) - F.lit(180.0)).alias("min_lon"),
         (y.cast("double") * F.lit(size) - F.lit(90.0)).alias("min_lat"),
@@ -220,27 +220,32 @@ def geohash_counts(pages: DataFrame, precision: int = 5) -> DataFrame:
     )
 
 
-def geohash_pyramid(pages: DataFrame, precision: int = 5, min_precision: int = 3) -> DataFrame:
+PYRAMID_PRECISIONS = (3, 4, 5)  # geohash levels of geohash_pyramid, finest last
+
+
+def geohash_pyramid(pages: DataFrame) -> DataFrame:
     """Multi-resolution geohash rollup in ONE pass: a geohash prefix IS the
     parent cell (the base32 hierarchy property), so the zoom pyramid is an
     explode over prefixes of the finest hash + a single aggregation —
-    never one job per level. Output: (precision, geohash, n_pages)."""
+    never one job per level. Output: (precision, geohash, n_pages) for each
+    of PYRAMID_PRECISIONS."""
     from ..functions import geohash as gh
 
-    lon_idx, lat_idx = gh.geohash_idx_sql("lat", "lon", precision)
+    finest = PYRAMID_PRECISIONS[-1]
+    lon_idx, lat_idx = gh.geohash_idx_sql("lat", "lon", finest)
     prefixes = F.array(
         *[
             F.struct(
                 F.lit(p).alias("precision"),
                 F.expr(f"substring(gh5, 1, {p})").alias("geohash"),
             )
-            for p in range(min_precision, precision + 1)
+            for p in PYRAMID_PRECISIONS
         ]
     )
     return (
         pages.selectExpr(f"{lon_idx} AS gh_lon_idx", f"{lat_idx} AS gh_lat_idx")
-        .selectExpr(f"{gh.geohash_interleave_sql(precision, 'spark')} AS gh_i")
-        .selectExpr(f"{gh.geohash_chars_sql(precision, 'spark')} AS gh5")
+        .selectExpr(f"{gh.geohash_interleave_sql(finest, 'spark')} AS gh_i")
+        .selectExpr(f"{gh.geohash_chars_sql(finest, 'spark')} AS gh5")
         .select(F.explode(prefixes).alias("pg"))
         .select("pg.precision", "pg.geohash")
         .groupBy("precision", "geohash")
@@ -287,11 +292,7 @@ def tile_unmatched_counts(
     )
 
 
-def tile_nearest_airspace(
-    pages: DataFrame,
-    polygons: list[dict[str, Any]],
-    res: int = DEFAULT_TILE_RES,
-) -> DataFrame:
+def tile_nearest_airspace(pages: DataFrame, polygons: list[dict[str, Any]]) -> DataFrame:
     """(tile_id, n_docs, poly_id, dist_sq): each OCCUPIED tile's page count
     plus the nearest airspace to the tile CENTER by exact point-to-segment
     distance, ties to the smaller poly_id — the 'how far is this tile from
@@ -307,8 +308,8 @@ def tile_nearest_airspace(
     use the shared seg_d2_expr clamped-projection formulation."""
     from ..operators.knn import _segment_arrays, seg_d2_expr
 
-    tiles = with_tile(pages, res).groupBy("tile_id").agg(F.count(F.lit(1)).alias("n_docs"))
-    size = cellgrid.cell_size_deg(res)
+    tiles = with_tile(pages).groupBy("tile_id").agg(F.count(F.lit(1)).alias("n_docs"))
+    size = cellgrid.cell_size_deg(DEFAULT_TILE_RES)
     x = F.pmod(F.col("tile_id"), F.lit(cellgrid._SHIFT))
     y = F.pmod(F.expr(f"tile_id div {cellgrid._SHIFT}"), F.lit(cellgrid._SHIFT))
     centers = tiles.select(

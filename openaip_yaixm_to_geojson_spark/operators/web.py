@@ -59,13 +59,13 @@ def extract_paragraphs(pages: DataFrame) -> DataFrame:
     ).select("key", "para_idx", strip_markup_col(F.col("raw")).alias("paragraph"))
 
 
-def paragraph_dedup(paragraphs: DataFrame, min_len: int = 1) -> DataFrame:
+def paragraph_dedup(paragraphs: DataFrame) -> DataFrame:
     """Paragraph-level exact dedup (the RefinedWeb/CCNet line-dedup shape):
     group identical normalized paragraphs by md5, keep the smallest owner
     key and the copy count. One shuffle on the digest with map-side
-    partials; paragraphs below `min_len` chars are noise and dropped."""
+    partials; empty paragraphs are dropped."""
     return (
-        paragraphs.where(F.length("paragraph") >= min_len)
+        paragraphs.where(F.length("paragraph") >= 1)
         .groupBy(F.md5("paragraph").alias("para_hash"))
         .agg(
             F.min("key").alias("owner"),
@@ -149,8 +149,8 @@ def canonical_url_col(url: Column) -> Column:
     )
 
 
-def url_canonicalize(pages: DataFrame, url_col: str = "url") -> DataFrame:
-    return pages.withColumn("canonical_url", canonical_url_col(F.col(url_col)))
+def url_canonicalize(pages: DataFrame) -> DataFrame:
+    return pages.withColumn("canonical_url", canonical_url_col(F.col("url")))
 
 
 def canonical_url_dedup(pages: DataFrame) -> DataFrame:
@@ -158,7 +158,7 @@ def canonical_url_dedup(pages: DataFrame) -> DataFrame:
     every web pipeline runs before content dedup): one shuffle on the
     canonical key, smallest raw URL kept as representative."""
     return (
-        url_canonicalize(pages, "url")
+        url_canonicalize(pages)
         .groupBy("canonical_url")
         .agg(F.count(F.lit(1)).alias("n_variants"), F.min("url").alias("representative"))
     )
@@ -280,15 +280,13 @@ def synth_linked_pages(spark, sf_dir: str) -> DataFrame:
     )
 
 
-def extract_links(
-    pages: DataFrame, html_col: str = "html", key_col: str = "doc_id"
-) -> DataFrame:
+def extract_links(pages: DataFrame, key_col: str = "doc_id") -> DataFrame:
     """One row per outgoing href: (key, link). Pure codegen — utf-8 decode
     + one RE2-safe regexp_extract_all + explode; no Python touches the
     bytes. The fan-out is bounded by the page's anchor count, so the
     explode is shuffle-free (narrow) and downstream aggs do the only
     exchanges."""
-    links = F.regexp_extract_all(F.decode(F.col(html_col), "utf-8"), F.lit(PAT_HREF), 1)
+    links = F.regexp_extract_all(F.decode(F.col("html"), "utf-8"), F.lit(PAT_HREF), 1)
     return pages.select(F.col(key_col).alias("key"), F.explode(links).alias("link"))
 
 
@@ -298,7 +296,7 @@ def host_link_graph(pages: DataFrame) -> DataFrame:
     scoring. One shuffle (the groupBy); the href explode stays narrow.
     src hosts follow the corpus host distribution, so the agg's skew keys
     are the big hosts — AQE's skew handling covers the exchange."""
-    links = extract_links(pages, html_col="html", key_col="url")
+    links = extract_links(pages, key_col="url")
     return (
         links.select(
             url_host_col(F.col("key")).alias("src_host"),
@@ -327,7 +325,7 @@ def _host_graph(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
     regex explode per round."""
     from pyspark.storagelevel import StorageLevel
 
-    links = extract_links(pages, html_col="html", key_col="url")
+    links = extract_links(pages, key_col="url")
     # persist, not checkpoint (r7): same materialize-once guarantee for the
     # round-invariant edge/node inputs, shared across invocations in a
     # session (per-round rank state is materialized separately)
@@ -344,7 +342,7 @@ def _host_graph(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
     return nodes, edges
 
 
-def link_pagerank(pages: DataFrame, iters: int = 3) -> DataFrame:
+def link_pagerank(pages: DataFrame) -> DataFrame:
     """Integer-exact PageRank over the REAL extracted host graph — the
     end-to-end web pipeline composition (href regex -> host edges ->
     graph.pagerank_int). Parallel edges (repeated links between the same
@@ -355,7 +353,7 @@ def link_pagerank(pages: DataFrame, iters: int = 3) -> DataFrame:
     from .graph import pagerank_int
 
     nodes, edges = _host_graph(pages)
-    return pagerank_int(nodes, edges, iters=iters, key_col="host")
+    return pagerank_int(nodes, edges, iters=3, key_col="host")
 
 
 PAT_ANCHOR = '<a href="([^"]*)"[^>]*>([^<]*)</a>'
@@ -376,9 +374,9 @@ def extract_anchor_texts(pages: DataFrame, key_col: str = "doc_id") -> DataFrame
     )
 
 
-def boilerplate_scrub(pages: DataFrame, min_pages: int = 2) -> DataFrame:
+def boilerplate_scrub(pages: DataFrame) -> DataFrame:
     """RefinedWeb/CCNet-style boilerplate removal, end to end: paragraphs
-    appearing on >= min_pages DISTINCT pages (nav bars, footers, cookie
+    appearing on >= 2 DISTINCT pages (nav bars, footers, cookie
     banners) are scrubbed from every page and the page text is
     reconstructed from the survivors in document order. Output
     (key, clean_text, n_kept, n_removed).
@@ -403,7 +401,7 @@ def boilerplate_scrub(pages: DataFrame, min_pages: int = 2) -> DataFrame:
         .distinct()
         .groupBy("h")
         .agg(F.count(F.lit(1)).alias("np"))
-        .where(F.col("np") >= min_pages)
+        .where(F.col("np") >= 2)
         .select("h", F.lit(1).alias("is_hot"))
     )
     marked = paras.join(hot, "h", "left")
@@ -458,7 +456,7 @@ def co_citation(pages: DataFrame, max_hosts_per_page: int = 32) -> DataFrame:
     from pyspark.sql import Window
 
     hosts = (
-        extract_links(pages, html_col="html", key_col="url")
+        extract_links(pages, key_col="url")
         .select("key", url_host_col(F.col("link")).alias("host"))
         .where(F.col("host") != "")
         .distinct()
@@ -665,14 +663,14 @@ def domain_stats(pages: DataFrame) -> DataFrame:
     )
 
 
-def link_hits(pages: DataFrame, iters: int = 2) -> DataFrame:
+def link_hits(pages: DataFrame) -> DataFrame:
     """Integer-exact HITS over the REAL extracted host graph (href regex
     -> host edges -> graph.hits_int) — domain hub/authority scoring, the
     link_pagerank composition with the alternating recurrence."""
     from .graph import hits_int
 
     nodes, edges = _host_graph(pages)
-    return hits_int(nodes, edges, iters=iters, key_col="host")
+    return hits_int(nodes, edges)
 
 
 def link_internal_stats(pages: DataFrame) -> DataFrame:
@@ -681,7 +679,7 @@ def link_internal_stats(pages: DataFrame) -> DataFrame:
     link-farm / SEO-pattern signal crawl schedulers threshold on. Pure
     codegen link + domain extraction, one domain-keyed shuffle; the ratio
     is one double division of exact BIGINTs."""
-    links = extract_links(pages, html_col="html", key_col="url")
+    links = extract_links(pages, key_col="url")
     lab = links.select(
         registered_domain_col(url_host_col(F.col("key"))).alias("src_domain"),
         registered_domain_col(url_host_col(F.col("link"))).alias("dst_domain"),
@@ -734,7 +732,7 @@ def anchor_target_stats(pages: DataFrame) -> DataFrame:
     )
 
 
-def web_prefilter(pages: DataFrame, cap: int = 3) -> DataFrame:
+def web_prefilter(pages: DataFrame) -> DataFrame:
     """Composed crawl PRE-FILTER stage — the end-to-end URL hygiene pass a
     web pipeline runs before any content work, gated as ONE query so the
     operator interfaces are exercised together (the corpus-pipeline
@@ -747,11 +745,11 @@ def web_prefilter(pages: DataFrame, cap: int = 3) -> DataFrame:
     WindowGroupLimit host cap); the representative frame feeds the robots
     join AND the keep join -> localCheckpoint."""
     rep = (
-        url_canonicalize(pages, "url")
+        url_canonicalize(pages)
         .groupBy("canonical_url")
         .agg(F.min("url").alias("url"))
         .localCheckpoint()
     )
     verdict = robots_filter(rep)
     keep = rep.join(verdict.where(F.col("allowed")).select("url"), "url")
-    return host_cap(keep, cap=cap)
+    return host_cap(keep, cap=3)

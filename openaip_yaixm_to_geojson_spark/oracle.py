@@ -26,6 +26,7 @@ import numpy as np
 from .functions.cellgrid import cell_id_sql
 from .functions.classmap import COMBO_TABLE, RULE_TYPES, TYPE_ONLY, TYPE_RENAME
 from .functions.convert_local import fixture_polygons
+from .operators.dedup import MINHASH_NUM_HASHES
 from .operators.spatial import DEFAULT_JOIN_RES
 from .operators.tiles import DEFAULT_TILE_RES
 from .sources.pages import lat_sql, lon_sql, pages_cte, warc_ts_seconds_sql
@@ -35,8 +36,8 @@ from .sources.pages import lat_sql, lon_sql, pages_cte, warc_ts_seconds_sql
 # ---------------------------------------------------------------------------
 
 
-def pages_with(dialect: str = "duckdb") -> str:
-    return f"pages AS ({pages_cte(dialect)})"
+def pages_with() -> str:
+    return f"pages AS ({pages_cte('duckdb')})"
 
 
 @lru_cache(maxsize=4)
@@ -99,10 +100,10 @@ def pip_hits_cte() -> str:
 # ---------------------------------------------------------------------------
 
 
-def sql_page_cells(res: int = DEFAULT_JOIN_RES) -> str:
+def sql_page_cells() -> str:
     return (
         f"WITH {pages_with()} "
-        f"SELECT url, lat, lon, {cell_id_sql('lon', 'lat', res)} AS cell FROM pages"
+        f"SELECT url, lat, lon, {cell_id_sql('lon', 'lat', DEFAULT_JOIN_RES)} AS cell FROM pages"
     )
 
 
@@ -303,11 +304,11 @@ def sql_polygon_area_orientation() -> str:
 SELECT poly_id, abs(s2) / 2.0 AS area_deg2, s2 > 0.0 AS is_ccw FROM s"""
 
 
-def sql_ring_decimate(tol_area_deg2: float = 1e-6) -> str:
+def sql_ring_decimate() -> str:
     """spatial.ring_decimate twin: identical neighbour-triangle area test
     (same sub/mul order, single abs, same strtod threshold literal) over
     the embedded exact rings; endpoints always kept."""
-    thr = repr(2.0 * tol_area_deg2)
+    thr = repr(2e-6)
     cross = (
         "abs((ring[i][1] - ring[i-1][1]) * (ring[i+1][2] - ring[i][2]) - "
         "(ring[i][2] - ring[i-1][2]) * (ring[i+1][1] - ring[i][1]))"
@@ -423,18 +424,16 @@ FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY url ORDER BY dist_sq, poly_id) A
 WHERE rn = 1"""
 
 
-def sql_tile_nearest_airspace(res: int | None = None) -> str:
+def sql_tile_nearest_airspace() -> str:
     """tiles.tile_nearest_airspace twin: occupied-tile counts, centers by
     the identical exact arithmetic (-180.0 + (x + 0.5) * size, size a
     power-of-two multiple), nearest segment via the shared sql_knn_edge
     clamped-projection formulation, ties to the smaller poly_id."""
     from .functions.cellgrid import _SHIFT, cell_size_deg
-    from .operators.tiles import DEFAULT_TILE_RES as _RES
 
-    res = _RES if res is None else res
-    size = cell_size_deg(res)
+    size = cell_size_deg(DEFAULT_TILE_RES)
     return f"""WITH {pages_with()},
-tl AS (SELECT {cell_id_sql('lon', 'lat', res)} AS tile_id, CAST(COUNT(*) AS BIGINT) AS n_docs
+tl AS (SELECT {cell_id_sql('lon', 'lat', DEFAULT_TILE_RES)} AS tile_id, CAST(COUNT(*) AS BIGINT) AS n_docs
        FROM pages GROUP BY 1),
 ct AS (SELECT tile_id, n_docs,
        CAST(-180.0 AS DOUBLE) + (CAST(tile_id % {_SHIFT} AS DOUBLE) + CAST(0.5 AS DOUBLE)) * CAST({size!r} AS DOUBLE) AS lon,
@@ -464,10 +463,10 @@ FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY tile_id ORDER BY dist_sq, poly_i
 WHERE rn = 1"""
 
 
-def sql_tile_doc_counts(res: int = DEFAULT_TILE_RES) -> str:
+def sql_tile_doc_counts() -> str:
     return (
         f"WITH {pages_with()} "
-        f"SELECT {cell_id_sql('lon', 'lat', res)} AS tile_id, "
+        f"SELECT {cell_id_sql('lon', 'lat', DEFAULT_TILE_RES)} AS tile_id, "
         "COUNT(*) AS doc_count, COUNT(DISTINCT lang) AS n_langs, "
         # DuckDB SUM(int) widens to HUGEINT (int128); Spark's is BIGINT. The
         # driver's hasher stringifies by type, so cast to match (r1 red cell).
@@ -476,19 +475,19 @@ def sql_tile_doc_counts(res: int = DEFAULT_TILE_RES) -> str:
     )
 
 
-def sql_tile_zoom_rollup(res: int = DEFAULT_TILE_RES, levels: int = 2) -> str:
+def sql_tile_zoom_rollup() -> str:
     """Child tiles re-aggregated to their parent via exact shift/mask
     arithmetic on the packed (res, y, x) id — same ops as
     operators/tiles.parent_tile_col."""
     S = 536870912  # 2^29
     parent = (
-        f"((((tile_id >> 58) - {levels}) * {S} + (((tile_id >> 29) & {S - 1}) >> {levels})) * {S}"
-        f" + ((tile_id & {S - 1}) >> {levels}))"
+        f"((((tile_id >> 58) - 2) * {S} + (((tile_id >> 29) & {S - 1}) >> 2)) * {S}"
+        f" + ((tile_id & {S - 1}) >> 2))"
     )
     return f"""
 WITH {pages_with()},
 t AS (
-  SELECT {cell_id_sql('lon', 'lat', res)} AS tile_id,
+  SELECT {cell_id_sql('lon', 'lat', DEFAULT_TILE_RES)} AS tile_id,
          COUNT(*) AS doc_count,
          CAST(SUM(LENGTH(text)) AS BIGINT) AS total_chars
   FROM pages GROUP BY 1
@@ -499,10 +498,10 @@ SELECT {parent} AS tile_id,
 FROM t GROUP BY 1"""
 
 
-def sql_tile_class_rollup(res: int = DEFAULT_TILE_RES) -> str:
+def sql_tile_class_rollup() -> str:
     return (
         f"WITH {pages_with()}, {pip_hits_cte()} "
-        f"SELECT {cell_id_sql('lon', 'lat', res)} AS tile_id, airspace_class, "
+        f"SELECT {cell_id_sql('lon', 'lat', DEFAULT_TILE_RES)} AS tile_id, airspace_class, "
         "COUNT(*) AS doc_count, COUNT(DISTINCT url) AS n_docs "
         "FROM hits GROUP BY ROLLUP(1, airspace_class)"
     )
@@ -516,14 +515,14 @@ def sql_text_passthrough() -> str:
     )
 
 
-def sql_sessionize(gap_seconds: int = 500_000) -> str:
+def sql_sessionize() -> str:
     """Gap-based sessionization of page fetches per language key: the same
     lag + running-counter formulation as operators/events.sessionize."""
     return f"""WITH {pages_with()},
 ev AS (SELECT lang AS key, {warc_ts_seconds_sql('md5(url)')} AS t FROM pages),
 m AS (
   SELECT key, t,
-         CASE WHEN t - lag(t) OVER (PARTITION BY key ORDER BY t) > {gap_seconds}
+         CASE WHEN t - lag(t) OVER (PARTITION BY key ORDER BY t) > 500000
               THEN 1 ELSE 0 END AS ns
   FROM ev
 ),
@@ -542,14 +541,10 @@ def sql_pricing_summary() -> str:
 FROM lineitem GROUP BY l_returnflag, l_linestatus"""
 
 
-def sql_local_supplier_revenue(
-    region_name: str = "ASIA",
-    year_start: str = "1996-01-01",
-    year_end: str = "1997-01-01",
-) -> str:
+def sql_local_supplier_revenue() -> str:
     """relational.local_supplier_revenue twin (TPC-H Q5 shape), same
     DECIMAL-exact revenue sum."""
-    return f"""SELECT n_name,
+    return """SELECT n_name,
        CAST(CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE) AS revenue
 FROM customer
 JOIN orders ON o_custkey = c_custkey
@@ -557,20 +552,20 @@ JOIN lineitem ON l_orderkey = o_orderkey
 JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
 JOIN nation ON s_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
-WHERE r_name = '{region_name}'
-  AND o_orderdate >= TIMESTAMP '{year_start}'
-  AND o_orderdate < TIMESTAMP '{year_end}'
+WHERE r_name = 'ASIA'
+  AND o_orderdate >= TIMESTAMP '1996-01-01'
+  AND o_orderdate < TIMESTAMP '1997-01-01'
 GROUP BY n_name"""
 
 
-def sql_big_orders(min_quantity: int = 300) -> str:
+def sql_big_orders() -> str:
     """relational.big_orders twin (TPC-H Q18 shape): same DECIMAL-exact
     quantity sum, threshold compare on the exact value."""
-    return f"""WITH q AS (
+    return """WITH q AS (
   SELECT l_orderkey,
          CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS qd
   FROM lineitem GROUP BY l_orderkey
-  HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(38,2)) > {min_quantity}
+  HAVING CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(38,2)) > 300
 )
 SELECT o_orderkey, o_custkey, o_totalprice, CAST(qd AS DOUBLE) AS total_qty
 FROM orders JOIN q ON o_orderkey = l_orderkey"""
@@ -594,29 +589,31 @@ c AS (SELECT key,
 SELECT key, change_type FROM c WHERE change_type IS NOT NULL"""
 
 
-def sql_segment_revenue_topk(segment: str = "BUILDING", k: int = 10) -> str:
-    return f"""WITH agg AS (
+def sql_segment_revenue_topk() -> str:
+    return """WITH agg AS (
   SELECT o_orderkey, o_orderpriority,
          CAST(SUM(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS revenue_dec
   FROM customer JOIN orders ON o_custkey = c_custkey
                 JOIN lineitem ON l_orderkey = o_orderkey
-  WHERE c_mktsegment = '{segment}'
+  WHERE c_mktsegment = 'BUILDING'
   GROUP BY o_orderkey, o_orderpriority
   ORDER BY revenue_dec DESC, o_orderkey ASC
-  LIMIT {k}
+  LIMIT 10
 )
 SELECT o_orderkey, o_orderpriority, CAST(revenue_dec AS DOUBLE) AS revenue FROM agg"""
 
 
-def sql_events_sessions(gap_seconds: int = 1800) -> str:
+def sql_events_sessions() -> str:
     """Per-user gap sessions over the events table (epoch seconds via
     floor(epoch(ts)) — Spark's unix_timestamp floors the same way)."""
+    from .operators.events import SESSION_GAP_SECONDS
+
     return f"""WITH ev AS (
   SELECT CAST(user_id AS VARCHAR) AS key, CAST(floor(epoch(ts)) AS BIGINT) AS t FROM events
 ),
 m AS (
   SELECT key, t,
-         CASE WHEN t - lag(t) OVER (PARTITION BY key ORDER BY t) > {gap_seconds}
+         CASE WHEN t - lag(t) OVER (PARTITION BY key ORDER BY t) > {SESSION_GAP_SECONDS}
               THEN 1 ELSE 0 END AS ns
   FROM ev
 ),
@@ -625,13 +622,15 @@ SELECT key, MIN(t) AS session_start, MAX(t) AS session_end, COUNT(*) AS n_events
 FROM s GROUP BY key, sid"""
 
 
-def sql_event_type_windows(window_seconds: int = 3600) -> str:
+def sql_event_type_windows() -> str:
+    from .operators.events import WINDOW_SECONDS
+
     return f"""WITH ev AS (
   SELECT CAST(floor(epoch(ts)) AS BIGINT) AS e, event_type,
          CAST(value AS DECIMAL(18,2)) AS v
   FROM events
 )
-SELECT e - e % {window_seconds} AS window_start, event_type,
+SELECT e - e % {WINDOW_SECONDS} AS window_start, event_type,
        COUNT(*) AS n_events,
        CAST(CAST(SUM(v) AS DECIMAL(38,2)) AS DOUBLE) AS total_value
 FROM ev GROUP BY 1, 2"""
@@ -902,7 +901,7 @@ def _minhash_hashes_expr() -> str:
     return f"list_transform(shingles, s -> {_hex8_sql('s')} % {MINHASH_P})"
 
 
-def _minhash_exprs(num_hashes: int = 16) -> list[str]:
+def _minhash_exprs() -> list[str]:
     from .operators.dedup import MINHASH_P, minhash_params
 
     return [
@@ -910,13 +909,13 @@ def _minhash_exprs(num_hashes: int = 16) -> list[str]:
             f"list_aggregate(list_transform(hs, x -> (CAST({a} AS BIGINT) * x "
             f"+ CAST({b} AS BIGINT)) % {MINHASH_P}), 'min')"
         )
-        for a, b in minhash_params(num_hashes)
+        for a, b in minhash_params()
     ]
 
 
-def sql_minhash_signatures(num_hashes: int = 16) -> str:
-    sig = ", ".join(f"{e} AS h{j}" for j, e in enumerate(_minhash_exprs(num_hashes)))
-    cols = ", ".join(f"h{j}" for j in range(num_hashes))
+def sql_minhash_signatures() -> str:
+    sig = ", ".join(f"{e} AS h{j}" for j, e in enumerate(_minhash_exprs()))
+    cols = ", ".join(f"h{j}" for j in range(MINHASH_NUM_HASHES))
     return f"""
 WITH sh AS (SELECT doc_id, {SHINGLES_EXPR} AS shingles FROM documents),
 hashed AS (SELECT doc_id, {_minhash_hashes_expr()} AS hs FROM sh WHERE len(shingles) > 0),
@@ -924,15 +923,10 @@ sig AS (SELECT doc_id, {sig} FROM hashed)
 SELECT doc_id, concat_ws('|', {cols}) AS signature FROM sig"""
 
 
-def sql_minhash_lsh_pairs(
-    num_hashes: int = 16,
-    bands: int = 8,
-    jaccard_threshold: float = 0.5,
-    source: str = "documents",
-) -> str:
-    rows_per_band = num_hashes // bands
-    sig_exprs = ", ".join(f"{e} AS h{j}" for j, e in enumerate(_minhash_exprs(num_hashes)))
-    sig_list = "[" + ", ".join(f"h{j}" for j in range(num_hashes)) + "]"
+def sql_minhash_lsh_pairs(source: str = "documents") -> str:
+    rows_per_band = MINHASH_NUM_HASHES // 8
+    sig_exprs = ", ".join(f"{e} AS h{j}" for j, e in enumerate(_minhash_exprs()))
+    sig_list = "[" + ", ".join(f"h{j}" for j in range(MINHASH_NUM_HASHES)) + "]"
     return f"""
 WITH sh AS (SELECT doc_id AS key, {SHINGLES_EXPR} AS shingles FROM {source}),
 hashed AS (SELECT key, shingles, {_minhash_hashes_expr()} AS hs FROM sh WHERE len(shingles) > 0),
@@ -940,7 +934,7 @@ sig AS (SELECT key, shingles, {sig_exprs} FROM hashed),
 banded AS (
   SELECT key, shingles, b.band_idx,
          array_to_string(({sig_list})[b.band_idx * {rows_per_band} + 1 : (b.band_idx + 1) * {rows_per_band}], '|') AS band_key
-  FROM sig, (SELECT UNNEST(generate_series(0, {bands - 1})) AS band_idx) b
+  FROM sig, (SELECT UNNEST(generate_series(0, 7)) AS band_idx) b
 ),
 cands AS (
   SELECT DISTINCT a.key AS key_a, b.key AS key_b, a.shingles AS sh_a, b.shingles AS sh_b
@@ -950,27 +944,22 @@ cands AS (
 SELECT key_a, key_b,
        CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE) / CAST(len(list_distinct(list_concat(sh_a, sh_b))) AS DOUBLE) AS jaccard
 FROM cands
-WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE) / CAST(len(list_distinct(list_concat(sh_a, sh_b))) AS DOUBLE) >= {jaccard_threshold!r}"""
+WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE) / CAST(len(list_distinct(list_concat(sh_a, sh_b))) AS DOUBLE) >= 0.5"""
 
 
-def sql_lsh_recall_monitor(
-    sample_mod: int = 4,
-    num_hashes: int = 16,
-    bands: int = 8,
-    jaccard_threshold: float = 0.5,
-) -> str:
+def sql_lsh_recall_monitor() -> str:
     """dedup.lsh_recall_monitor twin: deterministic md5 sample -> exact
     all-pairs Jaccard truth -> LSH pairs over the same sample (the shared
     minhash oracle parameterized on the sample CTE) -> one-row counts.
     n_missed is computed by an ANTI-join of truth against found here (the
     engine uses n_true - n_found; equal because verified LSH pairs are a
     subset of truth), keeping the oracle independent."""
-    sample = f"(SELECT * FROM documents WHERE {_hex8_sql('CAST(doc_id AS VARCHAR)')} % {sample_mod} = 0)"
+    sample = f"(SELECT * FROM documents WHERE {_hex8_sql('CAST(doc_id AS VARCHAR)')} % 4 = 0)"
     jac = (
         "CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)"
         " / CAST(len(list_distinct(list_concat(a.shingles, b.shingles))) AS DOUBLE)"
     )
-    lsh = sql_minhash_lsh_pairs(num_hashes, bands, jaccard_threshold, source="smp")
+    lsh = sql_minhash_lsh_pairs(source="smp")
     return f"""
 WITH smp AS (SELECT * FROM {sample} t),
 tsh0 AS (SELECT doc_id AS key, {SHINGLES_EXPR} AS shingles FROM smp),
@@ -978,7 +967,7 @@ tsh AS (SELECT key, shingles FROM tsh0 WHERE len(shingles) > 0),
 truth AS (
   SELECT a.key AS key_a, b.key AS key_b
   FROM tsh a JOIN tsh b ON a.key < b.key
-  WHERE {jac} >= {jaccard_threshold!r}
+  WHERE {jac} >= 0.5
 ),
 found AS ({lsh}),
 missed AS (
@@ -991,7 +980,7 @@ SELECT CAST((SELECT COUNT(*) FROM smp) AS BIGINT) AS n_sampled,
        CAST((SELECT COUNT(*) FROM missed) AS BIGINT) AS n_missed_pairs"""
 
 
-def sql_ngram_jaccard_pairs(threshold: float = 0.3) -> str:
+def sql_ngram_jaccard_pairs() -> str:
     """Blocked exact-Jaccard pairs (block key = shingle-count bucket of 8
     under DUAL offset keys floor(n/8) and floor((n+4)/8), pairs deduped),
     identical semantics to the gated ngram_jaccard_pairs call."""
@@ -1010,31 +999,29 @@ SELECT DISTINCT a.key AS key_a, b.key AS key_b,
          / CAST(len(list_distinct(list_concat(a.shingles, b.shingles))) AS DOUBLE) AS jaccard
 FROM d a JOIN d b ON a.block = b.block AND a.key < b.key
 WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        / CAST(len(list_distinct(list_concat(a.shingles, b.shingles))) AS DOUBLE) >= {threshold!r}
+        / CAST(len(list_distinct(list_concat(a.shingles, b.shingles))) AS DOUBLE) >= 0.3
 """
 
 
-def sql_simhash_pairs(max_hamming: int = 3) -> str:
+def sql_simhash_pairs() -> str:
     """Exhaustive SimHash near-dup pairs: bit_count over the XOR of the
     recomputed 16-bit simhashes (the engine's banded join must equal the
-    all-pairs scan — banding is pigeonhole-lossless for <= max_hamming)."""
+    all-pairs scan — banding is pigeonhole-lossless for hamming <= 3)."""
     sim = sql_simhash()
     return f"""
 WITH s AS ({sim})
 SELECT a.doc_id AS key_a, b.doc_id AS key_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
 FROM s a JOIN s b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}"""
+WHERE bit_count(xor(a.simhash, b.simhash)) <= 3"""
 
 
-def sql_dedup_clusters(
-    num_hashes: int = 16, bands: int = 8, jaccard_threshold: float = 0.5
-) -> str:
+def sql_dedup_clusters() -> str:
     """Connected components over the MinHash near-dup pairs (plus all docs
     as singletons): cluster_id = MIN reachable doc_id, computed with a
     recursive transitive-closure CTE — independent of the engine's
     iterative label propagation."""
-    pairs = sql_minhash_lsh_pairs(num_hashes, bands, jaccard_threshold)
+    pairs = sql_minhash_lsh_pairs()
     return f"""
 WITH RECURSIVE p AS ({pairs}),
 e AS (SELECT key_a AS src, key_b AS dst FROM p UNION ALL SELECT key_b, key_a FROM p),
@@ -1097,38 +1084,39 @@ def sql_simhash64() -> str:
     return f"SELECT doc_id, CAST({total} AS BIGINT) AS simhash64 FROM documents"
 
 
-def sql_simhash64_pairs(max_hamming: int = 3) -> str:
+def sql_simhash64_pairs() -> str:
     """Exhaustive 64-bit SimHash near-dup pairs: bit_count over the XOR of
     the recomputed sketches (the engine's banded join must equal the
-    all-pairs scan — banding is pigeonhole-lossless for <= max_hamming)."""
+    all-pairs scan — banding is pigeonhole-lossless for hamming <= 3)."""
     sim = sql_simhash64()
     return f"""
 WITH s AS ({sim})
 SELECT a.doc_id AS key_a, b.doc_id AS key_b,
        CAST(bit_count(xor(a.simhash64, b.simhash64)) AS INTEGER) AS hamming
 FROM s a JOIN s b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash64, b.simhash64)) <= {max_hamming}"""
+WHERE bit_count(xor(a.simhash64, b.simhash64)) <= 3"""
 
 
-def _dot_expr(a: str, b: str, dim: int) -> str:
-    """Dot product as a strict left-fold double sum — bit-identical to
-    Spark's aggregate fold (operators/similarity.dot_double)."""
+def _dot_expr(a: str, b: str) -> str:
+    """Dot product of two 64-dim embeddings as a strict left-fold double
+    sum — bit-identical to Spark's aggregate fold
+    (operators/similarity.dot_double)."""
     return (
-        f"list_reduce(list_transform(generate_series(1, {dim}), "
+        f"list_reduce(list_transform(generate_series(1, 64), "
         f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
     )
 
 
-def sql_ann_topk(n_queries: int = 5, k: int = 3, dim: int = 64) -> str:
-    dot = _dot_expr("e.embedding", "q.embedding", dim)
+def sql_ann_topk() -> str:
+    dot = _dot_expr("e.embedding", "q.embedding")
     return f"""
 WITH s AS (
   SELECT q.vec_id AS query_id, e.vec_id, {dot} AS dsum
-  FROM embeddings e JOIN embeddings q ON q.vec_id < {n_queries} AND e.vec_id <> q.vec_id
+  FROM embeddings e JOIN embeddings q ON q.vec_id < 5 AND e.vec_id <> q.vec_id
 )
 SELECT query_id, vec_id, CAST(dsum AS DOUBLE) AS dot, rank
 FROM (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dsum DESC, vec_id) AS INTEGER) AS rank FROM s)
-WHERE rank <= {k}"""
+WHERE rank <= 3"""
 
 
 def _plane_list(plane) -> str:
@@ -1137,79 +1125,74 @@ def _plane_list(plane) -> str:
     return "[" + ",".join(_dbl(w) for w in plane) + "]"
 
 
-def _bucket_expr(vec: str, n_planes: int, dim: int) -> str:
+def _bucket_expr(vec: str, n_planes: int) -> str:
     """LSH bucket id from hyperplane sign bits — identical fold to
     operators/similarity.lsh_bucket_col (left-fold double sum per plane,
     bit i set when projection onto plane i is >= 0)."""
     from .operators.similarity import hyperplanes
 
-    planes = hyperplanes(dim, n_planes)
+    planes = hyperplanes(64, n_planes)
     terms = []
     for i, plane in enumerate(planes):
         proj = (
-            f"list_reduce(list_transform(generate_series(1, {dim}), "
+            f"list_reduce(list_transform(generate_series(1, 64), "
             f"j -> CAST({vec}[j] AS DOUBLE) * ({_plane_list(plane)})[j]), (x, y) -> x + y)"
         )
         terms.append(f"(CASE WHEN {proj} >= 0 THEN {1 << i} ELSE 0 END)")
     return "(" + " + ".join(terms) + ")"
 
 
-def sql_ann_lsh(
-    n_queries: int = 5, k: int = 3, dim: int = 64, n_planes: int = 2, multiprobe: bool = True
-) -> str:
+def sql_ann_lsh(n_planes: int = 2) -> str:
     """Deterministic self-oracle for the LSH ANN path: hyperplanes are
     md5-derived (operators/similarity.hyperplanes), so bucket assignment,
     multiprobe neighbours, and in-bucket re-rank are all recomputable in
     SQL. This compares the approximate operator against ITSELF re-derived
     independently — the recall-vs-exact check lives in pytest."""
-    dot = _dot_expr("e.embedding", "p.qvec", dim)
+    dot = _dot_expr("e.embedding", "p.qvec")
     probe_list = "[bucket" + "".join(f", xor(bucket, {1 << i})" for i in range(n_planes)) + "]"
-    probes = f"UNNEST({probe_list})" if multiprobe else "bucket"
     return f"""
 WITH corpus AS (
-  SELECT vec_id, embedding, {_bucket_expr('embedding', n_planes, dim)} AS bucket FROM embeddings
+  SELECT vec_id, embedding, {_bucket_expr('embedding', n_planes)} AS bucket FROM embeddings
 ),
 q AS (
   SELECT vec_id AS query_id, embedding AS qvec,
-         {_bucket_expr('embedding', n_planes, dim)} AS bucket
-  FROM embeddings WHERE vec_id < {n_queries}
+         {_bucket_expr('embedding', n_planes)} AS bucket
+  FROM embeddings WHERE vec_id < 5
 ),
-probes AS (SELECT query_id, qvec, {probes} AS bucket FROM q),
+probes AS (SELECT query_id, qvec, UNNEST({probe_list}) AS bucket FROM q),
 scored AS (
   SELECT p.query_id, e.vec_id, {dot} AS dsum
   FROM corpus e JOIN probes p ON e.bucket = p.bucket AND e.vec_id <> p.query_id
 )
 SELECT query_id, vec_id, CAST(dsum AS DOUBLE) AS dot, rank
 FROM (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dsum DESC, vec_id) AS INTEGER) AS rank FROM scored)
-WHERE rank <= {k}"""
+WHERE rank <= 3"""
 
 
-def sql_ann_ivf(
-    n_queries: int = 5, k: int = 3, dim: int = 64, n_centroids: int = 16, n_probes: int = 4
-) -> str:
+def sql_ann_ivf() -> str:
     """IVF ANN self-oracle: centroids are md5-derived
     (operators/similarity.ivf_centroids), so corpus list assignment
-    (argmax dot, lowest-id tie-break), query probe lists (top n_probes by
+    (argmax dot, lowest-id tie-break), query probe lists (top 4 by
     dot desc, id asc) and the in-list re-rank are all mechanical SQL."""
     from .operators.similarity import ivf_centroids
 
-    cents = ivf_centroids(dim, n_centroids)
+    cents = ivf_centroids(64, 16)
 
     def dot_lit(vec: str, c) -> str:
         return (
-            f"list_reduce(list_transform(generate_series(1, {dim}), "
+            f"list_reduce(list_transform(generate_series(1, 64), "
             f"j -> CAST({vec}[j] AS DOUBLE) * ({_plane_list(c)})[j]), (x, y) -> x + y)"
         )
 
     d_cols = ", ".join(f"{dot_lit('embedding', c)} AS d{i}" for i, c in enumerate(cents))
-    g = "GREATEST(" + ", ".join(f"d{i}" for i in range(n_centroids)) + ")"
-    argmax = "CASE " + " ".join(f"WHEN d{i} = g THEN {i}" for i in range(n_centroids)) + " END"
+    g = "GREATEST(" + ", ".join(f"d{i}" for i in range(16)) + ")"
+    argmax = "CASE " + " ".join(f"WHEN d{i} = g THEN {i}" for i in range(16)) + " END"
     cent_values = ",".join(f"({i}, {_plane_list(c)})" for i, c in enumerate(cents))
     qdot = (
-        f"list_reduce(list_transform(generate_series(1, {dim}), "
-        f"j -> CAST(a.embedding[j] AS DOUBLE) * c.w[j]), (x, y) -> x + y)"
+        "list_reduce(list_transform(generate_series(1, 64), "
+        "j -> CAST(a.embedding[j] AS DOUBLE) * c.w[j]), (x, y) -> x + y)"
     )
-    rdot = _dot_expr("e.embedding", "p.qvec", dim)
+    rdot = _dot_expr("e.embedding", "p.qvec")
     return f"""
 WITH d AS (SELECT vec_id, embedding, {d_cols} FROM embeddings),
 assigned AS (
@@ -1221,8 +1204,8 @@ probes AS (
     SELECT a.vec_id AS query_id, a.embedding AS qvec, c.cid,
            ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY {qdot} DESC, c.cid) AS rn
     FROM embeddings a, (VALUES {cent_values}) AS c(cid, w)
-    WHERE a.vec_id < {n_queries}
-  ) WHERE rn <= {n_probes}
+    WHERE a.vec_id < 5
+  ) WHERE rn <= 4
 ),
 scored AS (
   SELECT p.query_id, e.vec_id, {rdot} AS dsum
@@ -1230,19 +1213,19 @@ scored AS (
 )
 SELECT query_id, vec_id, CAST(dsum AS DOUBLE) AS dot, rank
 FROM (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dsum DESC, vec_id) AS INTEGER) AS rank FROM scored)
-WHERE rank <= {k}"""
+WHERE rank <= 3"""
 
 
-def sql_embedding_neardup_lsh(threshold: float = 0.6, dim: int = 64, n_planes: int = 8) -> str:
+def sql_embedding_neardup_lsh(threshold: float = 0.6, n_planes: int = 8) -> str:
     """Scale-path (bucketed) near-dup oracle: candidates limited to pairs
     sharing an LSH bucket, cosine recomputed with the same left-fold dots as
     the exact oracle."""
-    dot = _dot_expr("a.embedding", "b.embedding", dim)
-    nsq = _dot_expr("embedding", "embedding", dim)
+    dot = _dot_expr("a.embedding", "b.embedding")
+    nsq = _dot_expr("embedding", "embedding")
     return f"""
 WITH v AS (
   SELECT vec_id, embedding, {nsq} AS norm_sq,
-         {_bucket_expr('embedding', n_planes, dim)} AS bucket
+         {_bucket_expr('embedding', n_planes)} AS bucket
   FROM embeddings
 ),
 pairs AS (
@@ -1253,10 +1236,10 @@ pairs AS (
 SELECT key_a, key_b, cosine FROM pairs WHERE cosine >= {threshold!r}"""
 
 
-def sql_embedding_neardup(threshold: float = 0.6, dim: int = 64) -> str:
-    dot = _dot_expr("a.embedding", "b.embedding", dim)
-    nsq_a = _dot_expr("a.embedding", "a.embedding", dim)
-    nsq_b = _dot_expr("b.embedding", "b.embedding", dim)
+def sql_embedding_neardup(threshold: float = 0.6) -> str:
+    dot = _dot_expr("a.embedding", "b.embedding")
+    nsq_a = _dot_expr("a.embedding", "a.embedding")
+    nsq_b = _dot_expr("b.embedding", "b.embedding")
     return f"""
 WITH pairs AS (
   SELECT a.vec_id AS key_a, b.vec_id AS key_b,
@@ -1323,27 +1306,28 @@ def sql_quality() -> str:
     )
 
 
-def sql_sample(fraction: float = 0.25) -> str:
+def sql_sample() -> str:
     """Deterministic md5-bucket Bernoulli sample (operators/text.
     deterministic_sample): identical keep-set in both engines."""
     from .operators.text import SAMPLE_BUCKETS
 
-    threshold = int(round(fraction * SAMPLE_BUCKETS))
+    threshold = int(round(0.25 * SAMPLE_BUCKETS))
     bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {SAMPLE_BUCKETS}"
     return f"SELECT doc_id, lang FROM documents WHERE {bucket} < {threshold}"
 
 
-def sql_corpus_clean(quality_min: float = 0.7, sample_fraction: float = 0.5) -> str:
+def sql_corpus_clean() -> str:
     """End-to-end corpus construction: quality filter -> exact-dup
     representative -> deterministic sample -> fingerprint + token count.
     One composed SQL recomputing the whole pipeline."""
     from .operators.text import SAMPLE_BUCKETS
+    from .plans.pipeline import QUALITY_MIN, SAMPLE_FRACTION
 
     score = _quality_parts()["score"]
-    threshold = int(round(sample_fraction * SAMPLE_BUCKETS))
+    threshold = int(round(SAMPLE_FRACTION * SAMPLE_BUCKETS))
     bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {SAMPLE_BUCKETS}"
     return f"""
-WITH f AS (SELECT doc_id, text FROM documents WHERE {score} >= {quality_min!r}),
+WITH f AS (SELECT doc_id, text FROM documents WHERE {score} >= {QUALITY_MIN!r}),
 reps AS (SELECT MIN(doc_id) AS doc_id FROM f GROUP BY md5(text)),
 s AS (SELECT f.doc_id, f.text FROM f JOIN reps USING (doc_id))
 SELECT doc_id,
@@ -1383,7 +1367,7 @@ SELECT doc_id,
 FROM vals"""
 
 
-def sql_multimodal_features(n: int = 500) -> str:
+def sql_multimodal_features() -> str:
     """Oracle for the multimodal PLUMBING: the synthetic media table and
     the deterministic fake decode (operators/multimodal) are both pure
     md5/ascii arithmetic, so the whole mapInPandas path is recomputable —
@@ -1399,7 +1383,7 @@ def sql_multimodal_features(n: int = 500) -> str:
     features = ",\n       ".join(feature_terms)
     return f"""
 WITH m AS (
-  SELECT UNNEST(generate_series(0, {n - 1})) AS media_id
+  SELECT UNNEST(generate_series(0, 499)) AS media_id
 ),
 p AS (
   SELECT media_id,
@@ -1616,7 +1600,7 @@ SELECT media_id,
 FROM chanw"""
 
 
-def sql_multimodal_real_features(n: int = 500) -> str:
+def sql_multimodal_real_features() -> str:
     """Oracle for the REAL multimodal decode path: synth_media_real's
     payloads are genuine P6 PPM / PCM WAV files whose pixel/sample bytes
     come from chained md5 digests (seed '{id}-px-{k}' / '{id}-au-{k}'),
@@ -1644,7 +1628,7 @@ def sql_multimodal_real_features(n: int = 500) -> str:
     img_mean = lambda c: f"(s{c} / CAST(64.0 AS DOUBLE))"  # noqa: E731
     img_var = lambda c: f"((ss{c} / CAST(64.0 AS DOUBLE)) - {img_mean(c)} * {img_mean(c)})"  # noqa: E731
     return f"""
-WITH m AS (SELECT UNNEST(generate_series(0, {n - 1})) AS media_id),
+WITH m AS (SELECT UNNEST(generate_series(0, 499)) AS media_id),
 px AS (
   SELECT media_id, t.j, CAST({px_byte} AS BIGINT) AS v
   FROM (SELECT media_id FROM m WHERE media_id % 3 = 0) i,
@@ -1758,10 +1742,10 @@ def sql_html_paragraphs() -> str:
     return f"WITH {_paragraphs_with()} SELECT key, para_idx, paragraph FROM paras"
 
 
-def sql_paragraph_dedup(min_len: int = 1) -> str:
+def sql_paragraph_dedup() -> str:
     return f"""WITH {_paragraphs_with()}
 SELECT md5(paragraph) AS para_hash, MIN(key) AS owner, COUNT(*) AS n_copies
-FROM paras WHERE length(paragraph) >= {min_len} GROUP BY 1"""
+FROM paras WHERE length(paragraph) >= 1 GROUP BY 1"""
 
 
 def sql_host_stats() -> str:
@@ -1813,17 +1797,17 @@ def _mercator_y_intervals(z: int) -> str:
     return "(VALUES " + ",".join(rows) + ") AS yb(ytile, lat_lo, lat_hi)"
 
 
-def sql_tile_xyz_export(z: int = 11) -> str:
+def sql_tile_xyz_export() -> str:
     from .operators.tiles import quadkey_sql, xtile_sql
 
     return f"""WITH {pages_with()},
 xy AS (
-  SELECT p.lang, LENGTH(p.text) AS nb, {xtile_sql('p.lon', z)} AS xtile, yb.ytile
-  FROM pages p JOIN {_mercator_y_intervals(z)}
+  SELECT p.lang, LENGTH(p.text) AS nb, {xtile_sql('p.lon', 11)} AS xtile, yb.ytile
+  FROM pages p JOIN {_mercator_y_intervals(11)}
     ON p.lat > yb.lat_lo AND p.lat <= yb.lat_hi
 )
-SELECT {z} AS zoom, xtile, ytile,
-       {quadkey_sql('xtile', 'ytile', z, 'duckdb')} AS quadkey,
+SELECT 11 AS zoom, xtile, ytile,
+       {quadkey_sql('xtile', 'ytile', 11, 'duckdb')} AS quadkey,
        COUNT(*) AS doc_count,
        COUNT(DISTINCT lang) AS n_langs,
        CAST(SUM(nb) AS BIGINT) AS total_chars
@@ -1890,7 +1874,7 @@ def sql_url_canonical_dedup() -> str:
     )
 
 
-def sql_host_cap(cap: int = 3) -> str:
+def sql_host_cap() -> str:
     from .operators.web import PAT_HOST
 
     return f"""WITH {pages_with()},
@@ -1901,7 +1885,7 @@ r AS (
          ) AS INTEGER) AS host_rank
   FROM pages
 )
-SELECT host, url, host_rank FROM r WHERE host_rank <= {cap}"""
+SELECT host, url, host_rank FROM r WHERE host_rank <= 3"""
 
 
 # ---------------------------------------------------------------------------
@@ -1916,9 +1900,9 @@ def _ngrams_list_sql(n: int) -> str:
     return f"list_transform(range(1, greatest(len(words) - {n - 1}, 0) + 1), i -> {gram})"
 
 
-def sql_ngram_repetition(n: int = 2) -> str:
+def sql_ngram_repetition() -> str:
     return f"""WITH w AS (SELECT doc_id AS key, {_WORDS} AS words FROM documents),
-g AS (SELECT key, unnest({_ngrams_list_sql(n)}) AS gram FROM w),
+g AS (SELECT key, unnest({_ngrams_list_sql(2)}) AS gram FROM w),
 pg AS (SELECT key, gram, COUNT(*) AS c FROM g GROUP BY key, gram),
 a AS (
   SELECT key, CAST(SUM(c) AS BIGINT) AS n_grams, COUNT(*) AS n_distinct,
@@ -1931,11 +1915,11 @@ SELECT key, n_grams, n_distinct, top_count,
 FROM a"""
 
 
-def sql_contamination(n: int = 8, bench_mod: int = 101) -> str:
-    grams = _ngrams_list_sql(n)
+def sql_contamination() -> str:
+    grams = _ngrams_list_sql(8)
     return f"""WITH w AS (SELECT doc_id AS key, {_WORDS} AS words FROM documents),
 cg AS (SELECT key, md5(unnest(list_distinct({grams}))) AS gram_hash FROM w),
-gset AS (SELECT DISTINCT gram_hash FROM cg WHERE key % {bench_mod} = 0)
+gset AS (SELECT DISTINCT gram_hash FROM cg WHERE key % 101 = 0)
 SELECT key, COUNT(*) AS n_shared_grams
 FROM cg JOIN gset USING (gram_hash) GROUP BY key"""
 
@@ -1950,32 +1934,35 @@ def _linked_docs_with() -> str:
     )
 
 
-def sql_geohash_counts(precision: int = 5) -> str:
+def sql_geohash_counts() -> str:
     """tiles.geohash_counts twin: identical floor-scaling quantization,
     bit interleave and base32 lookup (functions/geohash.py emits both
     dialects from one generator — only the shift syntax differs)."""
     from .functions import geohash as gh
 
-    lon_idx, lat_idx = gh.geohash_idx_sql("lat", "lon", precision)
+    lon_idx, lat_idx = gh.geohash_idx_sql("lat", "lon", 5)
     return f"""WITH {pages_with()},
 gi AS (SELECT {lon_idx} AS gh_lon_idx, {lat_idx} AS gh_lat_idx FROM pages),
-ii AS (SELECT {gh.geohash_interleave_sql(precision, 'duckdb')} AS gh_i FROM gi)
-SELECT {gh.geohash_chars_sql(precision, 'duckdb')} AS geohash,
+ii AS (SELECT {gh.geohash_interleave_sql(5, 'duckdb')} AS gh_i FROM gi)
+SELECT {gh.geohash_chars_sql(5, 'duckdb')} AS geohash,
        CAST(COUNT(*) AS BIGINT) AS n_pages
 FROM ii GROUP BY 1"""
 
 
-def sql_geohash_pyramid(precision: int = 5, min_precision: int = 3) -> str:
+def sql_geohash_pyramid() -> str:
     """tiles.geohash_pyramid twin: same finest-level hash, prefixes
     unnested from a literal precision list."""
     from .functions import geohash as gh
 
-    lon_idx, lat_idx = gh.geohash_idx_sql("lat", "lon", precision)
-    levels = ", ".join(str(p) for p in range(min_precision, precision + 1))
+    from .operators.tiles import PYRAMID_PRECISIONS
+
+    finest = PYRAMID_PRECISIONS[-1]
+    lon_idx, lat_idx = gh.geohash_idx_sql("lat", "lon", finest)
+    levels = ", ".join(map(str, PYRAMID_PRECISIONS))
     return f"""WITH {pages_with()},
 gi AS (SELECT {lon_idx} AS gh_lon_idx, {lat_idx} AS gh_lat_idx FROM pages),
-ii AS (SELECT {gh.geohash_interleave_sql(precision, 'duckdb')} AS gh_i FROM gi),
-g5 AS (SELECT {gh.geohash_chars_sql(precision, 'duckdb')} AS gh5 FROM ii),
+ii AS (SELECT {gh.geohash_interleave_sql(finest, 'duckdb')} AS gh_i FROM gi),
+g5 AS (SELECT {gh.geohash_chars_sql(finest, 'duckdb')} AS gh5 FROM ii),
 px AS (SELECT unnest([{levels}]) AS precision, gh5 FROM g5)
 SELECT CAST(precision AS INT) AS precision, substring(gh5, 1, precision) AS geohash,
        CAST(COUNT(*) AS BIGINT) AS n_pages
@@ -2017,7 +2004,7 @@ SELECT regexp_extract(url, '{PAT_HOST}', 1) AS src_host,
 FROM l GROUP BY 1, 2"""
 
 
-def sql_link_pagerank(iters: int = 3) -> str:
+def sql_link_pagerank() -> str:
     """web.link_pagerank twin: same href/host extraction, same integer
     PageRank recurrence unrolled as CTEs (sql_pagerank_int pattern) with
     STRING host ids and parallel edges kept."""
@@ -2035,7 +2022,7 @@ nodes AS (SELECT DISTINCT host AS id
 ed AS (SELECT src, dst, COUNT(*) OVER (PARTITION BY src) AS out_deg FROM e),
 r0 AS (SELECT id, CAST({RANK_SCALE} AS BIGINT) AS rank FROM nodes)"""
     ]
-    for i in range(iters):
+    for i in range(3):
         parts.append(
             f"""c{i} AS (
   SELECT ed.dst, SUM(r{i}.rank // ed.out_deg) AS incoming
@@ -2050,7 +2037,7 @@ r{i + 1} AS (
     return (
         "WITH "
         + ",\n".join(parts)
-        + f"\nSELECT id AS host, rank AS rank_int FROM r{iters}"
+        + "\nSELECT id AS host, rank AS rank_int FROM r3"
     )
 
 
@@ -2068,14 +2055,14 @@ def _hexcol_sql(col: str, start: int) -> str:
     ) + ")"
 
 
-def sql_bloom_contamination(n: int = 8, bench_mod: int = 101) -> str:
+def sql_bloom_contamination() -> str:
     """text.bloom_contamination twin: identical Kirsch-Mitzenmacher probe
     arithmetic ((g1 + i*g2) mod m over the two 32-bit md5 halves), 32-bit
     masks in BIGINT words, bit_or-built filter — false positives are pure
     integer arithmetic so both engines flag the same gram set."""
     from .operators.text import BLOOM_BITS, BLOOM_K, BLOOM_WORD_BITS
 
-    grams = _ngrams_list_sql(n)
+    grams = _ngrams_list_sql(8)
     g1, g2 = _hexcol_sql("gh", 1), _hexcol_sql("gh", 9)
     m, w, k = BLOOM_BITS, BLOOM_WORD_BITS, BLOOM_K
     return f"""WITH w AS (SELECT doc_id AS key, {_WORDS} AS words FROM documents),
@@ -2083,7 +2070,7 @@ cg AS (SELECT key, md5(unnest(list_distinct({grams}))) AS gh FROM w),
 gv AS (SELECT key, gh, {g1} AS g1, {g2} AS g2 FROM cg),
 probes AS (SELECT unnest(generate_series(0, {k - 1})) AS i),
 bp AS (SELECT ((g1 + i * g2) % {m}) AS p
-       FROM (SELECT DISTINCT gh, g1, g2 FROM gv WHERE key % {bench_mod} = 0) b
+       FROM (SELECT DISTINCT gh, g1, g2 FROM gv WHERE key % 101 = 0) b
        CROSS JOIN probes),
 bw AS (SELECT p // {w} AS word_idx,
               bit_or(CAST(1 AS BIGINT) << CAST(p % {w} AS INT)) AS word
@@ -2101,15 +2088,15 @@ FROM hg GROUP BY key
 HAVING SUM(CASE WHEN nh = {k} THEN 1 ELSE 0 END) > 0"""
 
 
-def sql_tile_vector_export(res: int = DEFAULT_TILE_RES) -> str:
+def sql_tile_vector_export() -> str:
     """tiles.tile_vector_export twin: identical dyadic bounds arithmetic
     (integer decode via % and //, CAST-to-DOUBLE multiply by the exact
     size literal)."""
     S = 536870912  # 2^29
-    size = _dbl(360.0 / float(1 << res))
+    size = _dbl(360.0 / float(1 << DEFAULT_TILE_RES))
     return f"""WITH {pages_with()},
 t AS (
-  SELECT {cell_id_sql('lon', 'lat', res)} AS tile_id,
+  SELECT {cell_id_sql('lon', 'lat', DEFAULT_TILE_RES)} AS tile_id,
          COUNT(*) AS doc_count, COUNT(DISTINCT lang) AS n_langs,
          CAST(SUM(LENGTH(text)) AS BIGINT) AS total_chars
   FROM pages GROUP BY 1
@@ -2123,36 +2110,38 @@ SELECT tile_id,
 FROM t"""
 
 
-def sql_events_asof(left_type: str = "click", right_type: str = "view") -> str:
+def sql_events_asof() -> str:
     """events.asof_join twin via DuckDB's NATIVE ASOF JOIN — a genuinely
     independent execution strategy (DuckDB plans a specialized asof
     operator; the engine uses union + carry-forward windows). Right rows
     tying on (user_id, ts) are pre-deduped to the greatest event_id, the
     operator's documented tie rule (native ASOF leaves duplicate picks
     undefined)."""
-    return f"""WITH r0 AS (
+    return """WITH r0 AS (
   SELECT user_id, ts, event_id, value,
          ROW_NUMBER() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn
-  FROM events WHERE event_type = '{right_type}'
+  FROM events WHERE event_type = 'view'
 ),
 rd AS (SELECT user_id, ts, event_id, value FROM r0 WHERE rn = 1),
-l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = '{left_type}')
+l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click')
 SELECT l.event_id, l.user_id, epoch_us(l.ts) AS ts_us,
        rd.event_id AS matched_event_id, rd.value AS matched_value
 FROM l ASOF LEFT JOIN rd ON l.user_id = rd.user_id AND l.ts >= rd.ts"""
 
 
-def sql_events_interval_join(gap_seconds: int = 1800) -> str:
+def sql_events_interval_join() -> str:
     """events.interval_join twin: sessions rebuilt with the lag+counter
     formulation, then a native BETWEEN containment join (DuckDB plans an
     IEJoin — independently verifying the engine's bucket-binned
     equi-join)."""
+    from .operators.events import SESSION_GAP_SECONDS
+
     return f"""WITH ev AS (
   SELECT event_id, CAST(user_id AS VARCHAR) AS key, CAST(floor(epoch(ts)) AS BIGINT) AS t FROM events
 ),
 m AS (
   SELECT key, t,
-         CASE WHEN t - lag(t) OVER (PARTITION BY key ORDER BY t) > {gap_seconds}
+         CASE WHEN t - lag(t) OVER (PARTITION BY key ORDER BY t) > {SESSION_GAP_SECONDS}
               THEN 1 ELSE 0 END AS ns
   FROM ev
 ),
@@ -2163,18 +2152,18 @@ FROM ev p JOIN sess se
   ON p.key = se.key AND p.t BETWEEN se.session_start AND se.session_end"""
 
 
-def sql_multimodal_frames(n: int = 500, every_k: int = 4, n_frames: int = 16) -> str:
+def sql_multimodal_frames() -> str:
     """multimodal.sample_frames twin in pure SQL: rebuild the synthetic
     payload STRING ('payload-' || md5(id)), video rows are id % 3 == 2
     (element_at over [image, audio, video] at id % 3 + 1), frame slice =
     8 chars at offset (idx * 7) % (len - 8). The Spark side runs the real
     mapInPandas plumbing; this verifies its values byte-for-byte."""
-    return f"""WITH m AS (
+    return """WITH m AS (
   SELECT range AS media_id,
          concat('payload-', md5(CAST(range AS VARCHAR))) AS p
-  FROM range({n}) WHERE range % 3 = 2
+  FROM range(500) WHERE range % 3 = 2
 ),
-f AS (SELECT media_id, unnest(range(0, {n_frames}, {every_k})) AS frame_idx, p FROM m)
+f AS (SELECT media_id, unnest(range(0, 16, 4)) AS frame_idx, p FROM m)
 SELECT media_id, CAST(frame_idx AS INTEGER) AS frame_idx,
        substring(p, CAST((frame_idx * 7) % (length(p) - 8) AS INTEGER) + 1, 8) AS frame
 FROM f"""
@@ -2236,7 +2225,7 @@ def sql_events_pivot() -> str:
 FROM events GROUP BY user_id"""
 
 
-def sql_pagerank_int(iters: int = 3) -> str:
+def sql_pagerank_int() -> str:
     """graph.pagerank_int twin: the same integer-exact recurrence with the
     iterations UNROLLED as CTEs (r0 -> r1 -> ... -> rN). Edge derivation
     mirrors graph.synth_link_graph's formula; all arithmetic is BIGINT
@@ -2256,7 +2245,7 @@ ed AS (
 ),
 r0 AS (SELECT doc_id AS id, CAST({RANK_SCALE} AS BIGINT) AS rank FROM documents)"""
     ]
-    for i in range(iters):
+    for i in range(3):
         parts.append(
             f"""c{i} AS (
   SELECT ed.dst, SUM(r{i}.rank // ed.out_deg) AS incoming
@@ -2271,7 +2260,7 @@ r{i + 1} AS (
     return (
         "WITH "
         + ",\n".join(parts)
-        + f"\nSELECT id AS doc_id, rank AS rank_int FROM r{iters}"
+        + "\nSELECT id AS doc_id, rank AS rank_int FROM r3"
     )
 
 
@@ -2288,13 +2277,13 @@ SELECT lang, n_chars AS median_chars, cnt AS n_docs
 FROM r WHERE rn = (cnt + 1) // 2"""
 
 
-def sql_sample_complement(fraction: float = 0.25) -> str:
+def sql_sample_complement() -> str:
     """Set-op twin: documents EXCEPT the deterministic sample = rows whose
     md5 bucket fails the threshold (recomputed as the direct predicate,
     not subtracted — the Spark side's exceptAll must reproduce it)."""
     from .operators.text import SAMPLE_BUCKETS
 
-    threshold = int(round(fraction * SAMPLE_BUCKETS))
+    threshold = int(round(0.25 * SAMPLE_BUCKETS))
     bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {SAMPLE_BUCKETS}"
     return f"SELECT doc_id FROM documents WHERE {bucket} >= {threshold}"
 
@@ -2320,33 +2309,33 @@ SELECT term, COUNT(*) AS doc_freq,
 FROM p GROUP BY term"""
 
 
-def _doc_gram_counts_cte(width: int) -> str:
+def _doc_gram_counts_cte() -> str:
     """Shared (doc, gram, n_pos) CTE body for the repeated-span oracles:
-    positional width-word grams via list slicing (DuckDB slices are
+    positional 8-word grams via list slicing (DuckDB slices are
     1-based, end-inclusive), counts exact BIGINT."""
     return f"""w AS (SELECT doc_id AS key, {_WORDS} AS words FROM documents),
 g AS (
-  SELECT key, UNNEST(list_transform(generate_series(1, len(words) - {width - 1}),
-                                    i -> array_to_string(words[i : i + {width - 1}], ' '))) AS gram
-  FROM w WHERE len(words) >= {width}
+  SELECT key, UNNEST(list_transform(generate_series(1, len(words) - 7),
+                                    i -> array_to_string(words[i : i + 7], ' '))) AS gram
+  FROM w WHERE len(words) >= 8
 ),
 dg AS (SELECT key, gram, CAST(COUNT(*) AS BIGINT) AS n_pos FROM g GROUP BY key, gram)"""
 
 
-def sql_repeated_grams(width: int = 8, min_docs: int = 2) -> str:
+def sql_repeated_grams() -> str:
     """terms.repeated_grams twin: per-gram distinct-doc count as a plain
     COUNT(*) over the pre-aggregated (doc, gram) rows — independent SQL,
     same no-COUNT-DISTINCT-expand semantics."""
-    return f"""WITH {_doc_gram_counts_cte(width)}
+    return f"""WITH {_doc_gram_counts_cte()}
 SELECT gram, CAST(COUNT(*) AS BIGINT) AS n_docs, CAST(SUM(n_pos) AS BIGINT) AS n_occ
-FROM dg GROUP BY gram HAVING COUNT(*) >= {min_docs}"""
+FROM dg GROUP BY gram HAVING COUNT(*) >= 2"""
 
 
-def sql_duplicated_span_stats(width: int = 8) -> str:
+def sql_duplicated_span_stats() -> str:
     """terms.duplicated_span_stats twin: join the one-row-per-gram n_docs
     table back to the (doc, gram) level, aggregate per document. Exact
     BIGINTs end to end (SUM widens to HUGEINT -> cast back)."""
-    return f"""WITH {_doc_gram_counts_cte(width)},
+    return f"""WITH {_doc_gram_counts_cte()},
 gd AS (SELECT gram, CAST(COUNT(*) AS BIGINT) AS n_docs FROM dg GROUP BY gram)
 SELECT dg.key AS key,
        CAST(SUM(dg.n_pos) AS BIGINT) AS n_grams,
@@ -2749,12 +2738,12 @@ FROM (SELECT u AS vertex FROM tri
 GROUP BY vertex"""
 
 
-def sql_profile_documents(cols: tuple[str, ...] = ("doc_id", "text", "lang", "source", "n_chars")) -> str:
+def sql_profile_documents() -> str:
     """relational.profile_table twin over documents: the same single
     aggregate (numeric min/max then VARCHAR cast) unpivoted as one UNION
     ALL branch per column."""
     aggs = ["COUNT(*) AS n_rows"]
-    for i, c in enumerate(cols):
+    for i, c in enumerate(("doc_id", "text", "lang", "source", "n_chars")):
         aggs += [
             f"COUNT({c}) AS nn{i}",
             f"COUNT(DISTINCT {c}) AS nd{i}",
@@ -2764,24 +2753,26 @@ def sql_profile_documents(cols: tuple[str, ...] = ("doc_id", "text", "lang", "so
     branches = "\nUNION ALL ".join(
         f"SELECT n_rows, '{c}' AS column_name, nn{i} AS n_nonnull, "
         f"nd{i} AS n_distinct, mn{i} AS min_value, mx{i} AS max_value FROM a"
-        for i, c in enumerate(cols)
+        for i, c in enumerate(("doc_id", "text", "lang", "source", "n_chars"))
     )
     return f"WITH a AS (SELECT {', '.join(aggs)} FROM documents)\n{branches}"
 
 
-def sql_events_sessions_native(gap_seconds: int = 1800) -> str:
+def sql_events_sessions_native() -> str:
     """events.user_sessions_native twin recomputed with lag + running
     counter — an independent strategy from Catalyst's merging-session
     aggregation. Split rule is > gap: measured on this Spark build, an
     event exactly gap seconds after the previous MERGES (windows touching
     at the boundary coalesce), pinned by
     test_session_window_native_boundary_semantics."""
+    from .operators.events import SESSION_GAP_SECONDS
+
     return f"""WITH ev AS (
   SELECT CAST(user_id AS VARCHAR) AS key, CAST(floor(epoch(ts)) AS BIGINT) AS t FROM events
 ),
 m AS (
   SELECT key, t,
-         CASE WHEN t - lag(t) OVER (PARTITION BY key ORDER BY t) > {gap_seconds}
+         CASE WHEN t - lag(t) OVER (PARTITION BY key ORDER BY t) > {SESSION_GAP_SECONDS}
               THEN 1 ELSE 0 END AS ns
   FROM ev
 ),
@@ -2835,30 +2826,30 @@ FROM ud JOIN c USING (user_id)
 GROUP BY 1, 2"""
 
 
-def sql_events_moving_stats(frame_rows: int = 5) -> str:
+def sql_events_moving_stats() -> str:
     """events.events_moving_stats twin: the same ROWS frame over
     (ts, event_id) order, DECIMAL-exact frame sum, one DOUBLE cast at the
     boundary (both engines round the exact decimal once)."""
-    return f"""
+    return """
 SELECT event_id, user_id,
        CAST(COUNT(*) OVER w AS INTEGER) AS frame_n,
        CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DECIMAL(38,2)) AS DOUBLE) AS moving_sum
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN {frame_rows - 1} PRECEDING AND CURRENT ROW)"""
+             ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)"""
 
 
-def sql_events_funnel(steps: tuple[str, str, str] = ("view", "click", "purchase")) -> str:
+def sql_events_funnel() -> str:
     """events.events_funnel twin: the same chained strictly-after minimum
     selection in CTEs, integer microseconds via epoch_us."""
-    return f"""WITH ev AS (
+    return """WITH ev AS (
   SELECT user_id, event_type, CAST(epoch_us(ts) AS BIGINT) AS t FROM events
 ),
-s1 AS (SELECT user_id, MIN(t) AS t1 FROM ev WHERE event_type = '{steps[0]}' GROUP BY user_id),
+s1 AS (SELECT user_id, MIN(t) AS t1 FROM ev WHERE event_type = 'view' GROUP BY user_id),
 s2 AS (SELECT ev.user_id, MIN(ev.t) AS t2 FROM ev JOIN s1 USING (user_id)
-       WHERE ev.event_type = '{steps[1]}' AND ev.t > s1.t1 GROUP BY ev.user_id),
+       WHERE ev.event_type = 'click' AND ev.t > s1.t1 GROUP BY ev.user_id),
 s3 AS (SELECT ev.user_id, MIN(ev.t) AS t3 FROM ev JOIN s2 USING (user_id)
-       WHERE ev.event_type = '{steps[2]}' AND ev.t > s2.t2 GROUP BY ev.user_id)
+       WHERE ev.event_type = 'purchase' AND ev.t > s2.t2 GROUP BY ev.user_id)
 SELECT s1.user_id, t1, t2, t3,
        CASE WHEN t3 IS NOT NULL THEN 3 WHEN t2 IS NOT NULL THEN 2 ELSE 1 END AS stage
 FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)"""
@@ -2887,19 +2878,19 @@ SELECT lang, n_chars AS p_chars, cnt AS n_docs
 FROM r WHERE rn = ({p_num} * cnt + {p_den - 1}) // {p_den}"""
 
 
-def sql_mixture_allocate(budget: int = 1_000_000) -> str:
+def sql_mixture_allocate() -> str:
     """text.mixture_allocate twin: same largest-remainder integer
     arithmetic (floor quota, remainder rank desc with name tie-break)."""
-    return f"""WITH w AS (SELECT source AS grp, CAST(SUM(n_chars) AS BIGINT) AS wt
+    return """WITH w AS (SELECT source AS grp, CAST(SUM(n_chars) AS BIGINT) AS wt
            FROM documents GROUP BY 1),
 t AS (SELECT CAST(SUM(wt) AS BIGINT) AS total FROM w),
 s AS (SELECT grp, wt,
-             CAST((CAST({budget} AS HUGEINT) * wt) // total AS BIGINT) AS base,
-             (CAST({budget} AS HUGEINT) * wt) % total AS rem
+             CAST((CAST(1000000 AS HUGEINT) * wt) // total AS BIGINT) AS base,
+             (CAST(1000000 AS HUGEINT) * wt) % total AS rem
       FROM w CROSS JOIN t),
 r AS (SELECT grp, wt, base,
              ROW_NUMBER() OVER (ORDER BY rem DESC, grp) AS rem_rank,
-             CAST({budget} AS BIGINT) - SUM(base) OVER () AS leftover
+             CAST(1000000 AS BIGINT) - SUM(base) OVER () AS leftover
       FROM s)
 SELECT grp AS source, wt AS weight,
        CAST(base + CASE WHEN rem_rank <= leftover THEN 1 ELSE 0 END AS BIGINT) AS quota
@@ -2936,11 +2927,11 @@ SELECT doc_id AS key,
 FROM t"""
 
 
-def sql_length_quartiles(buckets: int = 4) -> str:
+def sql_length_quartiles() -> str:
     """text.length_quartiles twin: identical ntile over (n_chars, doc_id)."""
-    return f"""WITH b AS (
+    return """WITH b AS (
   SELECT lang, n_chars,
-         NTILE({buckets}) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS quartile
+         NTILE(4) OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS quartile
   FROM documents
 )
 SELECT lang, CAST(quartile AS INT) AS quartile, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -2948,7 +2939,7 @@ SELECT lang, CAST(quartile AS INT) AS quartile, CAST(COUNT(*) AS BIGINT) AS n_do
 FROM b GROUP BY 1, 2"""
 
 
-def sql_countmin_heavy_hitters(k: int = 20) -> str:
+def sql_countmin_heavy_hitters() -> str:
     """terms.countmin_heavy_hitters twin: same md5-salted row hashes
     (materialized once per (term, row) — never re-run per hex char), same
     deterministic top-k probe order, same min-over-rows read-out."""
@@ -2957,7 +2948,7 @@ def sql_countmin_heavy_hitters(k: int = 20) -> str:
     col = f"{_hexcol_sql('gh', 1)} % {CM_WIDTH}"
     return f"""WITH t AS (SELECT unnest({_WORDS}) AS term FROM documents),
 exact AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS exact_count FROM t GROUP BY 1),
-probes AS (SELECT term, exact_count FROM exact ORDER BY exact_count DESC, term LIMIT {k}),
+probes AS (SELECT term, exact_count FROM exact ORDER BY exact_count DESC, term LIMIT 20),
 rows AS (SELECT unnest(generate_series(0, {CM_DEPTH - 1})) AS row),
 c0 AS (SELECT row, md5(concat(term, '-cm', CAST(row AS VARCHAR))) AS gh
        FROM t CROSS JOIN rows),
@@ -2992,12 +2983,12 @@ SELECT lang, n_chars AS p_chars_est, cnt AS n_sampled
 FROM r WHERE rn = ({p_num} * cnt + {p_den - 1}) // {p_den}"""
 
 
-def sql_events_sliding_windows(window_seconds: int = 3600, slide_seconds: int = 1800) -> str:
+def sql_events_sliding_windows() -> str:
     """events.events_sliding_windows twin: window memberships enumerated
     arithmetically (start = slide*i for i in (floor((t-window)/slide),
     floor(t/slide)] — epoch-aligned, matching Spark's window()), DECIMAL
     sums, one DOUBLE cast at the boundary."""
-    w, s = window_seconds, slide_seconds
+    w, s = 3600, 1800
     # FLOOR division, not DuckDB's truncate-toward-zero `//`: Spark's
     # window() aligns starts with floorDiv, and the two differ for
     # negative numerators (events within `w` of the epoch, or pre-1970).
@@ -3030,7 +3021,7 @@ SELECT doc_id, lang, len(words) AS n_words,
 FROM w"""
 
 
-def sql_embedding_quantize(bits_max: int = 127) -> str:
+def sql_embedding_quantize() -> str:
     """similarity.embedding_quantize twin: identical single-rounded IEEE
     steps (float->double cast exact, one multiply, one divide, floor of
     +0.5) over DuckDB list lambdas."""
@@ -3042,12 +3033,12 @@ def sql_embedding_quantize(bits_max: int = 127) -> str:
 SELECT vec_id, scale,
        array_to_string(
          list_transform(embedding, x -> CAST(CASE WHEN scale = 0 THEN 0
-           ELSE floor({_dbl(float(bits_max))} * CAST(x AS DOUBLE) / scale + {_dbl(0.5)}) END AS INTEGER)),
+           ELSE floor({_dbl(127.0)} * CAST(x AS DOUBLE) / scale + {_dbl(0.5)}) END AS INTEGER)),
          ',') AS q_codes
 FROM s"""
 
 
-def sql_kmeans_assign(k: int = 8, dim: int = 64) -> str:
+def sql_kmeans_assign(k: int = 8) -> str:
     """similarity.kmeans_assign twin: same left-fold (x-c)^2 distance
     (list_reduce == Spark's aggregate fold, pinned elsewhere), assignment
     via ROW_NUMBER tie-broken on seed_id, and the identical fixed-point
@@ -3056,7 +3047,7 @@ def sql_kmeans_assign(k: int = 8, dim: int = 64) -> str:
     from .operators.similarity import KMEANS_FP_SCALE
 
     d2 = (
-        f"list_reduce(list_transform(generate_series(1, {dim}), "
+        "list_reduce(list_transform(generate_series(1, 64), "
         "i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(s.semb[i] AS DOUBLE))"
         " * (CAST(e.embedding[i] AS DOUBLE) - CAST(s.semb[i] AS DOUBLE))), (x, y) -> x + y)"
     )
@@ -3066,7 +3057,7 @@ d AS (SELECT e.vec_id, s.seed_id, {d2} AS d2 FROM embeddings e CROSS JOIN s),
 a AS (SELECT vec_id, seed_id AS cluster_id FROM
       (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, seed_id) AS rn FROM d)
       WHERE rn = 1),
-i0 AS (SELECT unnest(generate_series(1, {dim})) AS i),
+i0 AS (SELECT unnest(generate_series(1, 64)) AS i),
 dims AS (SELECT i FROM i0),
 m AS (SELECT a.cluster_id, dims.i - 1 AS dim_idx,
              CAST(floor(CAST(e.embedding[dims.i] AS DOUBLE) * {_dbl(fs)} + {_dbl(0.5)}) AS BIGINT) AS q
@@ -3077,7 +3068,7 @@ SELECT cluster_id, CAST(dim_idx AS INT) AS dim_idx, CAST(COUNT(*) AS BIGINT) AS 
 FROM m GROUP BY cluster_id, dim_idx"""
 
 
-def sql_ann_topk_quantized(n_queries: int = 5, k: int = 3) -> str:
+def sql_ann_topk_quantized() -> str:
     """similarity.ann_topk_quantized twin: identical quantization then an
     exact integer dot (list fold of BIGINT products — no float rules
     needed at all)."""
@@ -3091,7 +3082,7 @@ def sql_ann_topk_quantized(n_queries: int = 5, k: int = 3) -> str:
   FROM embeddings
 ),
 qv AS (SELECT vec_id, {qexpr} AS qc FROM s),
-qs AS (SELECT vec_id AS query_id, qc AS qq FROM qv WHERE vec_id < {n_queries}),
+qs AS (SELECT vec_id AS query_id, qc AS qq FROM qv WHERE vec_id < 5),
 d AS (
   SELECT qs.query_id, qv.vec_id,
          list_sum(list_transform(range(1, len(qv.qc) + 1), i -> qv.qc[i] * qs.qq[i])) AS qdot
@@ -3100,26 +3091,26 @@ d AS (
 SELECT query_id, vec_id, CAST(qdot AS BIGINT) AS qdot,
        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY qdot DESC, vec_id) AS INTEGER) AS rank
 FROM d
-QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY qdot DESC, vec_id) <= {k}"""
+QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY qdot DESC, vec_id) <= 3"""
 
 
-def sql_ann_two_stage(n_queries: int = 5, k: int = 3, overfetch: int = 4, dim: int = 64) -> str:
+def sql_ann_two_stage() -> str:
     """similarity.ann_two_stage twin: the identical two stages — quantized
-    BIGINT-dot top-(k*overfetch) candidates, then the exact left-fold
-    float dot (the sql_ann_topk formulation) reranked to k."""
-    m = k * overfetch
+    BIGINT-dot top-12 candidates, then the exact left-fold
+    float dot (the sql_ann_topk formulation) reranked to 3."""
+    m = 12
     qexpr = (
         "list_transform(embedding, x -> CAST(CASE WHEN scale = 0 THEN 0 "
         f"ELSE floor({_dbl(127.0)} * CAST(x AS DOUBLE) / scale + {_dbl(0.5)}) END AS BIGINT))"
     )
-    dot = _dot_expr("e.embedding", "q.embedding", dim)
+    dot = _dot_expr("e.embedding", "q.embedding")
     return f"""WITH s AS (
   SELECT vec_id, embedding,
          list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS scale
   FROM embeddings
 ),
 qv AS (SELECT vec_id, {qexpr} AS qc FROM s),
-qs AS (SELECT vec_id AS query_id, qc AS qq FROM qv WHERE vec_id < {n_queries}),
+qs AS (SELECT vec_id AS query_id, qc AS qq FROM qv WHERE vec_id < 5),
 d AS (
   SELECT qs.query_id, qv.vec_id,
          list_sum(list_transform(range(1, len(qv.qc) + 1), i -> qv.qc[i] * qs.qq[i])) AS qdot
@@ -3137,15 +3128,15 @@ r AS (
 SELECT query_id, vec_id, CAST(dsum AS DOUBLE) AS dot,
        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dsum DESC, vec_id) AS INTEGER) AS rank
 FROM r
-QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dsum DESC, vec_id) <= {k}"""
+QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dsum DESC, vec_id) <= 3"""
 
 
-def sql_quantization_error(bits_max: int = 127) -> str:
+def sql_quantization_error() -> str:
     """similarity.quantization_error twin: same quantize, same
     single-rounded reconstruction arithmetic, order-independent max."""
     qexpr = (
         "list_transform(embedding, x -> CAST(CASE WHEN scale = 0 THEN 0 "
-        f"ELSE floor({_dbl(float(bits_max))} * CAST(x AS DOUBLE) / scale + {_dbl(0.5)}) END AS BIGINT))"
+        f"ELSE floor({_dbl(127.0)} * CAST(x AS DOUBLE) / scale + {_dbl(0.5)}) END AS BIGINT))"
     )
     return f"""WITH s AS (
   SELECT vec_id, embedding,
@@ -3156,7 +3147,7 @@ qv AS (SELECT vec_id, scale, embedding, {qexpr} AS qc FROM s)
 SELECT vec_id, scale,
        list_max(list_transform(range(1, len(embedding) + 1),
          i -> abs(CAST(embedding[i] AS DOUBLE)
-                  - (CAST(qc[i] AS DOUBLE) * scale / {_dbl(float(bits_max))})))) AS max_abs_err
+                  - (CAST(qc[i] AS DOUBLE) * scale / {_dbl(127.0)})))) AS max_abs_err
 FROM qv"""
 
 
@@ -3197,18 +3188,18 @@ FROM b JOIN part ON p_partkey = b.l_partkey
        JOIN supplier ON s_suppkey = b.best_suppkey"""
 
 
-def sql_events_decay(
-    anchor_us: int = 1706745600000000, half_life_days: int = 1, cap_days: int = 40
-) -> str:
+def sql_events_decay() -> str:
     """events.events_decay twin: same exact power-of-two BIGINT weights
     (float decay could never hash-gate), integer-floor age periods via
-    DuckDB's // on non-negative operands == Spark's div."""
-    period_us = 86_400_000_000 * half_life_days
+    DuckDB's // on non-negative operands == Spark's div. The anchor and
+    the age cap are read from the engine's constants at call time."""
+    from .operators.events import DECAY_AGE_CAP_DAYS, DECAY_ANCHOR_US
+
     return f"""WITH w AS (
   SELECT event_type,
-         (CAST(1 AS BIGINT) << CAST({cap_days} - LEAST(GREATEST(
-            ({anchor_us} - epoch_us(ts)) // {period_us},
-            0), {cap_days}) AS INTEGER)) AS w
+         (CAST(1 AS BIGINT) << CAST({DECAY_AGE_CAP_DAYS} - LEAST(GREATEST(
+            ({DECAY_ANCHOR_US} - epoch_us(ts)) // 86400000000,
+            0), {DECAY_AGE_CAP_DAYS}) AS INTEGER)) AS w
   FROM events
 )
 SELECT event_type, COUNT(*) AS n_events,
@@ -3217,13 +3208,13 @@ SELECT event_type, COUNT(*) AS n_events,
 FROM w GROUP BY event_type"""
 
 
-def sql_events_attribution(window_days: int = 7) -> str:
+def sql_events_attribution() -> str:
     """events.events_attribution twin via the INDEPENDENT join-then-rank
     strategy (the Spark side is a union carry-forward window): every
     in-window touch joins to its conversion, rank 1 on (us DESC,
     event_id DESC) is the last touch — the same (us, event_id) ordering
     contract pinned by event_transitions."""
-    window_us = window_days * 86_400_000_000
+    window_us = 7 * 86_400_000_000
     return f"""WITH e AS (
   SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
          CAST(value AS DECIMAL(18,2)) AS value
@@ -3249,17 +3240,14 @@ SELECT attributed_type, COUNT(*) AS n_conversions,
 FROM f GROUP BY attributed_type"""
 
 
-def sql_scd2_lookup(
-    dim_types: tuple[str, ...] = ("signup", "purchase"),
-    probe_types: tuple[str, ...] = ("view", "click"),
-) -> str:
+def sql_scd2_lookup() -> str:
     """events.scd2_lookup twin, independent on BOTH axes: the dimension is
     the gaps-and-islands formulation (not lag-change-cumsum) and the
     lookup is a half-open range join (not carry-forward) — the half-open
     predicate naturally skips the zero-length [t, t) runs that the Spark
     side supersedes via its valid_to_us tie order."""
-    dims = ", ".join(f"'{t}'" for t in dim_types)
-    probes = ", ".join(f"'{t}'" for t in probe_types)
+    dims = ", ".join(f"'{t}'" for t in ("signup", "purchase"))
+    probes = ", ".join(f"'{t}'" for t in ("view", "click"))
     return f"""WITH e AS (
   SELECT user_id, CAST(epoch_us(ts) AS BIGINT) AS us, event_id, event_type
   FROM events WHERE event_type IN ({dims})
@@ -3294,12 +3282,12 @@ SELECT probe_type, COALESCE(state_type, 'none') AS state_type,
 FROM m GROUP BY probe_type, COALESCE(state_type, 'none')"""
 
 
-def sql_bpe_pair_counts(k: int = 50) -> str:
+def sql_bpe_pair_counts() -> str:
     """terms.bpe_pair_counts twin via the INDEPENDENT direct corpus-level
     unnest (the Spark side aggregates to the vocab before exploding
     pairs); same within-token multiplicity and (count DESC, pair ASC)
     top-k tiebreak."""
-    return f"""WITH toks AS (
+    return """WITH toks AS (
   SELECT unnest(regexp_split_to_array(trim(text), '\\s+')) AS tok FROM documents
 ),
 p AS (
@@ -3308,15 +3296,17 @@ p AS (
   FROM toks WHERE length(tok) >= 2
 )
 SELECT pair, COUNT(*) AS n_occurrences FROM p GROUP BY pair
-ORDER BY n_occurrences DESC, pair LIMIT {k}"""
+ORDER BY n_occurrences DESC, pair LIMIT 50"""
 
 
-def sql_edit_distance_pairs(max_distance: int = 20, block_chars: int = 16) -> str:
+def sql_edit_distance_pairs() -> str:
     """dedup.edit_distance_pairs twin, independent mechanism: candidates
     via raw substr margin equality (no md5 digests, no key explode) UNIONed
     across the prefix / suffix / short-bucket sources, then DuckDB's
     un-thresholded levenshtein verifies. Same recall contract."""
-    d, c = max_distance, block_chars
+    from .operators.dedup import EDIT_BLOCK_CHARS
+
+    d, c = 20, EDIT_BLOCK_CHARS
     return f"""WITH d AS (
   SELECT doc_id, text, length(text) AS n FROM documents
 ),
@@ -3343,12 +3333,14 @@ SELECT key_a, key_b, CAST(levenshtein(ta, tb) AS INTEGER) AS edit_distance
 FROM cand WHERE levenshtein(ta, tb) <= {d}"""
 
 
-def sql_events_resample(window_seconds: int = 3600) -> str:
+def sql_events_resample() -> str:
     """events.events_resample twin, independent spine mechanism:
     generate_series per type range (vs Spark sequence+explode) LEFT JOINed
     to the same bucket rollup; zero-fill via COALESCE. DECIMAL sum ->
     one DOUBLE cast (determinism rules at the top of this module)."""
-    s = window_seconds
+    from .operators.events import WINDOW_SECONDS
+
+    s = WINDOW_SECONDS
     return f"""WITH ev AS (
   SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) AS e,
          CAST(value AS DECIMAL(18,2)) AS v
@@ -3374,10 +3366,10 @@ FROM spine LEFT JOIN agg
   ON agg.event_type = spine.event_type AND agg.window_start = spine.window_start"""
 
 
-def sql_events_new_users(window_seconds: int = 86400) -> str:
+def sql_events_new_users() -> str:
     """events.events_new_users twin: first-seen reduction then a running
     SUM OVER the bucket curve (exact BIGINTs throughout)."""
-    s = window_seconds
+    s = 86400
     return f"""WITH fs AS (
   SELECT user_id, MIN(CAST(floor(epoch(ts)) AS BIGINT)) AS e
   FROM events GROUP BY 1
@@ -3438,18 +3430,18 @@ WHERE NOT EXISTS (
 )"""
 
 
-def sql_weighted_sample(fraction: float = 0.5, length_cap: int = 2000) -> str:
+def sql_weighted_sample() -> str:
     """text.weighted_sample twin: same md5-bucket + exact integer
     inclusion inequality."""
     from .operators.text import SAMPLE_BUCKETS
 
-    rate_num = int(round(fraction * SAMPLE_BUCKETS))
+    rate_num = int(round(0.5 * SAMPLE_BUCKETS))
     bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {SAMPLE_BUCKETS}"
     return f"""SELECT doc_id, lang, n_chars FROM documents
-WHERE ({bucket}) * {length_cap} < LEAST(n_chars, {length_cap}) * CAST({rate_num} AS BIGINT)"""
+WHERE ({bucket}) * 2000 < LEAST(n_chars, 2000) * CAST({rate_num} AS BIGINT)"""
 
 
-def sql_boilerplate_scrub(min_pages: int = 2) -> str:
+def sql_boilerplate_scrub() -> str:
     """web.boilerplate_scrub twin: page-frequency via COUNT(DISTINCT key)
     (vs Spark's dedupe-then-COUNT(*)), reconstruction via ordered
     string_agg with FILTER (vs Spark's sort_array + filter + array_join)."""
@@ -3457,7 +3449,7 @@ def sql_boilerplate_scrub(min_pages: int = 2) -> str:
 ph AS (SELECT key, para_idx, paragraph, md5(paragraph) AS h FROM paras),
 hot AS (
   SELECT h FROM (SELECT h, COUNT(DISTINCT key) AS np FROM ph GROUP BY 1)
-  WHERE np >= {min_pages}
+  WHERE np >= 2
 ),
 m AS (
   SELECT ph.key, ph.para_idx, ph.paragraph, hot.h IS NOT NULL AS is_hot
@@ -3509,17 +3501,14 @@ SELECT lang_a, lang_b, sa.n_vocab AS vocab_a, sb.n_vocab AS vocab_b, n_common,
 FROM i JOIN s sa ON sa.lang = i.lang_a JOIN s sb ON sb.lang = i.lang_b"""
 
 
-def sql_events_anomaly(
-    window_seconds: int = 3600,
-    trail: int = 24,
-    min_history: int = 8,
-    z_threshold: float = 3.0,
-) -> str:
+def sql_events_anomaly() -> str:
     """events.events_anomaly twin: the resample CTEs (generate_series
     spine), then identical trailing exact-int moments and the same
     single-rounded mean/var/sqrt/z op order."""
-    s = window_seconds
-    frame = f"ROWS BETWEEN {trail} PRECEDING AND 1 PRECEDING"
+    from .operators.events import WINDOW_SECONDS
+
+    s = WINDOW_SECONDS
+    frame = "ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING"
     part = f"PARTITION BY event_type ORDER BY window_start {frame}"
     return f"""WITH ev AS (
   SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) AS e
@@ -3545,14 +3534,14 @@ m AS (
 ),
 z AS (
   SELECT event_type, window_start, n_events,
-         CASE WHEN h_n >= {min_history} AND h_n * h_ss - h_s * h_s > 0 THEN
+         CASE WHEN h_n >= 8 AND h_n * h_ss - h_s * h_s > 0 THEN
            (CAST(n_events AS DOUBLE) - CAST(h_s AS DOUBLE) / CAST(h_n AS DOUBLE))
            / sqrt(CAST(h_n * h_ss - h_s * h_s AS DOUBLE) / CAST(h_n * (h_n - 1) AS DOUBLE))
          END AS zscore
   FROM m
 )
 SELECT event_type, window_start, n_events, zscore,
-       CASE WHEN zscore IS NOT NULL THEN abs(zscore) >= {z_threshold!r} END AS is_anomaly
+       CASE WHEN zscore IS NOT NULL THEN abs(zscore) >= 3.0 END AS is_anomaly
 FROM z"""
 
 
@@ -3580,15 +3569,12 @@ reach AS (
 SELECT host, MIN(lab) AS component FROM reach GROUP BY host"""
 
 
-def sql_tile_mode_class(res: int | None = None) -> str:
+def sql_tile_mode_class() -> str:
     """tiles.tile_mode_class twin, independent mechanism: ROW_NUMBER over
     (count DESC, class DESC) instead of a struct argmax."""
-    from .operators.tiles import DEFAULT_TILE_RES
-
-    r = DEFAULT_TILE_RES if res is None else res
     return f"""WITH {pages_with()}, {pip_hits_cte()},
 c AS (
-  SELECT {cell_id_sql('lon', 'lat', r)} AS tile_id, airspace_class, COUNT(*) AS n
+  SELECT {cell_id_sql('lon', 'lat', DEFAULT_TILE_RES)} AS tile_id, airspace_class, COUNT(*) AS n
   FROM hits GROUP BY 1, 2
 ),
 rk AS (
@@ -3643,7 +3629,7 @@ SELECT doc_id, 0, 0, CAST(NULL AS DOUBLE)
 FROM documents WHERE length(text) = 0"""
 
 
-def sql_image_patches(n: int = 500, patch: int = 4) -> str:
+def sql_image_patches() -> str:
     """multimodal.image_patches twin: recompute every decoded pixel from
     the md5 byte layout (j -> (y, x, c) -> patch cell), exact BIGINT sums
     per (image, patch, channel), float32-rounded means (power-of-two
@@ -3652,12 +3638,12 @@ def sql_image_patches(n: int = 500, patch: int = 4) -> str:
     px_byte = _md5_byte_sql(
         "concat(CAST(media_id AS VARCHAR), '-px-', CAST(j // 16 AS VARCHAR))", "j % 16"
     )
-    np_ = patch * patch
+    np_ = 16
     mean = lambda c: f"CAST(CAST(s{c} / CAST({np_}.0 AS DOUBLE) AS FLOAT) AS DOUBLE)"  # noqa: E731
-    return f"""WITH m AS (SELECT UNNEST(generate_series(0, {n - 1})) AS media_id),
+    return f"""WITH m AS (SELECT UNNEST(generate_series(0, 499)) AS media_id),
 px AS (
   SELECT media_id, t.j, CAST({px_byte} AS BIGINT) AS v,
-         ((t.j // 3) // 8) // {patch} AS pr, ((t.j // 3) % 8) // {patch} AS pc,
+         ((t.j // 3) // 8) // 4 AS pr, ((t.j // 3) % 8) // 4 AS pc,
          t.j % 3 AS c
   FROM (SELECT media_id FROM m WHERE media_id % 3 = 0) i,
        (SELECT UNNEST(generate_series(0, {npx - 1})) AS j) t
@@ -3679,11 +3665,11 @@ SELECT media_id, patch_row, patch_col,
 FROM w"""
 
 
-def sql_length_outliers(k: int = 3) -> str:
+def sql_length_outliers() -> str:
     """text.length_outliers twin, independent median mechanism: the lower
     median as MIN(v) whose cumulative count reaches ceil(n/2) (value-level
     cumsum — no row ranks), applied to lengths then to deviations."""
-    return f"""WITH d AS (SELECT lang, n_chars FROM documents),
+    return """WITH d AS (SELECT lang, n_chars FROM documents),
 n AS (SELECT lang, COUNT(*) AS c FROM d GROUP BY 1),
 vals AS (SELECT lang, n_chars AS v, COUNT(*) AS cnt FROM d GROUP BY 1, 2),
 cum AS (
@@ -3708,17 +3694,19 @@ mad AS (
   GROUP BY 1
 ),
 fl AS (
-  SELECT dev.lang, CAST(SUM(CASE WHEN dev.dv > {k} * mad.mad_chars THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
+  SELECT dev.lang, CAST(SUM(CASE WHEN dev.dv > 3 * mad.mad_chars THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
   FROM dev JOIN mad ON mad.lang = dev.lang GROUP BY 1
 )
 SELECT n.lang, CAST(n.c AS BIGINT) AS n_docs, med.median_chars, mad.mad_chars, fl.n_outliers
 FROM n JOIN med ON med.lang = n.lang JOIN mad ON mad.lang = n.lang JOIN fl ON fl.lang = n.lang"""
 
 
-def sql_session_paths(gap_seconds: int = 1800, path_len: int = 3) -> str:
+def sql_session_paths() -> str:
     """events.session_paths twin: same gap sessionization (lag + cumsum),
     path via ordered LIST slice + array_to_string."""
-    gap_us = gap_seconds * 1_000_000
+    from .operators.events import SESSION_GAP_SECONDS
+
+    gap_us = SESSION_GAP_SECONDS * 1_000_000
     return f"""WITH ev AS (
   SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events
 ),
@@ -3734,7 +3722,7 @@ s AS (
 ),
 p AS (
   SELECT user_id, sid,
-         array_to_string(LIST(event_type ORDER BY us, event_id)[1:{path_len}], '>') AS path
+         array_to_string(LIST(event_type ORDER BY us, event_id)[1:3], '>') AS path
   FROM s GROUP BY 1, 2
 )
 SELECT path, COUNT(*) AS n_sessions FROM p GROUP BY 1"""
@@ -3757,7 +3745,7 @@ SELECT a.poly_id, CAST(COALESCE(c.doc_count, 0) AS BIGINT) AS doc_count, a.area_
 FROM a LEFT JOIN c ON c.poly_id = a.poly_id"""
 
 
-def sql_co_citation(max_hosts_per_page: int = 32) -> str:
+def sql_co_citation() -> str:
     """web.co_citation twin: same extraction + md5-ordered per-page cap,
     pair counts via an independent GROUP BY over the join."""
     from .operators.web import PAT_HOST, PAT_HREF
@@ -3773,7 +3761,7 @@ capped AS (
     SELECT key, host,
            ROW_NUMBER() OVER (PARTITION BY key ORDER BY md5(key || '|' || host)) AS rn
     FROM hosts
-  ) WHERE rn <= {max_hosts_per_page}
+  ) WHERE rn <= 32
 )
 SELECT a.host AS host_a, b.host AS host_b, COUNT(*) AS n_pages
 FROM capped a JOIN capped b ON a.key = b.key AND a.host < b.host
@@ -3794,11 +3782,11 @@ def sql_normalized_dedup() -> str:
 FROM documents GROUP BY 1"""
 
 
-def sql_quality_funnel(min_chars: int = 50) -> str:
+def sql_quality_funnel() -> str:
     """text.quality_funnel twin: same quality expressions, cumulative
     conditional counts per source."""
     p = _quality_parts()
-    c_len = f"(CAST({p['n_chars']} AS BIGINT) >= {min_chars})"
+    c_len = f"(CAST({p['n_chars']} AS BIGINT) >= 50)"
     c_wl = f"({c_len} AND {p['mean_wl']} >= 3.0 AND {p['mean_wl']} <= 12.0)"
     c_punct = f"({c_wl} AND {p['punct_r']} <= 0.1)"
     c_digit = f"({c_punct} AND {p['digit_r']} <= 0.2)"
@@ -3809,19 +3797,19 @@ def sql_quality_funnel(min_chars: int = 50) -> str:
 FROM documents GROUP BY source"""
 
 
-def sql_ann_topk_filtered(n_queries: int = 5, k: int = 3, dim: int = 64) -> str:
+def sql_ann_topk_filtered() -> str:
     """similarity.ann_topk_filtered twin: same left-fold dot, the filter
     as a join predicate on label."""
-    dot = _dot_expr("e.embedding", "q.embedding", dim)
+    dot = _dot_expr("e.embedding", "q.embedding")
     return f"""
 WITH s AS (
   SELECT q.vec_id AS query_id, e.vec_id, {dot} AS dsum
   FROM embeddings e JOIN embeddings q
-    ON q.vec_id < {n_queries} AND e.vec_id <> q.vec_id AND e.label = q.label
+    ON q.vec_id < 5 AND e.vec_id <> q.vec_id AND e.label = q.label
 )
 SELECT query_id, vec_id, CAST(dsum AS DOUBLE) AS dot, rank
 FROM (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dsum DESC, vec_id) AS INTEGER) AS rank FROM s)
-WHERE rank <= {k}"""
+WHERE rank <= 3"""
 
 
 def sql_host_degree_histogram() -> str:
@@ -3853,12 +3841,10 @@ SELECT digest, n_sources, CAST(n_copies AS BIGINT) AS n_copies, sources
 FROM g WHERE n_sources >= 2"""
 
 
-def sql_returned_item_revenue(
-    date_lo: str = "1996-01-01", date_hi: str = "1996-04-01", k: int = 20
-) -> str:
+def sql_returned_item_revenue() -> str:
     """relational.returned_item_revenue twin: same DECIMAL-exact revenue,
     ordered on the exact decimal before the single DOUBLE cast."""
-    return f"""WITH li AS (
+    return """WITH li AS (
   SELECT l_orderkey,
          CAST(l_extendedprice AS DECIMAL(18,2))
            * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) AS rev
@@ -3866,7 +3852,7 @@ def sql_returned_item_revenue(
 ),
 ow AS (
   SELECT o_orderkey, o_custkey FROM orders
-  WHERE o_orderdate >= TIMESTAMP '{date_lo}' AND o_orderdate < TIMESTAMP '{date_hi}'
+  WHERE o_orderdate >= TIMESTAMP '1996-01-01' AND o_orderdate < TIMESTAMP '1996-04-01'
 ),
 pc AS (
   SELECT o_custkey, CAST(SUM(rev) AS DECIMAL(38,4)) AS revd, COUNT(*) AS n_items
@@ -3876,10 +3862,10 @@ pc AS (
 SELECT c_custkey, c_name, n_name, CAST(revd AS DOUBLE) AS revenue, n_items
 FROM pc JOIN customer ON c_custkey = o_custkey
         JOIN nation ON n_nationkey = c_nationkey
-ORDER BY revd DESC, c_custkey LIMIT {k}"""
+ORDER BY revd DESC, c_custkey LIMIT 20"""
 
 
-def sql_label_centroid_distances(dim: int = 64) -> str:
+def sql_label_centroid_distances() -> str:
     """similarity.label_centroid_distances twin: same fixed-point
     quantization, exact BIGINT per-dim numerators, the same three
     single-rounded ops per dim, and the same ORDERED left-fold sum
@@ -3890,7 +3876,7 @@ def sql_label_centroid_distances(dim: int = 64) -> str:
     return f"""WITH ex AS (
   SELECT label, t.j AS dim_idx,
          CAST(floor(CAST(embedding[t.j + 1] AS DOUBLE) * {fs!r} + 0.5) AS BIGINT) AS q
-  FROM embeddings, (SELECT UNNEST(generate_series(0, {dim - 1})) AS j) t
+  FROM embeddings, (SELECT UNNEST(generate_series(0, 63)) AS j) t
 ),
 m AS (
   SELECT label, dim_idx, CAST(SUM(q) AS BIGINT) AS sq, COUNT(*) AS n
@@ -3913,13 +3899,15 @@ SELECT label_a, label_b, CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
 FROM g"""
 
 
-def sql_events_window_users(window_seconds: int = 3600) -> str:
+def sql_events_window_users() -> str:
     """events.events_window_users twin, independent mechanism:
     COUNT(DISTINCT user_id) directly (vs Spark's dedupe-first)."""
+    from .operators.events import WINDOW_SECONDS
+
     return f"""WITH ev AS (
   SELECT CAST(floor(epoch(ts)) AS BIGINT) AS e, user_id FROM events
 )
-SELECT e - e % {window_seconds} AS window_start,
+SELECT e - e % {WINDOW_SECONDS} AS window_start,
        COUNT(DISTINCT user_id) AS n_users,
        COUNT(*) AS n_events
 FROM ev GROUP BY 1"""
@@ -3970,20 +3958,20 @@ SELECT a.src AS host_a, a.dst AS host_b, a.n AS n_ab, b.n AS n_ba
 FROM gg a JOIN gg b ON a.src = b.dst AND a.dst = b.src AND a.src < a.dst"""
 
 
-def sql_conversion_latency(from_type: str = "view", to_type: str = "purchase") -> str:
+def sql_conversion_latency() -> str:
     """events.conversion_latency twin."""
-    return f"""WITH ff AS (
+    return """WITH ff AS (
   SELECT user_id, MIN(epoch_us(ts)) AS first_from_us
-  FROM events WHERE event_type = '{from_type}' GROUP BY 1
+  FROM events WHERE event_type = 'view' GROUP BY 1
 ),
-tt AS (SELECT user_id, epoch_us(ts) AS to_us FROM events WHERE event_type = '{to_type}')
+tt AS (SELECT user_id, epoch_us(ts) AS to_us FROM events WHERE event_type = 'purchase')
 SELECT tt.user_id, ff.first_from_us, MIN(tt.to_us) AS first_to_us,
        MIN(tt.to_us) - ff.first_from_us AS latency_us
 FROM tt JOIN ff ON ff.user_id = tt.user_id AND tt.to_us >= ff.first_from_us
 GROUP BY 1, 2"""
 
 
-def sql_audio_frames(n: int = 500, frame: int = 32) -> str:
+def sql_audio_frames() -> str:
     """multimodal.audio_frames twin: every decoded int16 sample recomputed
     from the md5 byte layout (lo + 256*hi two's complement), exact frame
     aggregates, the same float32 one-rounding sequence."""
@@ -3997,9 +3985,9 @@ def sql_audio_frames(n: int = 500, frame: int = 32) -> str:
         "(2 * j + 1) % 16",
     )
     f32 = lambda e: f"CAST(CAST({e} AS FLOAT) AS DOUBLE)"  # noqa: E731
-    mean = f"(s / CAST({frame}.0 AS DOUBLE))"
-    var = f"((ss / CAST({frame}.0 AS DOUBLE)) - {mean} * {mean})"
-    return f"""WITH m AS (SELECT UNNEST(generate_series(0, {n - 1})) AS media_id),
+    mean = "(s / CAST(32.0 AS DOUBLE))"
+    var = f"((ss / CAST(32.0 AS DOUBLE)) - {mean} * {mean})"
+    return f"""WITH m AS (SELECT UNNEST(generate_series(0, 499)) AS media_id),
 sm AS (
   SELECT media_id, t.j,
          CAST({lo} + 256 * {hi} - (CASE WHEN {lo} + 256 * {hi} >= 32768 THEN 65536 ELSE 0 END) AS BIGINT) AS v
@@ -4007,18 +3995,18 @@ sm AS (
        (SELECT UNNEST(generate_series(0, {nsm - 1})) AS j) t
 ),
 g AS (
-  SELECT media_id, CAST(j // {frame} AS INTEGER) AS frame_idx,
+  SELECT media_id, CAST(j // 32 AS INTEGER) AS frame_idx,
          CAST(SUM(v) AS BIGINT) AS s, CAST(SUM(v * v) AS BIGINT) AS ss,
          CAST(MIN(v) AS INTEGER) AS s_min, CAST(MAX(v) AS INTEGER) AS s_max
   FROM sm GROUP BY 1, 2
 )
-SELECT media_id, frame_idx, CAST({frame} AS INTEGER) AS n_samples,
+SELECT media_id, frame_idx, CAST(32 AS INTEGER) AS n_samples,
        s AS s_sum, ss AS s_sumsq, s_min, s_max,
        {f32(mean)} AS mean, {f32(var)} AS var
 FROM g"""
 
 
-def sql_host_bfs_depth(max_rounds: int = 20) -> str:
+def sql_host_bfs_depth() -> str:
     """web.host_bfs_depth twin, independent mechanism: recursive-CTE walk
     from the MIN host with a depth cap, BFS depth = MIN(depth) per node
     (vs Spark's iterative frontier expansion)."""
@@ -4038,17 +4026,17 @@ walk AS (
   UNION
   SELECT e.d AS node, w.depth + 1 AS depth
   FROM walk w JOIN e ON e.s = w.node
-  WHERE w.depth < {max_rounds}
+  WHERE w.depth < 20
 )
 SELECT node AS host, CAST(MIN(depth) AS INTEGER) AS depth FROM walk GROUP BY node"""
 
 
-def sql_events_stickiness(window_days: int = 30) -> str:
+def sql_events_stickiness() -> str:
     """events.events_stickiness twin, independent mechanism: per-day
     COUNT(DISTINCT) over a BETWEEN self-join (vs Spark's dedupe-explode
     -> COUNT(*))."""
     day = 86400
-    span = (window_days - 1) * day
+    span = 29 * day
     return f"""WITH ud AS (
   SELECT DISTINCT user_id,
          CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(ts)) AS BIGINT) % {day} AS d
@@ -4066,22 +4054,20 @@ SELECT dau.d AS day_start, dau.dau, mau.mau,
 FROM dau JOIN mau ON mau.d = dau.d"""
 
 
-def sql_containment_pairs(
-    threshold: float = 0.8, k_rarest: int = 4, df_cap: int = 50
-) -> str:
+def sql_containment_pairs() -> str:
     """dedup.containment_pairs twin. The prefix-filter candidate rule is
     FORMULATION-SHARED (it defines the output set — the polygon_overlap
     precedent); verification counts the intersection independently via a
     three-way join. Threshold compare in exact integers."""
-    thr = int(round(threshold * 10**6))
+    thr = int(round(0.8 * 10**6))
     return f"""WITH sh0 AS (SELECT doc_id AS doc, {SHINGLES_EXPR} AS shingles FROM documents),
 ds AS (SELECT DISTINCT doc, md5(unnest(shingles)) AS sh FROM sh0),
 dft AS (SELECT sh, COUNT(*) AS df FROM ds GROUP BY 1),
-rare AS (SELECT ds.doc, ds.sh, dft.df FROM ds JOIN dft ON dft.sh = ds.sh WHERE dft.df <= {df_cap}),
+rare AS (SELECT ds.doc, ds.sh, dft.df FROM ds JOIN dft ON dft.sh = ds.sh WHERE dft.df <= 50),
 probe AS (
   SELECT doc, sh FROM (
     SELECT doc, sh, ROW_NUMBER() OVER (PARTITION BY doc ORDER BY df, sh) AS rn FROM rare
-  ) WHERE rn <= {k_rarest}
+  ) WHERE rn <= 4
 ),
 cand AS (
   SELECT DISTINCT p.doc AS key_a, i.doc AS key_b
@@ -4099,14 +4085,11 @@ FROM inter i JOIN sizes s ON s.doc = i.key_a
 WHERE i.n_common * 1000000 >= {thr} * s.n"""
 
 
-def sql_tile_unmatched_counts(res: int | None = None) -> str:
+def sql_tile_unmatched_counts() -> str:
     """tiles.tile_unmatched_counts twin: NOT IN over the pip-hit urls
     (vs Spark's left_anti join)."""
-    from .operators.tiles import DEFAULT_TILE_RES
-
-    r = DEFAULT_TILE_RES if res is None else res
     return f"""WITH {pages_with()}, {pip_hits_cte()}
-SELECT {cell_id_sql('lon', 'lat', r)} AS tile_id, COUNT(*) AS n_unmatched
+SELECT {cell_id_sql('lon', 'lat', DEFAULT_TILE_RES)} AS tile_id, COUNT(*) AS n_unmatched
 FROM pages
 WHERE url NOT IN (SELECT url FROM hits)
 GROUP BY 1"""
@@ -4133,10 +4116,10 @@ SELECT cm.lang_true, cm.lang_pred, cm.n_docs,
 FROM cm JOIN t ON t.lang_true = cm.lang_true"""
 
 
-def sql_dedup_report(jaccard_threshold: float = 0.5) -> str:
+def sql_dedup_report() -> str:
     """dedup.dedup_report twin: the recursive transitive-closure cluster
     CTE rolled up per source."""
-    clusters = sql_dedup_clusters(jaccard_threshold=jaccard_threshold)
+    clusters = sql_dedup_clusters()
     return f"""WITH c AS ({clusters})
 SELECT d.source, COUNT(*) AS n_docs,
        CAST(SUM(CASE WHEN c.key = c.cluster_id THEN 1 ELSE 0 END) AS BIGINT) AS n_representatives,
@@ -4174,14 +4157,12 @@ FROM ds JOIN fo ON fo.sh = ds.sh
 GROUP BY ds.doc"""
 
 
-def sql_dedup_keep_best(
-    num_hashes: int = 16, bands: int = 8, jaccard_threshold: float = 0.5
-) -> str:
+def sql_dedup_keep_best() -> str:
     """dedup.dedup_keep_best twin: recursive-CTE transitive closure for the
     clusters (independent of the engine's label propagation), then the
     SAME total order — quality_score DESC (identical literal arithmetic,
     see sql_quality), n_chars DESC, md5(text) ASC, doc_id ASC."""
-    pairs = sql_minhash_lsh_pairs(num_hashes, bands, jaccard_threshold)
+    pairs = sql_minhash_lsh_pairs()
     score = _quality_parts()["score"]
     return f"""
 WITH RECURSIVE p AS ({pairs}),
@@ -4296,7 +4277,7 @@ SELECT domain, CAST(COUNT(*) AS BIGINT) AS n_urls,
 FROM d GROUP BY domain"""
 
 
-def sql_kmeans_iterate(k: int = 8, dim: int = 64) -> str:
+def sql_kmeans_iterate() -> str:
     """similarity.kmeans_iterate twin: two unrolled Lloyd rounds — the
     integer-PageRank playbook. Round-1 fold distance + ROW_NUMBER tie on
     seed_id, fixed-point centroid components sum_q/(n*2^20) (one double
@@ -4306,21 +4287,21 @@ def sql_kmeans_iterate(k: int = 8, dim: int = 64) -> str:
 
     fs = float(KMEANS_FP_SCALE)
     d2_1 = (
-        f"list_reduce(list_transform(generate_series(1, {dim}), "
+        "list_reduce(list_transform(generate_series(1, 64), "
         "i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(s.semb[i] AS DOUBLE))"
         " * (CAST(e.embedding[i] AS DOUBLE) - CAST(s.semb[i] AS DOUBLE))), (x, y) -> x + y)"
     )
     d2_2 = (
-        f"list_reduce(list_transform(generate_series(1, {dim}), "
+        "list_reduce(list_transform(generate_series(1, 64), "
         "i -> (CAST(e2.embedding[i] AS DOUBLE) - cf.cemb[i])"
         " * (CAST(e2.embedding[i] AS DOUBLE) - cf.cemb[i])), (x, y) -> x + y)"
     )
-    return f"""WITH s AS (SELECT vec_id AS seed_id, embedding AS semb FROM embeddings WHERE vec_id < {k}),
+    return f"""WITH s AS (SELECT vec_id AS seed_id, embedding AS semb FROM embeddings WHERE vec_id < 8),
 d1 AS (SELECT e.vec_id, s.seed_id, {d2_1} AS d2 FROM embeddings e CROSS JOIN s),
 a1 AS (SELECT vec_id, seed_id AS c1 FROM
        (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, seed_id) AS rn FROM d1)
        WHERE rn = 1),
-dims AS (SELECT unnest(generate_series(1, {dim})) AS i),
+dims AS (SELECT unnest(generate_series(1, 64)) AS i),
 m AS (SELECT a1.c1, dims.i,
              CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(CAST(floor(CAST(e.embedding[dims.i] AS DOUBLE) * {_dbl(fs)} + {_dbl(0.5)}) AS BIGINT)) AS BIGINT) AS sum_q
@@ -4342,11 +4323,12 @@ SELECT vec_id, CAST(c1 AS BIGINT) AS cluster_r1, CAST(cid AS BIGINT) AS cluster_
 FROM a2"""
 
 
-def sql_link_hits(iters: int = 2) -> str:
+def sql_link_hits() -> str:
     """web.link_hits twin: same href/host edge extraction, HITS recurrence
     unrolled as CTEs — a_0 = 1, h_i = SUM a over out-edges, a_i = SUM h
     over in-edges; exact BIGINTs (no normalization: a per-round monotone
     scalar, ranking-irrelevant — the documented contract)."""
+    from .operators.graph import HITS_ROUNDS
     from .operators.web import PAT_HOST, PAT_HREF
 
     parts = [
@@ -4358,7 +4340,7 @@ nodes AS (SELECT DISTINCT host AS id
           FROM (SELECT src AS host FROM e UNION SELECT dst AS host FROM e)),
 a0 AS (SELECT id, CAST(1 AS BIGINT) AS a FROM nodes)"""
     ]
-    for i in range(iters):
+    for i in range(HITS_ROUNDS):
         parts.append(
             f"""hs{i} AS (SELECT e.src, SUM(a{i}.a) AS h FROM e JOIN a{i} ON e.dst = a{i}.id GROUP BY e.src),
 h{i + 1} AS (SELECT nodes.id, CAST(COALESCE(hs{i}.h, 0) AS BIGINT) AS h
@@ -4370,8 +4352,8 @@ a{i + 1} AS (SELECT nodes.id, CAST(COALESCE(as{i}.a, 0) AS BIGINT) AS a
     return (
         "WITH "
         + ",\n".join(parts)
-        + f"\nSELECT a{iters}.id AS host, h{iters}.h AS hub, a{iters}.a AS authority"
-        + f"\nFROM a{iters} JOIN h{iters} ON h{iters}.id = a{iters}.id"
+        + f"\nSELECT a{HITS_ROUNDS}.id AS host, h{HITS_ROUNDS}.h AS hub, a{HITS_ROUNDS}.a AS authority"
+        + f"\nFROM a{HITS_ROUNDS} JOIN h{HITS_ROUNDS} ON h{HITS_ROUNDS}.id = a{HITS_ROUNDS}.id"
     )
 
 
@@ -4430,16 +4412,15 @@ SELECT tot.link, tot.n_anchors, tot.n_unique_texts,
 FROM tot JOIN r ON r.link = tot.link AND r.rn = 1"""
 
 
-def sql_sketch_quantiles(
-    quantiles: tuple[tuple[int, int], ...] = ((1, 2), (9, 10), (99, 100)),
-    width: int = 32,
-) -> str:
+def sql_sketch_quantiles() -> str:
     """relational.sketch_quantiles twin: equi-width histogram, integer
     ceil-rank targets, first qualifying bin via ROW_NUMBER, and the same
     parenthesized interpolation (bin_lo + ((t - cum_before)/cnt) * width)."""
-    qrows = ", ".join(f"({n}, {d})" for n, d in quantiles)
+    from .operators.relational import SKETCH_BIN_WIDTH as w
+
+    qrows = ", ".join(f"({n}, {d})" for n, d in ((1, 2), (9, 10), (99, 100)))
     return f"""
-WITH hist AS (SELECT n_chars // {width} AS bin, CAST(COUNT(*) AS BIGINT) AS cnt
+WITH hist AS (SELECT n_chars // {w} AS bin, CAST(COUNT(*) AS BIGINT) AS cnt
               FROM documents GROUP BY 1),
 c AS (SELECT bin, cnt,
              CAST(SUM(cnt) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum,
@@ -4453,15 +4434,15 @@ j AS (SELECT q.q_num, q.q_den, (q.q_num * c.n + q.q_den - 1) // q.q_den AS targe
       WHERE c.cum >= (q.q_num * c.n + q.q_den - 1) // q.q_den)
 SELECT CAST(q_num AS INT) AS q_num, CAST(q_den AS INT) AS q_den,
        CAST(target_rank AS BIGINT) AS target_rank,
-       CAST(bin * {width} AS BIGINT) AS bin_lo,
+       CAST(bin * {w} AS BIGINT) AS bin_lo,
        cnt AS bin_count,
-       CAST(bin * {width} AS DOUBLE)
-         + (CAST(target_rank - cum_before AS DOUBLE) / CAST(cnt AS DOUBLE)) * CAST({width} AS DOUBLE)
+       CAST(bin * {w} AS DOUBLE)
+         + (CAST(target_rank - cum_before AS DOUBLE) / CAST(cnt AS DOUBLE)) * CAST({w} AS DOUBLE)
          AS estimate
 FROM j WHERE rn = 1"""
 
 
-def sql_temperature_mixture(budget: int = 1_000_000) -> str:
+def sql_temperature_mixture() -> str:
     """text.temperature_mixture twin (T=2): tempered weight =
     floor(sqrt(w)*1024 + 0.5) — sqrt is IEEE-correctly-rounded in both
     engines — then the mixture_allocate Hamilton arithmetic verbatim."""
@@ -4471,19 +4452,19 @@ w AS (SELECT grp, CAST(floor(sqrt(CAST(wt0 AS DOUBLE)) * {_dbl(1024.0)} + {_dbl(
       FROM w0),
 t AS (SELECT CAST(SUM(wt) AS BIGINT) AS total FROM w),
 s AS (SELECT grp, wt,
-             CAST((CAST({budget} AS HUGEINT) * wt) // total AS BIGINT) AS base,
-             (CAST({budget} AS HUGEINT) * wt) % total AS rem
+             CAST((CAST(1000000 AS HUGEINT) * wt) // total AS BIGINT) AS base,
+             (CAST(1000000 AS HUGEINT) * wt) % total AS rem
       FROM w CROSS JOIN t),
 r AS (SELECT grp, wt, base,
              ROW_NUMBER() OVER (ORDER BY rem DESC, grp) AS rem_rank,
-             CAST({budget} AS BIGINT) - SUM(base) OVER () AS leftover
+             CAST(1000000 AS BIGINT) - SUM(base) OVER () AS leftover
       FROM s)
 SELECT grp AS source, wt AS weight,
        CAST(base + CASE WHEN rem_rank <= leftover THEN 1 ELSE 0 END AS BIGINT) AS quota
 FROM r"""
 
 
-def sql_web_prefilter(cap: int = 3) -> str:
+def sql_web_prefilter() -> str:
     """web.web_prefilter twin: the canonicalize -> dedup -> robots ->
     host-cap composition recomputed in one SQL from the shared pattern
     constants (canonical CTEs, md5-digit robots rules with the '/'
@@ -4519,7 +4500,7 @@ keep AS (SELECT url, host FROM mch WHERE rn = 1 AND allow),
 r AS (SELECT host, url,
              CAST(ROW_NUMBER() OVER (PARTITION BY host ORDER BY md5(url)) AS INTEGER) AS host_rank
       FROM keep)
-SELECT host, url, host_rank FROM r WHERE host_rank <= {cap}"""
+SELECT host, url, host_rank FROM r WHERE host_rank <= 3"""
 
 
 def sql_bpe_phrase_merge() -> str:
@@ -4563,21 +4544,23 @@ SELECT nb.key AS doc_id, nb.n_tokens_before,
 FROM nb JOIN agg ON agg.key = nb.key LEFT JOIN nm ON nm.key = nb.key"""
 
 
-def sql_span_scrub(n: int = 8, min_docs: int = 2) -> str:
+def sql_span_scrub() -> str:
     """text.span_scrub twin: identical (doc, digest)-level hot-gram
     derivation, sequence cover expansion, anti-join scrub and ordered
     rebuild; empty stream -> md5('')."""
+    from .operators.text import SPAN_WORDS
+
     return f"""
 WITH w AS (SELECT doc_id AS key, {_WORDS} AS words FROM documents),
 toks AS (SELECT key, CAST(i - 1 AS BIGINT) AS pos, words[i] AS tok
          FROM w, LATERAL (SELECT UNNEST(generate_series(1, len(words))) AS i) t),
 g AS (SELECT key, CAST(i - 1 AS BIGINT) AS gpos, md5(grams[i]) AS dg
-      FROM (SELECT key, {_ngrams_list_sql(n)} AS grams FROM w),
+      FROM (SELECT key, {_ngrams_list_sql(SPAN_WORDS)} AS grams FROM w),
            LATERAL (SELECT UNNEST(generate_series(1, len(grams))) AS i) t),
-hot AS (SELECT dg FROM (SELECT DISTINCT key, dg FROM g) GROUP BY dg HAVING COUNT(*) >= {min_docs}),
+hot AS (SELECT dg FROM (SELECT DISTINCT key, dg FROM g) GROUP BY dg HAVING COUNT(*) >= 2),
 cover AS (SELECT DISTINCT g.key, g.gpos + o.j AS pos
           FROM g JOIN hot ON hot.dg = g.dg,
-               LATERAL (SELECT UNNEST(generate_series(0, {n - 1})) AS j) o),
+               LATERAL (SELECT UNNEST(generate_series(0, {SPAN_WORDS - 1})) AS j) o),
 nt AS (SELECT key, CAST(COUNT(*) AS BIGINT) AS n_tokens FROM toks GROUP BY key),
 ns AS (SELECT key, CAST(COUNT(*) AS BIGINT) AS n_scrubbed FROM cover GROUP BY key),
 reb AS (SELECT t.key, md5(string_agg(t.tok, ' ' ORDER BY t.pos)) AS scrubbed_md5
@@ -4607,7 +4590,7 @@ def sql_quality_lr_score() -> str:
 FROM documents"""
 
 
-def sql_vocab_coverage(vocab_size: int = 256) -> str:
+def sql_vocab_coverage() -> str:
     """terms.vocab_coverage twin: top-V vocabulary (count DESC, term ASC),
     broadcast-shaped left join recomputed relationally."""
     return f"""
@@ -4618,7 +4601,7 @@ WITH occ AS (
 ),
 vocab AS (SELECT term FROM (
             SELECT term, SUM(cnt) AS tot FROM occ GROUP BY term
-            ORDER BY tot DESC, term LIMIT {vocab_size})),
+            ORDER BY tot DESC, term LIMIT 256)),
 j AS (SELECT occ.key, occ.cnt, (vocab.term IS NOT NULL) AS iv
       FROM occ LEFT JOIN vocab ON vocab.term = occ.term)
 SELECT key AS doc_id,
@@ -4629,14 +4612,14 @@ SELECT key AS doc_id,
 FROM j GROUP BY key"""
 
 
-def sql_dataset_split(val_pct: int = 10, test_pct: int = 10) -> str:
+def sql_dataset_split() -> str:
     """text.dataset_split twin: same md5-bucket rule ((hex8 % 1e6) % 100
     == hex8 % 100 since 100 | 1e6 — the deterministic_sample space)."""
     bucket = f"({_hex8_sql('CAST(doc_id AS VARCHAR)')} % 100)"
     return f"""
 WITH s AS (
-  SELECT CASE WHEN {bucket} < {val_pct} THEN 'val'
-              WHEN {bucket} < {val_pct + test_pct} THEN 'test'
+  SELECT CASE WHEN {bucket} < 10 THEN 'val'
+              WHEN {bucket} < 20 THEN 'test'
               ELSE 'train' END AS split,
          lang
   FROM documents
@@ -4644,14 +4627,12 @@ WITH s AS (
 SELECT split, lang, CAST(COUNT(*) AS BIGINT) AS n_docs FROM s GROUP BY split, lang"""
 
 
-def sql_dedup_method_agreement(
-    num_hashes: int = 16, bands: int = 8, jaccard_threshold: float = 0.5, max_hamming: int = 3
-) -> str:
+def sql_dedup_method_agreement() -> str:
     """dedup.dedup_method_agreement twin: the MinHash pair set (banded +
     verified) vs the EXHAUSTIVE SimHash pair scan, full-outer joined on
     the ordered pair key, one rollup."""
-    mh = sql_minhash_lsh_pairs(num_hashes, bands, jaccard_threshold)
-    sh = sql_simhash64_pairs(max_hamming)
+    mh = sql_minhash_lsh_pairs()
+    sh = sql_simhash64_pairs()
     return f"""
 WITH mh AS ({mh}),
 sh AS ({sh}),
@@ -4672,13 +4653,7 @@ SELECT n_minhash, n_simhash, n_both, n_minhash_only, n_simhash_only,
 FROM a"""
 
 
-def sql_forecast_revenue(
-    year_start: str = "1996-01-01",
-    year_end: str = "1997-01-01",
-    discount_lo: float = 0.05,
-    discount_hi: float = 0.07,
-    max_qty: int = 24,
-) -> str:
+def sql_forecast_revenue() -> str:
     """relational.forecast_revenue twin (TPC-H Q6 shape), the
     pricing_summary DECIMAL-exact sum recipe; discount bounds as strtod
     double literals."""
@@ -4686,8 +4661,8 @@ def sql_forecast_revenue(
   CAST(CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS DOUBLE) AS revenue,
   CAST(COUNT(*) AS BIGINT) AS n_items
 FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '{year_start}'
-  AND l_shipdate < TIMESTAMP '{year_end}'
-  AND l_discount >= {_dbl(discount_lo)}
-  AND l_discount <= {_dbl(discount_hi)}
-  AND l_quantity < {_dbl(float(max_qty))}"""
+WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+  AND l_shipdate < TIMESTAMP '1997-01-01'
+  AND l_discount >= {_dbl(0.05)}
+  AND l_discount <= {_dbl(0.07)}
+  AND l_quantity < {_dbl(24.0)}"""

@@ -71,19 +71,14 @@ def steal_meta(before: tuple[int, int], after: tuple[int, int]) -> dict:
     }
 
 
-def is_quiet(meta: dict, threshold: float = QUIET_STEAL_RATIO) -> bool:
+def is_quiet(meta: dict) -> bool:
     # the ratio is meaningless for near-idle samples (1 stolen tick against
     # 0 busy ticks reads as 1.0): under 5 absolute steal ticks (~50ms of
     # stolen CPU at 100Hz) a sample cannot be meaningfully inflated
-    return meta["steal_ticks"] < 5 or meta["steal_ratio"] < threshold
+    return meta["steal_ticks"] < 5 or meta["steal_ratio"] < QUIET_STEAL_RATIO
 
 
-def timed_samples(
-    fn: Callable[[], object],
-    passes: int,
-    retry_budget: int = 3,
-    threshold: float = QUIET_STEAL_RATIO,
-) -> dict:
+def timed_samples(fn: Callable[[], object], passes: int, retry_budget: int = 3) -> dict:
     """Run `fn` `passes` times (plus up to `retry_budget` resamples if no
     pass was quiet) and return
     {sec, quiet, steal_ratio, loadavg_before, samples:[{sec, steal_ratio,
@@ -101,7 +96,7 @@ def timed_samples(
         sec = time.perf_counter() - start
         meta = steal_meta(t0, cpu_ticks())
         s = {"sec": round(sec, 3), "steal_ratio": meta["steal_ratio"]}
-        s["quiet"] = is_quiet(meta, threshold)
+        s["quiet"] = is_quiet(meta)
         return s
 
     for _ in range(passes):

@@ -117,19 +117,15 @@ def pages_cte(dialect: str) -> str:
     )
 
 
-def pages_from_documents(spark: SparkSession, sf_dir: str, with_html: bool = False) -> DataFrame:
+def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents.parquet -> pages DataFrame with geotags.
 
     `text` passes through untouched (byte-identical per url invariant).
     """
     spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView("documents")
-    pages = spark.sql(pages_cte("spark"))
-    pages = pages.withColumn(
+    return spark.sql(pages_cte("spark")).withColumn(
         "warc_ts", F.timestamp_seconds(F.lit(1704067200) + F.xxhash64("url") % 31536000)
     )
-    if with_html:
-        pages = pages.withColumn("html", F.encode(F.col("text"), "utf-8"))
-    return pages
 
 
 def synth_pages(spark: SparkSession, n: int, with_payload: bool = True) -> DataFrame:

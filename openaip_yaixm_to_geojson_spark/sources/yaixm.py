@@ -260,11 +260,11 @@ def services_from_yaml_docs(docs: DataFrame) -> DataFrame:
     return docs.mapInPandas(parse, schema=SERVICE_SCHEMA)
 
 
-def airspaces_from_records(spark: SparkSession, records: list[dict[str, Any]], doc_id: str = "inline") -> DataFrame:
+def airspaces_from_records(spark: SparkSession, records: list[dict[str, Any]]) -> DataFrame:
     """Pre-parsed YAIXM blocks (e.g. embedded fixtures) -> airspace rows."""
-    rows = _airspace_rows(doc_id, {"airspace": records})
+    rows = _airspace_rows("inline", {"airspace": records})
     return spark.createDataFrame(rows, schema=AIRSPACE_SCHEMA)
 
 
-def services_from_records(spark: SparkSession, records: list[dict[str, Any]], doc_id: str = "inline") -> DataFrame:
-    return spark.createDataFrame(_service_rows(doc_id, records), schema=SERVICE_SCHEMA)
+def services_from_records(spark: SparkSession, records: list[dict[str, Any]]) -> DataFrame:
+    return spark.createDataFrame(_service_rows("inline", records), schema=SERVICE_SCHEMA)

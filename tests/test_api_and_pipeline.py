@@ -381,17 +381,23 @@ def test_corpus_pipeline_resume_and_byte_identity(spark, tmp_path):
 
 
 def test_pipeline_oracle_reads_the_pipeline_constants(monkeypatch):
-    """The oracle's pipeline twins read the corpus pipeline's own quality
-    floor and chunk stride, so a change to either reaches both engines
-    (Spark-free: only the SQL text is built)."""
+    """The oracle's pipeline twins and the corpus_clean twin read the corpus
+    pipeline's own quality floor, sample fraction and chunk stride, so a
+    change to any of them reaches both engines (Spark-free: only the SQL
+    text is built)."""
     from openaip_yaixm_to_geojson_spark import oracle
     from openaip_yaixm_to_geojson_spark.plans import pipeline
 
     stats, chunks = oracle.sql_pipeline_corpus_stats(), oracle.sql_pipeline_chunks()
+    clean = oracle.sql_corpus_clean()
     assert "CAST(0.7 AS DOUBLE)" in chunks and "range(0, len(words), 48)" in chunks
+    assert ">= 0.7)" in clean and "< 500000" in clean
     monkeypatch.setattr(pipeline, "QUALITY_MIN", 0.25)
     assert oracle.sql_pipeline_corpus_stats() == stats.replace("CAST(0.7 AS DOUBLE)", "CAST(0.25 AS DOUBLE)")
     assert oracle.sql_pipeline_corpus_stats() != stats
+    assert oracle.sql_corpus_clean() == clean.replace(">= 0.7)", ">= 0.25)")
+    monkeypatch.setattr(pipeline, "SAMPLE_FRACTION", 0.125)
+    assert oracle.sql_corpus_clean() == clean.replace(">= 0.7)", ">= 0.25)").replace("< 500000", "< 125000")
     monkeypatch.setattr(pipeline, "CHUNK_STRIDE", 7)
     moved = oracle.sql_pipeline_chunks()
     assert "CAST(0.25 AS DOUBLE)" in moved and "range(0, len(words), 7)" in moved and "s // 7" in moved

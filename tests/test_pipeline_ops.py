@@ -668,7 +668,7 @@ def test_events_operators(spark):
 
     ev = events_from_dir(spark, "/root/testdata/sf0.001")
     n = ev.count()
-    sessions = user_sessions(ev, gap_seconds=1800).collect()
+    sessions = user_sessions(ev).collect()
     assert sum(r["n_events"] for r in sessions) == n
     assert all(r["session_start"] <= r["session_end"] for r in sessions)
     windows = event_type_windows(ev).collect()
@@ -1556,7 +1556,7 @@ def test_weighted_sample_inclusion_rule(spark):
         bucket = int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) % SAMPLE_BUCKETS
         if bucket * cap < rate * min(len(t), cap):
             expected.add(i)
-    got = {r["doc_id"] for r in weighted_sample(df, fraction=0.5, length_cap=cap).collect()}
+    got = {r["doc_id"] for r in weighted_sample(df, length_cap=cap).collect()}
     assert got == expected and 0 < len(got) < len(rows)
 
 
@@ -1604,7 +1604,7 @@ def test_events_anomaly_detects_planted_spike(spark):
         F.lit(1.0).alias("value"), F.lit(0).cast("bigint").alias("user_id"), F.lit("{}").alias("props"),
     )
     base = 1704067200
-    got = {r["window_start"]: r for r in events_anomaly(df, min_history=8).collect()}
+    got = {r["window_start"]: r for r in events_anomaly(df).collect()}
     assert got[base]["zscore"] is None  # no history at the head
     assert got[base + 12 * 3600]["is_anomaly"] is True  # the spike
     assert got[base + 11 * 3600]["is_anomaly"] is False  # steady hour
@@ -1720,7 +1720,7 @@ def test_length_outliers_hand_case(spark):
     df = spark.createDataFrame(rows, "doc_id bigint, text string, lang string").withColumn(
         "n_chars", F.length("text")
     )
-    got = {r["lang"]: r for r in length_outliers(df, k=3).collect()}
+    got = {r["lang"]: r for r in length_outliers(df).collect()}
     en = got["en"]
     assert (en["n_docs"], en["median_chars"], en["mad_chars"], en["n_outliers"]) == (5, 12, 2, 1)
     zz = got["zz"]  # median 5, devs [0,0,0,2] -> MAD 0; 2 > 0 flags
@@ -1827,7 +1827,7 @@ def test_quality_funnel_cumulative(spark):
         (3, ("abc " * 20) + "!!!!!!!!!!!!!!!!!!!!!!!!", "s1"),  # length ok, punct fails
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string, source string")
-    r = quality_funnel(df, min_chars=50).collect()[0]
+    r = quality_funnel(df).collect()[0]
     seq = [r["n_total"], r["n_len_ok"], r["n_wordlen_ok"], r["n_punct_ok"], r["n_all_ok"]]
     assert seq == [3, 2, 2, 1, 1]
     assert all(a >= b for a, b in zip(seq, seq[1:]))
@@ -2113,7 +2113,7 @@ def test_containment_pairs_asymmetric(spark):
         (3, "совершенно unrelated text " + " ".join(f"z{i}" for i in range(20))),
     ]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = {(r["key_a"], r["key_b"]): r["containment"] for r in containment_pairs(df, threshold=0.8).collect()}
+    got = {(r["key_a"], r["key_b"]): r["containment"] for r in containment_pairs(df).collect()}
     assert set(got) == {(1, 2)}
     assert got[(1, 2)] == 1.0
 
@@ -2557,7 +2557,7 @@ def test_hits_int_hand_case(spark):
 
     edges = spark.createDataFrame([("a", "b"), ("a", "c"), ("b", "c")], "src string, dst string")
     nodes = spark.createDataFrame([("a",), ("b",), ("c",)], "host string")
-    got = {r["host"]: (r["hub"], r["authority"]) for r in hits_int(nodes, edges, iters=2).collect()}
+    got = {r["host"]: (r["hub"], r["authority"]) for r in hits_int(nodes, edges).collect()}
     assert got == {"a": (5, 0), "b": (3, 5), "c": (0, 8)}
 
 

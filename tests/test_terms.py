@@ -307,8 +307,8 @@ def test_session_window_native_boundary_semantics(spark):
         "event_id bigint, user_id bigint, t bigint",
     ).select("event_id", "user_id", F.timestamp_seconds("t").alias("ts"))
     expected = [(0, 1800, 2), (3601, 3601, 1)]
-    native = user_sessions_native(ev, gap_seconds=1800).collect()
-    lagged = user_sessions(ev, gap_seconds=1800).collect()
+    native = user_sessions_native(ev).collect()
+    lagged = user_sessions(ev).collect()
     assert sorted((r["session_start"], r["session_end"], r["n_events"]) for r in native) == expected
     assert sorted((r["session_start"], r["session_end"], r["n_events"]) for r in lagged) == expected
 
@@ -589,7 +589,7 @@ def test_quantized_ann_recall_vs_exact(spark):
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     exact = cosine_topk(emb, queries_from_embeddings(emb, n=5), k=3)
-    quant = ann_topk_quantized(emb, n_queries=5, k=3)
+    quant = ann_topk_quantized(emb, k=3)
     e = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
     q = {(r["query_id"], r["vec_id"]) for r in quant.collect()}
     assert len(e & q) / len(e) >= 0.6

@@ -2,9 +2,10 @@
 import in the entry points, tools and benchmark harness resolves, every
 tool the run instructions name exists, every operator the README names
 resolves, the core operators take no speed-only tuning parameters, every
-public package function has a caller outside the tests, every column-name
-parameter is set by some caller, the shared bench suite matches
-bench.py's, and the test-data scaler handles its smallest factor."""
+public package function has a caller outside the tests, every defaulted
+parameter is set by some caller or allowlisted with its reason, the shared
+bench suite matches bench.py's, and the test-data scaler handles its
+smallest factor."""
 
 import ast
 import importlib
@@ -166,10 +167,10 @@ def test_package_functions_have_a_non_test_caller():
     assert sorted(allowed & called) == []
 
 
-def _column_parameters(path: Path, tree: ast.Module):
+def _defaulted_parameters(path: Path, tree: ast.Module):
     """(key, function, name, position, default) for every defaulted
-    column-name parameter of a public top-level function: a `*_col`, or
-    `with_tile`'s `lon` and `lat`. `position` is None for keyword-only."""
+    parameter of a public top-level function. `position` is None for
+    keyword-only."""
     for top in tree.body:
         if not isinstance(top, ast.FunctionDef) or top.name.startswith("_"):
             continue
@@ -179,11 +180,9 @@ def _column_parameters(path: Path, tree: ast.Module):
         slots = [(arg, i, d) for i, (arg, d) in enumerate(zip(positional, defaults))]
         slots += [(arg, None, d) for arg, d in zip(a.kwonlyargs, a.kw_defaults)]
         for arg, position, default in slots:
-            name = arg.arg
-            is_column = name.endswith("_col") or (top.name == "with_tile" and name in ("lon", "lat"))
-            if default is not None and is_column:
-                key = f"{path.relative_to(REPO / PACKAGE).as_posix()}:{top.name}({name})"
-                yield key, top.name, name, position, ast.unparse(default)
+            if default is not None:
+                key = f"{path.relative_to(REPO / PACKAGE).as_posix()}:{top.name}({arg.arg})"
+                yield key, top.name, arg.arg, position, ast.unparse(default)
 
 
 def _passed_arguments(tree: ast.Module, params: dict):
@@ -220,20 +219,65 @@ def _passed_arguments(tree: ast.Module, params: dict):
     yield from visit(tree, {})
 
 
-def test_column_parameters_are_set_by_a_caller():
-    """Operators name the corpus columns directly. A column-name parameter
-    (a defaulted `*_col`, or `with_tile`'s `lon` and `lat`) of a public
-    package function is kept only where some non-test call passes it a
-    value. A call that only forwards an enclosing column parameter which no
-    caller sets, and which has the same default, does not count; that rule
-    repeats until nothing changes."""
+# Defaulted parameters that no non-test call sets, grouped by why each
+# stays: reason -> {module: {function: (parameters, ...)}}.
+_PARAMETER_ALLOWLIST = {
+    "mirrors an option of the reference converter: convert_blocks' Spark "
+    "twin gets it through converter_api config, clean_object copies cleanObject": {
+        "functions/convert_local.py": {"convert_blocks": ("geometry_detail", "consume_duplicate_buffer")},
+        "operators/convert.py": {
+            "clean_object": ("keep_empty_strings", "keep_empty_arrays", "keep_empty_objects", "keep_null")
+        },
+    },
+    "a test sets another value to check behaviour the default does not reach": {
+        "functions/validate_geojson.py": {"validate_with_json_schema": ("schema",)},
+        "operators/dedup.py": {
+            "edit_distance_pairs": ("max_distance",),
+            "lsh_recall_monitor": ("sample_mod", "bands"),
+            "minhash_lsh_pairs": ("bands",),
+        },
+        "operators/events.py": {
+            "asof_join": ("allow_equal",),
+            "events_moving_stats": ("frame_rows",),
+            "events_stickiness": ("window_days",),
+            "interval_join": ("bucket_seconds",),
+        },
+        "operators/graph.py": {"bfs_depth": ("directed",)},
+        "operators/multimodal.py": {
+            "audio_frames": ("frame",),
+            "encode_png": ("filters",),
+            "image_patches": ("patch",),
+        },
+        "operators/relational.py": {"pareto_frontier": ("n_buckets",), "returned_item_revenue": ("k",)},
+        "operators/similarity.py": {"ann_topk_filtered": ("n_queries", "k"), "kmeans_iterate": ("k",)},
+        "operators/terms.py": {
+            "duplicated_span_stats": ("width",),
+            "kmv_distinct": ("n_salts",),
+            "repeated_grams": ("width",),
+            "vocab_coverage": ("vocab_size",),
+        },
+        "operators/text.py": {"stratified_sample": ("delta",), "weighted_sample": ("length_cap",)},
+        "operators/web.py": {"co_citation": ("max_hosts_per_page",), "robots_filter": ("rules",)},
+        "plans/pipeline.py": {"run_pipeline": ("stop_after",)},
+    },
+}
+
+
+def test_parameters_are_set_by_a_caller():
+    """With one value in use, a parameter is a constant. A defaulted
+    parameter of a public package function is kept only where some
+    non-test call passes it a value, or the allowlist says why. A call
+    that only forwards an enclosing parameter which no caller sets, and
+    which has the same default, does not count; that rule repeats until
+    nothing changes. An allowlisted parameter that gains a caller must
+    leave the list, so the list only shrinks."""
     paths = sorted((REPO / PACKAGE).rglob("*.py")) + SCRIPTS
     trees = {path: ast.parse(path.read_text(), str(path)) for path in paths}
     params = {
         key: rest
         for path, tree in trees.items()
         if path.is_relative_to(REPO / PACKAGE)
-        for key, *rest in _column_parameters(path, tree)
+        for key, *rest in _defaulted_parameters(path, tree)
     }
     passes = [p for tree in trees.values() for p in _passed_arguments(tree, params)]
     assert params and passes
@@ -249,8 +293,18 @@ def test_column_parameters_are_set_by_a_caller():
                 continue
             is_set.add(key)
             changed = True
-    unset = sorted(set(params) - is_set)
-    assert not unset, f"{len(unset)} column parameters no caller sets: " + ", ".join(unset)
+    allowed = {
+        f"{module}:{function}({name})"
+        for modules in _PARAMETER_ALLOWLIST.values()
+        for module, functions in modules.items()
+        for function, names in functions.items()
+        for name in names
+    }
+    assert len(allowed) == 33
+    assert allowed <= set(params), sorted(allowed - set(params))
+    assert sorted(allowed & is_set) == []
+    unset = sorted(set(params) - is_set - allowed)
+    assert not unset, f"{len(unset)} parameters no caller sets: " + ", ".join(unset)
 
 
 def _bench_timed_names() -> list[str]:
