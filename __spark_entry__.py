@@ -40,6 +40,7 @@ from openaip_yaixm_to_geojson_spark.operators.dedup import (
 )
 from openaip_yaixm_to_geojson_spark.operators.knn import knn_ring_expansion
 from openaip_yaixm_to_geojson_spark.operators.similarity import (
+    EMBED_DIM,
     cosine_topk,
     embedding_neardup_pairs,
     lsh_ann_topk,
@@ -52,11 +53,7 @@ from openaip_yaixm_to_geojson_spark.operators.text import (
     quality_struct,
     token_count_cols,
 )
-from openaip_yaixm_to_geojson_spark.operators.tiles import (
-    DEFAULT_TILE_RES,
-    tile_class_rollup,
-    tile_doc_counts,
-)
+from openaip_yaixm_to_geojson_spark.operators.tiles import tile_class_rollup, tile_doc_counts
 from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
 from openaip_yaixm_to_geojson_spark.sources.yaixm import (
     airspaces_from_records,
@@ -227,7 +224,7 @@ def q_geo_cluster_cells(spark, sf_dir):
     recomputes components as a recursive-CTE reachability fixpoint."""
     from openaip_yaixm_to_geojson_spark.operators.spatial import geo_cluster_cells
 
-    return geo_cluster_cells(pages_from_documents(spark, sf_dir), res=7, min_pts=2)
+    return geo_cluster_cells(pages_from_documents(spark, sf_dir))
 
 
 def q_knn_points(spark, sf_dir):
@@ -237,7 +234,7 @@ def q_knn_points(spark, sf_dir):
     fallback — brute-force ROW_NUMBER oracle."""
     from openaip_yaixm_to_geojson_spark.operators.knn import knn_points
 
-    return knn_points(pages_from_documents(spark, sf_dir), k=8, query_mod=7)
+    return knn_points(pages_from_documents(spark, sf_dir))
 
 
 def q_knn_table(spark, sf_dir):
@@ -284,7 +281,7 @@ def q_range_partition_plan(spark, sf_dir):
     derivation behind range-clustered writes, integer-exact."""
     from openaip_yaixm_to_geojson_spark.operators.relational import range_partition_plan
 
-    return range_partition_plan(_docs(spark, sf_dir), n_bins=8)
+    return range_partition_plan(_docs(spark, sf_dir))
 
 
 def q_page_zorder(spark, sf_dir):
@@ -294,7 +291,7 @@ def q_page_zorder(spark, sf_dir):
     writes + range_partition_plan."""
     from openaip_yaixm_to_geojson_spark.operators.spatial import page_zorder
 
-    return page_zorder(pages_from_documents(spark, sf_dir), res=12)
+    return page_zorder(pages_from_documents(spark, sf_dir))
 
 
 def q_salt_plan(spark, sf_dir):
@@ -314,7 +311,7 @@ def q_knn_k(spark, sf_dir):
     from openaip_yaixm_to_geojson_spark.operators.knn import knn_k
 
     pages = pages_from_documents(spark, sf_dir)
-    return knn_k(pages, fixture_polygons(), k=3)
+    return knn_k(pages, fixture_polygons())
 
 
 def q_knn_table_k(spark, sf_dir):
@@ -324,7 +321,7 @@ def q_knn_table_k(spark, sf_dir):
     from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df
 
     pages = pages_from_documents(spark, sf_dir)
-    return knn_k(pages, polygons_to_df(spark, fixture_polygons()), k=3)
+    return knn_k(pages, polygons_to_df(spark, fixture_polygons()))
 
 
 def q_knn_edge_k(spark, sf_dir):
@@ -334,7 +331,7 @@ def q_knn_edge_k(spark, sf_dir):
     from openaip_yaixm_to_geojson_spark.operators.knn import knn_edge_k
 
     pages = pages_from_documents(spark, sf_dir)
-    return knn_edge_k(pages, fixture_polygons(), k=3)
+    return knn_edge_k(pages, fixture_polygons())
 
 
 def q_tile_nearest_airspace(spark, sf_dir):
@@ -356,27 +353,27 @@ def q_knn_edge_table_k(spark, sf_dir):
     from openaip_yaixm_to_geojson_spark.operators.spatial import polygons_to_df
 
     pages = pages_from_documents(spark, sf_dir)
-    return knn_edge_k(pages, polygons_to_df(spark, fixture_polygons()), k=3)
+    return knn_edge_k(pages, polygons_to_df(spark, fixture_polygons()))
 
 
 def q_tile_doc_counts(spark, sf_dir):
     pages = pages_from_documents(spark, sf_dir)
-    return tile_doc_counts(pages, DEFAULT_TILE_RES)
+    return tile_doc_counts(pages)
 
 
 def q_tile_zoom_rollup(spark, sf_dir):
-    """Zoom-pyramid step: res-8 tile table re-aggregated 2 levels up by id
-    arithmetic only (no fact rescan)."""
+    """Zoom-pyramid step: res-8 tile table re-aggregated ZOOM_LEVELS up by
+    id arithmetic only (no fact rescan)."""
     from openaip_yaixm_to_geojson_spark.operators.tiles import tile_zoom_rollup
 
     pages = pages_from_documents(spark, sf_dir)
-    tiles = tile_doc_counts(pages, DEFAULT_TILE_RES).drop("n_langs")
-    return tile_zoom_rollup(tiles, levels=2)
+    tiles = tile_doc_counts(pages).drop("n_langs")
+    return tile_zoom_rollup(tiles)
 
 
 def q_tile_class_rollup(spark, sf_dir):
     pages = pages_from_documents(spark, sf_dir)
-    return tile_class_rollup(spatial_join(pages, fixture_polygons()), DEFAULT_TILE_RES)
+    return tile_class_rollup(spatial_join(pages, fixture_polygons()))
 
 
 def q_tile_unmatched_counts(spark, sf_dir):
@@ -385,7 +382,7 @@ def q_tile_unmatched_counts(spark, sf_dir):
     from openaip_yaixm_to_geojson_spark.operators.tiles import tile_unmatched_counts
 
     pages = pages_from_documents(spark, sf_dir)
-    return tile_unmatched_counts(pages, spatial_join(pages, fixture_polygons()), DEFAULT_TILE_RES)
+    return tile_unmatched_counts(pages, spatial_join(pages, fixture_polygons()))
 
 
 def q_tile_mode_class(spark, sf_dir):
@@ -395,7 +392,7 @@ def q_tile_mode_class(spark, sf_dir):
     from openaip_yaixm_to_geojson_spark.operators.tiles import tile_mode_class
 
     pages = pages_from_documents(spark, sf_dir)
-    return tile_mode_class(spatial_join(pages, fixture_polygons()), DEFAULT_TILE_RES)
+    return tile_mode_class(spatial_join(pages, fixture_polygons()))
 
 
 def q_text_passthrough(spark, sf_dir):
@@ -792,7 +789,7 @@ def q_minhash_signatures(spark, sf_dir):
 
 
 def q_minhash_lsh_pairs(spark, sf_dir):
-    return minhash_lsh_pairs(_docs(spark, sf_dir), jaccard_threshold=0.5)
+    return minhash_lsh_pairs(_docs(spark, sf_dir))
 
 
 def q_ngram_jaccard_pairs(spark, sf_dir):
@@ -800,7 +797,7 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
     block key (shingle-count bucket of 8 — the oracle mirrors it)."""
     from openaip_yaixm_to_geojson_spark.operators.dedup import ngram_jaccard_pairs
 
-    return ngram_jaccard_pairs(_docs(spark, sf_dir), threshold=0.3)
+    return ngram_jaccard_pairs(_docs(spark, sf_dir))
 
 
 
@@ -874,7 +871,7 @@ def q_dedup_clusters(spark, sf_dir):
     from openaip_yaixm_to_geojson_spark.operators.dedup import duplicate_clusters
 
     docs = _docs(spark, sf_dir)
-    return duplicate_clusters(minhash_lsh_pairs(docs, jaccard_threshold=0.5), documents=docs)
+    return duplicate_clusters(minhash_lsh_pairs(docs), documents=docs)
 
 
 def q_dedup_keep_best(spark, sf_dir):
@@ -1037,7 +1034,7 @@ def q_dedup_clusters_star(spark, sf_dir):
 
     docs = _docs(spark, sf_dir)
     return duplicate_clusters_star(
-        minhash_lsh_pairs(docs, jaccard_threshold=0.5), documents=docs
+        minhash_lsh_pairs(docs), documents=docs
     )
 
 
@@ -1109,17 +1106,17 @@ def q_label_centroid_distances(spark, sf_dir):
 
 
 def q_kmeans_assign(spark, sf_dir):
-    """One Lloyd iteration: nearest-of-8-seeds assignment (left-fold
+    """One Lloyd iteration: nearest-of-KMEANS_K-seeds assignment (left-fold
     double distance, the ann convention) + fixed-point-exact per-cluster
     per-dimension centroid update, fully hash-gated."""
     from openaip_yaixm_to_geojson_spark.operators.similarity import kmeans_assign
 
-    return kmeans_assign(_emb(spark, sf_dir), k=8)
+    return kmeans_assign(_emb(spark, sf_dir))
 
 
 def q_ann_topk(spark, sf_dir):
     emb = _emb(spark, sf_dir)
-    return cosine_topk(emb, queries_from_embeddings(emb, n=5), k=3)
+    return cosine_topk(emb, queries_from_embeddings(emb))
 
 
 def q_ann_lsh(spark, sf_dir):
@@ -1128,7 +1125,7 @@ def q_ann_lsh(spark, sf_dir):
     multiprobe + re-rank are mechanical SQL); recall vs exact is measured
     separately in tests/test_pipeline_ops.py."""
     emb = _emb(spark, sf_dir)
-    return lsh_ann_topk(emb, queries_from_embeddings(emb, n=5), k=3, n_planes=2, dim=64)
+    return lsh_ann_topk(emb, queries_from_embeddings(emb), dim=EMBED_DIM)
 
 
 def q_ann_ivf(spark, sf_dir):
@@ -1137,22 +1134,18 @@ def q_ann_ivf(spark, sf_dir):
     from openaip_yaixm_to_geojson_spark.operators.similarity import ivf_ann_topk
 
     emb = _emb(spark, sf_dir)
-    return ivf_ann_topk(
-        emb, queries_from_embeddings(emb, n=5), k=3, n_centroids=16, n_probes=4, dim=64
-    )
+    return ivf_ann_topk(emb, queries_from_embeddings(emb), dim=EMBED_DIM)
 
 
 def q_embedding_neardup(spark, sf_dir):
-    return embedding_neardup_pairs(_emb(spark, sf_dir), cosine_threshold=0.4, exact_all_pairs=True)
+    return embedding_neardup_pairs(_emb(spark, sf_dir), exact_all_pairs=True)
 
 
 def q_embedding_neardup_lsh(spark, sf_dir):
     """The 100-TB mode of near-dup: candidates bucketed by hyperplane LSH
     instead of the O(n^2) all-pairs join; graded against a DuckDB oracle
     that recomputes the (deterministic) buckets."""
-    return embedding_neardup_pairs(
-        _emb(spark, sf_dir), cosine_threshold=0.4, exact_all_pairs=False, n_planes=4, dim=64
-    )
+    return embedding_neardup_pairs(_emb(spark, sf_dir), dim=EMBED_DIM)
 
 
 def q_langid(spark, sf_dir):
@@ -1184,9 +1177,9 @@ def q_fingerprint(spark, sf_dir):
 
 
 def q_sample(spark, sf_dir):
-    from openaip_yaixm_to_geojson_spark.operators.text import deterministic_sample
+    from openaip_yaixm_to_geojson_spark.operators.text import QUERY_SAMPLE_FRACTION, deterministic_sample
 
-    return deterministic_sample(_docs(spark, sf_dir), 0.25).select("doc_id", "lang")
+    return deterministic_sample(_docs(spark, sf_dir), QUERY_SAMPLE_FRACTION).select("doc_id", "lang")
 
 
 def q_corpus_clean(spark, sf_dir):
@@ -1361,7 +1354,7 @@ def q_tile_xyz_export(spark, sf_dir):
     oracle derives ytile independently via boundary-latitude intervals."""
     from openaip_yaixm_to_geojson_spark.operators.tiles import tile_xyz_export
 
-    return tile_xyz_export(pages_from_documents(spark, sf_dir), z=11)
+    return tile_xyz_export(pages_from_documents(spark, sf_dir))
 
 
 def q_tile_vector_export(spark, sf_dir):
@@ -1402,7 +1395,7 @@ def q_host_cap(spark, sf_dir):
     md5(url) order (parallelism-independent, unlike arrival order)."""
     from openaip_yaixm_to_geojson_spark.operators.web import host_cap
 
-    return host_cap(pages_from_documents(spark, sf_dir), cap=3)
+    return host_cap(pages_from_documents(spark, sf_dir))
 
 
 def q_ngram_repetition(spark, sf_dir):
@@ -1411,7 +1404,7 @@ def q_ngram_repetition(spark, sf_dir):
     quadratic array scans)."""
     from openaip_yaixm_to_geojson_spark.operators.text import ngram_repetition
 
-    return ngram_repetition(_docs(spark, sf_dir), n=2)
+    return ngram_repetition(_docs(spark, sf_dir))
 
 
 def q_ngram_repetition_local(spark, sf_dir):
@@ -1419,7 +1412,7 @@ def q_ngram_repetition_local(spark, sf_dir):
     zero Exchange in the plan) — same rows, same oracle."""
     from openaip_yaixm_to_geojson_spark.operators.text import ngram_repetition_local
 
-    return ngram_repetition_local(_docs(spark, sf_dir), n=2)
+    return ngram_repetition_local(_docs(spark, sf_dir))
 
 
 def q_contamination(spark, sf_dir):
@@ -1429,7 +1422,7 @@ def q_contamination(spark, sf_dir):
     from openaip_yaixm_to_geojson_spark.operators.text import contamination
 
     docs = _docs(spark, sf_dir)
-    return contamination(docs, docs.where(F.col("doc_id") % 101 == 0), n=8)
+    return contamination(docs, docs.where(F.col("doc_id") % 101 == 0))
 
 
 def q_geohash_counts(spark, sf_dir):
@@ -1438,7 +1431,7 @@ def q_geohash_counts(spark, sf_dir):
     from openaip_yaixm_to_geojson_spark.operators.tiles import geohash_counts
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
 
-    return geohash_counts(pages_from_documents(spark, sf_dir), precision=5)
+    return geohash_counts(pages_from_documents(spark, sf_dir))
 
 
 def q_geohash_pyramid(spark, sf_dir):
@@ -1491,7 +1484,7 @@ def q_bloom_contamination(spark, sf_dir):
     from openaip_yaixm_to_geojson_spark.operators.text import bloom_contamination
 
     docs = _docs(spark, sf_dir)
-    return bloom_contamination(docs, docs.where(F.col("doc_id") % 101 == 0), n=8)
+    return bloom_contamination(docs, docs.where(F.col("doc_id") % 101 == 0))
 
 
 def q_multimodal_features(spark, sf_dir):
@@ -1566,12 +1559,12 @@ def q_warc_read(spark, sf_dir):
     — the gzip + header round-trip is hash-gated."""
     import tempfile
 
-    from openaip_yaixm_to_geojson_spark.sources.warc import read_warc, write_warc_dir
+    from openaip_yaixm_to_geojson_spark.sources.warc import WARC_FILES, WARC_RECORDS_PER_FILE, read_warc, write_warc_dir
 
     d = _WARC_DIR.get("dir")
     if d is None:
         d = tempfile.mkdtemp(prefix="gate_warc_")
-        write_warc_dir(d, n_files=6, records_per_file=50)
+        write_warc_dir(d, n_files=WARC_FILES, records_per_file=WARC_RECORDS_PER_FILE)
         _WARC_DIR["dir"] = d
     out = read_warc(spark, d)
     return out.select(
@@ -1589,12 +1582,13 @@ def q_multimodal_gif_features(spark, sf_dir):
     a second real compression algorithm beside PNG's DEFLATE. Pixels are
     the md5 chain, so the decode round-trip is hash-gated."""
     from openaip_yaixm_to_geojson_spark.operators.multimodal import (
+        CODEC_MEDIA_ROWS,
         extract_features,
         real_media_features,
         synth_media_gif,
     )
 
-    media = synth_media_gif(spark, 300)
+    media = synth_media_gif(spark, CODEC_MEDIA_ROWS)
     feats = extract_features(media, decoder=real_media_features)
     return feats.select(
         "media_id",
@@ -1611,12 +1605,13 @@ def q_multimodal_jpeg_features(spark, sf_dir):
     value is a closed-form integer the oracle recomputes exactly; the
     env-blocked slot narrows to MP3/MP4."""
     from openaip_yaixm_to_geojson_spark.operators.multimodal import (
+        CODEC_MEDIA_ROWS,
         extract_features,
         real_media_features,
         synth_media_jpeg,
     )
 
-    media = synth_media_jpeg(spark, 300)
+    media = synth_media_jpeg(spark, CODEC_MEDIA_ROWS)
     feats = extract_features(media, decoder=real_media_features)
     return feats.select(
         "media_id",
@@ -1632,12 +1627,13 @@ def q_multimodal_png_features(spark, sf_dir):
     recomputes the statistics exactly — the zlib round-trip is hash-gated.
     JPEG/MP3/MP4 (DCT/psychoacoustic codecs) remain env-blocked."""
     from openaip_yaixm_to_geojson_spark.operators.multimodal import (
+        CODEC_MEDIA_ROWS,
         extract_features,
         real_media_features,
         synth_media_png,
     )
 
-    media = synth_media_png(spark, 300)
+    media = synth_media_png(spark, CODEC_MEDIA_ROWS)
     feats = extract_features(media, decoder=real_media_features)
     return feats.select(
         "media_id",
@@ -1693,11 +1689,11 @@ def q_sample_complement(spark, sf_dir):
     """Set-op coverage: documents EXCEPT the deterministic sample. The
     oracle recomputes the complement as a direct predicate, so the EXCEPT
     path is verified against independent logic."""
-    from openaip_yaixm_to_geojson_spark.operators.text import deterministic_sample
+    from openaip_yaixm_to_geojson_spark.operators.text import QUERY_SAMPLE_FRACTION, deterministic_sample
 
     docs = _docs(spark, sf_dir)
     return docs.select("doc_id").exceptAll(
-        deterministic_sample(docs, fraction=0.25).select("doc_id")
+        deterministic_sample(docs, QUERY_SAMPLE_FRACTION).select("doc_id")
     )
 
 
@@ -1712,7 +1708,7 @@ def q_pagerank(spark, sf_dir):
     )
 
     docs = _docs(spark, sf_dir)
-    return pagerank_int(docs, synth_link_graph(docs), iters=3)
+    return pagerank_int(docs, synth_link_graph(docs))
 
 
 def q_multimodal_frames(spark, sf_dir):
@@ -1725,7 +1721,7 @@ def q_multimodal_frames(spark, sf_dir):
         synth_media,
     )
 
-    return sample_frames(synth_media(spark, 500), every_k=4)
+    return sample_frames(synth_media(spark, 500))
 
 
 def q_inverted_index(spark, sf_dir):
@@ -1763,7 +1759,7 @@ def q_tfidf_topk(spark, sf_dir):
     corpus-count joins, WindowGroupLimit top-k."""
     from openaip_yaixm_to_geojson_spark.operators.terms import tfidf_topk
 
-    return tfidf_topk(_docs(spark, sf_dir), k=3)
+    return tfidf_topk(_docs(spark, sf_dir))
 
 
 def q_kmv_distinct(spark, sf_dir):
@@ -1772,7 +1768,7 @@ def q_kmv_distinct(spark, sf_dir):
     against the oracle's identical estimator, not just sanity-checked)."""
     from openaip_yaixm_to_geojson_spark.operators.terms import kmv_distinct
 
-    return kmv_distinct(_docs(spark, sf_dir), k=16)
+    return kmv_distinct(_docs(spark, sf_dir))
 
 
 def q_hll_union(spark, sf_dir):
@@ -1801,7 +1797,7 @@ def q_bigram_pmi(spark, sf_dir):
     broadcast unigram joins + TakeOrdered top-N."""
     from openaip_yaixm_to_geojson_spark.operators.terms import bigram_pmi
 
-    return bigram_pmi(_docs(spark, sf_dir), top=20)
+    return bigram_pmi(_docs(spark, sf_dir))
 
 
 def q_token_rarity(spark, sf_dir):
@@ -1817,20 +1813,20 @@ def q_inverted_index_capped(spark, sf_dir):
     the exact doc_freq but route AROUND the postings collect (NULL
     postings) — no reducer ever builds a corpus-sized array. The oracle
     recomputes the cap as a CASE over the uncapped postings."""
-    from openaip_yaixm_to_geojson_spark.operators.terms import inverted_index
+    from openaip_yaixm_to_geojson_spark.operators.terms import INVERTED_INDEX_DF_CAP, inverted_index
 
-    return inverted_index(_docs(spark, sf_dir), df_cap=300)
+    return inverted_index(_docs(spark, sf_dir), df_cap=INVERTED_INDEX_DF_CAP)
 
 
 def q_stratified_sample(spark, sf_dir):
-    """Exact per-language quota sample (40/stratum) via banded rank
-    selection — the bulk of each stratum is kept/dropped by a pure hash
-    filter, only the O(quota) boundary band is ranked; the oracle
+    """Exact per-language quota sample (STRATIFIED_QUOTA/stratum) via
+    banded rank selection — the bulk of each stratum is kept/dropped by a
+    pure hash filter, only the O(quota) boundary band is ranked; the oracle
     recomputes the identical set with a full rank, so the banded scale
     path is verified against the straightforward definition."""
     from openaip_yaixm_to_geojson_spark.operators.text import stratified_sample
 
-    return stratified_sample(_docs(spark, sf_dir), quota=40)
+    return stratified_sample(_docs(spark, sf_dir))
 
 
 def q_corpus_cube(spark, sf_dir):
@@ -1907,9 +1903,9 @@ def q_ann_topk_quantized(spark, sf_dir):
     """Compressed-domain retrieval: top-k by the exact BIGINT dot of
     int8 codes — the quantized serving path, hash-gated with no float
     determinism rules at all."""
-    from openaip_yaixm_to_geojson_spark.operators.similarity import ann_topk_quantized
+    from openaip_yaixm_to_geojson_spark.operators.similarity import ANN_K, ann_topk_quantized
 
-    return ann_topk_quantized(_emb(spark, sf_dir))
+    return ann_topk_quantized(_emb(spark, sf_dir), ANN_K)
 
 
 def q_ann_two_stage(spark, sf_dir):
@@ -1973,9 +1969,9 @@ def q_events_sliding_windows(spark, sf_dir):
 def q_lang_p90_chars(spark, sf_dir):
     """Exact per-language p90 document length (rank-selected element,
     integer rational p — generalizes the median order statistic)."""
-    from openaip_yaixm_to_geojson_spark.operators.text import lang_percentile_chars
+    from openaip_yaixm_to_geojson_spark.operators.text import P90_DEN, P90_NUM, lang_percentile_chars
 
-    return lang_percentile_chars(_docs(spark, sf_dir), p_num=9, p_den=10)
+    return lang_percentile_chars(_docs(spark, sf_dir), P90_NUM, P90_DEN)
 
 
 def q_mixture_allocate(spark, sf_dir):
@@ -1991,7 +1987,7 @@ def q_countmin_heavy_hitters(spark, sf_dir):
     md5-salted counters, estimate >= exact pinned by pytest."""
     from openaip_yaixm_to_geojson_spark.operators.terms import countmin_heavy_hitters
 
-    return countmin_heavy_hitters(_docs(spark, sf_dir), k=20)
+    return countmin_heavy_hitters(_docs(spark, sf_dir))
 
 
 def q_length_quartiles(spark, sf_dir):
@@ -2040,7 +2036,7 @@ def q_sampled_p90_chars(spark, sf_dir):
     deterministic md5-bucket sample — sketch accuracy, hash-gateable."""
     from openaip_yaixm_to_geojson_spark.operators.text import sampled_percentile_chars
 
-    return sampled_percentile_chars(_docs(spark, sf_dir), fraction=0.25, p_num=9, p_den=10)
+    return sampled_percentile_chars(_docs(spark, sf_dir))
 
 
 def q_chars_histogram(spark, sf_dir):
@@ -2048,7 +2044,7 @@ def q_chars_histogram(spark, sf_dir):
     (div), one map-side-partial shuffle."""
     from openaip_yaixm_to_geojson_spark.operators.relational import chars_histogram
 
-    return chars_histogram(_docs(spark, sf_dir), width=32)
+    return chars_histogram(_docs(spark, sf_dir))
 
 
 
@@ -2272,9 +2268,9 @@ def q_chunk_documents(spark, sf_dir):
     """Context-window chunking with overlap (size 32, stride 24): zero
     shuffles, token array carried through the Generate so the tokenizer
     runs once per document, never per chunk."""
-    from openaip_yaixm_to_geojson_spark.operators.text import chunk_documents
+    from openaip_yaixm_to_geojson_spark.operators.text import QUERY_CHUNK_SIZE, QUERY_CHUNK_STRIDE, chunk_documents
 
-    return chunk_documents(_docs(spark, sf_dir), size=32, stride=24)
+    return chunk_documents(_docs(spark, sf_dir), QUERY_CHUNK_SIZE, QUERY_CHUNK_STRIDE)
 
 
 def q_pack_documents(spark, sf_dir):
@@ -2283,7 +2279,7 @@ def q_pack_documents(spark, sf_dir):
     md5-hash concatenation order, integer-exact offsets."""
     from openaip_yaixm_to_geojson_spark.operators.text import pack_documents
 
-    return pack_documents(_docs(spark, sf_dir), capacity=512, n_streams=8)
+    return pack_documents(_docs(spark, sf_dir))
 
 
 def q_length_winsorize(spark, sf_dir):
@@ -2311,12 +2307,9 @@ def q_bm25_topk(spark, sf_dir):
     single-rounded IEEE op from exact integers; the score formula is ONE
     shared SQL string parsed by both engines). Query-term filter before
     any shuffle; broadcast df/stats; WindowGroupLimit top-k."""
-    from openaip_yaixm_to_geojson_spark.operators.terms import (
-        BM25_DEFAULT_QUERY,
-        bm25_topk,
-    )
+    from openaip_yaixm_to_geojson_spark.operators.terms import bm25_topk
 
-    return bm25_topk(_docs(spark, sf_dir), query_terms=BM25_DEFAULT_QUERY, k=20)
+    return bm25_topk(_docs(spark, sf_dir))
 
 
 _PIPELINE_CKPT: dict[str, str] = {}
@@ -2355,7 +2348,7 @@ def q_pipeline_chunks(spark, sf_dir):
 
 def q_pipeline_packed(spark, sf_dir):
     """Corpus-pipeline PACKED export stage: fixed-capacity token-stream
-    windows (PACK_CAPACITY, PACK_STREAMS in plans/pipeline.py) over the
+    windows (PACK_CAPACITY, PACK_STREAMS in operators/text.py) over the
     stored corpus stage."""
     return _pipeline_stage(spark, sf_dir, "packed").select(
         "key", "stream", "tok_offset", "n_tokens", "window_id"
@@ -2587,6 +2580,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
+    from openaip_yaixm_to_geojson_spark.operators.terms import INVERTED_INDEX_DF_CAP
+
     return {
         "page_cells": oracle.sql_page_cells(),
         "spatial_join": oracle.sql_spatial_join(),
@@ -2605,18 +2600,18 @@ def oracle_sql() -> dict[str, str]:
         "polygon_overlap_table": oracle.sql_polygon_overlap_pairs(),
         "knn": oracle.sql_knn(),
         "knn_table": oracle.sql_knn(),
-        "knn_points": oracle.sql_knn_points(k=8, query_mod=7),
-        "geo_cluster_cells": oracle.sql_geo_cluster_cells(res=7, min_pts=2),
+        "knn_points": oracle.sql_knn_points(),
+        "geo_cluster_cells": oracle.sql_geo_cluster_cells(),
         "knn_bruteforce": oracle.sql_knn(),
         "knn_edge": oracle.sql_knn_edge(),
         "knn_edge_table": oracle.sql_knn_edge(),
         "salt_plan": oracle.sql_salt_plan(),
-        "range_partition_plan": oracle.sql_range_partition_plan(n_bins=8),
-        "page_zorder": oracle.sql_page_zorder(res=12),
-        "knn_k": oracle.sql_knn_k(k=3),
-        "knn_table_k": oracle.sql_knn_k(k=3),
-        "knn_edge_k": oracle.sql_knn_edge_k(k=3),
-        "knn_edge_table_k": oracle.sql_knn_edge_k(k=3),
+        "range_partition_plan": oracle.sql_range_partition_plan(),
+        "page_zorder": oracle.sql_page_zorder(),
+        "knn_k": oracle.sql_knn_k(),
+        "knn_table_k": oracle.sql_knn_k(),
+        "knn_edge_k": oracle.sql_knn_edge_k(),
+        "knn_edge_table_k": oracle.sql_knn_edge_k(),
         "tile_doc_counts": oracle.sql_tile_doc_counts(),
         "tile_nearest_airspace": oracle.sql_tile_nearest_airspace(),
         "tile_class_rollup": oracle.sql_tile_class_rollup(),
@@ -2686,12 +2681,12 @@ def oracle_sql() -> dict[str, str]:
         "simhash_pairs": oracle.sql_simhash_pairs(),
         "ann_topk": oracle.sql_ann_topk(),
         "ann_topk_filtered": oracle.sql_ann_topk_filtered(),
-        "kmeans_assign": oracle.sql_kmeans_assign(k=8),
+        "kmeans_assign": oracle.sql_kmeans_assign(),
         "label_centroid_distances": oracle.sql_label_centroid_distances(),
-        "ann_lsh": oracle.sql_ann_lsh(n_planes=2),
+        "ann_lsh": oracle.sql_ann_lsh(),
         "ann_ivf": oracle.sql_ann_ivf(),
-        "embedding_neardup": oracle.sql_embedding_neardup(threshold=0.4),
-        "embedding_neardup_lsh": oracle.sql_embedding_neardup_lsh(threshold=0.4, n_planes=4),
+        "embedding_neardup": oracle.sql_embedding_neardup(),
+        "embedding_neardup_lsh": oracle.sql_embedding_neardup_lsh(),
         "langid": oracle.sql_langid(),
         "quality": oracle.sql_quality(),
         "quality_funnel": oracle.sql_quality_funnel(),
@@ -2728,10 +2723,10 @@ def oracle_sql() -> dict[str, str]:
         "link_pagerank": oracle.sql_link_pagerank(),
         "multimodal_features": oracle.sql_multimodal_features(),
         "multimodal_real_features": oracle.sql_multimodal_real_features(),
-        "multimodal_png_features": oracle.sql_multimodal_png_features(n=300),
-        "multimodal_gif_features": oracle.sql_multimodal_gif_features(n=300),
-        "multimodal_jpeg_features": oracle.sql_multimodal_jpeg_features(n=300),
-        "warc_read": oracle.sql_warc_read(n_files=6, records_per_file=50),
+        "multimodal_png_features": oracle.sql_multimodal_png_features(),
+        "multimodal_gif_features": oracle.sql_multimodal_gif_features(),
+        "multimodal_jpeg_features": oracle.sql_multimodal_jpeg_features(),
+        "warc_read": oracle.sql_warc_read(),
         "robots_filter": oracle.sql_robots_filter(),
         "image_patches": oracle.sql_image_patches(),
         "audio_frames": oracle.sql_audio_frames(),
@@ -2740,20 +2735,20 @@ def oracle_sql() -> dict[str, str]:
         "lang_median_chars": oracle.sql_lang_median_chars(),
         "sample_complement": oracle.sql_sample_complement(),
         "inverted_index": oracle.sql_inverted_index(),
-        "tfidf_topk": oracle.sql_tfidf_topk(k=3),
+        "tfidf_topk": oracle.sql_tfidf_topk(),
         "repeated_grams": oracle.sql_repeated_grams(),
         "duplicated_span_stats": oracle.sql_duplicated_span_stats(),
-        "kmv_distinct": oracle.sql_kmv_distinct(k=16),
+        "kmv_distinct": oracle.sql_kmv_distinct(),
         "hll_distinct": oracle.sql_hll_distinct(),
         "hll_union": oracle.sql_hll_union(),
-        "bigram_pmi": oracle.sql_bigram_pmi(top=20),
+        "bigram_pmi": oracle.sql_bigram_pmi(),
         "token_rarity": oracle.sql_token_rarity(),
-        "inverted_index_capped": oracle.sql_inverted_index(df_cap=300),
-        "stratified_sample": oracle.sql_stratified_sample(quota=40),
+        "inverted_index_capped": oracle.sql_inverted_index(df_cap=INVERTED_INDEX_DF_CAP),
+        "stratified_sample": oracle.sql_stratified_sample(),
         "corpus_cube": oracle.sql_corpus_cube(),
-        "chunk_documents": oracle.sql_chunk_documents(size=32, stride=24),
-        "pack_documents": oracle.sql_pack_documents(capacity=512, n_streams=8),
-        "bm25_topk": oracle.sql_bm25_topk(query_terms=("spark", "join", "window"), k=20),
+        "chunk_documents": oracle.sql_chunk_documents(),
+        "pack_documents": oracle.sql_pack_documents(),
+        "bm25_topk": oracle.sql_bm25_topk(),
         "length_winsorize": oracle.sql_length_winsorize(),
         "source_diversity": oracle.sql_source_diversity(),
         "pipeline_corpus_stats": oracle.sql_pipeline_corpus_stats(),
@@ -2784,10 +2779,10 @@ def oracle_sql() -> dict[str, str]:
         "events_anomaly": oracle.sql_events_anomaly(),
         "events_time_pyramid": oracle.sql_events_time_pyramid(),
         "session_paths": oracle.sql_session_paths(),
-        "chars_histogram": oracle.sql_chars_histogram(width=32),
-        "lang_p90_chars": oracle.sql_lang_percentile_chars(p_num=9, p_den=10),
+        "chars_histogram": oracle.sql_chars_histogram(),
+        "lang_p90_chars": oracle.sql_lang_percentile_chars(),
         "pii_scrub": oracle.sql_pii_scrub(),
-        "sampled_p90_chars": oracle.sql_sampled_percentile_chars(fraction=0.25, p_num=9, p_den=10),
+        "sampled_p90_chars": oracle.sql_sampled_percentile_chars(),
         "mixture_allocate": oracle.sql_mixture_allocate(),
         "length_quartiles": oracle.sql_length_quartiles(),
         "countmin_heavy_hitters": oracle.sql_countmin_heavy_hitters(),

@@ -152,16 +152,16 @@ def main() -> None:
     timed("text_analyze", lambda: analyze_documents(docs).select(F.max("n_tokens_bpe")).count())
     timed(
         "ann_topk",
-        lambda: cosine_topk(emb, queries_from_embeddings(emb, n=5), k=3).count(),
+        lambda: cosine_topk(emb, queries_from_embeddings(emb)).count(),
     )
-    from openaip_yaixm_to_geojson_spark.operators.similarity import ann_topk_quantized
+    from openaip_yaixm_to_geojson_spark.operators.similarity import ANN_K, ann_topk_quantized
 
-    timed("ann_topk_quantized", lambda: ann_topk_quantized(emb).count())
+    timed("ann_topk_quantized", lambda: ann_topk_quantized(emb, ANN_K).count())
 
     from openaip_yaixm_to_geojson_spark.operators.events import asof_join
     from openaip_yaixm_to_geojson_spark.operators.tiles import tile_xyz_export
 
-    timed("tile_xyz", lambda: tile_xyz_export(pages, z=11).count())
+    timed("tile_xyz", lambda: tile_xyz_export(pages).count())
     ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
     clicks = ev.where(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     views = ev.where(F.col("event_type") == "view").select("user_id", "ts", "event_id", "value")
@@ -170,10 +170,10 @@ def main() -> None:
     from openaip_yaixm_to_geojson_spark.operators.terms import tfidf_topk
     from openaip_yaixm_to_geojson_spark.operators.text import stratified_sample
 
-    timed("tfidf_topk", lambda: tfidf_topk(docs, k=3).count())
+    timed("tfidf_topk", lambda: tfidf_topk(docs).count())
     timed(
         "stratified_sample",
-        lambda: stratified_sample(docs, quota=40, group_col="lang").count(),
+        lambda: stratified_sample(docs).count(),
     )
 
     from openaip_yaixm_to_geojson_spark.operators.events import events_funnel
@@ -194,7 +194,7 @@ def main() -> None:
     timed("repeated_grams", lambda: repeated_grams(docs).count())
     timed(
         "pack_documents",
-        lambda: pack_documents(docs, capacity=512, n_streams=8).count(),
+        lambda: pack_documents(docs).count(),
     )
 
     from openaip_yaixm_to_geojson_spark.operators.text import bloom_contamination
@@ -226,7 +226,7 @@ def main() -> None:
     from openaip_yaixm_to_geojson_spark.operators.terms import bm25_topk
     from openaip_yaixm_to_geojson_spark.operators.tiles import tile_nearest_airspace
 
-    timed("bm25_topk", lambda: bm25_topk(docs, k=20).count())
+    timed("bm25_topk", lambda: bm25_topk(docs).count())
     timed("tile_nearest_airspace", lambda: tile_nearest_airspace(pages, polys).count())
 
     from openaip_yaixm_to_geojson_spark.operators.terms import (

@@ -41,6 +41,7 @@ def suite(spark: SparkSession, sf_dir: str) -> dict[str, Callable[[], DataFrame]
     )
     from openaip_yaixm_to_geojson_spark.operators.relational import corpus_cube, pareto_frontier
     from openaip_yaixm_to_geojson_spark.operators.similarity import (
+        ANN_K,
         ann_topk_quantized,
         cosine_topk,
         queries_from_embeddings,
@@ -89,17 +90,17 @@ def suite(spark: SparkSession, sf_dir: str) -> dict[str, Callable[[], DataFrame]
         "simhash": lambda: docs.select(simhash16(F.col("text"))),
         "simhash64": lambda: docs.select(simhash64(F.col("text"))),
         "text_analyze": lambda: analyze_documents(docs).select(F.max("n_tokens_bpe")),
-        "ann_topk": lambda: cosine_topk(emb, queries_from_embeddings(emb, n=5), k=3),
-        "ann_topk_quantized": lambda: ann_topk_quantized(emb),
-        "tile_xyz": lambda: tile_xyz_export(pages, z=11),
+        "ann_topk": lambda: cosine_topk(emb, queries_from_embeddings(emb)),
+        "ann_topk_quantized": lambda: ann_topk_quantized(emb, ANN_K),
+        "tile_xyz": lambda: tile_xyz_export(pages),
         "events_asof": lambda: asof_join(clicks, views),
-        "tfidf_topk": lambda: tfidf_topk(docs, k=3),
-        "stratified_sample": lambda: stratified_sample(docs, quota=40, group_col="lang"),
+        "tfidf_topk": lambda: tfidf_topk(docs),
+        "stratified_sample": lambda: stratified_sample(docs),
         "events_funnel": lambda: events_funnel(ev),
         "triangle_count": lambda: triangle_count(synth_link_graph(docs)),
         "corpus_cube": lambda: corpus_cube(docs),
         "repeated_grams": lambda: repeated_grams(docs),
-        "pack_documents": lambda: pack_documents(docs, capacity=512, n_streams=8),
+        "pack_documents": lambda: pack_documents(docs),
         "bloom_contamination": lambda: bloom_contamination(
             docs, docs.where(F.col("doc_id") % 101 == 0)
         ),
@@ -110,7 +111,7 @@ def suite(spark: SparkSession, sf_dir: str) -> dict[str, Callable[[], DataFrame]
         "edit_distance_pairs": lambda: edit_distance_pairs(docs),
         "pareto_frontier": lambda: pareto_frontier(docs),
         "containment_pairs": lambda: containment_pairs(docs),
-        "bm25_topk": lambda: bm25_topk(docs, k=20),
+        "bm25_topk": lambda: bm25_topk(docs),
         "tile_nearest_airspace": lambda: tile_nearest_airspace(pages, polys),
         "charlm_surprisal": lambda: charlm_surprisal(docs),
         "bpe_phrase_merge": lambda: bpe_phrase_merge(docs),

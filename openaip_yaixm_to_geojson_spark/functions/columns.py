@@ -1,4 +1,5 @@
-"""Relational column expressions for the airspace conversion.
+"""Relational column expressions for the airspace conversion, plus the
+md5-prefix hash the corpus operators share.
 
 Everything in this module is built-in `pyspark.sql.functions` only — it all
 stays inside whole-stage codegen. Reference parity notes cite
@@ -15,6 +16,12 @@ REGEX_CEILING_SURFACE = r"^(SFC)$"
 REGEX_CEILING_FEET = r"^(\d+(\.\d+)?)\s*(ft|FT)?\s*(SFC)?$"
 REGEX_CEILING_FLIGHT_LEVEL = r"^FL\s*(\d{2,})?$"
 REGEX_COORDINATES = r"^[0-9]{6}[NS]\s+[0-9]{7}[EW]$"
+
+
+def md5_prefix_int(x: Column | str) -> Column:
+    """BIGINT value of the first 8 hex chars of md5(x): the engine twin of
+    the oracle's `_hex8_sql`."""
+    return F.conv(F.substring(F.md5(x), 1, 8), 16, 10).cast("bigint")
 
 
 def airspace_name(name: Column, seq: Column) -> Column:

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
+from ..functions.columns import md5_prefix_int
 from ..plans.fanout import fan_out
 
 
@@ -59,6 +60,8 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 
 MINHASH_P = 2_147_483_647  # 2^31 - 1: keeps a*x + b < 2^62 under ANSI mode
 MINHASH_NUM_HASHES = 16  # signature length; the LSH bands split it evenly
+MINHASH_JACCARD = 0.5  # pairs at or above this shingle Jaccard are near-duplicates
+NGRAM_JACCARD = 0.3  # the shingle Jaccard floor of ngram_jaccard_pairs
 
 
 def minhash_params() -> list[tuple[int, int]]:
@@ -79,7 +82,7 @@ def shingle_hash_col(shingles: Column) -> Column:
     x = int(md5(s)[:8], 16) % P."""
     return F.transform(
         shingles,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("bigint") % F.lit(MINHASH_P),
+        lambda s: md5_prefix_int(s) % F.lit(MINHASH_P),
     )
 
 
@@ -144,13 +147,10 @@ def lsh_bands(signature: Column, bands: int, rows_per_band: int) -> Column:
     )
 
 
-def minhash_lsh_pairs(
-    documents: DataFrame,
-    bands: int = 8,
-    jaccard_threshold: float = 0.5,
-) -> DataFrame:
+def minhash_lsh_pairs(documents: DataFrame, bands: int = 8) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash, verified with the
-    true shingle Jaccard. Returns (key_a, key_b, jaccard), key_a < key_b."""
+    true shingle Jaccard against MINHASH_JACCARD. Returns (key_a, key_b,
+    jaccard), key_a < key_b."""
     rows_per_band = MINHASH_NUM_HASHES // bands
     shingled = shingled_documents(documents)
     sigs = shingled.select(
@@ -189,7 +189,7 @@ def minhash_lsh_pairs(
         .dropDuplicates(["key_a", "key_b"])
         .where(
             F.least("na", "nb").cast("double") / F.greatest("na", "nb").cast("double")
-            >= F.lit(jaccard_threshold)
+            >= F.lit(MINHASH_JACCARD)
         )
         .select("key_a", "key_b")
     )
@@ -214,11 +214,12 @@ def minhash_lsh_pairs(
     # the threshold filter. Reusable INPUT artifacts (shingles, candidate
     # tables, filters, statistics) persist; output-value frames do not.
     scored = verified.select("key_a", "key_b", jaccard.alias("jaccard")).localCheckpoint()
-    return scored.where(F.col("jaccard") >= jaccard_threshold)
+    return scored.where(F.col("jaccard") >= MINHASH_JACCARD)
 
 
-def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """Direct n-gram Jaccard similarity for pairs sharing a blocking key;
+def ngram_jaccard_pairs(documents: DataFrame) -> DataFrame:
+    """Pairs sharing a blocking key whose direct n-gram Jaccard
+    similarity is at least NGRAM_JACCARD;
     exact verification path used to validate the LSH variant.
 
     The default block is a shingle-count BUCKET (width 8) emitted under TWO
@@ -255,7 +256,7 @@ def ngram_jaccard_pairs(documents: DataFrame, threshold: float = 0.5) -> DataFra
     return (
         a.join(b, (F.col("a.block") == F.col("b.block")) & (F.col("a.key") < F.col("b.key")))
         .withColumn("jaccard", jaccard.cast("double"))
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= NGRAM_JACCARD)
         .select(F.col("a.key").alias("key_a"), F.col("b.key").alias("key_b"), "jaccard")
         .dropDuplicates(["key_a", "key_b"])
     )
@@ -549,7 +550,7 @@ def lsh_recall_monitor(documents: DataFrame, sample_mod: int = 4, bands: int = 8
     DataFrames (three one-row aggregates cross-joined, nothing collected).
     The sample is localCheckpoint-ed: it feeds three consumers and would
     otherwise rescan the corpus three times (the fan-out-reuse trap)."""
-    hex8 = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("bigint")
+    hex8 = md5_prefix_int(F.col("doc_id").cast("string"))
     sample = documents.where(hex8 % F.lit(sample_mod) == 0).localCheckpoint()
 
     docs = sample.select(
@@ -562,7 +563,7 @@ def lsh_recall_monitor(documents: DataFrame, sample_mod: int = 4, bands: int = 8
     truth = (
         docs.alias("a")
         .join(docs.alias("b"), F.col("a.key") < F.col("b.key"))
-        .where(jaccard.cast("double") >= F.lit(0.5))
+        .where(jaccard.cast("double") >= F.lit(MINHASH_JACCARD))
     )
     found = minhash_lsh_pairs(sample, bands=bands)
     n_sampled = sample.agg(F.count(F.lit(1)).cast("bigint").alias("n_sampled"))
@@ -1065,7 +1066,7 @@ def dedup_method_agreement(documents: DataFrame) -> DataFrame:
     operators already use; the comparison is a full-outer join on the
     ordered (key_a, key_b) pair key — pair-set-sized, far below corpus
     size — then one global rollup."""
-    mh = minhash_lsh_pairs(documents, jaccard_threshold=0.5).select("key_a", "key_b")
+    mh = minhash_lsh_pairs(documents).select("key_a", "key_b")
     sh = simhash_neardup_pairs(documents, max_hamming=3, n_bits=64).select("key_a", "key_b")
     j = (
         mh.select("key_a", "key_b", F.lit(1).alias("in_mh"))

@@ -26,6 +26,7 @@ from pyspark.storagelevel import StorageLevel
 
 RANK_SCALE = 1_000_000
 HITS_ROUNDS = 2  # synchronous hub/authority rounds of hits_int
+PAGERANK_ITERS = 3  # synchronous rounds of pagerank_int
 
 # deterministic synthetic out-links per document (3 per node, self-loops
 # possible and kept). The first two affine maps are bijections (uniform
@@ -49,13 +50,8 @@ def synth_link_graph(documents: DataFrame) -> DataFrame:
     )
 
 
-def pagerank_int(
-    nodes: DataFrame,
-    edges: DataFrame,
-    iters: int = 3,
-    key_col: str = "doc_id",
-) -> DataFrame:
-    """Integer-exact PageRank after `iters` synchronous iterations.
+def pagerank_int(nodes: DataFrame, edges: DataFrame, key_col: str = "doc_id") -> DataFrame:
+    """Integer-exact PageRank after PAGERANK_ITERS synchronous iterations.
 
     rank_0 = SCALE for every node; each round every node sends
     rank div out_degree along each out-edge, and
@@ -78,7 +74,7 @@ def pagerank_int(
     )
 
     ranks = ids.select("id", F.lit(RANK_SCALE).cast("bigint").alias("rank"))
-    for _ in range(iters):
+    for _ in range(PAGERANK_ITERS):
         contrib = (
             edges_deg.join(ranks, edges_deg["src"] == ranks["id"])
             # `div`, never `/`: SQL `/` on BIGINTs is DOUBLE division, which

@@ -63,11 +63,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import cellgrid
+from ..functions.columns import md5_prefix_int
 from ..plans.localtable import literal_table
 
 KNN_RES = 9  # ~0.7 deg cells for the vertex index
 OUT_COLS = ("url", "lat", "lon", "poly_id", "dist_sq")
 KNN_K_OUT_COLS = ("url", "rnk", "poly_id", "dist_sq")
+KNN_K = 3  # distinct airspaces per page in knn_k / knn_edge_k
 # every driver round is a full barrier (join + agg + checkpoint), so fewer,
 # wider windows win whenever the expanded index stays joinable: this
 # schedule measured ~1.5x faster than four geometric windows at bench scale
@@ -145,10 +147,10 @@ def knn_bruteforce(pages: DataFrame, polygons: list[dict[str, Any]]) -> DataFram
     ).select("url", "lat", "lon", F.col("_nn.poly_id").alias("poly_id"), F.col("_nn.dist_sq").alias("dist_sq"))
 
 
-def vertex_index_df(spark: SparkSession, polygons: list[dict[str, Any]], res: int = KNN_RES) -> DataFrame:
+def vertex_index_df(spark: SparkSession, polygons: list[dict[str, Any]]) -> DataFrame:
     """Polygon vertices indexed by grid cell (the small broadcast side)."""
     pids, vx, vy = _vertex_arrays(polygons)
-    cells = cellgrid.encode_np(vx, vy, res)
+    cells = cellgrid.encode_np(vx, vy, KNN_RES)
     pdf = pd.DataFrame({"vcell": cells, "poly_id": pids.astype("int32"), "vlon": vx, "vlat": vy})
     # Explicit schema: without it the inferred dtype of poly_id depends on
     # spark.sql.execution.arrow.pyspark.enabled (arrow keeps int32, the
@@ -158,7 +160,7 @@ def vertex_index_df(spark: SparkSession, polygons: list[dict[str, Any]], res: in
     return spark.createDataFrame(pdf, "vcell bigint, poly_id int, vlon double, vlat double")
 
 
-def vertex_index_from_table(polygons_df: DataFrame, res: int = KNN_RES) -> DataFrame:
+def vertex_index_from_table(polygons_df: DataFrame) -> DataFrame:
     """Distributed vertex index from a polygons TABLE: explode the ring
     column (closing duplicate dropped), encode cells with the codegen cell
     expression — no UDF, no driver materialization, so the polygon side can
@@ -173,7 +175,7 @@ def vertex_index_from_table(polygons_df: DataFrame, res: int = KNN_RES) -> DataF
         F.col("pt")[1].alias("vlat"),
     )
     return pts.select(
-        cellgrid.cell_id_col(F.col("vlon"), F.col("vlat"), res).alias("vcell"),
+        cellgrid.cell_id_col(F.col("vlon"), F.col("vlat"), KNN_RES).alias("vcell"),
         "poly_id",
         "vlon",
         "vlat",
@@ -302,7 +304,7 @@ def knn_edge_bruteforce(pages: DataFrame, polygons: list[dict[str, Any]]) -> Dat
 _SEGMENT_INDEX_DDL = "vcell bigint, poly_id int, ax double, ay double, bx double, by double"
 
 
-def _segment_index_pdf(polygons: list[dict[str, Any]], res: int) -> pd.DataFrame:
+def _segment_index_pdf(polygons: list[dict[str, Any]]) -> pd.DataFrame:
     """Segments indexed by the cells of sample points at Euclidean spacing
     <= cell_size (the broadcast side), built on the driver. Sampling only
     drives candidate generation — the reported distance is always the exact
@@ -310,7 +312,7 @@ def _segment_index_pdf(polygons: list[dict[str, Any]], res: int) -> pd.DataFrame
     determinism."""
     import math
 
-    size = cellgrid.cell_size_deg(res)
+    size = cellgrid.cell_size_deg(KNN_RES)
     pids, ax, ay, bx, by = _segment_arrays(polygons)
     rows_cell, rows = [], []
     for i in range(len(pids)):
@@ -323,7 +325,7 @@ def _segment_index_pdf(polygons: list[dict[str, Any]], res: int) -> pd.DataFrame
                 cellgrid.encode_np(
                     np.array([ax[i] + t * (bx[i] - ax[i])]),
                     np.array([ay[i] + t * (by[i] - ay[i])]),
-                    res,
+                    KNN_RES,
                 )[0]
             )
             if cell not in seen:
@@ -334,7 +336,7 @@ def _segment_index_pdf(polygons: list[dict[str, Any]], res: int) -> pd.DataFrame
     return pdf
 
 
-def segment_index_from_table(polygons_df: DataFrame, res: int = KNN_RES) -> DataFrame:
+def segment_index_from_table(polygons_df: DataFrame) -> DataFrame:
     """Distributed segment index from a polygons TABLE: consecutive ring
     points zipped into segments, sample offsets exploded with sequence(),
     cells via the codegen cell expression — no UDF, no driver
@@ -347,7 +349,7 @@ def segment_index_from_table(polygons_df: DataFrame, res: int = KNN_RES) -> Data
             a[0].alias("ax"), a[1].alias("ay"), b[0].alias("bx"), b[1].alias("by")
         ),
     )
-    size = cellgrid.cell_size_deg(res)
+    size = cellgrid.cell_size_deg(KNN_RES)
     seg_df = polygons_df.select(
         F.col("poly_id").cast("int").alias("poly_id"), F.explode(segs).alias("s")
     ).select("poly_id", "s.ax", "s.ay", "s.bx", "s.by")
@@ -369,7 +371,7 @@ def segment_index_from_table(polygons_df: DataFrame, res: int = KNN_RES) -> Data
     sx = F.col("ax") + t * (F.col("bx") - F.col("ax"))
     sy = F.col("ay") + t * (F.col("by") - F.col("ay"))
     return sampled.select(
-        cellgrid.cell_id_col(sx, sy, res).alias("vcell"),
+        cellgrid.cell_id_col(sx, sy, KNN_RES).alias("vcell"),
         "poly_id",
         "ax",
         "ay",
@@ -424,10 +426,10 @@ def _vertex_index(spark: SparkSession, polygons: list[dict[str, Any]] | DataFram
     """KNN_RES ring-vertex index from a driver list or a polygons TABLE
     (distributed explode — nothing polygon-shaped on the driver)."""
     if isinstance(polygons, DataFrame):
-        df = _checkpointed(vertex_index_from_table(polygons, KNN_RES), spark)
+        df = _checkpointed(vertex_index_from_table(polygons), spark)
         n_rows = df.count()  # tiny job on the (small) vertex table
     else:
-        df, n_rows = vertex_index_df(spark, polygons, KNN_RES), _ring_points(polygons)
+        df, n_rows = vertex_index_df(spark, polygons), _ring_points(polygons)
     dx = F.col("lon") - F.col("vlon")
     dy = F.col("lat") - F.col("vlat")
     return _Index(df, n_rows, ("vlon", "vlat"), dx * dx + dy * dy, 0.0)
@@ -437,10 +439,10 @@ def _segment_index(spark: SparkSession, polygons: list[dict[str, Any]] | DataFra
     """KNN_RES sampled ring-segment index from a driver list or a polygons
     TABLE (distributed zip/explode); scored by the exact segment distance."""
     if isinstance(polygons, DataFrame):
-        df = _checkpointed(segment_index_from_table(polygons, KNN_RES), spark)
+        df = _checkpointed(segment_index_from_table(polygons), spark)
         n_rows = df.count()  # tiny job on the (small) segment table
     else:
-        pdf = _segment_index_pdf(polygons, KNN_RES)
+        pdf = _segment_index_pdf(polygons)
         df, n_rows = spark.createDataFrame(pdf, _SEGMENT_INDEX_DDL), len(pdf)
     return _Index(df, n_rows, _SEG_PAYLOAD, seg_d2_expr(), 0.5)
 
@@ -602,18 +604,18 @@ def knn_edge_ring_expansion(pages: DataFrame, polygons: list[dict[str, Any]] | D
     return _nearest(pages, polygons, _segment_index, knn_edge_bruteforce)
 
 
-def knn_k(pages: DataFrame, polygons: list[dict[str, Any]] | DataFrame, k: int = 3) -> DataFrame:
-    """(url, rnk, poly_id, dist_sq): the k nearest DISTINCT airspaces per
+def knn_k(pages: DataFrame, polygons: list[dict[str, Any]] | DataFrame) -> DataFrame:
+    """(url, rnk, poly_id, dist_sq): the KNN_K nearest DISTINCT airspaces per
     page by VERTEX distance."""
     index = _vertex_index(pages.sparkSession, polygons)
-    return _expansion_loop(pages, index, k).select(*KNN_K_OUT_COLS)
+    return _expansion_loop(pages, index, KNN_K).select(*KNN_K_OUT_COLS)
 
 
-def knn_edge_k(pages: DataFrame, polygons: list[dict[str, Any]] | DataFrame, k: int = 3) -> DataFrame:
-    """(url, rnk, poly_id, dist_sq): the k nearest DISTINCT airspaces per
+def knn_edge_k(pages: DataFrame, polygons: list[dict[str, Any]] | DataFrame) -> DataFrame:
+    """(url, rnk, poly_id, dist_sq): the KNN_K nearest DISTINCT airspaces per
     page by EXACT point-to-segment distance."""
     index = _segment_index(pages.sparkSession, polygons)
-    return _expansion_loop(pages, index, k).select(*KNN_K_OUT_COLS)
+    return _expansion_loop(pages, index, KNN_K).select(*KNN_K_OUT_COLS)
 
 
 # ---------------------------------------------------------------------------
@@ -621,12 +623,15 @@ def knn_edge_k(pages: DataFrame, polygons: list[dict[str, Any]] | DataFrame, k: 
 # ---------------------------------------------------------------------------
 
 KNN_POINTS_RES = 6  # ~5.6 deg cells — sized for geotag density
+KNN_POINTS_K = 8  # neighbors per query page
+KNN_POINTS_QUERY_MOD = 7  # a page is a query when md5-prefix(url) % this == 0
 
 
-def knn_points(pages: DataFrame, k: int = 8, query_mod: int = 7) -> DataFrame:
-    """(url, rnk, neighbor, dist_sq): the k nearest OTHER pages for each
-    deterministically md5-sampled query page, planar squared-degree
-    distance, ties broken by neighbor url. The similarity-search shape the
+def knn_points(pages: DataFrame) -> DataFrame:
+    """(url, rnk, neighbor, dist_sq): the KNN_POINTS_K nearest OTHER pages
+    for each deterministically md5-sampled query page (md5-prefix(url) %
+    KNN_POINTS_QUERY_MOD == 0), planar squared-degree distance, ties broken
+    by neighbor url. The similarity-search shape the
     polygon kNN family lacks: a point-point self kNN join, over
     KNN_POINTS_RES cells and the polygon kNN's WINDOWS schedule.
 
@@ -649,7 +654,7 @@ def knn_points(pages: DataFrame, k: int = 8, query_mod: int = 7) -> DataFrame:
     engines), which is also why cell-id arithmetic at grid edges is safe:
     aliased off-grid ids either match nothing or contribute far candidates
     that lose the top-k."""
-    spark = pages.sparkSession
+    spark, k = pages.sparkSession, KNN_POINTS_K
     size = cellgrid.cell_size_deg(KNN_POINTS_RES)
     best_t = "array<struct<d2:double,nid:string>>"
     points = (
@@ -659,9 +664,9 @@ def knn_points(pages: DataFrame, k: int = 8, query_mod: int = 7) -> DataFrame:
         .withColumn("pcell", cellgrid.cell_id_col(F.col("plon"), F.col("plat"), KNN_POINTS_RES))
         .localCheckpoint()  # one consumer per round + fallback (fan-out audit)
     )
-    qhash = F.conv(F.substring(F.md5("url"), 1, 8), 16, 10).cast("bigint")
+    qhash = md5_prefix_int("url")
     pending = (
-        pages.where(qhash % F.lit(query_mod) == 0)
+        pages.where(qhash % F.lit(KNN_POINTS_QUERY_MOD) == 0)
         .select("url", "lat", "lon")
         .withColumn("qcell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), KNN_POINTS_RES))
         .withColumn("best", F.expr(f"CAST(array() AS {best_t})"))

@@ -125,6 +125,7 @@ FRAME_SCHEMA = T.StructType(
         T.StructField("frame", T.StringType(), True),
     ]
 )
+FRAME_EVERY_K = 4  # sample_frames keeps frames 0, k, 2k, ...
 
 
 def _fake_frame(payload: bytes, frame_idx: int) -> str:
@@ -135,10 +136,10 @@ def _fake_frame(payload: bytes, frame_idx: int) -> str:
     return payload[off : off + 8].decode("ascii")
 
 
-def sample_frames(media: DataFrame, every_k: int = 4) -> DataFrame:
-    """Frame sampling over mapInPandas: every k-th frame index of each
-    `video` row (0, k, 2k, ... below meta.n_frames) becomes one output row
-    with the extracted frame. Extraction is the stubbed deterministic fake
+def sample_frames(media: DataFrame) -> DataFrame:
+    """Frame sampling over mapInPandas: every FRAME_EVERY_K-th frame index
+    of each `video` row (0, k, 2k, ... below meta.n_frames) becomes one
+    output row with the extracted frame. Extraction is the stubbed deterministic fake
     (a real codec would not move the Spark plan — bounded Arrow batches
     in, exploded frame rows out)."""
 
@@ -150,7 +151,7 @@ def sample_frames(media: DataFrame, every_k: int = 4) -> DataFrame:
             ):
                 if kind != "video" or payload is None:
                     continue
-                for i in range(0, int(meta["n_frames"]), every_k):
+                for i in range(0, int(meta["n_frames"]), FRAME_EVERY_K):
                     rows.append((mid, i, _fake_frame(payload, i)))
             yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "frame"])
 
@@ -177,6 +178,7 @@ def sample_frames(media: DataFrame, every_k: int = 4) -> DataFrame:
 
 PPM_W, PPM_H = 8, 8
 WAV_RATE, WAV_SAMPLES = 16000, 128
+CODEC_MEDIA_ROWS = 300  # rows of the PNG, GIF and JPEG feature queries
 
 
 def _md5_bytes(seed: str, n: int) -> bytes:

@@ -17,6 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+CHARS_HISTOGRAM_WIDTH = 32
+RANGE_PARTITION_BINS = 8
+
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
@@ -278,18 +281,18 @@ def snapshot_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     )
 
 
-def chars_histogram(documents: DataFrame, width: int = 32) -> DataFrame:
+def chars_histogram(documents: DataFrame) -> DataFrame:
     """Fixed-width histogram of document lengths: integer bucket =
-    n_chars div width (exact — no float binning), with per-bucket count
-    and the bucket's observed min/max. One map-side-partial shuffle on
+    n_chars div CHARS_HISTOGRAM_WIDTH (exact — no float binning), with
+    per-bucket count and the bucket's observed min/max. One map-side-partial shuffle on
     the bucket key; the profiling counterpart to profile_table."""
     return (
         documents.select(
-            F.expr(f"n_chars div {width}").alias("bucket"), F.col("n_chars")
+            F.expr(f"n_chars div {CHARS_HISTOGRAM_WIDTH}").alias("bucket"), F.col("n_chars")
         )
         .groupBy("bucket")
         .agg(
-            (F.col("bucket") * width).alias("bucket_lo"),
+            (F.col("bucket") * CHARS_HISTOGRAM_WIDTH).alias("bucket_lo"),
             F.count(F.lit(1)).alias("n_docs"),
             F.min("n_chars").alias("min_chars"),
             F.max("n_chars").alias("max_chars"),
@@ -448,7 +451,7 @@ def returned_item_revenue(
     )
 
 
-def range_partition_plan(documents: DataFrame, n_bins: int = 8) -> DataFrame:
+def range_partition_plan(documents: DataFrame) -> DataFrame:
     """Balanced RANGE-PARTITIONER boundary derivation (the planner behind
     range-clustered writes / global sorted output): equi-depth bin edges
     at exact target ranks, computed WITHOUT ranking the corpus.
@@ -456,7 +459,8 @@ def range_partition_plan(documents: DataFrame, n_bins: int = 8) -> DataFrame:
     Shape: a value-granularity histogram first (map-side-partial groupBy —
     the distinct-value set is small; the corpus is never windowed), then
     the cumulative count over the SORTED DISTINCT VALUES only, edge_j =
-    smallest value whose cumulative count reaches ceil(j*N/n_bins), and
+    smallest value whose cumulative count reaches ceil(j*N/n_bins) for
+    n_bins = RANGE_PARTITION_BINS, and
     bin(v) = #edges < v (value-based: equal values always share a bin, so
     bins can be uneven exactly where duplicates force it — deterministic,
     unlike NTILE's rank-splitting of ties). Everything is integer
@@ -466,6 +470,7 @@ def range_partition_plan(documents: DataFrame, n_bins: int = 8) -> DataFrame:
     the same aggregate-first discipline as events_retention."""
     from pyspark.sql import Window
 
+    n_bins = RANGE_PARTITION_BINS
     if n_bins < 2:
         # sequence(1, 0) counts DOWN in Spark (the _word_ngrams_col trap) —
         # a 1-bin plan is also meaningless; fail loudly

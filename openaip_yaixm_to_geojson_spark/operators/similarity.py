@@ -30,6 +30,16 @@ from pyspark.sql import types as T
 # (a strict left fold — np.sum/matmul use pairwise/BLAS orders that round
 # differently near sign boundaries).
 EXPR_UNROLL_MAX_TERMS = 4096
+EMBED_DIM = 64  # dimension of the corpus embeddings the gated queries read
+# every ANN query searches for the first ANN_QUERIES vec_ids, ANN_K hits each
+ANN_QUERIES = 5
+ANN_K = 3
+ANN_LSH_PLANES = 2  # hyperplanes of lsh_ann_topk
+ANN_TWO_STAGE_CANDIDATES = 12  # quantized candidates ann_two_stage reranks
+IVF_CENTROIDS = 16
+IVF_PROBES = 4  # centroid lists each query probes
+NEARDUP_COSINE = 0.4  # cosine floor of embedding_neardup_pairs
+NEARDUP_LSH_PLANES = 4  # hyperplanes of its bucketed candidate path
 
 
 def dot_double(a: Column, b: Column) -> Column:
@@ -46,8 +56,8 @@ def dot_double(a: Column, b: Column) -> Column:
     return F.aggregate(products, F.lit(0.0), lambda acc, p: acc + p)
 
 
-def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 3) -> DataFrame:
-    """Exact top-k neighbours per query by dot product (queries broadcast).
+def cosine_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
+    """Exact top-ANN_K neighbours per query by dot product (queries broadcast).
 
     Returns (query_id, vec_id, dot, rank). Rank ties break on vec_id so the
     result is total-ordered and oracle-reproducible. For unit-normalized
@@ -71,7 +81,7 @@ def cosine_topk(embeddings: DataFrame, queries: DataFrame, k: int = 3) -> DataFr
     w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= ANN_K)
         .select("query_id", "vec_id", F.col("dot").cast("double").alias("dot"), "rank")
     )
 
@@ -147,18 +157,12 @@ def bucket_assign_col(vec: Column, planes: np.ndarray) -> Column:
     return lsh_bucket_udf_col(vec, planes)
 
 
-def lsh_ann_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    n_planes: int = 8,
-    dim: int | None = None,
-) -> DataFrame:
-    """Approximate top-k: candidates = same LSH bucket, exact re-rank inside.
+def lsh_ann_topk(embeddings: DataFrame, queries: DataFrame, dim: int | None = None) -> DataFrame:
+    """Approximate top-ANN_K: candidates = same LSH bucket, exact re-rank inside.
 
     One bucket assignment pass over the corpus (expressions only), then a
     bucket-equi-join instead of the full cross join — the candidate set per
-    query shrinks by ~2^n_planes / (n_planes + 1). Each query also probes
+    query shrinks by ~2^ANN_LSH_PLANES / (ANN_LSH_PLANES + 1). Each query also probes
     every Hamming-1 neighbour bucket of the query (near-misses on one
     hyperplane are the dominant recall loss).
     """
@@ -168,11 +172,11 @@ def lsh_ann_topk(
         # fallback metadata action; callers should pass dim to keep
         # plan-build free of Spark jobs
         dim = len(embeddings.select("embedding").first()[0])
-    planes = hyperplanes(dim, n_planes)
+    planes = hyperplanes(dim, ANN_LSH_PLANES)
     corpus = embeddings.withColumn("bucket", bucket_assign_col(F.col("embedding"), planes))
     probes = queries.withColumn("bucket", bucket_assign_col(F.col("qvec"), planes))
     neighbours = F.array(
-        F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)]
+        F.col("bucket"), *[F.col("bucket").bitwiseXOR(F.lit(1 << i)) for i in range(ANN_LSH_PLANES)]
     )
     probes = probes.withColumn("bucket", F.explode(neighbours))
     scored = (
@@ -188,7 +192,7 @@ def lsh_ann_topk(
     w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= ANN_K)
         .select("query_id", "vec_id", F.col("dot").cast("double").alias("dot"), "rank")
     )
 
@@ -293,31 +297,25 @@ def ivf_probe_cids_col(qvec: Column, centroids: np.ndarray, n_probes: int) -> Co
     return _ivf_probe_cids_udf(qvec, centroids, n_probes)
 
 
-def ivf_ann_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 3,
-    n_centroids: int = 16,
-    n_probes: int = 4,
-    dim: int | None = None,
-) -> DataFrame:
-    """IVF-style ANN: corpus vectors are assigned to their nearest coarse
-    centroid (one expression pass, no shuffle); each query probes its
-    `n_probes` nearest centroid lists and re-ranks exactly inside them.
+def ivf_ann_topk(embeddings: DataFrame, queries: DataFrame, dim: int | None = None) -> DataFrame:
+    """IVF-style ANN: corpus vectors are assigned to their nearest of
+    IVF_CENTROIDS coarse centroids (one expression pass, no shuffle); each
+    query probes its IVF_PROBES nearest centroid lists and re-ranks exactly
+    inside them, keeping ANN_K.
 
     The inverted-list equi-join replaces the cross join — candidates per
-    query shrink ~n_centroids/n_probes-fold. Complements the hyperplane-LSH
+    query shrink ~IVF_CENTROIDS/IVF_PROBES-fold. Complements the hyperplane-LSH
     variant: IVF partitions by region (good when vectors cluster), LSH by
     direction."""
     from pyspark.sql import Window
 
     if dim is None:
         dim = len(embeddings.select("embedding").first()[0])
-    cents = ivf_centroids(dim, n_centroids)
+    cents = ivf_centroids(dim, IVF_CENTROIDS)
     corpus = embeddings.withColumn("cid", ivf_assign_any_col(F.col("embedding"), cents))
-    # query probe lists: top-n_probes centroids by dot desc, centroid-id asc
+    # query probe lists: top-IVF_PROBES centroids by dot desc, centroid-id asc
     probes = queries.withColumn(
-        "cid", F.explode(ivf_probe_cids_col(F.col("qvec"), cents, n_probes))
+        "cid", F.explode(ivf_probe_cids_col(F.col("qvec"), cents, IVF_PROBES))
     )
     scored = (
         corpus.alias("e")
@@ -332,20 +330,17 @@ def ivf_ann_topk(
     w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= ANN_K)
         .select("query_id", "vec_id", F.col("dot").cast("double").alias("dot"), "rank")
     )
 
 
 def embedding_neardup_pairs(
-    embeddings: DataFrame,
-    cosine_threshold: float = 0.95,
-    n_planes: int = 8,
-    exact_all_pairs: bool = False,
-    dim: int | None = None,
+    embeddings: DataFrame, exact_all_pairs: bool = False, dim: int | None = None
 ) -> DataFrame:
-    """Near-duplicate vectors: exact cosine >= threshold among candidate
-    pairs. Candidates = same LSH bucket (the scale path); with
+    """Near-duplicate vectors: exact cosine >= NEARDUP_COSINE among
+    candidate pairs. Candidates = same bucket of NEARDUP_LSH_PLANES
+    hyperplanes (the scale path); with
     `exact_all_pairs=True` every a<b pair is checked — exhaustive and
     oracle-reproducible (use for correctness gates and small corpora).
     Returns (key_a, key_b, cosine), key_a < key_b."""
@@ -358,7 +353,7 @@ def embedding_neardup_pairs(
     if not exact_all_pairs:
         if dim is None:
             dim = len(embeddings.select("embedding").first()[0])
-        planes = hyperplanes(dim, n_planes)
+        planes = hyperplanes(dim, NEARDUP_LSH_PLANES)
         cols.append(bucket_assign_col(F.col("embedding"), planes).alias("bucket"))
     # materialize before the self-join: norms (and at high dim the Arrow
     # bucket kernel) would otherwise evaluate once per side (the r4
@@ -376,15 +371,15 @@ def embedding_neardup_pairs(
     return (
         a.join(b, cond)
         .withColumn("cosine", cosine)
-        .where(F.col("cosine") >= cosine_threshold)
+        .where(F.col("cosine") >= NEARDUP_COSINE)
         .select(F.col("a.key").alias("key_a"), F.col("b.key").alias("key_b"), "cosine")
     )
 
 
-def queries_from_embeddings(embeddings: DataFrame, n: int = 5) -> DataFrame:
-    """First n vectors (by id) as the query set."""
+def queries_from_embeddings(embeddings: DataFrame) -> DataFrame:
+    """First ANN_QUERIES vectors (by id) as the query set."""
     return (
-        embeddings.where(F.col("vec_id") < n)
+        embeddings.where(F.col("vec_id") < ANN_QUERIES)
         .select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec"))
     )
 
@@ -437,7 +432,7 @@ def _quantized_vectors(embeddings: DataFrame, keep_embedding: bool = False) -> D
     return staged.select(*cols)
 
 
-def ann_topk_quantized(embeddings: DataFrame, k: int = 3) -> DataFrame:
+def ann_topk_quantized(embeddings: DataFrame, k: int) -> DataFrame:
     """Top-k retrieval over int8-QUANTIZED codes: rank by the exact
     integer dot product of code vectors — the standard compressed-domain
     serving path (4x memory cut, SIMD int math on a real cluster), and
@@ -451,7 +446,7 @@ def ann_topk_quantized(embeddings: DataFrame, k: int = 3) -> DataFrame:
     from pyspark.sql import Window
 
     qv = _quantized_vectors(embeddings)
-    queries = qv.where(F.col("vec_id") < 5).select(
+    queries = qv.where(F.col("vec_id") < ANN_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("qc").alias("qq")
     )
     dot = F.aggregate(
@@ -496,13 +491,14 @@ def quantization_error(embeddings: DataFrame) -> DataFrame:
 
 
 KMEANS_FP_SCALE = 1 << 20  # fixed-point resolution for exact centroid sums
+KMEANS_K = 8  # clusters of kmeans_assign and kmeans_iterate
 
 
-def kmeans_assign(embeddings: DataFrame, k: int = 8) -> DataFrame:
+def kmeans_assign(embeddings: DataFrame) -> DataFrame:
     """One Lloyd iteration over the embedding table: assign every vector
-    to the nearest of k data-derived seed centroids (the vectors with
-    vec_id < k, the ann_topk query convention) and emit the per-cluster
-    per-dimension centroid update — the clustering step a curation
+    to the nearest of KMEANS_K data-derived seed centroids (the vectors
+    with vec_id < KMEANS_K, the ann_topk query convention) and emit the
+    per-cluster per-dimension centroid update — the clustering step a curation
     pipeline runs to diversify / stratify training data.
 
     Output: (cluster_id, dim_idx, n_members, sum_fp, centroid_next).
@@ -524,7 +520,7 @@ def kmeans_assign(embeddings: DataFrame, k: int = 8) -> DataFrame:
     dim) — k * dim result rows. Sum headroom: 2^63 / 2^20 leaves ~8.8e12
     unit-scale members per (cluster, dim)."""
     seeds = F.broadcast(
-        embeddings.where(F.col("vec_id") < k).select(
+        embeddings.where(F.col("vec_id") < KMEANS_K).select(
             F.col("vec_id").alias("seed_id"), F.col("embedding").alias("semb")
         )
     )
@@ -570,8 +566,8 @@ def kmeans_assign(embeddings: DataFrame, k: int = 8) -> DataFrame:
     )
 
 
-def ann_topk_filtered(embeddings: DataFrame, n_queries: int = 5, k: int = 3) -> DataFrame:
-    """FILTERED vector search — top-k by dot product among vectors
+def ann_topk_filtered(embeddings: DataFrame) -> DataFrame:
+    """FILTERED vector search — top-ANN_K by dot product among vectors
     sharing the query's `label` value (the tenant/language/category
     predicate every production vector store must push INTO the search,
     not apply after it: post-filtering a global top-k under-returns when
@@ -584,7 +580,7 @@ def ann_topk_filtered(embeddings: DataFrame, n_queries: int = 5, k: int = 3) -> 
     unfiltered exact path."""
     from pyspark.sql import Window
 
-    q = embeddings.where(F.col("vec_id") < n_queries).select(
+    q = embeddings.where(F.col("vec_id") < ANN_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qvec"),
         F.col("label").alias("_qf"),
@@ -601,7 +597,7 @@ def ann_topk_filtered(embeddings: DataFrame, n_queries: int = 5, k: int = 3) -> 
     w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("vid").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= ANN_K)
         .select("query_id", F.col("vid").alias("vec_id"), F.col("dot").cast("double").alias("dot"), "rank")
     )
 
@@ -666,20 +662,20 @@ def label_centroid_distances(embeddings: DataFrame) -> DataFrame:
 
 def ann_two_stage(embeddings: DataFrame) -> DataFrame:
     """Two-stage retrieval — the standard production serving shape, for
-    the first 5 vec_ids as queries: stage 1 generates 12 candidates per
-    query in the COMPRESSED domain
+    the first ANN_QUERIES vec_ids as queries: stage 1 generates
+    ANN_TWO_STAGE_CANDIDATES candidates per query in the COMPRESSED domain
     (int8 code dot products: exact BIGINTs, 4x less memory traffic),
     stage 2 reranks ONLY those candidates with the exact float dot
     (dot_double's left-fold contract). Returns (query_id, vec_id, dot,
-    rank) with rank <= 3 over the reranked order, ties to vec_id.
+    rank) with rank <= ANN_K over the reranked order, ties to vec_id.
 
     Scale shape: stage 1 is the quantized broadcast top-m; stage 2's
     exact dots run on m rows per query (never the corpus), attached by
     one vec_id equi-join + a broadcast query join."""
     from pyspark.sql import Window
 
-    cands = ann_topk_quantized(embeddings, 12).select("query_id", "vec_id")
-    qv = queries_from_embeddings(embeddings, n=5)
+    cands = ann_topk_quantized(embeddings, ANN_TWO_STAGE_CANDIDATES).select("query_id", "vec_id")
+    qv = queries_from_embeddings(embeddings)
     joined = cands.join(embeddings.select("vec_id", "embedding"), "vec_id").join(
         F.broadcast(qv), "query_id"
     )
@@ -691,15 +687,15 @@ def ann_two_stage(embeddings: DataFrame) -> DataFrame:
             dot_double(F.col("embedding"), F.col("qvec")).alias("dot"),
         )
         .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
+        .where(F.col("rank") <= ANN_K)
         .select("query_id", "vec_id", F.col("dot").cast("double").alias("dot"), "rank")
     )
 
 
-def kmeans_iterate(embeddings: DataFrame, k: int = 8) -> DataFrame:
+def kmeans_iterate(embeddings: DataFrame) -> DataFrame:
     """TWO full Lloyd rounds with reassignment — the iterative-clustering
     step beyond kmeans_assign's single update: round-1 assignment to the
-    data-derived seeds (vec_id < k), exact fixed-point centroid update,
+    data-derived seeds (vec_id < KMEANS_K), exact fixed-point centroid update,
     then round-2 assignment to the UPDATED centroids. Output one row per
     vector: (vec_id, cluster_r1, cluster_r2, moved).
 
@@ -711,14 +707,14 @@ def kmeans_iterate(embeddings: DataFrame, k: int = 8) -> DataFrame:
     again pinned. Ties break on cluster id. A cluster left empty in
     round 1 keeps its seed centroid (coalesce, shared contract).
 
-    Scale shape: seeds and the k-row centroid table broadcast; each round
+    Scale shape: seeds and the KMEANS_K-row centroid table broadcast; each round
     is one pass over the vectors; the update is a map-side-partial
-    (cluster, dim) aggregation with k*dim result rows. The round-1 frame
+    (cluster, dim) aggregation with KMEANS_K*dim result rows. The round-1 frame
     feeds three consumers -> localCheckpoint (fan-out rule)."""
     fs = float(KMEANS_FP_SCALE)
     # the hint goes on the crossJoin, not on `seeds`: seeds_dbl below would
     # inherit it as the LEFT side of a left join, which Spark cannot build
-    seeds = embeddings.where(F.col("vec_id") < k).select(
+    seeds = embeddings.where(F.col("vec_id") < KMEANS_K).select(
         F.col("vec_id").alias("seed_id"), F.col("embedding").alias("semb")
     )
     d2_1 = F.aggregate(

@@ -52,6 +52,8 @@ from ..plans.localtable import literal_table
 DEFAULT_JOIN_RES = 13  # ~0.044 deg cells: tight polygon covers, ~2x fewer false candidates than res 11 (bench-chosen)
 # salt="auto" target: pages per reducer task of the hottest cell
 ROWS_PER_TASK = 2_000_000
+GEO_CLUSTER_RES, GEO_CLUSTER_MIN_PTS = 7, 2  # geo_cluster_cells' grid and dense-cell floor
+ZORDER_RES = 12  # bits per axis of page_zorder
 
 
 # An edge (x1, y1) -> (x2, y2) changes the winding number of a point
@@ -115,15 +117,13 @@ def winding_col(lon: Column, lat: Column, edges: Column) -> Column:
     return F.aggregate(edges, F.lit(0), step)
 
 
-def polygon_cover_df(
-    spark: SparkSession, polygons: list[dict[str, Any]], res: int = DEFAULT_JOIN_RES
-) -> DataFrame:
-    """Small-side table: one row per (cover cell, polygon) with the cell's
-    band edges of the polygon's ring (COVER_SCHEMA)."""
+def polygon_cover_df(spark: SparkSession, polygons: list[dict[str, Any]]) -> DataFrame:
+    """Small-side table: one row per (DEFAULT_JOIN_RES cover cell, polygon)
+    with the cell's band edges of the polygon's ring (COVER_SCHEMA)."""
     rows = [
         (cell, int(poly["poly_id"]), poly["name"], poly["type"], poly["class"], edges)
         for poly in polygons
-        for cell, edges in cover_with_edges(poly["ring"], res)
+        for cell, edges in cover_with_edges(poly["ring"], DEFAULT_JOIN_RES)
     ]
     # literal_table, not createDataFrame of pickled rows: the cover is
     # re-evaluated at EVERY broadcast build and each evaluation of a
@@ -160,7 +160,7 @@ def _ring_np(ring) -> np.ndarray:
     return np.vstack([np.asarray(pt) for pt in ring])
 
 
-def polygon_cover_distributed(polygons_df: DataFrame, res: int = DEFAULT_JOIN_RES) -> DataFrame:
+def polygon_cover_distributed(polygons_df: DataFrame) -> DataFrame:
     """Distributed cell cover: one pandas-UDF polyfill per polygon row +
     explode — no driver loop, so the polygon side can be millions of rows
     (VERDICT r1: the driver-side loop was the 100x scale-killer).
@@ -173,7 +173,7 @@ def polygon_cover_distributed(polygons_df: DataFrame, res: int = DEFAULT_JOIN_RE
     @F.pandas_udf(T.ArrayType(cell_edges))
     def cover_cells(rings: pd.Series) -> pd.Series:
         return pd.Series(
-            [[{"cell": c, "edges": e} for c, e in cover_with_edges(_ring_np(ring), res)] for ring in rings]
+            [[{"cell": c, "edges": e} for c, e in cover_with_edges(_ring_np(r), DEFAULT_JOIN_RES)] for r in rings]
         )
 
     return polygons_df.select(
@@ -185,15 +185,13 @@ def polygon_cover_distributed(polygons_df: DataFrame, res: int = DEFAULT_JOIN_RE
     ).select("_c.cell", "poly_id", "airspace_name", "airspace_type", "airspace_class", "_c.edges")
 
 
-def polygon_cover(
-    spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame, res: int = DEFAULT_JOIN_RES
-) -> DataFrame:
+def polygon_cover(spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame) -> DataFrame:
     """COVER_SCHEMA rows of a driver list (covered on the driver) or of a
     polygons TABLE (covered by the distributed polyfill); the two give the
     same rows."""
     if isinstance(polygons, DataFrame):
-        return polygon_cover_distributed(polygons, res)
-    return polygon_cover_df(spark, polygons, res)
+        return polygon_cover_distributed(polygons)
+    return polygon_cover_df(spark, polygons)
 
 
 OUT_COLS = ("url", "lat", "lon", "poly_id", "airspace_name", "airspace_type", "airspace_class")
@@ -230,7 +228,7 @@ def spatial_join(
     """
     if not (salt is None or salt == "auto" or isinstance(salt, int)):
         raise TypeError(f"salt must be an int, None, or 'auto'; got {salt!r}")
-    cover = polygon_cover(pages.sparkSession, polygons, DEFAULT_JOIN_RES)
+    cover = polygon_cover(pages.sparkSession, polygons)
     cells = pages.withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), DEFAULT_JOIN_RES))
 
     if broadcast:
@@ -253,11 +251,11 @@ def spatial_join(
     return inside.select(*OUT_COLS, *(c for c in keep_cols if c not in OUT_COLS))
 
 
-def cell_histogram(pages: DataFrame, res: int = DEFAULT_JOIN_RES) -> DataFrame:
-    """Per-cell page counts — the deterministic input for choosing a salt
-    factor (hot cells = skew)."""
+def cell_histogram(pages: DataFrame) -> DataFrame:
+    """Per-DEFAULT_JOIN_RES-cell page counts — the deterministic input for
+    choosing a salt factor (hot cells = skew)."""
     return (
-        pages.withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
+        pages.withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), DEFAULT_JOIN_RES))
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_pages"))
     )
@@ -364,7 +362,7 @@ def _polygon_pairs(
     # the cover feeds BOTH sides of the candidate self-join; without a
     # materialization a table's pandas-UDF polyfill executes once per side
     # (plan-audited: two ArrowEvalPython stages) — the fan-out-reuse trap
-    cover = polygon_cover(spark, polygons, DEFAULT_JOIN_RES).select("cell", "poly_id").localCheckpoint()
+    cover = polygon_cover(spark, polygons).select("cell", "poly_id").localCheckpoint()
     a = cover.select(F.col("cell"), F.col("poly_id").alias(ka))
     b = cover.select(F.col("cell"), F.col("poly_id").alias(kb))
     cand = a.join(b, "cell").where(pair_filter(F.col(ka), F.col(kb))).select(ka, kb).distinct()
@@ -484,9 +482,10 @@ def polygon_area_orientation(polygons_df: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def geo_cluster_cells(pages: DataFrame, res: int = 7, min_pts: int = 2) -> DataFrame:
+def geo_cluster_cells(pages: DataFrame) -> DataFrame:
     """(cell, cluster_id, n_points): DBSCAN-flavored density clustering on
-    the cell grid — cells holding >= min_pts pages are dense; dense cells
+    the GEO_CLUSTER_RES cell grid — cells holding >= GEO_CLUSTER_MIN_PTS
+    pages are dense; dense cells
     that are 8-neighbors merge into one cluster labeled by the minimum
     member cell id.
 
@@ -503,12 +502,12 @@ def geo_cluster_cells(pages: DataFrame, res: int = 7, min_pts: int = 2) -> DataF
     from .dedup import duplicate_clusters
 
     cells = (
-        pages.select(cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res).alias("cell"))
+        pages.select(cellgrid.cell_id_col(F.col("lon"), F.col("lat"), GEO_CLUSTER_RES).alias("cell"))
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_points"))
     )
     # dense feeds the edge self-join (twice) and the final join: materialize
-    dense = cells.where(F.col("n_points") >= min_pts).localCheckpoint()
+    dense = cells.where(F.col("n_points") >= GEO_CLUSTER_MIN_PTS).localCheckpoint()
     shift = cellgrid._SHIFT
     xy = dense.select(
         "cell",
@@ -604,7 +603,7 @@ def salt_plan(pages: DataFrame) -> DataFrame:
     the driver gate certifies the derivation the salted join runs on. Ties
     on the hottest count break to the smaller cell id. One map-side-partial
     aggregation to #cells rows, then a 1-row min-by."""
-    hist = cell_histogram(pages, DEFAULT_JOIN_RES)
+    hist = cell_histogram(pages)
     # hottest cell as a 1-row min-by over the negated count (ties -> the
     # smaller cell id, deterministic)
     top = hist.agg(
@@ -623,17 +622,17 @@ def salt_plan(pages: DataFrame) -> DataFrame:
     return top.select("hottest_cell", "hottest_rows", salt.alias("salt"))
 
 
-def page_zorder(pages: DataFrame, res: int = 12) -> DataFrame:
-    """(url, zkey): Z-order / Morton clustering key at `res` bits per axis
+def page_zorder(pages: DataFrame) -> DataFrame:
+    """(url, zkey): Z-order / Morton clustering key at ZORDER_RES bits per axis
     — the storage-layout key for 2D-local writes (a z-sorted or
     z-range-partitioned table prunes on BOTH lon and lat with one sort
     key, where the row-major cell id preserves locality only along x).
     Pure integer arithmetic shared with the oracle; codegen, zero
     shuffles. Pair with range_partition_plan over zkey for balanced
     z-clustered output files."""
-    size = cellgrid.cell_size_deg(res)
+    size = cellgrid.cell_size_deg(ZORDER_RES)
     x = F.floor((F.col("lon") + F.lit(180.0)) / F.lit(size)).cast("bigint")
     y = F.floor((F.col("lat") + F.lit(90.0)) / F.lit(size)).cast("bigint")
     return pages.select("url", x.alias("zx"), y.alias("zy")).select(
-        "url", F.expr(cellgrid.morton_terms("zx", "zy", res, "div")).cast("bigint").alias("zkey")
+        "url", F.expr(cellgrid.morton_terms("zx", "zy", ZORDER_RES, "div")).cast("bigint").alias("zkey")
     )

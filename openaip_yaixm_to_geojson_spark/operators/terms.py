@@ -27,10 +27,16 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.columns import md5_prefix_int
 from ..plans.fanout import fan_out
 
 # 32-bit md5-prefix hash space; KMV estimates distincts as (k-1) * M / h_k
 KMV_M = float(2**32)
+KMV_K = 16
+TFIDF_K = 3  # terms per document of tfidf_topk
+PMI_TOP = 20  # bigrams bigram_pmi returns
+HEAVY_HITTERS_K = 20  # tokens countmin_heavy_hitters reads back
+INVERTED_INDEX_DF_CAP = 300  # doc_freq cap of the inverted_index_capped query
 
 
 def _words() -> Column:
@@ -84,8 +90,8 @@ def inverted_index(documents: DataFrame, df_cap: int | None = None) -> DataFrame
     return dfreq.join(posted, "term", "left").select("term", "doc_freq", "postings")
 
 
-def tfidf_topk(documents: DataFrame, k: int = 3) -> DataFrame:
-    """Top-k salient terms per document by tf x (N / df) relevance
+def tfidf_topk(documents: DataFrame) -> DataFrame:
+    """Top-TFIDF_K salient terms per document by tf x (N / df) relevance
     (reciprocal-df weighting — same ranking family as tf-idf but exactly
     reproducible: CAST(tf) * (CAST(N) / CAST(df)) is three IEEE ops on
     exact integers, bit-identical in any engine, where a log-based idf
@@ -122,17 +128,17 @@ def tfidf_topk(documents: DataFrame, k: int = 3) -> DataFrame:
     w = Window.partitionBy("key").orderBy(F.col("score").desc(), F.col("term"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= TFIDF_K)
         .select("key", "rank", "term", "tf", "df", "score")
     )
 
 
-def kmv_distinct(documents: DataFrame, k: int = 16, n_salts: int = 64) -> DataFrame:
+def kmv_distinct(documents: DataFrame, n_salts: int = 64) -> DataFrame:
     """Per-group distinct-term cardinality: exact count plus a K-Minimum-
-    Values sketch estimate ((k-1) * M / h_k over a 32-bit md5-prefix hash
-    space). The estimate is what survives at 100 TB; the gate pins both
-    plus the kth-min hash so the sketch math itself is verified, not just
-    eyeballed.
+    Values sketch estimate (k = KMV_K: (k-1) * M / h_k over a 32-bit
+    md5-prefix hash space). The estimate is what survives at 100 TB; the
+    gate pins both plus the kth-min hash so the sketch math itself is
+    verified, not just eyeballed.
 
     Scale shape — MERGEABLE, never ranked: a per-group window row_number
     would sort a group's entire distinct-term set in one task (a web-scale
@@ -149,12 +155,11 @@ def kmv_distinct(documents: DataFrame, k: int = 16, n_salts: int = 64) -> DataFr
     (the estimator is undefined; the exact count is the answer there).
     (k-1) * M is a product of exactly-representable doubles with a short
     significand — no rounding before the single division."""
+    k = KMV_K
     pairs = (
         documents.select(F.col("source").alias("grp"), F.explode(_words()).alias("term"))
         .distinct()
-        .select(
-            "grp", F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("bigint").alias("h")
-        )
+        .select("grp", md5_prefix_int("term").alias("h"))
     )
     local = (
         pairs.withColumn("salt", F.pmod(F.col("h"), F.lit(n_salts)))
@@ -216,9 +221,7 @@ def hll_distinct(documents: DataFrame) -> DataFrame:
     pairs = (
         documents.select(F.col("source").alias("grp"), F.explode(_words()).alias("term"))
         .distinct()
-        .select(
-            "grp", F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("bigint").alias("h")
-        )
+        .select("grp", md5_prefix_int("term").alias("h"))
     )
     rem_mod = 1 << HLL_REM_BITS
     ranks = pairs.select(
@@ -256,12 +259,12 @@ def hll_distinct(documents: DataFrame) -> DataFrame:
     )
 
 
-def bigram_pmi(documents: DataFrame, top: int = 20) -> DataFrame:
+def bigram_pmi(documents: DataFrame) -> DataFrame:
     """Global bigram collocation ranking by the PMI odds ratio
     c_ab * N / (c_a * c_b) (monotone in PMI = log of it; the log itself is
     libm-dependent, the ratio is two exact-integer products and one
     division — each a single deterministic IEEE rounding). Returns the
-    `top` bigrams by ratio, ties on the bigram string.
+    PMI_TOP bigrams by ratio, ties on the bigram string.
 
     Scale shape: bigram and unigram counts are map-side-partial groupBys;
     the unigram table is vocabulary-sized and broadcast twice (left and
@@ -297,7 +300,7 @@ def bigram_pmi(documents: DataFrame, top: int = 20) -> DataFrame:
     return (
         scored.select("gram", "c_ab", "c_a", "c_b", "n_tokens", "pmi_ratio")
         .orderBy(F.col("pmi_ratio").desc(), "gram")
-        .limit(top)
+        .limit(PMI_TOP)
     )
 
 
@@ -433,14 +436,14 @@ def _cm_col(term: Column, row: int) -> Column:
     hash of the salted term, mod the row width — one md5 per (term, row),
     identical arithmetic in the oracle."""
     salted = F.concat(term, F.lit(f"-cm{row}"))
-    return F.conv(F.substring(F.md5(salted), 1, 8), 16, 10).cast("bigint") % F.lit(CM_WIDTH)
+    return md5_prefix_int(salted) % F.lit(CM_WIDTH)
 
 
-def countmin_heavy_hitters(documents: DataFrame, k: int = 20) -> DataFrame:
+def countmin_heavy_hitters(documents: DataFrame) -> DataFrame:
     """Count-Min sketch demonstration over the token stream: build the
     d x w counter table DISTRIBUTED (groupBy (row, col) — the sketch is
-    the aggregation state, nothing collects), then read back the k most
-    frequent tokens' estimates next to their exact counts. CM guarantees
+    the aggregation state, nothing collects), then read back the
+    HEAVY_HITTERS_K most frequent tokens' estimates next to their exact counts. CM guarantees
     estimate >= exact (one-sided error) and estimate <= exact + eps*N with
     eps = e/w — the pytest pins the one-sided property row by row.
 
@@ -452,7 +455,7 @@ def countmin_heavy_hitters(documents: DataFrame, k: int = 20) -> DataFrame:
     terms = documents.select(F.explode(_words()).alias("term"))
     # exact counts once; top-k probes with deterministic (count desc, term) order
     exact = terms.groupBy("term").agg(F.count(F.lit(1)).alias("exact_count"))
-    probes = exact.orderBy(F.col("exact_count").desc(), F.col("term")).limit(k)
+    probes = exact.orderBy(F.col("exact_count").desc(), F.col("term")).limit(HEAVY_HITTERS_K)
 
     cells = terms.select(
         F.explode(
@@ -583,13 +586,12 @@ BM25_SCORE_SQL = (
     " * (CAST(0.25 AS DOUBLE) + (CAST(0.75 AS DOUBLE) * dl) / avgdl)))"
 )
 
-BM25_DEFAULT_QUERY = ("spark", "join", "window")
+BM25_QUERY = ("spark", "join", "window")
+BM25_K = 20
 
 
-def bm25_topk(
-    documents: DataFrame, query_terms: tuple[str, ...] = BM25_DEFAULT_QUERY, k: int = 20
-) -> DataFrame:
-    """Top-k documents for a fixed query by log-free BM25 (see
+def bm25_topk(documents: DataFrame) -> DataFrame:
+    """Top-BM25_K documents for the fixed BM25_QUERY by log-free BM25 (see
     BM25_SCORE_SQL): per-(doc, query-term) tf with document length carried
     THROUGH the explode (the tokenizer runs once per document, chunk
     precedent), query-term filter applied before any shuffle, score =
@@ -603,10 +605,7 @@ def bm25_topk(
     O(corpus tokens); df and the corpus stats are broadcast one-row /
     |query|-row relations; the global top-k is a WindowGroupLimit (rank
     pushdown), never a full sort."""
-    qs = [str(t) for t in query_terms]
-    if not qs:
-        raise ValueError("query_terms must be non-empty")
-
+    qs = list(BM25_QUERY)
     documents = fan_out(documents)  # tokenizer (both passes) parallel on narrow scans
     w = documents.select(F.col("doc_id").alias("key"), _words().alias("words"))
     # filter to query terms INSIDE the array, before the explode: the
@@ -670,7 +669,7 @@ def bm25_topk(
         .over(Window.partitionBy().orderBy(F.col("score").desc(), F.col("key")))
         .alias("rnk"),
     )
-    return ranked.where(F.col("rnk") <= k).select(F.col("key").alias("doc_id"), "score", "rnk")
+    return ranked.where(F.col("rnk") <= BM25_K).select(F.col("key").alias("doc_id"), "score", "rnk")
 
 
 def hll_union(documents: DataFrame) -> DataFrame:
@@ -691,9 +690,7 @@ def hll_union(documents: DataFrame) -> DataFrame:
     pairs = (
         documents.select(F.col("source").alias("grp"), F.explode(_words()).alias("term"))
         .distinct()
-        .select(
-            "grp", F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("bigint").alias("h")
-        )
+        .select("grp", md5_prefix_int("term").alias("h"))
     )
     rem_mod = 1 << HLL_REM_BITS
     ranks = pairs.select(

@@ -11,7 +11,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.columns import md5_prefix_int
 from ..plans.fanout import fan_out
+
+# The fixed shapes of the gated text queries, one home each (the oracle
+# twins read them at call time).
+QUERY_SAMPLE_FRACTION = 0.25  # sample, sample_complement, sampled_percentile_chars
+P90_NUM, P90_DEN = 9, 10  # the p of the lang_p90_chars and sampled_p90_chars queries
+REPETITION_N = 2  # word n-gram width of ngram_repetition / ngram_repetition_local
+CONTAMINATION_N = 8  # word n-gram width of contamination / bloom_contamination
+STRATIFIED_QUOTA = 40  # rows per language of stratified_sample
+QUERY_CHUNK_SIZE, QUERY_CHUNK_STRIDE = 32, 24  # the chunk_documents query's window
+PACK_CAPACITY, PACK_STREAMS = 512, 8  # pack_documents' window tokens and streams
+WEIGHTED_RATE, WEIGHTED_LENGTH_CAP = 0.5, 2000  # weighted_sample's inclusion rule
 
 # tiny stopword inventories; enough signal for a deterministic heuristic
 LANG_STOPWORDS = {
@@ -106,7 +118,7 @@ def rolling_fingerprint_col(text: Column) -> Column:
     # list_reduce): v may exceed M, v % M never does.
     vals = F.transform(
         words,
-        lambda w: F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("bigint") % F.lit(ROLLING_MOD),
+        lambda w: md5_prefix_int(w) % F.lit(ROLLING_MOD),
     )
     return F.aggregate(
         vals,
@@ -123,9 +135,7 @@ def sample_hash_col(key: Column) -> Column:
     the SAME rows are kept at any parallelism, on re-runs, and in the
     DuckDB oracle (Spark's df.sample is seed+partition dependent — useless
     for reproducible corpus construction)."""
-    return F.conv(F.substring(F.md5(key.cast("string")), 1, 8), 16, 10).cast("bigint") % F.lit(
-        SAMPLE_BUCKETS
-    )
+    return md5_prefix_int(key.cast("string")) % F.lit(SAMPLE_BUCKETS)
 
 
 def deterministic_sample(documents: DataFrame, fraction: float) -> DataFrame:
@@ -181,19 +191,20 @@ def exploded_word_ngrams(
     )
 
 
-def ngram_repetition(documents: DataFrame, n: int = 2) -> DataFrame:
+def ngram_repetition(documents: DataFrame) -> DataFrame:
     """Gopher-style within-document repetition signals: total / distinct
-    word n-grams, the modal n-gram's count, and the duplicate / top-gram
-    fractions quality filters threshold on.
+    word REPETITION_N-grams, the modal n-gram's count, and the duplicate /
+    top-gram fractions quality filters threshold on.
 
     Scale shape: RELATIONAL (explode -> two map-side-partial groupBys keyed
     by doc), not per-row array self-scans — the array version is O(grams^2)
     per document and melts on long documents, this is O(grams log grams)
     and spillable. Fractions are a single division of two exact BIGINTs,
-    bit-identical across engines. Documents shorter than n words have no
-    grams and drop out (inner semantics, documented)."""
+    bit-identical across engines. Documents shorter than REPETITION_N
+    words have no grams and drop out (inner semantics, documented)."""
     grams = documents.select(
-        F.col("doc_id").alias("key"), F.explode(_word_ngrams_col(F.col("text"), n)).alias("gram")
+        F.col("doc_id").alias("key"),
+        F.explode(_word_ngrams_col(F.col("text"), REPETITION_N)).alias("gram"),
     )
     per_gram = grams.groupBy("key", "gram").agg(F.count(F.lit(1)).alias("c"))
     agg = per_gram.groupBy("key").agg(
@@ -212,7 +223,7 @@ def ngram_repetition(documents: DataFrame, n: int = 2) -> DataFrame:
     )
 
 
-def ngram_repetition_local(documents: DataFrame, n: int = 2) -> DataFrame:
+def ngram_repetition_local(documents: DataFrame) -> DataFrame:
     """Shuffle-FREE twin of ngram_repetition: identical output, computed
     per row with a sorted-array fold instead of explode + groupBy.
 
@@ -224,7 +235,7 @@ def ngram_repetition_local(documents: DataFrame, n: int = 2) -> DataFrame:
     the fact table once and shuffles NOTHING. The relational form remains
     for pathological single-document sizes — a row's gram array must fit
     a task, while explode + groupBy spills arbitrarily."""
-    grams = _word_ngrams_col(F.col("text"), n)
+    grams = _word_ngrams_col(F.col("text"), REPETITION_N)
     zero = F.lit(0).cast("bigint")
     acc0 = F.struct(
         F.lit(None).cast("string").alias("prev"),
@@ -262,7 +273,7 @@ def ngram_repetition_local(documents: DataFrame, n: int = 2) -> DataFrame:
     # referencing _r gets pushed below the project and re-inlines the whole
     # fold into its condition (3 evaluations per row, measured); with the
     # independent predicate the sort+fold appears exactly once in the plan
-    short = F.size(F.split(F.trim(F.col("text")), r"\s+")) >= n
+    short = F.size(F.split(F.trim(F.col("text")), r"\s+")) >= REPETITION_N
     folded = documents.where(short).select(
         F.col("doc_id").alias("key"),
         F.aggregate(F.array_sort(grams), acc0, step, finish).alias("_r"),
@@ -277,10 +288,10 @@ def ngram_repetition_local(documents: DataFrame, n: int = 2) -> DataFrame:
     )
 
 
-def contamination(documents: DataFrame, benchmark: DataFrame, n: int = 8) -> DataFrame:
+def contamination(documents: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination: flag corpus documents sharing any word
-    n-gram with an eval/benchmark set (the standard pre-training hygiene
-    join). Returns (key, n_shared_grams) for contaminated documents only.
+    CONTAMINATION_N-gram with an eval/benchmark set (the standard
+    pre-training hygiene join). Returns (key, n_shared_grams) for contaminated documents only.
 
     Scale shape: grams are md5-hashed so only 32-char keys travel through
     the join; the benchmark side is distinct-deduped and broadcast (eval
@@ -290,7 +301,7 @@ def contamination(documents: DataFrame, benchmark: DataFrame, n: int = 8) -> Dat
     def gram_hashes(df: DataFrame) -> DataFrame:
         return df.select(
             F.col("doc_id").alias("key"),
-            F.explode(F.array_distinct(_word_ngrams_col(F.col("text"), n))).alias("gram"),
+            F.explode(F.array_distinct(_word_ngrams_col(F.col("text"), CONTAMINATION_N))).alias("gram"),
         ).select("key", F.md5("gram").alias("gram_hash"))
 
     bench = gram_hashes(benchmark).select("gram_hash").distinct()
@@ -331,7 +342,7 @@ def _bloom_probe_frame(grams: DataFrame) -> DataFrame:
     )
 
 
-def bloom_contamination(documents: DataFrame, benchmark: DataFrame, n: int = 8) -> DataFrame:
+def bloom_contamination(documents: DataFrame, benchmark: DataFrame) -> DataFrame:
     """Benchmark decontamination via a Bloom filter — the scale path of
     `contamination` for when the benchmark gram set is too large to
     broadcast raw (a few hundred GB of eval grams fits in a 8 KiB bitmap
@@ -347,7 +358,9 @@ def bloom_contamination(documents: DataFrame, benchmark: DataFrame, n: int = 8) 
 
     def gram_hashes(df: DataFrame) -> DataFrame:
         df = fan_out(df)  # n-gram explode + md5 dominate on narrow scans
-        return exploded_word_ngrams(df, n, distinct=True).select("key", F.md5("gram").alias("gram_hash"))
+        return exploded_word_ngrams(df, CONTAMINATION_N, distinct=True).select(
+            "key", F.md5("gram").alias("gram_hash")
+        )
 
     n_words = BLOOM_BITS // BLOOM_WORD_BITS
 
@@ -424,10 +437,8 @@ def lang_median_chars(documents: DataFrame) -> DataFrame:
         "p_chars", "median_chars"
     )
 
-def stratified_sample(
-    documents: DataFrame, quota: int, group_col: str = "lang", delta: float = 0.5
-) -> DataFrame:
-    """EXACT per-group quota sample: the `min(quota, n_g)` rows with the
+def stratified_sample(documents: DataFrame, delta: float = 0.5) -> DataFrame:
+    """EXACT per-`lang` quota sample: the `min(STRATIFIED_QUOTA, n_g)` rows with the
     smallest (md5-hash, key) per group — deterministic, parallelism- and
     arrival-order-independent, and with exact stratum sizes (Bernoulli
     sampling — deterministic_sample — has binomial noise per stratum;
@@ -451,10 +462,10 @@ def stratified_sample(
     payloads so document text never rides through the ranking shuffle."""
     from pyspark.sql import Window
 
-    M = float(2**32)
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("bigint")
+    M, quota = float(2**32), STRATIFIED_QUOTA
+    h = md5_prefix_int(F.col("doc_id").cast("string"))
     keyed = documents.select(
-        F.col("doc_id").alias("key"), F.col(group_col).alias("grp"), h.alias("h")
+        F.col("doc_id").alias("key"), F.col("lang").alias("grp"), h.alias("h")
     )
     counts = keyed.groupBy("grp").agg(F.count(F.lit(1)).alias("n_g"))
     # exact-double band edges: p = quota/n_g (one IEEE division), edges
@@ -509,7 +520,7 @@ def stratified_sample(
         [(r["grp"], r["n_below"]) for r in stats_rows],
         T.StructType(
             [
-                T.StructField("grp", documents.schema[group_col].dataType),
+                T.StructField("grp", documents.schema["lang"].dataType),
                 T.StructField("n_below", T.LongType()),
             ]
         ),
@@ -525,7 +536,7 @@ def stratified_sample(
     return full.unionByName(below.select("key", "grp")).unionByName(filled)
 
 
-def chunk_documents(documents: DataFrame, size: int = 32, stride: int = 24) -> DataFrame:
+def chunk_documents(documents: DataFrame, size: int, stride: int) -> DataFrame:
     """Context-window chunking with overlap (stride < size): chunk i
     covers tokens [i*stride, i*stride + size), starts every `stride`
     tokens while a start position remains, the final chunk clamps at the
@@ -556,10 +567,10 @@ def chunk_documents(documents: DataFrame, size: int = 32, stride: int = 24) -> D
     )
 
 
-def pack_documents(documents: DataFrame, capacity: int = 512, n_streams: int = 8) -> DataFrame:
+def pack_documents(documents: DataFrame) -> DataFrame:
     """Token-stream packing: concatenate documents (in deterministic
-    md5-hash order) into `n_streams` parallel token streams and cut each
-    stream into fixed-`capacity` context windows — each document is
+    md5-hash order) into PACK_STREAMS parallel token streams and cut each
+    stream into fixed PACK_CAPACITY-token context windows — each document is
     assigned to the window where its FIRST token lands (documents may
     straddle a window boundary, exactly like pre-training packing with
     cross-document attention masking). Deterministic at any parallelism.
@@ -567,17 +578,17 @@ def pack_documents(documents: DataFrame, capacity: int = 512, n_streams: int = 8
     Scale shape: the stream id is a hash mod (pure filter-free codegen);
     within a stream the running token offset is one window cumsum —
     strictly sequential per stream but parallel ACROSS streams, so
-    n_streams tracks the cluster and no single task sees the corpus.
+    PACK_STREAMS tracks the cluster and no single task sees the corpus.
     Output is (key, stream, window_id, tok_offset, n_tokens); integer-exact
     everywhere."""
     from pyspark.sql import Window
 
-    h = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("bigint")
+    h = md5_prefix_int(F.col("doc_id").cast("string"))
     n_tok = F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint")
     keyed = documents.select(
         F.col("doc_id").alias("key"),
         h.alias("h"),
-        F.pmod(h, F.lit(n_streams)).cast("bigint").alias("stream"),
+        F.pmod(h, F.lit(PACK_STREAMS)).cast("bigint").alias("stream"),
         n_tok.alias("n_tokens"),
     )
     w = (
@@ -590,10 +601,10 @@ def pack_documents(documents: DataFrame, capacity: int = 512, n_streams: int = 8
         "stream",
         (F.sum("n_tokens").over(w) - F.col("n_tokens")).alias("tok_offset"),
         "n_tokens",
-    ).withColumn("window_id", F.expr(f"tok_offset div {capacity}"))
+    ).withColumn("window_id", F.expr(f"tok_offset div {PACK_CAPACITY}"))
 
 
-def lang_percentile_chars(documents: DataFrame, p_num: int = 9, p_den: int = 10) -> DataFrame:
+def lang_percentile_chars(documents: DataFrame, p_num: int, p_den: int) -> DataFrame:
     """Exact per-language p-quantile (lower/disc form, p = p_num/p_den as
     an exact RATIONAL — no float p) of document length: the element at
     rank ceil(p * n) by (n_chars, doc_id). Generalizes lang_median_chars
@@ -669,17 +680,16 @@ def mixture_allocate(documents: DataFrame, budget: int, weight_col: str = "n_cha
     )
 
 
-def sampled_percentile_chars(
-    documents: DataFrame, fraction: float = 0.25, p_num: int = 9, p_den: int = 10
-) -> DataFrame:
+def sampled_percentile_chars(documents: DataFrame) -> DataFrame:
     """Sketch-style quantile ESTIMATE: the exact rank-selected percentile
-    of a deterministic md5-bucket sample. The exact operator sorts every
-    group member (spills at corpus scale); this sorts only fraction*N rows
+    (P90_NUM/P90_DEN) of a deterministic md5-bucket sample of
+    QUERY_SAMPLE_FRACTION. The exact operator sorts every group member
+    (spills at corpus scale); this sorts only fraction*N rows
     with the standard binomial rank-error bound — and, unlike t-digest/
     KLL, the estimate is a pure function of the data (same sample set at
     any parallelism), so it hash-gates across engines. One narrow filter
     + the percentile's single shuffle."""
-    out = lang_percentile_chars(deterministic_sample(documents, fraction), p_num, p_den)
+    out = lang_percentile_chars(deterministic_sample(documents, QUERY_SAMPLE_FRACTION), P90_NUM, P90_DEN)
     return out.select(
         "lang",
         F.col("p_chars").alias("p_chars_est"),
@@ -819,21 +829,22 @@ def lang_length_regression(documents: DataFrame) -> DataFrame:
     )
 
 
-def weighted_sample(documents: DataFrame, length_cap: int = 2000) -> DataFrame:
+def weighted_sample(documents: DataFrame) -> DataFrame:
     """Deterministic LENGTH-WEIGHTED Bernoulli sample: each document is
-    kept with probability 0.5 * min(n_chars, cap) / cap — the
+    kept with probability WEIGHTED_RATE * min(n_chars, cap) / cap, cap =
+    WEIGHTED_LENGTH_CAP — the
     quality-weighted inclusion rule mixture builders use (longer docs
     proportionally likelier, hard-capped) — with the same md5-bucket
     determinism contract as deterministic_sample: identical keep-set at
     any parallelism, on re-runs, and in the oracle.
 
     The comparison is EXACT integer arithmetic (no float weight): keep
-    iff bucket * cap < round(0.5 * BUCKETS) * min(n_chars, cap).
+    iff bucket * cap < round(WEIGHTED_RATE * BUCKETS) * min(n_chars, cap).
     Zero shuffles — a pure codegen filter."""
-    rate_num = int(round(0.5 * SAMPLE_BUCKETS))
-    w = F.least(F.col("n_chars"), F.lit(int(length_cap)))
+    rate_num = int(round(WEIGHTED_RATE * SAMPLE_BUCKETS))
+    w = F.least(F.col("n_chars"), F.lit(WEIGHTED_LENGTH_CAP))
     return documents.where(
-        sample_hash_col(F.col("doc_id")) * F.lit(int(length_cap)) < w * F.lit(rate_num)
+        sample_hash_col(F.col("doc_id")) * F.lit(WEIGHTED_LENGTH_CAP) < w * F.lit(rate_num)
     ).select("doc_id", "lang", "n_chars")
 
 

@@ -18,17 +18,19 @@ from ..functions import cellgrid
 from ..plans.localtable import literal_table
 
 DEFAULT_TILE_RES = 8  # ~1.4 degree tiles
+GEOHASH_PRECISION = 5  # geohash_counts' cell length
+ZOOM_LEVELS = 2  # resolutions tile_zoom_rollup climbs
 
 
-def with_tile(df: DataFrame, res: int = DEFAULT_TILE_RES) -> DataFrame:
-    return df.withColumn("tile_id", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), res))
+def with_tile(df: DataFrame) -> DataFrame:
+    return df.withColumn("tile_id", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), DEFAULT_TILE_RES))
 
 
-def tile_doc_counts(pages: DataFrame, res: int = DEFAULT_TILE_RES) -> DataFrame:
+def tile_doc_counts(pages: DataFrame) -> DataFrame:
     """Raster aggregation of the document point cloud: docs per tile plus
     language diversity."""
     return (
-        with_tile(pages, res)
+        with_tile(pages)
         .groupBy("tile_id")
         .agg(
             F.count(F.lit(1)).alias("doc_count"),
@@ -38,12 +40,12 @@ def tile_doc_counts(pages: DataFrame, res: int = DEFAULT_TILE_RES) -> DataFrame:
     )
 
 
-def tile_class_rollup(join_out: DataFrame, res: int = DEFAULT_TILE_RES) -> DataFrame:
+def tile_class_rollup(join_out: DataFrame) -> DataFrame:
     """Rollup over (tile, airspace class): doc counts at tile x class,
     tile subtotal, and grand total (grouping-sets semantics identical in
     Spark and ANSI SQL ROLLUP)."""
     return (
-        with_tile(join_out, res)
+        with_tile(join_out)
         .rollup("tile_id", "airspace_class")
         .agg(
             F.count(F.lit(1)).alias("doc_count"),
@@ -52,7 +54,7 @@ def tile_class_rollup(join_out: DataFrame, res: int = DEFAULT_TILE_RES) -> DataF
     )
 
 
-def parent_tile_col(tile: F.Column, levels: int = 1) -> F.Column:
+def parent_tile_col(tile: F.Column, levels: int) -> F.Column:
     """Parent cell id `levels` resolutions up, by pure integer arithmetic on
     the packed (res, y, x) id — the hierarchical-grid analogue of
     h3_to_parent. _SHIFT is 2^29, so unpacking is exact shift/mask bigint
@@ -65,15 +67,16 @@ def parent_tile_col(tile: F.Column, levels: int = 1) -> F.Column:
     return ((res - levels) * shift + F.shiftright(y, levels)) * shift + F.shiftright(x, levels)
 
 
-def tile_zoom_rollup(tiles: DataFrame, levels: int = 1) -> DataFrame:
-    """Re-aggregate an EXISTING per-tile table to a coarser zoom without
-    rescanning the fact table: children map to parents by id arithmetic
-    (2^levels x 2^levels children per parent), then one small shuffle on
+def tile_zoom_rollup(tiles: DataFrame) -> DataFrame:
+    """Re-aggregate an EXISTING per-tile table ZOOM_LEVELS resolutions
+    coarser without rescanning the fact table: children map to parents by
+    id arithmetic (2^ZOOM_LEVELS x 2^ZOOM_LEVELS children per parent),
+    then one small shuffle on
     the parent key. This is how zoom pyramids are built at 100 TB — the
     fact scan happens once at the finest res, every coarser level costs
     only a tiles-sized aggregation."""
     return (
-        tiles.withColumn("tile_id", parent_tile_col(F.col("tile_id"), levels))
+        tiles.withColumn("tile_id", parent_tile_col(F.col("tile_id"), ZOOM_LEVELS))
         .groupBy("tile_id")
         .agg(
             F.sum("doc_count").alias("doc_count"),
@@ -122,6 +125,7 @@ def tile_vector_export(pages: DataFrame) -> DataFrame:
 # The oracle still derives ytile independently (boundary-latitude interval
 # containment, no transcendentals at query time).
 MERCATOR_MAX_GATED_Z = 12
+XYZ_ZOOM = 11  # the zoom tile_xyz_export writes
 
 
 def xtile_sql(lon_expr: str, z: int) -> str:
@@ -167,15 +171,16 @@ def quadkey_sql(x_expr: str, y_expr: str, z: int, dialect: str) -> str:
     return "concat(" + ", ".join(digits) + ")"
 
 
-def tile_xyz_export(pages: DataFrame, z: int = 11) -> DataFrame:
-    """Slippy-map tile export: per-XYZ-tile document counts, language
-    diversity, and text volume, keyed by (zoom, x, y) + quadkey. The tile
+def tile_xyz_export(pages: DataFrame) -> DataFrame:
+    """Slippy-map tile export at XYZ_ZOOM: per-XYZ-tile document counts,
+    language diversity, and text volume, keyed by (zoom, x, y) + quadkey. The tile
     encode is a codegen'd column expression on the fact table (no UDF, no
     driver work); the exact count_distinct(lang) plans as the standard
     two-phase distinct aggregate — a map-side partial on (x, y, lang), then
     a second tiles-sized shuffle — both exchanges move pre-aggregated
     rows, never documents; the quadkey is computed AFTER aggregation so
     its z string ops run per-tile, not per-document."""
+    z = XYZ_ZOOM
     xy = pages.select(
         "lang",
         F.length("text").alias("nb"),
@@ -201,7 +206,7 @@ def tile_xyz_export(pages: DataFrame, z: int = 11) -> DataFrame:
     )
 
 
-def geohash_counts(pages: DataFrame, precision: int = 5) -> DataFrame:
+def geohash_counts(pages: DataFrame) -> DataFrame:
     """Per-geohash-cell page counts — the base32 sibling of the native
     cell grid and XYZ tiles (see functions/geohash.py for why the closed
     floor form is cross-engine exact with NO margin proof). Staged
@@ -210,11 +215,11 @@ def geohash_counts(pages: DataFrame, precision: int = 5) -> DataFrame:
     is ~50 integer ops per row inside codegen. One shuffle (the rollup)."""
     from ..functions import geohash as gh
 
-    lon_idx, lat_idx = gh.geohash_idx_sql("lat", "lon", precision)
+    lon_idx, lat_idx = gh.geohash_idx_sql("lat", "lon", GEOHASH_PRECISION)
     return (
         pages.selectExpr(f"{lon_idx} AS gh_lon_idx", f"{lat_idx} AS gh_lat_idx")
-        .selectExpr(f"{gh.geohash_interleave_sql(precision, 'spark')} AS gh_i")
-        .selectExpr(f"{gh.geohash_chars_sql(precision, 'spark')} AS geohash")
+        .selectExpr(f"{gh.geohash_interleave_sql(GEOHASH_PRECISION, 'spark')} AS gh_i")
+        .selectExpr(f"{gh.geohash_chars_sql(GEOHASH_PRECISION, 'spark')} AS geohash")
         .groupBy("geohash")
         .agg(F.count(F.lit(1)).alias("n_pages"))
     )
@@ -253,7 +258,7 @@ def geohash_pyramid(pages: DataFrame) -> DataFrame:
     )
 
 
-def tile_mode_class(join_out: DataFrame, res: int = DEFAULT_TILE_RES) -> DataFrame:
+def tile_mode_class(join_out: DataFrame) -> DataFrame:
     """Dominant airspace class per tile — the categorical MODE, the raster
     labeling step of a choropleth/classification export. Output (tile_id,
     airspace_class, doc_count); ties on count break to the LARGEST class
@@ -264,7 +269,7 @@ def tile_mode_class(join_out: DataFrame, res: int = DEFAULT_TILE_RES) -> DataFra
     (count, class) lexicographically — so the second aggregation needs no
     window, no sort, and re-shuffles only tile-level rows."""
     return (
-        with_tile(join_out, res)
+        with_tile(join_out)
         .groupBy("tile_id", "airspace_class")
         .agg(F.count(F.lit(1)).alias("n"))
         .groupBy("tile_id")
@@ -277,9 +282,7 @@ def tile_mode_class(join_out: DataFrame, res: int = DEFAULT_TILE_RES) -> DataFra
     )
 
 
-def tile_unmatched_counts(
-    pages: DataFrame, join_out: DataFrame, res: int = DEFAULT_TILE_RES
-) -> DataFrame:
+def tile_unmatched_counts(pages: DataFrame, join_out: DataFrame) -> DataFrame:
     """Raster rollup of the pages NO airspace matched (the spatial
     anti-join — 'unclassified airspace' coverage gaps a tiling service
     must render too): (tile_id, n_unmatched). Matched urls arrive from
@@ -287,7 +290,7 @@ def tile_unmatched_counts(
     url/tile-granularity shuffles — the PIP work is NOT redone here."""
     matched = join_out.select("url").distinct()
     unmatched = pages.join(matched, "url", "left_anti")
-    return with_tile(unmatched, res).groupBy("tile_id").agg(
+    return with_tile(unmatched).groupBy("tile_id").agg(
         F.count(F.lit(1)).alias("n_unmatched")
     )
 

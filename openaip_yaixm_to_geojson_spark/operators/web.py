@@ -29,6 +29,7 @@ PAT_PARAGRAPH = r"(?s)<p[^>]*>(.*?)</p>"
 # minimal entity set; &amp; must decode LAST or it would double-decode
 ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&")]
 PAT_HOST = r"^[a-z]+://([^/]+)"
+HOST_CAP = 3  # pages host_cap keeps per host
 
 
 def strip_markup_col(html_text: Column) -> Column:
@@ -164,9 +165,9 @@ def canonical_url_dedup(pages: DataFrame) -> DataFrame:
     )
 
 
-def host_cap(pages: DataFrame, cap: int = 3) -> DataFrame:
+def host_cap(pages: DataFrame) -> DataFrame:
     """Per-host document quota (per-domain frequency capping): keep at most
-    `cap` pages per host, chosen by md5(url) order so the SAME pages
+    HOST_CAP pages per host, chosen by md5(url) order so the SAME pages
     survive at any parallelism, on re-runs, and in the DuckDB oracle —
     never by arrival order, which is partition-dependent.
 
@@ -181,7 +182,7 @@ def host_cap(pages: DataFrame, cap: int = 3) -> DataFrame:
     ranked = pages.select(url_host_col(F.col("url")).alias("host"), "url").withColumn(
         "host_rank", F.row_number().over(Window.partitionBy("host").orderBy(F.md5("url")))
     )
-    return ranked.where(F.col("host_rank") <= cap)
+    return ranked.where(F.col("host_rank") <= HOST_CAP)
 
 
 # --- deterministic synthetic html (gate scaffolding) -----------------------
@@ -353,7 +354,7 @@ def link_pagerank(pages: DataFrame) -> DataFrame:
     from .graph import pagerank_int
 
     nodes, edges = _host_graph(pages)
-    return pagerank_int(nodes, edges, iters=3, key_col="host")
+    return pagerank_int(nodes, edges, key_col="host")
 
 
 PAT_ANCHOR = '<a href="([^"]*)"[^>]*>([^<]*)</a>'
@@ -752,4 +753,4 @@ def web_prefilter(pages: DataFrame) -> DataFrame:
     )
     verdict = robots_filter(rep)
     keep = rep.join(verdict.where(F.col("allowed")).select("url"), "url")
-    return host_cap(keep, cap=3)
+    return host_cap(keep)

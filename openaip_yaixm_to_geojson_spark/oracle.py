@@ -7,7 +7,9 @@ CASE decision tables, even-odd point-in-polygon over embedded polygon
 edges, MinHash via list lambdas, decimal-exact dot products) — it is not a
 dump of expected outputs, except for `airspace_features`, whose VALUES are
 produced by the driver-side converter twin that pytest pins to the
-reference goldens.
+reference goldens. The fixed query values (`k`, windows, thresholds) are
+the engine's module constants, read at call time as module attributes
+(`knn.KNN_K`), so an edit of one value moves both sides.
 
 Float-parity ground rules (shared with the Spark side):
 * md5/ascii/integer arithmetic only for synthetic derivations;
@@ -26,10 +28,10 @@ import numpy as np
 from .functions.cellgrid import cell_id_sql
 from .functions.classmap import COMBO_TABLE, RULE_TYPES, TYPE_ONLY, TYPE_RENAME
 from .functions.convert_local import fixture_polygons
-from .operators.dedup import MINHASH_NUM_HASHES
-from .operators.spatial import DEFAULT_JOIN_RES
-from .operators.tiles import DEFAULT_TILE_RES
-from .sources.pages import lat_sql, lon_sql, pages_cte, warc_ts_seconds_sql
+from .operators import dedup, events, graph, knn, multimodal, relational, similarity, spatial, terms, text, tiles, web
+from .plans import pipeline
+from .sources import warc
+from .sources.pages import pages_cte, warc_ts_seconds_sql
 
 # ---------------------------------------------------------------------------
 # shared fragments
@@ -103,7 +105,7 @@ def pip_hits_cte() -> str:
 def sql_page_cells() -> str:
     return (
         f"WITH {pages_with()} "
-        f"SELECT url, lat, lon, {cell_id_sql('lon', 'lat', DEFAULT_JOIN_RES)} AS cell FROM pages"
+        f"SELECT url, lat, lon, {cell_id_sql('lon', 'lat', spatial.DEFAULT_JOIN_RES)} AS cell FROM pages"
     )
 
 
@@ -123,10 +125,12 @@ def sql_join_count_by_airspace() -> str:
     )
 
 
-def sql_range_partition_plan(n_bins: int = 8) -> str:
+def sql_range_partition_plan() -> str:
     """relational.range_partition_plan twin: value-granularity histogram,
     cumulative count over sorted distinct values, edge_j = min value whose
     cum reaches the identical ceil-div target, bin = #edges < value."""
+    n_bins = relational.RANGE_PARTITION_BINS
+
     return f"""WITH h AS (SELECT n_chars AS v, CAST(COUNT(*) AS BIGINT) AS c
            FROM documents GROUP BY 1),
 cm AS (SELECT v, c,
@@ -144,19 +148,19 @@ SELECT bin_id, MIN(v) AS lo_value, MAX(v) AS hi_value,
 FROM asg GROUP BY bin_id"""
 
 
-def sql_page_zorder(res: int = 12) -> str:
+def sql_page_zorder() -> str:
     """spatial.page_zorder twin: identical floor-encode coordinates and the
     SAME morton_terms interleave (integer div/mod/mul only; DuckDB `//`
     spelling of Spark's `div`)."""
     from .functions.cellgrid import cell_size_deg, morton_terms
 
-    size = repr(cell_size_deg(res))
+    size = repr(cell_size_deg(spatial.ZORDER_RES))
     return f"""WITH {pages_with()},
 xy AS (SELECT url,
        CAST(FLOOR((lon + 180.0) / {size}) AS BIGINT) AS zx,
        CAST(FLOOR((lat + 90.0) / {size}) AS BIGINT) AS zy
        FROM pages)
-SELECT url, CAST({morton_terms('zx', 'zy', res, '//')} AS BIGINT) AS zkey FROM xy"""
+SELECT url, CAST({morton_terms('zx', 'zy', spatial.ZORDER_RES, '//')} AS BIGINT) AS zkey FROM xy"""
 
 
 def sql_salt_plan() -> str:
@@ -164,8 +168,6 @@ def sql_salt_plan() -> str:
     smaller cell), salt = ceil-div clamped to [1, 64] in integer
     arithmetic. Resolution and rows per task are read from the engine's
     constants at call time, so both sides share one salt target."""
-    from .operators import spatial
-
     res, rows_per_task = spatial.DEFAULT_JOIN_RES, spatial.ROWS_PER_TASK
     return f"""WITH {pages_with()},
 h AS (SELECT {cell_id_sql('lon', 'lat', res)} AS cell, CAST(COUNT(*) AS BIGINT) AS n_pages
@@ -191,12 +193,13 @@ FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY url ORDER BY dist_sq, poly_id) A
 WHERE rn = 1"""
 
 
-def sql_knn_k(k: int = 3) -> str:
+def sql_knn_k() -> str:
     """knn.knn_k twin, index-free: per-(url, poly_id) MIN vertex distance
     over ALL embedded vertices (a polygon's many vertices fill one slot),
-    then ROW_NUMBER by (dist_sq, poly_id) kept through rank k — verifying
-    the k-th-distance finalization bound, the min-per-poly_id cross-round
-    merge and the round-candidate truncation against brute force."""
+    then ROW_NUMBER by (dist_sq, poly_id) kept through rank KNN_K —
+    verifying the k-th-distance finalization bound, the min-per-poly_id
+    cross-round merge and the round-candidate truncation against brute
+    force."""
     return f"""WITH {pages_with()},
 d AS (
   SELECT p.url, v.poly_id,
@@ -206,12 +209,13 @@ d AS (
 )
 SELECT url, CAST(rn AS INT) AS rnk, poly_id, dist_sq
 FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY url ORDER BY dist_sq, poly_id) AS rn FROM d)
-WHERE rn <= {k}"""
+WHERE rn <= {knn.KNN_K}"""
 
 
-def sql_knn_edge_k(k: int = 3) -> str:
+def sql_knn_edge_k() -> str:
     """knn.knn_edge_k twin: the sql_knn_edge point-to-segment formulation
-    (identical clamped-projection op order) ranked through k instead of 1."""
+    (identical clamped-projection op order) ranked through KNN_K instead
+    of 1."""
     return f"""WITH {pages_with()},
 seg AS (
   SELECT p.url, e.poly_id,
@@ -233,10 +237,10 @@ dd AS (
 d AS (SELECT url, poly_id, MIN(ex * ex + ey * ey) AS dist_sq FROM dd GROUP BY url, poly_id)
 SELECT url, CAST(rn AS INT) AS rnk, poly_id, dist_sq
 FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY url ORDER BY dist_sq, poly_id) AS rn FROM d)
-WHERE rn <= {k}"""
+WHERE rn <= {knn.KNN_K}"""
 
 
-def sql_geo_cluster_cells(res: int = 7, min_pts: int = 2) -> str:
+def sql_geo_cluster_cells() -> str:
     """spatial.geo_cluster_cells twin with an INDEPENDENT component
     strategy: the dense-cell adjacency closure as a recursive-CTE
     fixpoint (reachability x label, UNION-deduped) and cluster_id =
@@ -246,9 +250,9 @@ def sql_geo_cluster_cells(res: int = 7, min_pts: int = 2) -> str:
     from .functions.cellgrid import _SHIFT
 
     return f"""WITH RECURSIVE {pages_with()},
-c AS (SELECT {cell_id_sql('lon', 'lat', res)} AS cell FROM pages),
+c AS (SELECT {cell_id_sql('lon', 'lat', spatial.GEO_CLUSTER_RES)} AS cell FROM pages),
 d AS (SELECT cell, CAST(COUNT(*) AS BIGINT) AS n_points FROM c
-      GROUP BY cell HAVING COUNT(*) >= {min_pts}),
+      GROUP BY cell HAVING COUNT(*) >= {spatial.GEO_CLUSTER_MIN_PTS}),
 xy AS (SELECT cell, cell % {_SHIFT} AS x, (cell // {_SHIFT}) % {_SHIFT} AS y, n_points FROM d),
 e AS (SELECT a.cell AS src, b.cell AS dst FROM xy a JOIN xy b
       ON abs(a.x - b.x) <= 1 AND abs(a.y - b.y) <= 1 AND a.cell <> b.cell),
@@ -261,7 +265,7 @@ lbl AS (SELECT cell, MIN(lab) AS cluster_id FROM reach GROUP BY cell)
 SELECT xy.cell, lbl.cluster_id, xy.n_points FROM xy JOIN lbl ON lbl.cell = xy.cell"""
 
 
-def sql_knn_points(k: int = 8, query_mod: int = 7) -> str:
+def sql_knn_points() -> str:
     """knn.knn_points twin, deliberately index-free: every md5-sampled
     query ranked against the FULL page set by the identical planar
     squared-degree distance (dx*dx + dy*dy, same op order), ROW_NUMBER
@@ -269,14 +273,14 @@ def sql_knn_points(k: int = 8, query_mod: int = 7) -> str:
     finalization bound and fallback against brute force."""
     return f"""WITH {pages_with()},
 qh AS (SELECT url, lat, lon, md5(url) AS mh FROM pages),
-q AS (SELECT url, lat, lon FROM qh WHERE {_hexcol_sql('mh', 1)} % {query_mod} = 0),
+q AS (SELECT url, lat, lon FROM qh WHERE {_hexcol_sql('mh', 1)} % {knn.KNN_POINTS_QUERY_MOD} = 0),
 pr AS (SELECT q.url, p.url AS neighbor,
               (p.lon - q.lon) AS dx, (p.lat - q.lat) AS dy
        FROM q JOIN pages p ON p.url <> q.url),
 d AS (SELECT url, neighbor, dx * dx + dy * dy AS dist_sq FROM pr),
 r AS (SELECT url, neighbor, dist_sq,
       ROW_NUMBER() OVER (PARTITION BY url ORDER BY dist_sq, neighbor) AS rn FROM d)
-SELECT url, CAST(rn AS INT) AS rnk, neighbor, dist_sq FROM r WHERE rn <= {k}"""
+SELECT url, CAST(rn AS INT) AS rnk, neighbor, dist_sq FROM r WHERE rn <= {knn.KNN_POINTS_K}"""
 
 
 def rings_values() -> str:
@@ -431,9 +435,9 @@ def sql_tile_nearest_airspace() -> str:
     clamped-projection formulation, ties to the smaller poly_id."""
     from .functions.cellgrid import _SHIFT, cell_size_deg
 
-    size = cell_size_deg(DEFAULT_TILE_RES)
+    size = cell_size_deg(tiles.DEFAULT_TILE_RES)
     return f"""WITH {pages_with()},
-tl AS (SELECT {cell_id_sql('lon', 'lat', DEFAULT_TILE_RES)} AS tile_id, CAST(COUNT(*) AS BIGINT) AS n_docs
+tl AS (SELECT {cell_id_sql('lon', 'lat', tiles.DEFAULT_TILE_RES)} AS tile_id, CAST(COUNT(*) AS BIGINT) AS n_docs
        FROM pages GROUP BY 1),
 ct AS (SELECT tile_id, n_docs,
        CAST(-180.0 AS DOUBLE) + (CAST(tile_id % {_SHIFT} AS DOUBLE) + CAST(0.5 AS DOUBLE)) * CAST({size!r} AS DOUBLE) AS lon,
@@ -466,7 +470,7 @@ WHERE rn = 1"""
 def sql_tile_doc_counts() -> str:
     return (
         f"WITH {pages_with()} "
-        f"SELECT {cell_id_sql('lon', 'lat', DEFAULT_TILE_RES)} AS tile_id, "
+        f"SELECT {cell_id_sql('lon', 'lat', tiles.DEFAULT_TILE_RES)} AS tile_id, "
         "COUNT(*) AS doc_count, COUNT(DISTINCT lang) AS n_langs, "
         # DuckDB SUM(int) widens to HUGEINT (int128); Spark's is BIGINT. The
         # driver's hasher stringifies by type, so cast to match (r1 red cell).
@@ -479,15 +483,15 @@ def sql_tile_zoom_rollup() -> str:
     """Child tiles re-aggregated to their parent via exact shift/mask
     arithmetic on the packed (res, y, x) id — same ops as
     operators/tiles.parent_tile_col."""
-    S = 536870912  # 2^29
+    S, lv = 536870912, tiles.ZOOM_LEVELS  # S = 2^29
     parent = (
-        f"((((tile_id >> 58) - 2) * {S} + (((tile_id >> 29) & {S - 1}) >> 2)) * {S}"
-        f" + ((tile_id & {S - 1}) >> 2))"
+        f"((((tile_id >> 58) - {lv}) * {S} + (((tile_id >> 29) & {S - 1}) >> {lv})) * {S}"
+        f" + ((tile_id & {S - 1}) >> {lv}))"
     )
     return f"""
 WITH {pages_with()},
 t AS (
-  SELECT {cell_id_sql('lon', 'lat', DEFAULT_TILE_RES)} AS tile_id,
+  SELECT {cell_id_sql('lon', 'lat', tiles.DEFAULT_TILE_RES)} AS tile_id,
          COUNT(*) AS doc_count,
          CAST(SUM(LENGTH(text)) AS BIGINT) AS total_chars
   FROM pages GROUP BY 1
@@ -501,7 +505,7 @@ FROM t GROUP BY 1"""
 def sql_tile_class_rollup() -> str:
     return (
         f"WITH {pages_with()}, {pip_hits_cte()} "
-        f"SELECT {cell_id_sql('lon', 'lat', DEFAULT_TILE_RES)} AS tile_id, airspace_class, "
+        f"SELECT {cell_id_sql('lon', 'lat', tiles.DEFAULT_TILE_RES)} AS tile_id, airspace_class, "
         "COUNT(*) AS doc_count, COUNT(DISTINCT url) AS n_docs "
         "FROM hits GROUP BY ROLLUP(1, airspace_class)"
     )
@@ -574,9 +578,7 @@ FROM orders JOIN q ON o_orderkey = l_orderkey"""
 def sql_snapshot_diff() -> str:
     """relational.snapshot_diff twin over the deterministic v2 snapshot:
     same md5 content compare, same change classification."""
-    from .operators.relational import snapshot_v2_sql
-
-    return f"""WITH v2 AS ({snapshot_v2_sql('duckdb')}),
+    return f"""WITH v2 AS ({relational.snapshot_v2_sql('duckdb')}),
 o AS (SELECT doc_id AS key, md5(text) AS oh, TRUE AS in_old FROM documents),
 n AS (SELECT doc_id AS key, md5(text) AS nh, TRUE AS in_new FROM v2),
 j AS (SELECT COALESCE(o.key, n.key) AS key, oh, nh, in_old, in_new
@@ -606,14 +608,12 @@ SELECT o_orderkey, o_orderpriority, CAST(revenue_dec AS DOUBLE) AS revenue FROM 
 def sql_events_sessions() -> str:
     """Per-user gap sessions over the events table (epoch seconds via
     floor(epoch(ts)) — Spark's unix_timestamp floors the same way)."""
-    from .operators.events import SESSION_GAP_SECONDS
-
     return f"""WITH ev AS (
   SELECT CAST(user_id AS VARCHAR) AS key, CAST(floor(epoch(ts)) AS BIGINT) AS t FROM events
 ),
 m AS (
   SELECT key, t,
-         CASE WHEN t - lag(t) OVER (PARTITION BY key ORDER BY t) > {SESSION_GAP_SECONDS}
+         CASE WHEN t - lag(t) OVER (PARTITION BY key ORDER BY t) > {events.SESSION_GAP_SECONDS}
               THEN 1 ELSE 0 END AS ns
   FROM ev
 ),
@@ -623,14 +623,12 @@ FROM s GROUP BY key, sid"""
 
 
 def sql_event_type_windows() -> str:
-    from .operators.events import WINDOW_SECONDS
-
     return f"""WITH ev AS (
   SELECT CAST(floor(epoch(ts)) AS BIGINT) AS e, event_type,
          CAST(value AS DECIMAL(18,2)) AS v
   FROM events
 )
-SELECT e - e % {WINDOW_SECONDS} AS window_start, event_type,
+SELECT e - e % {events.WINDOW_SECONDS} AS window_start, event_type,
        COUNT(*) AS n_events,
        CAST(CAST(SUM(v) AS DECIMAL(38,2)) AS DOUBLE) AS total_value
 FROM ev GROUP BY 1, 2"""
@@ -896,26 +894,22 @@ def _hex8_sql(arg: str) -> str:
 def _minhash_hashes_expr() -> str:
     """Base hashes: one md5 per shingle, x = hex8(md5(s)) % P — identical
     to operators/dedup.shingle_hash_col."""
-    from .operators.dedup import MINHASH_P
-
-    return f"list_transform(shingles, s -> {_hex8_sql('s')} % {MINHASH_P})"
+    return f"list_transform(shingles, s -> {_hex8_sql('s')} % {dedup.MINHASH_P})"
 
 
 def _minhash_exprs() -> list[str]:
-    from .operators.dedup import MINHASH_P, minhash_params
-
     return [
         (
             f"list_aggregate(list_transform(hs, x -> (CAST({a} AS BIGINT) * x "
-            f"+ CAST({b} AS BIGINT)) % {MINHASH_P}), 'min')"
+            f"+ CAST({b} AS BIGINT)) % {dedup.MINHASH_P}), 'min')"
         )
-        for a, b in minhash_params()
+        for a, b in dedup.minhash_params()
     ]
 
 
 def sql_minhash_signatures() -> str:
     sig = ", ".join(f"{e} AS h{j}" for j, e in enumerate(_minhash_exprs()))
-    cols = ", ".join(f"h{j}" for j in range(MINHASH_NUM_HASHES))
+    cols = ", ".join(f"h{j}" for j in range(dedup.MINHASH_NUM_HASHES))
     return f"""
 WITH sh AS (SELECT doc_id, {SHINGLES_EXPR} AS shingles FROM documents),
 hashed AS (SELECT doc_id, {_minhash_hashes_expr()} AS hs FROM sh WHERE len(shingles) > 0),
@@ -924,9 +918,9 @@ SELECT doc_id, concat_ws('|', {cols}) AS signature FROM sig"""
 
 
 def sql_minhash_lsh_pairs(source: str = "documents") -> str:
-    rows_per_band = MINHASH_NUM_HASHES // 8
+    rows_per_band = dedup.MINHASH_NUM_HASHES // 8
     sig_exprs = ", ".join(f"{e} AS h{j}" for j, e in enumerate(_minhash_exprs()))
-    sig_list = "[" + ", ".join(f"h{j}" for j in range(MINHASH_NUM_HASHES)) + "]"
+    sig_list = "[" + ", ".join(f"h{j}" for j in range(dedup.MINHASH_NUM_HASHES)) + "]"
     return f"""
 WITH sh AS (SELECT doc_id AS key, {SHINGLES_EXPR} AS shingles FROM {source}),
 hashed AS (SELECT key, shingles, {_minhash_hashes_expr()} AS hs FROM sh WHERE len(shingles) > 0),
@@ -944,7 +938,7 @@ cands AS (
 SELECT key_a, key_b,
        CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE) / CAST(len(list_distinct(list_concat(sh_a, sh_b))) AS DOUBLE) AS jaccard
 FROM cands
-WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE) / CAST(len(list_distinct(list_concat(sh_a, sh_b))) AS DOUBLE) >= 0.5"""
+WHERE CAST(len(list_intersect(sh_a, sh_b)) AS DOUBLE) / CAST(len(list_distinct(list_concat(sh_a, sh_b))) AS DOUBLE) >= {dedup.MINHASH_JACCARD}"""
 
 
 def sql_lsh_recall_monitor() -> str:
@@ -967,7 +961,7 @@ tsh AS (SELECT key, shingles FROM tsh0 WHERE len(shingles) > 0),
 truth AS (
   SELECT a.key AS key_a, b.key AS key_b
   FROM tsh a JOIN tsh b ON a.key < b.key
-  WHERE {jac} >= 0.5
+  WHERE {jac} >= {dedup.MINHASH_JACCARD}
 ),
 found AS ({lsh}),
 missed AS (
@@ -999,7 +993,7 @@ SELECT DISTINCT a.key AS key_a, b.key AS key_b,
          / CAST(len(list_distinct(list_concat(a.shingles, b.shingles))) AS DOUBLE) AS jaccard
 FROM d a JOIN d b ON a.block = b.block AND a.key < b.key
 WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
-        / CAST(len(list_distinct(list_concat(a.shingles, b.shingles))) AS DOUBLE) >= 0.3
+        / CAST(len(list_distinct(list_concat(a.shingles, b.shingles))) AS DOUBLE) >= {dedup.NGRAM_JACCARD}
 """
 
 
@@ -1098,11 +1092,11 @@ WHERE bit_count(xor(a.simhash64, b.simhash64)) <= 3"""
 
 
 def _dot_expr(a: str, b: str) -> str:
-    """Dot product of two 64-dim embeddings as a strict left-fold double
+    """Dot product of two EMBED_DIM embeddings as a strict left-fold double
     sum — bit-identical to Spark's aggregate fold
     (operators/similarity.dot_double)."""
     return (
-        f"list_reduce(list_transform(generate_series(1, 64), "
+        f"list_reduce(list_transform(generate_series(1, {similarity.EMBED_DIM}), "
         f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)), (x, y) -> x + y)"
     )
 
@@ -1112,11 +1106,11 @@ def sql_ann_topk() -> str:
     return f"""
 WITH s AS (
   SELECT q.vec_id AS query_id, e.vec_id, {dot} AS dsum
-  FROM embeddings e JOIN embeddings q ON q.vec_id < 5 AND e.vec_id <> q.vec_id
+  FROM embeddings e JOIN embeddings q ON q.vec_id < {similarity.ANN_QUERIES} AND e.vec_id <> q.vec_id
 )
 SELECT query_id, vec_id, CAST(dsum AS DOUBLE) AS dot, rank
 FROM (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dsum DESC, vec_id) AS INTEGER) AS rank FROM s)
-WHERE rank <= 3"""
+WHERE rank <= {similarity.ANN_K}"""
 
 
 def _plane_list(plane) -> str:
@@ -1129,25 +1123,25 @@ def _bucket_expr(vec: str, n_planes: int) -> str:
     """LSH bucket id from hyperplane sign bits — identical fold to
     operators/similarity.lsh_bucket_col (left-fold double sum per plane,
     bit i set when projection onto plane i is >= 0)."""
-    from .operators.similarity import hyperplanes
-
-    planes = hyperplanes(64, n_planes)
+    planes = similarity.hyperplanes(similarity.EMBED_DIM, n_planes)
     terms = []
     for i, plane in enumerate(planes):
         proj = (
-            f"list_reduce(list_transform(generate_series(1, 64), "
+            f"list_reduce(list_transform(generate_series(1, {similarity.EMBED_DIM}), "
             f"j -> CAST({vec}[j] AS DOUBLE) * ({_plane_list(plane)})[j]), (x, y) -> x + y)"
         )
         terms.append(f"(CASE WHEN {proj} >= 0 THEN {1 << i} ELSE 0 END)")
     return "(" + " + ".join(terms) + ")"
 
 
-def sql_ann_lsh(n_planes: int = 2) -> str:
+def sql_ann_lsh() -> str:
     """Deterministic self-oracle for the LSH ANN path: hyperplanes are
     md5-derived (operators/similarity.hyperplanes), so bucket assignment,
     multiprobe neighbours, and in-bucket re-rank are all recomputable in
     SQL. This compares the approximate operator against ITSELF re-derived
     independently — the recall-vs-exact check lives in pytest."""
+    n_planes = similarity.ANN_LSH_PLANES
+
     dot = _dot_expr("e.embedding", "p.qvec")
     probe_list = "[bucket" + "".join(f", xor(bucket, {1 << i})" for i in range(n_planes)) + "]"
     return f"""
@@ -1157,7 +1151,7 @@ WITH corpus AS (
 q AS (
   SELECT vec_id AS query_id, embedding AS qvec,
          {_bucket_expr('embedding', n_planes)} AS bucket
-  FROM embeddings WHERE vec_id < 5
+  FROM embeddings WHERE vec_id < {similarity.ANN_QUERIES}
 ),
 probes AS (SELECT query_id, qvec, UNNEST({probe_list}) AS bucket FROM q),
 scored AS (
@@ -1166,30 +1160,28 @@ scored AS (
 )
 SELECT query_id, vec_id, CAST(dsum AS DOUBLE) AS dot, rank
 FROM (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dsum DESC, vec_id) AS INTEGER) AS rank FROM scored)
-WHERE rank <= 3"""
+WHERE rank <= {similarity.ANN_K}"""
 
 
 def sql_ann_ivf() -> str:
     """IVF ANN self-oracle: centroids are md5-derived
     (operators/similarity.ivf_centroids), so corpus list assignment
-    (argmax dot, lowest-id tie-break), query probe lists (top 4 by
-    dot desc, id asc) and the in-list re-rank are all mechanical SQL."""
-    from .operators.similarity import ivf_centroids
-
-    cents = ivf_centroids(64, 16)
+    (argmax dot, lowest-id tie-break), query probe lists (top IVF_PROBES
+    by dot desc, id asc) and the in-list re-rank are all mechanical SQL."""
+    cents = similarity.ivf_centroids(similarity.EMBED_DIM, similarity.IVF_CENTROIDS)
 
     def dot_lit(vec: str, c) -> str:
         return (
-            f"list_reduce(list_transform(generate_series(1, 64), "
+            f"list_reduce(list_transform(generate_series(1, {similarity.EMBED_DIM}), "
             f"j -> CAST({vec}[j] AS DOUBLE) * ({_plane_list(c)})[j]), (x, y) -> x + y)"
         )
 
     d_cols = ", ".join(f"{dot_lit('embedding', c)} AS d{i}" for i, c in enumerate(cents))
-    g = "GREATEST(" + ", ".join(f"d{i}" for i in range(16)) + ")"
-    argmax = "CASE " + " ".join(f"WHEN d{i} = g THEN {i}" for i in range(16)) + " END"
+    g = "GREATEST(" + ", ".join(f"d{i}" for i in range(similarity.IVF_CENTROIDS)) + ")"
+    argmax = "CASE " + " ".join(f"WHEN d{i} = g THEN {i}" for i in range(similarity.IVF_CENTROIDS)) + " END"
     cent_values = ",".join(f"({i}, {_plane_list(c)})" for i, c in enumerate(cents))
     qdot = (
-        "list_reduce(list_transform(generate_series(1, 64), "
+        f"list_reduce(list_transform(generate_series(1, {similarity.EMBED_DIM}), "
         "j -> CAST(a.embedding[j] AS DOUBLE) * c.w[j]), (x, y) -> x + y)"
     )
     rdot = _dot_expr("e.embedding", "p.qvec")
@@ -1204,8 +1196,8 @@ probes AS (
     SELECT a.vec_id AS query_id, a.embedding AS qvec, c.cid,
            ROW_NUMBER() OVER (PARTITION BY a.vec_id ORDER BY {qdot} DESC, c.cid) AS rn
     FROM embeddings a, (VALUES {cent_values}) AS c(cid, w)
-    WHERE a.vec_id < 5
-  ) WHERE rn <= 4
+    WHERE a.vec_id < {similarity.ANN_QUERIES}
+  ) WHERE rn <= {similarity.IVF_PROBES}
 ),
 scored AS (
   SELECT p.query_id, e.vec_id, {rdot} AS dsum
@@ -1213,10 +1205,10 @@ scored AS (
 )
 SELECT query_id, vec_id, CAST(dsum AS DOUBLE) AS dot, rank
 FROM (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dsum DESC, vec_id) AS INTEGER) AS rank FROM scored)
-WHERE rank <= 3"""
+WHERE rank <= {similarity.ANN_K}"""
 
 
-def sql_embedding_neardup_lsh(threshold: float = 0.6, n_planes: int = 8) -> str:
+def sql_embedding_neardup_lsh() -> str:
     """Scale-path (bucketed) near-dup oracle: candidates limited to pairs
     sharing an LSH bucket, cosine recomputed with the same left-fold dots as
     the exact oracle."""
@@ -1225,7 +1217,7 @@ def sql_embedding_neardup_lsh(threshold: float = 0.6, n_planes: int = 8) -> str:
     return f"""
 WITH v AS (
   SELECT vec_id, embedding, {nsq} AS norm_sq,
-         {_bucket_expr('embedding', n_planes)} AS bucket
+         {_bucket_expr('embedding', similarity.NEARDUP_LSH_PLANES)} AS bucket
   FROM embeddings
 ),
 pairs AS (
@@ -1233,10 +1225,10 @@ pairs AS (
          CAST({dot} AS DOUBLE) / sqrt(CAST(a.norm_sq AS DOUBLE) * CAST(b.norm_sq AS DOUBLE)) AS cosine
   FROM v a JOIN v b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
 )
-SELECT key_a, key_b, cosine FROM pairs WHERE cosine >= {threshold!r}"""
+SELECT key_a, key_b, cosine FROM pairs WHERE cosine >= {similarity.NEARDUP_COSINE!r}"""
 
 
-def sql_embedding_neardup(threshold: float = 0.6) -> str:
+def sql_embedding_neardup() -> str:
     dot = _dot_expr("a.embedding", "b.embedding")
     nsq_a = _dot_expr("a.embedding", "a.embedding")
     nsq_b = _dot_expr("b.embedding", "b.embedding")
@@ -1246,7 +1238,7 @@ WITH pairs AS (
          CAST({dot} AS DOUBLE) / sqrt(CAST({nsq_a} AS DOUBLE) * CAST({nsq_b} AS DOUBLE)) AS cosine
   FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
 )
-SELECT key_a, key_b, cosine FROM pairs WHERE cosine >= {threshold!r}"""
+SELECT key_a, key_b, cosine FROM pairs WHERE cosine >= {similarity.NEARDUP_COSINE!r}"""
 
 
 def _stopword_hits_sql(lang_words: list[str]) -> str:
@@ -1255,14 +1247,12 @@ def _stopword_hits_sql(lang_words: list[str]) -> str:
 
 
 def sql_langid() -> str:
-    from .operators.text import LANG_STOPWORDS
-
-    hits = {lang: _stopword_hits_sql(words) for lang, words in LANG_STOPWORDS.items()}
-    gmax = "GREATEST(" + ", ".join(f"h_{lang}" for lang in LANG_STOPWORDS) + ")"
+    hits = {lang: _stopword_hits_sql(words) for lang, words in text.LANG_STOPWORDS.items()}
+    gmax = "GREATEST(" + ", ".join(f"h_{lang}" for lang in text.LANG_STOPWORDS) + ")"
     # ties resolve to the lexicographically LARGEST language code, matching
     # greatest(struct(hits, lang)) on the Spark side
     case = " ".join(
-        f"WHEN h_{lang} = gmax THEN '{lang}'" for lang in sorted(LANG_STOPWORDS, reverse=True)
+        f"WHEN h_{lang} = gmax THEN '{lang}'" for lang in sorted(text.LANG_STOPWORDS, reverse=True)
     )
     cols = ", ".join(f"{expr} AS h_{lang}" for lang, expr in hits.items())
     return f"""
@@ -1309,10 +1299,8 @@ def sql_quality() -> str:
 def sql_sample() -> str:
     """Deterministic md5-bucket Bernoulli sample (operators/text.
     deterministic_sample): identical keep-set in both engines."""
-    from .operators.text import SAMPLE_BUCKETS
-
-    threshold = int(round(0.25 * SAMPLE_BUCKETS))
-    bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {SAMPLE_BUCKETS}"
+    threshold = int(round(text.QUERY_SAMPLE_FRACTION * text.SAMPLE_BUCKETS))
+    bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {text.SAMPLE_BUCKETS}"
     return f"SELECT doc_id, lang FROM documents WHERE {bucket} < {threshold}"
 
 
@@ -1320,14 +1308,11 @@ def sql_corpus_clean() -> str:
     """End-to-end corpus construction: quality filter -> exact-dup
     representative -> deterministic sample -> fingerprint + token count.
     One composed SQL recomputing the whole pipeline."""
-    from .operators.text import SAMPLE_BUCKETS
-    from .plans.pipeline import QUALITY_MIN, SAMPLE_FRACTION
-
     score = _quality_parts()["score"]
-    threshold = int(round(SAMPLE_FRACTION * SAMPLE_BUCKETS))
-    bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {SAMPLE_BUCKETS}"
+    threshold = int(round(pipeline.SAMPLE_FRACTION * text.SAMPLE_BUCKETS))
+    bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {text.SAMPLE_BUCKETS}"
     return f"""
-WITH f AS (SELECT doc_id, text FROM documents WHERE {score} >= {QUALITY_MIN!r}),
+WITH f AS (SELECT doc_id, text FROM documents WHERE {score} >= {pipeline.QUALITY_MIN!r}),
 reps AS (SELECT MIN(doc_id) AS doc_id FROM f GROUP BY md5(text)),
 s AS (SELECT f.doc_id, f.text FROM f JOIN reps USING (doc_id))
 SELECT doc_id,
@@ -1348,8 +1333,6 @@ def sql_rolling_fingerprint() -> str:
     """Word-level Rabin-Karp rolling hash, identical fold to
     operators/text.rolling_fingerprint_col (values pre-modded so the
     no-seed list_reduce matches Spark's zero-seeded aggregate)."""
-    from .operators.text import ROLLING_BASE, ROLLING_MOD
-
     hexval = (
         "CAST((CASE WHEN ascii(substring(md5(w), {i}, 1)) >= 97 "
         "THEN ascii(substring(md5(w), {i}, 1)) - 87 "
@@ -1359,11 +1342,11 @@ def sql_rolling_fingerprint() -> str:
     return f"""
 WITH vals AS (
   SELECT doc_id,
-         list_transform({_WORDS}, w -> CAST(({v}) AS BIGINT) % {ROLLING_MOD}) AS vs
+         list_transform({_WORDS}, w -> CAST(({v}) AS BIGINT) % {text.ROLLING_MOD}) AS vs
   FROM documents
 )
 SELECT doc_id,
-       CAST(list_reduce(vs, (x, y) -> (x * {ROLLING_BASE} + y) % {ROLLING_MOD}) AS BIGINT) AS rolling_fp
+       CAST(list_reduce(vs, (x, y) -> (x * {text.ROLLING_BASE} + y) % {text.ROLLING_MOD}) AS BIGINT) AS rolling_fp
 FROM vals"""
 
 
@@ -1442,14 +1425,12 @@ m AS (SELECT p.url, rl.rule_path, rl.allow,
 SELECT url, allow AS allowed, rule_path AS matched_rule FROM m WHERE rn = 1"""
 
 
-def sql_warc_read(n_files: int = 6, records_per_file: int = 50) -> str:
+def sql_warc_read() -> str:
     """Oracle for the REAL WARC ingest: record content derives from
     (file_id, rec_id) via md5 chains, so every extracted row — url,
     parsed WARC-Date epoch seconds, payload length and payload md5 — is
     recomputable in SQL, while the Spark side must walk real multi-member
     gzip files and parse real WARC headers to land on the same values."""
-    from .sources.warc import WARC_EPOCH
-
     html = (
         "'<html><head><title>page ' || CAST(fid AS VARCHAR) || '/' || CAST(rid AS VARCHAR)"
         " || '</title></head><body><p>crawl body '"
@@ -1458,18 +1439,18 @@ def sql_warc_read(n_files: int = 6, records_per_file: int = 50) -> str:
     )
     return f"""WITH g AS (
   SELECT f.fid, r.rid
-  FROM (SELECT UNNEST(generate_series(0, {n_files - 1})) AS fid) f,
-       (SELECT UNNEST(generate_series(0, {records_per_file - 1})) AS rid) r
+  FROM (SELECT UNNEST(generate_series(0, {warc.WARC_FILES - 1})) AS fid) f,
+       (SELECT UNNEST(generate_series(0, {warc.WARC_RECORDS_PER_FILE - 1})) AS rid) r
 ),
 h AS (SELECT fid, rid, {html} AS html FROM g)
 SELECT 'https://warc.example/' || CAST(fid AS VARCHAR) || '/' || CAST(rid AS VARCHAR) AS url,
-       CAST({WARC_EPOCH} + fid * 86400 + rid * 37 AS BIGINT) AS warc_ts_s,
+       CAST({warc.WARC_EPOCH} + fid * 86400 + rid * 37 AS BIGINT) AS warc_ts_s,
        CAST(length(html) AS BIGINT) AS n_bytes,
        md5(html) AS html_md5
 FROM h"""
 
 
-def sql_multimodal_gif_features(n: int = 300) -> str:
+def sql_multimodal_gif_features() -> str:
     """Oracle for the REAL GIF (LZW) decode path: pixels are the first
     w*h chained-md5 bytes (seed '{id}-px'), so the grayscale statistics
     are recomputable exactly — the Spark side must LZW-decode genuine GIF
@@ -1485,7 +1466,7 @@ def sql_multimodal_gif_features(n: int = 300) -> str:
     mean = f"(s / CAST({float(npx)!r} AS DOUBLE))"
     var = f"((ss / CAST({float(npx)!r} AS DOUBLE)) - {mean} * {mean})"
     return f"""
-WITH m AS (SELECT UNNEST(generate_series(0, {n - 1})) AS media_id),
+WITH m AS (SELECT UNNEST(generate_series(0, {multimodal.CODEC_MEDIA_ROWS - 1})) AS media_id),
 px AS (
   SELECT media_id, CAST({px_byte} AS BIGINT) AS v
   FROM m, (SELECT UNNEST(generate_series(0, {npx - 1})) AS j) t
@@ -1503,7 +1484,7 @@ SELECT media_id,
 FROM agg"""
 
 
-def sql_multimodal_jpeg_features(n: int = 300) -> str:
+def sql_multimodal_jpeg_features() -> str:
     """Oracle for the REAL baseline-JPEG decode path (r6): make_jpeg's
     source image is blockwise-constant (one md5-chain byte per 8x8 block),
     so each decoded block's value is a CLOSED-FORM integer:
@@ -1533,7 +1514,7 @@ def sql_multimodal_jpeg_features(n: int = 300) -> str:
     mean = f"(s / CAST({float(npx)!r} AS DOUBLE))"
     var = f"((ss / CAST({float(npx)!r} AS DOUBLE)) - {mean} * {mean})"
     return f"""
-WITH m AS (SELECT UNNEST(generate_series(0, {n - 1})) AS media_id),
+WITH m AS (SELECT UNNEST(generate_series(0, {multimodal.CODEC_MEDIA_ROWS - 1})) AS media_id),
 blk AS (
   SELECT media_id, CAST({c_byte} AS BIGINT) - 128 AS s
   FROM m, (SELECT UNNEST(generate_series(0, {blocks - 1})) AS j) t
@@ -1559,7 +1540,7 @@ SELECT media_id,
 FROM agg"""
 
 
-def sql_multimodal_png_features(n: int = 300) -> str:
+def sql_multimodal_png_features() -> str:
     """Oracle for the REAL PNG decode path (r5): synth_media_png pixels
     are the same chained-md5 bytes as the PPM table, so the statistics are
     recomputable with exact integer arithmetic — while the Spark side must
@@ -1577,7 +1558,7 @@ def sql_multimodal_png_features(n: int = 300) -> str:
     img_mean = lambda c: f"(s{c} / CAST(64.0 AS DOUBLE))"  # noqa: E731
     img_var = lambda c: f"((ss{c} / CAST(64.0 AS DOUBLE)) - {img_mean(c)} * {img_mean(c)})"  # noqa: E731
     return f"""
-WITH m AS (SELECT UNNEST(generate_series(0, {n - 1})) AS media_id),
+WITH m AS (SELECT UNNEST(generate_series(0, {multimodal.CODEC_MEDIA_ROWS - 1})) AS media_id),
 px AS (
   SELECT media_id, t.j, CAST({px_byte} AS BIGINT) AS v
   FROM m, (SELECT UNNEST(generate_series(0, {npx - 1})) AS j) t
@@ -1696,21 +1677,17 @@ def sql_fingerprint() -> str:
 def _strip_markup_sql(expr: str) -> str:
     """Same pipeline as web.strip_markup_col, same regex constants (shared
     module-level strings; RE2 == Java regex for this subset)."""
-    from .operators.web import ENTITIES, PAT_SCRIPT, PAT_STYLE, PAT_TAG, WS_CLASS
-
-    s = f"regexp_replace({expr}, '{PAT_SCRIPT}', '', 'g')"
-    s = f"regexp_replace({s}, '{PAT_STYLE}', '', 'g')"
-    s = f"regexp_replace({s}, '{PAT_TAG}', ' ', 'g')"
-    for ent, ch in ENTITIES:
+    s = f"regexp_replace({expr}, '{web.PAT_SCRIPT}', '', 'g')"
+    s = f"regexp_replace({s}, '{web.PAT_STYLE}', '', 'g')"
+    s = f"regexp_replace({s}, '{web.PAT_TAG}', ' ', 'g')"
+    for ent, ch in web.ENTITIES:
         ch_sql = ch.replace("'", "''")
         s = f"replace({s}, '{ent}', '{ch_sql}')"
-    return f"trim(regexp_replace({s}, '{WS_CLASS}', ' ', 'g'))"
+    return f"trim(regexp_replace({s}, '{web.WS_CLASS}', ' ', 'g'))"
 
 
 def _html_docs_with() -> str:
-    from .operators.web import html_wrap_sql
-
-    return f"h AS (SELECT doc_id, {html_wrap_sql('duckdb')} AS html_text FROM documents)"
+    return f"h AS (SELECT doc_id, {web.html_wrap_sql('duckdb')} AS html_text FROM documents)"
 
 
 def sql_html_extract_text() -> str:
@@ -1719,16 +1696,15 @@ SELECT doc_id, {_strip_markup_sql('html_text')} AS extracted FROM h"""
 
 
 def _paragraphs_with() -> str:
-    from .operators.web import PAT_PARAGRAPH, PAT_SCRIPT, PAT_STYLE
     from .sources.pages import url_sql
 
     nosrc = (
-        f"regexp_replace(regexp_replace(html_text, '{PAT_SCRIPT}', '', 'g'),"
-        f" '{PAT_STYLE}', '', 'g')"
+        f"regexp_replace(regexp_replace(html_text, '{web.PAT_SCRIPT}', '', 'g'),"
+        f" '{web.PAT_STYLE}', '', 'g')"
     )
     return f"""{_html_docs_with()},
 hp AS (SELECT {url_sql('duckdb')} AS key,
-              regexp_extract_all({nosrc}, '{PAT_PARAGRAPH}', 1) AS paras
+              regexp_extract_all({nosrc}, '{web.PAT_PARAGRAPH}', 1) AS paras
        FROM h JOIN documents USING (doc_id)),
 paras AS (
   SELECT key,
@@ -1749,10 +1725,8 @@ FROM paras WHERE length(paragraph) >= 1 GROUP BY 1"""
 
 
 def sql_host_stats() -> str:
-    from .operators.web import PAT_HOST
-
     return f"""WITH {pages_with()}
-SELECT regexp_extract(url, '{PAT_HOST}', 1) AS host,
+SELECT regexp_extract(url, '{web.PAT_HOST}', 1) AS host,
        COUNT(*) AS n_pages,
        COUNT(DISTINCT lang) AS n_langs,
        CAST(SUM(length(text)) AS BIGINT) AS text_bytes
@@ -1798,16 +1772,14 @@ def _mercator_y_intervals(z: int) -> str:
 
 
 def sql_tile_xyz_export() -> str:
-    from .operators.tiles import quadkey_sql, xtile_sql
-
     return f"""WITH {pages_with()},
 xy AS (
-  SELECT p.lang, LENGTH(p.text) AS nb, {xtile_sql('p.lon', 11)} AS xtile, yb.ytile
-  FROM pages p JOIN {_mercator_y_intervals(11)}
+  SELECT p.lang, LENGTH(p.text) AS nb, {tiles.xtile_sql('p.lon', tiles.XYZ_ZOOM)} AS xtile, yb.ytile
+  FROM pages p JOIN {_mercator_y_intervals(tiles.XYZ_ZOOM)}
     ON p.lat > yb.lat_lo AND p.lat <= yb.lat_hi
 )
-SELECT 11 AS zoom, xtile, ytile,
-       {quadkey_sql('xtile', 'ytile', 11, 'duckdb')} AS quadkey,
+SELECT {tiles.XYZ_ZOOM} AS zoom, xtile, ytile,
+       {tiles.quadkey_sql('xtile', 'ytile', tiles.XYZ_ZOOM, 'duckdb')} AS quadkey,
        COUNT(*) AS doc_count,
        COUNT(DISTINCT lang) AS n_langs,
        CAST(SUM(nb) AS BIGINT) AS total_chars
@@ -1875,17 +1847,15 @@ def sql_url_canonical_dedup() -> str:
 
 
 def sql_host_cap() -> str:
-    from .operators.web import PAT_HOST
-
     return f"""WITH {pages_with()},
 r AS (
-  SELECT regexp_extract(url, '{PAT_HOST}', 1) AS host, url,
+  SELECT regexp_extract(url, '{web.PAT_HOST}', 1) AS host, url,
          CAST(ROW_NUMBER() OVER (
-           PARTITION BY regexp_extract(url, '{PAT_HOST}', 1) ORDER BY md5(url)
+           PARTITION BY regexp_extract(url, '{web.PAT_HOST}', 1) ORDER BY md5(url)
          ) AS INTEGER) AS host_rank
   FROM pages
 )
-SELECT host, url, host_rank FROM r WHERE host_rank <= 3"""
+SELECT host, url, host_rank FROM r WHERE host_rank <= {web.HOST_CAP}"""
 
 
 # ---------------------------------------------------------------------------
@@ -1902,7 +1872,7 @@ def _ngrams_list_sql(n: int) -> str:
 
 def sql_ngram_repetition() -> str:
     return f"""WITH w AS (SELECT doc_id AS key, {_WORDS} AS words FROM documents),
-g AS (SELECT key, unnest({_ngrams_list_sql(2)}) AS gram FROM w),
+g AS (SELECT key, unnest({_ngrams_list_sql(text.REPETITION_N)}) AS gram FROM w),
 pg AS (SELECT key, gram, COUNT(*) AS c FROM g GROUP BY key, gram),
 a AS (
   SELECT key, CAST(SUM(c) AS BIGINT) AS n_grams, COUNT(*) AS n_distinct,
@@ -1916,7 +1886,7 @@ FROM a"""
 
 
 def sql_contamination() -> str:
-    grams = _ngrams_list_sql(8)
+    grams = _ngrams_list_sql(text.CONTAMINATION_N)
     return f"""WITH w AS (SELECT doc_id AS key, {_WORDS} AS words FROM documents),
 cg AS (SELECT key, md5(unnest(list_distinct({grams}))) AS gram_hash FROM w),
 gset AS (SELECT DISTINCT gram_hash FROM cg WHERE key % 101 = 0)
@@ -1925,12 +1895,11 @@ FROM cg JOIN gset USING (gram_hash) GROUP BY key"""
 
 
 def _linked_docs_with() -> str:
-    from .operators.web import linked_html_sql
     from .sources.pages import url_sql
 
     return (
         f"h AS (SELECT doc_id, {url_sql('duckdb')} AS url, "
-        f"{linked_html_sql('duckdb')} AS html_text FROM documents)"
+        f"{web.linked_html_sql('duckdb')} AS html_text FROM documents)"
     )
 
 
@@ -1940,11 +1909,11 @@ def sql_geohash_counts() -> str:
     dialects from one generator — only the shift syntax differs)."""
     from .functions import geohash as gh
 
-    lon_idx, lat_idx = gh.geohash_idx_sql("lat", "lon", 5)
+    lon_idx, lat_idx = gh.geohash_idx_sql("lat", "lon", tiles.GEOHASH_PRECISION)
     return f"""WITH {pages_with()},
 gi AS (SELECT {lon_idx} AS gh_lon_idx, {lat_idx} AS gh_lat_idx FROM pages),
-ii AS (SELECT {gh.geohash_interleave_sql(5, 'duckdb')} AS gh_i FROM gi)
-SELECT {gh.geohash_chars_sql(5, 'duckdb')} AS geohash,
+ii AS (SELECT {gh.geohash_interleave_sql(tiles.GEOHASH_PRECISION, 'duckdb')} AS gh_i FROM gi)
+SELECT {gh.geohash_chars_sql(tiles.GEOHASH_PRECISION, 'duckdb')} AS geohash,
        CAST(COUNT(*) AS BIGINT) AS n_pages
 FROM ii GROUP BY 1"""
 
@@ -1954,11 +1923,10 @@ def sql_geohash_pyramid() -> str:
     unnested from a literal precision list."""
     from .functions import geohash as gh
 
-    from .operators.tiles import PYRAMID_PRECISIONS
 
-    finest = PYRAMID_PRECISIONS[-1]
+    finest = tiles.PYRAMID_PRECISIONS[-1]
     lon_idx, lat_idx = gh.geohash_idx_sql("lat", "lon", finest)
-    levels = ", ".join(map(str, PYRAMID_PRECISIONS))
+    levels = ", ".join(map(str, tiles.PYRAMID_PRECISIONS))
     return f"""WITH {pages_with()},
 gi AS (SELECT {lon_idx} AS gh_lon_idx, {lat_idx} AS gh_lat_idx FROM pages),
 ii AS (SELECT {gh.geohash_interleave_sql(finest, 'duckdb')} AS gh_i FROM gi),
@@ -1971,22 +1939,18 @@ FROM px GROUP BY 1, 2"""
 
 def sql_link_extract() -> str:
     """web.extract_links twin over the synth linked pages."""
-    from .operators.web import PAT_HREF
-
     return f"""WITH {_linked_docs_with()}
-SELECT doc_id AS key, unnest(regexp_extract_all(html_text, '{PAT_HREF}', 1)) AS link
+SELECT doc_id AS key, unnest(regexp_extract_all(html_text, '{web.PAT_HREF}', 1)) AS link
 FROM h"""
 
 
 def sql_anchor_texts() -> str:
     """web.extract_anchor_texts twin: the two capture groups of the same
     anchor pattern, zipped positionally."""
-    from .operators.web import PAT_ANCHOR
-
     return f"""WITH {_linked_docs_with()},
 z AS (SELECT doc_id AS key,
-             regexp_extract_all(html_text, '{PAT_ANCHOR}', 1) AS links,
-             regexp_extract_all(html_text, '{PAT_ANCHOR}', 2) AS texts
+             regexp_extract_all(html_text, '{web.PAT_ANCHOR}', 1) AS links,
+             regexp_extract_all(html_text, '{web.PAT_ANCHOR}', 2) AS texts
       FROM h),
 u AS (SELECT key, unnest(generate_series(1, len(links))) AS i, links, texts FROM z)
 SELECT key, links[i] AS link, texts[i] AS anchor_text FROM u"""
@@ -1994,12 +1958,10 @@ SELECT key, links[i] AS link, texts[i] AS anchor_text FROM u"""
 
 def sql_host_link_graph() -> str:
     """web.host_link_graph twin: same href regex, same host regex."""
-    from .operators.web import PAT_HOST, PAT_HREF
-
     return f"""WITH {_linked_docs_with()},
-l AS (SELECT url, unnest(regexp_extract_all(html_text, '{PAT_HREF}', 1)) AS link FROM h)
-SELECT regexp_extract(url, '{PAT_HOST}', 1) AS src_host,
-       regexp_extract(link, '{PAT_HOST}', 1) AS dst_host,
+l AS (SELECT url, unnest(regexp_extract_all(html_text, '{web.PAT_HREF}', 1)) AS link FROM h)
+SELECT regexp_extract(url, '{web.PAT_HOST}', 1) AS src_host,
+       regexp_extract(link, '{web.PAT_HOST}', 1) AS dst_host,
        CAST(COUNT(*) AS BIGINT) AS n_links
 FROM l GROUP BY 1, 2"""
 
@@ -2008,21 +1970,18 @@ def sql_link_pagerank() -> str:
     """web.link_pagerank twin: same href/host extraction, same integer
     PageRank recurrence unrolled as CTEs (sql_pagerank_int pattern) with
     STRING host ids and parallel edges kept."""
-    from .operators.graph import RANK_SCALE
-    from .operators.web import PAT_HOST, PAT_HREF
-
-    base = 15 * RANK_SCALE // 100
+    base = 15 * graph.RANK_SCALE // 100
     parts = [
         f"""{_linked_docs_with()},
-l AS (SELECT url, unnest(regexp_extract_all(html_text, '{PAT_HREF}', 1)) AS link FROM h),
-e AS (SELECT regexp_extract(url, '{PAT_HOST}', 1) AS src,
-             regexp_extract(link, '{PAT_HOST}', 1) AS dst FROM l),
+l AS (SELECT url, unnest(regexp_extract_all(html_text, '{web.PAT_HREF}', 1)) AS link FROM h),
+e AS (SELECT regexp_extract(url, '{web.PAT_HOST}', 1) AS src,
+             regexp_extract(link, '{web.PAT_HOST}', 1) AS dst FROM l),
 nodes AS (SELECT DISTINCT host AS id
           FROM (SELECT src AS host FROM e UNION SELECT dst AS host FROM e)),
 ed AS (SELECT src, dst, COUNT(*) OVER (PARTITION BY src) AS out_deg FROM e),
-r0 AS (SELECT id, CAST({RANK_SCALE} AS BIGINT) AS rank FROM nodes)"""
+r0 AS (SELECT id, CAST({graph.RANK_SCALE} AS BIGINT) AS rank FROM nodes)"""
     ]
-    for i in range(3):
+    for i in range(graph.PAGERANK_ITERS):
         parts.append(
             f"""c{i} AS (
   SELECT ed.dst, SUM(r{i}.rank // ed.out_deg) AS incoming
@@ -2037,7 +1996,7 @@ r{i + 1} AS (
     return (
         "WITH "
         + ",\n".join(parts)
-        + "\nSELECT id AS host, rank AS rank_int FROM r3"
+        + f"\nSELECT id AS host, rank AS rank_int FROM r{graph.PAGERANK_ITERS}"
     )
 
 
@@ -2060,11 +2019,9 @@ def sql_bloom_contamination() -> str:
     arithmetic ((g1 + i*g2) mod m over the two 32-bit md5 halves), 32-bit
     masks in BIGINT words, bit_or-built filter — false positives are pure
     integer arithmetic so both engines flag the same gram set."""
-    from .operators.text import BLOOM_BITS, BLOOM_K, BLOOM_WORD_BITS
-
-    grams = _ngrams_list_sql(8)
+    grams = _ngrams_list_sql(text.CONTAMINATION_N)
     g1, g2 = _hexcol_sql("gh", 1), _hexcol_sql("gh", 9)
-    m, w, k = BLOOM_BITS, BLOOM_WORD_BITS, BLOOM_K
+    m, w, k = text.BLOOM_BITS, text.BLOOM_WORD_BITS, text.BLOOM_K
     return f"""WITH w AS (SELECT doc_id AS key, {_WORDS} AS words FROM documents),
 cg AS (SELECT key, md5(unnest(list_distinct({grams}))) AS gh FROM w),
 gv AS (SELECT key, gh, {g1} AS g1, {g2} AS g2 FROM cg),
@@ -2093,10 +2050,10 @@ def sql_tile_vector_export() -> str:
     (integer decode via % and //, CAST-to-DOUBLE multiply by the exact
     size literal)."""
     S = 536870912  # 2^29
-    size = _dbl(360.0 / float(1 << DEFAULT_TILE_RES))
+    size = _dbl(360.0 / float(1 << tiles.DEFAULT_TILE_RES))
     return f"""WITH {pages_with()},
 t AS (
-  SELECT {cell_id_sql('lon', 'lat', DEFAULT_TILE_RES)} AS tile_id,
+  SELECT {cell_id_sql('lon', 'lat', tiles.DEFAULT_TILE_RES)} AS tile_id,
          COUNT(*) AS doc_count, COUNT(DISTINCT lang) AS n_langs,
          CAST(SUM(LENGTH(text)) AS BIGINT) AS total_chars
   FROM pages GROUP BY 1
@@ -2134,14 +2091,12 @@ def sql_events_interval_join() -> str:
     formulation, then a native BETWEEN containment join (DuckDB plans an
     IEJoin — independently verifying the engine's bucket-binned
     equi-join)."""
-    from .operators.events import SESSION_GAP_SECONDS
-
     return f"""WITH ev AS (
   SELECT event_id, CAST(user_id AS VARCHAR) AS key, CAST(floor(epoch(ts)) AS BIGINT) AS t FROM events
 ),
 m AS (
   SELECT key, t,
-         CASE WHEN t - lag(t) OVER (PARTITION BY key ORDER BY t) > {SESSION_GAP_SECONDS}
+         CASE WHEN t - lag(t) OVER (PARTITION BY key ORDER BY t) > {events.SESSION_GAP_SECONDS}
               THEN 1 ELSE 0 END AS ns
   FROM ev
 ),
@@ -2158,12 +2113,12 @@ def sql_multimodal_frames() -> str:
     (element_at over [image, audio, video] at id % 3 + 1), frame slice =
     8 chars at offset (idx * 7) % (len - 8). The Spark side runs the real
     mapInPandas plumbing; this verifies its values byte-for-byte."""
-    return """WITH m AS (
+    return f"""WITH m AS (
   SELECT range AS media_id,
          concat('payload-', md5(CAST(range AS VARCHAR))) AS p
   FROM range(500) WHERE range % 3 = 2
 ),
-f AS (SELECT media_id, unnest(range(0, 16, 4)) AS frame_idx, p FROM m)
+f AS (SELECT media_id, unnest(range(0, 16, {multimodal.FRAME_EVERY_K})) AS frame_idx, p FROM m)
 SELECT media_id, CAST(frame_idx AS INTEGER) AS frame_idx,
        substring(p, CAST((frame_idx * 7) % (length(p) - 8) AS INTEGER) + 1, 8) AS frame
 FROM f"""
@@ -2213,11 +2168,9 @@ FROM s WHERE from_type IS NOT NULL GROUP BY 1, 2"""
 def sql_events_pivot() -> str:
     """events.events_pivot twin via conditional aggregation (the portable
     spelling of PIVOT); DECIMAL-exact value sum cast once to DOUBLE."""
-    from .operators.events import EVENT_TYPES
-
     cols = ",\n       ".join(
         f"CAST(COUNT(*) FILTER (WHERE event_type = '{t}') AS BIGINT) AS n_{t}"
-        for t in EVENT_TYPES
+        for t in events.EVENT_TYPES
     )
     return f"""SELECT user_id,
        {cols},
@@ -2230,10 +2183,8 @@ def sql_pagerank_int() -> str:
     iterations UNROLLED as CTEs (r0 -> r1 -> ... -> rN). Edge derivation
     mirrors graph.synth_link_graph's formula; all arithmetic is BIGINT
     `//` division and exact integer sums, so the hash compare is exact."""
-    from .operators.graph import LINK_RULES_SQL, RANK_SCALE
-
-    base = 15 * RANK_SCALE // 100
-    dsts = ", ".join(LINK_RULES_SQL)
+    base = 15 * graph.RANK_SCALE // 100
+    dsts = ", ".join(graph.LINK_RULES_SQL)
     parts = [
         f"""nn AS (SELECT COUNT(*) AS n FROM documents),
 e AS (
@@ -2243,9 +2194,9 @@ e AS (
 ed AS (
   SELECT src, dst, COUNT(*) OVER (PARTITION BY src) AS out_deg FROM e
 ),
-r0 AS (SELECT doc_id AS id, CAST({RANK_SCALE} AS BIGINT) AS rank FROM documents)"""
+r0 AS (SELECT doc_id AS id, CAST({graph.RANK_SCALE} AS BIGINT) AS rank FROM documents)"""
     ]
-    for i in range(3):
+    for i in range(graph.PAGERANK_ITERS):
         parts.append(
             f"""c{i} AS (
   SELECT ed.dst, SUM(r{i}.rank // ed.out_deg) AS incoming
@@ -2260,7 +2211,7 @@ r{i + 1} AS (
     return (
         "WITH "
         + ",\n".join(parts)
-        + "\nSELECT id AS doc_id, rank AS rank_int FROM r3"
+        + f"\nSELECT id AS doc_id, rank AS rank_int FROM r{graph.PAGERANK_ITERS}"
     )
 
 
@@ -2281,10 +2232,8 @@ def sql_sample_complement() -> str:
     """Set-op twin: documents EXCEPT the deterministic sample = rows whose
     md5 bucket fails the threshold (recomputed as the direct predicate,
     not subtracted — the Spark side's exceptAll must reproduce it)."""
-    from .operators.text import SAMPLE_BUCKETS
-
-    threshold = int(round(0.25 * SAMPLE_BUCKETS))
-    bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {SAMPLE_BUCKETS}"
+    threshold = int(round(text.QUERY_SAMPLE_FRACTION * text.SAMPLE_BUCKETS))
+    bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {text.SAMPLE_BUCKETS}"
     return f"SELECT doc_id FROM documents WHERE {bucket} >= {threshold}"
 
 
@@ -2344,7 +2293,7 @@ SELECT dg.key AS key,
 FROM dg JOIN gd USING (gram) GROUP BY dg.key"""
 
 
-def sql_tfidf_topk(k: int = 3) -> str:
+def sql_tfidf_topk() -> str:
     """terms.tfidf_topk twin: score = CAST(tf) * (CAST(n_docs) / CAST(df))
     with the identical parenthesization — three single-rounded IEEE ops on
     exact integers, so the DOUBLE hash-compares bit-for-bit."""
@@ -2362,13 +2311,15 @@ SELECT key,
        CAST(ROW_NUMBER() OVER (PARTITION BY key ORDER BY score DESC, term) AS INTEGER) AS rank,
        term, tf, df, score
 FROM s
-QUALIFY ROW_NUMBER() OVER (PARTITION BY key ORDER BY score DESC, term) <= {k}"""
+QUALIFY ROW_NUMBER() OVER (PARTITION BY key ORDER BY score DESC, term) <= {terms.TFIDF_K}"""
 
 
-def sql_kmv_distinct(k: int = 16) -> str:
+def sql_kmv_distinct() -> str:
     """terms.kmv_distinct twin: same 32-bit md5-prefix hash (ascii
     arithmetic), kth-min via the identical ROW_NUMBER-over-sorted-hash
     multiset semantics, estimate = exact (k-1)*2^32 literal / kth-min."""
+    k = terms.KMV_K
+
     return f"""WITH w AS (SELECT source, {_WORDS} AS words FROM documents),
 p0 AS (SELECT source AS grp, unnest(words) AS term FROM w),
 p AS (SELECT DISTINCT grp, term FROM p0),
@@ -2386,10 +2337,8 @@ def sql_hll_distinct() -> str:
     arithmetic over a materialized md5 column), rank = (REM_BITS+1) -
     length(bin(rem)) — DuckDB's bin() also prints without leading zeros —
     exact integer register sum, one shared-literal division."""
-    from .operators.terms import HLL_M, HLL_NUMERATOR, HLL_REM_BITS
-
-    rem_mod = 1 << HLL_REM_BITS
-    rb1 = HLL_REM_BITS + 1
+    rem_mod = 1 << terms.HLL_REM_BITS
+    rb1 = terms.HLL_REM_BITS + 1
     return f"""WITH w AS (SELECT source, {_WORDS} AS words FROM documents),
 p0 AS (SELECT source AS grp, unnest(words) AS term FROM w),
 p AS (SELECT DISTINCT grp, term FROM p0),
@@ -2397,17 +2346,17 @@ hm AS (SELECT grp, md5(term) AS mh FROM p),
 hs AS (SELECT grp, {_hexcol_sql('mh', 1)} AS h FROM hm),
 rg AS (SELECT grp, h // {rem_mod} AS idx, h % {rem_mod} AS rem FROM hs),
 rk AS (SELECT grp, idx,
-       CASE WHEN rem = 0 THEN {HLL_REM_BITS} ELSE {rb1} - length(bin(rem)) END AS rnk FROM rg),
+       CASE WHEN rem = 0 THEN {terms.HLL_REM_BITS} ELSE {rb1} - length(bin(rem)) END AS rnk FROM rg),
 ag AS (SELECT grp, idx, MAX(rnk) AS rmax, COUNT(*) AS cnt FROM rk GROUP BY grp, idx),
 fin AS (SELECT grp, CAST(SUM(cnt) AS BIGINT) AS n_exact,
         CAST(COUNT(*) AS BIGINT) AS n_registers,
-        CAST(SUM(CAST(1 AS BIGINT) << CAST({HLL_REM_BITS} - rmax AS INT)) AS BIGINT) AS occ_sum
+        CAST(SUM(CAST(1 AS BIGINT) << CAST({terms.HLL_REM_BITS} - rmax AS INT)) AS BIGINT) AS occ_sum
         FROM ag GROUP BY grp)
 SELECT grp, n_exact,
-       {HLL_M} - n_registers AS n_empty_registers,
-       occ_sum + ({HLL_M} - n_registers) * {rem_mod} AS reg_sum,
-       {_dbl(HLL_NUMERATOR)}
-         / CAST(occ_sum + ({HLL_M} - n_registers) * {rem_mod} AS DOUBLE) AS hll_estimate
+       {terms.HLL_M} - n_registers AS n_empty_registers,
+       occ_sum + ({terms.HLL_M} - n_registers) * {rem_mod} AS reg_sum,
+       {_dbl(terms.HLL_NUMERATOR)}
+         / CAST(occ_sum + ({terms.HLL_M} - n_registers) * {rem_mod} AS DOUBLE) AS hll_estimate
 FROM fin"""
 
 
@@ -2417,10 +2366,8 @@ def sql_hll_union() -> str:
     distinct sets == global distinct set; same hash -> same registers).
     Equality with Spark's max-per-register MERGE of per-group sketches
     proves the merge exactly lossless across engines."""
-    from .operators.terms import HLL_M, HLL_NUMERATOR, HLL_REM_BITS
-
-    rem_mod = 1 << HLL_REM_BITS
-    rb1 = HLL_REM_BITS + 1
+    rem_mod = 1 << terms.HLL_REM_BITS
+    rb1 = terms.HLL_REM_BITS + 1
     return f"""WITH w AS (SELECT {_WORDS} AS words FROM documents),
 p0 AS (SELECT unnest(words) AS term FROM w),
 p AS (SELECT DISTINCT term FROM p0),
@@ -2428,20 +2375,20 @@ hm AS (SELECT md5(term) AS mh FROM p),
 hs AS (SELECT {_hexcol_sql('mh', 1)} AS h FROM hm),
 rg AS (SELECT h // {rem_mod} AS idx, h % {rem_mod} AS rem FROM hs),
 rk AS (SELECT idx,
-       CASE WHEN rem = 0 THEN {HLL_REM_BITS} ELSE {rb1} - length(bin(rem)) END AS rnk FROM rg),
+       CASE WHEN rem = 0 THEN {terms.HLL_REM_BITS} ELSE {rb1} - length(bin(rem)) END AS rnk FROM rg),
 ag AS (SELECT idx, MAX(rnk) AS rmax FROM rk GROUP BY idx),
 fin AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_registers,
-        CAST(SUM(CAST(1 AS BIGINT) << CAST({HLL_REM_BITS} - rmax AS INT)) AS BIGINT) AS occ_sum
+        CAST(SUM(CAST(1 AS BIGINT) << CAST({terms.HLL_REM_BITS} - rmax AS INT)) AS BIGINT) AS occ_sum
         FROM ag),
 ng AS (SELECT CAST(COUNT(DISTINCT source) AS BIGINT) AS n_groups FROM documents)
 SELECT n_groups, n_registers,
-       occ_sum + ({HLL_M} - n_registers) * {rem_mod} AS reg_sum,
-       {_dbl(HLL_NUMERATOR)}
-         / CAST(occ_sum + ({HLL_M} - n_registers) * {rem_mod} AS DOUBLE) AS hll_estimate
+       occ_sum + ({terms.HLL_M} - n_registers) * {rem_mod} AS reg_sum,
+       {_dbl(terms.HLL_NUMERATOR)}
+         / CAST(occ_sum + ({terms.HLL_M} - n_registers) * {rem_mod} AS DOUBLE) AS hll_estimate
 FROM fin CROSS JOIN ng"""
 
 
-def sql_bigram_pmi(top: int = 20) -> str:
+def sql_bigram_pmi() -> str:
     """terms.bigram_pmi twin: ratio = (c_ab * N) / (c_a * c_b) with both
     products formed from exact BIGINTs and the same association — rank by
     the ratio is rank by PMI without a libm log in sight."""
@@ -2461,7 +2408,7 @@ s AS (
   CROSS JOIN n
 )
 SELECT gram, c_ab, c_a, c_b, n_tokens, pmi_ratio
-FROM s ORDER BY pmi_ratio DESC, gram LIMIT {top}"""
+FROM s ORDER BY pmi_ratio DESC, gram LIMIT {terms.PMI_TOP}"""
 
 
 def sql_token_rarity() -> str:
@@ -2477,11 +2424,12 @@ SELECT key, n_tokens, freq_sum,
 FROM a"""
 
 
-def sql_stratified_sample(quota: int = 40) -> str:
+def sql_stratified_sample() -> str:
     """text.stratified_sample twin via the direct rank form: the engine's
-    banded selection must reproduce exactly the quota smallest (hash, key)
-    rows per group — the oracle recomputes that set the straightforward
-    way, so the band routing itself is what's being verified."""
+    banded selection must reproduce exactly the STRATIFIED_QUOTA smallest
+    (hash, key) rows per group — the oracle recomputes that set the
+    straightforward way, so the band routing itself is what's being
+    verified."""
     h = _hex8_sql("CAST(doc_id AS VARCHAR)")
     return f"""WITH r AS (
   SELECT doc_id AS key, lang AS grp,
@@ -2489,7 +2437,7 @@ def sql_stratified_sample(quota: int = 40) -> str:
          COUNT(*) OVER (PARTITION BY lang) AS n_g
   FROM documents
 )
-SELECT key, grp FROM r WHERE rn <= LEAST({quota}, n_g)"""
+SELECT key, grp FROM r WHERE rn <= LEAST({text.STRATIFIED_QUOTA}, n_g)"""
 
 
 def sql_corpus_cube() -> str:
@@ -2503,11 +2451,11 @@ FROM documents
 GROUP BY CUBE (lang, source)"""
 
 
-def sql_chunk_documents(size: int = 32, stride: int = 24) -> str:
-    """text.chunk_documents twin: range() starts, inclusive 1-based list
-    slice (clamps at the end exactly like Spark's slice), arithmetic token
-    counts — all integers."""
-    return f"""WITH w AS (SELECT doc_id AS key, {_WORDS} AS words FROM documents),
+def _chunks_sql(source: str, size: int, stride: int) -> str:
+    """text.chunk_documents twin over `source`: range() starts, inclusive
+    1-based list slice (clamps at the end exactly like Spark's slice),
+    arithmetic token counts — all integers."""
+    return f"""w AS (SELECT doc_id AS key, {_WORDS} AS words FROM {source}),
 s AS (SELECT key, words, unnest(range(0, len(words), {stride})) AS s FROM w)
 SELECT key, s // {stride} AS chunk_id, s AS chunk_start,
        CAST(LEAST({size}, len(words) - s) AS BIGINT) AS chunk_tokens,
@@ -2515,15 +2463,19 @@ SELECT key, s // {stride} AS chunk_id, s AS chunk_start,
 FROM s"""
 
 
-def sql_pack_documents(capacity: int = 512, n_streams: int = 8) -> str:
-    """text.pack_documents twin: identical md5-order window cumsum per
-    stream (SUM -> HUGEINT -> BIGINT before the subtraction)."""
+def sql_chunk_documents() -> str:
+    return f"WITH {_chunks_sql('documents', text.QUERY_CHUNK_SIZE, text.QUERY_CHUNK_STRIDE)}"
+
+
+def _packed_sql(source: str) -> str:
+    """text.pack_documents twin over `source`: identical md5-order window
+    cumsum per stream (SUM -> HUGEINT -> BIGINT before the subtraction)."""
     h = _hex8_sql("CAST(doc_id AS VARCHAR)")
-    return f"""WITH t AS (
+    return f"""t AS (
   SELECT doc_id AS key, {h} AS h,
-         CAST({h} % {n_streams} AS BIGINT) AS stream,
+         CAST({h} % {text.PACK_STREAMS} AS BIGINT) AS stream,
          CAST(len({_WORDS}) AS BIGINT) AS n_tokens
-  FROM documents
+  FROM {source}
 ),
 c AS (
   SELECT key, stream, n_tokens,
@@ -2533,8 +2485,12 @@ c AS (
          ) AS BIGINT) - n_tokens AS tok_offset
   FROM t
 )
-SELECT key, stream, tok_offset, n_tokens, tok_offset // {capacity} AS window_id
+SELECT key, stream, tok_offset, n_tokens, tok_offset // {text.PACK_CAPACITY} AS window_id
 FROM c"""
+
+
+def sql_pack_documents() -> str:
+    return f"WITH {_packed_sql('documents')}"
 
 
 def sql_length_winsorize() -> str:
@@ -2576,16 +2532,14 @@ SELECT grp AS lang, n_docs, n_sources,
 FROM g"""
 
 
-def sql_bm25_topk(query_terms: tuple[str, ...], k: int = 20) -> str:
+def sql_bm25_topk() -> str:
     """terms.bm25_topk twin: the SAME BM25_SCORE_SQL string (shared
     formulation, not merely equivalent semantics), per-term partials via
     MAX(CASE) pivot columns added in the identical left-assoc order, tf/df
     exact BIGINTs, avgdl one shared division. Unnest happens in the FROM
     clause (lateral) — this DuckDB's binder cannot filter a SELECT-list
     unnest column downstream (the triangle_count note)."""
-    from .operators.terms import BM25_SCORE_SQL
-
-    qs = list(query_terms)
+    qs = list(terms.BM25_QUERY)
     inlist = ", ".join("'" + t.replace("'", "''") + "'" for t in qs)
     pivot = ", ".join(
         f"MAX(CASE WHEN term = '{t}' THEN s END) AS s_{i}" for i, t in enumerate(qs)
@@ -2600,12 +2554,12 @@ dft AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY term),
 st AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs,
               CAST(SUM(len(words)) AS BIGINT) AS total_tokens FROM w),
 st2 AS (SELECT n_docs, CAST(total_tokens AS DOUBLE) / CAST(n_docs AS DOUBLE) AS avgdl FROM st),
-s AS (SELECT key, term, {BM25_SCORE_SQL} AS s
+s AS (SELECT key, term, {terms.BM25_SCORE_SQL} AS s
       FROM tf JOIN dft USING (term) CROSS JOIN st2),
 p AS (SELECT key, {pivot} FROM s GROUP BY key),
 sc AS (SELECT key, {total} AS score FROM p),
 r AS (SELECT key, score, ROW_NUMBER() OVER (ORDER BY score DESC, key) AS rn FROM sc)
-SELECT key AS doc_id, score, CAST(rn AS INT) AS rnk FROM r WHERE rn <= {k}"""
+SELECT key AS doc_id, score, CAST(rn AS INT) AS rnk FROM r WHERE rn <= {terms.BM25_K}"""
 
 
 def _pipeline_corpus_cte() -> str:
@@ -2615,29 +2569,24 @@ def _pipeline_corpus_cte() -> str:
     fingerprint over ALL analyzed docs — the pipeline dedups the analyzed
     stage, unlike sql_corpus_clean's filter-then-dedup operator), then the
     quality floor, then the deterministic md5-bucket sample."""
-    from .operators.text import SAMPLE_BUCKETS
-    from .plans.pipeline import QUALITY_MIN, SAMPLE_FRACTION
-
     score = _quality_parts()["score"]
-    threshold = int(round(SAMPLE_FRACTION * SAMPLE_BUCKETS))
-    bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {SAMPLE_BUCKETS}"
+    threshold = int(round(pipeline.SAMPLE_FRACTION * text.SAMPLE_BUCKETS))
+    bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {text.SAMPLE_BUCKETS}"
     fp = "md5(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
     return f"""an AS (SELECT doc_id, text, {fp} AS fp, {score} AS q FROM documents),
 dd AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY fp ORDER BY doc_id) AS rn FROM an),
 corpus AS (SELECT doc_id, text FROM dd
-           WHERE rn = 1 AND q >= CAST({QUALITY_MIN!r} AS DOUBLE) AND {bucket} < {threshold})"""
+           WHERE rn = 1 AND q >= CAST({pipeline.QUALITY_MIN!r} AS DOUBLE) AND {bucket} < {threshold})"""
 
 
 def sql_pipeline_corpus_stats() -> str:
     """Pipeline corpus_stats stage twin: per-predicted-language doc and
     token totals over the composed corpus selection (langid CASE identical
     to sql_langid, SUMs cast from HUGEINT to BIGINT)."""
-    from .operators.text import LANG_STOPWORDS
-
-    hits = {lang: _stopword_hits_sql(words) for lang, words in LANG_STOPWORDS.items()}
-    gmax = "GREATEST(" + ", ".join(f"h_{lang}" for lang in LANG_STOPWORDS) + ")"
+    hits = {lang: _stopword_hits_sql(words) for lang, words in text.LANG_STOPWORDS.items()}
+    gmax = "GREATEST(" + ", ".join(f"h_{lang}" for lang in text.LANG_STOPWORDS) + ")"
     case = " ".join(
-        f"WHEN h_{lang} = gmax THEN '{lang}'" for lang in sorted(LANG_STOPWORDS, reverse=True)
+        f"WHEN h_{lang} = gmax THEN '{lang}'" for lang in sorted(text.LANG_STOPWORDS, reverse=True)
     )
     cols = ", ".join(f"{expr} AS h_{lang}" for lang, expr in hits.items())
     pieces = "len(regexp_extract_all(text, '[A-Za-z]{1,4}|[0-9]{1,3}|[^A-Za-z0-9\\s]'))"
@@ -2655,57 +2604,28 @@ FROM p GROUP BY lang_pred"""
 
 
 def sql_pipeline_chunks() -> str:
-    """Pipeline chunks EXPORT stage twin: the sql_chunk_documents body over
-    the composed corpus selection instead of raw documents."""
-    from .plans.pipeline import CHUNK_SIZE, CHUNK_STRIDE
-
-    return f"""WITH {_pipeline_corpus_cte()},
-w AS (SELECT doc_id AS key, {_WORDS} AS words FROM corpus),
-s AS (SELECT key, words, unnest(range(0, len(words), {CHUNK_STRIDE})) AS s FROM w)
-SELECT key, s // {CHUNK_STRIDE} AS chunk_id, s AS chunk_start,
-       CAST(LEAST({CHUNK_SIZE}, len(words) - s) AS BIGINT) AS chunk_tokens,
-       array_to_string(words[s + 1 : s + {CHUNK_SIZE}], ' ') AS chunk_text
-FROM s"""
+    """Pipeline chunks EXPORT stage twin: the chunk_documents twin over
+    the composed corpus selection at the pipeline's window."""
+    return f"WITH {_pipeline_corpus_cte()},\n{_chunks_sql('corpus', pipeline.CHUNK_SIZE, pipeline.CHUNK_STRIDE)}"
 
 
 def sql_pipeline_packed() -> str:
-    """Pipeline packed EXPORT stage twin: the sql_pack_documents body over
-    the composed corpus selection."""
-    from .plans.pipeline import PACK_CAPACITY, PACK_STREAMS
-
-    h = _hex8_sql("CAST(doc_id AS VARCHAR)")
-    return f"""WITH {_pipeline_corpus_cte()},
-t AS (
-  SELECT doc_id AS key, {h} AS h,
-         CAST({h} % {PACK_STREAMS} AS BIGINT) AS stream,
-         CAST(len({_WORDS}) AS BIGINT) AS n_tokens
-  FROM corpus
-),
-c AS (
-  SELECT key, stream, n_tokens,
-         CAST(SUM(n_tokens) OVER (
-           PARTITION BY stream ORDER BY h, key
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-         ) AS BIGINT) - n_tokens AS tok_offset
-  FROM t
-)
-SELECT key, stream, tok_offset, n_tokens, tok_offset // {PACK_CAPACITY} AS window_id
-FROM c"""
+    """Pipeline packed EXPORT stage twin: the pack_documents twin over the
+    composed corpus selection."""
+    return f"WITH {_pipeline_corpus_cte()},\n{_packed_sql('corpus')}"
 
 
 def sql_triangle_count() -> str:
     """graph.triangle_count twin: identical canonical-edge dedup, degree-
     ordered orientation via row-value comparison, wedge + closing joins —
     all integers. Edge derivation mirrors synth_link_graph."""
-    from .operators.graph import LINK_RULES_SQL
-
     # UNION ALL, not unnest: this DuckDB build's binder cannot filter a
     # column derived from a SELECT-list unnest in a downstream CTE
     # (INTERNAL Error binding "dst"); one branch per link rule is the
     # same edge multiset and e0's DISTINCT collapses it identically.
     branches = "\n  UNION ALL ".join(
         f"SELECT src, {rule} AS dst FROM (SELECT doc_id AS src FROM documents) CROSS JOIN nn"
-        for rule in LINK_RULES_SQL
+        for rule in graph.LINK_RULES_SQL
     )
     return f"""WITH nn AS (SELECT COUNT(*) AS n FROM documents),
 raw AS (
@@ -2765,14 +2685,12 @@ def sql_events_sessions_native() -> str:
     event exactly gap seconds after the previous MERGES (windows touching
     at the boundary coalesce), pinned by
     test_session_window_native_boundary_semantics."""
-    from .operators.events import SESSION_GAP_SECONDS
-
     return f"""WITH ev AS (
   SELECT CAST(user_id AS VARCHAR) AS key, CAST(floor(epoch(ts)) AS BIGINT) AS t FROM events
 ),
 m AS (
   SELECT key, t,
-         CASE WHEN t - lag(t) OVER (PARTITION BY key ORDER BY t) > {SESSION_GAP_SECONDS}
+         CASE WHEN t - lag(t) OVER (PARTITION BY key ORDER BY t) > {events.SESSION_GAP_SECONDS}
               THEN 1 ELSE 0 END AS ns
   FROM ev
 ),
@@ -2855,8 +2773,10 @@ SELECT s1.user_id, t1, t2, t3,
 FROM s1 LEFT JOIN s2 USING (user_id) LEFT JOIN s3 USING (user_id)"""
 
 
-def sql_chars_histogram(width: int = 32) -> str:
+def sql_chars_histogram() -> str:
     """relational.chars_histogram twin: same integer `//` bucketing."""
+    width = relational.CHARS_HISTOGRAM_WIDTH
+
     return f"""SELECT n_chars // {width} AS bucket,
        (n_chars // {width}) * {width} AS bucket_lo,
        COUNT(*) AS n_docs,
@@ -2865,9 +2785,11 @@ def sql_chars_histogram(width: int = 32) -> str:
 FROM documents GROUP BY n_chars // {width}"""
 
 
-def sql_lang_percentile_chars(p_num: int = 9, p_den: int = 10) -> str:
-    """text.lang_percentile_chars twin: identical integer rank selection
-    ceil(p*n) = (p_num*n + p_den-1) // p_den."""
+def sql_lang_percentile_chars() -> str:
+    """text.lang_percentile_chars twin at its default p: identical integer
+    rank selection ceil(p*n) = (p_num*n + p_den-1) // p_den."""
+    p_num, p_den = text.P90_NUM, text.P90_DEN
+
     return f"""WITH r AS (
   SELECT lang, n_chars,
          ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n_chars, doc_id) AS rn,
@@ -2911,14 +2833,12 @@ def sql_pii_scrub() -> str:
     """text.pii_scrub twin: identical regexes (no lookarounds/alternation
     — leftmost-first greedy matching agrees between Java regex and RE2),
     counts on the injected original, email -> ip -> phone replace order."""
-    from .operators.text import _PII_KINDS
-
     counts = ",\n  ".join(
         f"CAST(len(regexp_extract_all(text, '{pat}')) AS INT) AS n_{kind}"
-        for kind, pat, _ in _PII_KINDS
+        for kind, pat, _ in text._PII_KINDS
     )
     red = "text"
-    for _, pat, token in _PII_KINDS:
+    for _, pat, token in text._PII_KINDS:
         red = f"regexp_replace({red}, '{pat}', '{token}', 'g')"
     return f"""WITH t AS ({_PII_INJECT_SQL})
 SELECT doc_id AS key,
@@ -2943,13 +2863,11 @@ def sql_countmin_heavy_hitters() -> str:
     """terms.countmin_heavy_hitters twin: same md5-salted row hashes
     (materialized once per (term, row) — never re-run per hex char), same
     deterministic top-k probe order, same min-over-rows read-out."""
-    from .operators.terms import CM_DEPTH, CM_WIDTH
-
-    col = f"{_hexcol_sql('gh', 1)} % {CM_WIDTH}"
+    col = f"{_hexcol_sql('gh', 1)} % {terms.CM_WIDTH}"
     return f"""WITH t AS (SELECT unnest({_WORDS}) AS term FROM documents),
 exact AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS exact_count FROM t GROUP BY 1),
-probes AS (SELECT term, exact_count FROM exact ORDER BY exact_count DESC, term LIMIT 20),
-rows AS (SELECT unnest(generate_series(0, {CM_DEPTH - 1})) AS row),
+probes AS (SELECT term, exact_count FROM exact ORDER BY exact_count DESC, term LIMIT {terms.HEAVY_HITTERS_K}),
+rows AS (SELECT unnest(generate_series(0, {terms.CM_DEPTH - 1})) AS row),
 c0 AS (SELECT row, md5(concat(term, '-cm', CAST(row AS VARCHAR))) AS gh
        FROM t CROSS JOIN rows),
 cells AS (SELECT row, {col} AS col FROM c0),
@@ -2963,15 +2881,13 @@ FROM sketch JOIN pc ON sketch.row = pc.row AND sketch.col = pc.col
 GROUP BY pc.term"""
 
 
-def sql_sampled_percentile_chars(
-    fraction: float = 0.25, p_num: int = 9, p_den: int = 10
-) -> str:
+def sql_sampled_percentile_chars() -> str:
     """text.sampled_percentile_chars twin: identical md5-bucket keep-set,
     identical integer rank selection over the sample."""
-    from .operators.text import SAMPLE_BUCKETS
+    p_num, p_den = text.P90_NUM, text.P90_DEN
 
-    threshold = int(round(fraction * SAMPLE_BUCKETS))
-    bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {SAMPLE_BUCKETS}"
+    threshold = int(round(text.QUERY_SAMPLE_FRACTION * text.SAMPLE_BUCKETS))
+    bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {text.SAMPLE_BUCKETS}"
     return f"""WITH s AS (SELECT lang, n_chars, doc_id FROM documents WHERE {bucket} < {threshold}),
 r AS (
   SELECT lang, n_chars,
@@ -3021,15 +2937,40 @@ SELECT doc_id, lang, len(words) AS n_words,
 FROM w"""
 
 
+_SCALE_CTE = """s AS (
+  SELECT vec_id, embedding,
+         list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS scale
+  FROM embeddings
+)"""
+
+
+def _int8_codes_sql() -> str:
+    """similarity._quantized_vectors twin: the BIGINT int8 codes of
+    `embedding` at its per-vector `scale`."""
+    return (
+        "list_transform(embedding, x -> CAST(CASE WHEN scale = 0 THEN 0 "
+        f"ELSE floor({_dbl(127.0)} * CAST(x AS DOUBLE) / scale + {_dbl(0.5)}) END AS BIGINT))"
+    )
+
+
+def _quantized_dots_sql() -> str:
+    """CTEs s, qv, qs, d: the exact BIGINT dot of every corpus vector's
+    int8 codes with each ANN query's (ann_topk_quantized's scoring)."""
+    return f"""{_SCALE_CTE},
+qv AS (SELECT vec_id, {_int8_codes_sql()} AS qc FROM s),
+qs AS (SELECT vec_id AS query_id, qc AS qq FROM qv WHERE vec_id < {similarity.ANN_QUERIES}),
+d AS (
+  SELECT qs.query_id, qv.vec_id,
+         list_sum(list_transform(range(1, len(qv.qc) + 1), i -> qv.qc[i] * qs.qq[i])) AS qdot
+  FROM qv CROSS JOIN qs WHERE qs.query_id <> qv.vec_id
+)"""
+
+
 def sql_embedding_quantize() -> str:
     """similarity.embedding_quantize twin: identical single-rounded IEEE
     steps (float->double cast exact, one multiply, one divide, floor of
     +0.5) over DuckDB list lambdas."""
-    return f"""WITH s AS (
-  SELECT vec_id, embedding,
-         list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS scale
-  FROM embeddings
-)
+    return f"""WITH {_SCALE_CTE}
 SELECT vec_id, scale,
        array_to_string(
          list_transform(embedding, x -> CAST(CASE WHEN scale = 0 THEN 0
@@ -3038,33 +2979,33 @@ SELECT vec_id, scale,
 FROM s"""
 
 
-def sql_kmeans_assign(k: int = 8) -> str:
+def sql_kmeans_assign() -> str:
     """similarity.kmeans_assign twin: same left-fold (x-c)^2 distance
     (list_reduce == Spark's aggregate fold, pinned elsewhere), assignment
     via ROW_NUMBER tie-broken on seed_id, and the identical fixed-point
     centroid sum (floor(x * 2^20 + 0.5): exact power-of-two multiply, one
     rounding, exact BIGINT accumulation)."""
-    from .operators.similarity import KMEANS_FP_SCALE
+    k = similarity.KMEANS_K
 
     d2 = (
-        "list_reduce(list_transform(generate_series(1, 64), "
+        f"list_reduce(list_transform(generate_series(1, {similarity.EMBED_DIM}), "
         "i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(s.semb[i] AS DOUBLE))"
         " * (CAST(e.embedding[i] AS DOUBLE) - CAST(s.semb[i] AS DOUBLE))), (x, y) -> x + y)"
     )
-    fs = float(KMEANS_FP_SCALE)
+    fs = float(similarity.KMEANS_FP_SCALE)
     return f"""WITH s AS (SELECT vec_id AS seed_id, embedding AS semb FROM embeddings WHERE vec_id < {k}),
 d AS (SELECT e.vec_id, s.seed_id, {d2} AS d2 FROM embeddings e CROSS JOIN s),
 a AS (SELECT vec_id, seed_id AS cluster_id FROM
       (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, seed_id) AS rn FROM d)
       WHERE rn = 1),
-i0 AS (SELECT unnest(generate_series(1, 64)) AS i),
+i0 AS (SELECT unnest(generate_series(1, {similarity.EMBED_DIM})) AS i),
 dims AS (SELECT i FROM i0),
 m AS (SELECT a.cluster_id, dims.i - 1 AS dim_idx,
              CAST(floor(CAST(e.embedding[dims.i] AS DOUBLE) * {_dbl(fs)} + {_dbl(0.5)}) AS BIGINT) AS q
       FROM a JOIN embeddings e USING (vec_id) CROSS JOIN dims)
 SELECT cluster_id, CAST(dim_idx AS INT) AS dim_idx, CAST(COUNT(*) AS BIGINT) AS n_members,
        CAST(SUM(q) AS BIGINT) AS sum_fp,
-       CAST(SUM(q) AS DOUBLE) / CAST(COUNT(*) * {KMEANS_FP_SCALE} AS DOUBLE) AS centroid_next
+       CAST(SUM(q) AS DOUBLE) / CAST(COUNT(*) * {similarity.KMEANS_FP_SCALE} AS DOUBLE) AS centroid_next
 FROM m GROUP BY cluster_id, dim_idx"""
 
 
@@ -3072,50 +3013,20 @@ def sql_ann_topk_quantized() -> str:
     """similarity.ann_topk_quantized twin: identical quantization then an
     exact integer dot (list fold of BIGINT products — no float rules
     needed at all)."""
-    qexpr = (
-        "list_transform(embedding, x -> CAST(CASE WHEN scale = 0 THEN 0 "
-        f"ELSE floor({_dbl(127.0)} * CAST(x AS DOUBLE) / scale + {_dbl(0.5)}) END AS BIGINT))"
-    )
-    return f"""WITH s AS (
-  SELECT vec_id, embedding,
-         list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS scale
-  FROM embeddings
-),
-qv AS (SELECT vec_id, {qexpr} AS qc FROM s),
-qs AS (SELECT vec_id AS query_id, qc AS qq FROM qv WHERE vec_id < 5),
-d AS (
-  SELECT qs.query_id, qv.vec_id,
-         list_sum(list_transform(range(1, len(qv.qc) + 1), i -> qv.qc[i] * qs.qq[i])) AS qdot
-  FROM qv CROSS JOIN qs WHERE qs.query_id <> qv.vec_id
-)
+    return f"""WITH {_quantized_dots_sql()}
 SELECT query_id, vec_id, CAST(qdot AS BIGINT) AS qdot,
        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY qdot DESC, vec_id) AS INTEGER) AS rank
 FROM d
-QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY qdot DESC, vec_id) <= 3"""
+QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY qdot DESC, vec_id) <= {similarity.ANN_K}"""
 
 
 def sql_ann_two_stage() -> str:
     """similarity.ann_two_stage twin: the identical two stages — quantized
-    BIGINT-dot top-12 candidates, then the exact left-fold
-    float dot (the sql_ann_topk formulation) reranked to 3."""
-    m = 12
-    qexpr = (
-        "list_transform(embedding, x -> CAST(CASE WHEN scale = 0 THEN 0 "
-        f"ELSE floor({_dbl(127.0)} * CAST(x AS DOUBLE) / scale + {_dbl(0.5)}) END AS BIGINT))"
-    )
+    BIGINT-dot top-ANN_TWO_STAGE_CANDIDATES candidates, then the exact left-fold
+    float dot (the sql_ann_topk formulation) reranked to ANN_K."""
+    m = similarity.ANN_TWO_STAGE_CANDIDATES
     dot = _dot_expr("e.embedding", "q.embedding")
-    return f"""WITH s AS (
-  SELECT vec_id, embedding,
-         list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS scale
-  FROM embeddings
-),
-qv AS (SELECT vec_id, {qexpr} AS qc FROM s),
-qs AS (SELECT vec_id AS query_id, qc AS qq FROM qv WHERE vec_id < 5),
-d AS (
-  SELECT qs.query_id, qv.vec_id,
-         list_sum(list_transform(range(1, len(qv.qc) + 1), i -> qv.qc[i] * qs.qq[i])) AS qdot
-  FROM qv CROSS JOIN qs WHERE qs.query_id <> qv.vec_id
-),
+    return f"""WITH {_quantized_dots_sql()},
 c AS (
   SELECT query_id, vec_id FROM d
   QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY qdot DESC, vec_id) <= {m}
@@ -3128,22 +3039,14 @@ r AS (
 SELECT query_id, vec_id, CAST(dsum AS DOUBLE) AS dot,
        CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dsum DESC, vec_id) AS INTEGER) AS rank
 FROM r
-QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dsum DESC, vec_id) <= 3"""
+QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dsum DESC, vec_id) <= {similarity.ANN_K}"""
 
 
 def sql_quantization_error() -> str:
     """similarity.quantization_error twin: same quantize, same
     single-rounded reconstruction arithmetic, order-independent max."""
-    qexpr = (
-        "list_transform(embedding, x -> CAST(CASE WHEN scale = 0 THEN 0 "
-        f"ELSE floor({_dbl(127.0)} * CAST(x AS DOUBLE) / scale + {_dbl(0.5)}) END AS BIGINT))"
-    )
-    return f"""WITH s AS (
-  SELECT vec_id, embedding,
-         list_max(list_transform(embedding, x -> abs(CAST(x AS DOUBLE)))) AS scale
-  FROM embeddings
-),
-qv AS (SELECT vec_id, scale, embedding, {qexpr} AS qc FROM s)
+    return f"""WITH {_SCALE_CTE},
+qv AS (SELECT vec_id, scale, embedding, {_int8_codes_sql()} AS qc FROM s)
 SELECT vec_id, scale,
        list_max(list_transform(range(1, len(embedding) + 1),
          i -> abs(CAST(embedding[i] AS DOUBLE)
@@ -3193,13 +3096,11 @@ def sql_events_decay() -> str:
     (float decay could never hash-gate), integer-floor age periods via
     DuckDB's // on non-negative operands == Spark's div. The anchor and
     the age cap are read from the engine's constants at call time."""
-    from .operators.events import DECAY_AGE_CAP_DAYS, DECAY_ANCHOR_US
-
     return f"""WITH w AS (
   SELECT event_type,
-         (CAST(1 AS BIGINT) << CAST({DECAY_AGE_CAP_DAYS} - LEAST(GREATEST(
-            ({DECAY_ANCHOR_US} - epoch_us(ts)) // 86400000000,
-            0), {DECAY_AGE_CAP_DAYS}) AS INTEGER)) AS w
+         (CAST(1 AS BIGINT) << CAST({events.DECAY_AGE_CAP_DAYS} - LEAST(GREATEST(
+            ({events.DECAY_ANCHOR_US} - epoch_us(ts)) // 86400000000,
+            0), {events.DECAY_AGE_CAP_DAYS}) AS INTEGER)) AS w
   FROM events
 )
 SELECT event_type, COUNT(*) AS n_events,
@@ -3304,9 +3205,7 @@ def sql_edit_distance_pairs() -> str:
     via raw substr margin equality (no md5 digests, no key explode) UNIONed
     across the prefix / suffix / short-bucket sources, then DuckDB's
     un-thresholded levenshtein verifies. Same recall contract."""
-    from .operators.dedup import EDIT_BLOCK_CHARS
-
-    d, c = 20, EDIT_BLOCK_CHARS
+    d, c = 20, dedup.EDIT_BLOCK_CHARS
     return f"""WITH d AS (
   SELECT doc_id, text, length(text) AS n FROM documents
 ),
@@ -3338,9 +3237,7 @@ def sql_events_resample() -> str:
     generate_series per type range (vs Spark sequence+explode) LEFT JOINed
     to the same bucket rollup; zero-fill via COALESCE. DECIMAL sum ->
     one DOUBLE cast (determinism rules at the top of this module)."""
-    from .operators.events import WINDOW_SECONDS
-
-    s = WINDOW_SECONDS
+    s = events.WINDOW_SECONDS
     return f"""WITH ev AS (
   SELECT event_type, CAST(floor(epoch(ts)) AS BIGINT) AS e,
          CAST(value AS DECIMAL(18,2)) AS v
@@ -3433,12 +3330,11 @@ WHERE NOT EXISTS (
 def sql_weighted_sample() -> str:
     """text.weighted_sample twin: same md5-bucket + exact integer
     inclusion inequality."""
-    from .operators.text import SAMPLE_BUCKETS
-
-    rate_num = int(round(0.5 * SAMPLE_BUCKETS))
-    bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {SAMPLE_BUCKETS}"
+    rate_num = int(round(text.WEIGHTED_RATE * text.SAMPLE_BUCKETS))
+    cap = text.WEIGHTED_LENGTH_CAP
+    bucket = f"{_hex8_sql('CAST(doc_id AS VARCHAR)')} % {text.SAMPLE_BUCKETS}"
     return f"""SELECT doc_id, lang, n_chars FROM documents
-WHERE ({bucket}) * 2000 < LEAST(n_chars, 2000) * CAST({rate_num} AS BIGINT)"""
+WHERE ({bucket}) * {cap} < LEAST(n_chars, {cap}) * CAST({rate_num} AS BIGINT)"""
 
 
 def sql_boilerplate_scrub() -> str:
@@ -3505,9 +3401,7 @@ def sql_events_anomaly() -> str:
     """events.events_anomaly twin: the resample CTEs (generate_series
     spine), then identical trailing exact-int moments and the same
     single-rounded mean/var/sqrt/z op order."""
-    from .operators.events import WINDOW_SECONDS
-
-    s = WINDOW_SECONDS
+    s = events.WINDOW_SECONDS
     frame = "ROWS BETWEEN 24 PRECEDING AND 1 PRECEDING"
     part = f"PARTITION BY event_type ORDER BY window_start {frame}"
     return f"""WITH ev AS (
@@ -3550,13 +3444,11 @@ def sql_host_components() -> str:
     reachability fixpoint over the symmetric edge set (the
     geo_cluster_cells oracle pattern) instead of iterative min-label
     propagation — component = MIN(reachable label)."""
-    from .operators.web import PAT_HOST, PAT_HREF
-
     return f"""WITH RECURSIVE {_linked_docs_with()},
-l AS (SELECT url, unnest(regexp_extract_all(html_text, '{PAT_HREF}', 1)) AS link FROM h),
+l AS (SELECT url, unnest(regexp_extract_all(html_text, '{web.PAT_HREF}', 1)) AS link FROM h),
 e0 AS (
-  SELECT DISTINCT regexp_extract(url, '{PAT_HOST}', 1) AS src,
-                  regexp_extract(link, '{PAT_HOST}', 1) AS dst
+  SELECT DISTINCT regexp_extract(url, '{web.PAT_HOST}', 1) AS src,
+                  regexp_extract(link, '{web.PAT_HOST}', 1) AS dst
   FROM l
 ),
 e AS (SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0),
@@ -3574,7 +3466,7 @@ def sql_tile_mode_class() -> str:
     (count DESC, class DESC) instead of a struct argmax."""
     return f"""WITH {pages_with()}, {pip_hits_cte()},
 c AS (
-  SELECT {cell_id_sql('lon', 'lat', DEFAULT_TILE_RES)} AS tile_id, airspace_class, COUNT(*) AS n
+  SELECT {cell_id_sql('lon', 'lat', tiles.DEFAULT_TILE_RES)} AS tile_id, airspace_class, COUNT(*) AS n
   FROM hits GROUP BY 1, 2
 ),
 rk AS (
@@ -3589,10 +3481,8 @@ SELECT tile_id, airspace_class, n AS doc_count FROM rk WHERE rn = 1"""
 def sql_events_time_pyramid() -> str:
     """events.events_time_pyramid twin, independent mechanism: one GROUP
     BY per level UNION ALLed (vs Spark's one-pass explode)."""
-    from .operators.events import TIME_PYRAMID_LEVELS
-
     parts = []
-    for name, sec in TIME_PYRAMID_LEVELS:
+    for name, sec in events.TIME_PYRAMID_LEVELS:
         parts.append(
             f"""SELECT '{name}' AS level, e - e % {sec} AS window_start,
        COUNT(*) AS n_events,
@@ -3704,9 +3594,7 @@ FROM n JOIN med ON med.lang = n.lang JOIN mad ON mad.lang = n.lang JOIN fl ON fl
 def sql_session_paths() -> str:
     """events.session_paths twin: same gap sessionization (lag + cumsum),
     path via ordered LIST slice + array_to_string."""
-    from .operators.events import SESSION_GAP_SECONDS
-
-    gap_us = SESSION_GAP_SECONDS * 1_000_000
+    gap_us = events.SESSION_GAP_SECONDS * 1_000_000
     return f"""WITH ev AS (
   SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events
 ),
@@ -3748,13 +3636,11 @@ FROM a LEFT JOIN c ON c.poly_id = a.poly_id"""
 def sql_co_citation() -> str:
     """web.co_citation twin: same extraction + md5-ordered per-page cap,
     pair counts via an independent GROUP BY over the join."""
-    from .operators.web import PAT_HOST, PAT_HREF
-
     return f"""WITH {_linked_docs_with()},
-l AS (SELECT url, unnest(regexp_extract_all(html_text, '{PAT_HREF}', 1)) AS link FROM h),
+l AS (SELECT url, unnest(regexp_extract_all(html_text, '{web.PAT_HREF}', 1)) AS link FROM h),
 hosts AS (
-  SELECT DISTINCT url AS key, regexp_extract(link, '{PAT_HOST}', 1) AS host
-  FROM l WHERE regexp_extract(link, '{PAT_HOST}', 1) <> ''
+  SELECT DISTINCT url AS key, regexp_extract(link, '{web.PAT_HOST}', 1) AS host
+  FROM l WHERE regexp_extract(link, '{web.PAT_HOST}', 1) <> ''
 ),
 capped AS (
   SELECT key, host FROM (
@@ -3805,22 +3691,20 @@ def sql_ann_topk_filtered() -> str:
 WITH s AS (
   SELECT q.vec_id AS query_id, e.vec_id, {dot} AS dsum
   FROM embeddings e JOIN embeddings q
-    ON q.vec_id < 5 AND e.vec_id <> q.vec_id AND e.label = q.label
+    ON q.vec_id < {similarity.ANN_QUERIES} AND e.vec_id <> q.vec_id AND e.label = q.label
 )
 SELECT query_id, vec_id, CAST(dsum AS DOUBLE) AS dot, rank
 FROM (SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY dsum DESC, vec_id) AS INTEGER) AS rank FROM s)
-WHERE rank <= 3"""
+WHERE rank <= {similarity.ANN_K}"""
 
 
 def sql_host_degree_histogram() -> str:
     """web.host_degree_histogram twin."""
-    from .operators.web import PAT_HOST, PAT_HREF
-
     return f"""WITH {_linked_docs_with()},
-l AS (SELECT url, unnest(regexp_extract_all(html_text, '{PAT_HREF}', 1)) AS link FROM h),
+l AS (SELECT url, unnest(regexp_extract_all(html_text, '{web.PAT_HREF}', 1)) AS link FROM h),
 e AS (
-  SELECT DISTINCT regexp_extract(url, '{PAT_HOST}', 1) AS src,
-         regexp_extract(link, '{PAT_HOST}', 1) AS dst
+  SELECT DISTINCT regexp_extract(url, '{web.PAT_HOST}', 1) AS src,
+         regexp_extract(link, '{web.PAT_HOST}', 1) AS dst
   FROM l
 ),
 d AS (SELECT src, COUNT(*) AS out_degree FROM e GROUP BY 1)
@@ -3870,9 +3754,7 @@ def sql_label_centroid_distances() -> str:
     quantization, exact BIGINT per-dim numerators, the same three
     single-rounded ops per dim, and the same ORDERED left-fold sum
     (list_prepend + list_reduce == Spark's 0.0-seeded aggregate)."""
-    from .operators.similarity import KMEANS_FP_SCALE
-
-    fs = float(KMEANS_FP_SCALE)
+    fs = float(similarity.KMEANS_FP_SCALE)
     return f"""WITH ex AS (
   SELECT label, t.j AS dim_idx,
          CAST(floor(CAST(embedding[t.j + 1] AS DOUBLE) * {fs!r} + 0.5) AS BIGINT) AS q
@@ -3902,12 +3784,10 @@ FROM g"""
 def sql_events_window_users() -> str:
     """events.events_window_users twin, independent mechanism:
     COUNT(DISTINCT user_id) directly (vs Spark's dedupe-first)."""
-    from .operators.events import WINDOW_SECONDS
-
     return f"""WITH ev AS (
   SELECT CAST(floor(epoch(ts)) AS BIGINT) AS e, user_id FROM events
 )
-SELECT e - e % {WINDOW_SECONDS} AS window_start,
+SELECT e - e % {events.WINDOW_SECONDS} AS window_start,
        COUNT(DISTINCT user_id) AS n_users,
        COUNT(*) AS n_events
 FROM ev GROUP BY 1"""
@@ -3916,11 +3796,9 @@ FROM ev GROUP BY 1"""
 def sql_url_path_stats() -> str:
     """web.url_path_stats twin: same depth arithmetic over the stripped
     path."""
-    from .operators.web import PAT_HOST
-
     return f"""WITH {pages_with()},
 u AS (
-  SELECT regexp_extract(url, '{PAT_HOST}', 1) AS host,
+  SELECT regexp_extract(url, '{web.PAT_HOST}', 1) AS host,
          CAST(length(regexp_replace(url, '^[a-z]+://[^/]*', ''))
               - length(replace(regexp_replace(url, '^[a-z]+://[^/]*', ''), '/', '')) AS BIGINT) AS d,
          CASE WHEN contains(url, '?') THEN 1 ELSE 0 END AS q
@@ -3936,10 +3814,8 @@ def sql_reciprocal_links() -> str:
     deterministic reciprocal gate pages — the circulant synth topology
     alone has zero reciprocal pairs, a vacuous gate), reciprocity via a
     plain self-join on the ordered pair."""
-    from .operators.web import PAT_HOST, PAT_HREF, RECIPROCAL_GATE_PAGES
-
     extra = ", ".join(
-        "('{0}', '{1}')".format(u, h.replace("'", "''")) for u, h in RECIPROCAL_GATE_PAGES
+        "('{0}', '{1}')".format(u, h.replace("'", "''")) for u, h in web.RECIPROCAL_GATE_PAGES
     )
     return f"""WITH {_linked_docs_with()},
 hx AS (
@@ -3947,10 +3823,10 @@ hx AS (
   UNION ALL
   SELECT * FROM (VALUES {extra}) v(url, html_text)
 ),
-l AS (SELECT url, unnest(regexp_extract_all(html_text, '{PAT_HREF}', 1)) AS link FROM hx),
+l AS (SELECT url, unnest(regexp_extract_all(html_text, '{web.PAT_HREF}', 1)) AS link FROM hx),
 g AS (
-  SELECT regexp_extract(url, '{PAT_HOST}', 1) AS src,
-         regexp_extract(link, '{PAT_HOST}', 1) AS dst, COUNT(*) AS n
+  SELECT regexp_extract(url, '{web.PAT_HOST}', 1) AS src,
+         regexp_extract(link, '{web.PAT_HOST}', 1) AS dst, COUNT(*) AS n
   FROM l GROUP BY 1, 2
 ),
 gg AS (SELECT * FROM g WHERE src <> dst)
@@ -4010,13 +3886,12 @@ def sql_host_bfs_depth() -> str:
     """web.host_bfs_depth twin, independent mechanism: recursive-CTE walk
     from the MIN host with a depth cap, BFS depth = MIN(depth) per node
     (vs Spark's iterative frontier expansion)."""
-    from .operators.web import PAT_HOST, PAT_HREF
 
     return f"""WITH RECURSIVE {_linked_docs_with()},
-l AS (SELECT url, unnest(regexp_extract_all(html_text, '{PAT_HREF}', 1)) AS link FROM h),
+l AS (SELECT url, unnest(regexp_extract_all(html_text, '{web.PAT_HREF}', 1)) AS link FROM h),
 e0 AS (
-  SELECT DISTINCT regexp_extract(url, '{PAT_HOST}', 1) AS s,
-                  regexp_extract(link, '{PAT_HOST}', 1) AS d
+  SELECT DISTINCT regexp_extract(url, '{web.PAT_HOST}', 1) AS s,
+                  regexp_extract(link, '{web.PAT_HOST}', 1) AS d
   FROM l
 ),
 e AS (SELECT s, d FROM e0 UNION SELECT d, s FROM e0),
@@ -4089,7 +3964,7 @@ def sql_tile_unmatched_counts() -> str:
     """tiles.tile_unmatched_counts twin: NOT IN over the pip-hit urls
     (vs Spark's left_anti join)."""
     return f"""WITH {pages_with()}, {pip_hits_cte()}
-SELECT {cell_id_sql('lon', 'lat', DEFAULT_TILE_RES)} AS tile_id, COUNT(*) AS n_unmatched
+SELECT {cell_id_sql('lon', 'lat', tiles.DEFAULT_TILE_RES)} AS tile_id, COUNT(*) AS n_unmatched
 FROM pages
 WHERE url NOT IN (SELECT url FROM hits)
 GROUP BY 1"""
@@ -4098,12 +3973,10 @@ GROUP BY 1"""
 def sql_lang_confusion() -> str:
     """text.lang_confusion twin: the sql_langid prediction CTE rolled up
     to the confusion matrix; row fractions via a correlated total."""
-    from .operators.text import LANG_STOPWORDS
-
-    hits = {lang: _stopword_hits_sql(words) for lang, words in LANG_STOPWORDS.items()}
-    gmax = "GREATEST(" + ", ".join(f"h_{lang}" for lang in LANG_STOPWORDS) + ")"
+    hits = {lang: _stopword_hits_sql(words) for lang, words in text.LANG_STOPWORDS.items()}
+    gmax = "GREATEST(" + ", ".join(f"h_{lang}" for lang in text.LANG_STOPWORDS) + ")"
     case = " ".join(
-        f"WHEN h_{lang} = gmax THEN '{lang}'" for lang in sorted(LANG_STOPWORDS, reverse=True)
+        f"WHEN h_{lang} = gmax THEN '{lang}'" for lang in sorted(text.LANG_STOPWORDS, reverse=True)
     )
     cols = ", ".join(f"{expr} AS h_{lang}" for lang, expr in hits.items())
     return f"""WITH h AS (SELECT lang, {cols} FROM documents),
@@ -4248,9 +4121,7 @@ def sql_domain_stats() -> str:
     """web.domain_stats twin: same registered-domain rule — last two
     labels, or last three when the trailing two are a listed public
     suffix (TWO_LEVEL_SUFFIXES is shared data, inlined as an IN list)."""
-    from .operators.web import TWO_LEVEL_SUFFIXES
-
-    in_list = ", ".join(f"'{s}'" for s in TWO_LEVEL_SUFFIXES)
+    in_list = ", ".join(f"'{s}'" for s in web.TWO_LEVEL_SUFFIXES)
     u = domain_url_sql("duckdb")
     return f"""
 WITH p AS (
@@ -4283,32 +4154,30 @@ def sql_kmeans_iterate() -> str:
     seed_id, fixed-point centroid components sum_q/(n*2^20) (one double
     rounding each, bit-identical), list(c ORDER BY dim) centroids with
     seed fallback for empty clusters, round-2 fold vs those doubles."""
-    from .operators.similarity import KMEANS_FP_SCALE
-
-    fs = float(KMEANS_FP_SCALE)
+    fs = float(similarity.KMEANS_FP_SCALE)
     d2_1 = (
-        "list_reduce(list_transform(generate_series(1, 64), "
+        f"list_reduce(list_transform(generate_series(1, {similarity.EMBED_DIM}), "
         "i -> (CAST(e.embedding[i] AS DOUBLE) - CAST(s.semb[i] AS DOUBLE))"
         " * (CAST(e.embedding[i] AS DOUBLE) - CAST(s.semb[i] AS DOUBLE))), (x, y) -> x + y)"
     )
     d2_2 = (
-        "list_reduce(list_transform(generate_series(1, 64), "
+        f"list_reduce(list_transform(generate_series(1, {similarity.EMBED_DIM}), "
         "i -> (CAST(e2.embedding[i] AS DOUBLE) - cf.cemb[i])"
         " * (CAST(e2.embedding[i] AS DOUBLE) - cf.cemb[i])), (x, y) -> x + y)"
     )
-    return f"""WITH s AS (SELECT vec_id AS seed_id, embedding AS semb FROM embeddings WHERE vec_id < 8),
+    return f"""WITH s AS (SELECT vec_id AS seed_id, embedding AS semb FROM embeddings WHERE vec_id < {similarity.KMEANS_K}),
 d1 AS (SELECT e.vec_id, s.seed_id, {d2_1} AS d2 FROM embeddings e CROSS JOIN s),
 a1 AS (SELECT vec_id, seed_id AS c1 FROM
        (SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, seed_id) AS rn FROM d1)
        WHERE rn = 1),
-dims AS (SELECT unnest(generate_series(1, 64)) AS i),
+dims AS (SELECT unnest(generate_series(1, {similarity.EMBED_DIM})) AS i),
 m AS (SELECT a1.c1, dims.i,
              CAST(COUNT(*) AS BIGINT) AS n,
              CAST(SUM(CAST(floor(CAST(e.embedding[dims.i] AS DOUBLE) * {_dbl(fs)} + {_dbl(0.5)}) AS BIGINT)) AS BIGINT) AS sum_q
       FROM a1 JOIN embeddings e USING (vec_id) CROSS JOIN dims
       GROUP BY a1.c1, dims.i),
 cent AS (SELECT c1 AS cid,
-                list(CAST(sum_q AS DOUBLE) / CAST(n * {KMEANS_FP_SCALE} AS DOUBLE) ORDER BY i) AS cemb
+                list(CAST(sum_q AS DOUBLE) / CAST(n * {similarity.KMEANS_FP_SCALE} AS DOUBLE) ORDER BY i) AS cemb
          FROM m GROUP BY c1),
 cf AS (SELECT s.seed_id AS cid,
               COALESCE(cent.cemb, list_transform(s.semb, x -> CAST(x AS DOUBLE))) AS cemb
@@ -4328,19 +4197,17 @@ def sql_link_hits() -> str:
     unrolled as CTEs — a_0 = 1, h_i = SUM a over out-edges, a_i = SUM h
     over in-edges; exact BIGINTs (no normalization: a per-round monotone
     scalar, ranking-irrelevant — the documented contract)."""
-    from .operators.graph import HITS_ROUNDS
-    from .operators.web import PAT_HOST, PAT_HREF
-
+    rounds = graph.HITS_ROUNDS
     parts = [
         f"""{_linked_docs_with()},
-l AS (SELECT url, unnest(regexp_extract_all(html_text, '{PAT_HREF}', 1)) AS link FROM h),
-e AS (SELECT regexp_extract(url, '{PAT_HOST}', 1) AS src,
-             regexp_extract(link, '{PAT_HOST}', 1) AS dst FROM l),
+l AS (SELECT url, unnest(regexp_extract_all(html_text, '{web.PAT_HREF}', 1)) AS link FROM h),
+e AS (SELECT regexp_extract(url, '{web.PAT_HOST}', 1) AS src,
+             regexp_extract(link, '{web.PAT_HOST}', 1) AS dst FROM l),
 nodes AS (SELECT DISTINCT host AS id
           FROM (SELECT src AS host FROM e UNION SELECT dst AS host FROM e)),
 a0 AS (SELECT id, CAST(1 AS BIGINT) AS a FROM nodes)"""
     ]
-    for i in range(HITS_ROUNDS):
+    for i in range(rounds):
         parts.append(
             f"""hs{i} AS (SELECT e.src, SUM(a{i}.a) AS h FROM e JOIN a{i} ON e.dst = a{i}.id GROUP BY e.src),
 h{i + 1} AS (SELECT nodes.id, CAST(COALESCE(hs{i}.h, 0) AS BIGINT) AS h
@@ -4352,17 +4219,15 @@ a{i + 1} AS (SELECT nodes.id, CAST(COALESCE(as{i}.a, 0) AS BIGINT) AS a
     return (
         "WITH "
         + ",\n".join(parts)
-        + f"\nSELECT a{HITS_ROUNDS}.id AS host, h{HITS_ROUNDS}.h AS hub, a{HITS_ROUNDS}.a AS authority"
-        + f"\nFROM a{HITS_ROUNDS} JOIN h{HITS_ROUNDS} ON h{HITS_ROUNDS}.id = a{HITS_ROUNDS}.id"
+        + f"\nSELECT a{rounds}.id AS host, h{rounds}.h AS hub, a{rounds}.a AS authority"
+        + f"\nFROM a{rounds} JOIN h{rounds} ON h{rounds}.id = a{rounds}.id"
     )
 
 
 def sql_link_internal_stats() -> str:
     """web.link_internal_stats twin: same link extraction, same
     registered-domain rule on both endpoints, one rollup + one division."""
-    from .operators.web import PAT_HOST, PAT_HREF, TWO_LEVEL_SUFFIXES
-
-    in_list = ", ".join(f"'{s}'" for s in TWO_LEVEL_SUFFIXES)
+    in_list = ", ".join(f"'{s}'" for s in web.TWO_LEVEL_SUFFIXES)
 
     def dom(col: str) -> str:
         return f"""(
@@ -4376,9 +4241,9 @@ def sql_link_internal_stats() -> str:
 )"""
 
     return f"""WITH {_linked_docs_with()},
-l AS (SELECT url, unnest(regexp_extract_all(html_text, '{PAT_HREF}', 1)) AS link FROM h),
-d AS (SELECT {dom(f"regexp_extract(url, '{PAT_HOST}', 1)")} AS src_domain,
-             {dom(f"regexp_extract(link, '{PAT_HOST}', 1)")} AS dst_domain
+l AS (SELECT url, unnest(regexp_extract_all(html_text, '{web.PAT_HREF}', 1)) AS link FROM h),
+d AS (SELECT {dom(f"regexp_extract(url, '{web.PAT_HOST}', 1)")} AS src_domain,
+             {dom(f"regexp_extract(link, '{web.PAT_HOST}', 1)")} AS dst_domain
       FROM l)
 SELECT src_domain,
        CAST(COUNT(*) AS BIGINT) AS n_links,
@@ -4392,11 +4257,9 @@ FROM d GROUP BY src_domain"""
 def sql_anchor_target_stats() -> str:
     """web.anchor_target_stats twin: (link, text)-level counts, modal text
     via ROW_NUMBER (cnt DESC, text ASC), totals joined back."""
-    from .operators.web import PAT_ANCHOR
-
     return f"""WITH {_linked_docs_with()},
-z AS (SELECT regexp_extract_all(html_text, '{PAT_ANCHOR}', 1) AS links,
-             regexp_extract_all(html_text, '{PAT_ANCHOR}', 2) AS texts
+z AS (SELECT regexp_extract_all(html_text, '{web.PAT_ANCHOR}', 1) AS links,
+             regexp_extract_all(html_text, '{web.PAT_ANCHOR}', 2) AS texts
       FROM h),
 u AS (SELECT unnest(generate_series(1, len(links))) AS i, links, texts FROM z),
 pt AS (SELECT links[i] AS link, texts[i] AS anchor_text, CAST(COUNT(*) AS BIGINT) AS cnt
@@ -4416,7 +4279,7 @@ def sql_sketch_quantiles() -> str:
     """relational.sketch_quantiles twin: equi-width histogram, integer
     ceil-rank targets, first qualifying bin via ROW_NUMBER, and the same
     parenthesized interpolation (bin_lo + ((t - cum_before)/cnt) * width)."""
-    from .operators.relational import SKETCH_BIN_WIDTH as w
+    w = relational.SKETCH_BIN_WIDTH
 
     qrows = ", ".join(f"({n}, {d})" for n, d in ((1, 2), (9, 10), (99, 100)))
     return f"""
@@ -4469,15 +4332,13 @@ def sql_web_prefilter() -> str:
     host-cap composition recomputed in one SQL from the shared pattern
     constants (canonical CTEs, md5-digit robots rules with the '/'
     pathless default, md5-ordered host quota)."""
-    from .operators.web import PAT_HOST
-
     def hexd(i: int) -> str:
         c = f"ascii(substring(mh, {i}, 1))"
         return f"((CASE WHEN {c} >= 97 THEN {c} - 87 ELSE {c} - 48 END) % 10)"
 
     return f"""WITH {_canonical_url_ctes()},
 rep AS (SELECT MIN(url) AS url FROM c GROUP BY canonical_url),
-h0 AS (SELECT DISTINCT regexp_extract(url, '{PAT_HOST}', 1) AS host FROM rep),
+h0 AS (SELECT DISTINCT regexp_extract(url, '{web.PAT_HOST}', 1) AS host FROM rep),
 hm AS (SELECT host, md5(host) AS mh FROM h0),
 rl AS (
   SELECT host, '/' || chr(48 + {hexd(1)}) AS rule_path, FALSE AS allow FROM hm
@@ -4486,7 +4347,7 @@ rl AS (
   UNION ALL
   SELECT host, '/', TRUE FROM hm
 ),
-p AS (SELECT url, regexp_extract(url, '{PAT_HOST}', 1) AS host,
+p AS (SELECT url, regexp_extract(url, '{web.PAT_HOST}', 1) AS host,
              CASE WHEN regexp_extract(url, '^[a-z]+://[^/]*(/.*)$', 1) = ''
                   THEN '/' ELSE regexp_extract(url, '^[a-z]+://[^/]*(/.*)$', 1)
              END AS path
@@ -4500,7 +4361,7 @@ keep AS (SELECT url, host FROM mch WHERE rn = 1 AND allow),
 r AS (SELECT host, url,
              CAST(ROW_NUMBER() OVER (PARTITION BY host ORDER BY md5(url)) AS INTEGER) AS host_rank
       FROM keep)
-SELECT host, url, host_rank FROM r WHERE host_rank <= 3"""
+SELECT host, url, host_rank FROM r WHERE host_rank <= {web.HOST_CAP}"""
 
 
 def sql_bpe_phrase_merge() -> str:
@@ -4548,19 +4409,17 @@ def sql_span_scrub() -> str:
     """text.span_scrub twin: identical (doc, digest)-level hot-gram
     derivation, sequence cover expansion, anti-join scrub and ordered
     rebuild; empty stream -> md5('')."""
-    from .operators.text import SPAN_WORDS
-
     return f"""
 WITH w AS (SELECT doc_id AS key, {_WORDS} AS words FROM documents),
 toks AS (SELECT key, CAST(i - 1 AS BIGINT) AS pos, words[i] AS tok
          FROM w, LATERAL (SELECT UNNEST(generate_series(1, len(words))) AS i) t),
 g AS (SELECT key, CAST(i - 1 AS BIGINT) AS gpos, md5(grams[i]) AS dg
-      FROM (SELECT key, {_ngrams_list_sql(SPAN_WORDS)} AS grams FROM w),
+      FROM (SELECT key, {_ngrams_list_sql(text.SPAN_WORDS)} AS grams FROM w),
            LATERAL (SELECT UNNEST(generate_series(1, len(grams))) AS i) t),
 hot AS (SELECT dg FROM (SELECT DISTINCT key, dg FROM g) GROUP BY dg HAVING COUNT(*) >= 2),
 cover AS (SELECT DISTINCT g.key, g.gpos + o.j AS pos
           FROM g JOIN hot ON hot.dg = g.dg,
-               LATERAL (SELECT UNNEST(generate_series(0, {SPAN_WORDS - 1})) AS j) o),
+               LATERAL (SELECT UNNEST(generate_series(0, {text.SPAN_WORDS - 1})) AS j) o),
 nt AS (SELECT key, CAST(COUNT(*) AS BIGINT) AS n_tokens FROM toks GROUP BY key),
 ns AS (SELECT key, CAST(COUNT(*) AS BIGINT) AS n_scrubbed FROM cover GROUP BY key),
 reb AS (SELECT t.key, md5(string_agg(t.tok, ' ' ORDER BY t.pos)) AS scrubbed_md5
@@ -4576,10 +4435,8 @@ FROM nt LEFT JOIN ns ON ns.key = nt.key LEFT JOIN reb ON reb.key = nt.key"""
 def sql_quality_lr_score() -> str:
     """text.quality_lr_score twin: same weights as strtod literals, same
     left-associated combination, one FLOAT rounding at the boundary."""
-    from .operators.text import QUALITY_LR_WEIGHTS
-
     p = _quality_parts()
-    w0, w1, w2, w3, w4 = QUALITY_LR_WEIGHTS
+    w0, w1, w2, w3, w4 = text.QUALITY_LR_WEIGHTS
     score = (
         f"(((({_dbl(w0)} + {_dbl(w1)} * {p['mean_wl']}) + {_dbl(w2)} * {p['punct_r']})"
         f" + {_dbl(w3)} * {p['digit_r']}) + {_dbl(w4)} * {p['n_chars']})"

@@ -88,7 +88,7 @@ def bucketed_cover(spark: SparkSession, polygons, table: str = "cover_bucketed",
     DataFrame, built by `polygon_cover` (a table through the distributed
     polyfill, so the polygon side never loops on the driver). Pages and
     cover share the resolution, so their cells always meet."""
-    cover = polygon_cover(spark, polygons, DEFAULT_JOIN_RES)
+    cover = polygon_cover(spark, polygons)
     write_bucketed(cover, table, n_buckets)
     return spark.table(table)
 

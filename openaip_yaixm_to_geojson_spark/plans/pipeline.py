@@ -19,12 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.knn import knn_ring_expansion
 from ..operators.spatial import spatial_join
-from ..operators.tiles import (
-    DEFAULT_TILE_RES,
-    tile_class_rollup,
-    tile_doc_counts,
-    tile_zoom_rollup,
-)
+from ..operators.tiles import tile_class_rollup, tile_doc_counts, tile_zoom_rollup
 from ..sources.pages import pages_from_documents
 from .checkpoint import StageRunner
 
@@ -33,11 +28,10 @@ from .checkpoint import StageRunner
 Stage = tuple[str, Callable[[dict[str, DataFrame]], DataFrame], tuple[str, ...]]
 
 # run_corpus_pipeline's corpus selection (quality floor, then the md5-bucket
-# sample) and its two export layouts; the oracle's pipeline twins read these
+# sample) and its chunk export window; the oracle's pipeline twins read these
 QUALITY_MIN = 0.7
 SAMPLE_FRACTION = 0.5
 CHUNK_SIZE, CHUNK_STRIDE = 64, 48
-PACK_CAPACITY, PACK_STREAMS = 512, 8
 
 
 def _run_stages(
@@ -86,13 +80,13 @@ def run_pipeline(
         ("pages", build_pages, ("cell_r5",)),
         ("join_out", lambda s: spatial_join(s["pages"], polygons, keep_cols=("text", "lang")), ()),
         ("knn_out", lambda s: knn_ring_expansion(s["pages"], polygons), ()),
-        ("tiles", lambda s: tile_class_rollup(s["join_out"], DEFAULT_TILE_RES), ()),
-        ("tile_counts", lambda s: tile_doc_counts(s["pages"], DEFAULT_TILE_RES), ()),
+        ("tiles", lambda s: tile_class_rollup(s["join_out"]), ()),
+        ("tile_counts", lambda s: tile_doc_counts(s["pages"]), ()),
         # zoom pyramid: built from the TILE stage, not the fact table — each
         # coarser level costs a tiles-sized aggregation (the 100-TB shape)
         (
             "tile_counts_z2",
-            lambda s: tile_zoom_rollup(s["tile_counts"].drop("n_langs"), levels=2),
+            lambda s: tile_zoom_rollup(s["tile_counts"].drop("n_langs")),
             (),
         ),
     ]
@@ -184,6 +178,6 @@ def run_corpus_pipeline(
         # layouts); both derive only from the stored corpus stage, so a
         # resume after `corpus` never re-runs analyze/dedup
         ("chunks", lambda s: chunk_documents(s["corpus"], CHUNK_SIZE, CHUNK_STRIDE), ()),
-        ("packed", lambda s: pack_documents(s["corpus"], PACK_CAPACITY, PACK_STREAMS), ()),
+        ("packed", lambda s: pack_documents(s["corpus"]), ()),
     ]
     return _run_stages(spark, checkpoint_dir, stages, stop_after)

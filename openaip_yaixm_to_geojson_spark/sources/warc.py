@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 WARC_EPOCH = 1704067200  # 2024-01-01T00:00:00Z — shared literal
+WARC_FILES, WARC_RECORDS_PER_FILE = 6, 50  # the directory the warc_read query writes
 
 
 def record_url(file_id: int, rec_id: int) -> str:

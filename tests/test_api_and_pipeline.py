@@ -403,6 +403,85 @@ def test_pipeline_oracle_reads_the_pipeline_constants(monkeypatch):
     assert "CAST(0.25 AS DOUBLE)" in moved and "range(0, len(words), 7)" in moved and "s // 7" in moved
 
 
+def test_oracle_reads_the_engine_gate_constants(monkeypatch):
+    """The kNN, ANN and sample oracle twins read the engine's k, query
+    count and sample fraction at call time, as the engine's query
+    functions do (no parameter default binds them), so a patched value
+    moves exactly those oracles, each by the expected text (Spark-free:
+    only the SQL text is built)."""
+    import __spark_entry__ as e
+    from openaip_yaixm_to_geojson_spark.operators import knn, similarity, text
+
+    before = e.oracle_sql()
+    monkeypatch.setattr(knn, "KNN_K", 5)
+    monkeypatch.setattr(similarity, "ANN_QUERIES", 7)
+    monkeypatch.setattr(similarity, "ANN_K", 4)
+    monkeypatch.setattr(text, "QUERY_SAMPLE_FRACTION", 0.5)
+    after = e.oracle_sql()
+    knn_keys = ["knn_edge_k", "knn_edge_table_k", "knn_k", "knn_table_k"]
+    ann_keys = ["ann_ivf", "ann_lsh", "ann_topk", "ann_topk_filtered", "ann_topk_quantized", "ann_two_stage"]
+    sample_keys = ["sample", "sample_complement", "sampled_p90_chars"]
+    assert sorted(k for k in before if before[k] != after[k]) == sorted(knn_keys + ann_keys + sample_keys)
+    for key in knn_keys:
+        assert after[key] == before[key].replace("WHERE rn <= 3", "WHERE rn <= 5")
+    for key in ("ann_topk", "ann_topk_filtered"):
+        assert after[key] == before[key].replace("q.vec_id < 5", "q.vec_id < 7").replace(
+            "WHERE rank <= 3", "WHERE rank <= 4"
+        )
+    assert after["sample"] == before["sample"].replace("< 250000", "< 500000")
+    assert after["sample_complement"] == before["sample_complement"].replace(">= 250000", ">= 500000")
+    assert after["sampled_p90_chars"] == before["sampled_p90_chars"].replace("< 250000", "< 500000")
+
+
+# (module, constant, patched value, the oracle_sql() keys it moves)
+_SHARED_GATE_CONSTANTS = [
+    ("similarity", "EMBED_DIM", 32, ["ann_ivf", "ann_lsh", "ann_topk", "ann_topk_filtered", "ann_two_stage",
+                                     "embedding_neardup", "embedding_neardup_lsh", "kmeans_assign", "kmeans_iterate"]),
+    ("similarity", "ANN_LSH_PLANES", 3, ["ann_lsh"]),
+    ("similarity", "ANN_TWO_STAGE_CANDIDATES", 9, ["ann_two_stage"]),
+    ("similarity", "NEARDUP_COSINE", 0.5, ["embedding_neardup", "embedding_neardup_lsh"]),
+    ("similarity", "NEARDUP_LSH_PLANES", 3, ["embedding_neardup_lsh"]),
+    ("similarity", "KMEANS_K", 4, ["kmeans_assign", "kmeans_iterate"]),
+    ("terms", "INVERTED_INDEX_DF_CAP", 200, ["inverted_index_capped"]),
+    ("text", "WEIGHTED_RATE", 0.25, ["weighted_sample"]),
+    ("text", "WEIGHTED_LENGTH_CAP", 1000, ["weighted_sample"]),
+    ("text", "STRATIFIED_QUOTA", 20, ["stratified_sample"]),
+    ("text", "PACK_CAPACITY", 256, ["pack_documents", "pipeline_packed"]),
+    ("text", "PACK_STREAMS", 4, ["pack_documents", "pipeline_packed"]),
+    ("text", "P90_NUM", 3, ["lang_p90_chars", "sampled_p90_chars"]),
+    ("text", "P90_DEN", 4, ["lang_p90_chars", "sampled_p90_chars"]),
+    ("text", "QUERY_CHUNK_SIZE", 16, ["chunk_documents"]),
+    ("text", "QUERY_CHUNK_STRIDE", 8, ["chunk_documents"]),
+    ("dedup", "NGRAM_JACCARD", 0.4, ["ngram_jaccard_pairs"]),
+    ("tiles", "ZOOM_LEVELS", 1, ["tile_zoom_rollup"]),
+]
+
+
+@pytest.mark.parametrize("module, name, value, moved", _SHARED_GATE_CONSTANTS)
+def test_shared_gate_constant_moves_its_oracles(monkeypatch, module, name, value, moved):
+    """Each of these gate values is one engine constant that the query
+    and its oracle twin both read at call time; patching it moves
+    exactly the oracles of the queries that use it (Spark-free)."""
+    import importlib
+
+    import __spark_entry__ as e
+
+    before = e.oracle_sql()
+    monkeypatch.setattr(importlib.import_module(f"openaip_yaixm_to_geojson_spark.operators.{module}"), name, value)
+    after = e.oracle_sql()
+    assert sorted(k for k in before if before[k] != after[k]) == moved
+
+
+def test_every_gated_query_has_an_oracle():
+    """queries() and oracle_sql() name the same 210 queries, so none runs
+    unchecked and no oracle is orphaned (Spark-free: no query is run)."""
+    import __spark_entry__ as e
+
+    queries, oracles = e.queries(), e.oracle_sql()
+    assert sorted(queries) == sorted(oracles)
+    assert len(oracles) == 210
+
+
 def test_warc_gz_is_real_gzip_and_reads_back(spark, tmp_path):
     """make_warc_gz writes genuine multi-member gzip (stdlib gzip module
     decompresses the WHOLE file — member concatenation is spec behavior)

@@ -26,7 +26,8 @@ def test_exact_dedup(spark, docs):
     assert sum(out.values()) == 6 and len(out) == 5
 
 
-def test_minhash_lsh_finds_near_dup(spark, docs):
+def test_minhash_lsh_finds_near_dup(spark, docs, monkeypatch):
+    from openaip_yaixm_to_geojson_spark.operators import dedup
     from openaip_yaixm_to_geojson_spark.operators.dedup import (
         minhash_lsh_pairs,
         ngram_jaccard_pairs,
@@ -34,22 +35,25 @@ def test_minhash_lsh_finds_near_dup(spark, docs):
 
     # banding matched to the threshold: 16 bands x 1 row has high recall at
     # J >= 0.4 (the default 8x2 S-curve targets J >= ~0.7)
+    monkeypatch.setattr(dedup, "MINHASH_JACCARD", 0.4)
     pairs = {
         (r["key_a"], r["key_b"]): r["jaccard"]
-        for r in minhash_lsh_pairs(docs, jaccard_threshold=0.4, bands=16).collect()
+        for r in minhash_lsh_pairs(docs, bands=16).collect()
     }
     assert (0, 1) in pairs and pairs[(0, 1)] == 1.0
     assert (0, 2) in pairs or (1, 2) in pairs  # near dup shares most shingles
     assert all(a < b for a, b in pairs)
     # exact verification path agrees on the exact-dup pair
-    exact = {(r["key_a"], r["key_b"]) for r in ngram_jaccard_pairs(docs, threshold=0.99).collect()}
+    monkeypatch.setattr(dedup, "NGRAM_JACCARD", 0.99)
+    exact = {(r["key_a"], r["key_b"]) for r in ngram_jaccard_pairs(docs).collect()}
     assert (0, 1) in exact
 
 
-def test_minhash_size_prefilter_keeps_pair_at_threshold(spark):
+def test_minhash_size_prefilter_keeps_pair_at_threshold(spark, monkeypatch):
     """A's 55 shingles are a subset of B's 100, so J = 55/100 = 0.55 exactly
     and the verify keeps the pair at t = 0.55. The size-ratio prefilter must
     not drop it: in floats 0.55 * 100 = 55.00000000000001 > 55."""
+    from openaip_yaixm_to_geojson_spark.operators import dedup
     from openaip_yaixm_to_geojson_spark.operators.dedup import minhash_lsh_pairs
 
     words = [f"w{i}" for i in range(102)]
@@ -58,9 +62,10 @@ def test_minhash_size_prefilter_keeps_pair_at_threshold(spark):
     )
     # 16 bands x 1 row: each band matches with probability J, so the pair
     # is a candidate unless all 16 single-hash bands miss
+    monkeypatch.setattr(dedup, "MINHASH_JACCARD", 0.55)
     pairs = {
         (r["key_a"], r["key_b"]): r["jaccard"]
-        for r in minhash_lsh_pairs(docs, jaccard_threshold=0.55, bands=16).collect()
+        for r in minhash_lsh_pairs(docs, bands=16).collect()
     }
     assert pairs == {(0, 1): 0.55}
 
@@ -73,17 +78,19 @@ def test_simhash_neardup(spark, docs):
     assert (0, 2) in pairs  # one changed word flips few bits
 
 
-def test_cosine_topk_matches_numpy(spark):
+def test_cosine_topk_matches_numpy(spark, monkeypatch):
+    from openaip_yaixm_to_geojson_spark.operators import similarity
     from openaip_yaixm_to_geojson_spark.operators.similarity import (
         cosine_topk,
         queries_from_embeddings,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = queries_from_embeddings(emb, n=3)
+    monkeypatch.setattr(similarity, "ANN_QUERIES", 3)
+    queries = queries_from_embeddings(emb)
     got = {
         (r["query_id"], r["rank"]): r["vec_id"]
-        for r in cosine_topk(emb, queries, k=3).collect()
+        for r in cosine_topk(emb, queries).collect()
     }
     pdf = emb.toPandas()
     mat = np.stack(pdf["embedding"].map(lambda v: np.asarray(v, dtype=np.float64)))
@@ -107,12 +114,12 @@ def test_lsh_ann_recall(spark):
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    queries = queries_from_embeddings(emb, n=5)
-    exact = {(r["query_id"], r["vec_id"]) for r in cosine_topk(emb, queries, k=3).collect()}
+    queries = queries_from_embeddings(emb)
+    exact = {(r["query_id"], r["vec_id"]) for r in cosine_topk(emb, queries).collect()}
     # this corpus has weak neighbour structure (mean top-1 cosine ~0.37), so
     # hyperplane agreement is ~0.62/plane — 2 planes + multiprobe is the
     # sweet spot here; recall is deterministic (md5-derived hyperplanes)
-    approx = {(r["query_id"], r["vec_id"]) for r in lsh_ann_topk(emb, queries, k=3, n_planes=2).collect()}
+    approx = {(r["query_id"], r["vec_id"]) for r in lsh_ann_topk(emb, queries).collect()}
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.6, f"ANN recall too low: {recall}"
 
@@ -142,13 +149,14 @@ def test_ann_udf_kernels_match_expressions(spark):
         assert list(r["p_expr"]) == list(r["p_udf"]), r["vec_id"]
 
 
-def test_ann_high_dim_uses_udf_path(spark):
+def test_ann_high_dim_uses_udf_path(spark, monkeypatch):
     """dim 1536 (planes x dim and centroids x dim both past the unroll
     budget) runs end to end through the Arrow kernels: valid top-k shape,
     deterministic across two runs, and a planted near-duplicate pair is
     found by the LSH near-dup path."""
     import numpy as np
 
+    from openaip_yaixm_to_geojson_spark.operators import similarity
     from openaip_yaixm_to_geojson_spark.operators.similarity import (
         EXPR_UNROLL_MAX_TERMS,
         embedding_neardup_pairs,
@@ -167,23 +175,25 @@ def test_ann_high_dim_uses_udf_path(spark):
         [(i, [float(x) for x in vecs[i]]) for i in range(n)],
         "vec_id int, embedding array<float>",
     )
-    queries = queries_from_embeddings(emb, n=3)
-    lsh = lsh_ann_topk(emb, queries, k=3, n_planes=8, dim=dim).collect()
-    ivf = ivf_ann_topk(emb, queries, k=3, n_centroids=16, n_probes=8, dim=dim).collect()
+    monkeypatch.setattr(similarity, "ANN_QUERIES", 3)
+    monkeypatch.setattr(similarity, "IVF_PROBES", 8)
+    monkeypatch.setattr(similarity, "ANN_LSH_PLANES", 8)
+    queries = queries_from_embeddings(emb)
+    lsh = lsh_ann_topk(emb, queries, dim=dim).collect()
+    ivf = ivf_ann_topk(emb, queries, dim=dim).collect()
     for rows in (lsh, ivf):
         per_q = {}
         for r in rows:
             per_q.setdefault(r["query_id"], []).append(r["rank"])
         assert per_q and all(sorted(v) == list(range(1, len(v) + 1)) for v in per_q.values())
-    again = lsh_ann_topk(emb, queries, k=3, n_planes=8, dim=dim).collect()
+    again = lsh_ann_topk(emb, queries, dim=dim).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, lsh))
     # query 0's top hit must be the planted near-duplicate vector 1
     top = {r["rank"]: r["vec_id"] for r in lsh if r["query_id"] == 0}
     assert top[1] == 1
-    pairs = {
-        (r["key_a"], r["key_b"])
-        for r in embedding_neardup_pairs(emb, cosine_threshold=0.99, dim=dim).collect()
-    }
+    monkeypatch.setattr(similarity, "NEARDUP_COSINE", 0.99)
+    monkeypatch.setattr(similarity, "NEARDUP_LSH_PLANES", 8)
+    pairs = {(r["key_a"], r["key_b"]) for r in embedding_neardup_pairs(emb, dim=dim).collect()}
     assert (0, 1) in pairs
 
 
@@ -333,11 +343,12 @@ def test_simhash_neardup_matches_bruteforce(spark):
         assert got == expected
 
 
-def test_ngram_jaccard_bucket_straddle(spark):
+def test_ngram_jaccard_bucket_straddle(spark, monkeypatch):
     """r3 VERDICT: the single floor(n/8) block key missed similar pairs
     whose shingle counts straddle a bucket edge (15 vs 17 -> blocks 1 vs
     2). Dual offset keys floor(n/8) + floor((n+4)/8) close the +-4 window;
     pairs sharing BOTH keys must still come out exactly once."""
+    from openaip_yaixm_to_geojson_spark.operators import dedup
     from openaip_yaixm_to_geojson_spark.operators.dedup import ngram_jaccard_pairs
 
     words = [f"w{i}" for i in range(1, 20)]
@@ -351,8 +362,9 @@ def test_ngram_jaccard_bucket_straddle(spark):
         [(0, straddle_a), (1, straddle_b), (2, both_c), (3, both_d)],
         "doc_id bigint, text string",
     )
-    got = {(r["key_a"], r["key_b"]): r["jaccard"] for r in ngram_jaccard_pairs(df, threshold=0.5).collect()}
-    rows = ngram_jaccard_pairs(df, threshold=0.5).count()
+    monkeypatch.setattr(dedup, "NGRAM_JACCARD", 0.5)
+    got = {(r["key_a"], r["key_b"]): r["jaccard"] for r in ngram_jaccard_pairs(df).collect()}
+    rows = ngram_jaccard_pairs(df).count()
     assert set(got) == {(0, 1), (2, 3)} and rows == 2  # straddler found, dual-key pair deduped
     assert abs(got[(0, 1)] - 15 / 17) < 1e-12 and abs(got[(2, 3)] - 9 / 15) < 1e-12
 
@@ -562,9 +574,9 @@ def test_ivf_ann_recall(spark):
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    q = queries_from_embeddings(emb, n=5)
-    exact = {(r["query_id"], r["vec_id"]): r["dot"] for r in cosine_topk(emb, q, k=3).collect()}
-    approx = {(r["query_id"], r["vec_id"]): r["dot"] for r in ivf_ann_topk(emb, q, k=3, dim=64).collect()}
+    q = queries_from_embeddings(emb)
+    exact = {(r["query_id"], r["vec_id"]): r["dot"] for r in cosine_topk(emb, q).collect()}
+    approx = {(r["query_id"], r["vec_id"]): r["dot"] for r in ivf_ann_topk(emb, q, dim=64).collect()}
     hits = set(exact) & set(approx)
     assert len(hits) / len(exact) >= 0.4  # deterministic on fixed data
     for key in hits:
@@ -588,9 +600,10 @@ def test_rolling_fingerprint_properties(spark):
     assert all(0 <= v < 2_147_483_647 for v in fp.values())
 
 
-def test_tile_zoom_rollup_matches_direct(spark):
+def test_tile_zoom_rollup_matches_direct(spark, monkeypatch):
     """Parent-id arithmetic rollup == recomputing tiles at the coarser res
     directly from the fact table (floor-div composition law)."""
+    from openaip_yaixm_to_geojson_spark.operators import tiles
     from openaip_yaixm_to_geojson_spark.operators.tiles import (
         tile_doc_counts,
         tile_zoom_rollup,
@@ -598,14 +611,16 @@ def test_tile_zoom_rollup_matches_direct(spark):
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
 
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
-    fine = tile_doc_counts(pages, res=8).drop("n_langs")
+    monkeypatch.setattr(tiles, "DEFAULT_TILE_RES", 8)
+    fine = tile_doc_counts(pages).drop("n_langs")
     via_parents = {
         (r["tile_id"]): (r["doc_count"], r["total_chars"])
-        for r in tile_zoom_rollup(fine, levels=2).collect()
+        for r in tile_zoom_rollup(fine).collect()
     }
+    monkeypatch.setattr(tiles, "DEFAULT_TILE_RES", 6)
     direct = {
         (r["tile_id"]): (r["doc_count"], r["total_chars"])
-        for r in tile_doc_counts(pages, res=6).drop("n_langs").collect()
+        for r in tile_doc_counts(pages).drop("n_langs").collect()
     }
     assert via_parents == direct and len(direct) > 0
 
@@ -703,8 +718,8 @@ def test_host_cap_deterministic_across_parallelism(spark):
     rows = [(f"https://h{i % 4}.example/p{i}",) for i in range(40)]
     one = spark.createDataFrame(rows, "url string").repartition(1)
     many = spark.createDataFrame(list(reversed(rows)), "url string").repartition(16)
-    kept1 = {(r["host"], r["url"], r["host_rank"]) for r in host_cap(one, cap=3).collect()}
-    kept2 = {(r["host"], r["url"], r["host_rank"]) for r in host_cap(many, cap=3).collect()}
+    kept1 = {(r["host"], r["url"], r["host_rank"]) for r in host_cap(one).collect()}
+    kept2 = {(r["host"], r["url"], r["host_rank"]) for r in host_cap(many).collect()}
     assert kept1 == kept2 and len(kept1) == 12  # 4 hosts x cap 3
 
 
@@ -715,7 +730,7 @@ def test_ngram_repetition_counts(spark):
         [(0, "a b a b a"), (1, "all words here are distinct"), (2, "single")],
         "doc_id bigint, text string",
     )
-    out = {r["key"]: r for r in ngram_repetition(df, n=2).collect()}
+    out = {r["key"]: r for r in ngram_repetition(df).collect()}
     assert out[0]["n_grams"] == 4 and out[0]["n_distinct"] == 2
     assert out[0]["dup_fraction"] == 0.5 and out[0]["top_fraction"] == 0.5
     assert out[1]["dup_fraction"] == 0.0 and out[1]["top_count"] == 1
@@ -735,7 +750,7 @@ def test_contamination_planted_overlap(spark):
         "doc_id bigint, text string",
     )
     bench = spark.createDataFrame([(100, f"intro {shared} outro")], "doc_id bigint, text string")
-    got = {r["key"]: r["n_shared_grams"] for r in contamination(corpus, bench, n=8).collect()}
+    got = {r["key"]: r["n_shared_grams"] for r in contamination(corpus, bench).collect()}
     assert set(got) == {0, 2} and got[2] == 1 and got[0] >= 1
 
 
@@ -748,8 +763,8 @@ def test_bloom_contamination_contains_exact_answer(spark):
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     bench = docs.where(F.col("doc_id") % 101 == 0)
-    exact = {r["key"]: r["n_shared_grams"] for r in contamination(docs, bench, n=8).collect()}
-    bloom = {r["key"]: r for r in bloom_contamination(docs, bench, n=8).collect()}
+    exact = {r["key"]: r["n_shared_grams"] for r in contamination(docs, bench).collect()}
+    bloom = {r["key"]: r for r in bloom_contamination(docs, bench).collect()}
     assert exact, "fixture regression: the %101 bench set shares no grams"
     for key, n_shared in exact.items():
         assert key in bloom and bloom[key]["n_bloom_hits"] >= n_shared
@@ -760,7 +775,7 @@ def test_bloom_contamination_contains_exact_answer(spark):
         "doc_id bigint, text string",
     )
     planted_bench = spark.createDataFrame([(9, shared)], "doc_id bigint, text string")
-    got = {r["key"]: r for r in bloom_contamination(corpus, planted_bench, n=8).collect()}
+    got = {r["key"]: r for r in bloom_contamination(corpus, planted_bench).collect()}
     assert 0 in got and got[0]["n_bloom_hits"] >= 1
 
 
@@ -888,7 +903,7 @@ def test_sample_frames_indices_and_content(spark):
     )
 
     media = synth_media(spark, 30)
-    got = sample_frames(media, every_k=4).collect()
+    got = sample_frames(media).collect()
     videos = {r["media_id"]: bytes(r["payload"]) for r in media.where(F.col("kind") == "video").collect()}
     assert {r["media_id"] for r in got} == set(videos)
     by_media = {}
@@ -914,13 +929,13 @@ def test_ngram_repetition_local_matches_relational(spark, docs):
         "doc_id bigint, text string",
     )
     data = docs.unionByName(extra)
-    rel = {r["key"]: tuple(r)[1:] for r in ngram_repetition(data, n=2).collect()}
-    loc = {r["key"]: tuple(r)[1:] for r in ngram_repetition_local(data, n=2).collect()}
+    rel = {r["key"]: tuple(r)[1:] for r in ngram_repetition(data).collect()}
+    loc = {r["key"]: tuple(r)[1:] for r in ngram_repetition_local(data).collect()}
     assert rel == loc and 11 not in loc and 12 not in loc
 
     # plan over a single (non-union) input: zero shuffles, the sort+fold
     # appears exactly once (a fold-referencing filter would re-inline it)
-    plan = ngram_repetition_local(docs, n=2)._jdf.queryExecution().executedPlan().toString()
+    plan = ngram_repetition_local(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert plan.count("aggregate(") == 1
 
@@ -930,16 +945,17 @@ def test_pagerank_int_matches_numpy_recurrence(spark):
     evaluation of the same recurrence, and in-link-heavy nodes must
     outrank in-link-free ones (which hold the damping floor)."""
     from openaip_yaixm_to_geojson_spark.operators.graph import (
+        PAGERANK_ITERS,
         RANK_SCALE,
         pagerank_int,
         synth_link_graph,
     )
 
-    n, iters = 40, 3
+    n, iters = 40, PAGERANK_ITERS
     docs = spark.range(n).select(F.col("id").alias("doc_id"))
     edges_df = synth_link_graph(docs)
     edges = [(r["src"], r["dst"]) for r in edges_df.collect()]
-    got = {r["doc_id"]: r["rank_int"] for r in pagerank_int(docs, edges_df, iters=iters).collect()}
+    got = {r["doc_id"]: r["rank_int"] for r in pagerank_int(docs, edges_df).collect()}
 
     out_deg = {}
     for s, _d in edges:
@@ -1321,9 +1337,10 @@ def test_scd2_build_runs_and_current(spark):
     assert plan.count("Exchange") == 1, plan
 
 
-def test_kmeans_assign_exact(spark):
+def test_kmeans_assign_exact(spark, monkeypatch):
     """Hand-built 1-D-ish case: two seeds, known assignments, exact
     fixed-point sums; plus the member-conservation property."""
+    from openaip_yaixm_to_geojson_spark.operators import similarity
     from openaip_yaixm_to_geojson_spark.operators.similarity import (
         KMEANS_FP_SCALE,
         kmeans_assign,
@@ -1337,7 +1354,8 @@ def test_kmeans_assign_exact(spark):
         (4, [0.5, 0.0]),      # equidistant -> tie breaks to seed 0
     ]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    got = {(r["cluster_id"], r["dim_idx"]): r for r in kmeans_assign(df, k=2).collect()}
+    monkeypatch.setattr(similarity, "KMEANS_K", 2)
+    got = {(r["cluster_id"], r["dim_idx"]): r for r in kmeans_assign(df).collect()}
     s = KMEANS_FP_SCALE
     assert got[(0, 0)]["n_members"] == 3 and got[(1, 0)]["n_members"] == 2
     assert got[(0, 0)]["sum_fp"] == 0 + s // 4 + s // 2
@@ -1346,7 +1364,8 @@ def test_kmeans_assign_exact(spark):
     assert got[(0, 1)]["sum_fp"] == 0 and got[(1, 1)]["sum_fp"] == 0
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    out = kmeans_assign(emb, k=8).collect()
+    monkeypatch.undo()
+    out = kmeans_assign(emb).collect()
     n_total = emb.count()
     for d in {r["dim_idx"] for r in out}:
         assert sum(r["n_members"] for r in out if r["dim_idx"] == d) == n_total
@@ -1544,19 +1563,24 @@ def test_weighted_sample_inclusion_rule(spark):
     length (a capped doc behaves exactly like cap)."""
     import hashlib
 
-    from openaip_yaixm_to_geojson_spark.operators.text import SAMPLE_BUCKETS, weighted_sample
+    from openaip_yaixm_to_geojson_spark.operators.text import (
+        SAMPLE_BUCKETS,
+        WEIGHTED_LENGTH_CAP,
+        WEIGHTED_RATE,
+        weighted_sample,
+    )
 
     rows = [(i, "x" * ((i * 211) % 3000 + 1), "en") for i in range(200)]
     df = spark.createDataFrame(rows, "doc_id bigint, text string, lang string").withColumn(
         "n_chars", F.length("text")
     )
-    cap, rate = 2000, int(round(0.5 * SAMPLE_BUCKETS))
+    cap, rate = WEIGHTED_LENGTH_CAP, int(round(WEIGHTED_RATE * SAMPLE_BUCKETS))
     expected = set()
     for i, t, _ in rows:
         bucket = int(hashlib.md5(str(i).encode()).hexdigest()[:8], 16) % SAMPLE_BUCKETS
         if bucket * cap < rate * min(len(t), cap):
             expected.add(i)
-    got = {r["doc_id"] for r in weighted_sample(df, length_cap=cap).collect()}
+    got = {r["doc_id"] for r in weighted_sample(df).collect()}
     assert got == expected and 0 < len(got) < len(rows)
 
 
@@ -1833,18 +1857,21 @@ def test_quality_funnel_cumulative(spark):
     assert all(a >= b for a, b in zip(seq, seq[1:]))
 
 
-def test_ann_topk_filtered_respects_filter(spark):
+def test_ann_topk_filtered_respects_filter(spark, monkeypatch):
     """Every returned neighbor shares the query's label, and the result
     equals brute force within the filtered set (pre-filter, not a
     post-filtered global top-k)."""
     import numpy as np
 
+    from openaip_yaixm_to_geojson_spark.operators import similarity
     from openaip_yaixm_to_geojson_spark.operators.similarity import ann_topk_filtered
 
     rng_vals = [[((i * 31 + j * 7) % 13 - 6) / 6.0 for j in range(8)] for i in range(30)]
     rows = [(i, [float(v) for v in rng_vals[i]], i % 3) for i in range(30)]
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>, label int")
-    got = ann_topk_filtered(df, n_queries=3, k=2).collect()
+    monkeypatch.setattr(similarity, "ANN_QUERIES", 3)
+    monkeypatch.setattr(similarity, "ANN_K", 2)
+    got = ann_topk_filtered(df).collect()
     labels = {i: i % 3 for i in range(30)}
     vecs = {i: np.array(rng_vals[i], dtype=np.float32).astype(np.float64) for i in range(30)}
     for r in got:
@@ -2200,10 +2227,11 @@ def test_length_winsorize_tiny_group_and_clipping(spark):
     assert en["winsorized_chars"] == sum(10 * (i + 1) for i in range(19)) + 190
 
 
-def test_bm25_topk_hand_case(spark):
+def test_bm25_topk_hand_case(spark, monkeypatch):
     """Two query terms, hand-computed scores: doc 1 has tf(spark)=2 of 4
     tokens, doc 2 has tf(join)=1 of 2; df(spark)=1, df(join)=1, N=3.
     Scores follow the documented log-free formula with k1=1.2, b=0.75."""
+    from openaip_yaixm_to_geojson_spark.operators import terms
     from openaip_yaixm_to_geojson_spark.operators.terms import bm25_topk
 
     docs = spark.createDataFrame(
@@ -2214,7 +2242,9 @@ def test_bm25_topk_hand_case(spark):
         ],
         "doc_id bigint, text string",
     )
-    got = {r["doc_id"]: (r["score"], r["rnk"]) for r in bm25_topk(docs, ("spark", "join"), k=3).collect()}
+    monkeypatch.setattr(terms, "BM25_QUERY", ("spark", "join"))
+    monkeypatch.setattr(terms, "BM25_K", 3)
+    got = {r["doc_id"]: (r["score"], r["rnk"]) for r in bm25_topk(docs).collect()}
 
     def score(tf, df, dl, n_docs, avgdl):
         w = (n_docs - df + 0.5) / (df + 0.5)
@@ -2288,23 +2318,26 @@ def test_gif_lzw_codec_roundtrip_and_subset_guard():
         decode_gif(b"JFIF not a gif")
 
 
-def test_range_partition_plan_exact_bins_and_guard(spark):
+def test_range_partition_plan_exact_bins_and_guard(spark, monkeypatch):
     """Hand case: 8 distinct values x 2 rows, 4 bins -> 2 values per bin
     with exact edges; duplicates share a bin; n_bins=1 raises (the
     sequence(1,0) counts-down trap is guarded)."""
     import pytest
 
+    from openaip_yaixm_to_geojson_spark.operators import relational
     from openaip_yaixm_to_geojson_spark.operators.relational import range_partition_plan
 
     rows = [(i, "en", (i % 8) * 10) for i in range(16)]
     docs = spark.createDataFrame(rows, "doc_id bigint, lang string, n_chars bigint")
-    got = {r["bin_id"]: r for r in range_partition_plan(docs, n_bins=4).collect()}
+    monkeypatch.setattr(relational, "RANGE_PARTITION_BINS", 4)
+    got = {r["bin_id"]: r for r in range_partition_plan(docs).collect()}
     assert len(got) == 4
     assert all(r["n_docs"] == 4 for r in got.values())
     assert got[0]["lo_value"] == 0 and got[0]["hi_value"] == 10
     assert got[3]["lo_value"] == 60 and got[3]["hi_value"] == 70
+    monkeypatch.setattr(relational, "RANGE_PARTITION_BINS", 1)
     with pytest.raises(ValueError):
-        range_partition_plan(docs, n_bins=1)
+        range_partition_plan(docs)
 
 
 def test_robots_filter_longest_match_semantics(spark):
@@ -2524,13 +2557,15 @@ def test_dedup_keep_best_picks_highest_quality(spark):
     assert out[20] == (20, 1)
 
 
-def test_kmeans_iterate_empty_cluster_keeps_seed(spark):
+def test_kmeans_iterate_empty_cluster_keeps_seed(spark, monkeypatch):
     """Duplicate seeds leave cluster 1 empty in round 1 (tie -> seed 0);
     the round-2 centroid for the empty cluster must fall back to its seed,
     pulling the exact-duplicate vectors back to it (moved=true), while the
     distant vector stays with the round-1 mean."""
+    from openaip_yaixm_to_geojson_spark.operators import similarity
     from openaip_yaixm_to_geojson_spark.operators.similarity import kmeans_iterate
 
+    monkeypatch.setattr(similarity, "KMEANS_K", 2)
     rows = [
         (0, [1.0, 2.0]),
         (1, [1.0, 2.0]),     # duplicate seed -> cluster 1 empty in round 1
@@ -2538,7 +2573,7 @@ def test_kmeans_iterate_empty_cluster_keeps_seed(spark):
         (3, [1.3, 2.1]),
     ]
     emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
-    got = {r["vec_id"]: (r["cluster_r1"], r["cluster_r2"], r["moved"]) for r in kmeans_iterate(emb, k=2).collect()}
+    got = {r["vec_id"]: (r["cluster_r1"], r["cluster_r2"], r["moved"]) for r in kmeans_iterate(emb).collect()}
     # round 1: every vector ties/loses to seed 0
     assert all(v[0] == 0 for v in got.values())
     # round 2: c0 = mean of all four, c1 = seed [1,2]; the two exact-seed

@@ -55,7 +55,7 @@ def test_contamination_scan_prunes_columns(spark):
 def test_host_cap_pushes_rank_limit_below_exchange(spark, pages):
     from openaip_yaixm_to_geojson_spark.operators.web import host_cap
 
-    plan = plan_of(host_cap(pages, cap=3))
+    plan = plan_of(host_cap(pages))
     # WindowGroupLimit appears twice: partial (map side, before the
     # exchange) and final — at most cap rows per host shuffle per map task
     assert plan.count("WindowGroupLimit") == 2
@@ -65,7 +65,7 @@ def test_host_cap_pushes_rank_limit_below_exchange(spark, pages):
 def test_tile_xyz_export_shuffles_only_tiles(spark, pages):
     from openaip_yaixm_to_geojson_spark.operators.tiles import tile_xyz_export
 
-    plan = plan_of(tile_xyz_export(pages, z=11))
+    plan = plan_of(tile_xyz_export(pages))
     # two-phase distinct aggregate = exactly two exchanges, both keyed on
     # tile coordinates (pre-aggregated rows), none on the fact table
     assert plan.count("Exchange hashpartitioning") == 2
@@ -387,7 +387,7 @@ def test_minhash_verify_filter_above_checkpoint(spark):
     assert "jaccard" in p  # filter on the materialized score column
 
 
-def test_bm25_topk_tf_materialized_single_scan(spark):
+def test_bm25_topk_tf_materialized_single_scan(spark, monkeypatch):
     """bm25_topk: the filtered (doc, query-term) tf frame feeds TWO
     consumers (df derivation + score join) and is materialized once —
     r7: via columnar persist (so a session runs the corpus tokenize pass
@@ -395,10 +395,12 @@ def test_bm25_topk_tf_materialized_single_scan(spark):
     relations' printed build plans (containment precedent); the pin is
     BOTH cache scans (tf + stats) present, with df and stats entering as
     broadcasts."""
+    from openaip_yaixm_to_geojson_spark.operators import terms
     from openaip_yaixm_to_geojson_spark.operators.terms import bm25_topk
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    out = bm25_topk(docs, k=5)
+    monkeypatch.setattr(terms, "BM25_K", 5)
+    out = bm25_topk(docs)
     out.count()
     p = plan_of(out)
     assert p.count("InMemoryTableScan") >= 2

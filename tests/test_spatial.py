@@ -228,7 +228,7 @@ def test_polygon_cover_distributed_scales_without_driver(spark):
             ).alias("ring"),
         )
     )
-    cover = polygon_cover_distributed(polys, res=13)
+    cover = polygon_cover_distributed(polys)
     stats = cover.agg(
         F.count(F.lit(1)).alias("rows"), F.count_distinct("poly_id").alias("polys")
     ).first()
@@ -329,10 +329,11 @@ def test_salt_plan_oracle_reads_engine_constants(monkeypatch):
     assert oracle.cell_id_sql("lon", "lat", 11) in sql
 
 
-def test_polygon_cover_table_matches_driver(spark, polygons):
+def test_polygon_cover_table_matches_driver(spark, polygons, monkeypatch):
     """The distributed cover (polyfill UDF over a polygons TABLE) produces
     the identical (cell, poly_id, edges) rows to the driver-loop cover, at
     the tile and at the join resolution."""
+    from openaip_yaixm_to_geojson_spark.operators import spatial
     from openaip_yaixm_to_geojson_spark.operators.spatial import (
         DEFAULT_JOIN_RES,
         polygon_cover_df,
@@ -346,8 +347,9 @@ def test_polygon_cover_table_matches_driver(spark, polygons):
 
     polygons_df = polygons_to_df(spark, polygons)
     for res in (DEFAULT_TILE_RES, DEFAULT_JOIN_RES):
-        driver = rows(polygon_cover_df(spark, polygons, res))
-        assert driver == rows(polygon_cover_distributed(polygons_df, res)) and driver, res
+        monkeypatch.setattr(spatial, "DEFAULT_JOIN_RES", res)
+        driver = rows(polygon_cover_df(spark, polygons))
+        assert driver == rows(polygon_cover_distributed(polygons_df)) and driver, res
         assert all(edges for _, _, edges in driver)
 
 
@@ -410,7 +412,7 @@ def test_spatial_join_exact_on_boundary_points(spark, polygons):
     assert salted == expected
 
 
-def test_mercator_lattice_margin_and_quadkey(spark):
+def test_mercator_lattice_margin_and_quadkey(spark, monkeypatch):
     """The proof that tile_xyz_export can be hash-gated: enumerate EVERY
     latitude the md5 geotag lattice can produce (5 hex-char ascii weighted
     sums mod span per cluster) and assert the pre-floor mercator value
@@ -418,8 +420,10 @@ def test_mercator_lattice_margin_and_quadkey(spark):
     Math and libm differ by ulps, so a >1e-7-tile margin means floor()
     agrees across engines. Also pins quadkey digits against the classic
     bit-interleave definition."""
+    from openaip_yaixm_to_geojson_spark.operators import tiles
     from openaip_yaixm_to_geojson_spark.operators.tiles import (
         MERCATOR_MAX_GATED_Z,
+        XYZ_ZOOM,
         quadkey_sql,
         tile_xyz_export,
     )
@@ -429,7 +433,7 @@ def test_mercator_lattice_margin_and_quadkey(spark):
     sums = np.zeros(1, dtype=np.int64)
     for w in (10**8, 10**6, 10**4, 100, 1):
         sums = (sums[:, None] + ascii_vals[None, :] * w).ravel()
-    for z in (11, MERCATOR_MAX_GATED_Z):
+    for z in (XYZ_ZOOM, MERCATOR_MAX_GATED_Z):
         n = 1 << z
         for base_lat, lat_span, _base_lon, _lon_span, _w in _CLUSTERS:
             lats = np.unique(float(base_lat) + (sums % lat_span).astype(float) / 1e5)
@@ -454,8 +458,9 @@ def test_mercator_lattice_margin_and_quadkey(spark):
         assert got[(x, y)] == expect
 
     # z above the verified budget must refuse rather than silently flap
+    monkeypatch.setattr(tiles, "XYZ_ZOOM", MERCATOR_MAX_GATED_Z + 1)
     with pytest.raises(ValueError):
-        tile_xyz_export(spark.createDataFrame([], "lon double, lat double, text string, lang string"), z=13)
+        tile_xyz_export(spark.createDataFrame([], "lon double, lat double, text string, lang string"))
 
 
 def test_tile_vector_export_bounds_match_cellgrid(spark):
@@ -685,7 +690,7 @@ def test_geohash_floor_form_matches_canonical_and_spark(spark):
         assert geohash_py(lat, lon, 5) == canonical(lat, lon, 5)
 
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
-    got = {r["geohash"]: r["n_pages"] for r in geohash_counts(pages, precision=5).collect()}
+    got = {r["geohash"]: r["n_pages"] for r in geohash_counts(pages).collect()}
     import collections
 
     expect = collections.Counter(
@@ -713,17 +718,20 @@ def test_ring_decimate_degenerate_rings(spark):
     assert sorted(by_poly[3]) == [1, 2]
 
 
-def test_knn_points_matches_bruteforce(spark):
+def test_knn_points_matches_bruteforce(spark, monkeypatch):
     """Point-point kNN: the cell-annulus expansion (both finalize rounds
     and the fallback) must reproduce the exact brute-force top-k with the
     (d2, neighbor) tie-break, and ranks must be 1..k dense per query."""
+    from openaip_yaixm_to_geojson_spark.operators import knn as knn_mod
     from openaip_yaixm_to_geojson_spark.operators.knn import knn_points
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
 
     pages = pages_from_documents(spark, SF_DIR)
     k = 5
+    monkeypatch.setattr(knn_mod, "KNN_POINTS_K", k)
+    monkeypatch.setattr(knn_mod, "KNN_POINTS_QUERY_MOD", 3)
     got = {}
-    for r in knn_points(pages, k=k, query_mod=3).collect():
+    for r in knn_points(pages).collect():
         got.setdefault(r["url"], []).append((r["rnk"], r["neighbor"], r["dist_sq"]))
     assert got, "no sampled queries"
 
@@ -750,9 +758,11 @@ def test_knn_points_single_window_forces_fallback(spark, monkeypatch):
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
 
     pages = pages_from_documents(spark, SF_DIR)
-    wide = knn_points(pages, k=3, query_mod=5).collect()
+    monkeypatch.setattr(knn_mod, "KNN_POINTS_K", 3)
+    monkeypatch.setattr(knn_mod, "KNN_POINTS_QUERY_MOD", 5)
+    wide = knn_points(pages).collect()
     monkeypatch.setattr(knn_mod, "WINDOWS", ((0, 0),))
-    narrow = knn_points(pages, k=3, query_mod=5).collect()
+    narrow = knn_points(pages).collect()
     assert sorted(map(tuple, wide)) == sorted(map(tuple, narrow))
 
 
@@ -761,9 +771,9 @@ def test_geo_cluster_cells_components(spark):
     a distant dense cell stays its own cluster, sparse cells are absent,
     and cluster_id is the minimum member cell id."""
     from openaip_yaixm_to_geojson_spark.functions.cellgrid import encode
-    from openaip_yaixm_to_geojson_spark.operators.spatial import geo_cluster_cells
+    from openaip_yaixm_to_geojson_spark.operators.spatial import GEO_CLUSTER_RES, geo_cluster_cells
 
-    res = 7
+    res = GEO_CLUSTER_RES
     size = 360.0 / (1 << res)
 
     def pt(i, lon, lat):
@@ -786,7 +796,7 @@ def test_geo_cluster_cells_components(spark):
     pts.append(pt(20, lon, lat))
     pages = spark.createDataFrame(pts, "url string, lon double, lat double")
 
-    got = {r["cell"]: (r["cluster_id"], r["n_points"]) for r in geo_cluster_cells(pages, res=res).collect()}
+    got = {r["cell"]: (r["cluster_id"], r["n_points"]) for r in geo_cluster_cells(pages).collect()}
     ca = encode(*center(10, 10), res)
     cb = encode(*center(11, 11), res)
     cc = encode(*center(40, 20), res)
@@ -866,11 +876,7 @@ def test_tile_unmatched_counts_complement(spark):
     matched-distinct-urls + unmatched == total pages in that tile."""
     from openaip_yaixm_to_geojson_spark.functions.convert_local import fixture_polygons
     from openaip_yaixm_to_geojson_spark.operators.spatial import spatial_join
-    from openaip_yaixm_to_geojson_spark.operators.tiles import (
-        DEFAULT_TILE_RES,
-        tile_unmatched_counts,
-        with_tile,
-    )
+    from openaip_yaixm_to_geojson_spark.operators.tiles import tile_unmatched_counts, with_tile
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
 
     from pyspark.sql import functions as F
@@ -878,10 +884,10 @@ def test_tile_unmatched_counts_complement(spark):
     pages = pages_from_documents(spark, "/root/testdata/sf0.001")
     join_out = spatial_join(pages, fixture_polygons())
     unmatched = {r["tile_id"]: r["n_unmatched"] for r in tile_unmatched_counts(pages, join_out).collect()}
-    total = {r["tile_id"]: r["n"] for r in with_tile(pages, DEFAULT_TILE_RES).groupBy("tile_id").agg(F.count(F.lit(1)).alias("n")).collect()}
+    total = {r["tile_id"]: r["n"] for r in with_tile(pages).groupBy("tile_id").agg(F.count(F.lit(1)).alias("n")).collect()}
     matched_urls = {r["url"] for r in join_out.select("url").distinct().collect()}
     matched_tiles = {}
-    for r in with_tile(pages, DEFAULT_TILE_RES).select("url", "tile_id").collect():
+    for r in with_tile(pages).select("url", "tile_id").collect():
         if r["url"] in matched_urls:
             matched_tiles[r["tile_id"]] = matched_tiles.get(r["tile_id"], 0) + 1
     for t, n in total.items():
@@ -939,7 +945,7 @@ def test_knn_k_crosses_ring_boundary(spark):
 
     for polygons in (polys, polygons_to_df(spark, polys)):
         got = sorted(
-            (r["rnk"], r["poly_id"], r["dist_sq"]) for r in knn_k(pages, polygons, k=3).collect()
+            (r["rnk"], r["poly_id"], r["dist_sq"]) for r in knn_k(pages, polygons).collect()
         )
         assert got == want
         # the three slots are distinct polygons and B's slot is its MIN vertex
@@ -947,7 +953,7 @@ def test_knn_k_crosses_ring_boundary(spark):
         assert got[1][2] == (2.30 - 0.05) ** 2
         egot = sorted(
             (r["rnk"], r["poly_id"], r["dist_sq"])
-            for r in knn_edge_k(pages, polygons, k=3).collect()
+            for r in knn_edge_k(pages, polygons).collect()
         )
         assert egot == ewant
 
@@ -992,7 +998,7 @@ def test_morton_key_quadrant_recursion_and_locality():
     assert morton_np(np.array([5]), np.array([3]), 3)[0] == 27
 
 
-def test_knn_k_arrow_disabled_default_dtypes(spark, polygons):
+def test_knn_k_arrow_disabled_default_dtypes(spark, polygons, monkeypatch):
     """Round-5 driver red regression: with spark.sql.execution.arrow.pyspark
     .enabled=false (Spark's DEFAULT, hence the driver's vanilla harness) the
     non-arrow createDataFrame fallback used to widen the pandas int32
@@ -1002,6 +1008,7 @@ def test_knn_k_arrow_disabled_default_dtypes(spark, polygons):
     index createDataFrame sites fix it; this pins both k>1 variants to a
     full .collect() with arrow OFF, and value-checks knn_k's rnk=1 row
     against the k=1 path."""
+    from openaip_yaixm_to_geojson_spark.operators import knn as knn_mod
     from openaip_yaixm_to_geojson_spark.operators.knn import (
         knn_bruteforce,
         knn_edge_k,
@@ -1014,7 +1021,7 @@ def test_knn_k_arrow_disabled_default_dtypes(spark, polygons):
     spark.conf.set(key, "false")
     try:
         pages = pages_from_documents(spark, SF_DIR)
-        rows = knn_k(pages, polygons, k=3).collect()
+        rows = knn_k(pages, polygons).collect()
         assert rows and {r["rnk"] for r in rows} == {1, 2, 3}
         top1 = {r["url"]: (r["poly_id"], r["dist_sq"]) for r in rows if r["rnk"] == 1}
         brute = {
@@ -1022,7 +1029,8 @@ def test_knn_k_arrow_disabled_default_dtypes(spark, polygons):
             for r in knn_bruteforce(pages, polygons).collect()
         }
         assert top1 == brute
-        edge_rows = knn_edge_k(pages, polygons, k=2).collect()
+        monkeypatch.setattr(knn_mod, "KNN_K", 2)
+        edge_rows = knn_edge_k(pages, polygons).collect()
         assert edge_rows and {r["rnk"] for r in edge_rows} == {1, 2}
     finally:
         spark.conf.set(key, prev)

@@ -52,7 +52,7 @@ def test_inverted_index_df_cap_routes_hot_terms_around_collect(tiny):
 def test_tfidf_topk_ranking(tiny):
     # doc 0: tf(a)=2 df(a)=2 -> 2*(3/2)=3.0 ; tf(b)=1 df=2 -> 1.5 ;
     # tf(c)=1 df(c)=2 -> 1.5 (tie with b -> b first by term order)
-    rows = tfidf_topk(tiny, k=3).where(F.col("key") == 0).orderBy("rank").collect()
+    rows = tfidf_topk(tiny).where(F.col("key") == 0).orderBy("rank").collect()
     assert [(r["rank"], r["term"], r["score"]) for r in rows] == [
         (1, "a", 3.0),
         (2, "b", 1.5),
@@ -62,7 +62,7 @@ def test_tfidf_topk_ranking(tiny):
 
 def test_tfidf_plan_broadcasts_and_pushes_rank_limit(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = plan_of(tfidf_topk(docs, k=3))
+    plan = plan_of(tfidf_topk(docs))
     assert "BroadcastHashJoin" in plan  # df join
     assert "BroadcastNestedLoopJoin" in plan  # one-row corpus count
     assert "WindowGroupLimit" in plan  # top-k pushed below the shuffle read
@@ -70,7 +70,7 @@ def test_tfidf_plan_broadcasts_and_pushes_rank_limit(spark):
 
 def test_kmv_distinct_estimator(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    rows = kmv_distinct(docs, k=16).collect()
+    rows = kmv_distinct(docs).collect()
     assert rows, "no groups"
     for r in rows:
         if r["n_exact"] < 16:
@@ -82,7 +82,7 @@ def test_kmv_distinct_estimator(spark):
 
 
 def test_kmv_small_group_yields_null_sketch(tiny):
-    rows = {r["grp"]: r for r in kmv_distinct(tiny, k=16).collect()}
+    rows = {r["grp"]: r for r in kmv_distinct(tiny).collect()}
     assert rows["s0"]["n_exact"] == 3  # a, b, c
     assert rows["s0"]["kth_min"] is None and rows["s0"]["kmv_estimate"] is None
 
@@ -90,12 +90,12 @@ def test_kmv_small_group_yields_null_sketch(tiny):
 def test_bigram_pmi_exact_counts(tiny):
     # corpus tokens: a b a c | a b | c c c d -> N=10
     # bigram "c c": c_ab=2, c_a=c_b=c(c)=4 -> ratio = 2*10/16 = 1.25
-    rows = {r["gram"]: r for r in bigram_pmi(tiny, top=20).collect()}
+    rows = {r["gram"]: r for r in bigram_pmi(tiny).collect()}
     r = rows["c c"]
     assert (r["c_ab"], r["c_a"], r["c_b"], r["n_tokens"]) == (2, 4, 4, 10)
     assert r["pmi_ratio"] == 1.25
     # "c d" occurs once: 1*10/(4*1) = 2.5 — ranks above "c c"
-    ordered = [r["gram"] for r in bigram_pmi(tiny, top=20).collect()]
+    ordered = [r["gram"] for r in bigram_pmi(tiny).collect()]
     assert ordered.index("c d") < ordered.index("c c")
 
 
@@ -117,7 +117,7 @@ def test_stratified_sample_exact_quotas(spark):
     from openaip_yaixm_to_geojson_spark.operators.text import stratified_sample
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    out = stratified_sample(docs, quota=40, group_col="lang")
+    out = stratified_sample(docs)
     sizes = {r["grp"]: r["n"] for r in out.groupBy("grp").agg(F.count(F.lit(1)).alias("n")).collect()}
     truth = {r["lang"]: r["n"] for r in docs.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert sizes == {g: min(40, n) for g, n in truth.items()}
@@ -139,7 +139,7 @@ def test_stratified_sample_matches_full_rank_definition(spark):
         .where(F.col("rn") <= 40)
         .select("key", "grp")
     )
-    got = stratified_sample(docs, quota=40, group_col="lang")
+    got = stratified_sample(docs)
     assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
 
 
@@ -151,7 +151,7 @@ def test_stratified_sample_band_miss_raises(spark):
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
     with pytest.raises(RuntimeError, match="band miss"):
-        stratified_sample(docs, quota=40, group_col="lang", delta=0.0)
+        stratified_sample(docs, delta=0.0)
 
 
 def test_corpus_cube_combinations(tiny):
@@ -189,19 +189,19 @@ def test_chunk_documents_overlap_and_clamp(spark):
 
 
 def test_chunk_documents_plan_no_shuffle(spark):
-    from openaip_yaixm_to_geojson_spark.operators.text import chunk_documents
+    from openaip_yaixm_to_geojson_spark.operators.text import QUERY_CHUNK_SIZE, QUERY_CHUNK_STRIDE, chunk_documents
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plan = plan_of(chunk_documents(docs))
+    plan = plan_of(chunk_documents(docs, QUERY_CHUNK_SIZE, QUERY_CHUNK_STRIDE))
     assert "Exchange" not in plan
     assert "ArrowEvalPython" not in plan  # pure codegen
 
 
 def test_pack_documents_offsets_contiguous(spark):
-    from openaip_yaixm_to_geojson_spark.operators.text import pack_documents
+    from openaip_yaixm_to_geojson_spark.operators.text import PACK_CAPACITY, pack_documents
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    out = pack_documents(docs, capacity=512, n_streams=8)
+    out = pack_documents(docs)
     rows = out.collect()
     # per stream: offsets are the exclusive prefix sums of n_tokens in
     # deterministic order — sorted offsets must tile [0, total) exactly
@@ -215,9 +215,9 @@ def test_pack_documents_offsets_contiguous(spark):
             assert off == expect
             expect = off + n
     # window assignment is offset // capacity
-    assert all(r["window_id"] == r["tok_offset"] // 512 for r in rows)
+    assert all(r["window_id"] == r["tok_offset"] // PACK_CAPACITY for r in rows)
     # parallelism-independence: identical assignment after a repartition
-    again = pack_documents(docs.repartition(13), capacity=512, n_streams=8)
+    again = pack_documents(docs.repartition(13))
     assert out.exceptAll(again).count() == 0 and again.exceptAll(out).count() == 0
 
 
@@ -263,7 +263,7 @@ def test_kmv_merge_equals_full_rank(spark):
     from pyspark.sql import Window
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    merged = {r["grp"]: r["kth_min"] for r in kmv_distinct(docs, k=16, n_salts=2).collect()}
+    merged = {r["grp"]: r["kth_min"] for r in kmv_distinct(docs, n_salts=2).collect()}
     h = F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("bigint")
     pairs = (
         docs.select(F.col("source").alias("grp"), F.explode(F.split(F.trim("text"), r"\s+")).alias("term"))
@@ -391,17 +391,19 @@ def test_events_funnel_strict_ordering(spark):
     assert out[3]["stage"] == 2 and out[3]["t3"] is None
 
 
-def test_stratified_sample_null_stratum_kept(spark):
+def test_stratified_sample_null_stratum_kept(spark, monkeypatch):
     """A NULL group column is a legitimate stratum: groupBy, the window
     and the oracle's PARTITION BY all treat NULL as one group, so the
     operator's internal joins must be null-safe — a plain equi-join
     silently drops the whole stratum."""
+    from openaip_yaixm_to_geojson_spark.operators import text
     from openaip_yaixm_to_geojson_spark.operators.text import stratified_sample
 
+    monkeypatch.setattr(text, "STRATIFIED_QUOTA", 10)
     rows = [(i, "t", None if i % 2 == 0 else "en") for i in range(60)]
     docs = spark.createDataFrame(rows, "doc_id bigint, text string, lang string")
     sizes = {}
-    for r in stratified_sample(docs, quota=10, group_col="lang").collect():
+    for r in stratified_sample(docs).collect():
         sizes[r["grp"]] = sizes.get(r["grp"], 0) + 1
     assert sizes == {None: 10, "en": 10}
 
@@ -413,7 +415,7 @@ def test_chars_histogram_exact_buckets(spark):
         [(i, n) for i, n in enumerate([0, 31, 32, 63, 64, 100])],
         "doc_id bigint, n_chars bigint",
     )
-    rows = {r["bucket"]: r for r in chars_histogram(docs, width=32).collect()}
+    rows = {r["bucket"]: r for r in chars_histogram(docs).collect()}
     assert rows[0]["n_docs"] == 2 and rows[0]["bucket_lo"] == 0
     assert rows[0]["min_chars"] == 0 and rows[0]["max_chars"] == 31
     assert rows[1]["n_docs"] == 2 and rows[1]["bucket_lo"] == 32
@@ -473,11 +475,11 @@ def test_sessions_native_equals_lag_twin_on_real_events(spark):
 def test_lang_percentile_rank_selection(spark):
     """p90 of 1..10 (lower/disc): rank ceil(0.9*10)=9 -> value 9; and a
     3-element group picks ceil(2.7)=3 -> the max."""
-    from openaip_yaixm_to_geojson_spark.operators.text import lang_percentile_chars
+    from openaip_yaixm_to_geojson_spark.operators.text import P90_DEN, P90_NUM, lang_percentile_chars
 
     rows = [(i, "a", i) for i in range(1, 11)] + [(100 + i, "b", i * 10) for i in (1, 2, 3)]
     docs = spark.createDataFrame(rows, "doc_id bigint, lang string, n_chars bigint")
-    got = {r["lang"]: (r["p_chars"], r["n_docs"]) for r in lang_percentile_chars(docs).collect()}
+    got = {r["lang"]: (r["p_chars"], r["n_docs"]) for r in lang_percentile_chars(docs, P90_NUM, P90_DEN).collect()}
     assert got == {"a": (9, 10), "b": (30, 3)}
 
 
@@ -582,14 +584,15 @@ def test_quantized_ann_recall_vs_exact(spark):
     with int8 precision the top-3 should overlap heavily (sanity recall
     bound, not exactness: the exactness is the gate's job)."""
     from openaip_yaixm_to_geojson_spark.operators.similarity import (
+        ANN_K,
         ann_topk_quantized,
         cosine_topk,
         queries_from_embeddings,
     )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    exact = cosine_topk(emb, queries_from_embeddings(emb, n=5), k=3)
-    quant = ann_topk_quantized(emb, k=3)
+    exact = cosine_topk(emb, queries_from_embeddings(emb))
+    quant = ann_topk_quantized(emb, ANN_K)
     e = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
     q = {(r["query_id"], r["vec_id"]) for r in quant.collect()}
     assert len(e & q) / len(e) >= 0.6
@@ -641,21 +644,23 @@ def test_repeated_span_operators_hand_case(spark):
     assert ds == {0: (2, 1, 1), 1: (2, 1, 1), 3: (4, 1, 2)}
 
 
-def test_countmin_one_sided_error(spark):
+def test_countmin_one_sided_error(spark, monkeypatch):
     """CM property: estimate >= exact for every probe (counters only ever
     absorb collisions); on a tiny vocabulary with no cross-token cell
     collisions the estimates are exact."""
+    from openaip_yaixm_to_geojson_spark.operators import terms
     from openaip_yaixm_to_geojson_spark.operators.terms import countmin_heavy_hitters
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    rows = countmin_heavy_hitters(docs, k=20).collect()
+    rows = countmin_heavy_hitters(docs).collect()
     assert len(rows) == 20
     assert all(r["cm_estimate"] >= r["exact_count"] for r in rows)
 
     tiny = spark.createDataFrame(
         [(1, "alpha beta beta gamma"), (2, "alpha alpha delta")], "doc_id bigint, text string"
     )
-    got = {r["term"]: r for r in countmin_heavy_hitters(tiny, k=4).collect()}
+    monkeypatch.setattr(terms, "HEAVY_HITTERS_K", 4)
+    got = {r["term"]: r for r in countmin_heavy_hitters(tiny).collect()}
     assert got["alpha"]["exact_count"] == 3 and got["alpha"]["cm_estimate"] == 3
     assert got["beta"]["exact_count"] == 2 and got["beta"]["cm_estimate"] == 2
 

@@ -219,6 +219,43 @@ def _passed_arguments(tree: ast.Module, params: dict):
     yield from visit(tree, {})
 
 
+def _module_constants(trees) -> dict[str, str]:
+    """name -> repr(value) for every module-level constant bound to a
+    literal (`K = 3`, `A, B = 1, 2`) whose name has one value across the
+    scanned modules."""
+    values = {}
+    for tree in trees:
+        for node in tree.body:
+            if not isinstance(node, ast.Assign) or len(node.targets) != 1:
+                continue
+            target, value = node.targets[0], node.value
+            pairs = [(target, value)]
+            if isinstance(target, ast.Tuple) and isinstance(value, ast.Tuple):
+                pairs = list(zip(target.elts, value.elts))
+            for name, literal in pairs:
+                if isinstance(name, ast.Name):
+                    values.setdefault(name.id, set()).add(_literal(literal))
+    return {name: v.pop() for name, v in values.items() if len(v) == 1 and None not in v}
+
+
+def _literal(node) -> str | None:
+    try:
+        return repr(ast.literal_eval(node))
+    except (ValueError, TypeError, SyntaxError):
+        return None
+
+
+def _value(node, constants: dict[str, str]) -> str:
+    """What an argument or default evaluates to where that is known
+    statically (a literal, or a constant by bare or module-qualified
+    name), else its source text."""
+    literal = _literal(node)
+    if literal is not None:
+        return literal
+    name = getattr(node, "id", None) or getattr(node, "attr", None)
+    return constants.get(name, ast.unparse(node))
+
+
 # Defaulted parameters that no non-test call sets, grouped by why each
 # stays: reason -> {module: {function: (parameters, ...)}}.
 _PARAMETER_ALLOWLIST = {
@@ -249,16 +286,19 @@ _PARAMETER_ALLOWLIST = {
             "image_patches": ("patch",),
         },
         "operators/relational.py": {"pareto_frontier": ("n_buckets",), "returned_item_revenue": ("k",)},
-        "operators/similarity.py": {"ann_topk_filtered": ("n_queries", "k"), "kmeans_iterate": ("k",)},
         "operators/terms.py": {
             "duplicated_span_stats": ("width",),
             "kmv_distinct": ("n_salts",),
             "repeated_grams": ("width",),
             "vocab_coverage": ("vocab_size",),
         },
-        "operators/text.py": {"stratified_sample": ("delta",), "weighted_sample": ("length_cap",)},
+        "operators/text.py": {"stratified_sample": ("delta",)},
         "operators/web.py": {"co_citation": ("max_hosts_per_page",), "robots_filter": ("rules",)},
         "plans/pipeline.py": {"run_pipeline": ("stop_after",)},
+    },
+    "the benchmark's page generator passes its own url column, and the "
+    "benchmark harness changes only with the benchmark": {
+        "sources/pages.py": {"lat_sql": ("url_expr",), "lon_sql": ("url_expr",)},
     },
 }
 
@@ -266,9 +306,12 @@ _PARAMETER_ALLOWLIST = {
 def test_parameters_are_set_by_a_caller():
     """With one value in use, a parameter is a constant. A defaulted
     parameter of a public package function is kept only where some
-    non-test call passes it a value, or the allowlist says why. A call
-    that only forwards an enclosing parameter which no caller sets, and
-    which has the same default, does not count; that rule repeats until
+    non-test call passes it another value, or the allowlist says why. A
+    call that passes the parameter's own default value does not count,
+    however it is spelt: `k=3` for `k: int = 3`, `res=DEFAULT_TILE_RES` or
+    `res=8` for `res: int = DEFAULT_TILE_RES` while that constant is 8.
+    Nor does a call that only forwards an enclosing parameter which no
+    caller sets, and which has the same default; that rule repeats until
     nothing changes. An allowlisted parameter that gains a caller must
     leave the list, so the list only shrinks."""
     paths = sorted((REPO / PACKAGE).rglob("*.py")) + SCRIPTS
@@ -281,14 +324,16 @@ def test_parameters_are_set_by_a_caller():
     }
     passes = [p for tree in trees.values() for p in _passed_arguments(tree, params)]
     assert params and passes
+    constants = _module_constants(trees.values())
+    default = {key: _value(ast.parse(rest[3], mode="eval").body, constants) for key, rest in params.items()}
     is_set, changed = set(), True
     while changed:
         changed = False
         for key, value, scope in passes:
-            if key in is_set:
+            if key in is_set or _value(value, constants) == default[key]:
                 continue
             forwarded = scope.get(value.id) if isinstance(value, ast.Name) else None
-            same_default = forwarded is not None and params[forwarded][3] == params[key][3]
+            same_default = forwarded is not None and default[forwarded] == default[key]
             if same_default and forwarded not in is_set:
                 continue
             is_set.add(key)
@@ -300,7 +345,7 @@ def test_parameters_are_set_by_a_caller():
         for function, names in functions.items()
         for name in names
     }
-    assert len(allowed) == 33
+    assert len(allowed) == 31
     assert allowed <= set(params), sorted(allowed - set(params))
     assert sorted(allowed & is_set) == []
     unset = sorted(set(params) - is_set - allowed)

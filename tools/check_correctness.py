@@ -2,6 +2,7 @@
 entry on Spark at sf0.01 and the matching oracle_sql() on DuckDB over the
 same parquet tables; compare row count, schema arity and an
 order-insensitive value fingerprint (columns sorted by name, rows sorted).
+A query without an oracle counts as a failure.
 
 Usage: python tools/check_correctness.py [--default-session] [sf_dir] [only_query ...]
 
@@ -101,6 +102,10 @@ def main():
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        if name not in oracles:
+            failures.append((name, "no oracle"))
+            print(f"{name:28s} NO ORACLE")
+            continue
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
@@ -108,9 +113,6 @@ def main():
         except Exception as exc:
             failures.append((name, f"SPARK ERROR: {exc}"))
             print(f"{name:28s} SPARK ERROR: {str(exc)[:200]}")
-            continue
-        if name not in oracles:
-            print(f"{name:28s} rows={len(srows):6d}  (rows-only check, no oracle)")
             continue
         try:
             res = con.sql(oracles[name])
