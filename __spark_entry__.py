@@ -40,7 +40,6 @@ from openaip_yaixm_to_geojson_spark.operators.dedup import (
 )
 from openaip_yaixm_to_geojson_spark.operators.knn import knn_ring_expansion
 from openaip_yaixm_to_geojson_spark.operators.similarity import (
-    EMBED_DIM,
     cosine_topk,
     embedding_neardup_pairs,
     lsh_ann_topk,
@@ -837,7 +836,7 @@ def q_simhash_pairs(spark, sf_dir):
     green only if the pigeonhole banding loses nothing."""
     from openaip_yaixm_to_geojson_spark.operators.dedup import simhash_neardup_pairs
 
-    return simhash_neardup_pairs(_docs(spark, sf_dir), max_hamming=3)
+    return simhash_neardup_pairs(_docs(spark, sf_dir))
 
 
 def q_knn_bruteforce(spark, sf_dir):
@@ -859,9 +858,9 @@ def q_spatial_join_bucketed(spark, sf_dir):
         colocated_spatial_join,
     )
 
-    bucketed_pages(spark, pages_from_documents(spark, sf_dir), "gate_pages_bucketed", n_buckets=8)
-    bucketed_cover(spark, fixture_polygons(), "gate_cover_bucketed", n_buckets=8)
-    return colocated_spatial_join(spark, "gate_pages_bucketed", "gate_cover_bucketed").select("url", "poly_id", "airspace_name", "airspace_type", "airspace_class")
+    bucketed_pages(spark, pages_from_documents(spark, sf_dir))
+    bucketed_cover(spark, fixture_polygons())
+    return colocated_spatial_join(spark).select("url", "poly_id", "airspace_name", "airspace_type", "airspace_class")
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -970,7 +969,7 @@ def q_temperature_mixture(spark, sf_dir):
     integer weights into the Hamilton largest-remainder allocation."""
     from openaip_yaixm_to_geojson_spark.operators.text import temperature_mixture
 
-    return temperature_mixture(_docs(spark, sf_dir), budget=1_000_000)
+    return temperature_mixture(_docs(spark, sf_dir))
 
 
 def q_web_prefilter(spark, sf_dir):
@@ -1083,7 +1082,7 @@ def q_simhash64_pairs(spark, sf_dir):
     VERDICT's 16-bit-sketch scale hole."""
     from openaip_yaixm_to_geojson_spark.operators.dedup import simhash_neardup_pairs
 
-    return simhash_neardup_pairs(_docs(spark, sf_dir), max_hamming=3, n_bits=64)
+    return simhash_neardup_pairs(_docs(spark, sf_dir), n_bits=64)
 
 
 def q_ann_topk_filtered(spark, sf_dir):
@@ -1125,7 +1124,7 @@ def q_ann_lsh(spark, sf_dir):
     multiprobe + re-rank are mechanical SQL); recall vs exact is measured
     separately in tests/test_pipeline_ops.py."""
     emb = _emb(spark, sf_dir)
-    return lsh_ann_topk(emb, queries_from_embeddings(emb), dim=EMBED_DIM)
+    return lsh_ann_topk(emb, queries_from_embeddings(emb))
 
 
 def q_ann_ivf(spark, sf_dir):
@@ -1134,7 +1133,7 @@ def q_ann_ivf(spark, sf_dir):
     from openaip_yaixm_to_geojson_spark.operators.similarity import ivf_ann_topk
 
     emb = _emb(spark, sf_dir)
-    return ivf_ann_topk(emb, queries_from_embeddings(emb), dim=EMBED_DIM)
+    return ivf_ann_topk(emb, queries_from_embeddings(emb))
 
 
 def q_embedding_neardup(spark, sf_dir):
@@ -1145,7 +1144,7 @@ def q_embedding_neardup_lsh(spark, sf_dir):
     """The 100-TB mode of near-dup: candidates bucketed by hyperplane LSH
     instead of the O(n^2) all-pairs join; graded against a DuckDB oracle
     that recomputes the (deterministic) buckets."""
-    return embedding_neardup_pairs(_emb(spark, sf_dir), dim=EMBED_DIM)
+    return embedding_neardup_pairs(_emb(spark, sf_dir))
 
 
 def q_langid(spark, sf_dir):
@@ -1498,11 +1497,12 @@ def q_multimodal_features(spark, sf_dir):
     exact and engine-identical) because the driver's canonicalizer cannot
     sort/hash list cells. The array-typed operator itself is unchanged."""
     from openaip_yaixm_to_geojson_spark.operators.multimodal import (
+        MEDIA_ROWS,
         extract_features,
         synth_media,
     )
 
-    feats = extract_features(synth_media(spark, 500))
+    feats = extract_features(synth_media(spark, MEDIA_ROWS))
     return feats.select(
         "media_id",
         "kind",
@@ -1522,12 +1522,13 @@ def q_multimodal_real_features(spark, sf_dir):
     remain behind the loud env-blocked slot; video rows (no stdlib
     container format) are excluded here."""
     from openaip_yaixm_to_geojson_spark.operators.multimodal import (
+        MEDIA_ROWS,
         extract_features,
         real_media_features,
         synth_media_real,
     )
 
-    media = synth_media_real(spark, 500).where(F.col("kind") != "video")
+    media = synth_media_real(spark, MEDIA_ROWS).where(F.col("kind") != "video")
     feats = extract_features(media, decoder=real_media_features)
     return feats.select(
         "media_id",
@@ -1646,11 +1647,12 @@ def q_audio_frames(spark, sf_dir):
     frame aggregates + the one-rounding float32 mean/var sequence; the
     oracle recomputes every int16 sample from the md5 byte layout."""
     from openaip_yaixm_to_geojson_spark.operators.multimodal import (
+        MEDIA_ROWS,
         audio_frames,
         synth_media_real,
     )
 
-    out = audio_frames(synth_media_real(spark, 500))
+    out = audio_frames(synth_media_real(spark, MEDIA_ROWS))
     return out.select(
         "media_id", "frame_idx", "n_samples", "s_sum", "s_sumsq", "s_min", "s_max",
         F.col("mean").cast("double").alias("mean"),
@@ -1663,11 +1665,12 @@ def q_image_patches(spark, sf_dir):
     Arrow batch, exact BIGINT channel sums + float32 means; the oracle
     recomputes every pixel from the md5 byte layout."""
     from openaip_yaixm_to_geojson_spark.operators.multimodal import (
+        MEDIA_ROWS,
         image_patches,
         synth_media_real,
     )
 
-    out = image_patches(synth_media_real(spark, 500))
+    out = image_patches(synth_media_real(spark, MEDIA_ROWS))
     return out.select(
         "media_id", "patch_row", "patch_col", "sum_r", "sum_g", "sum_b",
         F.col("mean_r").cast("double").alias("mean_r"),
@@ -1717,11 +1720,12 @@ def q_multimodal_frames(spark, sf_dir):
     frame grab is substring arithmetic the DuckDB oracle recomputes
     byte-for-byte."""
     from openaip_yaixm_to_geojson_spark.operators.multimodal import (
+        MEDIA_ROWS,
         sample_frames,
         synth_media,
     )
 
-    return sample_frames(synth_media(spark, 500))
+    return sample_frames(synth_media(spark, MEDIA_ROWS))
 
 
 def q_inverted_index(spark, sf_dir):
@@ -1979,7 +1983,7 @@ def q_mixture_allocate(spark, sf_dir):
     largest-remainder in exact integers — quotas provably sum to budget."""
     from openaip_yaixm_to_geojson_spark.operators.text import mixture_allocate
 
-    return mixture_allocate(_docs(spark, sf_dir), budget=1_000_000)
+    return mixture_allocate(_docs(spark, sf_dir))
 
 
 def q_countmin_heavy_hitters(spark, sf_dir):

@@ -81,7 +81,7 @@ def main() -> None:
     # pipeline against parquet mirrors that and keeps the synthetic-geotag
     # expression tree out of the measured join stage.
     pages_dir = tempfile.mkdtemp(prefix="bench_pages_")
-    synth_pages(spark, BENCH_DOCS, with_payload=False).write.mode("overwrite").parquet(pages_dir)
+    synth_pages(spark, BENCH_DOCS).write.mode("overwrite").parquet(pages_dir)
     pages_big = spark.read.parquet(pages_dir)
 
     # Warm the JVM codegen + all Python UDF workers with one full untimed

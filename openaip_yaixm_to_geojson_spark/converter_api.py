@@ -96,7 +96,7 @@ class YaixmConverter:
             validate_geometries=self.config["validateGeometries"],
             consume_duplicate_buffer=float(self.config["consumeDuplicateBuffer"]),
         )
-        geojson = features_to_geojson(features, strict=True)
+        geojson = features_to_geojson(features)
         problems = validate_feature_collection(geojson)
         if problems:
             if self.config["strictSchemaValidation"]:

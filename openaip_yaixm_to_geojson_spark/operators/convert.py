@@ -252,8 +252,8 @@ def split_quarantine(features: DataFrame) -> tuple[DataFrame, DataFrame]:
     distributed engine must not kill a 10^12-row job for one bad record,
     so rows the reference would throw on land in a quarantine table
     carrying the error message, and the clean side is guaranteed
-    error-free. `features_to_geojson(strict=True)` keeps the reference's
-    throw semantics for converter-API users."""
+    error-free. `features_to_geojson` keeps the reference's throw
+    semantics for converter-API users."""
     clean = features.where(F.col("error").isNull()).drop("error")
     quarantine = features.where(F.col("error").isNotNull())
     return clean, quarantine
@@ -344,15 +344,16 @@ def write_geojson_ndjson(features: DataFrame, path: str) -> None:
     clean.select(feature_json_col().alias("value")).write.mode("overwrite").text(path)
 
 
-def features_to_geojson(features: DataFrame, strict: bool = False) -> dict:
+def features_to_geojson(features: DataFrame) -> dict:
     """Collect feature rows into a GeoJSON FeatureCollection dict with the
     reference's cleanObject semantics (null/empty fields omitted,
     src/clean-object.ts:19-88). Input order (doc, block, sequence) is
-    preserved like the reference's sequential loop output."""
+    preserved like the reference's sequential loop output. Raises on the
+    first row with a conversion error, like the reference."""
     rows = features.orderBy("doc_id", "block_idx", "seq_idx").collect()
     out = []
     for row in rows:
-        if row["error"] is not None and strict:
+        if row["error"] is not None:
             raise ValueError(f"conversion error for '{row['name']}': {row['error']}")
         props: dict = {
             "name": row["name"],

@@ -60,6 +60,9 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
 
 MINHASH_P = 2_147_483_647  # 2^31 - 1: keeps a*x + b < 2^62 under ANSI mode
 MINHASH_NUM_HASHES = 16  # signature length; the LSH bands split it evenly
+MINHASH_BANDS = 8  # LSH bands of minhash_lsh_pairs (rows per band = 16 // 8)
+LSH_RECALL_SAMPLE_MOD = 4  # lsh_recall_monitor samples docs whose md5 prefix is 0 mod this
+SIMHASH_MAX_HAMMING = 3  # the Hamming budget of simhash_neardup_pairs
 MINHASH_JACCARD = 0.5  # pairs at or above this shingle Jaccard are near-duplicates
 NGRAM_JACCARD = 0.3  # the shingle Jaccard floor of ngram_jaccard_pairs
 
@@ -131,9 +134,10 @@ def shingled_documents(documents: DataFrame) -> DataFrame:
     return shingled.persist(StorageLevel.MEMORY_AND_DISK)
 
 
-def lsh_bands(signature: Column, bands: int, rows_per_band: int) -> Column:
-    """Split a signature into `bands` keys of `rows_per_band` hashes each:
+def lsh_bands(signature: Column) -> Column:
+    """Split a signature into MINHASH_BANDS keys of equal runs of hashes:
     array of (band_idx, band_key) structs."""
+    rows_per_band = MINHASH_NUM_HASHES // MINHASH_BANDS
     return F.array(
         *[
             F.struct(
@@ -142,16 +146,15 @@ def lsh_bands(signature: Column, bands: int, rows_per_band: int) -> Column:
                     "band_key"
                 ),
             )
-            for b in range(bands)
+            for b in range(MINHASH_BANDS)
         ]
     )
 
 
-def minhash_lsh_pairs(documents: DataFrame, bands: int = 8) -> DataFrame:
-    """Candidate near-duplicate pairs via banded MinHash, verified with the
-    true shingle Jaccard against MINHASH_JACCARD. Returns (key_a, key_b,
-    jaccard), key_a < key_b."""
-    rows_per_band = MINHASH_NUM_HASHES // bands
+def minhash_lsh_pairs(documents: DataFrame) -> DataFrame:
+    """Candidate near-duplicate pairs via MINHASH_BANDS-banded MinHash,
+    verified with the true shingle Jaccard against MINHASH_JACCARD.
+    Returns (key_a, key_b, jaccard), key_a < key_b."""
     shingled = shingled_documents(documents)
     sigs = shingled.select(
         "key",
@@ -170,7 +173,7 @@ def minhash_lsh_pairs(documents: DataFrame, bands: int = 8) -> DataFrame:
     # min >= t*max is not (0.55*100 rounds up to 55.00000000000001 and
     # would drop a 55-in-100 subset pair that the verify keeps at t=0.55).
     banded = sigs.select(
-        "key", "n_sh", F.explode(lsh_bands(F.col("sig"), bands, rows_per_band)).alias("band")
+        "key", "n_sh", F.explode(lsh_bands(F.col("sig"))).alias("band")
     ).select("key", "n_sh", "band.band_idx", "band.band_key")
     cands = (
         banded.alias("a")
@@ -474,13 +477,11 @@ def simhash_bands(sim: Column, n_bands: int, n_bits: int = 16) -> list[tuple[int
     return out
 
 
-def simhash_neardup_pairs(
-    documents: DataFrame, max_hamming: int = 2, n_bits: int = 16
-) -> DataFrame:
-    """Pairs whose n_bits SimHash differs in <= max_hamming bits.
+def simhash_neardup_pairs(documents: DataFrame, n_bits: int = 16) -> DataFrame:
+    """Pairs whose n_bits SimHash differs in <= SIMHASH_MAX_HAMMING bits.
 
-    Banded into `max_hamming + 1` contiguous bit segments: by pigeonhole a
-    pair with <= max_hamming differing bits matches on at least one band,
+    Banded into `SIMHASH_MAX_HAMMING + 1` contiguous bit segments: by
+    pigeonhole a pair within the budget matches on at least one band,
     so recall is exact for the full budget (the earlier two-half scheme only
     guaranteed Hamming <= 1). Candidates come from a per-band equi-join —
     the same explode + (band_idx, band_key) shuffle shape as MinHash LSH,
@@ -488,16 +489,12 @@ def simhash_neardup_pairs(
     nested-loop join.
 
     n_bits=64 is the corpus-scale sketch (2^64 signatures; 16-bit bands at
-    max_hamming 3 give usefully selective band keys at 10^10+ docs, where
+    a budget of 3 give usefully selective band keys at 10^10+ docs, where
     the 16-bit sketch's 32 buckets would go quadratic); n_bits=16 remains
     as the oracle-cheap twin."""
     if n_bits not in (16, 64):
         raise ValueError(f"n_bits must be 16 or 64; got {n_bits}")
-    if not 0 <= max_hamming <= n_bits - 1:
-        raise ValueError(
-            f"max_hamming must be in [0, {n_bits - 1}] for a {n_bits}-bit SimHash; got {max_hamming}"
-        )
-    n_bands = max_hamming + 1
+    n_bands = SIMHASH_MAX_HAMMING + 1
     sim = simhash16(F.col("text")) if n_bits == 16 else simhash64(F.col("text"))
     # materialize the sketches: the sim column feeds the band array AND the
     # output, on BOTH sides of the self-join — without the checkpoint the
@@ -526,13 +523,13 @@ def simhash_neardup_pairs(
             & (F.col("a.key") < F.col("b.key")),
         )
         .withColumn("hamming", hamming)
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= SIMHASH_MAX_HAMMING)
         .select(F.col("a.key").alias("key_a"), F.col("b.key").alias("key_b"), "hamming")
         .dropDuplicates(["key_a", "key_b"])
     )
 
 
-def lsh_recall_monitor(documents: DataFrame, sample_mod: int = 4, bands: int = 8) -> DataFrame:
+def lsh_recall_monitor(documents: DataFrame) -> DataFrame:
     """One-row LSH recall report over a deterministic corpus sample:
     (n_sampled, n_true_pairs, n_found_pairs, n_missed_pairs).
 
@@ -546,12 +543,12 @@ def lsh_recall_monitor(documents: DataFrame, sample_mod: int = 4, bands: int = 8
     with an independent anti-join.
 
     Scale shape: the all-pairs truth is O(sample^2) BY DESIGN — pick
-    sample_mod so the sample stays ~10^4 docs; everything stays in
+    LSH_RECALL_SAMPLE_MOD so the sample stays ~10^4 docs; everything stays in
     DataFrames (three one-row aggregates cross-joined, nothing collected).
     The sample is localCheckpoint-ed: it feeds three consumers and would
     otherwise rescan the corpus three times (the fan-out-reuse trap)."""
     hex8 = md5_prefix_int(F.col("doc_id").cast("string"))
-    sample = documents.where(hex8 % F.lit(sample_mod) == 0).localCheckpoint()
+    sample = documents.where(hex8 % F.lit(LSH_RECALL_SAMPLE_MOD) == 0).localCheckpoint()
 
     docs = sample.select(
         F.col("doc_id").alias("key"),
@@ -565,7 +562,7 @@ def lsh_recall_monitor(documents: DataFrame, sample_mod: int = 4, bands: int = 8
         .join(docs.alias("b"), F.col("a.key") < F.col("b.key"))
         .where(jaccard.cast("double") >= F.lit(MINHASH_JACCARD))
     )
-    found = minhash_lsh_pairs(sample, bands=bands)
+    found = minhash_lsh_pairs(sample)
     n_sampled = sample.agg(F.count(F.lit(1)).cast("bigint").alias("n_sampled"))
     n_true = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_true_pairs"))
     n_found = found.agg(F.count(F.lit(1)).cast("bigint").alias("n_found_pairs"))
@@ -577,13 +574,14 @@ def lsh_recall_monitor(documents: DataFrame, sample_mod: int = 4, bands: int = 8
 
 
 EDIT_BLOCK_CHARS = 16  # margin width of the edit-distance block keys
+EDIT_MAX_DISTANCE = 20  # edit_distance_pairs keeps pairs at most this many edits apart
 
 
-def edit_distance_pairs(documents: DataFrame, max_distance: int = 20) -> DataFrame:
+def edit_distance_pairs(documents: DataFrame) -> DataFrame:
     """Blocked Levenshtein near-duplicate pairs: candidate pairs share an
     untouched margin — identical first EDIT_BLOCK_CHARS chars OR identical
     last EDIT_BLOCK_CHARS chars — then exact edit distance verifies
-    <= max_distance. Output (key_a, key_b, edit_distance).
+    <= EDIT_MAX_DISTANCE. Output (key_a, key_b, edit_distance).
 
     Recall contract (standard blocking caveat, documented): a pair is
     found iff at least one margin is edit-free; pairs edited in BOTH
@@ -598,9 +596,9 @@ def edit_distance_pairs(documents: DataFrame, max_distance: int = 20) -> DataFra
     shuffle keys; the text itself must ride the join for verification —
     unavoidable for exact edit distance, and block populations are tiny
     because a 16-char margin is a high-entropy key). The length lower
-    bound |n_a - n_b| <= max_distance (levenshtein >= length diff) prunes
-    before the DP runs, and Spark's threshold-ed levenshtein bails out of
-    the DP past max_distance (returns -1)."""
+    bound |n_a - n_b| <= EDIT_MAX_DISTANCE (levenshtein >= length diff)
+    prunes before the DP runs, and Spark's threshold-ed levenshtein bails
+    out of the DP past it (returns -1)."""
     documents = fan_out(documents)
     n = F.length(F.col("text"))
     long_keys = F.array(
@@ -632,7 +630,7 @@ def edit_distance_pairs(documents: DataFrame, max_distance: int = 20) -> DataFra
         b,
         (F.col("a.block") == F.col("b.block"))
         & (F.col("a.key") < F.col("b.key"))
-        & (F.abs(F.col("a.n") - F.col("b.n")) <= F.lit(max_distance)),
+        & (F.abs(F.col("a.n") - F.col("b.n")) <= F.lit(EDIT_MAX_DISTANCE)),
     ).select(
         F.col("a.key").alias("key_a"),
         F.col("b.key").alias("key_b"),
@@ -643,7 +641,7 @@ def edit_distance_pairs(documents: DataFrame, max_distance: int = 20) -> DataFra
     # filters stay above the InMemoryRelation, so the DP still runs on
     # materialized candidates, never inside the join condition — and the
     # blocking join is built once per session (r7)
-    dist = F.levenshtein(F.col("txt_a"), F.col("txt_b"), max_distance)
+    dist = F.levenshtein(F.col("txt_a"), F.col("txt_b"), EDIT_MAX_DISTANCE)
     return (
         cand.withColumn("edit_distance", dist.cast("int"))
         .where(F.col("edit_distance") >= 0)
@@ -959,7 +957,7 @@ def dedup_keep_best(documents: DataFrame) -> DataFrame:
     )
 
 
-def duplicate_clusters_star(pairs: DataFrame, documents: DataFrame | None = None) -> DataFrame:
+def duplicate_clusters_star(pairs: DataFrame, documents: DataFrame) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
     (Kiveris et al.) — the industrial-scale CC algorithm beside
     duplicate_clusters' min-label propagation: converges in O(log^2 n)
@@ -1044,13 +1042,12 @@ def duplicate_clusters_star(pairs: DataFrame, documents: DataFrame | None = None
         "key", F.col("key").alias("cluster_id")
     )
     out = labels.union(roots)
-    if documents is not None:
-        nodes = documents.select(F.col("doc_id").alias("key"))
-        singles = (
-            nodes.join(out.select("key"), "key", "left_anti")
-            .select("key", F.col("key").alias("cluster_id"))
-        )
-        out = out.union(singles)
+    nodes = documents.select(F.col("doc_id").alias("key"))
+    singles = (
+        nodes.join(out.select("key"), "key", "left_anti")
+        .select("key", F.col("key").alias("cluster_id"))
+    )
+    out = out.union(singles)
     return out.groupBy("key").agg(F.min("cluster_id").alias("cluster_id"))
 
 
@@ -1067,7 +1064,7 @@ def dedup_method_agreement(documents: DataFrame) -> DataFrame:
     ordered (key_a, key_b) pair key — pair-set-sized, far below corpus
     size — then one global rollup."""
     mh = minhash_lsh_pairs(documents).select("key_a", "key_b")
-    sh = simhash_neardup_pairs(documents, max_hamming=3, n_bits=64).select("key_a", "key_b")
+    sh = simhash_neardup_pairs(documents, n_bits=64).select("key_a", "key_b")
     j = (
         mh.select("key_a", "key_b", F.lit(1).alias("in_mh"))
         .join(

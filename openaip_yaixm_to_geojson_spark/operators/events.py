@@ -17,6 +17,9 @@ from pyspark.sql import functions as F
 
 SESSION_GAP_SECONDS = 1800  # a longer gap between a user's events starts a new session
 WINDOW_SECONDS = 3600  # the tumbling window of the per-type event rollups
+INTERVAL_BUCKET_SECONDS = 3600  # interval_join's time-bucket width
+MOVING_FRAME_ROWS = 5  # rows in events_moving_stats' trailing frame
+STICKINESS_WINDOW_DAYS = 30  # the trailing MAU window of events_stickiness
 
 
 def events_from_dir(spark, sf_dir: str) -> DataFrame:
@@ -95,16 +98,15 @@ def props_k_stats(events: DataFrame) -> DataFrame:
 _ASOF_VALUES = ("event_id", "value")  # right-side columns carried onto each left row
 
 
-def asof_join(left: DataFrame, right: DataFrame, allow_equal: bool = True) -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """Backward as-of join: each left row matched to the most recent right
-    row of the same user_id with right.ts <= left.ts (strictly < when
-    allow_equal=False) — pandas merge_asof / kdb aj semantics. Spark has no
-    native as-of join; a naive range join explodes to O(left x right) per
-    key. The distributed formulation here is union + carry-forward: tag
-    both sides, sort within key, LAST(ignorenulls) over an unbounded-
-    preceding window carries the latest right payload onto every left row.
-    ONE shuffle on the key, per-key sort only (spillable), no range
-    explosion, no Python.
+    row of the same user_id with right.ts <= left.ts — pandas merge_asof /
+    kdb aj semantics. Spark has no native as-of join; a naive range join
+    explodes to O(left x right) per key. The distributed formulation here
+    is union + carry-forward: tag both sides, sort within key,
+    LAST(ignorenulls) over an unbounded-preceding window carries the latest
+    right payload onto every left row. ONE shuffle on the key, per-key
+    sort only (spillable), no range explosion, no Python.
 
     Determinism: right rows tying on (user_id, ts) resolve to the greatest
     event_id — not by a separate dedup pass (which would cost
@@ -137,13 +139,12 @@ def asof_join(left: DataFrame, right: DataFrame, allow_equal: bool = True) -> Da
         *[F.lit(None).cast(r.schema[c].dataType).alias(f"_rv_{c}") for c in _ASOF_VALUES],
         *[F.col(c) for c in left_cols if c not in ("user_id", "ts")],
     )
-    # at equal ts: right before left = non-strict (<=); left before
-    # right = strict (<). The trailing _rv_event_id term orders tying right
-    # rows among themselves — greatest event_id sorts last and wins.
-    is_r_order = F.desc("_is_r") if allow_equal else F.asc("_is_r")
+    # at equal ts the right row sorts before the left one (<=). The
+    # trailing _rv_event_id term orders tying right rows among themselves
+    # — greatest event_id sorts last and wins.
     w = (
         Window.partitionBy("user_id")
-        .orderBy(F.col("ts"), is_r_order, F.col("_rv_event_id"))
+        .orderBy(F.col("ts"), F.desc("_is_r"), F.col("_rv_event_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     carried = tagged_l.unionByName(tagged_r).select(
@@ -158,7 +159,7 @@ def asof_join(left: DataFrame, right: DataFrame, allow_equal: bool = True) -> Da
     )
 
 
-def interval_join(points: DataFrame, intervals: DataFrame, bucket_seconds: int = 3600) -> DataFrame:
+def interval_join(points: DataFrame, intervals: DataFrame) -> DataFrame:
     """Range/interval containment join (point.t BETWEEN interval.start AND
     interval.end, same key) via time-bucket binning — the 1-D analogue of
     the engine's cell-cover spatial join. Spark plans a raw BETWEEN join as
@@ -175,7 +176,7 @@ def interval_join(points: DataFrame, intervals: DataFrame, bucket_seconds: int =
     arithmetic (t - t % bucket), so the DuckDB oracle (which executes the
     same query as a native IEJoin — an independent strategy) sees identical
     semantics. Points inside overlapping intervals match each one."""
-    b = F.lit(int(bucket_seconds))
+    b = F.lit(INTERVAL_BUCKET_SECONDS)
     pt_bucket = (F.col("t") - F.col("t") % b).alias("_bucket")
     iv = intervals.withColumn(
         "_bucket",
@@ -361,10 +362,10 @@ def events_retention(events: DataFrame) -> DataFrame:
     )
 
 
-def events_moving_stats(events: DataFrame, frame_rows: int = 5) -> DataFrame:
+def events_moving_stats(events: DataFrame) -> DataFrame:
     """Per-user ROWS-frame moving aggregate: for each event (ordered by
     ts, event_id within user), the count and value-sum of the trailing
-    `frame_rows`-row frame — the sliding-window-over-ordered-rows surface
+    MOVING_FRAME_ROWS-row frame — the sliding-window-over-ordered-rows surface
     (ROWS BETWEEN n PRECEDING AND CURRENT ROW) the lag/row_number and
     session-window operators don't exercise.
 
@@ -378,7 +379,7 @@ def events_moving_stats(events: DataFrame, frame_rows: int = 5) -> DataFrame:
     w = (
         Window.partitionBy("user_id")
         .orderBy(F.col("ts"), F.col("event_id"))
-        .rowsBetween(-(frame_rows - 1), 0)
+        .rowsBetween(-(MOVING_FRAME_ROWS - 1), 0)
     )
     v = F.col("value").cast("decimal(18,2)")
     return events.select(
@@ -890,15 +891,15 @@ def conversion_latency(events: DataFrame) -> DataFrame:
     )
 
 
-def events_stickiness(events: DataFrame, window_days: int = 30) -> DataFrame:
+def events_stickiness(events: DataFrame) -> DataFrame:
     """DAU / trailing-MAU stickiness per day: (day_start, dau, mau,
     stickiness) where mau counts distinct users over the trailing
-    `window_days` ending at each observed day, and stickiness = dau/mau
-    (ONE single-rounded division on exact counts).
+    STICKINESS_WINDOW_DAYS ending at each observed day, and stickiness =
+    dau/mau (ONE single-rounded division on exact counts).
 
     Scale shape: the fact stream collapses to DISTINCT (user, day) rows
     first; the rolling-distinct then comes from exploding each user-day
-    to the <= window_days future day-buckets it supports (bounded x30
+    to the <= STICKINESS_WINDOW_DAYS future day-buckets it supports (bounded x30
     expansion of the ALREADY-DEDUPED user-day table, orders of magnitude
     under the fact table) and counting per (user, target-day) dedupe with
     COUNT(*) — never a per-day COUNT DISTINCT rescan of the stream. Days
@@ -917,7 +918,7 @@ def events_stickiness(events: DataFrame, window_days: int = 30) -> DataFrame:
         user_days.select(
             "user_id",
             F.explode(
-                F.sequence(F.col("d"), F.col("d") + F.lit((window_days - 1) * day), F.lit(day))
+                F.sequence(F.col("d"), F.col("d") + F.lit((STICKINESS_WINDOW_DAYS - 1) * day), F.lit(day))
             ).alias("d"),
         )
         .join(observed, "d")          # only observed days need a MAU value

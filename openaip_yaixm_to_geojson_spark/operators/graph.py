@@ -160,29 +160,23 @@ def triangle_count(edges: DataFrame) -> DataFrame:
     )
 
 
-def bfs_depth(
-    edges: DataFrame,
-    seed,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    directed: bool = False,
-) -> DataFrame:
-    """Breadth-first hop distance from `seed` over the edge table:
-    (node, depth) for every reachable node. Iterative frontier expansion —
-    each round joins the frontier to the edge list, anti-joins the
-    visited set, and stops when the frontier empties; rounds = graph
-    radius from the seed, lineage cut per round with localCheckpoint.
+def bfs_depth(edges: DataFrame, seed) -> DataFrame:
+    """Breadth-first hop distance from `seed` over the undirected
+    (src_host, dst_host) edge table: (node, depth) for every reachable
+    node. Iterative frontier expansion — each round joins the frontier to
+    the edge list, anti-joins the visited set, and stops when the frontier
+    empties; rounds = graph radius from the seed, lineage cut per round
+    with localCheckpoint.
     RAISES if the frontier is still non-empty after 20 rounds (partial
     depths are silently wrong — the duplicate_clusters convergence
-    contract). Undirected by default (edges symmetrized).
+    contract). Edges are symmetrized.
 
     Scale shape: per round, one join keyed on the frontier (small side)
     plus one anti-join against visited; the edge table is checkpointed
     once and reused every round."""
-    e = edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
-    if not directed:
-        e = e.union(edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d")))
-    e = e.localCheckpoint()
+    e = edges.select(F.col("src_host").alias("s"), F.col("dst_host").alias("d")).union(
+        edges.select(F.col("dst_host").alias("s"), F.col("src_host").alias("d"))
+    ).localCheckpoint()
     spark = edges.sparkSession
     from ..plans.localtable import literal_table
 

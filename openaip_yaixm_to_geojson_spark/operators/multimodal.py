@@ -178,7 +178,10 @@ def sample_frames(media: DataFrame) -> DataFrame:
 
 PPM_W, PPM_H = 8, 8
 WAV_RATE, WAV_SAMPLES = 16000, 128
+MEDIA_ROWS = 500  # rows of the synth_media and synth_media_real gate queries
 CODEC_MEDIA_ROWS = 300  # rows of the PNG, GIF and JPEG feature queries
+IMAGE_PATCH = 4  # side of image_patches' square patches, in pixels
+AUDIO_FRAME = 32  # samples per audio_frames window
 
 
 def _md5_bytes(seed: str, n: int) -> bytes:
@@ -384,19 +387,20 @@ PATCH_SCHEMA = T.StructType(
 )
 
 
-def image_patches(media: DataFrame, patch: int = 4) -> DataFrame:
+def image_patches(media: DataFrame) -> DataFrame:
     """ViT-style patch extraction over REAL decoded images: each P6 PPM
     payload is parsed (decode_ppm — genuine header tokenizer) and split
-    into a (h/patch x w/patch) grid; one output row per patch with exact
-    per-channel BIGINT pixel sums and the float32 means (the one-rounding
+    into a grid of IMAGE_PATCH-pixel squares; one output row per patch
+    with exact per-channel BIGINT pixel sums and the float32 means (the one-rounding
     contract real_media_features uses, so the decode -> patch -> statistic
     chain hash-gates end to end).
 
     Scale shape: mapInPandas — Arrow batches in, NumPy block reduction per
     image (reshape to (gh, patch, gw, patch, 3), sum over the block axes —
     no Python loop over pixels), patch rows out. Partition-preserving, no
-    shuffle; images whose dimensions are not multiples of `patch` raise
+    shuffle; images whose dimensions are not multiples of the patch raise
     (the contract a patch embedder enforces)."""
+    patch = IMAGE_PATCH
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -440,17 +444,18 @@ FRAME_FEAT_SCHEMA = T.StructType(
 )
 
 
-def audio_frames(media: DataFrame, frame: int = 32) -> DataFrame:
+def audio_frames(media: DataFrame) -> DataFrame:
     """Frame-level audio features over REAL WAV decode (the image_patches
     sibling for the audio column): each PCM payload parses via the stdlib
-    wave module and splits into fixed `frame`-sample windows; per frame,
+    wave module and splits into fixed AUDIO_FRAME-sample windows; per frame,
     exact BIGINT sum / sum-of-squares / min / max plus float32 mean and
     variance under the one-rounding contract (sum/n; var = sumsq/n -
     mean*mean — the real_media_features float sequence).
 
     Scale shape: mapInPandas, NumPy reshape reduction per clip (no sample
     loop), partition-preserving, no shuffle. Clips whose length is not a
-    multiple of `frame` raise (the contract a frame stack enforces)."""
+    multiple of the frame raise (the contract a frame stack enforces)."""
+    frame = AUDIO_FRAME
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -19,6 +19,8 @@ from pyspark.sql import functions as F
 
 CHARS_HISTOGRAM_WIDTH = 32
 RANGE_PARTITION_BINS = 8
+PARETO_BUCKETS = 32  # hash buckets of pareto_frontier's local-skyline phase
+RETURNED_TOP_K = 20  # customers kept by returned_item_revenue
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -358,15 +360,16 @@ def min_cost_supplier(
     )
 
 
-def pareto_frontier(documents: DataFrame, n_buckets: int = 32) -> DataFrame:
+def pareto_frontier(documents: DataFrame) -> DataFrame:
     """Skyline query: documents not dominated on (n_chars, n_distinct
     tokens) — dominator has both >= and at least one strictly greater.
     Duplicates of a frontier point all survive (identical points never
     dominate each other). Output (doc_id, n_chars, n_distinct_tokens).
 
     Classic two-phase distributed skyline (e.g. Borzsony/Kossmann/Stocker
-    BNL lineage): a LOCAL skyline per hash bucket — windows PARTITIONED by
-    bucket, so the fact table is never globally sorted — then the exact
+    BNL lineage): a LOCAL skyline per hash bucket (PARETO_BUCKETS of
+    them) — windows PARTITIONED by bucket, so the fact table is never
+    globally sorted — then the exact
     skyline of the tiny survivor union. Sound because dominance is
     transitive: every dominated point has a maximal dominator, which no
     bucket can eliminate. Dominance test per phase is two windows:
@@ -395,7 +398,7 @@ def pareto_frontier(documents: DataFrame, n_buckets: int = 32) -> DataFrame:
         )
 
     local = survivors(
-        pts.withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(n_buckets))), "bucket"
+        pts.withColumn("bucket", F.pmod(F.xxhash64("doc_id"), F.lit(PARETO_BUCKETS))), "bucket"
     ).drop("bucket")
     return survivors(local).select(
         "doc_id", F.col("x").alias("n_chars"), F.col("y").alias("n_distinct_tokens")
@@ -403,16 +406,12 @@ def pareto_frontier(documents: DataFrame, n_buckets: int = 32) -> DataFrame:
 
 
 def returned_item_revenue(
-    customer: DataFrame,
-    orders: DataFrame,
-    lineitem: DataFrame,
-    nation: DataFrame,
-    k: int = 20,
+    customer: DataFrame, orders: DataFrame, lineitem: DataFrame, nation: DataFrame
 ) -> DataFrame:
     """TPC-H Q10 shape: lost revenue from returned items per customer in
     the first quarter of 1996 — fact filter (returnflag + date window) -> dim-broadcast
     chain (orders-in-window, customer, nation) -> customer rollup ->
-    global top-k. Output (c_custkey, c_name, n_name, revenue, n_items).
+    global top-RETURNED_TOP_K. Output (c_custkey, c_name, n_name, revenue, n_items).
 
     Scale shape: both filters reach the scans as pushed predicates; the
     date-windowed orders sliver and the dims broadcast; revenue is
@@ -444,7 +443,7 @@ def returned_item_revenue(
         per_cust.join(F.broadcast(customer), per_cust.o_custkey == customer.c_custkey)
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
         .orderBy(F.col("revd").desc(), F.col("c_custkey"))
-        .limit(k)
+        .limit(RETURNED_TOP_K)
     )
     return out.select(
         "c_custkey", "c_name", "n_name", F.col("revd").cast("double").alias("revenue"), "n_items"

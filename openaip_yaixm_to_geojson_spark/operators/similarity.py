@@ -157,7 +157,7 @@ def bucket_assign_col(vec: Column, planes: np.ndarray) -> Column:
     return lsh_bucket_udf_col(vec, planes)
 
 
-def lsh_ann_topk(embeddings: DataFrame, queries: DataFrame, dim: int | None = None) -> DataFrame:
+def lsh_ann_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
     """Approximate top-ANN_K: candidates = same LSH bucket, exact re-rank inside.
 
     One bucket assignment pass over the corpus (expressions only), then a
@@ -168,11 +168,7 @@ def lsh_ann_topk(embeddings: DataFrame, queries: DataFrame, dim: int | None = No
     """
     from pyspark.sql import Window
 
-    if dim is None:
-        # fallback metadata action; callers should pass dim to keep
-        # plan-build free of Spark jobs
-        dim = len(embeddings.select("embedding").first()[0])
-    planes = hyperplanes(dim, ANN_LSH_PLANES)
+    planes = hyperplanes(EMBED_DIM, ANN_LSH_PLANES)
     corpus = embeddings.withColumn("bucket", bucket_assign_col(F.col("embedding"), planes))
     probes = queries.withColumn("bucket", bucket_assign_col(F.col("qvec"), planes))
     neighbours = F.array(
@@ -297,7 +293,7 @@ def ivf_probe_cids_col(qvec: Column, centroids: np.ndarray, n_probes: int) -> Co
     return _ivf_probe_cids_udf(qvec, centroids, n_probes)
 
 
-def ivf_ann_topk(embeddings: DataFrame, queries: DataFrame, dim: int | None = None) -> DataFrame:
+def ivf_ann_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
     """IVF-style ANN: corpus vectors are assigned to their nearest of
     IVF_CENTROIDS coarse centroids (one expression pass, no shuffle); each
     query probes its IVF_PROBES nearest centroid lists and re-ranks exactly
@@ -309,9 +305,7 @@ def ivf_ann_topk(embeddings: DataFrame, queries: DataFrame, dim: int | None = No
     direction."""
     from pyspark.sql import Window
 
-    if dim is None:
-        dim = len(embeddings.select("embedding").first()[0])
-    cents = ivf_centroids(dim, IVF_CENTROIDS)
+    cents = ivf_centroids(EMBED_DIM, IVF_CENTROIDS)
     corpus = embeddings.withColumn("cid", ivf_assign_any_col(F.col("embedding"), cents))
     # query probe lists: top-IVF_PROBES centroids by dot desc, centroid-id asc
     probes = queries.withColumn(
@@ -335,9 +329,7 @@ def ivf_ann_topk(embeddings: DataFrame, queries: DataFrame, dim: int | None = No
     )
 
 
-def embedding_neardup_pairs(
-    embeddings: DataFrame, exact_all_pairs: bool = False, dim: int | None = None
-) -> DataFrame:
+def embedding_neardup_pairs(embeddings: DataFrame, exact_all_pairs: bool = False) -> DataFrame:
     """Near-duplicate vectors: exact cosine >= NEARDUP_COSINE among
     candidate pairs. Candidates = same bucket of NEARDUP_LSH_PLANES
     hyperplanes (the scale path); with
@@ -351,9 +343,7 @@ def embedding_neardup_pairs(
         dot_double(F.col("embedding"), F.col("embedding")).alias("norm_sq"),
     ]
     if not exact_all_pairs:
-        if dim is None:
-            dim = len(embeddings.select("embedding").first()[0])
-        planes = hyperplanes(dim, NEARDUP_LSH_PLANES)
+        planes = hyperplanes(EMBED_DIM, NEARDUP_LSH_PLANES)
         cols.append(bucket_assign_col(F.col("embedding"), planes).alias("bucket"))
     # materialize before the self-join: norms (and at high dim the Arrow
     # bucket kernel) would otherwise evaluate once per side (the r4

@@ -33,10 +33,13 @@ from ..plans.fanout import fan_out
 # 32-bit md5-prefix hash space; KMV estimates distincts as (k-1) * M / h_k
 KMV_M = float(2**32)
 KMV_K = 16
+KMV_SALTS = 64  # sub-buckets whose local k-mins kmv_distinct merges
 TFIDF_K = 3  # terms per document of tfidf_topk
 PMI_TOP = 20  # bigrams bigram_pmi returns
 HEAVY_HITTERS_K = 20  # tokens countmin_heavy_hitters reads back
 INVERTED_INDEX_DF_CAP = 300  # doc_freq cap of the inverted_index_capped query
+GRAM_WIDTH = 8  # words per gram of repeated_grams and duplicated_span_stats
+VOCAB_SIZE = 256  # terms in vocab_coverage's vocabulary
 
 
 def _words() -> Column:
@@ -133,7 +136,7 @@ def tfidf_topk(documents: DataFrame) -> DataFrame:
     )
 
 
-def kmv_distinct(documents: DataFrame, n_salts: int = 64) -> DataFrame:
+def kmv_distinct(documents: DataFrame) -> DataFrame:
     """Per-group distinct-term cardinality: exact count plus a K-Minimum-
     Values sketch estimate (k = KMV_K: (k-1) * M / h_k over a 32-bit
     md5-prefix hash space). The estimate is what survives at 100 TB; the
@@ -143,13 +146,13 @@ def kmv_distinct(documents: DataFrame, n_salts: int = 64) -> DataFrame:
     Scale shape — MERGEABLE, never ranked: a per-group window row_number
     would sort a group's entire distinct-term set in one task (a web-scale
     source has a web-scale vocabulary — skew bomb). Instead the k-min is
-    computed the way real sketches merge: salt each hash into n_salts
+    computed the way real sketches merge: salt each hash into KMV_SALTS
     sub-buckets, take each sub-bucket's local k smallest (bounded
-    sort+slice per agg group), then merge the <= n_salts*k survivors per
+    sort+slice per agg group), then merge the <= KMV_SALTS*k survivors per
     group — correct because any globally k-smallest value is k-smallest in
     its own sub-bucket. Both aggregation levels are map-side partial;
     no task ever holds more than the larger of a sub-bucket and
-    n_salts*k values.
+    KMV_SALTS*k values.
 
     Groups with fewer than k distinct terms report NULL sketch fields
     (the estimator is undefined; the exact count is the answer there).
@@ -162,7 +165,7 @@ def kmv_distinct(documents: DataFrame, n_salts: int = 64) -> DataFrame:
         .select("grp", md5_prefix_int("term").alias("h"))
     )
     local = (
-        pairs.withColumn("salt", F.pmod(F.col("h"), F.lit(n_salts)))
+        pairs.withColumn("salt", F.pmod(F.col("h"), F.lit(KMV_SALTS)))
         .groupBy("grp", "salt")
         .agg(
             F.slice(F.array_sort(F.collect_list("h")), 1, k).alias("mins"),
@@ -342,9 +345,9 @@ def token_rarity(documents: DataFrame) -> DataFrame:
 # COUNT(*) over one-row-per-document keys.
 
 
-def _doc_gram_counts(documents: DataFrame, width: int, hash_grams: bool = False) -> DataFrame:
-    """(key, gram, n_pos): occurrence count of every width-word gram per
-    document. Docs shorter than `width` words contribute nothing (and are
+def _doc_gram_counts(documents: DataFrame, hash_grams: bool = False) -> DataFrame:
+    """(key, gram, n_pos): occurrence count of every GRAM_WIDTH-word gram
+    per document. Docs shorter than that contribute nothing (and are
     absent from downstream outputs — documented contract). One shuffle on
     (key, gram) with map-side partial aggregation.
 
@@ -358,7 +361,7 @@ def _doc_gram_counts(documents: DataFrame, width: int, hash_grams: bool = False)
 
     # struct-explode + codegen concat (see exploded_word_ngrams): the gram
     # string is assembled after the explode, not in an interpreted lambda
-    pairs = exploded_word_ngrams(documents, width, out_col="_g")
+    pairs = exploded_word_ngrams(documents, GRAM_WIDTH, out_col="_g")
     gram = F.md5(F.col("_g")) if hash_grams else F.col("_g")
     return (
         pairs.select("key", gram.alias("gram"))
@@ -367,15 +370,15 @@ def _doc_gram_counts(documents: DataFrame, width: int, hash_grams: bool = False)
     )
 
 
-def repeated_grams(documents: DataFrame, width: int = 8) -> DataFrame:
-    """(gram, n_docs, n_occ) for width-word grams appearing in >= 2
+def repeated_grams(documents: DataFrame) -> DataFrame:
+    """(gram, n_docs, n_occ) for GRAM_WIDTH-word grams appearing in >= 2
     DISTINCT documents — the corpus boilerplate/memorization report.
 
     Scale shape: two map-side-partial shuffles ((key, gram) then gram);
     n_docs is a COUNT(*) over the pre-aggregated per-document rows, so no
     distinct-aggregate expand ever touches the corpus-sized gram stream.
     The >= 2 filter bounds the output to actually-repeated grams."""
-    dg = _doc_gram_counts(documents, width)
+    dg = _doc_gram_counts(documents)
     return (
         dg.groupBy("gram")
         .agg(
@@ -386,13 +389,13 @@ def repeated_grams(documents: DataFrame, width: int = 8) -> DataFrame:
     )
 
 
-def duplicated_span_stats(documents: DataFrame, width: int = 8) -> DataFrame:
+def duplicated_span_stats(documents: DataFrame) -> DataFrame:
     """Per-document duplicated-span statistics: (key, n_grams,
     n_dup_grams, n_dup_positions) where a gram is 'duplicated' if it occurs
     in >= 2 distinct documents. n_grams counts all gram positions,
     n_dup_grams the distinct duplicated grams, n_dup_positions the
     positions covered by them — the inputs to a span-level dedup or
-    boilerplate-ratio filter. Docs shorter than `width` words are absent.
+    boilerplate-ratio filter. Docs shorter than GRAM_WIDTH words are absent.
 
     Scale shape: the (doc, gram) level aggregates before anything joins;
     the per-gram n_docs table has ONE row per distinct gram, so the
@@ -413,7 +416,7 @@ def duplicated_span_stats(documents: DataFrame, width: int = 8) -> DataFrame:
     explode once, not once per invocation."""
     from pyspark.storagelevel import StorageLevel
 
-    dg = _doc_gram_counts(documents, width, hash_grams=True).persist(StorageLevel.MEMORY_AND_DISK)
+    dg = _doc_gram_counts(documents, hash_grams=True).persist(StorageLevel.MEMORY_AND_DISK)
     gd = dg.groupBy("gram").agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
     dup = F.col("n_docs") >= F.lit(2)
     return (
@@ -883,15 +886,15 @@ def bpe_phrase_merge(documents: DataFrame) -> DataFrame:
         )
     )
 
-def vocab_coverage(documents: DataFrame, vocab_size: int = 256) -> DataFrame:
-    """Tokenizer-vocabulary coverage: build the top-`vocab_size` corpus
+def vocab_coverage(documents: DataFrame) -> DataFrame:
+    """Tokenizer-vocabulary coverage: build the top-VOCAB_SIZE corpus
     vocabulary (count DESC, term ASC — deterministic), then per document
     report total tokens, in-vocab tokens, OOV count and the coverage
     ratio (one division of exact BIGINTs). The stat every tokenizer
     migration checks before retraining.
 
     Scale shape: vocab = one term-keyed map-side-partial aggregation +
-    TakeOrdered(vocab_size); the coverage pass is a broadcast LEFT join
+    TakeOrdered(VOCAB_SIZE); the coverage pass is a broadcast LEFT join
     of the (doc, term, count) stream against the tiny vocab."""
     occ = (
         doc_term_pairs(documents)
@@ -903,7 +906,7 @@ def vocab_coverage(documents: DataFrame, vocab_size: int = 256) -> DataFrame:
         occ.groupBy("term")
         .agg(F.sum("cnt").alias("tot"))
         .orderBy(F.col("tot").desc(), F.col("term"))
-        .limit(vocab_size)
+        .limit(VOCAB_SIZE)
         .select("term", F.lit(True).alias("in_vocab"))
     )
     return (

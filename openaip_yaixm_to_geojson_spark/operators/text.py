@@ -21,9 +21,11 @@ P90_NUM, P90_DEN = 9, 10  # the p of the lang_p90_chars and sampled_p90_chars qu
 REPETITION_N = 2  # word n-gram width of ngram_repetition / ngram_repetition_local
 CONTAMINATION_N = 8  # word n-gram width of contamination / bloom_contamination
 STRATIFIED_QUOTA = 40  # rows per language of stratified_sample
+STRATIFIED_DELTA = 0.5  # relative half-width of stratified_sample's ranked band
 QUERY_CHUNK_SIZE, QUERY_CHUNK_STRIDE = 32, 24  # the chunk_documents query's window
 PACK_CAPACITY, PACK_STREAMS = 512, 8  # pack_documents' window tokens and streams
 WEIGHTED_RATE, WEIGHTED_LENGTH_CAP = 0.5, 2000  # weighted_sample's inclusion rule
+MIXTURE_BUDGET = 1_000_000  # tokens mixture_allocate and temperature_mixture split
 
 # tiny stopword inventories; enough signal for a deterministic heuristic
 LANG_STOPWORDS = {
@@ -437,7 +439,7 @@ def lang_median_chars(documents: DataFrame) -> DataFrame:
         "p_chars", "median_chars"
     )
 
-def stratified_sample(documents: DataFrame, delta: float = 0.5) -> DataFrame:
+def stratified_sample(documents: DataFrame) -> DataFrame:
     """EXACT per-`lang` quota sample: the `min(STRATIFIED_QUOTA, n_g)` rows with the
     smallest (md5-hash, key) per group — deterministic, parallelism- and
     arrival-order-independent, and with exact stratum sizes (Bernoulli
@@ -449,20 +451,21 @@ def stratified_sample(documents: DataFrame, delta: float = 0.5) -> DataFrame:
     stratum is billions of rows, so that plan is a skew bomb. Instead,
     banded rank selection: the hash is uniform on [0, 2^32), so the
     quota'th smallest hash concentrates at (quota/n_g)*2^32. Rows below
-    the (1-delta) band edge are kept OUTRIGHT (no sort — a filter); only
-    the [t_low, t_high) band — O(delta * quota) rows — is ranked to fill
-    the remainder exactly. Group counts are a broadcast agg. The band
-    edges are deterministic, and a cheap count validates them: if a band
-    ever misses (astronomically unlikely for real quotas, impossible to
-    silently tolerate either way) this RAISES rather than returning an
-    inexact stratum (same convergence contract as duplicate_clusters).
+    the (1-STRATIFIED_DELTA) band edge are kept OUTRIGHT (no sort — a
+    filter); only the [t_low, t_high) band — O(delta * quota) rows — is
+    ranked to fill the remainder exactly. Group counts are a broadcast
+    agg. The band edges are deterministic, and a cheap count validates
+    them: if a band ever misses (astronomically unlikely for real quotas,
+    impossible to silently tolerate either way) this RAISES rather than
+    returning an inexact stratum (same convergence contract as
+    duplicate_clusters).
     Strata where quota >= n_g skip everything (keep all).
 
     Returns (key, group) — the selected identity rows, joinable back to
     payloads so document text never rides through the ranking shuffle."""
     from pyspark.sql import Window
 
-    M, quota = float(2**32), STRATIFIED_QUOTA
+    M, quota, delta = float(2**32), STRATIFIED_QUOTA, STRATIFIED_DELTA
     h = md5_prefix_int(F.col("doc_id").cast("string"))
     keyed = documents.select(
         F.col("doc_id").alias("key"), F.col("lang").alias("grp"), h.alias("h")
@@ -508,7 +511,7 @@ def stratified_sample(documents: DataFrame, delta: float = 0.5) -> DataFrame:
             raise RuntimeError(
                 f"stratified_sample band miss for group {r['grp']!r}: "
                 f"n_below={r['n_below']} n_band={r['n_band']} quota={quota}; "
-                f"widen delta"
+                f"widen STRATIFIED_DELTA"
             )
     from pyspark.sql import types as T
 
@@ -627,11 +630,11 @@ def lang_percentile_chars(documents: DataFrame, p_num: int, p_den: int) -> DataF
     )
 
 
-def mixture_allocate(documents: DataFrame, budget: int, weight_col: str = "n_chars") -> DataFrame:
-    """Training-mixture budget allocation: split an integer token budget
-    across strata proportionally to their weight using Hamilton's
-    largest-remainder method — EXACT integer arithmetic end to end
-    (floor-quota via div, the leftover seats to the largest remainders,
+def mixture_allocate(documents: DataFrame, weight_col: str = "n_chars") -> DataFrame:
+    """Training-mixture budget allocation: split the integer token budget
+    MIXTURE_BUDGET across strata proportionally to their weight using
+    Hamilton's largest-remainder method — EXACT integer arithmetic end to
+    end (floor-quota via div, the leftover seats to the largest remainders,
     ties broken by group name), so quotas always sum to the budget and the
     result is a pure function of the data. The float alternative
     (round(budget * w/T)) neither sums correctly nor hash-gates.
@@ -651,10 +654,10 @@ def mixture_allocate(documents: DataFrame, budget: int, weight_col: str = "n_cha
             # wraps in non-ANSI Spark while DuckDB raises — DECIMAL keeps
             # the product exact to 38 digits; div returns BIGINT, the
             # remainder is only an ordering key
-            F.expr(f"CAST(CAST({budget} AS DECIMAL(38,0)) * wt div total AS BIGINT)").alias(
+            F.expr(f"CAST(CAST({MIXTURE_BUDGET} AS DECIMAL(38,0)) * wt div total AS BIGINT)").alias(
                 "base"
             ),
-            F.expr(f"(CAST({budget} AS DECIMAL(38,0)) * wt) % total").alias("rem"),
+            F.expr(f"(CAST({MIXTURE_BUDGET} AS DECIMAL(38,0)) * wt) % total").alias("rem"),
         )
     )
     from pyspark.sql import Window
@@ -668,7 +671,7 @@ def mixture_allocate(documents: DataFrame, budget: int, weight_col: str = "n_cha
             "wt",
             "base",
             rank.alias("rem_rank"),
-            (F.lit(budget).cast("bigint") - F.sum("base").over(win_all)).alias("leftover"),
+            (F.lit(MIXTURE_BUDGET).cast("bigint") - F.sum("base").over(win_all)).alias("leftover"),
         )
         .select(
             F.col("grp").alias("source"),
@@ -1105,7 +1108,7 @@ def readability(documents: DataFrame) -> DataFrame:
     )
 
 
-def temperature_mixture(documents: DataFrame, budget: int) -> DataFrame:
+def temperature_mixture(documents: DataFrame) -> DataFrame:
     """Temperature-scaled mixture allocation: Hamilton quotas over TEMPERED
     weights w^(1/T) — the up/down-weighting every multi-source training mix
     applies before sampling. The temperature is T=2, whose power is
@@ -1119,7 +1122,7 @@ def temperature_mixture(documents: DataFrame, budget: int) -> DataFrame:
     w = documents.groupBy(F.col("source").alias("grp")).agg(F.sum("n_chars").alias("wt"))
     tempered = F.floor(F.sqrt(F.col("wt").cast("double")) * F.lit(1024.0) + F.lit(0.5)).cast("bigint")
     tw = w.select(F.col("grp").alias("source"), tempered.alias("wt_t"))
-    return mixture_allocate(tw, budget, weight_col="wt_t")
+    return mixture_allocate(tw, weight_col="wt_t")
 
 
 SPAN_WORDS = 8  # word n-gram width of span_scrub

@@ -30,6 +30,7 @@ PAT_PARAGRAPH = r"(?s)<p[^>]*>(.*?)</p>"
 ENTITIES = [("&lt;", "<"), ("&gt;", ">"), ("&quot;", '"'), ("&#39;", "'"), ("&amp;", "&")]
 PAT_HOST = r"^[a-z]+://([^/]+)"
 HOST_CAP = 3  # pages host_cap keeps per host
+CO_CITATION_HOSTS = 32  # distinct hosts per page that co_citation pairs
 
 
 def strip_markup_col(html_text: Column) -> Column:
@@ -441,14 +442,14 @@ def host_components(pages: DataFrame) -> DataFrame:
     )
 
 
-def co_citation(pages: DataFrame, max_hosts_per_page: int = 32) -> DataFrame:
+def co_citation(pages: DataFrame) -> DataFrame:
     """Co-citation counts: pairs of hosts linked from the SAME page,
     counted across pages — the classic relatedness signal (Small 1973 /
     HITS-adjacent) crawl analytics build host similarity from. Output
     (host_a, host_b, n_pages) with host_a < host_b.
 
     Scale shape: the quadratic is BOUNDED BY CONSTRUCTION — each page
-    keeps at most `max_hosts_per_page` distinct hosts (deterministic md5
+    keeps at most CO_CITATION_HOSTS distinct hosts (deterministic md5
     order, the host_cap precedent) before pairing, so a link-farm page
     with 10^4 hrefs contributes at most C(32,2) pairs, not 5x10^7. The
     pair explosion happens in a per-page self-join keyed on url (each key
@@ -465,7 +466,7 @@ def co_citation(pages: DataFrame, max_hosts_per_page: int = 32) -> DataFrame:
     w = Window.partitionBy("key").orderBy(F.md5(F.concat("key", F.lit("|"), "host")))
     capped = (
         hosts.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= max_hosts_per_page)
+        .where(F.col("rn") <= CO_CITATION_HOSTS)
         .drop("rn")
         .localCheckpoint()  # feeds both self-join sides; re-running the
         # explode + distinct + window per side would double the heavy work
@@ -553,7 +554,7 @@ def host_bfs_depth(pages: DataFrame) -> DataFrame:
 
     g = host_link_graph(pages).select("src_host", "dst_host").localCheckpoint()
     seed = g.select(F.least(F.min("src_host"), F.min("dst_host")).alias("m")).collect()[0]["m"]
-    return bfs_depth(g, seed, src_col="src_host", dst_col="dst_host").select(
+    return bfs_depth(g, seed).select(
         F.col("node").alias("host"), F.col("depth").cast("int").alias("depth")
     )
 

@@ -30,7 +30,7 @@ from .functions.classmap import COMBO_TABLE, RULE_TYPES, TYPE_ONLY, TYPE_RENAME
 from .functions.convert_local import fixture_polygons
 from .operators import dedup, events, graph, knn, multimodal, relational, similarity, spatial, terms, text, tiles, web
 from .plans import pipeline
-from .sources import warc
+from .sources import pages, warc
 from .sources.pages import pages_cte, warc_ts_seconds_sql
 
 # ---------------------------------------------------------------------------
@@ -918,7 +918,7 @@ SELECT doc_id, concat_ws('|', {cols}) AS signature FROM sig"""
 
 
 def sql_minhash_lsh_pairs(source: str = "documents") -> str:
-    rows_per_band = dedup.MINHASH_NUM_HASHES // 8
+    rows_per_band = dedup.MINHASH_NUM_HASHES // dedup.MINHASH_BANDS
     sig_exprs = ", ".join(f"{e} AS h{j}" for j, e in enumerate(_minhash_exprs()))
     sig_list = "[" + ", ".join(f"h{j}" for j in range(dedup.MINHASH_NUM_HASHES)) + "]"
     return f"""
@@ -928,7 +928,7 @@ sig AS (SELECT key, shingles, {sig_exprs} FROM hashed),
 banded AS (
   SELECT key, shingles, b.band_idx,
          array_to_string(({sig_list})[b.band_idx * {rows_per_band} + 1 : (b.band_idx + 1) * {rows_per_band}], '|') AS band_key
-  FROM sig, (SELECT UNNEST(generate_series(0, 7)) AS band_idx) b
+  FROM sig, (SELECT UNNEST(generate_series(0, {dedup.MINHASH_BANDS - 1})) AS band_idx) b
 ),
 cands AS (
   SELECT DISTINCT a.key AS key_a, b.key AS key_b, a.shingles AS sh_a, b.shingles AS sh_b
@@ -948,7 +948,8 @@ def sql_lsh_recall_monitor() -> str:
     n_missed is computed by an ANTI-join of truth against found here (the
     engine uses n_true - n_found; equal because verified LSH pairs are a
     subset of truth), keeping the oracle independent."""
-    sample = f"(SELECT * FROM documents WHERE {_hex8_sql('CAST(doc_id AS VARCHAR)')} % 4 = 0)"
+    hex8 = _hex8_sql("CAST(doc_id AS VARCHAR)")
+    sample = f"(SELECT * FROM documents WHERE {hex8} % {dedup.LSH_RECALL_SAMPLE_MOD} = 0)"
     jac = (
         "CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)"
         " / CAST(len(list_distinct(list_concat(a.shingles, b.shingles))) AS DOUBLE)"
@@ -1000,14 +1001,14 @@ WHERE CAST(len(list_intersect(a.shingles, b.shingles)) AS DOUBLE)
 def sql_simhash_pairs() -> str:
     """Exhaustive SimHash near-dup pairs: bit_count over the XOR of the
     recomputed 16-bit simhashes (the engine's banded join must equal the
-    all-pairs scan — banding is pigeonhole-lossless for hamming <= 3)."""
+    all-pairs scan — banding is pigeonhole-lossless for the hamming budget)."""
     sim = sql_simhash()
     return f"""
 WITH s AS ({sim})
 SELECT a.doc_id AS key_a, b.doc_id AS key_b,
        CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
 FROM s a JOIN s b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 3"""
+WHERE bit_count(xor(a.simhash, b.simhash)) <= {dedup.SIMHASH_MAX_HAMMING}"""
 
 
 def sql_dedup_clusters() -> str:
@@ -1081,14 +1082,14 @@ def sql_simhash64() -> str:
 def sql_simhash64_pairs() -> str:
     """Exhaustive 64-bit SimHash near-dup pairs: bit_count over the XOR of
     the recomputed sketches (the engine's banded join must equal the
-    all-pairs scan — banding is pigeonhole-lossless for hamming <= 3)."""
+    all-pairs scan — banding is pigeonhole-lossless for the hamming budget)."""
     sim = sql_simhash64()
     return f"""
 WITH s AS ({sim})
 SELECT a.doc_id AS key_a, b.doc_id AS key_b,
        CAST(bit_count(xor(a.simhash64, b.simhash64)) AS INTEGER) AS hamming
 FROM s a JOIN s b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash64, b.simhash64)) <= 3"""
+WHERE bit_count(xor(a.simhash64, b.simhash64)) <= {dedup.SIMHASH_MAX_HAMMING}"""
 
 
 def _dot_expr(a: str, b: str) -> str:
@@ -1366,7 +1367,7 @@ def sql_multimodal_features() -> str:
     features = ",\n       ".join(feature_terms)
     return f"""
 WITH m AS (
-  SELECT UNNEST(generate_series(0, 499)) AS media_id
+  SELECT UNNEST(generate_series(0, {multimodal.MEDIA_ROWS - 1})) AS media_id
 ),
 p AS (
   SELECT media_id,
@@ -1444,7 +1445,7 @@ def sql_warc_read() -> str:
 ),
 h AS (SELECT fid, rid, {html} AS html FROM g)
 SELECT 'https://warc.example/' || CAST(fid AS VARCHAR) || '/' || CAST(rid AS VARCHAR) AS url,
-       CAST({warc.WARC_EPOCH} + fid * 86400 + rid * 37 AS BIGINT) AS warc_ts_s,
+       CAST({pages.CRAWL_EPOCH} + fid * 86400 + rid * 37 AS BIGINT) AS warc_ts_s,
        CAST(length(html) AS BIGINT) AS n_bytes,
        md5(html) AS html_md5
 FROM h"""
@@ -1609,7 +1610,7 @@ def sql_multimodal_real_features() -> str:
     img_mean = lambda c: f"(s{c} / CAST(64.0 AS DOUBLE))"  # noqa: E731
     img_var = lambda c: f"((ss{c} / CAST(64.0 AS DOUBLE)) - {img_mean(c)} * {img_mean(c)})"  # noqa: E731
     return f"""
-WITH m AS (SELECT UNNEST(generate_series(0, 499)) AS media_id),
+WITH m AS (SELECT UNNEST(generate_series(0, {multimodal.MEDIA_ROWS - 1})) AS media_id),
 px AS (
   SELECT media_id, t.j, CAST({px_byte} AS BIGINT) AS v
   FROM (SELECT media_id FROM m WHERE media_id % 3 = 0) i,
@@ -2116,7 +2117,7 @@ def sql_multimodal_frames() -> str:
     return f"""WITH m AS (
   SELECT range AS media_id,
          concat('payload-', md5(CAST(range AS VARCHAR))) AS p
-  FROM range(500) WHERE range % 3 = 2
+  FROM range({multimodal.MEDIA_ROWS}) WHERE range % 3 = 2
 ),
 f AS (SELECT media_id, unnest(range(0, 16, {multimodal.FRAME_EVERY_K})) AS frame_idx, p FROM m)
 SELECT media_id, CAST(frame_idx AS INTEGER) AS frame_idx,
@@ -2260,13 +2261,14 @@ FROM p GROUP BY term"""
 
 def _doc_gram_counts_cte() -> str:
     """Shared (doc, gram, n_pos) CTE body for the repeated-span oracles:
-    positional 8-word grams via list slicing (DuckDB slices are
+    positional GRAM_WIDTH-word grams via list slicing (DuckDB slices are
     1-based, end-inclusive), counts exact BIGINT."""
+    n = terms.GRAM_WIDTH
     return f"""w AS (SELECT doc_id AS key, {_WORDS} AS words FROM documents),
 g AS (
-  SELECT key, UNNEST(list_transform(generate_series(1, len(words) - 7),
-                                    i -> array_to_string(words[i : i + 7], ' '))) AS gram
-  FROM w WHERE len(words) >= 8
+  SELECT key, UNNEST(list_transform(generate_series(1, len(words) - {n - 1}),
+                                    i -> array_to_string(words[i : i + {n - 1}], ' '))) AS gram
+  FROM w WHERE len(words) >= {n}
 ),
 dg AS (SELECT key, gram, CAST(COUNT(*) AS BIGINT) AS n_pos FROM g GROUP BY key, gram)"""
 
@@ -2748,13 +2750,13 @@ def sql_events_moving_stats() -> str:
     """events.events_moving_stats twin: the same ROWS frame over
     (ts, event_id) order, DECIMAL-exact frame sum, one DOUBLE cast at the
     boundary (both engines round the exact decimal once)."""
-    return """
+    return f"""
 SELECT event_id, user_id,
        CAST(COUNT(*) OVER w AS INTEGER) AS frame_n,
        CAST(CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER w AS DECIMAL(38,2)) AS DOUBLE) AS moving_sum
 FROM events
 WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN 4 PRECEDING AND CURRENT ROW)"""
+             ROWS BETWEEN {events.MOVING_FRAME_ROWS - 1} PRECEDING AND CURRENT ROW)"""
 
 
 def sql_events_funnel() -> str:
@@ -2800,23 +2802,30 @@ SELECT lang, n_chars AS p_chars, cnt AS n_docs
 FROM r WHERE rn = ({p_num} * cnt + {p_den - 1}) // {p_den}"""
 
 
-def sql_mixture_allocate() -> str:
-    """text.mixture_allocate twin: same largest-remainder integer
-    arithmetic (floor quota, remainder rank desc with name tie-break)."""
-    return """WITH w AS (SELECT source AS grp, CAST(SUM(n_chars) AS BIGINT) AS wt
-           FROM documents GROUP BY 1),
-t AS (SELECT CAST(SUM(wt) AS BIGINT) AS total FROM w),
+def _hamilton_quotas_sql() -> str:
+    """The largest-remainder split of text.MIXTURE_BUDGET over a `w`
+    (grp, wt) CTE: floor quota, remainder rank desc with name tie-break."""
+    b = text.MIXTURE_BUDGET
+    return f"""t AS (SELECT CAST(SUM(wt) AS BIGINT) AS total FROM w),
 s AS (SELECT grp, wt,
-             CAST((CAST(1000000 AS HUGEINT) * wt) // total AS BIGINT) AS base,
-             (CAST(1000000 AS HUGEINT) * wt) % total AS rem
+             CAST((CAST({b} AS HUGEINT) * wt) // total AS BIGINT) AS base,
+             (CAST({b} AS HUGEINT) * wt) % total AS rem
       FROM w CROSS JOIN t),
 r AS (SELECT grp, wt, base,
              ROW_NUMBER() OVER (ORDER BY rem DESC, grp) AS rem_rank,
-             CAST(1000000 AS BIGINT) - SUM(base) OVER () AS leftover
+             CAST({b} AS BIGINT) - SUM(base) OVER () AS leftover
       FROM s)
 SELECT grp AS source, wt AS weight,
        CAST(base + CASE WHEN rem_rank <= leftover THEN 1 ELSE 0 END AS BIGINT) AS quota
 FROM r"""
+
+
+def sql_mixture_allocate() -> str:
+    """text.mixture_allocate twin: same largest-remainder integer
+    arithmetic."""
+    return f"""WITH w AS (SELECT source AS grp, CAST(SUM(n_chars) AS BIGINT) AS wt
+           FROM documents GROUP BY 1),
+{_hamilton_quotas_sql()}"""
 
 
 _PII_INJECT_SQL = """SELECT doc_id,
@@ -3205,7 +3214,7 @@ def sql_edit_distance_pairs() -> str:
     via raw substr margin equality (no md5 digests, no key explode) UNIONed
     across the prefix / suffix / short-bucket sources, then DuckDB's
     un-thresholded levenshtein verifies. Same recall contract."""
-    d, c = 20, dedup.EDIT_BLOCK_CHARS
+    d, c = dedup.EDIT_MAX_DISTANCE, dedup.EDIT_BLOCK_CHARS
     return f"""WITH d AS (
   SELECT doc_id, text, length(text) AS n FROM documents
 ),
@@ -3528,12 +3537,13 @@ def sql_image_patches() -> str:
     px_byte = _md5_byte_sql(
         "concat(CAST(media_id AS VARCHAR), '-px-', CAST(j // 16 AS VARCHAR))", "j % 16"
     )
-    np_ = 16
+    p = multimodal.IMAGE_PATCH
+    np_ = p * p
     mean = lambda c: f"CAST(CAST(s{c} / CAST({np_}.0 AS DOUBLE) AS FLOAT) AS DOUBLE)"  # noqa: E731
-    return f"""WITH m AS (SELECT UNNEST(generate_series(0, 499)) AS media_id),
+    return f"""WITH m AS (SELECT UNNEST(generate_series(0, {multimodal.MEDIA_ROWS - 1})) AS media_id),
 px AS (
   SELECT media_id, t.j, CAST({px_byte} AS BIGINT) AS v,
-         ((t.j // 3) // 8) // 4 AS pr, ((t.j // 3) % 8) // 4 AS pc,
+         ((t.j // 3) // 8) // {p} AS pr, ((t.j // 3) % 8) // {p} AS pc,
          t.j % 3 AS c
   FROM (SELECT media_id FROM m WHERE media_id % 3 = 0) i,
        (SELECT UNNEST(generate_series(0, {npx - 1})) AS j) t
@@ -3647,7 +3657,7 @@ capped AS (
     SELECT key, host,
            ROW_NUMBER() OVER (PARTITION BY key ORDER BY md5(key || '|' || host)) AS rn
     FROM hosts
-  ) WHERE rn <= 32
+  ) WHERE rn <= {web.CO_CITATION_HOSTS}
 )
 SELECT a.host AS host_a, b.host AS host_b, COUNT(*) AS n_pages
 FROM capped a JOIN capped b ON a.key = b.key AND a.host < b.host
@@ -3728,7 +3738,7 @@ FROM g WHERE n_sources >= 2"""
 def sql_returned_item_revenue() -> str:
     """relational.returned_item_revenue twin: same DECIMAL-exact revenue,
     ordered on the exact decimal before the single DOUBLE cast."""
-    return """WITH li AS (
+    return f"""WITH li AS (
   SELECT l_orderkey,
          CAST(l_extendedprice AS DECIMAL(18,2))
            * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2))) AS rev
@@ -3746,7 +3756,7 @@ pc AS (
 SELECT c_custkey, c_name, n_name, CAST(revd AS DOUBLE) AS revenue, n_items
 FROM pc JOIN customer ON c_custkey = o_custkey
         JOIN nation ON n_nationkey = c_nationkey
-ORDER BY revd DESC, c_custkey LIMIT 20"""
+ORDER BY revd DESC, c_custkey LIMIT {relational.RETURNED_TOP_K}"""
 
 
 def sql_label_centroid_distances() -> str:
@@ -3861,9 +3871,10 @@ def sql_audio_frames() -> str:
         "(2 * j + 1) % 16",
     )
     f32 = lambda e: f"CAST(CAST({e} AS FLOAT) AS DOUBLE)"  # noqa: E731
-    mean = "(s / CAST(32.0 AS DOUBLE))"
-    var = f"((ss / CAST(32.0 AS DOUBLE)) - {mean} * {mean})"
-    return f"""WITH m AS (SELECT UNNEST(generate_series(0, 499)) AS media_id),
+    fr = multimodal.AUDIO_FRAME
+    mean = f"(s / CAST({fr}.0 AS DOUBLE))"
+    var = f"((ss / CAST({fr}.0 AS DOUBLE)) - {mean} * {mean})"
+    return f"""WITH m AS (SELECT UNNEST(generate_series(0, {multimodal.MEDIA_ROWS - 1})) AS media_id),
 sm AS (
   SELECT media_id, t.j,
          CAST({lo} + 256 * {hi} - (CASE WHEN {lo} + 256 * {hi} >= 32768 THEN 65536 ELSE 0 END) AS BIGINT) AS v
@@ -3871,12 +3882,12 @@ sm AS (
        (SELECT UNNEST(generate_series(0, {nsm - 1})) AS j) t
 ),
 g AS (
-  SELECT media_id, CAST(j // 32 AS INTEGER) AS frame_idx,
+  SELECT media_id, CAST(j // {fr} AS INTEGER) AS frame_idx,
          CAST(SUM(v) AS BIGINT) AS s, CAST(SUM(v * v) AS BIGINT) AS ss,
          CAST(MIN(v) AS INTEGER) AS s_min, CAST(MAX(v) AS INTEGER) AS s_max
   FROM sm GROUP BY 1, 2
 )
-SELECT media_id, frame_idx, CAST(32 AS INTEGER) AS n_samples,
+SELECT media_id, frame_idx, CAST({fr} AS INTEGER) AS n_samples,
        s AS s_sum, ss AS s_sumsq, s_min, s_max,
        {f32(mean)} AS mean, {f32(var)} AS var
 FROM g"""
@@ -3911,7 +3922,7 @@ def sql_events_stickiness() -> str:
     COUNT(DISTINCT) over a BETWEEN self-join (vs Spark's dedupe-explode
     -> COUNT(*))."""
     day = 86400
-    span = 29 * day
+    span = (events.STICKINESS_WINDOW_DAYS - 1) * day
     return f"""WITH ud AS (
   SELECT DISTINCT user_id,
          CAST(floor(epoch(ts)) AS BIGINT) - CAST(floor(epoch(ts)) AS BIGINT) % {day} AS d
@@ -4313,18 +4324,7 @@ def sql_temperature_mixture() -> str:
            FROM documents GROUP BY 1),
 w AS (SELECT grp, CAST(floor(sqrt(CAST(wt0 AS DOUBLE)) * {_dbl(1024.0)} + {_dbl(0.5)}) AS BIGINT) AS wt
       FROM w0),
-t AS (SELECT CAST(SUM(wt) AS BIGINT) AS total FROM w),
-s AS (SELECT grp, wt,
-             CAST((CAST(1000000 AS HUGEINT) * wt) // total AS BIGINT) AS base,
-             (CAST(1000000 AS HUGEINT) * wt) % total AS rem
-      FROM w CROSS JOIN t),
-r AS (SELECT grp, wt, base,
-             ROW_NUMBER() OVER (ORDER BY rem DESC, grp) AS rem_rank,
-             CAST(1000000 AS BIGINT) - SUM(base) OVER () AS leftover
-      FROM s)
-SELECT grp AS source, wt AS weight,
-       CAST(base + CASE WHEN rem_rank <= leftover THEN 1 ELSE 0 END AS BIGINT) AS quota
-FROM r"""
+{_hamilton_quotas_sql()}"""
 
 
 def sql_web_prefilter() -> str:
@@ -4458,7 +4458,7 @@ WITH occ AS (
 ),
 vocab AS (SELECT term FROM (
             SELECT term, SUM(cnt) AS tot FROM occ GROUP BY term
-            ORDER BY tot DESC, term LIMIT 256)),
+            ORDER BY tot DESC, term LIMIT {terms.VOCAB_SIZE})),
 j AS (SELECT occ.key, occ.cnt, (vocab.term IS NOT NULL) AS iv
       FROM occ LEFT JOIN vocab ON vocab.term = occ.term)
 SELECT key AS doc_id,

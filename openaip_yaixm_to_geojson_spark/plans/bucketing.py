@@ -24,8 +24,13 @@ from ..operators.spatial import (
     winding_col,
 )
 
+# the catalog tables of the bucketed pages and cover, and their bucket count
+PAGES_TABLE = "gate_pages_bucketed"
+COVER_TABLE = "gate_cover_bucketed"
+N_BUCKETS = 8
 
-def write_bucketed(df: DataFrame, table: str, n_buckets: int = 16) -> None:
+
+def write_bucketed(df: DataFrame, table: str) -> None:
     """Persist a table bucketed+sorted on `cell`, the join key (Iceberg-style
     layout substitute: catalog-managed parquet with bucket metadata).
 
@@ -67,38 +72,37 @@ def write_bucketed(df: DataFrame, table: str, n_buckets: int = 16) -> None:
         shutil.rmtree(location, ignore_errors=True)
     (
         df.write.mode("overwrite")
-        .bucketBy(n_buckets, "cell")
+        .bucketBy(N_BUCKETS, "cell")
         .sortBy("cell")
         .format("parquet")
         .saveAsTable(table)
     )
 
 
-def bucketed_pages(spark: SparkSession, pages: DataFrame, table: str = "pages_bucketed",
-                   n_buckets: int = 16) -> DataFrame:
-    """Pages with their DEFAULT_JOIN_RES `cell`, bucketed on it."""
+def bucketed_pages(spark: SparkSession, pages: DataFrame) -> DataFrame:
+    """Pages with their DEFAULT_JOIN_RES `cell`, bucketed on it into PAGES_TABLE."""
     cells = pages.withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), DEFAULT_JOIN_RES))
-    write_bucketed(cells, table, n_buckets)
-    return spark.table(table)
+    write_bucketed(cells, PAGES_TABLE)
+    return spark.table(PAGES_TABLE)
 
 
-def bucketed_cover(spark: SparkSession, polygons, table: str = "cover_bucketed",
-                   n_buckets: int = 16) -> DataFrame:
+def bucketed_cover(spark: SparkSession, polygons) -> DataFrame:
     """DEFAULT_JOIN_RES cover table of a fixture-style list or a polygons
     DataFrame, built by `polygon_cover` (a table through the distributed
     polyfill, so the polygon side never loops on the driver). Pages and
-    cover share the resolution, so their cells always meet."""
+    cover share the resolution, so their cells always meet. Written to
+    COVER_TABLE."""
     cover = polygon_cover(spark, polygons)
-    write_bucketed(cover, table, n_buckets)
-    return spark.table(table)
+    write_bucketed(cover, COVER_TABLE)
+    return spark.table(COVER_TABLE)
 
 
-def colocated_spatial_join(spark: SparkSession, pages_table: str, cover_table: str) -> DataFrame:
-    """Shuffle-free spatial join over two tables bucketed on `cell`:
-    sort-merge join uses the bucket layout directly (no Exchange), then the
-    same winding-number refine over the cover's band edges `spatial_join`
-    uses."""
-    pages = spark.table(pages_table)
-    cover = spark.table(cover_table)
+def colocated_spatial_join(spark: SparkSession) -> DataFrame:
+    """Shuffle-free spatial join of PAGES_TABLE and COVER_TABLE, both
+    bucketed on `cell`: sort-merge join uses the bucket layout directly
+    (no Exchange), then the same winding-number refine over the cover's
+    band edges `spatial_join` uses."""
+    pages = spark.table(PAGES_TABLE)
+    cover = spark.table(COVER_TABLE)
     candidates = pages.join(cover.hint("merge"), "cell")
     return candidates.where(winding_col(F.col("lon"), F.col("lat"), F.col("edges")) != 0).select(*OUT_COLS)

@@ -20,6 +20,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+CRAWL_EPOCH = 1704067200  # 2024-01-01T00:00:00Z: page fetch times and WARC records start here
+CRAWL_SPAN_S = 31536000  # page fetch times fall within these 365 days after CRAWL_EPOCH
+
+
 def _digit(hash_col: str, i: int, weight: int) -> str:
     return f"CAST(ascii(substring({hash_col}, {i}, 1)) AS BIGINT) * {weight}"
 
@@ -92,7 +96,7 @@ def warc_ts_seconds_sql(hash_col: str) -> str:
     13-17 — identical arithmetic in Spark and DuckDB (the engine's regular
     warc_ts uses xxhash64, which DuckDB lacks, so oracle-graded
     time-derived queries use this column instead)."""
-    return f"(CAST(1704067200 AS BIGINT) + {_hash_expr(hash_col, 13)} % 31536000)"
+    return f"(CAST({CRAWL_EPOCH} AS BIGINT) + {_hash_expr(hash_col, 13)} % {CRAWL_SPAN_S})"
 
 
 def url_sql(dialect: str) -> str:
@@ -124,34 +128,20 @@ def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView("documents")
     return spark.sql(pages_cte("spark")).withColumn(
-        "warc_ts", F.timestamp_seconds(F.lit(1704067200) + F.xxhash64("url") % 31536000)
+        "warc_ts", F.timestamp_seconds(F.lit(CRAWL_EPOCH) + F.xxhash64("url") % CRAWL_SPAN_S)
     )
 
 
-def synth_pages(spark: SparkSession, n: int, with_payload: bool = True) -> DataFrame:
-    """Deterministic synthetic pages at arbitrary scale for benchmarks —
-    spark.range + expressions only (fully JVM-side, uniform partitions,
-    identical content at any parallelism)."""
+def synth_pages(spark: SparkSession, n: int) -> DataFrame:
+    """Deterministic synthetic (url, lat, lon) pages at arbitrary scale for
+    benchmarks — spark.range + expressions only (fully JVM-side, uniform
+    partitions, identical content at any parallelism)."""
     df = spark.range(n).select(
         F.concat(F.lit("https://bench.example/"), F.col("id").cast("string")).alias("url")
     )
-    df = (
+    return (
         df.withColumn("uh", F.md5("url"))
         .withColumn("lat", F.expr(_coord_sql("uh", "lat")))
         .withColumn("lon", F.expr(_coord_sql("uh", "lon")))
         .drop("uh")
     )
-    if with_payload:
-        df = (
-            df.withColumn("text", F.concat(F.lit("synthetic page body for "), F.col("url")))
-            .withColumn(
-                "lang",
-                F.element_at(
-                    F.array(*[F.lit(x) for x in ["en", "de", "fr", "es", "it"]]),
-                    ((F.xxhash64("url") % 5 + 5) % 5 + 1).cast("int"),
-                ),
-            )
-            .withColumn("warc_ts", F.timestamp_seconds(F.lit(1704067200) + F.xxhash64("url") % 31536000))
-            .withColumn("html", F.encode(F.col("text"), "utf-8"))
-        )
-    return df

@@ -34,7 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-WARC_EPOCH = 1704067200  # 2024-01-01T00:00:00Z — shared literal
+from . import pages
+
 WARC_FILES, WARC_RECORDS_PER_FILE = 6, 50  # the directory the warc_read query writes
 
 
@@ -43,7 +44,7 @@ def record_url(file_id: int, rec_id: int) -> str:
 
 
 def record_ts_s(file_id: int, rec_id: int) -> int:
-    return WARC_EPOCH + file_id * 86_400 + rec_id * 37
+    return pages.CRAWL_EPOCH + file_id * 86_400 + rec_id * 37
 
 
 def record_html(file_id: int, rec_id: int) -> str:

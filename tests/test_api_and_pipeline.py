@@ -433,7 +433,8 @@ def test_oracle_reads_the_engine_gate_constants(monkeypatch):
     assert after["sampled_p90_chars"] == before["sampled_p90_chars"].replace("< 250000", "< 500000")
 
 
-# (module, constant, patched value, the oracle_sql() keys it moves)
+# (module, constant, patched value, the oracle_sql() keys it moves); a
+# bare module name is under operators/
 _SHARED_GATE_CONSTANTS = [
     ("similarity", "EMBED_DIM", 32, ["ann_ivf", "ann_lsh", "ann_topk", "ann_topk_filtered", "ann_two_stage",
                                      "embedding_neardup", "embedding_neardup_lsh", "kmeans_assign", "kmeans_iterate"]),
@@ -454,6 +455,25 @@ _SHARED_GATE_CONSTANTS = [
     ("text", "QUERY_CHUNK_STRIDE", 8, ["chunk_documents"]),
     ("dedup", "NGRAM_JACCARD", 0.4, ["ngram_jaccard_pairs"]),
     ("tiles", "ZOOM_LEVELS", 1, ["tile_zoom_rollup"]),
+    ("dedup", "SIMHASH_MAX_HAMMING", 2, ["dedup_method_agreement", "simhash64_pairs", "simhash_pairs"]),
+    ("dedup", "MINHASH_BANDS", 4, ["dedup_clusters", "dedup_clusters_star", "dedup_keep_best",
+                                   "dedup_method_agreement", "dedup_report", "lsh_recall_monitor",
+                                   "minhash_lsh_pairs"]),
+    ("dedup", "LSH_RECALL_SAMPLE_MOD", 2, ["lsh_recall_monitor"]),
+    ("dedup", "EDIT_MAX_DISTANCE", 10, ["edit_distance_pairs"]),
+    ("text", "MIXTURE_BUDGET", 1000, ["mixture_allocate", "temperature_mixture"]),
+    ("multimodal", "MEDIA_ROWS", 300, ["audio_frames", "image_patches", "multimodal_features",
+                                       "multimodal_frames", "multimodal_real_features"]),
+    ("multimodal", "AUDIO_FRAME", 16, ["audio_frames"]),
+    ("multimodal", "IMAGE_PATCH", 2, ["image_patches"]),
+    ("events", "MOVING_FRAME_ROWS", 3, ["events_moving_stats"]),
+    ("events", "STICKINESS_WINDOW_DAYS", 7, ["events_stickiness"]),
+    ("relational", "RETURNED_TOP_K", 10, ["tpch_returned_revenue"]),
+    ("terms", "GRAM_WIDTH", 5, ["duplicated_span_stats", "repeated_grams"]),
+    ("terms", "VOCAB_SIZE", 64, ["vocab_coverage"]),
+    ("web", "CO_CITATION_HOSTS", 8, ["co_citation"]),
+    ("sources.pages", "CRAWL_EPOCH", 1672531200, ["sessionize", "warc_read"]),
+    ("sources.pages", "CRAWL_SPAN_S", 86400, ["sessionize"]),
 ]
 
 
@@ -467,7 +487,8 @@ def test_shared_gate_constant_moves_its_oracles(monkeypatch, module, name, value
     import __spark_entry__ as e
 
     before = e.oracle_sql()
-    monkeypatch.setattr(importlib.import_module(f"openaip_yaixm_to_geojson_spark.operators.{module}"), name, value)
+    path = module if "." in module else f"operators.{module}"
+    monkeypatch.setattr(importlib.import_module(f"openaip_yaixm_to_geojson_spark.{path}"), name, value)
     after = e.oracle_sql()
     assert sorted(k for k in before if before[k] != after[k]) == moved
 

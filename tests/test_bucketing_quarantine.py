@@ -16,6 +16,8 @@ def polygons():
 def test_bucketed_join_has_no_exchange(spark, polygons, tmp_path):
     from openaip_yaixm_to_geojson_spark.operators.spatial import spatial_join
     from openaip_yaixm_to_geojson_spark.plans.bucketing import (
+        COVER_TABLE,
+        PAGES_TABLE,
         bucketed_cover,
         bucketed_pages,
         colocated_spatial_join,
@@ -25,9 +27,9 @@ def test_bucketed_join_has_no_exchange(spark, polygons, tmp_path):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         pages = pages_from_documents(spark, "/root/testdata/sf0.001")
-        bucketed_pages(spark, pages, "pages_bkt", n_buckets=8)
-        bucketed_cover(spark, polygons, "cover_bkt", n_buckets=8)
-        joined = colocated_spatial_join(spark, "pages_bkt", "cover_bkt")
+        bucketed_pages(spark, pages)
+        bucketed_cover(spark, polygons)
+        joined = colocated_spatial_join(spark)
         plan = joined._sc._jvm.PythonSQLUtils.explainString(
             joined._jdf.queryExecution(), "formatted"
         )
@@ -41,8 +43,8 @@ def test_bucketed_join_has_no_exchange(spark, polygons, tmp_path):
         assert got == expected
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-        spark.sql("DROP TABLE IF EXISTS pages_bkt")
-        spark.sql("DROP TABLE IF EXISTS cover_bkt")
+        spark.sql(f"DROP TABLE IF EXISTS {PAGES_TABLE}")
+        spark.sql(f"DROP TABLE IF EXISTS {COVER_TABLE}")
 
 
 def test_quarantine_channel(spark):

@@ -45,7 +45,7 @@ def test_golden_parity(spark, case):
     features = convert_airspaces(
         airspaces, services=services, fix_geometries=cfg["fix"]
     )
-    actual = features_to_geojson(features, strict=True)
+    actual = features_to_geojson(features)
     with open(os.path.join(GOLDEN_DIR, f"{case}.json")) as fh:
         expected = json.load(fh)
     mismatches = geojson_matches(actual, expected)
@@ -92,13 +92,12 @@ def test_yaml_doc_source_roundtrip(spark):
     text = pyyaml.safe_dump({"airspace": FIXTURES["multi-sequence"]["airspace"]})
     docs = spark.createDataFrame([("inline", text)], "doc_id string, yaml string")
     via_yaml = features_to_geojson(
-        convert_airspaces(airspaces_from_yaml_docs(docs)), strict=True
+        convert_airspaces(airspaces_from_yaml_docs(docs))
     )
     via_records = features_to_geojson(
         convert_airspaces(
             airspaces_from_records(spark, FIXTURES["multi-sequence"]["airspace"])
         ),
-        strict=True,
     )
     assert not geojson_matches(via_yaml, via_records)
 

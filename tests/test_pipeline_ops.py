@@ -36,9 +36,10 @@ def test_minhash_lsh_finds_near_dup(spark, docs, monkeypatch):
     # banding matched to the threshold: 16 bands x 1 row has high recall at
     # J >= 0.4 (the default 8x2 S-curve targets J >= ~0.7)
     monkeypatch.setattr(dedup, "MINHASH_JACCARD", 0.4)
+    monkeypatch.setattr(dedup, "MINHASH_BANDS", 16)
     pairs = {
         (r["key_a"], r["key_b"]): r["jaccard"]
-        for r in minhash_lsh_pairs(docs, bands=16).collect()
+        for r in minhash_lsh_pairs(docs).collect()
     }
     assert (0, 1) in pairs and pairs[(0, 1)] == 1.0
     assert (0, 2) in pairs or (1, 2) in pairs  # near dup shares most shingles
@@ -63,9 +64,10 @@ def test_minhash_size_prefilter_keeps_pair_at_threshold(spark, monkeypatch):
     # 16 bands x 1 row: each band matches with probability J, so the pair
     # is a candidate unless all 16 single-hash bands miss
     monkeypatch.setattr(dedup, "MINHASH_JACCARD", 0.55)
+    monkeypatch.setattr(dedup, "MINHASH_BANDS", 16)
     pairs = {
         (r["key_a"], r["key_b"]): r["jaccard"]
-        for r in minhash_lsh_pairs(docs, bands=16).collect()
+        for r in minhash_lsh_pairs(docs).collect()
     }
     assert pairs == {(0, 1): 0.55}
 
@@ -73,7 +75,7 @@ def test_minhash_size_prefilter_keeps_pair_at_threshold(spark, monkeypatch):
 def test_simhash_neardup(spark, docs):
     from openaip_yaixm_to_geojson_spark.operators.dedup import simhash_neardup_pairs
 
-    pairs = {(r["key_a"], r["key_b"]): r["hamming"] for r in simhash_neardup_pairs(docs, max_hamming=3).collect()}
+    pairs = {(r["key_a"], r["key_b"]): r["hamming"] for r in simhash_neardup_pairs(docs).collect()}
     assert pairs[(0, 1)] == 0
     assert (0, 2) in pairs  # one changed word flips few bits
 
@@ -175,25 +177,26 @@ def test_ann_high_dim_uses_udf_path(spark, monkeypatch):
         [(i, [float(x) for x in vecs[i]]) for i in range(n)],
         "vec_id int, embedding array<float>",
     )
+    monkeypatch.setattr(similarity, "EMBED_DIM", dim)
     monkeypatch.setattr(similarity, "ANN_QUERIES", 3)
     monkeypatch.setattr(similarity, "IVF_PROBES", 8)
     monkeypatch.setattr(similarity, "ANN_LSH_PLANES", 8)
     queries = queries_from_embeddings(emb)
-    lsh = lsh_ann_topk(emb, queries, dim=dim).collect()
-    ivf = ivf_ann_topk(emb, queries, dim=dim).collect()
+    lsh = lsh_ann_topk(emb, queries).collect()
+    ivf = ivf_ann_topk(emb, queries).collect()
     for rows in (lsh, ivf):
         per_q = {}
         for r in rows:
             per_q.setdefault(r["query_id"], []).append(r["rank"])
         assert per_q and all(sorted(v) == list(range(1, len(v) + 1)) for v in per_q.values())
-    again = lsh_ann_topk(emb, queries, dim=dim).collect()
+    again = lsh_ann_topk(emb, queries).collect()
     assert sorted(map(tuple, again)) == sorted(map(tuple, lsh))
     # query 0's top hit must be the planted near-duplicate vector 1
     top = {r["rank"]: r["vec_id"] for r in lsh if r["query_id"] == 0}
     assert top[1] == 1
     monkeypatch.setattr(similarity, "NEARDUP_COSINE", 0.99)
     monkeypatch.setattr(similarity, "NEARDUP_LSH_PLANES", 8)
-    pairs = {(r["key_a"], r["key_b"]) for r in embedding_neardup_pairs(emb, dim=dim).collect()}
+    pairs = {(r["key_a"], r["key_b"]) for r in embedding_neardup_pairs(emb).collect()}
     assert (0, 1) in pairs
 
 
@@ -298,11 +301,12 @@ def test_checkpoint_resume(spark, tmp_path):
     assert out3.count() == 50 and calls == {"a": 1, "b": 2}
 
 
-def test_simhash_cross_half_recall(spark):
+def test_simhash_cross_half_recall(spark, monkeypatch):
     """Round-1 ADVICE: a pair differing by one bit in EACH 8-bit half was
     silently dropped by the two-half banding. This pair (precomputed:
     simhashes 0x4ff0 vs 0x0ff2, XOR 0x4002 = bits 1 and 14) spans both
-    halves and must be found for any max_hamming >= 2."""
+    halves and must be found for any Hamming budget >= 2."""
+    from openaip_yaixm_to_geojson_spark.operators import dedup
     from openaip_yaixm_to_geojson_spark.operators.dedup import (
         simhash16,
         simhash_neardup_pairs,
@@ -316,12 +320,14 @@ def test_simhash_cross_half_recall(spark):
     sims = {r["doc_id"]: r["s"] for r in df.select("doc_id", simhash16(F.col("text")).alias("s")).collect()}
     xor = sims[0] ^ sims[1]
     assert bin(xor).count("1") == 2 and (xor & 0xFF) and (xor >> 8), "fixture drifted"
-    pairs = {(r["key_a"], r["key_b"]): r["hamming"] for r in simhash_neardup_pairs(df, max_hamming=2).collect()}
+    monkeypatch.setattr(dedup, "SIMHASH_MAX_HAMMING", 2)
+    pairs = {(r["key_a"], r["key_b"]): r["hamming"] for r in simhash_neardup_pairs(df).collect()}
     assert pairs == {(0, 1): 2}
 
 
-def test_simhash_neardup_matches_bruteforce(spark):
+def test_simhash_neardup_matches_bruteforce(spark, monkeypatch):
     """Operator output == exhaustive all-pairs Hamming scan on real data."""
+    from openaip_yaixm_to_geojson_spark.operators import dedup
     from openaip_yaixm_to_geojson_spark.operators.dedup import (
         simhash16,
         simhash_neardup_pairs,
@@ -330,6 +336,7 @@ def test_simhash_neardup_matches_bruteforce(spark):
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     sims = {r["doc_id"]: r["s"] for r in docs.select("doc_id", simhash16(F.col("text")).alias("s")).collect()}
     for mh in (1, 2, 3):
+        monkeypatch.setattr(dedup, "SIMHASH_MAX_HAMMING", mh)
         expected = {
             (a, b): bin(sims[a] ^ sims[b]).count("1")
             for a in sims
@@ -338,7 +345,7 @@ def test_simhash_neardup_matches_bruteforce(spark):
         }
         got = {
             (r["key_a"], r["key_b"]): r["hamming"]
-            for r in simhash_neardup_pairs(docs, max_hamming=mh).collect()
+            for r in simhash_neardup_pairs(docs).collect()
         }
         assert got == expected
 
@@ -369,12 +376,13 @@ def test_ngram_jaccard_bucket_straddle(spark, monkeypatch):
     assert abs(got[(0, 1)] - 15 / 17) < 1e-12 and abs(got[(2, 3)] - 9 / 15) < 1e-12
 
 
-def test_edit_distance_pairs_blocking_contract(spark):
+def test_edit_distance_pairs_blocking_contract(spark, monkeypatch):
     """Blocked Levenshtein: a pair is found iff it shares an edit-free
     16-char prefix OR suffix margin (both-margins-edited pairs escape by
     documented contract); short docs fall back to dual-offset length
     buckets; both-keys matches emit exactly once; the length lower bound
-    and the threshold-ed DP never report distance > max_distance."""
+    and the threshold-ed DP never report distance > EDIT_MAX_DISTANCE."""
+    from openaip_yaixm_to_geojson_spark.operators import dedup
     from openaip_yaixm_to_geojson_spark.operators.dedup import edit_distance_pairs
 
     base = "abcdefghijklmnop"  # exactly 16 chars
@@ -389,13 +397,14 @@ def test_edit_distance_pairs_blocking_contract(spark):
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
     got = {
         (r["key_a"], r["key_b"]): r["edit_distance"]
-        for r in edit_distance_pairs(df, max_distance=20).collect()
+        for r in edit_distance_pairs(df).collect()
     }
     assert got == {(0, 1): 2, (4, 5): 1}
     # tightening the threshold drops the (0,1) pair via the DP bailout
+    monkeypatch.setattr(dedup, "EDIT_MAX_DISTANCE", 1)
     got1 = {
         (r["key_a"], r["key_b"]): r["edit_distance"]
-        for r in edit_distance_pairs(df, max_distance=1).collect()
+        for r in edit_distance_pairs(df).collect()
     }
     assert got1 == {(4, 5): 1}
 
@@ -429,10 +438,11 @@ def test_simhash64_kernel_equals_expression(spark):
     assert any(v < 0 for v in vals) and any(abs(v) > (1 << 32) for v in vals)
 
 
-def test_simhash64_neardup_matches_bruteforce(spark):
+def test_simhash64_neardup_matches_bruteforce(spark, monkeypatch):
     """64-bit banded pairs == exhaustive all-pairs Hamming scan on real
-    data: pigeonhole banding (max_hamming+1 contiguous segments) is
-    recall-lossless for every budget up to max_hamming."""
+    data: pigeonhole banding (budget+1 contiguous segments) is
+    recall-lossless for every Hamming budget."""
+    from openaip_yaixm_to_geojson_spark.operators import dedup
     from openaip_yaixm_to_geojson_spark.operators.dedup import (
         simhash64,
         simhash_neardup_pairs,
@@ -448,12 +458,13 @@ def test_simhash64_neardup_matches_bruteforce(spark):
         return bin((sims[a] ^ sims[b]) & ((1 << 64) - 1)).count("1")
 
     for mh in (0, 3):
+        monkeypatch.setattr(dedup, "SIMHASH_MAX_HAMMING", mh)
         expected = {
             (a, b): ham(a, b) for a in sims for b in sims if a < b and ham(a, b) <= mh
         }
         got = {
             (r["key_a"], r["key_b"]): r["hamming"]
-            for r in simhash_neardup_pairs(docs, max_hamming=mh, n_bits=64).collect()
+            for r in simhash_neardup_pairs(docs, n_bits=64).collect()
         }
         assert got == expected
 
@@ -576,7 +587,7 @@ def test_ivf_ann_recall(spark):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = queries_from_embeddings(emb)
     exact = {(r["query_id"], r["vec_id"]): r["dot"] for r in cosine_topk(emb, q).collect()}
-    approx = {(r["query_id"], r["vec_id"]): r["dot"] for r in ivf_ann_topk(emb, q, dim=64).collect()}
+    approx = {(r["query_id"], r["vec_id"]): r["dot"] for r in ivf_ann_topk(emb, q).collect()}
     hits = set(exact) & set(approx)
     assert len(hits) / len(exact) >= 0.4  # deterministic on fixed data
     for key in hits:
@@ -829,7 +840,7 @@ def test_url_canonicalization_idempotent_and_invariant(spark):
 def test_asof_join_matches_pandas_merge_asof(spark):
     """The union+carry-forward formulation must reproduce pandas
     merge_asof (backward) exactly, including the no-match and equal-ts
-    cases, in both allow_equal modes."""
+    cases."""
     import pandas as pd
 
     from openaip_yaixm_to_geojson_spark.operators.events import asof_join
@@ -853,26 +864,26 @@ def test_asof_join_matches_pandas_merge_asof(spark):
         .last()
         .sort_values("ts", kind="stable")
     )
-    for allow_equal in (True, False):
-        got = {
-            r["event_id"]: (r["matched_event_id"], r["matched_value"])
-            for r in asof_join(left, right, allow_equal=allow_equal).collect()
-        }
-        exp_df = pd.merge_asof(
-            lp, rp, on="ts", by="user_id", allow_exact_matches=allow_equal
+    got = {
+        r["event_id"]: (r["matched_event_id"], r["matched_value"])
+        for r in asof_join(left, right).collect()
+    }
+    exp_df = pd.merge_asof(lp, rp, on="ts", by="user_id", allow_exact_matches=True)
+    for _, row in exp_df.iterrows():
+        exp = (
+            (None, None)
+            if pd.isna(row["r_event_id"])
+            else (int(row["r_event_id"]), float(row["value"]))
         )
-        for _, row in exp_df.iterrows():
-            exp = (
-                (None, None)
-                if pd.isna(row["r_event_id"])
-                else (int(row["r_event_id"]), float(row["value"]))
-            )
-            assert got[int(row["event_id"])] == exp, (allow_equal, row["event_id"])
-        assert len(got) == len(lp)
+        assert got[int(row["event_id"])] == exp, row["event_id"]
+    assert len(got) == len(lp)
 
 
-def test_interval_join_boundaries_and_overlap(spark):
+def test_interval_join_boundaries_and_overlap(spark, monkeypatch):
+    from openaip_yaixm_to_geojson_spark.operators import events
     from openaip_yaixm_to_geojson_spark.operators.events import interval_join
+
+    monkeypatch.setattr(events, "INTERVAL_BUCKET_SECONDS", 600)  # intervals span several buckets
 
     points = spark.createDataFrame(
         [(1, "a", 100), (2, "a", 500), (3, "a", 501), (4, "b", 100), (5, "a", 7300)],
@@ -886,7 +897,7 @@ def test_interval_join_boundaries_and_overlap(spark):
     )
     got = {
         (r["event_id"], r["session_start"])
-        for r in interval_join(points, intervals, bucket_seconds=600).collect()
+        for r in interval_join(points, intervals).collect()
     }
     assert got == {
         (1, 100),            # start boundary inclusive
@@ -972,12 +983,13 @@ def test_pagerank_int_matches_numpy_recurrence(spark):
     assert max(got, key=got.get) < 10
 
 
-def test_lsh_recall_monitor_counts_and_forced_miss(spark):
+def test_lsh_recall_monitor_counts_and_forced_miss(spark, monkeypatch):
     """The recall monitor reports exact counts: with 8 bands the moderate
     pair is found (recall 1); with a single 16-row band the same pair needs
     all 16 minhashes equal and is deterministically missed (md5-derived
     signatures, no RNG) — the exact situation the monitor exists to
     surface."""
+    from openaip_yaixm_to_geojson_spark.operators import dedup
     from openaip_yaixm_to_geojson_spark.operators.dedup import lsh_recall_monitor
 
     words = [f"w{i}" for i in range(40)]
@@ -985,9 +997,11 @@ def test_lsh_recall_monitor_counts_and_forced_miss(spark):
     near_b = " ".join(words[:30] + [f"z{i}" for i in range(10)])
     rows = [(0, near_a), (4, near_b), (8, "c1 c2 c3 c4 c5"), (12, "solo text here completely different")]
     df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    found = lsh_recall_monitor(df, sample_mod=1, bands=8).collect()[0]
+    monkeypatch.setattr(dedup, "LSH_RECALL_SAMPLE_MOD", 1)
+    found = lsh_recall_monitor(df).collect()[0]
     assert (found["n_sampled"], found["n_true_pairs"], found["n_found_pairs"], found["n_missed_pairs"]) == (4, 1, 1, 0)
-    missed = lsh_recall_monitor(df, sample_mod=1, bands=1).collect()[0]
+    monkeypatch.setattr(dedup, "MINHASH_BANDS", 1)
+    missed = lsh_recall_monitor(df).collect()[0]
     assert (missed["n_true_pairs"], missed["n_found_pairs"], missed["n_missed_pairs"]) == (1, 0, 1)
 
 
@@ -1071,10 +1085,13 @@ def test_events_new_users_first_seen(spark):
     assert got == [(base, 2, 2), (base + 2 * 86400, 1, 3)]
 
 
-def test_events_moving_stats_hand_case(spark):
+def test_events_moving_stats_hand_case(spark, monkeypatch):
     """Trailing 3-row frame: partial frames at the head, exact decimal
     sums, (ts, event_id) tie order."""
+    from openaip_yaixm_to_geojson_spark.operators import events
     from openaip_yaixm_to_geojson_spark.operators.events import events_moving_stats
+
+    monkeypatch.setattr(events, "MOVING_FRAME_ROWS", 3)
 
     rows = [
         (1, 7, "2024-01-01 00:00:01", 1.25),
@@ -1086,7 +1103,7 @@ def test_events_moving_stats_hand_case(spark):
     df = spark.createDataFrame(rows, "event_id bigint, user_id bigint, ts_s string, value double").select(
         "event_id", "user_id", F.col("ts_s").cast("timestamp_ntz").alias("ts"), "value"
     )
-    got = {r["event_id"]: (r["frame_n"], r["moving_sum"]) for r in events_moving_stats(df, frame_rows=3).collect()}
+    got = {r["event_id"]: (r["frame_n"], r["moving_sum"]) for r in events_moving_stats(df).collect()}
     assert got == {
         1: (1, 1.25),
         2: (2, 3.75),
@@ -1220,7 +1237,8 @@ def test_extract_links_targets_and_fanout_rule(spark):
         assert set(links) == expect
 
 
-def test_mixture_allocate_sums_to_budget_exactly(spark):
+def test_mixture_allocate_sums_to_budget_exactly(spark, monkeypatch):
+    from openaip_yaixm_to_geojson_spark.operators import text
     from openaip_yaixm_to_geojson_spark.operators.text import mixture_allocate
 
     docs = spark.createDataFrame(
@@ -1229,13 +1247,13 @@ def test_mixture_allocate_sums_to_budget_exactly(spark):
     )
     # weights 2/1/1 over budget 10 -> exact 5/2.5/2.5 -> floor 5/2/2,
     # leftover 1 seat to the remainder tie broken by name ('b' < 'c')
-    got = {r["source"]: r["quota"] for r in mixture_allocate(docs, budget=10).collect()}
+    monkeypatch.setattr(text, "MIXTURE_BUDGET", 10)
+    got = {r["source"]: r["quota"] for r in mixture_allocate(docs).collect()}
     assert got == {"a": 5, "b": 3, "c": 2}
     assert sum(got.values()) == 10
 
-    real = mixture_allocate(
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet"), budget=999_983
-    ).collect()
+    monkeypatch.setattr(text, "MIXTURE_BUDGET", 999_983)
+    real = mixture_allocate(spark.read.parquet("/root/testdata/sf0.001/documents.parquet")).collect()
     assert sum(r["quota"] for r in real) == 999_983  # always exactly the budget
 
 
@@ -1467,7 +1485,7 @@ def test_mixture_allocate_corpus_scale_weights_no_bigint_wrap(spark):
     docs = spark.createDataFrame(
         [(1, "a", 3 * big), (2, "b", big)], "doc_id bigint, source string, n_chars bigint"
     )
-    got = {r["source"]: r["quota"] for r in mixture_allocate(docs, budget=1_000_000).collect()}
+    got = {r["source"]: r["quota"] for r in mixture_allocate(docs).collect()}
     assert got == {"a": 750_000, "b": 250_000}
     assert all(q >= 0 for q in got.values())
 
@@ -1528,12 +1546,15 @@ def test_lang_length_regression_matches_numpy(spark):
     assert z["n_docs"] == 2 and z["corr_chars_tokens"] is None and z["slope"] is None and z["intercept"] is None
 
 
-def test_pareto_frontier_vs_bruteforce(spark):
+def test_pareto_frontier_vs_bruteforce(spark, monkeypatch):
     """Two-phase distributed skyline == brute-force dominance over a
     deterministic point cloud that includes ties on each axis and an
     exact duplicate of a frontier point (both copies must survive —
     identical points never dominate each other)."""
+    from openaip_yaixm_to_geojson_spark.operators import relational
     from openaip_yaixm_to_geojson_spark.operators.relational import pareto_frontier
+
+    monkeypatch.setattr(relational, "PARETO_BUCKETS", 4)  # several points per local skyline
 
     rows = []
     for i in range(60):
@@ -1551,7 +1572,7 @@ def test_pareto_frontier_vs_bruteforce(spark):
             x2 >= x and y2 >= y and (x2 > x or y2 > y) for x2, y2 in pts.values()
         )
     }
-    got = {r["doc_id"] for r in pareto_frontier(df, n_buckets=4).collect()}
+    got = {r["doc_id"] for r in pareto_frontier(df).collect()}
     assert got == expected
     if 41 in expected:
         assert 100 in expected  # duplicate survives with its twin
@@ -1703,13 +1724,14 @@ def test_char_diversity_hand_cases(spark):
     assert got[1]["gini"] == 0.0 and got[2]["gini"] == 0.5
 
 
-def test_image_patches_exact_sums(spark):
+def test_image_patches_exact_sums(spark, monkeypatch):
     """Patch sums equal NumPy sums over the decoded image blocks; the
     grid covers the full image (patch sums per channel total the image
     sum); non-multiple dimensions raise."""
     import numpy as np
     import pytest as _pytest
 
+    from openaip_yaixm_to_geojson_spark.operators import multimodal
     from openaip_yaixm_to_geojson_spark.operators.multimodal import (
         decode_ppm,
         image_patches,
@@ -1729,8 +1751,9 @@ def test_image_patches_exact_sums(spark):
         assert r["mean_r"] == np.float32(r["sum_r"] / 16.0)
     total_r = sum(r["sum_r"] for r in rows if r["media_id"] == 0)
     assert total_r == int(px[:, :, 0].sum())
+    monkeypatch.setattr(multimodal, "IMAGE_PATCH", 3)
     with _pytest.raises(Exception, match="not a multiple"):
-        image_patches(media, patch=3).collect()
+        image_patches(media).collect()
 
 
 def test_length_outliers_hand_case(spark):
@@ -1774,10 +1797,11 @@ def test_session_paths_hand_case(spark):
     assert got == {"view>click>purchase": 2, "view": 1}
 
 
-def test_co_citation_cap_and_pairs(spark):
+def test_co_citation_cap_and_pairs(spark, monkeypatch):
     """Pairs count pages citing both hosts (within-page duplicate links
     collapse); the per-page cap bounds a link-farm page to C(cap,2)
     pairs."""
+    from openaip_yaixm_to_geojson_spark.operators import web
     from openaip_yaixm_to_geojson_spark.operators.web import co_citation
 
     def page(url, hosts):
@@ -1792,7 +1816,8 @@ def test_co_citation_cap_and_pairs(spark):
     df = spark.createDataFrame(pages, "url string, html_s string").select(
         "url", F.encode("html_s", "utf-8").alias("html")
     )
-    got = {(r["host_a"], r["host_b"]): r["n_pages"] for r in co_citation(df, max_hosts_per_page=4).collect()}
+    monkeypatch.setattr(web, "CO_CITATION_HOSTS", 4)
+    got = {(r["host_a"], r["host_b"]): r["n_pages"] for r in co_citation(df).collect()}
     assert got[("x.com", "y.com")] == 2
     assert got[("x.com", "z.com")] == 1 and got[("y.com", "z.com")] == 1
     farm_pairs = [k for k in got if k[0].startswith("h") and k[1].startswith("h")]
@@ -1952,7 +1977,7 @@ def test_returned_item_revenue_hand_case(spark):
         ],
         "l_orderkey bigint, l_extendedprice double, l_discount double, l_returnflag string",
     )
-    got = returned_item_revenue(cust, orders, li, nat, k=10).collect()
+    got = returned_item_revenue(cust, orders, li, nat).collect()
     assert [(r["c_name"], r["revenue"], r["n_items"]) for r in got] == [
         ("bob", 150.0, 1),
         ("alice", 90.0, 1),
@@ -2058,12 +2083,13 @@ def test_conversion_latency_hand_case(spark):
     assert got == {1: 2 * 3600 * 1_000_000 + 1800 * 1_000_000, 2: 0}
 
 
-def test_audio_frames_exact(spark):
+def test_audio_frames_exact(spark, monkeypatch):
     """Frame aggregates equal NumPy over the decoded samples; frames
     tile the clip (sums conserve); non-multiple frame size raises."""
     import numpy as np
     import pytest as _pytest
 
+    from openaip_yaixm_to_geojson_spark.operators import multimodal
     from openaip_yaixm_to_geojson_spark.operators.multimodal import (
         audio_frames,
         decode_wav_pcm16,
@@ -2084,31 +2110,33 @@ def test_audio_frames_exact(spark):
         assert r["s_min"] == int(row.min()) and r["s_max"] == int(row.max())
         assert r["mean"] == np.float32(r["s_sum"] / 32.0)
     assert sum(r["s_sum"] for r in rows if r["media_id"] == 1) == int(samples.astype(np.int64).sum())
+    monkeypatch.setattr(multimodal, "AUDIO_FRAME", 33)
     with _pytest.raises(Exception, match="not a multiple"):
-        audio_frames(media, frame=33).collect()
+        audio_frames(media).collect()
 
 
 def test_bfs_depth_hand_case(spark):
     """Chain a-b-c-d plus a shortcut a-c: depths 0,1,1,2; unreachable
-    nodes absent; directed mode respects edge direction."""
+    nodes absent; edges are followed both ways (d-c reaches c from d's
+    side of the chain)."""
     from openaip_yaixm_to_geojson_spark.operators.graph import bfs_depth
 
     edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("a", "c"), ("x", "y")],
-        "src string, dst string",
+        [("a", "b"), ("b", "c"), ("d", "c"), ("a", "c"), ("x", "y")],
+        "src_host string, dst_host string",
     )
     got = {r["node"]: r["depth"] for r in bfs_depth(edges, "a").collect()}
     assert got == {"a": 0, "b": 1, "c": 1, "d": 2}
-    directed = spark.createDataFrame([("b", "a"), ("a", "c")], "src string, dst string")
-    got2 = {r["node"]: r["depth"] for r in bfs_depth(directed, "a", directed=True).collect()}
-    assert got2 == {"a": 0, "c": 1}  # b->a not followed forward
 
 
-def test_events_stickiness_hand_case(spark):
+def test_events_stickiness_hand_case(spark, monkeypatch):
     """Hand-computed DAU/MAU over a 3-day window: repeat visits within a
     day collapse; the trailing window picks up users from earlier days;
     days without events get no row."""
+    from openaip_yaixm_to_geojson_spark.operators import events
     from openaip_yaixm_to_geojson_spark.operators.events import events_stickiness
+
+    monkeypatch.setattr(events, "STICKINESS_WINDOW_DAYS", 3)
 
     rows = [
         (1, 1, "2024-01-01 10:00:00"),
@@ -2120,7 +2148,7 @@ def test_events_stickiness_hand_case(spark):
         "event_id", "user_id", F.col("ts_s").cast("timestamp_ntz").alias("ts")
     )
     base = 1704067200
-    got = {r["day_start"]: (r["dau"], r["mau"], r["stickiness"]) for r in events_stickiness(df, window_days=3).collect()}
+    got = {r["day_start"]: (r["dau"], r["mau"], r["stickiness"]) for r in events_stickiness(df).collect()}
     assert got == {base: (2, 2, 1.0), base + 2 * 86400: (1, 2, 0.5)}
 
 
@@ -2619,10 +2647,11 @@ def test_span_scrub_semantics(spark):
     assert got[3] == (6, 0, md5("totally unique words only here now"))
 
 
-def test_vocab_coverage_and_dataset_split(spark):
-    """vocab_coverage: with vocab_size 1 only the modal term is in-vocab;
-    dataset_split: counts sum to the corpus and every split label is
-    from the contract set."""
+def test_vocab_coverage_and_dataset_split(spark, monkeypatch):
+    """vocab_coverage: with a 1-term vocabulary only the modal term is
+    in-vocab; dataset_split: counts sum to the corpus and every split
+    label is from the contract set."""
+    from openaip_yaixm_to_geojson_spark.operators import terms
     from openaip_yaixm_to_geojson_spark.operators.terms import vocab_coverage
     from openaip_yaixm_to_geojson_spark.operators.text import dataset_split
 
@@ -2630,7 +2659,8 @@ def test_vocab_coverage_and_dataset_split(spark):
         [(1, "a a b", "en"), (2, "a c", "de"), (3, "b b b c", "en")],
         "doc_id bigint, text string, lang string",
     )
-    got = {r["doc_id"]: (r["n_tokens"], r["n_in_vocab"], r["n_oov"]) for r in vocab_coverage(docs, vocab_size=1).collect()}
+    monkeypatch.setattr(terms, "VOCAB_SIZE", 1)
+    got = {r["doc_id"]: (r["n_tokens"], r["n_in_vocab"], r["n_oov"]) for r in vocab_coverage(docs).collect()}
     # corpus counts: b=4, a=3, c=2 -> vocab = {b}
     assert got[1] == (3, 1, 2)
     assert got[2] == (2, 0, 2)
@@ -2653,7 +2683,8 @@ def test_duplicate_clusters_star_chain_and_equality(spark):
     chain = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5)], "key_a bigint, key_b bigint"
     )
-    got = {r["key"]: r["cluster_id"] for r in duplicate_clusters_star(chain).collect()}
+    nodes = spark.createDataFrame([(i,) for i in range(1, 6)], "doc_id bigint")
+    got = {r["key"]: r["cluster_id"] for r in duplicate_clusters_star(chain, nodes).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1}
 
     pairs = spark.createDataFrame(

@@ -241,7 +241,7 @@ def test_self_join_operators_single_source_pass(spark):
     )
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    p = plan_of(simhash_neardup_pairs(docs, max_hamming=3, n_bits=64))
+    p = plan_of(simhash_neardup_pairs(docs, n_bits=64))
     assert p.count("ArrowEvalPython") == 0 and p.count("FileScan parquet") == 0
     p = plan_of(ngram_jaccard_pairs(docs))
     assert p.count("FileScan parquet") == 0

@@ -143,15 +143,17 @@ def test_stratified_sample_matches_full_rank_definition(spark):
     assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
 
 
-def test_stratified_sample_band_miss_raises(spark):
+def test_stratified_sample_band_miss_raises(spark, monkeypatch):
     """A vanishing band (delta=0) cannot cover the quota — the operator
     must raise its deterministic failure signal, never return an inexact
     stratum."""
+    from openaip_yaixm_to_geojson_spark.operators import text
     from openaip_yaixm_to_geojson_spark.operators.text import stratified_sample
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    monkeypatch.setattr(text, "STRATIFIED_DELTA", 0.0)
     with pytest.raises(RuntimeError, match="band miss"):
-        stratified_sample(docs, delta=0.0)
+        stratified_sample(docs)
 
 
 def test_corpus_cube_combinations(tiny):
@@ -256,14 +258,17 @@ def test_profile_table_nulls_and_stats(spark):
     assert (rows["s"]["min_value"], rows["s"]["max_value"]) == ("a", "b")
 
 
-def test_kmv_merge_equals_full_rank(spark):
+def test_kmv_merge_equals_full_rank(spark, monkeypatch):
     """The salted two-level k-min merge must produce exactly the k
     smallest hashes' kth element — verified against a direct full sort
     with a tiny salt count (worst case for the merge)."""
     from pyspark.sql import Window
 
+    from openaip_yaixm_to_geojson_spark.operators import terms
+
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    merged = {r["grp"]: r["kth_min"] for r in kmv_distinct(docs, n_salts=2).collect()}
+    monkeypatch.setattr(terms, "KMV_SALTS", 2)
+    merged = {r["grp"]: r["kth_min"] for r in kmv_distinct(docs).collect()}
     h = F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("bigint")
     pairs = (
         docs.select(F.col("source").alias("grp"), F.explode(F.split(F.trim("text"), r"\s+")).alias("term"))
@@ -618,13 +623,16 @@ def test_quantization_error_plan_no_reinline(spark):
     assert plan.count("array_max") == 2
 
 
-def test_repeated_span_operators_hand_case(spark):
+def test_repeated_span_operators_hand_case(spark, monkeypatch):
     """Hand-computable repeated-span case: 'a b c' recurs across three
     docs (twice in one of them); too-short docs are absent by contract."""
+    from openaip_yaixm_to_geojson_spark.operators import terms
     from openaip_yaixm_to_geojson_spark.operators.terms import (
         duplicated_span_stats,
         repeated_grams,
     )
+
+    monkeypatch.setattr(terms, "GRAM_WIDTH", 3)
 
     df = spark.createDataFrame(
         [
@@ -635,11 +643,11 @@ def test_repeated_span_operators_hand_case(spark):
         ],
         "doc_id bigint, text string",
     )
-    rg = {r["gram"]: (r["n_docs"], r["n_occ"]) for r in repeated_grams(df, width=3).collect()}
+    rg = {r["gram"]: (r["n_docs"], r["n_occ"]) for r in repeated_grams(df).collect()}
     assert rg == {"a b c": (3, 4)}
     ds = {
         r["key"]: (r["n_grams"], r["n_dup_grams"], r["n_dup_positions"])
-        for r in duplicated_span_stats(df, width=3).collect()
+        for r in duplicated_span_stats(df).collect()
     }
     assert ds == {0: (2, 1, 1), 1: (2, 1, 1), 3: (4, 1, 2)}
 

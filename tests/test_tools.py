@@ -3,9 +3,9 @@ import in the entry points, tools and benchmark harness resolves, every
 tool the run instructions name exists, every operator the README names
 resolves, the core operators take no speed-only tuning parameters, every
 public package function has a caller outside the tests, every defaulted
-parameter is set by some caller or allowlisted with its reason, the shared
-bench suite matches bench.py's, and the test-data scaler handles its
-smallest factor."""
+parameter has two values in use outside the tests or is allowlisted with
+its reason, the shared bench suite matches bench.py's, and the test-data
+scaler handles its smallest factor."""
 
 import ast
 import importlib
@@ -167,12 +167,12 @@ def test_package_functions_have_a_non_test_caller():
     assert sorted(allowed & called) == []
 
 
-def _defaulted_parameters(path: Path, tree: ast.Module):
-    """(key, function, name, position, default) for every defaulted
-    parameter of a public top-level function. `position` is None for
-    keyword-only."""
+def _parameters(path: Path, tree: ast.Module):
+    """(key, function, name, position, default) for every parameter of a
+    top-level function. `position` is None for keyword-only, `default`
+    is None for a required parameter."""
     for top in tree.body:
-        if not isinstance(top, ast.FunctionDef) or top.name.startswith("_"):
+        if not isinstance(top, ast.FunctionDef):
             continue
         a = top.args
         positional = a.posonlyargs + a.args
@@ -180,15 +180,16 @@ def _defaulted_parameters(path: Path, tree: ast.Module):
         slots = [(arg, i, d) for i, (arg, d) in enumerate(zip(positional, defaults))]
         slots += [(arg, None, d) for arg, d in zip(a.kwonlyargs, a.kw_defaults)]
         for arg, position, default in slots:
-            if default is not None:
-                key = f"{path.relative_to(REPO / PACKAGE).as_posix()}:{top.name}({arg.arg})"
-                yield key, top.name, arg.arg, position, ast.unparse(default)
+            key = f"{path.relative_to(REPO).as_posix()}:{top.name}({arg.arg})"
+            yield key, top.name, arg.arg, position, ast.unparse(default) if default else None
 
 
 def _passed_arguments(tree: ast.Module, params: dict):
-    """(key, value node, scope) for every call that passes a tracked
-    parameter by keyword or by position; `scope` maps each name bound as a
-    parameter of the enclosing functions to its tracked key (or None)."""
+    """(key, value node, scope) for every call of a tracked function and
+    each of its tracked parameters: the node passed by keyword or by
+    position, or None where the call omits it; `scope` maps each name
+    bound as a parameter of the enclosing functions to its tracked key (or
+    None)."""
     by_function = {}
     for key, (function, name, position, _) in params.items():
         by_function.setdefault(function, []).append((key, name, position))
@@ -213,6 +214,8 @@ def _passed_arguments(tree: ast.Module, params: dict):
                     yield key, keywords[name], scope
                 elif position is not None and position < len(positional):
                     yield key, positional[position], scope
+                else:
+                    yield key, None, scope
         for child in ast.iter_child_nodes(node):
             yield from visit(child, scope)
 
@@ -256,8 +259,8 @@ def _value(node, constants: dict[str, str]) -> str:
     return constants.get(name, ast.unparse(node))
 
 
-# Defaulted parameters that no non-test call sets, grouped by why each
-# stays: reason -> {module: {function: (parameters, ...)}}.
+# Defaulted parameters with fewer than two values in use, grouped by why
+# each stays: reason -> {module: {function: (parameters, ...)}}.
 _PARAMETER_ALLOWLIST = {
     "mirrors an option of the reference converter: convert_blocks' Spark "
     "twin gets it through converter_api config, clean_object copies cleanObject": {
@@ -266,38 +269,16 @@ _PARAMETER_ALLOWLIST = {
             "clean_object": ("keep_empty_strings", "keep_empty_arrays", "keep_empty_objects", "keep_null")
         },
     },
-    "a test sets another value to check behaviour the default does not reach": {
+    "a test passes another input (a schema, filter list, rule table or "
+    "stage) to check behaviour the default does not reach": {
         "functions/validate_geojson.py": {"validate_with_json_schema": ("schema",)},
-        "operators/dedup.py": {
-            "edit_distance_pairs": ("max_distance",),
-            "lsh_recall_monitor": ("sample_mod", "bands"),
-            "minhash_lsh_pairs": ("bands",),
-        },
-        "operators/events.py": {
-            "asof_join": ("allow_equal",),
-            "events_moving_stats": ("frame_rows",),
-            "events_stickiness": ("window_days",),
-            "interval_join": ("bucket_seconds",),
-        },
-        "operators/graph.py": {"bfs_depth": ("directed",)},
-        "operators/multimodal.py": {
-            "audio_frames": ("frame",),
-            "encode_png": ("filters",),
-            "image_patches": ("patch",),
-        },
-        "operators/relational.py": {"pareto_frontier": ("n_buckets",), "returned_item_revenue": ("k",)},
-        "operators/terms.py": {
-            "duplicated_span_stats": ("width",),
-            "kmv_distinct": ("n_salts",),
-            "repeated_grams": ("width",),
-            "vocab_coverage": ("vocab_size",),
-        },
-        "operators/text.py": {"stratified_sample": ("delta",)},
-        "operators/web.py": {"co_citation": ("max_hosts_per_page",), "robots_filter": ("rules",)},
+        "operators/multimodal.py": {"encode_png": ("filters",)},
+        "operators/web.py": {"robots_filter": ("rules",)},
         "plans/pipeline.py": {"run_pipeline": ("stop_after",)},
     },
-    "the benchmark's page generator passes its own url column, and the "
-    "benchmark harness changes only with the benchmark": {
+    "the benchmark harness passes it, and the harness changes only with the "
+    "benchmark": {
+        "functions/convert_local.py": {"convert_blocks": ("fix_geometries",)},
         "sources/pages.py": {"lat_sql": ("url_expr",), "lon_sql": ("url_expr",)},
     },
 }
@@ -305,51 +286,60 @@ _PARAMETER_ALLOWLIST = {
 
 def test_parameters_are_set_by_a_caller():
     """With one value in use, a parameter is a constant. A defaulted
-    parameter of a public package function is kept only where some
-    non-test call passes it another value, or the allowlist says why. A
-    call that passes the parameter's own default value does not count,
-    however it is spelt: `k=3` for `k: int = 3`, `res=DEFAULT_TILE_RES` or
-    `res=8` for `res: int = DEFAULT_TILE_RES` while that constant is 8.
-    Nor does a call that only forwards an enclosing parameter which no
-    caller sets, and which has the same default; that rule repeats until
-    nothing changes. An allowlisted parameter that gains a caller must
-    leave the list, so the list only shrinks."""
+    parameter of a public package function is kept only where non-test
+    calls give it at least two distinct values, or the allowlist says why.
+    A value that only a test passes is not a second value. A call that
+    omits the parameter passes its default. Values compare by value where
+    that is known statically (a literal, or a constant by name), else as
+    written, so `k=3`, `res=8` and `res=DEFAULT_TILE_RES` (while that
+    constant is 8) are one value. A call that forwards a parameter of an
+    enclosing top-level function passes the values that function's own
+    callers give it; the rule repeats until nothing changes. The failure
+    names the one value in use next to each parameter. An allowlisted
+    parameter that gains a second value must leave the list, so the list
+    only shrinks."""
     paths = sorted((REPO / PACKAGE).rglob("*.py")) + SCRIPTS
     trees = {path: ast.parse(path.read_text(), str(path)) for path in paths}
-    params = {
-        key: rest
-        for path, tree in trees.items()
-        if path.is_relative_to(REPO / PACKAGE)
-        for key, *rest in _defaulted_parameters(path, tree)
-    }
+    params = {key: rest for path, tree in trees.items() for key, *rest in _parameters(path, tree)}
     passes = [p for tree in trees.values() for p in _passed_arguments(tree, params)]
     assert params and passes
     constants = _module_constants(trees.values())
-    default = {key: _value(ast.parse(rest[3], mode="eval").body, constants) for key, rest in params.items()}
-    is_set, changed = set(), True
+    default = {key: _value(ast.parse(rest[3], mode="eval").body, constants) for key, rest in params.items() if rest[3]}
+    checked = {
+        key
+        for key, (function, _, _, text) in params.items()
+        if text and key.startswith(f"{PACKAGE}/") and not function.startswith("_")
+    }
+    values = {key: set() for key in params}
+    changed = True
     while changed:
         changed = False
         for key, value, scope in passes:
-            if key in is_set or _value(value, constants) == default[key]:
-                continue
             forwarded = scope.get(value.id) if isinstance(value, ast.Name) else None
-            same_default = forwarded is not None and default[forwarded] == default[key]
-            if same_default and forwarded not in is_set:
-                continue
-            is_set.add(key)
-            changed = True
+            if value is None:
+                new = {default[key]} if key in default else set()
+            elif forwarded is not None:
+                new = values[forwarded]
+            else:
+                new = {_value(value, constants)}
+            if not new <= values[key]:
+                values[key] |= new
+                changed = True
+    in_use = {key for key in checked if len(values[key]) >= 2}
     allowed = {
-        f"{module}:{function}({name})"
+        f"{PACKAGE}/{module}:{function}({name})"
         for modules in _PARAMETER_ALLOWLIST.values()
         for module, functions in modules.items()
         for function, names in functions.items()
         for name in names
     }
-    assert len(allowed) == 31
-    assert allowed <= set(params), sorted(allowed - set(params))
-    assert sorted(allowed & is_set) == []
-    unset = sorted(set(params) - is_set - allowed)
-    assert not unset, f"{len(unset)} parameters no caller sets: " + ", ".join(unset)
+    assert len(allowed) == 13
+    assert allowed <= checked, sorted(allowed - checked)
+    assert sorted(allowed & in_use) == []
+    one_value = sorted(checked - in_use - allowed)
+    assert not one_value, f"{len(one_value)} parameters with one value in use: " + ", ".join(
+        f"{key.removeprefix(PACKAGE + '/')} = {' '.join(values[key]) or '(no call)'}" for key in one_value
+    )
 
 
 def _bench_timed_names() -> list[str]:
