@@ -227,10 +227,10 @@ def q_geo_cluster_cells(spark, sf_dir):
 
 
 def q_knn_points(spark, sf_dir):
-    """Point-point kNN self-join: the 8 nearest OTHER pages for each
-    md5-sampled query page (mod 7), cell-annulus expansion with the
-    query side exploded (the corpus is the index side), exact-scan
-    fallback — brute-force ROW_NUMBER oracle."""
+    """Point-point kNN self-join: the KNN_POINTS_K nearest OTHER pages for
+    each md5-sampled query page (mod KNN_POINTS_QUERY_MOD), on the polygon
+    kNN's ring-expansion loop with the query side exploded (the corpus is
+    a self-join index) — brute-force ROW_NUMBER oracle."""
     from openaip_yaixm_to_geojson_spark.operators.knn import knn_points
 
     return knn_points(pages_from_documents(spark, sf_dir))

@@ -16,21 +16,23 @@ reproduces them bit-for-bit (trig-free):
 
 Implementations:
 
-* `_expansion_loop` — the one polygon ring-expansion loop, for both
-  metrics, both polygon inputs and every k. Index rows (ring vertices, or
-  segment sample points carrying their segment's endpoints) are bucketed
-  by grid cell; each round joins still-pending pages against the index
-  expanded to a Chebyshev window, keeps each page's k nearest DISTINCT
-  polygons (for edges: by the EXACT segment distance — sampling only
-  drives candidate generation, never the reported distance), and
-  finalizes pages whose k-th distance is strictly under anything an unseen
-  ring could hold. Each round is one broadcast/shuffle join + two
-  aggregations on the shrinking pending set; stragglers past the last
-  window get the exact scan `_bruteforce_k`. The loop reads the metric
-  from an `_Index` record, built from a driver list or a polygons TABLE
-  by `_vertex_index` or `_segment_index`.
+* `_expansion_loop` — the one ring-expansion loop, for both metrics,
+  both polygon inputs, point-point kNN and every k. Index rows (ring
+  vertices, segment sample points carrying their segment's endpoints, or
+  the pages themselves) are bucketed by grid cell under a `key`; each
+  round joins still-pending pages against the index over a Chebyshev
+  window, keeps each page's k nearest DISTINCT keys (for edges: by the
+  EXACT segment distance — sampling only drives candidate generation,
+  never the reported distance), and finalizes pages whose k-th distance
+  is strictly under anything an unseen ring could hold. Each round is one
+  broadcast/shuffle join + aggregation on the shrinking pending set;
+  stragglers past the last window get the exact scan `_bruteforce_k`. The
+  loop reads the metric, the grid and which side of the join explodes
+  over the window from an `_Index` record, built from a driver list or a
+  polygons TABLE by `_vertex_index` or `_segment_index`, or from the
+  corpus by `knn_points`.
 
-* Four entry points, each taking `polygons` as a driver list or a
+* Four polygon entry points, each taking `polygons` as a driver list or a
   polygons table: `knn_ring_expansion` / `knn_edge_ring_expansion` (k=1,
   `OUT_COLS`, with a tiny-input exact fast path) and `knn_k` /
   `knn_edge_k` (`KNN_K_OUT_COLS`).
@@ -39,8 +41,8 @@ Implementations:
   (points x index rows per Arrow batch). Oracle cross-check + the k=1
   tiny-input fast path for driver lists.
 
-* `knn_points` — point-point self kNN. Its index side is the whole corpus,
-  so it explodes the QUERY side and keeps its own loop.
+* `knn_points` — point-point self kNN. Its index is the whole corpus, so
+  the loop explodes the sampled QUERY side over each window instead.
 
 Speed-only choices are module constants, read at call time: the grid
 resolution (`KNN_RES`, `KNN_POINTS_RES`), the window schedule (`WINDOWS`),
@@ -77,10 +79,10 @@ KNN_K = 3  # distinct airspaces per page in knn_k / knn_edge_k
 # bound per-round candidate fan-out; past BROADCAST_INDEX_MAX_ROWS the wide
 # round shuffle-joins instead of broadcasting either way.
 WINDOWS = ((0, 1), (2, 15))
-# vertex-index rows (vertices x window offsets) past this are shuffle-joined
-# on `cell` instead of broadcast: building + shipping a multi-hundred-MB
-# broadcast relation costs more than shuffling the (shrunken) pending side
-# (measured ~20% on the wide round at bench scale)
+# exploded-side rows (index rows or queries x window offsets) past this are
+# shuffle-joined on `cell` instead of broadcast: building + shipping a
+# multi-hundred-MB broadcast relation costs more than shuffling the other
+# side (measured ~20% on the wide vertex round at bench scale)
 BROADCAST_INDEX_MAX_ROWS = 500_000
 # brute-force fallback: vertices scanned per inner chunk so each Arrow batch
 # allocates O(batch_rows x chunk) instead of O(batch_rows x all_vertices)
@@ -148,16 +150,16 @@ def knn_bruteforce(pages: DataFrame, polygons: list[dict[str, Any]]) -> DataFram
 
 
 def vertex_index_df(spark: SparkSession, polygons: list[dict[str, Any]]) -> DataFrame:
-    """Polygon vertices indexed by grid cell (the small broadcast side)."""
+    """Polygon vertices indexed by grid cell (the small broadcast side):
+    (vcell, key = poly_id, vlon, vlat)."""
     pids, vx, vy = _vertex_arrays(polygons)
     cells = cellgrid.encode_np(vx, vy, KNN_RES)
-    pdf = pd.DataFrame({"vcell": cells, "poly_id": pids.astype("int32"), "vlon": vx, "vlat": vy})
-    # Explicit schema: without it the inferred dtype of poly_id depends on
-    # spark.sql.execution.arrow.pyspark.enabled (arrow keeps int32, the
-    # non-arrow fallback widens to bigint), and _topk_distinct_pid's fold
-    # zero literal hard-codes poly_id:int — a vanilla default session would
-    # raise DATATYPE_MISMATCH.ARRAY_FUNCTION_DIFF_TYPES (round-5 driver red).
-    return spark.createDataFrame(pdf, "vcell bigint, poly_id int, vlon double, vlat double")
+    pdf = pd.DataFrame({"vcell": cells, "key": pids.astype("int32"), "vlon": vx, "vlat": vy})
+    # Explicit schema: without it the inferred dtype of the poly_id key
+    # depends on spark.sql.execution.arrow.pyspark.enabled (arrow keeps
+    # int32, the non-arrow fallback widens to bigint), so the same polygons
+    # would give an int key in one session and a bigint key in another.
+    return spark.createDataFrame(pdf, "vcell bigint, key int, vlon double, vlat double")
 
 
 def vertex_index_from_table(polygons_df: DataFrame) -> DataFrame:
@@ -167,16 +169,16 @@ def vertex_index_from_table(polygons_df: DataFrame) -> DataFrame:
     be millions of rows (the same scale fix polygon_cover_distributed makes
     for spatial_join's cover of a polygons table)."""
     pts = polygons_df.select(
-        F.col("poly_id").cast("int").alias("poly_id"),
+        F.col("poly_id").cast("int").alias("key"),
         F.explode(F.slice(F.col("ring"), F.lit(1), F.size(F.col("ring")) - 1)).alias("pt"),
     ).select(
-        "poly_id",
+        "key",
         F.col("pt")[0].alias("vlon"),
         F.col("pt")[1].alias("vlat"),
     )
     return pts.select(
         cellgrid.cell_id_col(F.col("vlon"), F.col("vlat"), KNN_RES).alias("vcell"),
-        "poly_id",
+        "key",
         "vlon",
         "vlat",
     )
@@ -300,8 +302,8 @@ def knn_edge_bruteforce(pages: DataFrame, polygons: list[dict[str, Any]]) -> Dat
 
 
 # Explicit schema for the same arrow-off dtype-widening reason as
-# vertex_index_df: poly_id must stay int to match _BEST_T's fold zero.
-_SEGMENT_INDEX_DDL = "vcell bigint, poly_id int, ax double, ay double, bx double, by double"
+# vertex_index_df: the poly_id key stays int in every session.
+_SEGMENT_INDEX_DDL = "vcell bigint, key int, ax double, ay double, bx double, by double"
 
 
 def _segment_index_pdf(polygons: list[dict[str, Any]]) -> pd.DataFrame:
@@ -331,8 +333,8 @@ def _segment_index_pdf(polygons: list[dict[str, Any]]) -> pd.DataFrame:
             if cell not in seen:
                 seen.add(cell)
                 rows.append((cell, int(pids[i]), float(ax[i]), float(ay[i]), float(bx[i]), float(by[i])))
-    pdf = pd.DataFrame(rows, columns=["vcell", "poly_id", "ax", "ay", "bx", "by"])
-    pdf["poly_id"] = pdf["poly_id"].astype("int32")
+    pdf = pd.DataFrame(rows, columns=["vcell", "key", "ax", "ay", "bx", "by"])
+    pdf["key"] = pdf["key"].astype("int32")
     return pdf
 
 
@@ -351,15 +353,15 @@ def segment_index_from_table(polygons_df: DataFrame) -> DataFrame:
     )
     size = cellgrid.cell_size_deg(KNN_RES)
     seg_df = polygons_df.select(
-        F.col("poly_id").cast("int").alias("poly_id"), F.explode(segs).alias("s")
-    ).select("poly_id", "s.ax", "s.ay", "s.bx", "s.by")
+        F.col("poly_id").cast("int").alias("key"), F.explode(segs).alias("s")
+    ).select("key", "s.ax", "s.ay", "s.bx", "s.by")
     dx = F.col("bx") - F.col("ax")
     dy = F.col("by") - F.col("ay")
     n_samples = F.greatest(
         F.lit(1), F.ceil(F.sqrt(dx * dx + dy * dy) / F.lit(size)).cast("int")
     )
     sampled = seg_df.select(
-        "poly_id",
+        "key",
         "ax",
         "ay",
         "bx",
@@ -372,39 +374,43 @@ def segment_index_from_table(polygons_df: DataFrame) -> DataFrame:
     sy = F.col("ay") + t * (F.col("by") - F.col("ay"))
     return sampled.select(
         cellgrid.cell_id_col(sx, sy, KNN_RES).alias("vcell"),
-        "poly_id",
+        "key",
         "ax",
         "ay",
         "bx",
         "by",
-    ).dropDuplicates(["vcell", "poly_id", "ax", "ay", "bx", "by"])
+    ).dropDuplicates(["vcell", "key", "ax", "ay", "bx", "by"])
 
 
 # ---------------------------------------------------------------------------
-# the ring-expansion loop: k nearest DISTINCT polygons per page
+# the ring-expansion loop: k nearest DISTINCT index keys per page
 # ---------------------------------------------------------------------------
-
-_SEG_PAYLOAD = ("ax", "ay", "bx", "by")
-_BEST_T = "array<struct<d2:double,poly_id:int>>"
-_EMPTY_BEST = f"cast(array() as {_BEST_T})"
 
 
 class _Index(NamedTuple):
-    """What the loop needs to know about a polygon index.
+    """What the loop needs to know about an index.
 
-    `df` is (vcell, poly_id, *payload_cols); `n_rows` sizes the broadcast
-    decision; `d2_expr` scores a candidate from (lon, lat, *payload_cols).
-    `bound_margin` (in cell units) relaxes the finalization bound for
-    indexes whose rows SAMPLE an extended object: with segment samples at
-    Euclidean spacing <= cell_size, an unseen segment (no sample inside
-    Chebyshev ring hi) can still pass within (hi - 1/2) * cell_size of the
-    page — every segment point is within spacing/2 of some sample."""
+    `df` is (vcell, key, *payload) on the `res` grid; `d2_expr` scores a
+    candidate from (lon, lat, *payload). `n_rows` sizes the broadcast of
+    the exploded index (None for the self-join index, which is never
+    exploded). `bound_margin` (in cell units) relaxes the finalization
+    bound for indexes whose rows SAMPLE an extended object: with segment
+    samples at Euclidean spacing <= cell_size, an unseen segment (no
+    sample inside Chebyshev ring hi) can still pass within (hi - 1/2) *
+    cell_size of the page — every segment point is within spacing/2 of
+    some sample.
+
+    `self_join` marks the point index, which is the page corpus itself
+    keyed by url: a page is not its own neighbour, the query side (an md5
+    sample of the index, so the smaller side) is the one exploded over the
+    annulus, and the index holds one row per key."""
 
     df: DataFrame
-    n_rows: int
-    payload_cols: tuple[str, ...]
+    n_rows: int | None
     d2_expr: Column
     bound_margin: float
+    res: int
+    self_join: bool = False
 
 
 def _ring_points(polygons: list[dict[str, Any]]) -> int:
@@ -432,7 +438,7 @@ def _vertex_index(spark: SparkSession, polygons: list[dict[str, Any]] | DataFram
         df, n_rows = vertex_index_df(spark, polygons), _ring_points(polygons)
     dx = F.col("lon") - F.col("vlon")
     dy = F.col("lat") - F.col("vlat")
-    return _Index(df, n_rows, ("vlon", "vlat"), dx * dx + dy * dy, 0.0)
+    return _Index(df, n_rows, dx * dx + dy * dy, 0.0, KNN_RES)
 
 
 def _segment_index(spark: SparkSession, polygons: list[dict[str, Any]] | DataFrame) -> _Index:
@@ -444,7 +450,7 @@ def _segment_index(spark: SparkSession, polygons: list[dict[str, Any]] | DataFra
     else:
         pdf = _segment_index_pdf(polygons)
         df, n_rows = spark.createDataFrame(pdf, _SEGMENT_INDEX_DDL), len(pdf)
-    return _Index(df, n_rows, _SEG_PAYLOAD, seg_d2_expr(), 0.5)
+    return _Index(df, n_rows, seg_d2_expr(), 0.5, KNN_RES)
 
 
 def _annulus(spark: SparkSession, lo: int, hi: int) -> tuple[DataFrame, int]:
@@ -459,39 +465,44 @@ def _annulus(spark: SparkSession, lo: int, hi: int) -> tuple[DataFrame, int]:
     return literal_table(spark, [(o,) for o in offsets], "off bigint"), len(offsets)
 
 
-def _top_k(scored: DataFrame, keys: tuple[str, ...], k: int) -> DataFrame:
-    """(*keys, best): the k smallest (d2, poly_id) per key over DISTINCT
-    polygons. The per-(key, poly_id) MIN comes first — a polygon's many
-    index rows must never occupy more than one top-k slot."""
-    return (
-        scored.groupBy(*keys, "poly_id")
-        .agg(F.min("d2").alias("d2"))
-        .groupBy(*keys)
-        .agg(F.slice(F.array_sort(F.collect_list(F.struct(F.col("d2"), F.col("poly_id")))), 1, k).alias("best"))
+def _top_k(pairs: DataFrame, index: _Index, keys: tuple[str, ...], k: int) -> DataFrame:
+    """(*keys, best): the k smallest (d2, key) per group over DISTINCT
+    index keys, scoring (page, index row) pairs with the index's metric.
+    A polygon's many index rows take a per-(group, key) MIN first, so one
+    polygon never occupies more than one top-k slot; the self-join index
+    has one row per key, so it skips that aggregation and drops the
+    page's own row instead."""
+    scored = pairs.withColumn("d2", index.d2_expr)
+    if index.self_join:
+        scored = scored.where(F.col("key") != F.col("url"))
+    else:
+        scored = scored.groupBy(*keys, "key").agg(F.min("d2").alias("d2"))
+    return scored.groupBy(*keys).agg(
+        F.slice(F.array_sort(F.collect_list(F.struct(F.col("d2"), F.col("key")))), 1, k).alias("best")
     )
 
 
-def _topk_distinct_pid(best_col: str, cand_col: str, k: int):
-    """Merge two (d2, poly_id) struct arrays into the k smallest entries
-    with DISTINCT poly_ids, keyed by (d2, poly_id) ascending. The dedup is
-    an aggregate() fold over the sorted concat — the fold state `acc` is
-    lambda-local, so nothing outer re-evaluates per element (the HOF
-    re-inline trap), and the fold caps acc at k so work per row is O(k^2)
-    on arrays of at most 2k entries."""
+def _topk_distinct_key(best_col: str, cand_col: str, k: int, empty: str):
+    """Merge two (d2, key) struct arrays into the k smallest entries with
+    DISTINCT keys, ordered by (d2, key) ascending; `empty` is the typed
+    empty array. The dedup is an aggregate() fold over the sorted concat —
+    the fold state `acc` is lambda-local, so nothing outer re-evaluates per
+    element (the HOF re-inline trap), and the fold caps acc at k so work
+    per row is O(k^2) on arrays of at most 2k entries."""
     return F.expr(
-        f"aggregate(array_sort(concat({best_col}, coalesce({cand_col}, {_EMPTY_BEST}))), "
-        f"{_EMPTY_BEST}, (acc, x) -> CASE WHEN size(acc) >= {k} "
-        f"OR exists(acc, y -> y.poly_id = x.poly_id) "
+        f"aggregate(array_sort(concat({best_col}, coalesce({cand_col}, {empty}))), "
+        f"{empty}, (acc, x) -> CASE WHEN size(acc) >= {k} "
+        f"OR exists(acc, y -> y.key = x.key) "
         f"THEN acc ELSE array_append(acc, x) END)"
     )
 
 
 def _bruteforce_k(tail: DataFrame, index: _Index, k: int) -> DataFrame:
-    """(url, lat, lon, best): exact k-nearest-polygon scan — broadcast the
-    (small) page tail against every index partition, then `_top_k`. The
-    loop's straggler fallback, and the k=1 tiny-input path for tables."""
-    scored = index.df.crossJoin(F.broadcast(tail.select("url", "lat", "lon"))).withColumn("d2", index.d2_expr)
-    return _top_k(scored, ("url", "lat", "lon"), k)
+    """(url, lat, lon, best): exact k-nearest scan — broadcast the (small)
+    page tail against every index partition, then `_top_k`. The loop's
+    straggler fallback, and the k=1 tiny-input path for tables."""
+    pairs = index.df.crossJoin(F.broadcast(tail.select("url", "lat", "lon")))
+    return _top_k(pairs, index, ("url", "lat", "lon"), k)
 
 
 def _explode_best(df: DataFrame) -> DataFrame:
@@ -500,57 +511,63 @@ def _explode_best(df: DataFrame) -> DataFrame:
         "lat",
         "lon",
         (F.col("pos") + 1).cast("int").alias("rnk"),
-        F.col("col.poly_id").alias("poly_id"),
+        F.col("col.key").alias("key"),
         F.col("col.d2").alias("dist_sq"),
     )
 
 
 def _expansion_loop(pages: DataFrame, index: _Index, k: int) -> DataFrame:
-    """(url, lat, lon, rnk, poly_id, dist_sq): the k nearest DISTINCT
-    polygons per page, rnk 1..k by (dist_sq, poly_id), over a KNN_RES
-    index.
+    """(url, lat, lon, rnk, key, dist_sq): the k nearest DISTINCT index
+    keys per page, rnk 1..k by (dist_sq, key), over the index's grid.
 
     Round r joins still-pending pages against the index over the Chebyshev
-    ring WINDOW [lo_r, hi_r] of WINDOWS. The index side explodes across
-    the window's offsets, so the page side stays one row per page with a
-    plain equi-join; the expanded index is broadcast while small and
-    shuffle-joined on `cell` past BROADCAST_INDEX_MAX_ROWS.
+    ring WINDOW [lo_r, hi_r] of WINDOWS: one side explodes across the
+    window's offsets so the other stays one row per cell key, with a plain
+    equi-join on `cell`. A polygon index is the small side and explodes; a
+    self-join index is the corpus, so the pending queries explode instead.
+    The exploded side is broadcast while (its rows x offsets) stays within
+    BROADCAST_INDEX_MAX_ROWS and shuffle-joined past it. For the queries
+    those rows are counted once, before the first round: the pending set
+    only shrinks, so that count bounds every round.
 
-    A page finalizes once it holds k distinct polygons whose k-th distance
-    is STRICTLY under ((hi - margin) * cell_size)^2: any index row in an
+    A page finalizes once it holds k distinct keys whose k-th distance is
+    STRICTLY under ((hi - margin) * cell_size)^2: any index row in an
     unseen ring (Chebyshev > hi) is at least (hi - margin) * size away, so
-    no unseen polygon can enter the top k OR improve any reported
-    polygon's distance; strict < keeps an exactly-on-the-bound unseen
-    polygon from stealing the k-th slot via the poly_id tie-break.
+    no unseen key can enter the top k OR improve any reported key's
+    distance; strict < keeps an exactly-on-the-bound unseen key from
+    stealing the k-th slot via the key tie-break.
 
     Each round's candidates reduce to the per-url top k (`_top_k`), and the
-    carried state merges by min-per-poly_id (a later ring can re-surface an
-    already-held polygon; the sorted-fold dedup keeps the smaller key).
+    carried state merges by min-per-key (a later ring can re-surface an
+    already-held polygon; the sorted-fold dedup keeps the smaller entry).
     Truncating a round's candidates to k is lossless: a dropped entry is
-    (d2, pid)-dominated by k distinct kept polygons whose merged keys only
+    (d2, key)-dominated by k distinct kept keys whose merged entries only
     ever improve. Each round barriers on a localCheckpoint of the shrinking
     pending set; pages still pending after the last window get the exact
     scan."""
     spark = pages.sparkSession
-    size = cellgrid.cell_size_deg(KNN_RES)
+    size = cellgrid.cell_size_deg(index.res)
+    key_t = index.df.schema["key"].dataType.simpleString()
+    empty = f"cast(array() as array<struct<d2:double,key:{key_t}>>)"
     pending = (
         pages.select("url", "lat", "lon")
-        .withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), KNN_RES))
-        .withColumn("best", F.expr(_EMPTY_BEST))
+        .withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), index.res))
+        .withColumn("best", F.expr(empty))
     )
+    n_exploded = pages.count() if index.self_join else index.n_rows
+    cells = index.df.withColumnRenamed("vcell", "cell")
     finalized: list[DataFrame] = []
 
     for lo, hi in WINDOWS:
         off_df, n_offsets = _annulus(spark, lo, hi)
-        vwin = index.df.crossJoin(off_df).select(
-            (F.col("vcell") + F.col("off")).alias("cell"), "poly_id", *index.payload_cols
-        )
-        if index.n_rows * n_offsets <= BROADCAST_INDEX_MAX_ROWS:
-            vwin = F.broadcast(vwin)
-        scored = pending.select("url", "lat", "lon", "cell").join(vwin, "cell").withColumn("d2", index.d2_expr)
-        cand = _top_k(scored, ("url",), k).withColumnRenamed("best", "cbest")
+        probe = pending.select("url", "lat", "lon", "cell")
+        fixed, exploded = (cells, probe) if index.self_join else (probe, cells)
+        win = exploded.crossJoin(off_df).withColumn("cell", F.col("cell") + F.col("off")).drop("off")
+        if n_exploded * n_offsets <= BROADCAST_INDEX_MAX_ROWS:
+            win = F.broadcast(win)
+        cand = _top_k(fixed.join(win, "cell"), index, ("url",), k).withColumnRenamed("best", "cbest")
         merged = pending.join(cand, "url", "left").select(
-            "url", "lat", "lon", "cell", _topk_distinct_pid("best", "cbest", k).alias("best")
+            "url", "lat", "lon", "cell", _topk_distinct_key("best", "cbest", k, empty).alias("best")
         )
         bound = float(((hi - index.bound_margin) * size) * ((hi - index.bound_margin) * size))
         guarantee = (F.size("best") >= k) & (F.element_at("best", k)["d2"] < F.lit(bound))
@@ -562,6 +579,12 @@ def _expansion_loop(pages: DataFrame, index: _Index, k: int) -> DataFrame:
         finalized.append(_bruteforce_k(pending, index, k))
 
     return _explode_best(reduce(DataFrame.unionByName, finalized))
+
+
+def _polygon_rows(df: DataFrame, cols: tuple[str, ...]) -> DataFrame:
+    """The loop's or the exact scan's exploded rows as a polygon entry
+    point's `cols` (the index key is the poly_id)."""
+    return df.withColumnRenamed("key", "poly_id").select(*cols)
 
 
 def _nearest(
@@ -582,12 +605,12 @@ def _nearest(
     if isinstance(polygons, DataFrame):
         index = build_index(spark, polygons)
         if SMALL_INPUT_ROWS and index.n_rows <= SMALL_INDEX_VERTICES and few_pages():
-            return _explode_best(_bruteforce_k(pages, index, 1)).select(*OUT_COLS)
+            return _polygon_rows(_explode_best(_bruteforce_k(pages, index, 1)), OUT_COLS)
     else:
         if SMALL_INPUT_ROWS and _ring_points(polygons) <= SMALL_INDEX_VERTICES and few_pages():
             return numpy_twin(pages.select("url", "lat", "lon"), polygons).select(*OUT_COLS)
         index = build_index(spark, polygons)
-    return _expansion_loop(pages, index, 1).select(*OUT_COLS)
+    return _polygon_rows(_expansion_loop(pages, index, 1), OUT_COLS)
 
 
 def knn_ring_expansion(pages: DataFrame, polygons: list[dict[str, Any]] | DataFrame) -> DataFrame:
@@ -608,14 +631,14 @@ def knn_k(pages: DataFrame, polygons: list[dict[str, Any]] | DataFrame) -> DataF
     """(url, rnk, poly_id, dist_sq): the KNN_K nearest DISTINCT airspaces per
     page by VERTEX distance."""
     index = _vertex_index(pages.sparkSession, polygons)
-    return _expansion_loop(pages, index, KNN_K).select(*KNN_K_OUT_COLS)
+    return _polygon_rows(_expansion_loop(pages, index, KNN_K), KNN_K_OUT_COLS)
 
 
 def knn_edge_k(pages: DataFrame, polygons: list[dict[str, Any]] | DataFrame) -> DataFrame:
     """(url, rnk, poly_id, dist_sq): the KNN_K nearest DISTINCT airspaces per
     page by EXACT point-to-segment distance."""
     index = _segment_index(pages.sparkSession, polygons)
-    return _expansion_loop(pages, index, KNN_K).select(*KNN_K_OUT_COLS)
+    return _polygon_rows(_expansion_loop(pages, index, KNN_K), KNN_K_OUT_COLS)
 
 
 # ---------------------------------------------------------------------------
@@ -631,118 +654,34 @@ def knn_points(pages: DataFrame) -> DataFrame:
     """(url, rnk, neighbor, dist_sq): the KNN_POINTS_K nearest OTHER pages
     for each deterministically md5-sampled query page (md5-prefix(url) %
     KNN_POINTS_QUERY_MOD == 0), planar squared-degree distance, ties broken
-    by neighbor url. The similarity-search shape the
-    polygon kNN family lacks: a point-point self kNN join, over
-    KNN_POINTS_RES cells and the polygon kNN's WINDOWS schedule.
+    by neighbor url. The similarity-search shape the polygon kNN family
+    lacks: a point-point self kNN join, run on the same `_expansion_loop`
+    over KNN_POINTS_RES cells.
 
-    Scale shape — the INDEX side is the whole corpus, so unlike the
-    polygon kNN the Chebyshev annulus is exploded on the QUERY side
-    (sampled, small): queries x |annulus| equi-join the corpus on its cell
-    key, broadcast while that stays small and a plain shuffle join past
-    BROADCAST_INDEX_MAX_ROWS. Per-round state is one top-k struct array
-    per query (slice(array_sort(concat))) — window annuli are disjoint so
-    a neighbor is scored exactly once. A query finalizes once it holds k
-    candidates with kth distance STRICTLY under (hi * cell_size)^2 — any
-    unseen point sits in a cell with Chebyshev distance > hi, hence at
-    Euclidean distance >= hi * cell_size, and the strict inequality keeps
-    an exactly-on-the-bound unseen point from stealing the kth slot via
-    the url tie-break. Queries unresolved past the last window fall back
-    to an exact scan (they are few: empty neighborhoods).
+    The index is the corpus itself, (vcell, key = url, plon, plat),
+    checkpointed once because every round and the fallback read it. It is
+    a self-join index: the sampled queries are the side the Chebyshev
+    annulus explodes, and a page is never its own neighbour.
+
+    Contract: url is the page key (`url_sql` is a function of the unique
+    doc_id), so the index holds one row per url. The loop keeps DISTINCT
+    neighbour keys; a corpus that repeated a url would list it once here
+    where the brute-force oracle lists it twice.
 
     The planar-degree metric is the operator's contract (no wraparound:
     longitudes 179.9 and -179.9 are far apart BY DEFINITION here, in both
     engines), which is also why cell-id arithmetic at grid edges is safe:
     aliased off-grid ids either match nothing or contribute far candidates
     that lose the top-k."""
-    spark, k = pages.sparkSession, KNN_POINTS_K
-    size = cellgrid.cell_size_deg(KNN_POINTS_RES)
-    best_t = "array<struct<d2:double,nid:string>>"
-    points = (
-        pages.select(
-            F.col("url").alias("nid"), F.col("lon").alias("plon"), F.col("lat").alias("plat")
-        )
-        .withColumn("pcell", cellgrid.cell_id_col(F.col("plon"), F.col("plat"), KNN_POINTS_RES))
-        .localCheckpoint()  # one consumer per round + fallback (fan-out audit)
-    )
-    qhash = md5_prefix_int("url")
-    pending = (
-        pages.where(qhash % F.lit(KNN_POINTS_QUERY_MOD) == 0)
-        .select("url", "lat", "lon")
-        .withColumn("qcell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), KNN_POINTS_RES))
-        .withColumn("best", F.expr(f"CAST(array() AS {best_t})"))
-        .localCheckpoint()
-    )
-    d2 = (F.col("plon") - F.col("lon")) * (F.col("plon") - F.col("lon")) + (
-        F.col("plat") - F.col("lat")
-    ) * (F.col("plat") - F.col("lat"))
-    finalized: list[DataFrame] = []
-
-    def explode_best(df: DataFrame) -> DataFrame:
-        return df.select("url", F.posexplode("best")).select(
-            "url",
-            (F.col("pos") + 1).cast("int").alias("rnk"),
-            F.col("col.nid").alias("neighbor"),
-            F.col("col.d2").alias("dist_sq"),
-        )
-
-    for lo, hi in WINDOWS:
-        n_pending = pending.count()
-        off_df, n_offsets = _annulus(spark, lo, hi)
-        qx = (
-            pending.select("url", "lat", "lon", "qcell")
-            .crossJoin(off_df)
-            .select("url", "lat", "lon", (F.col("qcell") + F.col("off")).alias("pcell"))
-        )
-        if n_pending * n_offsets <= BROADCAST_INDEX_MAX_ROWS:
-            qx = F.broadcast(qx)
-        cand = (
-            points.join(qx, "pcell")
-            .where(F.col("nid") != F.col("url"))
-            .withColumn("d2", d2)
-            .groupBy("url")
-            .agg(
-                F.slice(
-                    F.array_sort(F.collect_list(F.struct(F.col("d2"), F.col("nid")))), 1, k
-                ).alias("cbest")
-            )
-        )
-        merged = pending.join(cand, "url", "left").select(
-            "url",
-            "lat",
-            "lon",
-            "qcell",
-            F.slice(
-                F.array_sort(
-                    F.concat(F.col("best"), F.coalesce(F.col("cbest"), F.expr(f"CAST(array() AS {best_t})")))
-                ),
-                1,
-                k,
-            ).alias("best"),
-        )
-        bound = float((hi * size) * (hi * size))
-        guarantee = (F.size("best") >= k) & (F.element_at("best", k)["d2"] < F.lit(bound))
-        finalized.append(explode_best(merged.where(guarantee)))
-        pending = merged.where(~guarantee).localCheckpoint()
-        if pending.isEmpty():
-            pending = None
-            break
-
-    if pending is not None and not pending.isEmpty():
-        # exact scan for the stragglers: all points, same top-k contract
-        tail = (
-            points.crossJoin(F.broadcast(pending.select("url", "lat", "lon")))
-            .where(F.col("nid") != F.col("url"))
-            .withColumn("d2", d2)
-            .groupBy("url")
-            .agg(
-                F.slice(
-                    F.array_sort(F.collect_list(F.struct(F.col("d2"), F.col("nid")))), 1, k
-                ).alias("best")
-            )
-        )
-        finalized.append(explode_best(tail))
-
-    out = finalized[0]
-    for df in finalized[1:]:
-        out = out.unionByName(df)
-    return out
+    points = pages.select(
+        cellgrid.cell_id_col(F.col("lon"), F.col("lat"), KNN_POINTS_RES).alias("vcell"),
+        F.col("url").alias("key"),
+        F.col("lon").alias("plon"),
+        F.col("lat").alias("plat"),
+    ).localCheckpoint()
+    dx = F.col("plon") - F.col("lon")
+    dy = F.col("plat") - F.col("lat")
+    index = _Index(points, None, dx * dx + dy * dy, 0.0, KNN_POINTS_RES, self_join=True)
+    queries = pages.where(md5_prefix_int("url") % F.lit(KNN_POINTS_QUERY_MOD) == 0).select("url", "lat", "lon")
+    loop = _expansion_loop(queries.localCheckpoint(), index, KNN_POINTS_K)
+    return loop.select("url", "rnk", F.col("key").alias("neighbor"), "dist_sq")

@@ -50,7 +50,7 @@ from ..functions.cellgrid import EDGE_PAD_DEG
 from ..plans.localtable import literal_table
 
 DEFAULT_JOIN_RES = 13  # ~0.044 deg cells: tight polygon covers, ~2x fewer false candidates than res 11 (bench-chosen)
-# salt="auto" target: pages per reducer task of the hottest cell
+# salt_plan's target: pages per reducer task of the hottest cell
 ROWS_PER_TASK = 2_000_000
 GEO_CLUSTER_RES, GEO_CLUSTER_MIN_PTS = 7, 2  # geo_cluster_cells' grid and dense-cell floor
 ZORDER_RES = 12  # bits per axis of page_zorder
@@ -201,7 +201,7 @@ def spatial_join(
     pages: DataFrame,
     polygons: list[dict[str, Any]] | DataFrame,
     broadcast: bool = True,
-    salt: int | str | None = None,
+    salt: int | None = None,
     keep_cols: tuple[str, ...] = (),
 ) -> DataFrame:
     """Pages inside polygons. Returns (url, lat, lon, poly_id,
@@ -221,23 +221,18 @@ def spatial_join(
     splinters hot cells — the page side gets a deterministic salt from
     xxhash64(url) and the cover side is exploded x salt, so skewed cells
     spread over `salt` reducers (AQE skew-join stays on as backstop).
-    salt="auto" derives the factor from the cell histogram (choose_salt:
-    hottest cell over ROWS_PER_TASK) — deterministic for a given input at
-    any parallelism. The rows are the same for every broadcast and salt
-    choice; only the plan differs.
+    `salt_plan` derives a factor from the cell histogram. The rows are the
+    same for every broadcast and salt choice; only the plan differs.
     """
-    if not (salt is None or salt == "auto" or isinstance(salt, int)):
-        raise TypeError(f"salt must be an int, None, or 'auto'; got {salt!r}")
+    if not (salt is None or isinstance(salt, int)):
+        raise TypeError(f"salt must be an int or None; got {salt!r}")
     cover = polygon_cover(pages.sparkSession, polygons)
     cells = pages.withColumn("cell", cellgrid.cell_id_col(F.col("lon"), F.col("lat"), DEFAULT_JOIN_RES))
 
     if broadcast:
-        # salt is a shuffle-join concept; resolving 'auto' here would run a
-        # full groupBy-count scan of the fact table for nothing.
+        # salt is a shuffle-join concept: a broadcast join ignores it
         candidates = cells.join(F.broadcast(cover), "cell")
     else:
-        if salt == "auto":
-            salt = choose_salt(pages)
         if salt and salt > 1:
             cells = cells.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(salt)).cast("int"))
             cover = cover.withColumn("_salt", F.explode(F.array(*[F.lit(i) for i in range(salt)])))
@@ -259,13 +254,6 @@ def cell_histogram(pages: DataFrame) -> DataFrame:
         .groupBy("cell")
         .agg(F.count(F.lit(1)).alias("n_pages"))
     )
-
-
-def choose_salt(pages: DataFrame) -> int:
-    """Deterministic salt factor: salt_plan's `salt`, so the join runs the
-    derivation the gate certifies. Same data -> same plan at any
-    parallelism."""
-    return int(salt_plan(pages).first()["salt"])
 
 
 # ---------------------------------------------------------------------------
@@ -599,10 +587,9 @@ def airspace_density(join_out: DataFrame, polygons_df: DataFrame) -> DataFrame:
 def salt_plan(pages: DataFrame) -> DataFrame:
     """The skew-handling DERIVATION as a queryable one-row plan:
     (hottest_cell, hottest_rows, salt) with salt = ceil(hottest_rows /
-    ROWS_PER_TASK) clamped to [1, 64]. choose_salt reads this `salt`, so
-    the driver gate certifies the derivation the salted join runs on. Ties
-    on the hottest count break to the smaller cell id. One map-side-partial
-    aggregation to #cells rows, then a 1-row min-by."""
+    ROWS_PER_TASK) clamped to [1, 64]. Ties on the hottest count break to
+    the smaller cell id. One map-side-partial aggregation to #cells rows,
+    then a 1-row min-by."""
     hist = cell_histogram(pages)
     # hottest cell as a 1-row min-by over the negated count (ties -> the
     # smaller cell id, deterministic)

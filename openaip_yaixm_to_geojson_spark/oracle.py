@@ -1392,6 +1392,15 @@ def _md5_byte_sql(seed: str, off: str) -> str:
     return f"({d(f'2 * ({off}) + 1')} * 16 + {d(f'2 * ({off}) + 2')})"
 
 
+def _image_size_sql() -> str:
+    """Features f0, f1 of a decoded synthetic image: the width and height
+    of multimodal's PPM layout, float32-rounded."""
+    return ", ".join(
+        f"CAST(CAST({float(v)!r} AS FLOAT) AS DOUBLE) AS f{i}"
+        for i, v in enumerate((multimodal.PPM_W, multimodal.PPM_H))
+    )
+
+
 def sql_robots_filter() -> str:
     """web.robots_filter twin: identical md5-digit rule derivation per
     host (Disallow '/<d1>', Allow '/<d1><d2>', Allow '/'), prefix match
@@ -1456,7 +1465,7 @@ def sql_multimodal_gif_features() -> str:
     w*h chained-md5 bytes (seed '{id}-px'), so the grayscale statistics
     are recomputable exactly — the Spark side must LZW-decode genuine GIF
     streams (variable-width codes, clear/EOI) to land on them."""
-    npx = 8 * 8
+    npx = multimodal.PPM_W * multimodal.PPM_H
     px_byte = _md5_byte_sql(
         "concat(CAST(media_id AS VARCHAR), '-px-', CAST(j // 16 AS VARCHAR))", "j % 16"
     )
@@ -1478,7 +1487,7 @@ agg AS (
   FROM px GROUP BY media_id
 )
 SELECT media_id,
-       {f32("8.0")} AS f0, {f32("8.0")} AS f1,
+       {_image_size_sql()},
        {f32(mean)} AS f2, {f32(var)} AS f3,
        {f32("CAST(mn AS DOUBLE)")} AS f4, {f32("CAST(mx AS DOUBLE)")} AS f5,
        {f32(f"CAST({npx} AS DOUBLE)")} AS f6, {f32("0.0")} AS f7
@@ -1548,7 +1557,7 @@ def sql_multimodal_png_features() -> str:
     walk real PNG chunks, zlib-inflate the IDAT and unfilter scanlines to
     land on the identical values. n_bytes is excluded (the zlib stream
     length is not SQL-recomputable); the 8 features are the contract."""
-    npx = 8 * 8 * 3
+    npx = multimodal.PPM_W * multimodal.PPM_H * 3
     px_byte = _md5_byte_sql(
         "concat(CAST(media_id AS VARCHAR), '-px-', CAST(j // 16 AS VARCHAR))", "j % 16"
     )
@@ -1556,8 +1565,8 @@ def sql_multimodal_png_features() -> str:
     def f32(expr: str) -> str:
         return f"CAST(CAST({expr} AS FLOAT) AS DOUBLE)"
 
-    img_mean = lambda c: f"(s{c} / CAST(64.0 AS DOUBLE))"  # noqa: E731
-    img_var = lambda c: f"((ss{c} / CAST(64.0 AS DOUBLE)) - {img_mean(c)} * {img_mean(c)})"  # noqa: E731
+    img_mean = lambda c: f"(s{c} / CAST({float(npx // 3)!r} AS DOUBLE))"  # noqa: E731
+    img_var = lambda c: f"((ss{c} / CAST({float(npx // 3)!r} AS DOUBLE)) - {img_mean(c)} * {img_mean(c)})"  # noqa: E731
     return f"""
 WITH m AS (SELECT UNNEST(generate_series(0, {multimodal.CODEC_MEDIA_ROWS - 1})) AS media_id),
 px AS (
@@ -1576,7 +1585,7 @@ chanw AS (
   FROM chan GROUP BY media_id
 )
 SELECT media_id,
-       {f32("8.0")} AS f0, {f32("8.0")} AS f1,
+       {_image_size_sql()},
        {f32(img_mean(0))} AS f2, {f32(img_mean(1))} AS f3, {f32(img_mean(2))} AS f4,
        {f32(img_var(0))} AS f5, {f32(img_var(1))} AS f6, {f32(img_var(2))} AS f7
 FROM chanw"""
@@ -1590,8 +1599,8 @@ def sql_multimodal_real_features() -> str:
     the engine must parse the real headers and land on the identical
     statistics (fixed float64 sequence sum/n, var = sumsq/n - mean*mean,
     one FLOAT rounding; the same contract as the fake-decode oracle)."""
-    npx = 8 * 8 * 3
-    nsm = 128
+    npx = multimodal.PPM_W * multimodal.PPM_H * 3
+    nsm = multimodal.WAV_SAMPLES
     px_byte = _md5_byte_sql(
         "concat(CAST(media_id AS VARCHAR), '-px-', CAST(j // 16 AS VARCHAR))", "j % 16"
     )
@@ -1607,8 +1616,8 @@ def sql_multimodal_real_features() -> str:
     def f32(expr: str) -> str:
         return f"CAST(CAST({expr} AS FLOAT) AS DOUBLE)"
 
-    img_mean = lambda c: f"(s{c} / CAST(64.0 AS DOUBLE))"  # noqa: E731
-    img_var = lambda c: f"((ss{c} / CAST(64.0 AS DOUBLE)) - {img_mean(c)} * {img_mean(c)})"  # noqa: E731
+    img_mean = lambda c: f"(s{c} / CAST({float(npx // 3)!r} AS DOUBLE))"  # noqa: E731
+    img_var = lambda c: f"((ss{c} / CAST({float(npx // 3)!r} AS DOUBLE)) - {img_mean(c)} * {img_mean(c)})"  # noqa: E731
     return f"""
 WITH m AS (SELECT UNNEST(generate_series(0, {multimodal.MEDIA_ROWS - 1})) AS media_id),
 px AS (
@@ -1628,8 +1637,8 @@ chanw AS (
   FROM chan GROUP BY media_id
 ),
 imgf AS (
-  SELECT media_id, 'image' AS kind, CAST(203 AS INTEGER) AS n_bytes,
-         {f32("8.0")} AS f0, {f32("8.0")} AS f1,
+  SELECT media_id, 'image' AS kind, CAST({len(multimodal.make_ppm(0))} AS INTEGER) AS n_bytes,
+         {_image_size_sql()},
          {f32(img_mean(0))} AS f2, {f32(img_mean(1))} AS f3, {f32(img_mean(2))} AS f4,
          {f32(img_var(0))} AS f5, {f32(img_var(1))} AS f6, {f32(img_var(2))} AS f7
   FROM chanw
@@ -1651,8 +1660,8 @@ zc AS (
   GROUP BY a.media_id
 ),
 audf AS (
-  SELECT g.media_id, 'audio' AS kind, CAST(300 AS INTEGER) AS n_bytes,
-         {f32("16000.0")} AS f0, {f32(f"{nsm}.0")} AS f1,
+  SELECT g.media_id, 'audio' AS kind, CAST({len(multimodal.make_wav(0))} AS INTEGER) AS n_bytes,
+         {f32(f"{multimodal.WAV_RATE}.0")} AS f0, {f32(f"{nsm}.0")} AS f1,
          {f32(f"(s / CAST({nsm}.0 AS DOUBLE))")} AS f2,
          {f32(f"((ss / CAST({nsm}.0 AS DOUBLE)) - (s / CAST({nsm}.0 AS DOUBLE)) * (s / CAST({nsm}.0 AS DOUBLE)))")} AS f3,
          {f32("CAST(mn AS DOUBLE)")} AS f4, {f32("CAST(mx AS DOUBLE)")} AS f5,
@@ -3533,7 +3542,8 @@ def sql_image_patches() -> str:
     the md5 byte layout (j -> (y, x, c) -> patch cell), exact BIGINT sums
     per (image, patch, channel), float32-rounded means (power-of-two
     division, exact before the rounding)."""
-    npx = 8 * 8 * 3
+    w = multimodal.PPM_W
+    npx = w * multimodal.PPM_H * 3
     px_byte = _md5_byte_sql(
         "concat(CAST(media_id AS VARCHAR), '-px-', CAST(j // 16 AS VARCHAR))", "j % 16"
     )
@@ -3543,7 +3553,7 @@ def sql_image_patches() -> str:
     return f"""WITH m AS (SELECT UNNEST(generate_series(0, {multimodal.MEDIA_ROWS - 1})) AS media_id),
 px AS (
   SELECT media_id, t.j, CAST({px_byte} AS BIGINT) AS v,
-         ((t.j // 3) // 8) // {p} AS pr, ((t.j // 3) % 8) // {p} AS pc,
+         ((t.j // 3) // {w}) // {p} AS pr, ((t.j // 3) % {w}) // {p} AS pc,
          t.j % 3 AS c
   FROM (SELECT media_id FROM m WHERE media_id % 3 = 0) i,
        (SELECT UNNEST(generate_series(0, {npx - 1})) AS j) t
@@ -3861,7 +3871,7 @@ def sql_audio_frames() -> str:
     """multimodal.audio_frames twin: every decoded int16 sample recomputed
     from the md5 byte layout (lo + 256*hi two's complement), exact frame
     aggregates, the same float32 one-rounding sequence."""
-    nsm = 128
+    nsm = multimodal.WAV_SAMPLES
     lo = _md5_byte_sql(
         "concat(CAST(media_id AS VARCHAR), '-au-', CAST((2 * j) // 16 AS VARCHAR))",
         "(2 * j) % 16",

@@ -474,6 +474,11 @@ _SHARED_GATE_CONSTANTS = [
     ("web", "CO_CITATION_HOSTS", 8, ["co_citation"]),
     ("sources.pages", "CRAWL_EPOCH", 1672531200, ["sessionize", "warc_read"]),
     ("sources.pages", "CRAWL_SPAN_S", 86400, ["sessionize"]),
+    ("multimodal", "PPM_W", 4, ["image_patches", "multimodal_gif_features", "multimodal_png_features",
+                                "multimodal_real_features"]),
+    ("multimodal", "PPM_H", 4, ["image_patches", "multimodal_gif_features", "multimodal_png_features",
+                                "multimodal_real_features"]),
+    ("multimodal", "WAV_SAMPLES", 64, ["audio_frames", "multimodal_real_features"]),
 ]
 
 

@@ -278,15 +278,11 @@ def test_knn_hundred_thousand_vertices(spark):
 
 
 def test_salted_join_under_real_skew(spark, polygons, monkeypatch):
-    """All pages landing in ONE hot cell: the salted shuffle path must
-    still match the broadcast path, with choose_salt picking a factor > 1
-    once the hottest cell exceeds the per-task target."""
+    """All pages landing in ONE hot cell: salt_plan picks a factor > 1
+    once the hottest cell exceeds the per-task target (and 1 on no pages),
+    and the salted shuffle path still matches the broadcast path."""
     from openaip_yaixm_to_geojson_spark.operators import spatial as spatial_mod
-    from openaip_yaixm_to_geojson_spark.operators.spatial import (
-        choose_salt,
-        salt_plan,
-        spatial_join,
-    )
+    from openaip_yaixm_to_geojson_spark.operators.spatial import salt_plan, spatial_join
 
     # 20k pages on a single point inside FARNBOROUGH CTA 1 -> one cell
     inside = polygons[0]
@@ -301,16 +297,11 @@ def test_salted_join_under_real_skew(spark, polygons, monkeypatch):
     )
     with monkeypatch.context() as m:
         m.setattr(spatial_mod, "ROWS_PER_TASK", 1_000)
-        salt = choose_salt(pages)
-        assert salt > 1
-        # choose_salt runs the gated salt_plan derivation, also on no pages
-        assert salt == salt_plan(pages).first()["salt"]
-    empty = pages.limit(0)
-    assert choose_salt(empty) == salt_plan(empty).first()["salt"] == 1
+        assert salt_plan(pages).first()["salt"] > 1
+    assert salt_plan(pages.limit(0)).first()["salt"] == 1
     broadcast_rows = spatial_join(pages, polygons, broadcast=True).count()
     salted_rows = spatial_join(pages, polygons, broadcast=False, salt=8).count()
-    auto_rows = spatial_join(pages, polygons, broadcast=False, salt="auto").count()
-    assert broadcast_rows == salted_rows == auto_rows
+    assert broadcast_rows == salted_rows
     assert broadcast_rows >= 20_000  # every page is inside at least one polygon
 
 
@@ -721,7 +712,9 @@ def test_ring_decimate_degenerate_rings(spark):
 def test_knn_points_matches_bruteforce(spark, monkeypatch):
     """Point-point kNN: the cell-annulus expansion (both finalize rounds
     and the fallback) must reproduce the exact brute-force top-k with the
-    (d2, neighbor) tie-break, and ranks must be 1..k dense per query."""
+    (d2, neighbor) tie-break, and ranks must be 1..k dense per query —
+    with the exploded query side broadcast (default cap) and
+    shuffle-joined (cap 0)."""
     from openaip_yaixm_to_geojson_spark.operators import knn as knn_mod
     from openaip_yaixm_to_geojson_spark.operators.knn import knn_points
     from openaip_yaixm_to_geojson_spark.sources.pages import pages_from_documents
@@ -730,23 +723,24 @@ def test_knn_points_matches_bruteforce(spark, monkeypatch):
     k = 5
     monkeypatch.setattr(knn_mod, "KNN_POINTS_K", k)
     monkeypatch.setattr(knn_mod, "KNN_POINTS_QUERY_MOD", 3)
-    got = {}
-    for r in knn_points(pages).collect():
-        got.setdefault(r["url"], []).append((r["rnk"], r["neighbor"], r["dist_sq"]))
-    assert got, "no sampled queries"
-
     pts = [(r["url"], r["lon"], r["lat"]) for r in pages.select("url", "lon", "lat").collect()]
     by_url = {u: (lon, lat) for u, lon, lat in pts}
-    for url, rows in got.items():
-        qlon, qlat = by_url[url]
-        exact = sorted(
-            ((plon - qlon) * (plon - qlon) + (plat - qlat) * (plat - qlat), nid)
-            for nid, plon, plat in pts
-            if nid != url
-        )[:k]
-        rows.sort()
-        assert [rn for rn, _, _ in rows] == list(range(1, len(rows) + 1))
-        assert [(nid, d2) for d2, nid in exact] == [(n, d) for _, n, d in rows]
+    for cap in (knn_mod.BROADCAST_INDEX_MAX_ROWS, 0):
+        monkeypatch.setattr(knn_mod, "BROADCAST_INDEX_MAX_ROWS", cap)
+        got = {}
+        for r in knn_points(pages).collect():
+            got.setdefault(r["url"], []).append((r["rnk"], r["neighbor"], r["dist_sq"]))
+        assert got, "no sampled queries"
+        for url, rows in got.items():
+            qlon, qlat = by_url[url]
+            exact = sorted(
+                ((plon - qlon) * (plon - qlon) + (plat - qlat) * (plat - qlat), nid)
+                for nid, plon, plat in pts
+                if nid != url
+            )[:k]
+            rows.sort()
+            assert [rn for rn, _, _ in rows] == list(range(1, len(rows) + 1))
+            assert [(nid, d2) for d2, nid in exact] == [(n, d) for _, n, d in rows]
 
 
 def test_knn_points_single_window_forces_fallback(spark, monkeypatch):
@@ -1002,9 +996,9 @@ def test_knn_k_arrow_disabled_default_dtypes(spark, polygons, monkeypatch):
     """Round-5 driver red regression: with spark.sql.execution.arrow.pyspark
     .enabled=false (Spark's DEFAULT, hence the driver's vanilla harness) the
     non-arrow createDataFrame fallback used to widen the pandas int32
-    poly_id to bigint, mismatching _BEST_T's hard-coded fold zero
-    (array<struct<d2:double,poly_id:int>>) and raising
-    DATATYPE_MISMATCH.ARRAY_FUNCTION_DIFF_TYPES. Explicit schemas at the
+    poly_id to bigint, mismatching the top-k fold's hard-coded int zero
+    and raising DATATYPE_MISMATCH.ARRAY_FUNCTION_DIFF_TYPES (the fold's
+    zero now takes the index key's type). Explicit schemas at the
     index createDataFrame sites fix it; this pins both k>1 variants to a
     full .collect() with arrow OFF, and value-checks knn_k's rnk=1 row
     against the k=1 path."""

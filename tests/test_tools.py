@@ -84,7 +84,6 @@ _NO_TUNING_KNOBS = {
         "spatial_join": {"res"},
         "polygon_overlap_pairs": {"res"},
         "polygon_contains_pairs": {"res"},
-        "choose_salt": {"res", "rows_per_task"},
         "salt_plan": {"res", "rows_per_task"},
     },
     "operators.knn": {
@@ -114,7 +113,7 @@ def test_core_operators_take_no_tuning_knobs():
         for name, removed in functions.items():
             params = set(inspect.signature(getattr(mod, name)).parameters)
             found += [f"{module}.{name}({p})" for p in sorted(params & removed)]
-    assert sum(map(len, _NO_TUNING_KNOBS.values())) == 15
+    assert sum(map(len, _NO_TUNING_KNOBS.values())) == 14
     assert found == []
 
 
@@ -396,3 +395,18 @@ def test_scale_documents_factor_one(tmp_path):
     assert pq.read_table(dst / "documents.parquet").equals(docs)
     with pytest.raises(ValueError, match="factor must be >= 1"):
         scale.scale_documents(src, dst, 0)
+
+
+def test_check_correctness_rejects_unknown_query_names(monkeypatch, capsys):
+    """A misspelt query name exits non-zero before any Spark session
+    starts, instead of checking nothing and printing ALL MATCH."""
+    spec = importlib.util.spec_from_file_location("check_correctness", REPO / "tools" / "check_correctness.py")
+    tool = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(tool)
+    session = importlib.import_module(f"{PACKAGE}.plans.session")
+    monkeypatch.setattr(session, "build_session", lambda **_: pytest.fail("a Spark session was started"))
+    monkeypatch.setattr("sys.argv", ["check_correctness.py", "/nonexistent", "knn_points", "knn_pionts"])
+    with pytest.raises(SystemExit) as exit_:
+        tool.main()
+    assert exit_.value.code == 2
+    assert capsys.readouterr().out.strip() == "unknown query names: knn_pionts"

@@ -6,6 +6,9 @@ A query without an oracle counts as a failure.
 
 Usage: python tools/check_correctness.py [--default-session] [sf_dir] [only_query ...]
 
+An only_query name that queries() does not know exits with status 2
+before Spark starts.
+
 --default-session runs the sweep under a VANILLA SparkSession (no AQE /
 Arrow / UTC / shuffle-partition tuning — the driver harness's environment,
 round-5 lesson: conf-dependent bugs are invisible when the gate shares
@@ -73,6 +76,12 @@ def main():
 
     import __spark_entry__ as entrymod
 
+    qs = entrymod.queries()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown query names: {', '.join(unknown)}")
+        sys.exit(2)
+
     if default_session:
         from pyspark.sql import SparkSession
 
@@ -96,12 +105,13 @@ def main():
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
 
-    qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
     failures = []
+    checked = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        checked += 1
         if name not in oracles:
             failures.append((name, "no oracle"))
             print(f"{name:28s} NO ORACLE")
@@ -149,9 +159,9 @@ def main():
 
     print()
     if failures:
-        print(f"{len(failures)} FAILURES")
+        print(f"{len(failures)} FAILURES of {checked} queries")
         sys.exit(1)
-    print("ALL MATCH")
+    print(f"ALL MATCH: {checked} queries")
 
 
 if __name__ == "__main__":
